@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Inverted-index retrieval over the corpus: posting lists, boolean
   * search, and BM25 ranking — the search-side complement of the dedup /
@@ -861,6 +862,10 @@ object Retrieval {
     require(m > 0, s"mmrRerank: m must be positive, got $m")
     require(lambda >= 0 && lambda <= 1,
       s"mmrRerank: lambda must be in [0, 1], got $lambda")
+    // the greedy kernel carries ids as bigint; a string id would cast to null
+    val idType = run.select(col(idCol)).schema.head.dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+      s"mmrRerank: idCol '$idCol' must be an integral type, got ${idType.simpleString}")
     val vecs = vectors.select(col("vec_id").as(idCol),
       col("embedding").cast("array<double>").as("_e"))
       .withColumn("_n", Similarity.l2norm(col("_e")))

@@ -35,7 +35,7 @@ object Sinks {
     */
   def rollingFileSink(df: DataFrame, path: String, checkpoint: String,
       format: String = "csv", triggerMs: Long = 1000L): DataStreamWriter[Row] =
-    df.writeStream
+    graft.streaming.LocalCheckpointFs.checkpointed(df).writeStream
       .format(format)
       .option("path", path)
       .option("checkpointLocation", checkpoint)

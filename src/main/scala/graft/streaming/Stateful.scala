@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, Encoder, KeyValueGroupedDataset}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.streaming.LocalCheckpointFs.checkpointed
+
 /** Keyed-state toolkit: the Spark-first home of everything the reference
   * does with `KeyedProcessFunction`/state/timers/triggers
   * (SURVEY.md §2.7 G1-G5, §2.10 X1-X9, §2.5 W4).
@@ -22,6 +24,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * single partition except the explicitly-degenerate connect exemplar (X9),
   * which the reference itself forces to parallelism 1
   * (reference HandlingMultipleStreams.scala:246-247).
+  *
+  * Every builder installs [[LocalCheckpointFs]] on its session, so state
+  * and log files under a `file:` checkpoint are written without forks.
   */
 object Stateful {
 
@@ -30,13 +35,13 @@ object Stateful {
     * updated count for each arriving batch of events per key.
     */
   def runningCount[K: Encoder, T](grouped: KeyValueGroupedDataset[K, T])(
-      implicit e0: Encoder[Long], e: Encoder[(K, Long)]): Dataset[(K, Long)] =
+      implicit e0: Encoder[Long], e: Encoder[(K, Long)]): Dataset[(K, Long)] = checkpointed(
     grouped.flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
       (key: K, it: Iterator[T], state: GroupState[Long]) =>
         val c = state.getOption.getOrElse(0L) + it.size
         state.update(c)
         Iterator(key -> c)
-    }
+    })
 
   /** X4: running counter that clears state every `resetEvery` events
     * (`state.clear()`, reference KeyedState.scala:350-360). Emits the
@@ -45,7 +50,7 @@ object Stateful {
     * output (reference KeyedState.scala:365-384).
     */
   def countWithReset[K: Encoder, T](grouped: KeyValueGroupedDataset[K, T],
-      resetEvery: Int)(implicit e0: Encoder[Long], e: Encoder[(K, Long)]): Dataset[(K, Long)] =
+      resetEvery: Int)(implicit e0: Encoder[Long], e: Encoder[(K, Long)]): Dataset[(K, Long)] = checkpointed(
     grouped.flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
       (key: K, it: Iterator[T], state: GroupState[Long]) =>
         var c = state.getOption.getOrElse(0L)
@@ -57,7 +62,7 @@ object Stateful {
         }.toVector
         if (c == 0L) state.remove() else state.update(c)
         out.iterator
-    }
+    })
 
   /** X2: ListState — accumulate all element ids per key
     * (`ListState.add/get`, reference KeyedState.scala:159-193). Emits the
@@ -66,27 +71,27 @@ object Stateful {
     * the caller windowing the input first.
     */
   def accumulateList[K: Encoder, T, V: Encoder](grouped: KeyValueGroupedDataset[K, T],
-      f: T => V)(implicit e1: Encoder[List[V]], e2: Encoder[(K, List[V])]): Dataset[(K, List[V])] =
+      f: T => V)(implicit e1: Encoder[List[V]], e2: Encoder[(K, List[V])]): Dataset[(K, List[V])] = checkpointed(
     grouped.flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
       (key: K, it: Iterator[T], state: GroupState[List[V]]) =>
         val acc = state.getOption.getOrElse(Nil) ++ it.map(f)
         state.update(acc)
         Iterator(key -> acc)
-    }
+    })
 
   /** X3: MapState — per-key per-field counters
     * (`MapState.put/get/entries`, reference KeyedState.scala:225-256).
     */
   def countByField[K: Encoder, T](grouped: KeyValueGroupedDataset[K, T],
       field: T => String)(implicit e1: Encoder[Map[String, Long]],
-      e2: Encoder[(K, Map[String, Long])]): Dataset[(K, Map[String, Long])] =
+      e2: Encoder[(K, Map[String, Long])]): Dataset[(K, Map[String, Long])] = checkpointed(
     grouped.flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
       (key: K, it: Iterator[T], state: GroupState[Map[String, Long]]) =>
         var m = state.getOption.getOrElse(Map.empty[String, Long])
         it.foreach { t => val f = field(t); m = m.updated(f, m.getOrElse(f, 0L) + 1L) }
         state.update(m)
         Iterator(key -> m)
-    }
+    })
 
   /** X5: state TTL (`StateTtlConfig` 1h / OnCreateAndWrite /
     * ReturnExpiredIfNotCleanedUp, reference KeyedState.scala:331-348).
@@ -114,7 +119,7 @@ object Stateful {
     */
   def countWithTtl[K: Encoder, T](grouped: KeyValueGroupedDataset[K, T],
       ttlMs: Long, clock: () => Long)(implicit e1: Encoder[(Long, Long)],
-      e2: Encoder[(K, Long)]): Dataset[(K, Long)] =
+      e2: Encoder[(K, Long)]): Dataset[(K, Long)] = checkpointed(
     grouped.flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.ProcessingTimeTimeout) {
       (key: K, it: Iterator[T], state: GroupState[(Long, Long)]) =>
         if (state.hasTimedOut) {
@@ -133,14 +138,14 @@ object Stateful {
           state.setTimeoutDuration(math.max(ttlMs, 1L))
           Iterator(key -> c)
         }
-    }
+    })
 
   /** G1: non-purging count trigger — fire the (cumulative) window count
     * every `n` elements (reference WindowAssignersAndTriggers.scala:44-90:
     * outputs 10,20,30,… per window). State: (total, sinceLastFire).
     */
   def countTrigger[K: Encoder, T](grouped: KeyValueGroupedDataset[K, T], n: Int)(
-      implicit e1: Encoder[(Long, Long)], e2: Encoder[(K, Long)]): Dataset[(K, Long)] =
+      implicit e1: Encoder[(Long, Long)], e2: Encoder[(K, Long)]): Dataset[(K, Long)] = checkpointed(
     grouped.flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
       (key: K, it: Iterator[T], state: GroupState[(Long, Long)]) =>
         var (total, since) = state.getOption.getOrElse((0L, 0L))
@@ -151,7 +156,7 @@ object Stateful {
         }
         state.update((total, since))
         fires.result().iterator
-    }
+    })
 
   /** G1 scoped per tumbling event-time window — the reference's actual
     * composite (`CountTrigger.of(n)` INSIDE `TumblingEventTimeWindows`,
@@ -175,7 +180,7 @@ object Stateful {
       eventTimeMs: T => Long, windowMs: Long, n: Int)(
       implicit eK: Encoder[(K, Long)], e1: Encoder[(Long, Long)],
       e2: Encoder[((K, Long), Long)],
-      e3: Encoder[(K, Long, Long)]): Dataset[(K, Long, Long)] =
+      e3: Encoder[(K, Long, Long)]): Dataset[(K, Long, Long)] = checkpointed(
     ds.groupByKey(t =>
         (key(t), Math.floorDiv(eventTimeMs(t), windowMs) * windowMs))
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
@@ -197,7 +202,7 @@ object Stateful {
               state.setTimeoutTimestamp(math.max(kw._2 + windowMs, w + 1)))
             fires.result().iterator
           }
-      }
+      })
 
   /** Streaming windowed approximate distinct count — HyperLogLog registers
     * as custom keyed state. Per (key, tumbling window) the state is a
@@ -217,7 +222,7 @@ object Stateful {
       e3: Encoder[(K, Long, Long)]): Dataset[(K, Long, Long)] = {
     require(p >= 4 && p <= 12, s"p must be in [4,12], got $p")
     val m = 1 << p
-    ds.groupByKey(t =>
+    checkpointed(ds.groupByKey(t =>
         (key(t), Math.floorDiv(eventTimeMs(t), windowMs) * windowMs))
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
         (kw: (K, Long), it: Iterator[T], state: GroupState[Array[Byte]]) =>
@@ -258,7 +263,7 @@ object Stateful {
               else raw
             Iterator((kw._1, kw._2, math.round(est)))
           }
-      }
+      })
   }
 
   /** G2: purging count trigger — fire and clear every `n` elements
@@ -266,7 +271,7 @@ object Stateful {
     * reference WindowAssignersAndTriggers.scala:92-116: outputs n,n,n,…).
     */
   def purgingCountTrigger[K: Encoder, T](grouped: KeyValueGroupedDataset[K, T], n: Int)(
-      implicit e1: Encoder[Long], e2: Encoder[(K, Long)]): Dataset[(K, Long)] =
+      implicit e1: Encoder[Long], e2: Encoder[(K, Long)]): Dataset[(K, Long)] = checkpointed(
     grouped.flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
       (key: K, it: Iterator[T], state: GroupState[Long]) =>
         var buffered = state.getOption.getOrElse(0L)
@@ -277,7 +282,7 @@ object Stateful {
         }
         if (buffered == 0L) state.remove() else state.update(buffered)
         fires.result().iterator
-    }
+    })
 
   /** W4: global window + count trigger — single infinite window released
     * every `n` elements (reference Windows.scala:349-365). The global
@@ -301,7 +306,7 @@ object Stateful {
     */
   def countOrTimeoutTrigger[K: Encoder, T](grouped: KeyValueGroupedDataset[K, T],
       maxCount: Int, timeoutMs: Long)(implicit e1: Encoder[Long],
-      e2: Encoder[(K, Long)]): Dataset[(K, Long)] =
+      e2: Encoder[(K, Long)]): Dataset[(K, Long)] = checkpointed(
     grouped.flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout) {
       (key: K, it: Iterator[T], state: GroupState[Long]) =>
         if (state.hasTimedOut) {
@@ -319,7 +324,7 @@ object Stateful {
           state.setTimeoutDuration(timeoutMs) // re-armed per batch (G5 idle-flush)
           fires.result().iterator
         }
-    }
+    })
 
   /** X6: event-time timer — "count events in the 10s window opened by the
     * first event, then flush and reset" (reference KeyedState.scala:480-528:
@@ -332,7 +337,7 @@ object Stateful {
     */
   def countFromFirstEvent[K: Encoder, T](grouped: KeyValueGroupedDataset[K, T],
       eventTimeMs: T => Long, windowMs: Long)(implicit e1: Encoder[(Long, Long)],
-      e2: Encoder[(K, Long, Long)]): Dataset[(K, Long, Long)] =
+      e2: Encoder[(K, Long, Long)]): Dataset[(K, Long, Long)] = checkpointed(
     grouped.flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
       (key: K, it: Iterator[T], state: GroupState[(Long, Long)]) =>
         if (state.hasTimedOut) {
@@ -359,7 +364,7 @@ object Stateful {
           state.setTimeoutTimestamp(math.max(start + windowMs, wm + 1))
           Iterator.empty
         }
-    }
+    })
 
   /** Streaming as-of enrichment — the streaming twin of
     * [[graft.ops.Joins.asofJoin]] and the Spark-first form of a temporal
@@ -379,7 +384,7 @@ object Stateful {
       stEnc: Encoder[(Long, V)]): Dataset[(Long, V)] = {
     val l = left.map { case (k, ts, id) => (k, ts, id, None: Option[V]) }
     val r = right.map { case (k, ts, v) => (k, ts, 0L, Some(v): Option[V]) }
-    l.union(r).groupByKey(_._1)
+    checkpointed(l.union(r).groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout) {
         (_: K, rows: Iterator[(K, Long, Long, Option[V])],
             state: GroupState[(Long, V)]) =>
@@ -397,7 +402,7 @@ object Stateful {
           }
           latest.foreach(state.update)
           out.iterator
-      }
+      })
   }
 
   /** J4/X9: `connect` + `CoProcessFunction` with a shared counter across

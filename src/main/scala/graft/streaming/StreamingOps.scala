@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.streaming.LocalCheckpointFs.checkpointed
+
 /** Streaming twins of the batch windowing/aggregation operators
   * (SURVEY.md §2.5-2.6): identical `window()`/`session_window()` Catalyst
   * expressions over a streaming Dataset, with `withWatermark` supplying the
@@ -15,6 +17,9 @@ import org.apache.spark.sql.functions._
   * analyzer — the engine-enforced form of the reference's own negative
   * tests (M3/M4: no watermark ⇒ no window ever fires,
   * reference TimeBasedTransformations.scala:313-350, Windows.scala:183-185).
+  *
+  * Every builder installs [[LocalCheckpointFs]] on its session, so state
+  * and log files under a `file:` checkpoint are written without forks.
   */
 object StreamingOps {
 
@@ -22,12 +27,12 @@ object StreamingOps {
     * once, when the watermark finalizes the window).
     */
   def tumblingCount(stream: DataFrame, tsCol: String, delay: String, size: String,
-      keys: String*): DataFrame =
+      keys: String*): DataFrame = checkpointed(
     stream.withWatermark(tsCol, delay)
       .groupBy((window(col(tsCol), size) +: keys.map(col)): _*)
       .count()
       .select((Seq(col("window.start").as("w_start"), col("window.end").as("w_end")) ++
-        keys.map(col) :+ col("count").as("cnt")): _*)
+        keys.map(col) :+ col("count").as("cnt")): _*))
 
   /** Streaming exact dedup — the streaming twin of the batch cleaning
     * pipeline's fingerprint dedup ([[graft.ops.Curation.cleanCorpus]]):
@@ -39,14 +44,14 @@ object StreamingOps {
     * shape for deduping an unbounded crawl feed at ingest.
     */
   def streamingDedup(stream: DataFrame, tsCol: String, delay: String,
-      textCol: String = "text"): DataFrame =
+      textCol: String = "text"): DataFrame = checkpointed(
     stream.withWatermark(tsCol, delay)
       .withColumn("_fp", graft.ops.TextAnalysis.fingerprint(col(textCol)))
       // dedup on the fingerprint ALONE while still evicting state by
       // watermark (plain dropDuplicates would need the ts column in the
       // key for cleanup, missing same-content-different-ts duplicates)
       .dropDuplicatesWithinWatermark("_fp")
-      .drop("_fp")
+      .drop("_fp"))
 
   /** Streaming NEAR-dup dedup — the streaming twin of the batch
     * MinHash+LSH pipeline ([[graft.ops.Dedup.minHashLshPairs]]): documents
@@ -86,7 +91,7 @@ object StreamingOps {
       while (i < n) { if (a(i) == b(i)) eq += 1; i += 1 }
       if (n == 0) 0.0 else eq.toDouble / n
     }
-    stream.withWatermark(tsCol, delay)
+    checkpointed(stream.withWatermark(tsCol, delay)
       // the watermarked column must pass through as a bare alias: wrapping
       // it in a cast strips the watermark metadata and the analyzer then
       // rejects the EventTimeTimeout ("watermark must be specified")
@@ -132,26 +137,26 @@ object StreamingOps {
             out.result().iterator
           }
       }
-      .toDF("doc_id", "kept", "dup_of")
+      .toDF("doc_id", "kept", "dup_of"))
   }
 
   /** M1+W2: watermarked sliding window count. */
   def slidingCount(stream: DataFrame, tsCol: String, delay: String, size: String,
-      slide: String): DataFrame =
+      slide: String): DataFrame = checkpointed(
     stream.withWatermark(tsCol, delay)
       .groupBy(window(col(tsCol), size, slide))
       .count()
       .select(col("window.start").as("w_start"), col("window.end").as("w_end"),
-        col("count").as("cnt"))
+        col("count").as("cnt")))
 
   /** M1+W3: watermarked session window (gap-merged, per key). */
   def sessionCount(stream: DataFrame, tsCol: String, delay: String, gap: String,
-      key: String): DataFrame =
+      key: String): DataFrame = checkpointed(
     stream.withWatermark(tsCol, delay)
       .groupBy(session_window(col(tsCol), gap), col(key))
       .count()
       .select(col(key), col("session_window.start").as("sess_start"),
-        col("session_window.end").as("sess_end"), col("count").as("cnt"))
+        col("session_window.end").as("sess_end"), col("count").as("cnt")))
 
   /** W5: TRUE processing-time tumbling window
     * (`TumblingProcessingTimeWindows`,
@@ -165,13 +170,13 @@ object StreamingOps {
     * (SURVEY §7.4.2).
     */
   def processingTimeTumblingCount(stream: DataFrame, size: String,
-      keys: String*): DataFrame =
+      keys: String*): DataFrame = checkpointed(
     stream.withColumn("proc_time", current_timestamp())
       .withWatermark("proc_time", "0 seconds")
       .groupBy((window(col("proc_time"), size) +: keys.map(col)): _*)
       .count()
       .select((Seq(col("window.start").as("w_start"), col("window.end").as("w_end")) ++
-        keys.map(col) :+ col("count").as("cnt")): _*)
+        keys.map(col) :+ col("count").as("cnt")): _*))
 
   /** A4 streaming: running word/key count in update mode — emits the
     * updated count per key on every arrival, the reference's
@@ -179,7 +184,7 @@ object StreamingOps {
     * SocketTextStreamWordCount.scala:62-63).
     */
   def runningCount(stream: DataFrame, key: String): DataFrame =
-    stream.groupBy(col(key)).count().withColumnRenamed("count", "cnt")
+    checkpointed(stream.groupBy(col(key)).count().withColumnRenamed("count", "cnt"))
 
   /** The reference's flagship: streaming word count over a line stream
     * (reference SocketTextStreamWordCount.scala:59-63). Pair with

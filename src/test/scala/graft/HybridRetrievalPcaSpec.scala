@@ -190,6 +190,15 @@ class HybridRetrievalPcaSpec extends SparkSpec {
     assert(got == Set((1L, 1L, 1L), (1L, 2L, 2L), (2L, 3L, 1L)), got.toString)
   }
 
+  test("mmrRerank: a string id column is rejected, not silently nulled") {
+    val run = Seq((1L, "d1", 0.9)).toDF("query_id", "doc_id", "score")
+    val vecs = Seq(("d1", Seq(1f, 0f))).toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException](
+      Retrieval.mmrRerank(run, vecs, m = 1))
+    assert(e.getMessage.contains("idCol 'doc_id' must be an integral type, got string"),
+      e.getMessage)
+  }
+
   // ---------- run overlap / vector quality / text signals ----------
 
   test("runOverlap: counts, jaccard, and one-sided queries") {

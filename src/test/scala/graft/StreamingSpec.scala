@@ -2,11 +2,18 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.AnalysisException
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.StreamingQuery
+import java.nio.file.Files
 
-import graft.streaming.{Stateful, StreamingOps}
+import scala.jdk.CollectionConverters._
+
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
+import org.apache.spark.sql.{AnalysisException, DataFrame, Dataset}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.{array_sort, col}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
+
+import graft.streaming.{ForklessLocalFs, LocalCheckpointFs, Stateful, StreamingOps}
 
 /** Streaming semantics: cross-micro-batch state evolution, watermark-driven
   * window finalization, late-data drop, event-time timers — the scenarios
@@ -27,10 +34,13 @@ class StreamingSpec extends SparkSpec {
     * query START) restores data-driven batches for the test; expired
     * timers still fire inside every data-carrying batch.
     */
-  private def withNoDataBatchesDisabled[T](body: => T): T = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+  private def withNoDataBatchesDisabled[T](body: => T): T =
+    withConf("spark.sql.streaming.noDataMicroBatches.enabled", "false")(body)
+
+  /** Runs `body` with session conf `key` set to `value`, then restores it. */
+  private def withConf[T](key: String, value: String)(body: => T): T = {
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
+    spark.conf.set(key, value)
     try body
     finally prev match {
       case Some(v) => spark.conf.set(key, v)
@@ -524,6 +534,149 @@ class StreamingSpec extends SparkSpec {
       val rows = spark.table("wc").as[(String, Long)].collect().toSeq
       assert(rows.contains(("to", 1L)) && rows.contains(("to", 2L)))
       assert(rows.contains(("be", 2L)))
+    }
+  }
+
+  // ------------------------------------------------ file: checkpoint FS
+
+  private val StockFs = LocalCheckpointFs.StockLocalFs
+  private val ForklessFs = classOf[ForklessLocalFs].getName
+
+  /** Runs `body` with the session's `file:` FileContext set explicitly to
+    * `impl`; an explicit setting wins over the builders' install.
+    */
+  private def withFileFs[T](impl: String)(body: => T): T =
+    withConf(LocalCheckpointFs.Key, impl)(body)
+
+  /** Command lines of the child processes this JVM starts while `body` runs. */
+  private def processStarts(body: => Unit): Seq[String] = {
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try body finally rec.stop()
+    val f = Files.createTempFile("graft-forks", ".jfr")
+    try {
+      rec.dump(f)
+      RecordingFile.readAllEvents(f).asScala.map(_.getString("command")).toSeq
+    } finally { rec.close(); Files.delete(f) }
+  }
+
+  private def isFsFork(cmd: String) =
+    Set("chmod", "readlink")(cmd.trim.split("\\s+").head.split('/').last)
+
+  test("file: checkpoints of a stateful query start no chmod/readlink processes") {
+    val ckpt = Files.createTempDirectory("graft-forks")
+    val in = MemoryStream[(String, Int)](90, spark, None)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
+    val cmds = processStarts {
+      val q = Stateful.runningCount(in.toDS().groupByKey(_._1))
+        .writeStream.outputMode("update").option("checkpointLocation", ckpt.toString)
+        .foreachBatch { (ds: Dataset[(String, Long)], _: Long) => ds.collect().foreach(seen.add) }
+        .start()
+      withQuery(q) {
+        for (i <- 1 to 3) { in.addData(("a", i), ("b", i)); q.processAllAvailable() }
+      }
+      // the recorder sees this JVM's process starts: a control fork
+      new ProcessBuilder("true").start().waitFor()
+    }
+    assert(cmds.exists(_.trim == "true"), cmds)
+    assert(!cmds.exists(isFsFork), cmds.filter(isFsFork).take(5))
+    assert(seen.contains(("a", 3L)) && seen.contains(("b", 3L)))
+    // the checkpoint was written, with Hadoop's .crc sidecars
+    for (f <- Seq("offsets/2", "offsets/.2.crc", "commits/2", "commits/.2.crc"))
+      assert(Files.exists(ckpt.resolve(f)), f)
+    val deltas = Files.walk(ckpt.resolve("state")).iterator().asScala
+      .map(_.getFileName.toString).toSeq
+    assert(deltas.contains("3.delta") && deltas.contains(".3.delta.crc"), deltas)
+  }
+
+  /** Replays `batches` of (key, event-time s) through the query `build`
+    * makes, collecting every emitted row as a string. With `restart`
+    * = Some((k, fsA, fsB)) the first k batches run under `fsA`, the query
+    * stops, and it resumes from the same checkpoint under `fsB`.
+    */
+  private def replay(build: Dataset[(String, Timestamp)] => DataFrame, mode: String,
+      batches: Seq[Seq[(String, Double)]], restart: Option[(Int, String, String)])
+      : Seq[String] = {
+    val ckpt = Files.createTempDirectory("graft-restart").toString
+    val in = MemoryStream[(String, Timestamp)](91, spark, None)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    def run(part: Seq[Seq[(String, Double)]]): Unit = {
+      val q = build(in.toDS()).writeStream.outputMode(mode)
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (df: DataFrame, _: Long) => df.collect().foreach(r => seen.add(r.toString)) }
+        .start()
+      withQuery(q) {
+        part.foreach { b => in.addData(b.map { case (k, t) => (k, ts(t)) }); q.processAllAvailable() }
+      }
+    }
+    restart match {
+      case None => run(batches)
+      case Some((k, fsA, fsB)) =>
+        withFileFs(fsA)(run(batches.take(k)))
+        withFileFs(fsB)(run(batches.drop(k)))
+    }
+    seen.asScala.toSeq.sorted
+  }
+
+  private val restartBatches = Seq(
+    Seq("a" -> 1.0, "b" -> 2.0, "a" -> 3.0),
+    Seq("a" -> 11.0, "c" -> 12.0),
+    Seq("b" -> 21.0, "a" -> 22.0, "b" -> 23.0),
+    Seq("c" -> 31.0, "a" -> 32.0),
+    Seq("b" -> 41.0))
+
+  private val restartQueries
+      : Seq[(String, Dataset[(String, Timestamp)] => DataFrame, String)] = Seq(
+    ("runningCount", ds => Stateful.runningCount(ds.groupByKey(_._1)).toDF(), "update"),
+    ("accumulateList", ds => Stateful.accumulateList(ds.groupByKey(_._1),
+        (t: (String, Timestamp)) => t._2.getTime).toDF()
+      // within-batch list order follows shuffle order; compare sorted lists
+      .select(col("_1"), array_sort(col("_2"))), "update"),
+    ("tumblingCount", ds => StreamingOps.tumblingCount(ds.toDF("k", "ts"), "ts",
+      "0 seconds", "10 seconds", "k"), "append"))
+
+  for ((name, build, mode) <- restartQueries; (fsA, fsB) <- Seq(StockFs -> ForklessFs,
+      ForklessFs -> StockFs)) {
+    val (a, b) = (fsA.split('.').last, fsB.split('.').last)
+    test(s"$name resumes a $a checkpoint under $b with the uninterrupted output") {
+      val whole = replay(build, mode, restartBatches, None)
+      val resumed = replay(build, mode, restartBatches, Some((2, fsA, fsB)))
+      assert(whole.nonEmpty)
+      assert(resumed == whole, s"\nresumed: $resumed\nwhole:   $whole")
+    }
+  }
+
+  for (fs <- Seq(StockFs, ForklessFs)) {
+    test(s"a flipped byte in a state delta file fails the restart loudly " +
+        s"(${fs.split('.').last})") {
+      val ckpt = Files.createTempDirectory("graft-corrupt")
+      val in = MemoryStream[(String, Int)](92, spark, None)
+      def start() = Stateful.runningCount(in.toDS().groupByKey(_._1))
+        .writeStream.outputMode("update").option("checkpointLocation", ckpt.toString)
+        .foreachBatch { (ds: Dataset[(String, Long)], _: Long) => ds.collect(); () }.start()
+      withFileFs(fs) {
+        val q1 = start()
+        withQuery(q1) {
+          for (i <- 1 to 3) { in.addData(("a", i), ("b", i)); q1.processAllAvailable() }
+        }
+        val delta = Files.walk(ckpt.resolve("state")).iterator().asScala
+          .filter(_.getFileName.toString == "3.delta").maxBy(Files.size(_))
+        val bytes = Files.readAllBytes(delta)
+        bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 0x01).toByte
+        Files.write(delta, bytes)
+        val q2 = start()
+        withQuery(q2) {
+          in.addData(("a", 4), ("b", 4))
+          val e = intercept[StreamingQueryException](q2.processAllAvailable())
+          // caught by Spark's checksum sidecar: FileContext.open(path) skips
+          // Hadoop's .crc on either FS (see LocalCheckpointFsSpec)
+          val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+          assert(causes.exists(c =>
+            String.valueOf(c.getMessage).contains("CHECKPOINT_FILE_CHECKSUM_VERIFICATION_FAILED")),
+            causes.mkString("\n"))
+        }
+      }
     }
   }
 }
