@@ -295,10 +295,10 @@ object SparkEntry {
     */
   private def evalPairs(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    // fanOut: the standing pair table is a small single-file parquet read
-    // locally (one-task scan), and every consumer is a row-pure metric
-    // kernel (BLEU/chrF/TER/ROUGE DPs) — the exact shape Par.fanOut exists
-    // for; at scale the probe is a no-op (guide §2.2/§2.6)
+    // kernel fan: the standing pair table is a small single-file parquet
+    // read locally (one-task scan), and every consumer is a row-pure metric
+    // kernel (BLEU/chrF/TER/ROUGE DPs) — the exact shape Par.fanOutKernel
+    // exists for; at scale the probe is a no-op (guide §2.2/§2.6)
     ops.Par.fanOutKernel(IndexTables.plain(s, IndexTables.ident("evalpairs_v1", d,
       witness(docs))) {
       val t = Core.tokensUni(col("text"))

@@ -236,7 +236,7 @@ object Curation {
       prefix = prefix)
   }
 
-  private def recipeStats(docs0: DataFrame,
+  private def recipeStats(docs: DataFrame,
       decontam: Option[(DataFrame, Int)],
       ppl: Option[Seq[Double]], minTokens: Int,
       maxNonAlnum: Double, maxStopword: Double,
@@ -244,20 +244,14 @@ object Curation {
       semDecontam: Option[(DataFrame, Double)] = None,
       resampleK: Option[Int] = None,
       prefix: Option[DataFrame] = None): DataFrame = {
-    // fan ONCE at entry, but only when the recipe COMPUTES its stages from
-    // the corpus (no prefix): there every stage re-scans `docs` with a
-    // heavy row-pure kernel (gate, fingerprints, SNM tokens, decontam
-    // grams, surprisal). With a standing prefix table the shared stages
-    // are flag scans of `p` and `docs` only feeds bounded joins
-    // (spans/resample), where the extra exchange measured as a net loss
-    // (ablation r16) — there the internal op-level fans
-    // (spanFingerprints etc.) cover the heavy passes. Round 17: the
-    // FLOORED fan, not the kernel fan — after the one-checkpoint decision
-    // table landed, the r16 "−1.5 s on v3" flipped to +0.73 s under the
-    // 5-pass warm ablation (the six stage scans each pay the 32-way
-    // exchange's task tax on a sub-MB local table); the floor keeps the
-    // fan for a genuinely large starved corpus scan.
-    val docs = if (prefix.isEmpty) Par.fanOut(docs0) else docs0
+    // no fan at entry: every stage re-scans `docs` with a heavy row-pure
+    // kernel (gate, fingerprints, SNM tokens, decontam grams, surprisal),
+    // but after the one-checkpoint decision table landed (round 17) an
+    // entry fan measured +0.73 s under the 5-pass warm ablation (the six
+    // stage scans each pay the 32-way exchange's task tax on a sub-MB
+    // local table). With a standing prefix table the shared stages are
+    // flag scans of `p`, and the internal op-level fans
+    // (spanFingerprints etc.) cover the heavy passes.
     // Each stage's DECISION is materialized as an id-only set
     // (localCheckpoint): six stage counts over a lazily-shared plan would
     // otherwise recompute the whole upstream chain per count — the span

@@ -221,7 +221,7 @@ object Decontam {
     val t = col("_t")
     val g = col("_g")
     scrubReconstruct(
-      Par.fanOut(df)
+      df
         .withColumn("_t",
           coalesce(Core.tokensUni(col(textCol)), array().cast("array<string>")))
         .withColumn("_g", ngrams(t, n))
@@ -267,13 +267,12 @@ object Decontam {
     */
   def semanticContamination(train: DataFrame, evalSet: DataFrame,
       minCos: Double = 0.9, dim: Int = 64): DataFrame =
-    // round 17b: BOTH embeds demoted to the floored fan (measured +0.54 s
-    // on q_sem_decontam with the kernel fans). The eval side is bounded
-    // by contract (the increment-probe shape); the train side's fan wins
-    // in semanticDedupText (block² rescoring downstream) but LOSES here —
+    // round 17b: NEITHER embed is fanned (measured +0.54 s on
+    // q_sem_decontam with the kernel fans). The eval side is bounded by
+    // contract (the increment-probe shape); the train side's fan wins in
+    // semanticDedupText (block² rescoring downstream) but LOSES here —
     // contaminationFlagsBlocked's post-checkpoint work is probe-sized, so
-    // a 32-partition checkpoint only adds per-job scheduling tax. The
-    // floored fan still fires on a genuinely large starved train scan.
+    // a 32-partition checkpoint only adds per-job scheduling tax.
     Similarity.contaminationFlagsBlocked(
       Similarity.argmaxBlocked(
         TextAnalysis.hashEmbed(train, dim, kernelFan = false)),

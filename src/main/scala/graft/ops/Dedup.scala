@@ -16,12 +16,12 @@ object Dedup {
     * groupBy on the 16-byte fingerprint — single shuffle of keys.
     */
   def exactDedup(docs: DataFrame): DataFrame =
-    Par.fanOut(docs).select(col("doc_id"), TextAnalysis.fingerprint(col("text")).as("fp"))
+    docs.select(col("doc_id"), TextAnalysis.fingerprint(col("text")).as("fp"))
       .groupBy("fp").agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_copies"))
 
   /** Per-language unique/total counts — the summary form of exact dedup. */
   def exactDedupStats(docs: DataFrame): DataFrame =
-    Par.fanOut(docs).select(col("lang"), TextAnalysis.fingerprint(col("text")).as("fp"))
+    docs.select(col("lang"), TextAnalysis.fingerprint(col("text")).as("fp"))
       .groupBy("lang")
       .agg(countDistinct("fp").as("n_unique"), count(lit(1)).as("n_docs"))
 
@@ -68,7 +68,7 @@ object Dedup {
 
   def minHashSignatures(docs: DataFrame, shingleK: Int = 3,
       numHashes: Int = 32): DataFrame =
-    Par.fanOut(docs).select(col("doc_id"),
+    docs.select(col("doc_id"),
       minhashSigExpr(col("text"), shingleK, numHashes).as("sig"))
 
   /** Per-band bucket hashes of a minhash signature (the LSH join keys):
@@ -1285,7 +1285,7 @@ object Dedup {
     // nullability: a NULL-text document fingerprints to NULL (md5(NULL)
     // propagates), and reading absence off the fp would mislabel such a
     // row 'added' even when both snapshots contain it
-    val o = TextAnalysis.fingerprints(Par.fanOut(old))
+    val o = TextAnalysis.fingerprints(old)
       .select(col("doc_id"), col("fp").as("_ofp"), lit(true).as("_inOld"))
     val n = TextAnalysis.fingerprints(fresh)
       .select(col("doc_id"), col("fp").as("_nfp"), lit(true).as("_inNew"))
@@ -1333,7 +1333,7 @@ object Dedup {
     * LSH output — never all-pairs). `candidates` must have (a_id, b_id).
     */
   def ngramJaccard(docs: DataFrame, candidates: DataFrame, shingleK: Int = 3): DataFrame = {
-    val sh = Par.fanOut(docs).select(col("doc_id"), shingles(shingleK).as("sh"))
+    val sh = docs.select(col("doc_id"), shingles(shingleK).as("sh"))
     candidates
       .join(sh.select(col("doc_id").as("a_id"), col("sh").as("a_sh")), Seq("a_id"))
       .join(sh.select(col("doc_id").as("b_id"), col("sh").as("b_sh")), Seq("b_id"))

@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, LogicalRDD}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 
@@ -24,27 +24,25 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
   * otherwise return the input untouched (at scale the probe says "not
   * starved" and the plan is byte-identical to before). Use it ONLY above
   * HEAVY row-pure kernels (DP alignments, regex ladders, per-row hash
-  * grids) where per-row compute dwarfs the one extra exchange.
-  *
-  * [[fanOut]] is the guarded form for ordinary row-pure work (cheap
-  * projections, signature hashes, explode-aggregates): it additionally
-  * requires the scan to carry at least `FLOOR_BYTES_PER_CORE` bytes per
-  * core before fanning — the round-16 driver bench showed a 32-way
-  * exchange over a sub-MB table costs more than the cheap kernel it
-  * parallelizes (q_cluster_sizes 0.54×, q_ivf_topk 0.58×, q_lsh_pairs
-  * 0.58×, q_minhash_lsh 0.64× under the cold median-of-3 protocol), so a
-  * starved-but-tiny scan is left alone. The floor is bytes-per-core
-  * (scale-relative), not an absolute constant: a 10-node production scan
-  * that is genuinely starved still fans once there is enough data to
-  * amortize the exchange.
+  * grids) where per-row compute dwarfs the one extra exchange: the
+  * round-16 `graft.Bench` runs showed a 32-way exchange over a sub-MB table
+  * costs more than a CHEAP kernel it parallelizes (q_cluster_sizes 0.54×,
+  * q_ivf_topk 0.58×, q_lsh_pairs 0.58×, q_minhash_lsh 0.64× under the cold
+  * median-of-3 protocol), so cheap row-pure work (projections, signature
+  * hashes, explode-aggregates) is not fanned at all — a splittable scan
+  * with enough bytes to amortize the exchange is already planned into
+  * about `cores` splits by Spark's own arithmetic above.
   *
   * The probe reads partitioning METADATA only — the leaf scan nodes'
-  * planned split count and file bytes — never `df.rdd` (which under AQE
-  * materializes every upstream shuffle stage, i.e. runs real jobs at
+  * planned split count — never `df.rdd` (which under AQE materializes
+  * every upstream shuffle stage, i.e. runs real jobs at
   * DataFrame-construction time). Plans that already contain a shuffle
   * exchange are returned untouched: their downstream parallelism is
   * `spark.sql.shuffle.partitions`, not the scan split count, so they are
-  * not scan-starved in the §2.5 sense.
+  * not scan-starved in the §2.5 sense. The probe reads the planner's
+  * `sparkPlan`, before `EnsureRequirements`, so it sees the exchange of
+  * an explicit `repartition` but not the one an aggregate or join will
+  * get: such a frame over a starved scan is still fanned.
   *
   * Use ONLY above row-wise-pure work (per-row kernels, filters, aggregates,
   * joins keyed on columns): a repartition changes row placement and
@@ -53,75 +51,30 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
   * not behind an explicit sort) must not sit directly downstream.
   */
 object Par {
-  /** starved-or-not per (cores, floored, plan identity); bounded by the
-    * number of distinct table scans a session touches. The plan identity
-    * key is the 32-bit semanticHash salted with the schema hash and node
-    * count — not collision-proof in theory (a full canonicalized-plan
-    * digest would be, but costs a tree render per call); a collision
-    * mis-applies another plan's fan decision, a perf-only misbehavior.
+  /** starved-or-not per (cores, plan identity); bounded by the number of
+    * distinct table scans a session touches. The plan identity key is the
+    * 32-bit semanticHash salted with the schema hash and node count — not
+    * collision-proof in theory (a full canonicalized-plan digest would be,
+    * but costs a tree render per call); a collision mis-applies another
+    * plan's fan decision, a perf-only misbehavior.
     */
   private val decided =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Boolean, Int, Int, Int), Boolean]()
+    new java.util.concurrent.ConcurrentHashMap[(Int, Int, Int, Int), Boolean]()
 
-  /** Ablation kill switch (GRAFT_FANOUT=0): makes fanOut the identity so
-    * a fan/no-fan A/B runs in one JVM — measurement tooling, not a perf
-    * knob; the default (on) is the optimized path.
+  /** Fan a starved file scan out to `defaultParallelism` partitions, for
+    * sites whose downstream per-row kernel (DP alignment, regex ladder,
+    * k-means grid) dominates the exchange even on a sub-MB scan
+    * (`graft.Bench`, round 16: q_lang_id 1.96×, q_quality 1.76×,
+    * q_token_stats 1.50×).
     */
-  private val enabled = sys.env.getOrElse("GRAFT_FANOUT", "1") != "0"
-  /** Ablation-only toggle for [[graft.tools.AblateFan]]; package-private
-    * so a library consumer cannot silently disable the optimization.
-    */
-  @volatile private[graft] var forceOff = false
-
-  /** Minimum planned scan bytes per core before [[fanOut]] inserts the
-    * exchange (default 4 MB/core; override via GRAFT_FANOUT_FLOOR_MB for
-    * measurement). Below it the per-row work a guarded site protects is
-    * cheaper than the 32-way exchange itself.
-    */
-  private val floorBytesPerCore: Long =
-    sys.env.get("GRAFT_FANOUT_FLOOR_MB").map(_.toDouble)
-      .map(mb => (mb * 1024 * 1024).toLong).getOrElse(4L * 1024 * 1024)
-
-  /** Guarded fan: starvation probe AND the bytes-per-core floor. */
-  def fanOut(df: DataFrame): DataFrame = fan(df, floored = true)
-
-  /** Kernel fan: starvation probe only — for sites whose downstream
-    * per-row kernel (DP alignment, regex ladder, k-means grid) dominates
-    * the exchange even on a sub-MB scan (driver-confirmed round 16:
-    * q_lang_id 1.96×, q_quality 1.76×, q_token_stats 1.50×).
-    */
-  def fanOutKernel(df: DataFrame): DataFrame = fan(df, floored = false)
-
-  /** Post-materialization spread (round 17b): a `localCheckpoint`ed
-    * decision-sized frame inherits its parent's FINAL partitioning, which
-    * under AQE's small-data coalescing is often ONE partition locally —
-    * and [[fanOut]]'s plan probe cannot see that (the plan carries a
-    * shuffle, so it is "not starved" in the §2.5 sense; the starvation
-    * only exists in the materialized RDD). When such a frame feeds
-    * row-AMPLIFYING work (a replicas× explode, a per-row kernel grid),
-    * that work runs single-task. This helper reads the materialized
-    * partition count (metadata — the frame is already an RDD, no job)
-    * and spreads only when starved; at scale a checkpointed frame is
-    * already wide and this is the identity. Use ONLY downstream of a
-    * checkpoint and only above row-pure work — same placement caveats
-    * as [[fanOut]].
-    */
-  def spreadCheckpointed(df: DataFrame): DataFrame = {
-    if (!enabled || forceOff) return df
-    val cores = df.sparkSession.sparkContext.defaultParallelism
-    if (cores <= 1) return df
-    if (df.rdd.getNumPartitions < cores) df.repartition(cores) else df
-  }
-
-  private def fan(df: DataFrame, floored: Boolean): DataFrame = {
-    if (!enabled || forceOff) return df
+  def fanOutKernel(df: DataFrame): DataFrame = {
     // streaming frames: micro-batch partitioning is the source's business
     // (and the probe below cannot run on an unstarted stream)
     if (df.isStreaming) return df
     val cores = df.sparkSession.sparkContext.defaultParallelism
     if (cores <= 1) return df
     val analyzed = df.queryExecution.analyzed
-    val key = (cores, floored, analyzed.semanticHash(),
+    val key = (cores, analyzed.semanticHash(),
       df.schema.catalogString.hashCode, analyzed.collectLeaves().size)
     val starved = decided.computeIfAbsent(key, _ => {
       val plan = df.queryExecution.sparkPlan
@@ -136,22 +89,41 @@ object Par {
         // it would add an exchange to operators whose zero-shuffle plan
         // is a spec'd invariant. Partition counts come from the scan
         // nodes' PLANNED splits (metadata — no job, unlike df.rdd under
-        // AQE); bytes from the file listing.
+        // AQE).
         val v1 = plan.collect { case f: FileSourceScanExec => f }
         val v2 = plan.collect { case b: BatchScanExec => b }
-        if (v1.isEmpty && v2.isEmpty) false
-        else {
-          val parts = v1.map(_.inputRDDs().head.getNumPartitions).sum +
-            v2.map(_.inputRDD.getNumPartitions).sum
-          val bytes = v1.map(_.relation.location.sizeInBytes).sum +
-            v2.map(_.logicalLink
-              .map(_.stats.sizeInBytes).getOrElse(BigInt(Long.MaxValue))
-              .min(BigInt(Long.MaxValue)).toLong).sum
-          parts < cores &&
-            (!floored || bytes >= floorBytesPerCore * cores)
-        }
+        (v1.nonEmpty || v2.nonEmpty) &&
+          v1.map(_.inputRDDs().head.getNumPartitions).sum +
+            v2.map(_.inputRDD.getNumPartitions).sum < cores
       }
     })
     if (starved) df.repartition(cores) else df
+  }
+
+  /** Post-materialization spread (round 17b): a `localCheckpoint`ed
+    * decision-sized frame inherits its parent's FINAL partitioning, which
+    * under AQE's small-data coalescing is often ONE partition locally —
+    * and [[fanOutKernel]]'s plan probe cannot see that (a checkpoint is
+    * an RDD scan, not a file scan; the starvation only exists in the
+    * materialized RDD). When such a frame feeds
+    * row-AMPLIFYING work (a replicas× explode, a per-row kernel grid),
+    * that work runs single-task. This helper reads the materialized
+    * partition count and spreads only when starved; at scale a
+    * checkpointed frame is already wide and this is the identity.
+    *
+    * `df` must be the direct result of `checkpoint`/`localCheckpoint`
+    * (its logical plan a [[LogicalRDD]]): only then is `df.rdd` metadata.
+    * On a lazy frame `df.rdd` would run every upstream shuffle stage
+    * under AQE while the caller is still building its DataFrame, so such
+    * a frame is rejected. Use only above row-pure work — same placement
+    * caveats as [[fanOutKernel]].
+    */
+  def spreadCheckpointed(df: DataFrame): DataFrame = {
+    require(df.queryExecution.logical.isInstanceOf[LogicalRDD],
+      "spreadCheckpointed needs a checkpointed frame (logical plan " +
+        s"LogicalRDD), got ${df.queryExecution.logical.nodeName}")
+    val cores = df.sparkSession.sparkContext.defaultParallelism
+    if (cores <= 1) return df
+    if (df.rdd.getNumPartitions < cores) df.repartition(cores) else df
   }
 }

@@ -97,7 +97,7 @@ object Sampling {
       defaultPrefilterRate: Double = 1.0,
       salt: String = ""): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val pre = stratifiedHashSample(Par.fanOut(docs), strataCol, idCol,
+    val pre = stratifiedHashSample(docs, strataCol, idCol,
       prefilterRates, defaultPrefilterRate, salt)
     val budget = budgets.foldLeft(lit(defaultBudget)) {
       case (acc, (stratum, b)) =>

@@ -45,7 +45,7 @@ object Scrub {
     val t1 = regexp_replace(t0, EMAIL_RE, "<EMAIL>")
     val t2 = regexp_replace(t1, IPV4_RE, "<IP>")
     val t3 = regexp_replace(t2, PHONE_RE, "<PHONE>")
-    Par.fanOut(docs).select(
+    docs.select(
       col(idCol),
       t3.as(textCol),
       regexp_count(t0, lit(EMAIL_RE)).cast("int").as("n_email"),
@@ -106,7 +106,7 @@ object Scrub {
     val nPii = regexp_count(t0, lit(EMAIL_RE)) +
       regexp_count(t1, lit(IPV4_RE)) + regexp_count(t2, lit(PHONE_RE))
     scrubPii(
-      Par.fanOut(docs).where(nPii.cast("double") * 1000.0 /
+      docs.where(nPii.cast("double") * 1000.0 /
         greatest(length(t0), lit(1)) <= maxPerKChars),
       idCol, textCol)
   }
@@ -133,7 +133,7 @@ object Scrub {
     */
   def creditCardScan(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val cands = Par.fanOut(docs).select(col(idCol),
+    val cands = docs.select(col(idCol),
         explode(array_distinct(regexp_extract_all(
           coalesce(col(textCol), lit("")), lit(CC_CANDIDATE_RE), lit(0))))
           .as("candidate"))

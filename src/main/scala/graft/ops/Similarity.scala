@@ -70,7 +70,7 @@ object Similarity {
     val maxAbs = array_max(transform(v, x => abs(x)))
     val scale = col("ma") / 127.0
     val recon = transform(col("v"), x => floor(x / col("sc") + lit(0.5)) * col("sc"))
-    Par.fanOut(emb)
+    emb
       .select(col("vec_id"), v.as("v"), maxAbs.as("ma"))
       // NaN sorts above 0 in Spark, so `ma > 0` alone would admit NaN/Inf
       // vectors and report NaN stats; the report excludes them like zeros
@@ -252,7 +252,7 @@ object Similarity {
     */
   def ivfCentroids(emb: DataFrame, k: Int, iters: Int = 5,
       sampleSize: Int = 4096): Array[Array[Double]] = {
-    val sample = unitVecs(Par.fanOut(emb), "vec_id", "e")
+    val sample = unitVecs(emb, "vec_id", "e")
       .withColumn("h", xxhash64(col("vec_id")))
       .orderBy("h").limit(sampleSize)
       .select("e").collect()
@@ -464,7 +464,7 @@ object Similarity {
     * never recompute assignments.
     */
   def ivfAssign(emb: DataFrame, centroids: Array[Array[Double]]): DataFrame = {
-    val u = unitVecs(Par.fanOut(emb), "vec_id", "e")
+    val u = unitVecs(emb, "vec_id", "e")
     // argmax over k cells via struct-max: (dot, -cell) → best dot, lowest id
     val best = greatest(centroids.toIndexedSeq.zipWithIndex.map { case (c, i) =>
       struct(dot(col("e"), centroidLit(c)).as("d"), lit(-i).as("neg_cell"))
@@ -772,7 +772,7 @@ object Similarity {
     */
   def lshAssign(emb: DataFrame, dim: Int, numPlanes: Int = 8,
       seed: Long = 42L): DataFrame =
-    unitVecs(Par.fanOut(emb), "vec_id", "e")
+    unitVecs(emb, "vec_id", "e")
       .select(col("vec_id"), col("e"),
         lshBucket(col("e"), dim, numPlanes, seed).as("bucket"))
 
@@ -1864,12 +1864,11 @@ object Similarity {
     val p = broadcast(unitVecs(probes, "q_id", "q_e"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id").asc)
-    // round 17b: kernel fan, was the floored fan — each corpus row pays
-    // |probes| dot products (the definition of brute kNN), the heaviest
-    // per-row kernel in the repo, but the floored fan never fired on the
-    // sub-floor local embedding table and the whole sweep ran as ONE task
-    // (q_margin_knn 965ms/1t, q_hubness 787ms/1t). Rounded per-pair cos +
-    // (cos desc, id) rank are placement-independent.
+    // round 17b: kernel fan — each corpus row pays |probes| dot products
+    // (the definition of brute kNN), the heaviest per-row kernel in the
+    // repo; unfanned, the whole sweep over the local embedding table ran
+    // as ONE task (q_margin_knn 965ms/1t, q_hubness 787ms/1t). Rounded
+    // per-pair cos + (cos desc, id) rank are placement-independent.
     unitVecs(Par.fanOutKernel(corpus), "vec_id", "e")
       .join(p, if (excludeSelf) col("vec_id") =!= col("q_id") else lit(true))
       .select(col("q_id"), col("vec_id"),
@@ -1915,7 +1914,7 @@ object Similarity {
     // the forward frame is referenced three times (avg, rank-1 row,
     // candidate ids) on a derived key — the join-null-filter recompute
     // trap; candidate-set-sized, so the cut is cheap
-    val fwd = fwd0.getOrElse(knnAllBrute(Par.fanOut(corpus), probes, k)).localCheckpoint()
+    val fwd = fwd0.getOrElse(knnAllBrute(corpus, probes, k)).localCheckpoint()
     val sumFwd = fwd.groupBy(col("q_id"))
       .agg(round(sum(col("cos")), 4).as("s_fwd"))
     // candidate vectors feed the BACKWARD side's broadcast: without the
@@ -2020,7 +2019,7 @@ object Similarity {
     */
   def vectorQualityStats(emb: DataFrame, dim: Int): DataFrame = {
     val e = asDouble(col("embedding"))
-    Par.fanOut(emb).select(size(col("embedding")).as("_nd"), l2norm(e).as("_nrm"),
+    emb.select(size(col("embedding")).as("_nd"), l2norm(e).as("_nrm"),
         exists(e, x => isnan(x)).as("_nan"))
       .where(!col("_nan") && col("_nd") === dim && col("_nrm") > 0)
       .agg(avg("_nrm").as("_mu"), stddev_pop("_nrm").as("_sigma"))

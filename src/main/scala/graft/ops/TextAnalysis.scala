@@ -1363,7 +1363,7 @@ object TextAnalysis {
     // round 17b measured-and-rejected (guide §1): a kernel fan here
     // ablated +0.12 s on q_lm_ppl and +0.29 s on q_dsir_mix — the
     // tokenize + self-zip explode is too cheap per row to pay for the
-    // exchange (the r16 floor lesson).
+    // exchange (the r16 cheap-kernel lesson, see [[Par]]).
     docs
       .select(col("doc_id"), t.as("_t"))
       .where(size(col("_t")) >= 2)
@@ -1485,7 +1485,7 @@ object TextAnalysis {
     * One row; only (word, count) partials and per-doc scores shuffle.
     */
   def bitsPerByte(docs: DataFrame): DataFrame =
-    Par.fanOut(docs).select(col("doc_id"),
+    docs.select(col("doc_id"),
         octet_length(col("text")).cast("long").as("_bytes"))
       .join(surprisalScores(docs), "doc_id")
       .agg(count(lit(1)).as("n_docs"),
@@ -1503,7 +1503,7 @@ object TextAnalysis {
   }
 
   def fingerprints(docs: DataFrame): DataFrame =
-    Par.fanOut(docs).select(col("doc_id"), fingerprint(col("text")).as("fp"))
+    docs.select(col("doc_id"), fingerprint(col("text")).as("fp"))
 
   /** Feature-hashing document vectors — the hashing trick (Weinberger et
     * al.): each token is hashed into one of `dim` buckets with a ±1 sign
@@ -1553,10 +1553,9 @@ object TextAnalysis {
     // kernelFan = false is the INCREMENT-probe shape
     // ([[semanticDedupTextApply]]): the frame is a fraction of the corpus
     // that immediately joins the bucketed standing index, where downstream
-    // parallelism comes from that join's exchange and the unguarded fan
-    // measured +0.23 s at sf0.1 (r17 ablation); the floored form still
-    // fans a genuinely large starved increment.
-    val fanned = if (kernelFan) Par.fanOutKernel(docs) else Par.fanOut(docs)
+    // parallelism comes from that join's exchange and the fan measured
+    // +0.23 s at sf0.1 (r17 ablation), so it is not fanned.
+    val fanned = if (kernelFan) Par.fanOutKernel(docs) else docs
     fanned.select(col("doc_id").as("vec_id"), toks(col("text")).as("_t"))
       .where(size(col("_t")) > 0)
       .select(col("vec_id"),
@@ -1803,7 +1802,7 @@ object TextAnalysis {
     val pe = (col("_na") * col("_nb") +
       (col("n") - col("_na")) * (col("n") - col("_nb"))) /
       (col("n") * col("n").cast("double"))
-    Par.fanOut(labels).agg(count(lit(1)).as("n"),
+    labels.agg(count(lit(1)).as("n"),
         sum(when(a, 1L).otherwise(0L)).as("_na"),
         sum(when(b, 1L).otherwise(0L)).as("_nb"),
         sum(when(a === b, 1L).otherwise(0L)).as("_agree"))
@@ -2129,7 +2128,7 @@ object TextAnalysis {
     require(nBins >= 2, s"calibrationReport: need nBins >= 2, got $nBins")
     val s = col(scoreCol).cast("double")
     val y = col(labelCol).cast("boolean").cast("int")
-    Par.fanOut(scored)
+    scored
       .select(least(floor(s * nBins).cast("int") + 1, lit(nBins)).as("bin"),
         s.as("_s"), y.as("_y"))
       .groupBy("bin")
@@ -2156,7 +2155,7 @@ object TextAnalysis {
     require(nBins >= 2, s"calibrationError: need nBins >= 2, got $nBins")
     val s = col(scoreCol).cast("double")
     val y = col(labelCol).cast("boolean").cast("int")
-    Par.fanOut(scored)
+    scored
       .select(least(floor(s * nBins).cast("int") + 1, lit(nBins)).as("bin"),
         s.as("_s"), y.as("_y"))
       .groupBy("bin")
@@ -2186,7 +2185,7 @@ object TextAnalysis {
     require(thresholds.nonEmpty, "thresholdSweep: need thresholds")
     val s = col(scoreCol).cast("double")
     val y = col(labelCol).cast("boolean").cast("int")
-    Par.fanOut(scored).select(s.as("_s"), y.as("_y"))
+    scored.select(s.as("_s"), y.as("_y"))
       .groupBy("_s")
       .agg(sum(col("_y")).as("_np"), sum(lit(1) - col("_y")).as("_nn"))
       .select(col("_s"), col("_np"), col("_nn"),
@@ -2332,7 +2331,7 @@ object TextAnalysis {
     val s = col(scoreCol).cast("double")
     val y = col(labelCol).cast("boolean").cast("int")
     val eps = 1e-15
-    Par.fanOut(scored).select(s.as("_s"), y.as("_y"))
+    scored.select(s.as("_s"), y.as("_y"))
       .where(col("_s").isNotNull)
       .agg(count(lit(1)).as("n"),
         sum(col("_y")).cast("long").as("n_pos"),
@@ -2362,7 +2361,7 @@ object TextAnalysis {
     val y = col(labelCol).cast("boolean").cast("int")
     val w = Window.partitionBy(col(groupCol)).orderBy(col("_s"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Par.fanOut(scored)
+    scored
       .select(col(groupCol), col(scoreCol).cast("double").as("_s"),
         y.as("_y"))
       .where(col("_s").isNotNull)
@@ -2421,7 +2420,7 @@ object TextAnalysis {
     import spark.implicits._
     val y = col(labelCol).cast("boolean").cast("int")
     val w = poisson1DrawCol(salt, col("_b"))
-    val dict = Par.fanOut(scored)
+    val dict = scored
       .select(col(idCol).cast("string").as("_id"),
         col(scoreCol).cast("double").as("_s"), y.as("_y"))
       .where(col("_s").isNotNull)
@@ -2514,7 +2513,7 @@ object TextAnalysis {
     val spark = scored.sparkSession
     import spark.implicits._
     val w = poisson1DrawCol(salt, col("_r"))
-    val deltas = Par.fanOut(scored)
+    val deltas = scored
       .select(col(idCol).cast("string").as("_id"),
         col(aCol).cast("double").as("_ma"),
         col(bCol).cast("double").as("_mb"))
@@ -2566,7 +2565,7 @@ object TextAnalysis {
     // base feeds the observed aggregate AND the replica explode — cut
     // lineage so the upstream scoring chain runs once (the
     // dedupFlagsByBlock checkpoint rule); the frame is (id, double)-sized
-    val base = Par.fanOut(scored).select(col(idCol).cast("string").as("_id"),
+    val base = scored.select(col(idCol).cast("string").as("_id"),
         col(aCol).cast("double").as("_ma"),
         col(bCol).cast("double").as("_mb"))
       .where(col("_ma").isNotNull && col("_mb").isNotNull)
@@ -2612,7 +2611,7 @@ object TextAnalysis {
     */
   private[graft] def scoreDictCum(scored: DataFrame, scoreCol: String,
       labelCol: String): DataFrame =
-    scoreDictCumFrom(scoreDict(Par.fanOut(scored), scoreCol, labelCol).localCheckpoint())
+    scoreDictCumFrom(scoreDict(scored, scoreCol, labelCol).localCheckpoint())
 
   /** The prefix-sum half over an already-built (checkpointed)
     * dictionary — shared by the one-shot and standing-artifact paths.
