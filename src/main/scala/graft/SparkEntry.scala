@@ -24,22 +24,6 @@ object SparkEntry {
 
   private type Q = (SparkSession, String) => DataFrame
 
-  /** Sorted-neighborhood near-dup clusters for `d`, persisted build-once
-    * (threshold baked into the name) and shared by q_dedup_clusters and
-    * q_dedup_keep. The corpus row count — a parquet-metadata-only read —
-    * is baked into the name as a content witness, so regenerating the
-    * data in place invalidates the persisted clusters instead of serving
-    * stale ones to the oracle gate; a same-count in-place edit
-    * additionally requires IndexTables.drop.
-    */
-  /** Row count as a content witness for persisted index names — a parquet-
-    * metadata-only read. Every index ident below includes it so regenerating
-    * the data in place invalidates the persisted index instead of silently
-    * serving stale tables to queries and the oracle gate; a same-count
-    * in-place edit additionally requires IndexTables.drop.
-    */
-  private def witness(df: DataFrame): String = df.count().toString
-
   /** The boilerplate-fixture injection q_boilerplate AND
     * q_boilerplate_incr share: a site-wide banner (every doc), a
     * half-site banner (even ids), a 3-doc line STRADDLING the
@@ -159,18 +143,18 @@ object SparkEntry {
     * scrub's gram-ownership shuffle is the single most expensive stage of
     * each — "write the scrubbed corpus, then curate the written table" is
     * the production form the recipe docs prescribe, so the first caller
-    * builds it once per (dir, witness) and everyone after reads parquet.
+    * builds it once per version of the documents files and everyone after
+    * reads parquet.
     */
   private def scrubbedCorpus(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    IndexTables.plain(s,
-      IndexTables.ident("scrub_k8", d, witness(docs)))(
+    IndexTables.plain(s, IndexTables.ident("scrub_k8", docs))(
       Dedup.substringScrub(docs, k = 8).select(col("doc_id"), col("text")))
   }
 
   /** Standing recipe-prefix decision tables (the scrubbedCorpus /
     * qscored_v1 pattern): the gate→exact-dedup→SNM→lexical-decontam
-    * chain the v5-v9 recipes share, built ONCE per (snapshot, witness)
+    * chain the v5-v9 recipes share, built ONCE per documents snapshot
     * and read by every variant — the round-12 verdict's family fix
     * (the five recipes re-ran the identical prefix per query). Three
     * tables because the prefix input/stages differ: raw corpus
@@ -185,16 +169,14 @@ object SparkEntry {
     */
   private def recipePrefixRaw(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    IndexTables.plain(s,
-      IndexTables.ident("recipeprefix_raw_v1", d, witness(docs)))(
+    IndexTables.plain(s, IndexTables.ident("recipeprefix_raw_v1", docs))(
       Curation.recipePrefixDecisions(docs.where(col("doc_id") % 97 =!= 0),
         docs.where(col("doc_id") % 97 === 0), contamN = 3))
   }
 
   private def recipePrefixScrub(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    IndexTables.plain(s,
-      IndexTables.ident("recipeprefix_scrub_v1", d, witness(docs)))(
+    IndexTables.plain(s, IndexTables.ident("recipeprefix_scrub_v1", docs))(
       Curation.recipePrefixDecisions(
         scrubbedCorpus(s, d).where(col("doc_id") % 97 =!= 0),
         docs.where(col("doc_id") % 97 === 0), contamN = 3))
@@ -203,30 +185,25 @@ object SparkEntry {
   private def recipePrefixScrubSem(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     IndexTables.plain(s,
-      IndexTables.ident("recipeprefix_scrubsem_v1", d, witness(docs)))(
+      IndexTables.ident("recipeprefix_scrubsem_v1", docs))(
       Curation.recipePrefixSemExtend(recipePrefixScrub(s, d),
         scrubbedCorpus(s, d).where(col("doc_id") % 97 =!= 0),
         docs.where(col("doc_id") % 97 === 0), semMinCos = 0.85))
   }
 
   /** The learned unigram tokenizer as a STANDING model table (the
-    * scrubbedCorpus/bm25-index pattern): train once per (dir, witness),
+    * scrubbedCorpus/bm25-index pattern): train once per documents files,
     * every apply query — encode, doc stats — reads the model back instead
     * of re-running EM. This is the production seam: a tokenizer is
     * trained once per corpus snapshot and applied everywhere.
     */
-  private def unigramModel(s: SparkSession, d: String): Seq[(String, Double)] =
+  private def unigramModel(s: SparkSession, d: String): Seq[(String, Double)] = {
+    val docs = Tables.documents(s, d)
     TextAnalysis.unigramModelOf(IndexTables.plain(s,
-      IndexTables.ident("unigram_v256", d, witness(Tables.documents(s, d))))(
-      TextAnalysis.unigramLearn(Tables.documents(s, d), vocabSize = 256,
-        emIters = 2)))
+      IndexTables.ident("unigram_v256", docs))(
+      TextAnalysis.unigramLearn(docs, vocabSize = 256, emIters = 2)))
+  }
 
-  /** Deterministic URL synthesis for the web-provenance queries (the
-    * documents table carries no URL column): scheme/host case, public
-    * suffix, explicit default port, path id (doc_id % 50 — forces
-    * canonical collisions), trailing slash, tracking params, and fragment
-    * all keyed on doc_id residues so the oracle rebuilds the same URLs.
-    */
   /** DuckDB twin of [[asofMicrosFrames]] (epoch_us ≡ unix_micros after
     * Tables.events' ns→µs truncation — both truncate toward zero).
     */
@@ -257,7 +234,7 @@ object SparkEntry {
     * shared input of the classifier-eval family (q_threshold_sweep,
     * q_auc, q_ap, q_clf_report, q_auc_boot, q_auc_group). STANDING
     * (IndexTables.plain — the scrubbedCorpus / unigram_v256 precedent):
-    * the corpus is scored and joined ONCE per (snapshot dir, witness);
+    * the corpus is scored and joined ONCE per documents snapshot;
     * every eval query and every bench pass after the first reads the
     * materialized (doc_id, quality_score, keep, y, source) table
     * instead of re-running the score+join chain — at 100 TB, eval
@@ -267,12 +244,12 @@ object SparkEntry {
     */
   private def qualityScoredLabeled(s: SparkSession, d: String): DataFrame =
     // "_v1" is the scorer-version token (the unigram_v256 precedent):
-    // the ident otherwise keys only on (dir, witness), so a change to
-    // QUALITY_W, the keep threshold, or the y = n_chars >= 300 label
+    // the ident otherwise keys only on the documents files, so a change
+    // to QUALITY_W, the keep threshold, or the y = n_chars >= 300 label
     // would silently reuse a stale materialized table — bump the
     // version with any scorer/label change
-    IndexTables.plain(s, IndexTables.ident("qscored_v1", d,
-      witness(Tables.documents(s, d))))(
+    IndexTables.plain(s,
+      IndexTables.ident("qscored_v1", Tables.documents(s, d)))(
       TextAnalysis.qualityClassifierScore(Tables.documents(s, d))
         .join(Tables.documents(s, d).select(col("doc_id"), col("source"),
           (col("n_chars") >= 300).cast("int").as("y")), "doc_id"))
@@ -284,7 +261,7 @@ object SparkEntry {
     * substitute+drop degradation. The tokenize→degrade→rejoin chain
     * used to run inside EVERY MT query; at 100 TB an eval-pair set is
     * scored by many metrics per snapshot, so the pair corpus is the
-    * artifact — materialized once per (dir, witness), read by
+    * artifact — materialized once per documents snapshot, read by
     * q_bleu / q_bleu_source / q_chrf / q_rouge / q_rouge2 / q_ter.
     * Token-level metrics are unchanged by reading ref from the
     * rejoined text (toks ∘ array_join ∘ toks ≡ toks — the q_chrf ref
@@ -299,8 +276,8 @@ object SparkEntry {
     // read locally (one-task scan), and every consumer is a row-pure metric
     // kernel (BLEU/chrF/TER/ROUGE DPs) — the exact shape Par.fanOutKernel
     // exists for; at scale the probe is a no-op (guide §2.2/§2.6)
-    ops.Par.fanOutKernel(IndexTables.plain(s, IndexTables.ident("evalpairs_v1", d,
-      witness(docs))) {
+    ops.Par.fanOutKernel(IndexTables.plain(s,
+      IndexTables.ident("evalpairs_v1", docs)) {
       val t = Core.tokensUni(col("text"))
       val mut = transform(t, (x, i) =>
         when((i + 1) % 3 === 0, lit("xx")).otherwise(x))
@@ -331,6 +308,12 @@ object SparkEntry {
           .otherwise(least(col("a"), col("b"))).as("loser"))
   }
 
+  /** Deterministic URL synthesis for the web-provenance queries (the
+    * documents table carries no URL column): scheme/host case, public
+    * suffix, explicit default port, path id (doc_id % 50 — forces
+    * canonical collisions), trailing slash, tracking params, and fragment
+    * all keyed on doc_id residues so the oracle rebuilds the same URLs.
+    */
   private def urlInject(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), col("n_chars"), concat(
       when(col("doc_id") % 4 === 0, lit("HTTPS://WWW."))
@@ -367,11 +350,63 @@ object SparkEntry {
   private val CODE_BLOCK =
     "\nfunction f(x) {\n  // add one\n  var y = x + 1;\n  return y;\n}"
 
+  /** Sorted-neighborhood near-dup clusters for `d`, persisted build-once
+    * (threshold baked into the name) and shared by q_dedup_clusters and
+    * q_dedup_keep. The index is keyed on the documents files, so
+    * regenerating or editing the data in place rebuilds the clusters
+    * instead of serving stale ones to the oracle gate.
+    */
   private def snmClusters(s: SparkSession, d: String): DataFrame = {
-    val n = witness(Tables.documents(s, d))
-    IndexTables.plain(s, IndexTables.ident("snm_clusters_t90", d, n))(
-      Dedup.nearDupClusters(
-        Dedup.sortedNeighborPairs(Tables.documents(s, d), threshold = 0.9)))
+    val docs = Tables.documents(s, d)
+    IndexTables.plain(s, IndexTables.ident("snm_clusters_t90", docs))(
+      Dedup.nearDupClusters(Dedup.sortedNeighborPairs(docs, threshold = 0.9)))
+  }
+
+  /** The standing BM25 (postings, corpus stats) over `d`'s documents; "pst1"
+    * tags the norm-in-posting schema so a pre-dl index is never reused.
+    */
+  private def bm25Index(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val docs = Tables.documents(s, d)
+    val name = IndexTables.ident("bm25pst1", docs)
+    (Retrieval.postingsIndex(docs, name), Retrieval.corpusStats(docs, name))
+  }
+
+  private def positionalIndex(s: SparkSession, d: String): DataFrame = {
+    val docs = Tables.documents(s, d)
+    Retrieval.positionalIndex(docs, IndexTables.ident("pospst1", docs))
+  }
+
+  private def ivfIndex(s: SparkSession, d: String): (Array[Array[Double]], DataFrame) = {
+    val emb = Tables.embeddings(s, d)
+    Similarity.ivfIndex(emb, 16, IndexTables.ident("ivf", emb))
+  }
+
+  private def lshIndex(s: SparkSession, d: String): DataFrame = {
+    val emb = Tables.embeddings(s, d)
+    Similarity.lshIndex(emb, dim = 64, IndexTables.ident("lsh", emb))
+  }
+
+  /** The name of the standing winnow index of every doc but each 7th,
+    * built at each gram size in `ks`.
+    */
+  private def winnowSnapshot(s: SparkSession, d: String, ks: Int*): String = {
+    val docs = Tables.documents(s, d)
+    val name = IndexTables.ident("winsnap", docs)
+    ks.foreach(k => Dedup.winnowIndex(docs.where(col("doc_id") % 7 =!= 0), name, k = k))
+    name
+  }
+
+  /** q_ingest_gate's (increment, standing line-frequency index, standing
+    * cleaned-text fingerprints); the snapshot is doc_id % 10 < 8.
+    */
+  private def ingestGate(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
+    val docs = ingestInject(Tables.documents(s, d))
+    val base = docs.where(col("doc_id") % 10 < 8)
+    val idx = Dedup.lineFreqIndex(base, IndexTables.ident("ingate_lf", base))
+    val fps = IndexTables.plain(s, IndexTables.ident("ingate_fp", base))(
+      ops.Scrub.scrubPii(Dedup.boilerplateScrub(base, minDocs = 3))
+        .select(md5(col("text")).as("fp")).distinct())
+    (docs.where(col("doc_id") % 10 >= 8), idx, fps)
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */
@@ -542,8 +577,8 @@ object SparkEntry {
     // sf0.01; pair-join/eq-count/threshold replay mechanically)
     "q_minhash_lsh" -> ((s, d) =>
       Dedup.minHashLshPairs(Tables.documents(s, d), threshold = 0.2,
-        indexName = Some(IndexTables.ident("minhash", d,
-          witness(Tables.documents(s, d)))))),
+        indexName = Some(
+          IndexTables.ident("minhash", Tables.documents(s, d))))),
     // 64-bit SimHash per doc — oracled since round 15 via the full
     // signature pin (the sketch IS the output; live kernel drift -> red)
     "q_simhash" -> ((s, d) => Dedup.simHash(Tables.documents(s, d))),
@@ -869,9 +904,7 @@ object SparkEntry {
     // assignment written once, and the groupBy("cell") rides the bucketing
     // (no Exchange)
     "q_cluster_sizes" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val (_, assigned) = Similarity.ivfIndex(emb, 16,
-        IndexTables.ident("ivf", d, witness(emb)))
+      val (_, assigned) = ivfIndex(s, d)
       assigned.groupBy("cell").count().withColumnRenamed("count", "cnt")
     }),
     // ---- custom Aggregator through the SQL-visible udaf() path (§2.11 A5) ----
@@ -951,8 +984,7 @@ object SparkEntry {
     "q_substring_incr" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val base = docs.where(col("doc_id") % 10 < 8)
-      val idx = Dedup.substringIndex(base,
-        IndexTables.ident("substr", d, witness(base)))
+      val idx = Dedup.substringIndex(base, IndexTables.ident("substr", base))
       Dedup.substringScrubApply(docs.where(col("doc_id") % 10 >= 8), idx)
     }),
     // what did the scrub actually cost each source? per-source token
@@ -1136,19 +1168,15 @@ object SparkEntry {
         .select(col("vec_id"), col("dim_idx"),
           round(col("value"), 4).as("value"))),
     "q_nn" -> ((s, d) => Similarity.nearestNeighbour(Tables.embeddings(s, d))),
-    "q_lsh_pairs" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Similarity.lshCandidatePairs(
-        Similarity.lshIndex(emb, dim = 64,
-          IndexTables.ident("lsh", d, witness(emb))), minCos = -1.0)
-    }),
+    "q_lsh_pairs" -> ((s, d) =>
+      Similarity.lshCandidatePairs(lshIndex(s, d), minCos = -1.0)),
     // scale-path NN default: LSH candidates → exact rescore → argmax.
     // q_nn stays as the exact O(N²) verifier; DedupSimilaritySpec asserts
     // recall ≥ 0.95 of this path against it.
     "q_nn_lsh" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       Similarity.lshNearestNeighbour(emb, dim = 64,
-        indexName = Some(IndexTables.ident("lsh_nn", d, witness(emb))))
+        indexName = Some(IndexTables.ident("lsh_nn", emb)))
     }),
     // embedding-cosine near-dup dedup decision: LSH bucket candidates at
     // cos >= 0.99 → connected components → keep lowest id per cluster.
@@ -1157,9 +1185,7 @@ object SparkEntry {
     // replays with e0-exact doubles, then min-label recursion).
     "q_embed_dedup" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val idx = Similarity.lshIndex(emb, dim = 64,
-        IndexTables.ident("lsh", d, witness(emb)))
-      val pairs = Similarity.lshCandidatePairs(idx, minCos = 0.99)
+      val pairs = Similarity.lshCandidatePairs(lshIndex(s, d), minCos = 0.99)
         .select("a_id", "b_id")
       Dedup.dedupCorpus(emb.select(col("vec_id").as("doc_id")), pairs)
         .agg(count(lit(1)).as("n_kept"))
@@ -1213,9 +1239,7 @@ object SparkEntry {
     "q_ivf_topk" -> ((s, d) => {
       // nprobe = k probes every cell, so IVF must reproduce exact top-10 —
       // the oracle then validates the whole index pipeline end-to-end
-      val emb = Tables.embeddings(s, d)
-      val (cents, assigned) = Similarity.ivfIndex(emb, 16,
-        IndexTables.ident("ivf", d, witness(emb)))
+      val (cents, assigned) = ivfIndex(s, d)
       Similarity.ivfTopK(assigned, 0L, 10, cents, nprobe = 16)
     }),
     // batch-of-queries ANN: 100 query vectors probed in ONE plan against
@@ -1223,8 +1247,7 @@ object SparkEntry {
     // reproduces every per-query top-10 row)
     "q_ivf_topk_multi" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val (cents, assigned) = Similarity.ivfIndex(emb, 16,
-        IndexTables.ident("ivf", d, witness(emb)))
+      val (cents, assigned) = ivfIndex(s, d)
       Similarity.ivfTopKAll(assigned, emb.where(col("vec_id") < 100), 10,
         cents, nprobe = 16)
     }),
@@ -1234,8 +1257,7 @@ object SparkEntry {
     // oracle regime; the recall/refine trade is measured in the spec
     "q_ivf_quantized" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val (cents, assigned) = Similarity.ivfIndex(emb, 16,
-        IndexTables.ident("ivf", d, witness(emb)))
+      val (cents, assigned) = ivfIndex(s, d)
       Similarity.ivfTopKAllQuantized(assigned,
         emb.where(col("vec_id") < 100), 10, cents, nprobe = 16, refine = 200)
     }),
@@ -1244,8 +1266,7 @@ object SparkEntry {
     // (nprobe = all cells ⇒ exact, so DuckDB replays it)
     "q_hard_negatives" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val (cents, assigned) = Similarity.ivfIndex(emb, 16,
-        IndexTables.ident("ivf", d, witness(emb)))
+      val (cents, assigned) = ivfIndex(s, d)
       Similarity.hardNegatives(assigned, emb.select(col("vec_id"), col("label")),
         emb.where(col("vec_id") < 100), k = 5, cents, nprobe = 16)
     }),
@@ -1269,8 +1290,7 @@ object SparkEntry {
     // different-label negative per anchor, with the cosine margin
     "q_triplets" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val (cents, assigned) = Similarity.ivfIndex(emb, 16,
-        IndexTables.ident("ivf", d, witness(emb)))
+      val (cents, assigned) = ivfIndex(s, d)
       Similarity.contrastiveTriplets(assigned,
         emb.select(col("vec_id"), col("label")),
         emb.where(col("vec_id") < 100), cents, nprobe = 16)
@@ -1699,7 +1719,7 @@ object SparkEntry {
       val docs = Tables.documents(s, d)
       val base = docs.where(col("doc_id") % 10 < 8)
       val idx = TextAnalysis.semanticDedupTextIndex(s, base,
-        IndexTables.ident("semtext", d, witness(base)))
+        IndexTables.ident("semtext", base))
       TextAnalysis.semanticDedupTextApply(
         docs.where(col("doc_id") % 10 >= 8), idx, minCos = 0.9)
     }),
@@ -2194,24 +2214,16 @@ object SparkEntry {
     // incremental MOSS match: the increment (every 7th doc) probed
     // against the standing winnow index of the rest — increment-sized
     // work, snapshot text never read
-    "q_winnow_incr" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      // witness over the UNFILTERED table: metadata-only count (a
-      // filtered count would predicate-scan the corpus per invocation)
-      val name = IndexTables.ident("winsnap", d, witness(docs))
-      Dedup.winnowIndex(docs.where(col("doc_id") % 7 =!= 0), name)
-      Dedup.winnowPairsAgainst(docs.where(col("doc_id") % 7 === 0), name)
-    }),
+    "q_winnow_incr" -> ((s, d) =>
+      Dedup.winnowPairsAgainst(
+        Tables.documents(s, d).where(col("doc_id") % 7 === 0),
+        winnowSnapshot(s, d, 3))),
     // the incremental probe at two resolutions: mirror-grade vs
     // phrase-level hits against the reference corpus, per increment doc
-    "q_winnow_incr_mk" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val name = IndexTables.ident("winsnap", d, witness(docs))
-      val snap = docs.where(col("doc_id") % 7 =!= 0)
-      Dedup.winnowIndex(snap, name)
-      Dedup.winnowIndex(snap, name, k = 8)
-      Dedup.winnowPairsAgainstMultiK(docs.where(col("doc_id") % 7 === 0), name)
-    }),
+    "q_winnow_incr_mk" -> ((s, d) =>
+      Dedup.winnowPairsAgainstMultiK(
+        Tables.documents(s, d).where(col("doc_id") % 7 === 0),
+        winnowSnapshot(s, d, 3, 8))),
     // multi-resolution match classes: an 8-gram fingerprint share means a
     // ≥ 8-token verbatim run ('long'); 3-gram-only evidence is phrase
     // overlap ('short') — the match-length signal one gram size can't give
@@ -2233,8 +2245,7 @@ object SparkEntry {
     "q_boilerplate_incr" -> ((s, d) => {
       val docs = boilerInject(Tables.documents(s, d))
       val base = docs.where(col("doc_id") % 10 < 8)
-      val idx = Dedup.lineFreqIndex(base,
-        IndexTables.ident("linefreq", d, witness(base)))
+      val idx = Dedup.lineFreqIndex(base, IndexTables.ident("linefreq", base))
       Dedup.boilerplateScrubApply(docs.where(col("doc_id") % 10 >= 8), idx,
         minDocs = 3)
     }),
@@ -2244,33 +2255,17 @@ object SparkEntry {
     // boilerplate removal, PII scrub, Gopher gate, eval-sentinel
     // decontam flag, exact dup probe — one verdict row per incoming doc
     "q_ingest_gate" -> ((s, d) => {
-      val docs = ingestInject(Tables.documents(s, d))
-      val base = docs.where(col("doc_id") % 10 < 8)
-      val idx = Dedup.lineFreqIndex(base,
-        IndexTables.ident("ingate_lf", d, witness(base)))
-      val fps = IndexTables.plain(s,
-        IndexTables.ident("ingate_fp", d, witness(base)))(
-        ops.Scrub.scrubPii(Dedup.boilerplateScrub(base, minDocs = 3))
-          .select(md5(col("text")).as("fp")).distinct())
-      Curation.ingestGateExact(docs.where(col("doc_id") % 10 >= 8), idx,
-          ingestEvalGrams(s), fps, minDocs = 3)
+      val (incr, idx, fps) = ingestGate(s, d)
+      Curation.ingestGateExact(incr, idx, ingestEvalGrams(s), fps, minDocs = 3)
         .select(col("doc_id"), col("pass_struct"), col("pass_rep"),
           col("contaminated"), col("dup_of_corpus"), col("keep"))
     }),
     // the one-row batch dashboard over the same gate verdicts: keeps +
     // rejection-reason histogram (reasons independent, not a partition)
     "q_ingest_report" -> ((s, d) => {
-      val docs = ingestInject(Tables.documents(s, d))
-      val base = docs.where(col("doc_id") % 10 < 8)
-      val idx = Dedup.lineFreqIndex(base,
-        IndexTables.ident("ingate_lf", d, witness(base)))
-      val fps = IndexTables.plain(s,
-        IndexTables.ident("ingate_fp", d, witness(base)))(
-        ops.Scrub.scrubPii(Dedup.boilerplateScrub(base, minDocs = 3))
-          .select(md5(col("text")).as("fp")).distinct())
-      Curation.ingestSummary(Curation.ingestGateExact(
-        docs.where(col("doc_id") % 10 >= 8), idx, ingestEvalGrams(s), fps,
-        minDocs = 3))
+      val (incr, idx, fps) = ingestGate(s, d)
+      Curation.ingestSummary(Curation.ingestGateExact(incr, idx,
+        ingestEvalGrams(s), fps, minDocs = 3))
     }),
     // conjunctive posting-list search over the query terms only
     "q_search" -> ((s, d) =>
@@ -2280,23 +2275,16 @@ object SparkEntry {
       Retrieval.bm25(Tables.documents(s, d), BM25_TERMS)),
     // the query-serving twin: same scores served from the persisted
     // token-bucketed postings + one-row stats tables — no corpus text is
-    // read or tokenized at query time ("pst1" tags the norm-in-posting
-    // schema so a pre-dl on-disk index can never be re-registered here)
+    // read or tokenized at query time
     "q_bm25_idx" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val name = IndexTables.ident("bm25pst1", d, witness(docs))
-      Retrieval.bm25FromIndex(
-        Retrieval.postingsIndex(docs, name),
-        Retrieval.corpusStats(docs, name), BM25_TERMS)
+      val (postings, stats) = bm25Index(s, d)
+      Retrieval.bm25FromIndex(postings, stats, BM25_TERMS)
     }),
     // the serving shape: top-25 by score from the standing index
     // (TakeOrdered — per-partition heads + one k-row merge, no global sort)
     "q_bm25_topk" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val name = IndexTables.ident("bm25pst1", d, witness(docs))
-      Retrieval.bm25TopK(
-        Retrieval.postingsIndex(docs, name),
-        Retrieval.corpusStats(docs, name), BM25_TERMS, k = 25)
+      val (postings, stats) = bm25Index(s, d)
+      Retrieval.bm25TopK(postings, stats, BM25_TERMS, k = 25)
     }),
     // batch-of-queries serving: a whole query table scored from the
     // standing index in one bucket-pruned pass (raw query text goes
@@ -2304,11 +2292,8 @@ object SparkEntry {
     // and returns no rows). rank cast to long for the BIGINT oracle
     "q_bm25_batch" -> ((s, d) => {
       import s.implicits._
-      val docs = Tables.documents(s, d)
-      val name = IndexTables.ident("bm25pst1", d, witness(docs))
-      Retrieval.bm25TopKAll(
-        Retrieval.postingsIndex(docs, name),
-        Retrieval.corpusStats(docs, name),
+      val (postings, stats) = bm25Index(s, d)
+      Retrieval.bm25TopKAll(postings, stats,
         BM25_QUERIES.toDF("query_id", "query"), k = 10)
         .withColumn("rank", col("rank").cast("long"))
     }),
@@ -2317,11 +2302,8 @@ object SparkEntry {
     // expanded set rescored through the same standing-index path
     "q_rm3" -> ((s, d) => {
       import s.implicits._
-      val docs = Tables.documents(s, d)
-      val name = IndexTables.ident("bm25pst1", d, witness(docs))
-      Retrieval.rm3Expand(
-        Retrieval.postingsIndex(docs, name),
-        Retrieval.corpusStats(docs, name),
+      val (postings, stats) = bm25Index(s, d)
+      Retrieval.rm3Expand(postings, stats,
         BM25_QUERIES.toDF("query_id", "query"), k = 10, fbDocs = 5,
         fbTerms = 3)
         .withColumn("rank", col("rank").cast("long"))
@@ -2334,21 +2316,14 @@ object SparkEntry {
       Retrieval.phraseSearch(Tables.documents(s, d), PHRASE_Q)),
     // the serving twin: same phrase semantics from the standing
     // token-bucketed POSITIONAL index — no corpus text at query time
-    "q_phrase_idx" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val name = IndexTables.ident("pospst1", d, witness(docs))
-      Retrieval.phraseFromIndex(
-        Retrieval.positionalIndex(docs, name), PHRASE_IDX_Q)
-    }),
+    "q_phrase_idx" -> ((s, d) =>
+      Retrieval.phraseFromIndex(positionalIndex(s, d), PHRASE_IDX_Q)),
     // batch multi-phrase matching off the same standing index — the
     // C4-blocklist gate shape; phrase 3's first term misses the
     // vocabulary, so it must yield zero rows
     "q_phrase_batch" -> ((s, d) => {
       import s.implicits._
-      val docs = Tables.documents(s, d)
-      val name = IndexTables.ident("pospst1", d, witness(docs))
-      Retrieval.phraseSearchAll(
-        Retrieval.positionalIndex(docs, name),
+      Retrieval.phraseSearchAll(positionalIndex(s, d),
         PHRASE_BATCH.toDF("phrase_id", "phrase"))
     }),
     // lexical hard negatives: per query doc (ids 0-2), top-5 BM25-similar
@@ -2356,10 +2331,8 @@ object SparkEntry {
     // retriever-training negative miner over the same standing index
     "q_lex_negatives" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val name = IndexTables.ident("bm25pst1", d, witness(docs))
-      Retrieval.lexicalHardNegatives(
-        Retrieval.postingsIndex(docs, name),
-        Retrieval.corpusStats(docs, name),
+      val (postings, stats) = bm25Index(s, d)
+      Retrieval.lexicalHardNegatives(postings, stats,
         docs.where(col("doc_id") < 3).select("doc_id", "text"),
         TextAnalysis.fingerprints(docs), k = 5)
         .withColumn("rank", col("rank").cast("long"))
@@ -2369,10 +2342,8 @@ object SparkEntry {
     // recall@1 / recall@10 (MRR in exact lcm-scaled integer arithmetic)
     "q_retrieval_eval" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val name = IndexTables.ident("bm25pst1", d, witness(docs))
-      Retrieval.knownItemEval(
-        Retrieval.postingsIndex(docs, name),
-        Retrieval.corpusStats(docs, name),
+      val (postings, stats) = bm25Index(s, d)
+      Retrieval.knownItemEval(postings, stats,
         docs.where(col("doc_id") % 25 === 0), k = 10, queryTokens = 5)
     }),
     // nDCG@10 over the same standing index and known-item queries, with
@@ -2380,7 +2351,7 @@ object SparkEntry {
     // rel 2 and 1 where they exist — deterministic and fully replayable
     "q_ndcg" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val name = IndexTables.ident("bm25pst1", d, witness(docs))
+      val (postings, stats) = bm25Index(s, d)
       val qd = docs.where(col("doc_id") % 25 === 0)
       val qrels = qd.select(col("doc_id").as("query_id"))
         .select(col("query_id"), explode(array(
@@ -2391,9 +2362,7 @@ object SparkEntry {
         .select(col("query_id"), col("qr.doc_id").as("doc_id"),
           col("qr.rel").as("rel"))
         .join(docs.select(col("doc_id")), Seq("doc_id"), "left_semi")
-      Retrieval.ndcgAtK(Retrieval.postingsIndex(docs, name),
-        Retrieval.corpusStats(docs, name), qd, qrels,
-        k = 10, queryTokens = 5)
+      Retrieval.ndcgAtK(postings, stats, qd, qrels, k = 10, queryTokens = 5)
     }),
     // per-label class centroids: element-wise mean pooling of embeddings
     // in long (label, n, dim, m) format — the compare gate hashes scalar
@@ -2419,11 +2388,9 @@ object SparkEntry {
     "q_rrf" -> ((s, d) => {
       import s.implicits._
       val docs = Tables.documents(s, d)
-      val name = IndexTables.ident("bm25pst1", d, witness(docs))
+      val (postings, stats) = bm25Index(s, d)
       val qt = BM25_QUERIES.toDF("query_id", "query")
-      val lex = Retrieval.bm25TopKAll(
-        Retrieval.postingsIndex(docs, name),
-        Retrieval.corpusStats(docs, name), qt, k = 10)
+      val lex = Retrieval.bm25TopKAll(postings, stats, qt, k = 10)
       val dense = Retrieval.denseTopKAll(docs, qt, k = 10)
       Retrieval.rrfFuse(Seq(lex, dense), topK = 10)
     }),
@@ -2468,7 +2435,7 @@ object SparkEntry {
     "q_ivfpq_topk" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val rest = emb.where(col("vec_id") =!= 0L)
-      val name = IndexTables.ident("ivfpqr", d, witness(rest))
+      val name = IndexTables.ident("ivfpqr", rest)
       val (cents, cbs, idx) =
         Similarity.ivfPqIndex(rest, kCells = 8, m = 8, kCodes = 16, name)
       val q = emb.where(col("vec_id") === 0L)
@@ -2501,11 +2468,10 @@ object SparkEntry {
     "q_run_overlap" -> ((s, d) => {
       import s.implicits._
       val docs = Tables.documents(s, d)
-      val name = IndexTables.ident("bm25pst1", d, witness(docs))
+      val (postings, stats) = bm25Index(s, d)
       val qt = BM25_QUERIES.toDF("query_id", "query")
       Retrieval.runOverlap(
-        Retrieval.bm25TopKAll(Retrieval.postingsIndex(docs, name),
-          Retrieval.corpusStats(docs, name), qt, k = 10),
+        Retrieval.bm25TopKAll(postings, stats, qt, k = 10),
         Retrieval.denseTopKAll(docs, qt, k = 10))
     }),
     // rank-biased overlap between the same two runs — TOP-WEIGHTED
@@ -2513,11 +2479,10 @@ object SparkEntry {
     "q_rbo" -> ((s, d) => {
       import s.implicits._
       val docs = Tables.documents(s, d)
-      val name = IndexTables.ident("bm25pst1", d, witness(docs))
+      val (postings, stats) = bm25Index(s, d)
       val qt = BM25_QUERIES.toDF("query_id", "query")
       Retrieval.rboOverlap(
-        Retrieval.bm25TopKAll(Retrieval.postingsIndex(docs, name),
-          Retrieval.corpusStats(docs, name), qt, k = 10),
+        Retrieval.bm25TopKAll(postings, stats, qt, k = 10),
         Retrieval.denseTopKAll(docs, qt, k = 10))
     }),
     // Flesch reading ease per document — exact integer counts in the
@@ -2544,7 +2509,7 @@ object SparkEntry {
     "q_covariance_incr" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val base = emb.where(col("vec_id") % 10 < 8)
-      val name = IndexTables.ident("moments64", d, witness(emb))
+      val name = IndexTables.ident("moments64", emb)
       Similarity.covarianceFromSums(
         Similarity.covarianceMerge(
           Similarity.momentsTable(s, base, 64, name),

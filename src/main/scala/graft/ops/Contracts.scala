@@ -87,15 +87,15 @@ object Contracts {
     * inline in the one pass: HLL++ `approx_count_distinct` (±2 %) and
     * `approx_percentile` sketches — estimates, one scan, fixed memory.
     *
-    * NOTE: `exact = true` executes EAGERLY — the per-column dictionary
-    * chains run (concurrently) inside this call and their results ride
+    * NOTE: `exact = true` executes EAGERLY — the dictionary chain runs on
+    * the calling thread inside this call (so its jobs carry the caller's
+    * job group and local properties; only the concurrent raw-value
+    * n_distinct of [[exactProfileStats]] does not) and its results ride
     * the returned frame as literals; the frame is NOT a lazy plan over
-    * `df`. `exactTimeoutSec` bounds that eager wait (a hung per-column
-    * job then throws `TimeoutException` instead of blocking the caller
-    * forever); 0 = unbounded, the historical behavior.
+    * `df`.
     */
   def tableProfile(df: DataFrame, cols: Seq[String],
-      exact: Boolean = true, exactTimeoutSec: Long = 0L): DataFrame = {
+      exact: Boolean = true): DataFrame = {
     require(cols.nonEmpty, "Contracts.tableProfile: need at least one column")
     val aggs = cols.flatMap { c =>
       val d = col(c).cast("double")
@@ -118,32 +118,7 @@ object Contracts {
     // chains — same shuffle bytes, one scan instead of k, ~6 jobs
     // instead of ~8k (guide §2.4/§1.2: remove passes before tuning them)
     val one = if (!exact) wide else {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.{Duration, DurationLong}
-      val deadline =
-        if (exactTimeoutSec > 0L) exactTimeoutSec.seconds else Duration.Inf
-      // the batched chain runs under one job group so a timeout can
-      // CANCEL the still-running Spark jobs — an Await that walks away
-      // while the chain keeps burning the cluster is not a bound
-      val sc = df.sparkSession.sparkContext
-      val groupId = s"graft-tableProfile-${System.identityHashCode(df)}-" +
-        Thread.currentThread().getId
-      val stats =
-        try Await.result(
-          Future {
-            try {
-              sc.setJobGroup(groupId, "tableProfile exact stats",
-                interruptOnCancel = true)
-              exactProfileStats(df, cols, Seq(0.5, 0.95))
-            } finally sc.clearJobGroup()
-          },
-          deadline)
-        catch {
-          case e: java.util.concurrent.TimeoutException =>
-            sc.cancelJobGroup(groupId)
-            throw e
-        }
+      val stats = exactProfileStats(df, cols, Seq(0.5, 0.95))
       cols.foldLeft(wide) { (acc, c) =>
         val (nd, pcts) = stats(c)
         def p(o: Option[Double]) =

@@ -450,7 +450,7 @@ object Curation {
     * (`ex`), near dedup (`nd`), lexical decontam (`dc`) — plus
     * `avg_surprisal` fitted on the `dc` survivors (NULL for non-survivors
     * and zero-token docs). Persist it as a STANDING artifact per
-    * (snapshot, witness, config-version) and pass it to the
+    * (source files, config-version) and pass it to the
     * `prefix` parameter of [[cleanCorpusV5Stats]]/[[cleanCorpusV6Stats]]:
     * five recipe variants then read flag scans of one table instead of
     * each re-running the gate→fingerprint→SNM→gram chain — at 100 TB the

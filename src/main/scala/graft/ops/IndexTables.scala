@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Build-once / probe-many index tables.
@@ -17,15 +18,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `_SUCCESS`) is re-registered in a fresh catalog via CREATE TABLE over
   * its location instead of being rebuilt — schema comes from the parquet
   * footers, bucketing from the caller (the bucket count is baked into the
-  * table name so a layout/spec mismatch cannot happen). Callers encode
-  * every build parameter that changes the data (planes, seeds, hash counts,
-  * source dir) into `name`; index tables are immutable once written.
+  * table name so a layout/spec mismatch cannot happen). Index tables are
+  * immutable once written, so the name changes whenever the data would:
+  * `ident(prefix, source)` keys it on the caller's prefix (the derivation
+  * and its build parameters) plus a digest of the source's files (path,
+  * length, modification time) from the listing its file scans already
+  * hold — no job, no data read; every leaf must be a file scan. An
+  * in-place edit of a source file therefore builds a fresh index.
   *
-  * Concurrent writers: builds across JVMs are fenced by an atomically
-  * created `<path>._building` marker (HDFS/local). Object stores without
-  * atomic create-if-absent don't get that fence — there, one writer at a
-  * time owns GRAFT_INDEX_DIR (readers are always safe: they only see
-  * `_SUCCESS`-completed tables).
+  * Concurrent writers: builds across JVMs are fenced by a `<path>._building`
+  * marker created if absent (HDFS/local) and holding its owner, `pid@host`.
+  * A marker owned by a dead process on THIS host (a JVM killed mid-build)
+  * is reclaimed by an atomic rename aside; a live, other-host or ownerless
+  * marker is refused. Object stores without atomic create-if-absent don't
+  * get that fence — there, one writer at a time owns GRAFT_INDEX_DIR
+  * (readers are always safe: they only see `_SUCCESS`-completed tables).
   */
 object IndexTables {
 
@@ -60,13 +67,27 @@ object IndexTables {
       .replaceAll("[^a-z0-9_]", "_").take(48) + "_" + digest
   }
 
+  /** The name of index `prefix` over `source`'s files (see object doc):
+    * callers sharing a prefix must pass the same derivation of the source.
+    */
+  def ident(prefix: String, source: DataFrame): String = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val leaves = source.queryExecution.analyzed.collectLeaves()
+    val scans = leaves.collect { case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r }
+    require(scans.nonEmpty && scans.size == leaves.size, s"IndexTables.ident($prefix): " +
+      s"every leaf must be a file scan, got ${leaves.map(_.nodeName).mkString(", ")}")
+    val files = scans.flatMap(_.location.listFiles(Nil, Nil)).flatMap(_.files)
+      .map(f => s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}").distinct.sorted
+    ident(prefix, java.security.MessageDigest.getInstance("SHA-256")
+      .digest(files.mkString("\n").getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString)
+  }
+
   /** Hadoop FileSystem for `baseDir` — NOT java.io.File, so the stated
     * deployment (an index dir on HDFS/S3) gets the same cross-process
     * reuse and cleanup semantics as a local run.
     */
-  private def fs(spark: SparkSession): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(baseDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+  private def fs(spark: SparkSession): FileSystem =
+    new Path(baseDir).getFileSystem(spark.sessionState.newHadoopConf())
 
   /** If a prior [[compact]] died between deleting the main path and
     * renaming the compacted tmp copy into place, the tmp dir holds the ONLY
@@ -76,7 +97,6 @@ object IndexTables {
     * over the lost appends. Returns true if a swap was completed.
     */
   private def finishInterruptedCompact(spark: SparkSession, name: String): Boolean = {
-    import org.apache.hadoop.fs.Path
     val f = fs(spark)
     val mainPath = new Path(s"$baseDir/$name")
     val tmpPath = new Path(s"$baseDir/${name}_compacting")
@@ -102,11 +122,45 @@ object IndexTables {
     */
   def exists(spark: SparkSession, name: String): Boolean = synchronized {
     spark.catalog.tableExists(name) ||
-      fs(spark).exists(
-        new org.apache.hadoop.fs.Path(s"$baseDir/$name/_SUCCESS")) ||
-      fs(spark).exists(
-        new org.apache.hadoop.fs.Path(s"$baseDir/${name}_compacting/_SUCCESS"))
+      fs(spark).exists(new Path(s"$baseDir/$name/_SUCCESS")) ||
+      fs(spark).exists(new Path(s"$baseDir/${name}_compacting/_SUCCESS"))
   }
+
+  /** This host, and this JVM as a build-marker owner: `pid@host`. */
+  private[graft] lazy val markerHost =
+    scala.util.Try(java.net.InetAddress.getLocalHost.getHostName).getOrElse("unknown")
+  private lazy val owner = s"${ProcessHandle.current().pid()}@$markerHost"
+
+  /** Create `marker` recording [[owner]]; false if it already exists. */
+  private def claim(f: FileSystem, marker: Path): Boolean =
+    try {
+      val out = f.create(marker, false)
+      try out.write(owner.getBytes("UTF-8")) finally out.close()
+      true
+    } catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
+
+  private def ownerOf(f: FileSystem, marker: Path): Option[String] =
+    scala.util.Try {
+      val in = f.open(marker)
+      try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
+    }.toOption.filter(_.nonEmpty)
+
+  /** Take over `marker` if its owner is a dead process on this host. The
+    * rename aside is atomic, so of two reclaimers only one moves a given
+    * marker; if what moved is not the stale marker judged (a racing
+    * reclaimer's live one), it is put back and the build refused.
+    */
+  private def reclaim(f: FileSystem, marker: Path): Boolean =
+    ownerOf(f, marker).filter { o =>
+      val (pid, host) = o.span(_ != '@')
+      host == s"@$markerHost" &&
+        pid.toLongOption.exists(!ProcessHandle.of(_).filter(_.isAlive).isPresent)
+    }.exists { stale =>
+      val aside = new Path(s"$marker.stale-$owner-${System.nanoTime()}")
+      f.rename(marker, aside) && (
+        if (ownerOf(f, aside).contains(stale)) f.delete(aside, false) && claim(f, marker)
+        else { f.rename(aside, marker); false })
+    }
 
   private def registerOrBuild(spark: SparkSession, name: String,
       bucketSpec: String, build: => Unit,
@@ -115,7 +169,7 @@ object IndexTables {
       val path = s"$baseDir/$name"
       val f = fs(spark)
       finishInterruptedCompact(spark, name)
-      if (f.exists(new org.apache.hadoop.fs.Path(s"$path/_SUCCESS"))) {
+      if (f.exists(new Path(s"$path/_SUCCESS"))) {
         // completed index from an earlier JVM: register, don't rebuild.
         // Schema inference here reads one parquet footer, not the data.
         val schema = spark.read.parquet(path).schema.toDDL
@@ -125,17 +179,13 @@ object IndexTables {
         // in the metastore until the directories are discovered
         if (repairAfterRegister) { spark.sql(s"MSCK REPAIR TABLE $name"); () }
       } else {
-        // cross-PROCESS build guard (the `synchronized` above only covers
-        // this JVM): an atomically-created sibling marker file refuses a
-        // concurrent overwrite-build of the same path from another driver.
-        // createNewFile is atomic on HDFS and local filesystems; on object
-        // stores without atomic create the index dir must simply not be
-        // shared by concurrent writers (see object Scaladoc).
-        val marker = new org.apache.hadoop.fs.Path(s"$path._building")
-        require(f.createNewFile(marker),
+        // cross-PROCESS build guard (`synchronized` only covers this JVM;
+        // see object Scaladoc)
+        val marker = new Path(s"$path._building")
+        require(claim(f, marker) || reclaim(f, marker),
           s"index build of $name appears to be in progress in another " +
             s"process (marker $marker exists); wait for it to finish, or " +
-            "delete the marker if that process died")
+            "delete the marker if that process died on another host")
         val t0 = System.nanoTime()
         try build
         finally {
@@ -189,7 +239,6 @@ object IndexTables {
     */
   def compact(spark: SparkSession, name: String, nBuckets: Int,
       bucketCols: Seq[String], sortCols: Seq[String]): Unit = synchronized {
-    import org.apache.hadoop.fs.Path
     val f = fs(spark)
     val tmpName = s"${name}_compacting"
     val mainPath = new Path(s"$baseDir/$name")
@@ -247,16 +296,13 @@ object IndexTables {
   def drop(spark: SparkSession, name: String): Unit = synchronized {
     spark.sql(s"DROP TABLE IF EXISTS $name")
     val f = fs(spark)
-    val dir = new org.apache.hadoop.fs.Path(s"$baseDir/$name")
+    val dir = new Path(s"$baseDir/$name")
     if (f.exists(dir)) { f.delete(dir, true); () }
-    // a build that died mid-flight leaves its fence behind (the marker is a
-    // SIBLING of the table dir) — drop's contract is "the next call
-    // rebuilds", so clear it too or that rebuild is refused forever.
-    // Corollary: drop is an administrative operation that must NOT race a
-    // live build — it force-clears a live build's fence just the same (a
-    // marker file cannot distinguish crashed from alive; callers that need
-    // that distinction should wait for the builder or check marker mtime).
-    val marker = new org.apache.hadoop.fs.Path(s"$baseDir/$name._building")
+    // "the next call rebuilds" also clears the build marker (a SIBLING of
+    // the table dir), whatever its owner: needed for a build killed on
+    // another host (this host's dead builds are reclaimed). So drop must
+    // NOT race a live build — it force-clears that fence just the same.
+    val marker = new Path(s"$baseDir/$name._building")
     if (f.exists(marker)) { f.delete(marker, false); () }
   }
 

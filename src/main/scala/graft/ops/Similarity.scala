@@ -2069,8 +2069,9 @@ object Similarity {
     * CountMin / SpaceSaving artifacts share), so a standing table plus a
     * day's increment re-derives the full-corpus covariance WITHOUT
     * rescanning the base corpus: see [[covarianceMerge]] /
-    * [[covarianceFromSums]]. Encode data-changing parameters (source,
-    * dim, witness) into `name` as usual.
+    * [[covarianceFromSums]]. Key `name` on the source with
+    * [[IndexTables.ident]] and put other data-changing parameters (dim)
+    * in its prefix, as usual.
     */
   def momentsTable(spark: org.apache.spark.sql.SparkSession,
       emb: DataFrame, dim: Int, name: String): DataFrame =

@@ -2725,8 +2725,9 @@ object TextAnalysis {
     * the text-side twin of the embedding stack's snapshot path
     * ([[Dedup.dedupAgainstSnapshot]] / [[Similarity.ivfAppend]]), which
     * was the one incremental form the text pipeline lacked (round-8
-    * verdict #6). Encode every data-changing parameter (source dir, dim,
-    * corpus witness) into `name`; grow the table with
+    * verdict #6). Key `name` on the source with [[IndexTables.ident]]
+    * and put every other data-changing parameter (dim) in its prefix;
+    * grow the table with
     * [[IndexTables.append]] under append-only id discipline so standing
     * verdicts stay batch-accurate (see
     * [[Similarity.semanticDedupFlagsApply]]).

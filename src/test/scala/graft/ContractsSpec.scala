@@ -1,6 +1,8 @@
 package graft
 
 import graft.ops.Contracts
+import org.apache.spark.ListenerBusFlush
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** Data-contract violations + k-anonymity publish gate. */
@@ -57,6 +59,34 @@ class ContractsSpec extends SparkSpec {
     val approx = approxDf
       .collect().map(r => r.getString(0) -> r.getLong(3)).toMap
     assert(approx("a") >= 2L && approx("a") <= 4L)
+  }
+
+  test("tableProfile: the exact-stats jobs carry the caller's job group") {
+    // int and double columns: n_distinct reads off the dictionary, so every
+    // exact-stats job is the caller's own
+    val df = Seq((1, 1.0), (2, 2.0), (3, 2.0), (4, 8.0)).toDF("a", "b")
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        groups.add(String.valueOf(j.properties.getProperty("spark.jobGroup.id")))
+        ()
+      }
+    }
+    ListenerBusFlush(sc)
+    sc.addSparkListener(l)
+    sc.setJobGroup("caller", "tableProfile job-group check")
+    try {
+      Contracts.tableProfile(df, Seq("a", "b"), exact = true)
+      ListenerBusFlush(sc)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+    import scala.jdk.CollectionConverters._
+    val seen = groups.asScala.toSeq
+    assert(seen.nonEmpty, "the exact path runs its jobs eagerly")
+    assert(seen.forall(_ == "caller"), seen)
   }
 
   test("exactColumnStats ≡ built-in exact percentile + countDistinct") {

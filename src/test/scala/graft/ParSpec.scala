@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.ListenerBusFlush
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -16,24 +14,6 @@ import graft.ops.Par
   * only a starved file scan gains an exchange.
   */
 class ParSpec extends SparkSpec {
-
-  /** Result of `f` and the number of Spark jobs that started while it ran. */
-  private def jobsDuring[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val started = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        started.incrementAndGet(); ()
-      }
-    }
-    ListenerBusFlush(sc)
-    sc.addSparkListener(l)
-    try {
-      val r = f
-      ListenerBusFlush(sc)
-      (r, started.get)
-    } finally sc.removeSparkListener(l)
-  }
 
   private def exchanges(df: DataFrame): Seq[ShuffleExchangeLike] =
     df.queryExecution.sparkPlan.collect { case e: ShuffleExchangeLike => e }

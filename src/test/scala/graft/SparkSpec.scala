@@ -1,11 +1,31 @@
 package graft
 
+import org.apache.spark.ListenerBusFlush
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared SparkSession for all suites (one per forked test JVM). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Result of `f` and the number of Spark jobs that started while it ran. */
+  protected def jobsDuring[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        started.incrementAndGet(); ()
+      }
+    }
+    ListenerBusFlush(sc)
+    sc.addSparkListener(l)
+    try {
+      val r = f
+      ListenerBusFlush(sc)
+      (r, started.get)
+    } finally sc.removeSparkListener(l)
+  }
 }
 
 object SparkSpec {
