@@ -145,9 +145,7 @@ object Bench {
     // the same median-of-passes protocol as the gate set (at sf0.1 they
     // were single-pass rows, where a methodology change shadows any code
     // delta). Additive only: every previously multi-pass query keeps its
-    // protocol, and the promoted rows' OLD protocol reading
-    // (min(warmup, pass-1)) is still emitted as promoted_single_pass in
-    // BENCH_LOCAL.json for one round of side-by-side comparability.
+    // protocol.
     val promoted = Set("q_ter_shift", "q_chrf", "q_covariance",
       "q_winnow_multik", "q_pq_topk")
     val multiPass: String => Boolean =
@@ -210,14 +208,6 @@ object Bench {
                else warmSample.get(name).fold(xs.head)(w => math.min(w, xs.head)))
     }.toMap
 
-    // the promoted rows' old-protocol reading (min(warmup, pass-1);
-    // pass-1 is the LAST element of the prepended sample list)
-    val promotedOld: Map[String, Double] = promoted.toSeq
-      .filter(n => samples(n).nonEmpty).map { n =>
-        val p1 = samples(n).last
-        n -> warmSample.get(n).fold(p1)(w => math.min(w, p1))
-      }.toMap
-
     val total = results.values.filter(_ >= 0).sum
     val shared = results.collect {
       case (k, v) if v >= 0 && baseline.get(k).exists(_ >= 0) => (v, baseline(k))
@@ -261,7 +251,6 @@ object Bench {
       s""""calibration_par_runs":${calibPar.map(f3).mkString("[", ",", "]")},""" +
       s""""t1_start":${qsJson(t1Start.toMap, f3)},""" +
       s""""warmup":${qsJson(warmSample.toMap, f3)},""" +
-      s""""promoted_single_pass":${qsJson(promotedOld, f3)},""" +
       s""""index_build_sec":${f3(graft.ops.IndexTables.buildSeconds)},""" +
       s""""index_builds":${graft.ops.IndexTables.buildsRun},""" +
       s""""sf":"$sfDir"}"""

@@ -89,8 +89,7 @@ object Contracts {
     *
     * NOTE: `exact = true` executes EAGERLY — the dictionary chain runs on
     * the calling thread inside this call (so its jobs carry the caller's
-    * job group and local properties; only the concurrent raw-value
-    * n_distinct of [[exactProfileStats]] does not) and its results ride
+    * job group and local properties) and its results ride
     * the returned frame as literals; the frame is NOT a lazy plan over
     * `df`.
     */
@@ -174,7 +173,9 @@ object Contracts {
     exactProfileStats(df, Seq(c), ps)(c)
 
   /** The batched form: every column's (n_distinct, exact percentiles) off
-    * TWO concurrent single-scan chains instead of k per-column chains.
+    * at most TWO single-scan chains instead of k per-column chains, both
+    * run on the calling thread (so every job carries the caller's job
+    * group and local properties).
     *
     * Percentiles: `explode` stacks the profiled columns into
     * (column-index, value-as-double) rows — `try_cast`, so malformed
@@ -189,16 +190,13 @@ object Contracts {
     * dictionary keys and n_distinct reads off the same dictionary for
     * free. Otherwise (strings, longs, wide decimals) one separate
     * `count(DISTINCT col)`-per-column aggregate over RAW values runs
-    * concurrently with the dictionary chain; its Expand multiplies rows
+    * after the dictionary chain; its Expand multiplies rows
     * only into map-side partial aggregates — it never rides the returned
     * frame's plan and never joins a percentile buffer (the round-9
     * q_profile scale killers).
     */
   private[graft] def exactProfileStats(df: DataFrame, cols: Seq[String],
       ps: Seq[Double]): Map[String, (Long, Seq[Option[Double]])] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
     import org.apache.spark.sql.types._
     def injective(dt: DataType): Boolean = dt match {
       case ByteType | ShortType | IntegerType | FloatType | DoubleType |
@@ -209,11 +207,6 @@ object Contracts {
     val schemaByName = df.schema.map(f => f.name -> f.dataType).toMap
     val allInjective = cols.forall(c =>
       schemaByName.get(c).exists(injective))
-    val ndFut = if (allInjective) None else Some(Future {
-      val row = df.agg(countDistinct(col(cols.head)),
-        cols.tail.map(c => countDistinct(col(c))): _*).head()
-      cols.indices.map(i => if (row.isNullAt(i)) 0L else row.getLong(i))
-    })
     val entries = cols.zipWithIndex.map { case (c, i) =>
       struct(lit(i).as("_i"),
         expr(s"try_cast(`$c` AS DOUBLE)").as("_d"))
@@ -239,11 +232,13 @@ object Contracts {
       .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
     val ns = cols.indices.map(i => nRows.get(i).map(_._1).getOrElse(0L))
     val dictRows = nRows.values.map(_._2).sum
-    val nds = ndFut match {
-      case Some(f) => Await.result(f, Duration.Inf)
-      case None    => cols.indices.map(i =>
-        nRows.get(i).map(_._2).getOrElse(0L))
-    }
+    val nds =
+      if (allInjective) cols.indices.map(i => nRows.get(i).map(_._2).getOrElse(0L))
+      else {
+        val row = df.agg(countDistinct(col(cols.head)),
+          cols.tail.map(c => countDistinct(col(c))): _*).head()
+        cols.indices.map(i => if (row.isNullAt(i)) 0L else row.getLong(i))
+      }
     // per-column 0-indexed order statistics wanted from the shared
     // cumulative frame (none for all-null/uncastable columns)
     val ranksOf = cols.indices.map { i =>

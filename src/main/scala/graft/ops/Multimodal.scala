@@ -115,43 +115,10 @@ object Multimodal {
       lit(null).cast("int").as("sample_rate"),
       lit("stub").as("codec"))
 
-  /** Frame sampling: cut the blob into fixed-size frames and keep every
-    * `stride`-th — the binary-plumbing form of video frame-sampling.
-    * Pure `substring` arithmetic; stays narrow.
-    */
-  def frameSample(blob: Column, frameBytes: Int, stride: Int): Column =
-    when(length(blob) === 0, array().cast("array<binary>")).otherwise(
-      filter(
-        transform(
-          sequence(lit(0), ((length(blob) - lit(1)) / lit(frameBytes)).cast("int")),
-          i => when(pmod(i, lit(stride)) === 0,
-            substring(blob, (i * frameBytes + 1).cast("int"), lit(frameBytes)))),
-        f => f.isNotNull))
-
   /** Feature extraction (REAL, not stubbed): 16-bin byte histogram over the
     * blob — the shape of any per-media feature vector computation.
     */
   def byteHistogram(blob: Column): Column = ArrayKernels.byte_histogram(blob, 16)
-
-  /** REAL audio feature extraction for canonical PCM16 WAV blobs: RMS
-    * energy per `frameSamples`-sample frame (the VAD / silence-trim /
-    * loudness-normalization primitive), as one codegen'd byte kernel —
-    * no decode library, no sample array materialized. NULL for
-    * compressed codecs, like [[decodeHeaders]].
-    */
-  def audioFrameEnergy(blob: Column, frameSamples: Int = 400): Column =
-    ArrayKernels.wav_frame_rms(blob, frameSamples)
-
-  /** REAL image feature extraction for raw P6 PPM blobs: ViT-style
-    * `patch`×`patch` grid with per-patch mean RGB, straight off the pixel
-    * bytes in one codegen'd kernel call. The patch grid (p_row, p_col,
-    * mean_r/g/b structs) is exactly the plumbing a vision-encoder prep
-    * stage needs; compressed codecs return NULL and fall to the stub
-    * tier, same as every decode path here. Truncated payloads are NULL,
-    * never silently wrong means.
-    */
-  def imagePatchMeans(blob: Column, patch: Int = 16): Column =
-    ArrayKernels.ppm_patch_means(blob, patch)
 
   /** Interleaved image-text sample assembly (the MMC4 / interleaved-
     * pretraining shape): given an (idCol, media_id) assignment table, each

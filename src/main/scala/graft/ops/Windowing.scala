@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   * `window()` / `session_window()` expressions — the `TimeWindow` rewrite
   * turns these into plain projections + hash aggregation, so a windowed
   * count at 100 TB is one shuffle on (window, key) with map-side partials.
-  * The streaming twins (withWatermark + the same expressions) live in
-  * graft.streaming; semantics are identical by construction.
+  * The streaming twins in [[graft.streaming.StreamingOps]] call these same
+  * operators on a watermarked stream, so batch and streaming share one
+  * definition.
   */
 object Windowing {
 

@@ -3,15 +3,18 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.{Core, Windowing}
 import graft.streaming.LocalCheckpointFs.checkpointed
 
 /** Streaming twins of the batch windowing/aggregation operators
-  * (SURVEY.md §2.5-2.6): identical `window()`/`session_window()` Catalyst
-  * expressions over a streaming Dataset, with `withWatermark` supplying the
-  * reference's bounded-out-of-orderness watermark strategy
-  * (M1, reference Windows.scala:71-80 — max-seen − delay, windows finalize
-  * when the watermark passes their end; mechanics narrated at
-  * reference TimeBasedTransformations.scala:213-233).
+  * (SURVEY.md §2.5-2.6). Each windowed or keyed twin IS its batch operator
+  * ([[graft.ops.Windowing]], [[graft.ops.Core]]) applied to the stream:
+  * the windowed ones after `withWatermark`, which supplies the reference's
+  * bounded-out-of-orderness watermark strategy (M1, reference
+  * Windows.scala:71-80 — max-seen − delay, windows finalize when the
+  * watermark passes their end; mechanics narrated at
+  * reference TimeBasedTransformations.scala:213-233). Only the dedup
+  * operators below have stream-only bodies.
   *
   * Running these in append mode WITHOUT a watermark is rejected by Spark's
   * analyzer — the engine-enforced form of the reference's own negative
@@ -28,11 +31,8 @@ object StreamingOps {
     */
   def tumblingCount(stream: DataFrame, tsCol: String, delay: String, size: String,
       keys: String*): DataFrame = checkpointed(
-    stream.withWatermark(tsCol, delay)
-      .groupBy((window(col(tsCol), size) +: keys.map(col)): _*)
-      .count()
-      .select((Seq(col("window.start").as("w_start"), col("window.end").as("w_end")) ++
-        keys.map(col) :+ col("count").as("cnt")): _*))
+    Windowing.tumblingCount(stream.withWatermark(tsCol, delay), tsCol, size,
+      keys.map(col): _*))
 
   /** Streaming exact dedup — the streaming twin of the batch cleaning
     * pipeline's fingerprint dedup ([[graft.ops.Curation.cleanCorpus]]):
@@ -143,20 +143,12 @@ object StreamingOps {
   /** M1+W2: watermarked sliding window count. */
   def slidingCount(stream: DataFrame, tsCol: String, delay: String, size: String,
       slide: String): DataFrame = checkpointed(
-    stream.withWatermark(tsCol, delay)
-      .groupBy(window(col(tsCol), size, slide))
-      .count()
-      .select(col("window.start").as("w_start"), col("window.end").as("w_end"),
-        col("count").as("cnt")))
+    Windowing.slidingCount(stream.withWatermark(tsCol, delay), tsCol, size, slide))
 
   /** M1+W3: watermarked session window (gap-merged, per key). */
   def sessionCount(stream: DataFrame, tsCol: String, delay: String, gap: String,
       key: String): DataFrame = checkpointed(
-    stream.withWatermark(tsCol, delay)
-      .groupBy(session_window(col(tsCol), gap), col(key))
-      .count()
-      .select(col(key), col("session_window.start").as("sess_start"),
-        col("session_window.end").as("sess_end"), col("count").as("cnt")))
+    Windowing.sessionAgg(stream.withWatermark(tsCol, delay), tsCol, gap, key))
 
   /** W5: TRUE processing-time tumbling window
     * (`TumblingProcessingTimeWindows`,
@@ -171,12 +163,10 @@ object StreamingOps {
     */
   def processingTimeTumblingCount(stream: DataFrame, size: String,
       keys: String*): DataFrame = checkpointed(
-    stream.withColumn("proc_time", current_timestamp())
-      .withWatermark("proc_time", "0 seconds")
-      .groupBy((window(col("proc_time"), size) +: keys.map(col)): _*)
-      .count()
-      .select((Seq(col("window.start").as("w_start"), col("window.end").as("w_end")) ++
-        keys.map(col) :+ col("count").as("cnt")): _*))
+    Windowing.tumblingCount(
+      stream.withColumn("proc_time", current_timestamp())
+        .withWatermark("proc_time", "0 seconds"),
+      "proc_time", size, keys.map(col): _*))
 
   /** A4 streaming: running word/key count in update mode — emits the
     * updated count per key on every arrival, the reference's
@@ -184,13 +174,12 @@ object StreamingOps {
     * SocketTextStreamWordCount.scala:62-63).
     */
   def runningCount(stream: DataFrame, key: String): DataFrame =
-    checkpointed(stream.groupBy(col(key)).count().withColumnRenamed("count", "cnt"))
+    checkpointed(Core.keyedCount(stream, key))
 
   /** The reference's flagship: streaming word count over a line stream
     * (reference SocketTextStreamWordCount.scala:59-63). Pair with
     * `Generators.socketLines` for the socket form.
     */
   def wordCount(lines: DataFrame, lineCol: String = "value"): DataFrame =
-    runningCount(
-      lines.select(explode(graft.ops.Core.tokens(col(lineCol))).as("word")), "word")
+    checkpointed(Core.wordCount(lines, lineCol))
 }

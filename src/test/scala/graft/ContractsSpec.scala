@@ -61,10 +61,8 @@ class ContractsSpec extends SparkSpec {
     assert(approx("a") >= 2L && approx("a") <= 4L)
   }
 
-  test("tableProfile: the exact-stats jobs carry the caller's job group") {
-    // int and double columns: n_distinct reads off the dictionary, so every
-    // exact-stats job is the caller's own
-    val df = Seq((1, 1.0), (2, 2.0), (3, 2.0), (4, 8.0)).toDF("a", "b")
+  /** Job group of every job `f` starts. */
+  private def jobGroupsDuring(f: => Unit): Seq[String] = {
     val sc = spark.sparkContext
     val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val l = new SparkListener {
@@ -77,16 +75,38 @@ class ContractsSpec extends SparkSpec {
     sc.addSparkListener(l)
     sc.setJobGroup("caller", "tableProfile job-group check")
     try {
-      Contracts.tableProfile(df, Seq("a", "b"), exact = true)
+      f
       ListenerBusFlush(sc)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(l)
     }
     import scala.jdk.CollectionConverters._
-    val seen = groups.asScala.toSeq
+    groups.asScala.toSeq
+  }
+
+  test("tableProfile: the exact-stats jobs carry the caller's job group") {
+    // int and double columns: n_distinct reads off the dictionary, so every
+    // exact-stats job is the caller's own
+    val df = Seq((1, 1.0), (2, 2.0), (3, 2.0), (4, 8.0)).toDF("a", "b")
+    val seen = jobGroupsDuring(Contracts.tableProfile(df, Seq("a", "b"), exact = true))
     assert(seen.nonEmpty, "the exact path runs its jobs eagerly")
     assert(seen.forall(_ == "caller"), seen)
+  }
+
+  test("tableProfile: string and bigint columns' raw n_distinct job carries " +
+      "the caller's job group") {
+    // neither type casts to double injectively, so n_distinct runs its own
+    // count(DISTINCT) aggregate over the raw values
+    val df = Seq(("1", 1L), ("2", 1L), ("1", 3L), ("10", 1L << 60))
+      .toDF("s", "l")
+    var prof: Map[String, Long] = Map.empty
+    val seen = jobGroupsDuring {
+      prof = Contracts.tableProfile(df, Seq("s", "l"), exact = true)
+        .collect().map(r => r.getString(0) -> r.getLong(3)).toMap
+    }
+    assert(prof == Map("s" -> 3L, "l" -> 3L), prof)
+    assert(seen.nonEmpty && seen.forall(_ == "caller"), seen)
   }
 
   test("exactColumnStats ≡ built-in exact percentile + countDistinct") {
