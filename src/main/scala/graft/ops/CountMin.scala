@@ -55,20 +55,6 @@ object CountMin {
     a.unionByName(b)
       .groupBy("d", "bucket").agg(sum("cnt").as("cnt"))
 
-  /** Streaming sketch maintenance: each micro-batch's cells merge into
-    * the standing cell table (sum — associative/commutative, so
-    * micro-batching ≡ one whole-corpus build, spec'd). `state`/`save`
-    * own the ≤ d·w-row artifact, the weightedSampleServe read-write
-    * pattern.
-    */
-  def serve(stream: DataFrame, keyCol: String, depth: Int = 4,
-      width: Int = 256)(state: () => DataFrame, save: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        save(merge(state(), sketch(batch, keyCol, depth, width)))
-    }
-
   /** Point frequency estimates for a bounded probe list: min over the d
     * rows of each probe's cell counts (absent cell = 0). The probe side
     * broadcasts; the sketch is d·w rows.

@@ -547,7 +547,8 @@ object Curation {
     * rejected rows can be audited or quarantined rather than silently
     * dropped; filter `keep = 1` for the corpus append. All five stages
     * are per-batch local: no state beyond the standing indexes, so the
-    * composition streams via [[ingestGateServe]] with full semantics.
+    * composition streams per micro-batch via
+    * [[graft.sources.Sinks.eachBatch]] with full semantics.
     */
   def ingestGate(docs: DataFrame, lineIndex: DataFrame,
       evalGrams: Seq[String], snapshotBanded: DataFrame,
@@ -634,22 +635,4 @@ object Curation {
       sum(col("dup_of_corpus")).as("n_dup"),
       round(sum(col("keep")).cast("double") /
         greatest(count(lit(1)), lit(1L)), 4).as("keep_rate"))
-
-  /** Streaming twin of [[ingestGate]]: one foreachBatch apply per
-    * micro-batch (the boilerplateScrubServe pattern — per-batch
-    * re-planning lets every probe ride its bucketed index scan). The
-    * standing indexes are read-only here; ingest grows them on its own
-    * cadence.
-    */
-  def ingestGateServe(docStream: DataFrame, lineIndex: DataFrame,
-      evalGrams: Seq[String], snapshotBanded: DataFrame,
-      minDocs: Int = 3, contamN: Int = 3, shingleK: Int = 3,
-      numHashes: Int = 32, bands: Int = 8, threshold: Double = 0.5)(
-      sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docStream.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        sink(ingestGate(batch, lineIndex, evalGrams, snapshotBanded,
-          minDocs, contamN, shingleK, numHashes, bands, threshold))
-    }
 }

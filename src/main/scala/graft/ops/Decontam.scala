@@ -279,21 +279,4 @@ object Decontam {
       Similarity.argmaxBlocked(
         TextAnalysis.hashEmbed(evalSet, dim, kernelFan = false)),
       minCos)
-
-  /** Streaming twin of [[semanticContamination]]: flag each micro-batch of
-    * a document stream against a FIXED eval set (each row's verdict
-    * depends only on the eval side, so per-batch apply ≡ the batch
-    * decision row-for-row — no cross-batch state at all, simpler than
-    * even the dedup serve twins). The eval assignment is computed once
-    * per batch from the (bounded) eval frame; pre-compute it with
-    * [[Similarity.argmaxBlocked]] + cache on the caller side if the
-    * stream is hot.
-    */
-  def semanticContaminationServe(docStream: DataFrame, evalSet: DataFrame,
-      minCos: Double = 0.9, dim: Int = 64)(sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docStream.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        sink(semanticContamination(batch, evalSet, minCos, dim))
-    }
 }

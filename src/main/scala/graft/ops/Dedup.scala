@@ -1024,26 +1024,6 @@ object Dedup {
     scrubByDupPositions(incDocs, dupPos, k, carry)
   }
 
-  /** Streaming twin of [[substringScrubApply]]: a document STREAM is
-    * rewritten against the standing gram-ownership index, one micro-batch
-    * per apply call — the [[graft.ops.TextAnalysis.semanticDedupTextServe]]
-    * foreachBatch pattern and the same reasoning (per-batch re-planning
-    * lets the h-probes reach the bucketed snapshot scan; the index side
-    * never moves). Each batch gets full incremental semantics — scrubbed
-    * against index ∪ own-batch lower occurrences — so a crawl replayed as
-    * a stream reproduces the per-batch apply rewrites exactly. The index
-    * is read-only here; ingest grows it on its own cadence (see
-    * [[substringIndex]] for the re-min discipline). Caller owns
-    * trigger/checkpoint; `sink` receives each batch's rewritten rows.
-    */
-  def substringScrubServe(docStream: DataFrame, index: DataFrame,
-      k: Int = 8, carry: Seq[String] = Nil)(sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docStream.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        sink(substringScrubApply(batch, index, k, carry))
-    }
-
   /** The ONE definition of the line algebra [[lineDedup]] and
     * [[lineStats]] share (split on \r?\n; null text → zero lines, since
     * split(null) is null and size() of it would read -1 instead of the
@@ -1196,22 +1176,6 @@ object Dedup {
       .agg(sort_array(collect_list(col("line_no"))).as("keep"))
     rebuildKeptLines(incDocs, keeps, carry)
   }
-
-  /** Streaming twin of [[boilerplateScrubApply]]: a document stream
-    * rewritten against the standing line-frequency index, one micro-batch
-    * per apply call (the [[substringScrubServe]] foreachBatch pattern —
-    * per-batch re-planning lets the h-probes ride the bucketed index
-    * scan). Each batch gets full incremental semantics: hot = index
-    * counts + own-batch distinct-doc counts. The index is read-only
-    * here; ingest grows it on its own cadence ([[lineFreqIndex]]).
-    */
-  def boilerplateScrubServe(docStream: DataFrame, index: DataFrame,
-      minDocs: Int = 3, carry: Seq[String] = Nil)(sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docStream.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        sink(boilerplateScrubApply(batch, index, minDocs, carry))
-    }
 
   /** One-row line-duplication report over the corpus — the health number
     * behind a [[lineDedup]] decision: total non-blank (trimmed) lines,

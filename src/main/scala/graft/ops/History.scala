@@ -99,6 +99,13 @@ object History {
     * silently splice a wrong version chain. The check is one batch-sized
     * join + count (the perplexityBuckets guard precedent); callers that
     * have already validated upstream can switch it off.
+    *
+    * Per micro-batch ([[graft.sources.Sinks.eachBatch]], `state()` reading
+    * the current history and `save` writing the fold back) the history at
+    * any point equals the full-history recompute over everything ingested
+    * so far, and a late or replayed change fails its batch. `state()` must
+    * return an [[scd2]]-schema frame; seed an empty stream with
+    * `scd2(emptyChanges, …)`.
     */
   def scd2Apply(history: DataFrame, changes: DataFrame, keyCol: String,
       tsCol: String, ordCol: String, valueCol: String,
@@ -162,27 +169,4 @@ object History {
         .join(affected, Seq(keyCol)))
       .unionByName(rebased)
   }
-
-  /** Streaming SCD2: each micro-batch of changes MERGEs into the
-    * standing history via [[scd2Apply]] (the funnelServe /
-    * weightedSampleServe read-write pattern — `state()` reads the
-    * current history table, `save` writes the folded one back). Because
-    * scd2Apply touches only affected keys' CURRENT rows, per-batch cost
-    * is batch-sized against the standing table, and the result at any
-    * point equals the full-history recompute over everything ingested so
-    * far (parity-spec'd) provided each batch is append-only per key —
-    * `validate` enforces exactly that, so a late/replayed change fails
-    * the batch rather than silently splicing a wrong version chain.
-    * `state()` must return an [[scd2]]-schema frame; seed an empty
-    * stream with `scd2(emptyChanges, …)`.
-    */
-  def scd2Serve(changeStream: DataFrame, keyCol: String, tsCol: String,
-      ordCol: String, valueCol: String, validate: Boolean = true)(
-      state: () => DataFrame, save: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    changeStream.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        save(scd2Apply(state(), batch, keyCol, tsCol, ordCol, valueCol,
-          validate))
-    }
 }

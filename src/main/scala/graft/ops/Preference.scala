@@ -79,19 +79,6 @@ object Preference {
     graph.unionByName(btGraph(newPairs, winnerCol, loserCol))
       .groupBy("w", "l").agg(sum("n").as("n"))
 
-  /** Streaming vote ingestion: each micro-batch [[btMerge]]s into the
-    * standing graph (the weightedSampleServe read-write pattern);
-    * ratings are recomputed from the graph on demand, not per batch.
-    */
-  def btServe(voteStream: DataFrame, winnerCol: String = "winner",
-      loserCol: String = "loser")(
-      state: () => DataFrame, save: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    voteStream.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        save(btMerge(state(), batch, winnerCol, loserCol))
-    }
-
   /** [[btRatings]] from a standing [[btGraph]] — the apply half. */
   def btRatingsFromGraph(graph: DataFrame, iterations: Int = 3)
       : DataFrame = {

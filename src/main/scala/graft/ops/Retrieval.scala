@@ -653,47 +653,6 @@ object Retrieval {
       .agg(count(lit(1)).as("n_matches"), min("start").as("first_pos"))
   }
 
-  /** Streaming BM25 serving: score a STREAM of queries against the
-    * standing index, each micro-batch in one bucket-pruned pass via
-    * [[bm25TopKAll]]. foreachBatch is the right vehicle — a stream-static
-    * join cannot bucket-prune the posting scan because the term filter is
-    * not a literal at plan time, whereas per-batch replanning pushes each
-    * batch's IN list down to the index scan; the index side never moves,
-    * exactly like the batch path. Returns the un-started writer so the
-    * caller owns trigger/checkpoint config; `sink` receives each batch's
-    * ranked results.
-    */
-  def bm25Serve(queryStream: DataFrame, index: DataFrame, stats: DataFrame,
-      k: Int, k1: Double = 1.2, b: Double = 0.75, idCol: String = "doc_id",
-      qidCol: String = "query_id", qCol: String = "query")(
-      sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    queryStream.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        sink(bm25TopKAll(index, stats, batch, k, k1, b, idCol, qidCol, qCol))
-    }
-
-  /** Streaming twin of the hybrid stack: each query micro-batch is
-    * scored through BOTH legs — [[bm25TopKAll]] off the standing
-    * postings index and [[denseTopKAll]] against the corpus — and fused
-    * with [[rrfFuse]], so a served batch gets exactly the batch-path
-    * semantics (parity-spec'd). foreachBatch for the [[bm25Serve]]
-    * reason: only per-batch replanning pushes the batch's IN literal
-    * down to the bucket-pruned posting scan. At scale substitute the
-    * IVF run ([[Similarity.ivfTopKAll]]) for the brute dense leg — the
-    * fusion is run-agnostic.
-    */
-  def hybridServe(queryStream: DataFrame, index: DataFrame,
-      stats: DataFrame, docs: DataFrame, k: Int, topK: Int,
-      kParam: Int = 60, dim: Int = 64)(sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    queryStream.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        sink(rrfFuse(Seq(
-          bm25TopKAll(index, stats, batch, k),
-          denseTopKAll(docs, batch, k, dim)), topK, kParam))
-    }
-
   /** Dense retrieval run over FEATURE-HASHED document vectors
     * ([[TextAnalysis.hashEmbed]]): every query in `queryTable` is hashed
     * with the SAME tokenizer+hash chain as the corpus and scored by

@@ -735,23 +735,6 @@ object Sampling {
         .unionByName(batch.select(col(strataCol), col(idCol), col(weightCol))),
       strataCol, idCol, weightCol, k, salt)
 
-  /** Streaming quota maintenance: each micro-batch folds into the
-    * standing sample via [[weightedSampleMerge]]. `state`/`save` are the
-    * caller's storage for the k·strata sample rows (a tiny table — the
-    * bm25Serve "standing artifact" pattern, but read-write). Exactness
-    * vs a batch recompute over the full history is the merge identity,
-    * spec'd across batch splits.
-    */
-  def weightedSampleServe(stream: DataFrame, strataCol: String,
-      idCol: String, weightCol: String, k: Int, salt: String = "")(
-      state: () => DataFrame, save: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        save(weightedSampleMerge(state(), batch, strataCol, idCol,
-          weightCol, k, salt))
-    }
-
   /** Importance resampling to MATCH a reference distribution — the
     * actionable fix for what [[graft.ops.TextAnalysis.distributionDrift]]
     * detects: draw exactly `k` documents from this corpus such that the

@@ -523,7 +523,8 @@ object Similarity {
     * nearest neighbor); false when query ids live in their OWN id space
     * (external serving) — there an id collision with a corpus vector is
     * coincidence, and excluding it would silently drop a true top-k
-    * member.
+    * member. A query stream served per micro-batch is that case: pass
+    * false unless the stream genuinely replays indexed vectors.
     */
   def ivfTopKAll(assigned: DataFrame, queries: DataFrame, k: Int,
       centroids: Array[Array[Double]], nprobe: Int = 4,
@@ -640,32 +641,6 @@ object Similarity {
       labelCol, same = false)
       .select(col("q_id"), col("nb_id").as("neg_id"),
         col("nb_label").as("neg_label"), col("cos"), col("rk"))
-
-  /** Streaming ANN serving: top-k neighbors for a STREAM of query
-    * vectors against the standing IVF index, each micro-batch probed in
-    * one [[ivfTopKAll]] plan — the vector analogue of
-    * [[graft.ops.Retrieval.bm25Serve]], and the same reasoning:
-    * foreachBatch re-plans per batch, so every batch's probe-cell
-    * filters reach the bucketed assignment scan while the index side
-    * never moves. `queryStream` needs (vec_id, embedding); the caller
-    * owns trigger/checkpoint config on the returned writer; `sink`
-    * receives each batch's (q_id, vec_id, cos, rk) rows.
-    *
-    * `excludeSelf` defaults to FALSE here, the opposite of
-    * [[ivfTopKAll]]: a serving client's query ids are its own id space,
-    * so an id that happens to collide with a corpus vec_id must not
-    * silently lose that corpus vector from its top-k. Set it true only
-    * when the stream genuinely replays indexed vectors.
-    */
-  def annServe(queryStream: DataFrame, assigned: DataFrame, k: Int,
-      centroids: Array[Array[Double]], nprobe: Int = 4,
-      excludeSelf: Boolean = false)(
-      sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    queryStream.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        sink(ivfTopKAll(assigned, batch, k, centroids, nprobe, excludeSelf))
-    }
 
   /** The ONE candidate stage behind [[hardNegatives]] and
     * [[contrastiveTriplets]]: every cell-probed candidate per anchor
@@ -1432,28 +1407,6 @@ object Similarity {
         coalesce(col("_hot"), lit(0)).as("hot"), col("e"))
   }
 
-  /** Streaming bounded dedup — the daily-ingest loop as a foreachBatch
-    * twin (the annServe / passAtKServe read-write pattern): each
-    * micro-batch of (vec_id, embedding) rows gets its BOUNDED verdicts
-    * against the standing index ([[semanticDedupFlagsBoundedApply]] →
-    * `sink`), then folds into the index ([[boundedIndexAppend]] →
-    * `save`) so later batches dedup against it. Append-only vec_ids
-    * across batches keep the keep-lowest verdicts stable (the
-    * dedupFlagsByBlock contract).
-    */
-  def semanticDedupBoundedServe(embStream: DataFrame,
-      minCos: Double = 0.95, maxBlock: Int = 1024, levels: Int = 2)(
-      state: () => DataFrame, save: DataFrame => Unit)(
-      sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    embStream.writeStream.outputMode("append").foreachBatch {
-      (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val snap = state()
-        sink(semanticDedupFlagsBoundedApply(snap, batch, minCos, maxBlock,
-          levels))
-        save(boundedIndexAppend(snap, batch, maxBlock, levels))
-    }
-
   /** True-SemDeDup blocking: the learned IVF cells (k-means regions) as
     * blocks instead of sign bits — semantically tighter neighborhoods at
     * equal block count, so higher recall on clustered corpora. `assigned`
@@ -2014,8 +1967,8 @@ object Similarity {
   }
 
   /** The one-row (mu, sigma) norm statistics over well-formed vectors —
-    * the standing artifact [[vectorQualityFrom]] /
-    * [[vectorQualityServe]] gate against.
+    * the standing artifact [[vectorQualityFrom]] gates against, in batch
+    * or per micro-batch via [[graft.sources.Sinks.eachBatch]].
     */
   def vectorQualityStats(emb: DataFrame, dim: Int): DataFrame = {
     val e = asDouble(col("embedding"))
@@ -2024,19 +1977,6 @@ object Similarity {
       .where(!col("_nan") && col("_nd") === dim && col("_nrm") > 0)
       .agg(avg("_nrm").as("_mu"), stddev_pop("_nrm").as("_sigma"))
   }
-
-  /** Streaming twin of the vector sanity gate: each micro-batch of
-    * vectors is flagged against the STANDING stats — per-row decisions,
-    * no corpus access, the [[graft.ops.TextAnalysis.distributionDriftServe]]
-    * pattern. Parity-spec'd against the batch gate.
-    */
-  def vectorQualityServe(stream: DataFrame, stats: DataFrame, dim: Int,
-      zThresh: Double = 3.0)(sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        sink(vectorQualityFrom(batch, stats, dim, zThresh))
-    }
 
   /** One-pass moment sums for the d×d covariance matrix: the flattened
     * per-row outer-product grid (d² slots), the raw vector (d slots for

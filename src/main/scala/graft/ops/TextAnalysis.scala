@@ -1308,7 +1308,7 @@ object TextAnalysis {
     * hundreds of millions of rows that must shuffle and join; the sketch
     * is d·w cells BY CONSTRUCTION (parameters, not data), so the
     * frequency model becomes a broadcastable artifact that
-    * [[CountMin.serve]] can maintain incrementally. CMS error is
+    * [[CountMin.merge]] can maintain incrementally. CMS error is
     * one-sided (never an underestimate), so sketch-scored surprisal only
     * ever UNDERSTATES rarity — a perplexity gate keyed on high surprisal
     * never flags extra documents, it can only miss ones whose rare words
@@ -1327,7 +1327,7 @@ object TextAnalysis {
   }
 
   /** Score documents against a STANDING count-min sketch + one-row token
-    * total (the [[CountMin.serve]] artifacts) — surprisal serving with no
+    * total (the artifacts [[CountMin.merge]] maintains) — surprisal serving with no
     * corpus-sized dictionary anywhere: estimates are computed per
     * DISTINCT word (Heaps-law sized) by joining the word's d cells
     * against the broadcast cell table (≤ d·w rows — the bounded-by-
@@ -1977,20 +1977,6 @@ object TextAnalysis {
     }
   }
 
-  /** Streaming pass@k ingestion: each micro-batch of samples
-    * [[passDictMerge]]s into the standing dictionary (the aucServe /
-    * btServe read-write pattern); the eval board recomputes from the
-    * dictionary on demand, not per batch.
-    */
-  def passAtKServe(sampleStream: DataFrame, problemCol: String,
-      okCol: String)(
-      state: () => DataFrame, save: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    sampleStream.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        save(passDictMerge(state(), batch, problemCol, okCol))
-    }
-
   /** Best-of-n selection eval — the reward-model scorecard beside
     * [[passAtK]]: per problem and per n, take the FIRST n samples in
     * `orderCol` order (the rollout's own draw order, so growing n
@@ -2100,19 +2086,6 @@ object TextAnalysis {
         col("vote_answer"), col("vote_n"),
         (col("vote_answer") === col("gold")).cast("int").as("correct"))
   }
-
-  /** Streaming majority-vote ingestion: each micro-batch
-    * [[voteDictMerge]]s into the standing dictionary — the
-    * [[passAtKServe]] twin for answer-voting eval boards.
-    */
-  def voteServe(sampleStream: DataFrame, problemCol: String,
-      answerCol: String, goldCol: String)(
-      state: () => DataFrame, save: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    sampleStream.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        save(voteDictMerge(state(), batch, problemCol, answerCol, goldCol))
-    }
 
   /** Calibration report for a [0,1]-probability scorer against a binary
     * label — the reliability-diagram table (per-bin mean prediction vs
@@ -2243,8 +2216,8 @@ object TextAnalysis {
     * ADDITIVE under appended rows — exactly the [[Preference.btGraph]]
     * mergeable-sufficient-statistic shape: an AUC/AP monitoring
     * pipeline maintains this dictionary-sized artifact
-    * ([[scoreDictMerge]] folds each batch by summing counts,
-    * [[aucServe]] wires that into foreachBatch) and recomputes exact
+    * ([[scoreDictMerge]] folds each batch by summing counts, per
+    * micro-batch via [[graft.sources.Sinks.eachBatch]]) and recomputes exact
     * metrics from it at dictionary cost ([[aucFromDict]]), never
     * rescanning score history. One map-side-combined aggregate; null
     * scores are excluded (the [[aucScore]] convention).
@@ -2276,20 +2249,6 @@ object TextAnalysis {
     */
   def aucFromDict(dict: DataFrame): DataFrame =
     aucFromCum(scoreDictCumFrom(dict.localCheckpoint()))
-
-  /** Streaming metric ingestion: each micro-batch of (score, label)
-    * rows [[scoreDictMerge]]s into the standing dictionary (the
-    * btServe read-write pattern); exact AUC/AP recompute from the
-    * dictionary on demand, not per batch.
-    */
-  def aucServe(scoredStream: DataFrame, scoreCol: String,
-      labelCol: String)(
-      state: () => DataFrame, save: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    scoredStream.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        save(scoreDictMerge(state(), batch, scoreCol, labelCol))
-    }
 
   /** EXACT average precision (the step-wise PR-AUC,
     * sklearn's average_precision_score definition) with proper tie
@@ -2752,28 +2711,6 @@ object TextAnalysis {
       Similarity.argmaxBlocked(
         hashEmbed(incDocs, dim, kernelFan = false)), minCos, maxBlock)
 
-  /** Streaming twin of [[semanticDedupTextApply]]: a STREAM of documents
-    * is flagged against the standing index, one micro-batch per
-    * [[semanticDedupTextApply]] call — the [[Retrieval.bm25Serve]] /
-    * [[Similarity.annServe]] foreachBatch pattern and the same reasoning
-    * (re-planning per batch lets each batch's block probes reach the
-    * bucketed snapshot scan while the index side never moves). Each
-    * micro-batch gets full incremental semantics — decided against index
-    * ∪ own-batch lower ids — so a crawl replayed as a stream produces the
-    * per-batch apply decisions exactly (IncrementalSemDedupSpec). Note
-    * the index is NOT grown between batches here (serving is read-only);
-    * an ingest pipeline appends accepted batches via
-    * [[IndexTables.append]] on its own cadence. The caller owns
-    * trigger/checkpoint config; `sink` receives each batch's flags.
-    */
-  def semanticDedupTextServe(docStream: DataFrame, index: DataFrame,
-      dim: Int = 64, minCos: Double = 0.9)(sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docStream.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        sink(semanticDedupTextApply(batch, index, dim, minCos))
-    }
-
   /** Per-source dataset card — [[corpusReport]]'s dashboard broken out by
     * provenance, the table a data team publishes alongside a corpus
     * release: per source, document and token counts, mean document
@@ -2988,10 +2925,10 @@ object TextAnalysis {
     * sufficient statistic of every count-based LM smoothing, ADDITIVE
     * under appended documents (the [[Preference.btGraph]] /
     * [[scoreDict]] mergeable-artifact shape; [[lmMerge]] folds a batch,
-    * [[lmServe]] wires foreachBatch). [[surprisalScoresBackoff]] fits
-    * its counts per run; a production perplexity filter maintains THIS
-    * table once per corpus snapshot and scores every later batch
-    * against it at batch cost.
+    * per micro-batch via [[graft.sources.Sinks.eachBatch]]).
+    * [[surprisalScoresBackoff]] fits its counts per run; a production
+    * perplexity filter maintains THIS table once per corpus snapshot and
+    * scores every later batch against it at batch cost.
     */
   def lmCounts(docs: DataFrame): DataFrame =
     bigramPairs(docs).groupBy("prev", "word").agg(count(lit(1)).as("cnt"))
@@ -3003,16 +2940,6 @@ object TextAnalysis {
   def lmMerge(model: DataFrame, newDocs: DataFrame): DataFrame =
     model.unionByName(lmCounts(newDocs))
       .groupBy("prev", "word").agg(sum("cnt").as("cnt"))
-
-  /** Streaming corpus ingestion for the LM counts (the btServe
-    * read-write pattern).
-    */
-  def lmServe(docStream: DataFrame)(
-      state: () => DataFrame, save: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docStream.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) => save(lmMerge(state(), batch))
-    }
 
   /** TRUE perplexity under a standing [[lmCounts]] bigram model with
     * add-k smoothing — the CCNet-style LM quality filter
@@ -3083,20 +3010,6 @@ object TextAnalysis {
         Seq("bucket"), "left")
       .select(col("bucket"), coalesce(col("cnt"), lit(0L)).as("cnt"))
   }
-
-  /** Streaming drift monitor: every micro-batch compared against the
-    * standing [[bucketCounts]] reference via [[distributionDriftFrom]] —
-    * stateless per batch (the semanticContaminationServe pattern: the
-    * verdict depends only on the reference side), so the sink receives
-    * one K-row PSI report per batch.
-    */
-  def distributionDriftServe(stream: DataFrame, refCounts: DataFrame,
-      valueCol: String, edges: Seq[Double])(sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        sink(distributionDriftFrom(refCounts, batch, valueCol, edges))
-    }
 
   /** [[distributionDrift]] against a stored [[bucketCounts]] reference
     * (built with the same `edges`).
@@ -3748,20 +3661,6 @@ object TextAnalysis {
       when(col("n") > 0,
         round(col("f1_q6_sum").cast("double") / 1e6 / col("n"), 4))
         .as("token_f1"))
-
-  /** Streaming [[qaEval]] ingestion — each micro-batch of (gold, pred)
-    * pairs [[qaDictMerge]]s into the standing one-row dictionary (the
-    * passAtKServe read-write pattern); the scorecard recomputes from
-    * the dictionary on demand, not per batch.
-    */
-  def qaEvalServe(pairStream: DataFrame, idCol: String, goldCol: String,
-      predCol: String)(
-      state: () => DataFrame, save: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    pairStream.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        save(qaDictMerge(state(), batch, idCol, goldCol, predCol))
-    }
 
   /** Per-pair ROUGE-L — the recall-oriented reference-overlap eval
     * beside [[bleuScore]]'s precision view (summarization/generation

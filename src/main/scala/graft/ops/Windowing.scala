@@ -211,21 +211,6 @@ object Windowing {
     }
   }
 
-  /** Streaming funnel: each micro-batch folds into the standing per-key
-    * step-time state via [[funnelApply]] (the weightedSampleServe
-    * read-write pattern). The conversion report at any moment is an
-    * aggregation over the state rows.
-    */
-  def funnelServe(stream: DataFrame, steps: Seq[String],
-      keyCol: String = "user_id", tsCol: String = "ts",
-      typeCol: String = "event_type")(
-      state: () => DataFrame, save: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        save(funnelApply(state(), batch, steps, keyCol, tsCol, typeCol))
-    }
-
   /** Funnel summary: how many keys complete each step prefix (the
     * conversion report). Step counts are non-increasing by construction.
     */

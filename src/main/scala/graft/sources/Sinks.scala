@@ -41,9 +41,26 @@ object Sinks {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime(triggerMs))
 
-  /** Streaming memory sink for tests (`executeAndCollect` streaming twin). */
-  def memorySink(df: DataFrame, name: String): DataStreamWriter[Row] =
-    df.writeStream.format("memory").queryName(name)
+  /** Runs a batch operator on every micro-batch of `stream` — the one
+    * way a standing-artifact operator serves a stream, e.g.
+    * `eachBatch(queries)(b => sink(Retrieval.bm25TopKAll(index, stats, b, k)))`
+    * or `eachBatch(votes)(b => save(Preference.btMerge(state(), b)))`.
+    * Returns the un-started writer; the caller owns trigger and
+    * checkpoint. Installs [[graft.streaming.LocalCheckpointFs]], so a
+    * `file:` checkpoint starts no `chmod`/`readlink` process.
+    *
+    * foreachBatch rather than a stream-static join: each batch is planned
+    * again, so its `IN` literal or probe-cell filter reaches the
+    * bucket-pruned index scan while the index side never moves.
+    *
+    * Delivery is at-least-once: after a restart Spark may run `apply`
+    * again for a batch it already ran, so a `save(merge(state(), b))`
+    * fold can count that batch twice.
+    */
+  def eachBatch(stream: DataFrame)(apply: DataFrame => Unit): DataStreamWriter[Row] =
+    graft.streaming.LocalCheckpointFs.checkpointed(stream).writeStream
+      .outputMode("append")
+      .foreachBatch { (b: DataFrame, _: Long) => apply(b) }
 
   /** Range-clustered parquet write — the layout-management half of a
     * 100 TB pipeline. `repartitionByRange` gives every output file a

@@ -60,6 +60,41 @@ class CoreSpec extends SparkSpec {
     assert(totals == expected)
   }
 
+  test("S8 catalog generator: the same seed gives the same sequence") {
+    import graft.sources.Generators
+    val base = java.time.Instant.parse("2024-01-01T00:00:00Z")
+    val events = Generators.catalogEvents(50, base)
+    assert(events == Generators.catalogEvents(50, base))
+    assert(events != Generators.catalogEvents(50, base, seed = 44L))
+    assert(events.map(_.time) == (0 until 50).map(i => base.plusSeconds(i.toLong)))
+    assert(events.map(_.productId).distinct.size == 50)
+  }
+
+  test("S5/S6 streaming form: the rate-driven cart stream has the event " +
+      "schema and event time base + row number") {
+    import scala.jdk.CollectionConverters._
+    import graft.model.ShoppingCartEvent
+    val base = java.time.Instant.parse("2024-01-01T00:00:00Z")
+    val stream = graft.sources.Generators.shoppingCartStream(spark, base, rowsPerSecond = 20)
+    assert(stream.schema.map(f => f.name -> f.dataType) ==
+      org.apache.spark.sql.Encoders.product[ShoppingCartEvent].schema
+        .map(f => f.name -> f.dataType))
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[ShoppingCartEvent]()
+    val q = stream.writeStream.foreachBatch {
+      (ds: org.apache.spark.sql.Dataset[ShoppingCartEvent], _: Long) =>
+        ds.collect().foreach(seen.add)
+    }.start()
+    try {
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (seen.size < 5 && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally q.stop()
+    val first = seen.asScala.toSeq.sortBy(_.time.toEpochMilli).take(5)
+    assert(first.map(_.time) == (0 until 5).map(i => base.plusSeconds(i.toLong)), first)
+    assert(first.map(_.userId) == Seq("Bob", "Alice", "Sam", "Tom", "Rob"), first)
+    assert(first.map(e => (e.eventType, e.sku, e.quantity)) ==
+      (0 until 5).map(i => ("add", s"sku_$i", i)), first)
+  }
+
   test("custom Aggregator maps AggregateFunction 1:1 (Windows.scala:165-180)") {
     val counter = new Aggregators.CountAggregator[(String, Int)]
     val mean = new Aggregators.MeanAggregator[(String, Int)](_._2.toDouble)

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.{Sampling, TextAnalysis}
+import graft.sources.Sinks
 
 /** Data-selection & labeler-QA wave: DSIR importance scoring, the
   * token-budget mixture solve, Cohen's kappa, calibration report, and
@@ -412,9 +413,10 @@ class DataSelectionSpec extends SparkSpec {
       Seq.empty[(String, Boolean)].toDF("problem", "ok"), "problem", "ok")
       .localCheckpoint()
     val pIn = MemoryStream[(String, Boolean)](71, spark, None)
-    val pq = TextAnalysis.passAtKServe(
-      pIn.toDF().toDF("problem", "ok"), "problem", "ok")(
-      () => pStanding, f => pStanding = f.localCheckpoint()).start()
+    val pq = Sinks.eachBatch(pIn.toDF().toDF("problem", "ok")) { b =>
+      pStanding = TextAnalysis.passDictMerge(pStanding, b, "problem", "ok")
+        .localCheckpoint()
+    }.start()
     try {
       all.map(r => (r._1, r._4)).grouped(100)
         .foreach { g => pIn.addData(g); pq.processAllAvailable() }
@@ -425,10 +427,10 @@ class DataSelectionSpec extends SparkSpec {
       Seq.empty[(String, String, String)].toDF("problem", "answer", "gold"),
       "problem", "answer", "gold").localCheckpoint()
     val vIn = MemoryStream[(String, String, String)](72, spark, None)
-    val vq = TextAnalysis.voteServe(
-      vIn.toDF().toDF("problem", "answer", "gold"),
-      "problem", "answer", "gold")(
-      () => vStanding, f => vStanding = f.localCheckpoint()).start()
+    val vq = Sinks.eachBatch(vIn.toDF().toDF("problem", "answer", "gold")) { b =>
+      vStanding = TextAnalysis.voteDictMerge(vStanding, b, "problem", "answer",
+        "gold").localCheckpoint()
+    }.start()
     try {
       all.map(r => (r._1, r._2, r._3)).grouped(100)
         .foreach { g => vIn.addData(g); vq.processAllAvailable() }

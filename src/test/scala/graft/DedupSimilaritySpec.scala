@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.{Dedup, Similarity}
+import graft.sources.Sinks
 import org.apache.spark.sql.functions.col
 
 class DedupSimilaritySpec extends SparkSpec {
@@ -510,12 +511,13 @@ class DedupSimilaritySpec extends SparkSpec {
     var standing = snap0
     val verdicts = scala.collection.mutable.ArrayBuffer[(Long, Int)]()
     val in = MemoryStream[(Long, Array[Float])](74, spark, None)
-    val q = Similarity.semanticDedupBoundedServe(
-      in.toDF().toDF("vec_id", "embedding"),
-      minCos = 0.95, maxBlock = 2, levels = 2)(
-      () => standing, f => standing = f.localCheckpoint())(
-      out => verdicts ++= out.select("vec_id", "is_dup")
-        .as[(Long, Int)].collect()).start()
+    val q = Sinks.eachBatch(in.toDF().toDF("vec_id", "embedding")) { b =>
+      verdicts ++= Similarity.semanticDedupFlagsBoundedApply(standing, b,
+          minCos = 0.95, maxBlock = 2, levels = 2)
+        .select("vec_id", "is_dup").as[(Long, Int)].collect()
+      standing = Similarity.boundedIndexAppend(standing, b, maxBlock = 2,
+        levels = 2).localCheckpoint()
+    }.start()
     try {
       in.addData(b1); q.processAllAvailable()
       in.addData(b2); q.processAllAvailable()
@@ -846,9 +848,9 @@ class DedupSimilaritySpec extends SparkSpec {
     val (b1, b2) = incRows.splitAt(2)
     val in = MemoryStream[(Long, String)](92, spark, None)
     val out = scala.collection.mutable.ArrayBuffer[(Long, Int, Int, String)]()
-    val q = Dedup.substringScrubServe(
-        in.toDF().toDF("doc_id", "text"), idx) { batch =>
-      out ++= batch.as[(Long, Int, Int, String)].collect()
+    val q = Sinks.eachBatch(in.toDF().toDF("doc_id", "text")) { b =>
+      out ++= Dedup.substringScrubApply(b, idx)
+        .as[(Long, Int, Int, String)].collect()
     }.start()
     try {
       in.addData(b1); q.processAllAvailable()
@@ -1238,9 +1240,9 @@ class DedupSimilaritySpec extends SparkSpec {
     val in = MemoryStream[(Long, Array[Float])](47, spark, None)
     val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Double, Int)]()
     // excludeSelf = true: this stream REPLAYS indexed vectors
-    val q = Similarity.annServe(in.toDF().toDF("vec_id", "embedding"),
-        assigned, k = 3, cents, nprobe = 4, excludeSelf = true) { batch =>
-      out ++= batch.as[(Long, Long, Double, Int)].collect()
+    val q = Sinks.eachBatch(in.toDF().toDF("vec_id", "embedding")) { b =>
+      out ++= Similarity.ivfTopKAll(assigned, b, k = 3, cents, nprobe = 4,
+        excludeSelf = true).as[(Long, Long, Double, Int)].collect()
     }.start()
     try {
       in.addData(raw.take(2).map(r => (r._1, r._2)): _*)
@@ -1252,15 +1254,15 @@ class DedupSimilaritySpec extends SparkSpec {
         vecs.where($"vec_id" < 4), 3, cents, nprobe = 4)
       .as[(Long, Long, Double, Int)].collect()
     assert(out.toSet == batchWant.toSet && out.nonEmpty)
-    // external-id serving (the default): a query id that collides with a
+    // external-id serving (excludeSelf = false): a query id that collides with a
     // corpus vec_id must NOT lose that corpus vector — serve the corpus
     // vector 5's OWN embedding under the colliding id 5 and expect
     // vec_id 5 itself at rank 1 (cosine 1)
     val in2 = MemoryStream[(Long, Array[Float])](48, spark, None)
     val out2 = scala.collection.mutable.ArrayBuffer[(Long, Long, Double, Int)]()
-    val q2 = Similarity.annServe(in2.toDF().toDF("vec_id", "embedding"),
-        assigned, k = 3, cents, nprobe = 4) { batch =>
-      out2 ++= batch.as[(Long, Long, Double, Int)].collect()
+    val q2 = Sinks.eachBatch(in2.toDF().toDF("vec_id", "embedding")) { b =>
+      out2 ++= Similarity.ivfTopKAll(assigned, b, k = 3, cents, nprobe = 4,
+        excludeSelf = false).as[(Long, Long, Double, Int)].collect()
     }.start()
     try {
       in2.addData((5L, raw(5)._2))
@@ -1621,9 +1623,9 @@ class DedupSimilaritySpec extends SparkSpec {
     val (b1, b2) = incRows.splitAt(1)
     val in = MemoryStream[(Long, String)](93, spark, None)
     val out = scala.collection.mutable.ArrayBuffer[(Long, Int, Int, String)]()
-    val q = Dedup.boilerplateScrubServe(
-        in.toDF().toDF("doc_id", "text"), idx, minDocs = 3) { b =>
-      out ++= b.as[(Long, Int, Int, String)].collect()
+    val q = Sinks.eachBatch(in.toDF().toDF("doc_id", "text")) { b =>
+      out ++= Dedup.boilerplateScrubApply(b, idx, minDocs = 3)
+        .as[(Long, Int, Int, String)].collect()
     }.start()
     try {
       in.addData(b1); q.processAllAvailable()

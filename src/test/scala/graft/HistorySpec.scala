@@ -3,6 +3,7 @@ package graft
 import java.sql.Timestamp
 
 import graft.ops.History
+import graft.sources.Sinks
 import org.apache.spark.sql.functions._
 
 /** SCD2 attribute history + point-in-time reconstruction. */
@@ -150,10 +151,11 @@ class HistorySpec extends SparkSpec {
         .toDF("user_id", "ts", "event_id", "event_type"),
       "user_id", "ts", "event_id", "event_type").localCheckpoint()
     val in = MemoryStream[(Long, Timestamp, Long, String)](91, spark, None)
-    val q = History.scd2Serve(
-        in.toDF().toDF("user_id", "ts", "event_id", "event_type"),
-        "user_id", "ts", "event_id", "event_type")(
-        () => standing, f => standing = f.localCheckpoint()).start()
+    val q = Sinks.eachBatch(
+        in.toDF().toDF("user_id", "ts", "event_id", "event_type")) { b =>
+      standing = History.scd2Apply(standing, b, "user_id", "ts", "event_id",
+        "event_type").localCheckpoint()
+    }.start()
     try {
       // three time-ordered batches (append-only per key by construction)
       all.grouped(3).foreach { b => in.addData(b); q.processAllAvailable() }

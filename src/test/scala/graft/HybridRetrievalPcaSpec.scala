@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.{Retrieval, Similarity, TextAnalysis}
+import graft.sources.Sinks
 
 /** Hybrid retrieval (dense leg + reciprocal-rank fusion) and the
   * covariance/PCA-whitening stack.
@@ -131,8 +132,10 @@ class HybridRetrievalPcaSpec extends SparkSpec {
     val stats = Retrieval.corpusStats(docs, "hyb_serve_test")
     val in = MemoryStream[(Long, String)](45, spark, None)
     val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Long, Double, Long)]()
-    val q = Retrieval.hybridServe(in.toDF().toDF("query_id", "query"),
-        idx, stats, docs, k = 3, topK = 3) { batch =>
+    val q = Sinks.eachBatch(in.toDF().toDF("query_id", "query")) { b =>
+      val batch = Retrieval.rrfFuse(Seq(
+        Retrieval.bm25TopKAll(idx, stats, b, 3),
+        Retrieval.denseTopKAll(docs, b, 3)), topK = 3)
       out ++= batch.as[(Long, Long, Long, Double, Long)].collect()
     }.start()
     try {
@@ -255,9 +258,9 @@ class HybridRetrievalPcaSpec extends SparkSpec {
     val stats = Similarity.vectorQualityStats(corpus, 3).localCheckpoint()
     val in = MemoryStream[(Long, Seq[Float])](46, spark, None)
     val out = scala.collection.mutable.ArrayBuffer[(Long, Boolean)]()
-    val q = Similarity.vectorQualityServe(
-        in.toDF().toDF("vec_id", "embedding"), stats, dim = 3) { b =>
-      out ++= b.select("vec_id", "flag").as[(Long, Boolean)].collect()
+    val q = Sinks.eachBatch(in.toDF().toDF("vec_id", "embedding")) { b =>
+      out ++= Similarity.vectorQualityFrom(b, stats, dim = 3)
+        .select("vec_id", "flag").as[(Long, Boolean)].collect()
     }.start()
     try {
       in.addData((100L, Seq(1f, 0f, 0f)), (101L, Seq(0f, 0f, 0f)),

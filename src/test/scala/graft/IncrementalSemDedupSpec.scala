@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.{IndexTables, Similarity, TextAnalysis}
+import graft.sources.Sinks
 
 /** Incremental text semantic dedup (the round-8 verdict #6 gap): a
   * standing argmax-block index plus a per-increment apply whose verdicts
@@ -142,9 +143,9 @@ class IncrementalSemDedupSpec extends SparkSpec {
       "semtext_spec_d")
     val in = MemoryStream[(Long, String)](91, spark, None)
     val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Option[Double], Int)]()
-    val q = TextAnalysis.semanticDedupTextServe(
-        in.toDF().toDF("doc_id", "text"), idx, minCos = 0.9) { batch =>
-      out ++= batch.as[(Long, Long, Option[Double], Int)].collect()
+    val q = Sinks.eachBatch(in.toDF().toDF("doc_id", "text")) { b =>
+      out ++= TextAnalysis.semanticDedupTextApply(b, idx, minCos = 0.9)
+        .as[(Long, Long, Option[Double], Int)].collect()
     }.start()
     val incRows = docs.where(col("doc_id") >= 100)
       .as[(Long, String)].collect().sortBy(_._1).toSeq

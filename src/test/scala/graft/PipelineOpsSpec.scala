@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.{Core, Curation, Decontam, Sampling, Scrub}
+import graft.sources.Sinks
 
 /** Training-pipeline operators added in round 6: benchmark decontamination
   * (PII scrubbing and token-budget mixing specs live here too).
@@ -61,9 +62,9 @@ class PipelineOpsSpec extends SparkSpec {
     // serve twin: per-micro-batch foreachBatch apply ≡ the batch gate
     val in = MemoryStream[(Long, String)](97, spark, None)
     val out = scala.collection.mutable.ArrayBuffer[(Long, Int)]()
-    val q = Curation.ingestGateServe(
-        in.toDF().toDF("doc_id", "text"), lineIdx, evalGrams, banded) { b =>
-      out ++= b.select("doc_id", "keep").as[(Long, Int)].collect()
+    val q = Sinks.eachBatch(in.toDF().toDF("doc_id", "text")) { b =>
+      out ++= Curation.ingestGate(b, lineIdx, evalGrams, banded)
+        .select("doc_id", "keep").as[(Long, Int)].collect()
     }.start()
     try {
       in.addData((101L, s"${body("nov")}\n$banner"), (102L, zebra))
@@ -885,9 +886,9 @@ class PipelineOpsSpec extends SparkSpec {
       (4L, "unrelated batch two content entirely"))
     val in = MemoryStream[(Long, String)](92, spark, None)
     val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Option[Double], Int)]()
-    val q = Decontam.semanticContaminationServe(
-        in.toDF().toDF("doc_id", "text"), eval, minCos = 0.9) { batch =>
-      out ++= batch.as[(Long, Long, Option[Double], Int)].collect()
+    val q = Sinks.eachBatch(in.toDF().toDF("doc_id", "text")) { b =>
+      out ++= Decontam.semanticContamination(b, eval, minCos = 0.9)
+        .as[(Long, Long, Option[Double], Int)].collect()
     }.start()
     val (b1, b2) = rows.splitAt(2)
     try {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.Preference
+import graft.sources.Sinks
 import org.apache.spark.sql.functions._
 
 /** Bradley-Terry rating estimation over pairwise preference outcomes. */
@@ -77,8 +78,9 @@ class PreferenceSpec extends SparkSpec {
     var standing = Preference.btGraph(
       Seq.empty[(Long, Long)].toDF("winner", "loser")).localCheckpoint()
     val in = MemoryStream[(Long, Long)](92, spark, None)
-    val q = Preference.btServe(in.toDF().toDF("winner", "loser"))(
-      () => standing, f => standing = f.localCheckpoint()).start()
+    val q = Sinks.eachBatch(in.toDF().toDF("winner", "loser")) { b =>
+      standing = Preference.btMerge(standing, b).localCheckpoint()
+    }.start()
     try {
       all.grouped(20).foreach { g => in.addData(g); q.processAllAvailable() }
     } finally q.stop()

@@ -62,14 +62,18 @@ class PropertySpec extends SparkSpec {
           transform(sequence(lit(0), size(col("toks")) - n),
             i => array_join(slice(col("toks"), i + lit(1), lit(n)), " ")))
           .otherwise(array().cast("array<string>"))
-        df.select(
-          graft.functions.ArrayKernels.token_ngrams(col("toks"), n).as("k"),
-          hof.as("h"),
+        // repartition keeps the projection out of the LocalRelation, and
+        // the HOF form gets its own projection: a lambda is not generated
+        // code and would take the kernel's whole stage with it
+        val parts = df.repartition(1)
+        val kernel = collectGenerated(parts.select(col("id"),
+          graft.functions.ArrayKernels.token_ngrams(col("toks"), n),
           graft.functions.ArrayKernels.token_ngrams(col("toks"), n,
-            distinct = true).as("kd"),
-          array_distinct(hof).as("hd"))
-          .where(col("k") =!= col("h") || col("kd") =!= col("hd"))
-          .count() == 0L
+            distinct = true)).as[(Long, Seq[String], Seq[String])],
+          classOf[graft.functions.ArrayKernels.TokenNgrams])
+        val ref = parts.select(col("id"), hof, array_distinct(hof))
+          .as[(Long, Seq[String], Seq[String])].collect()
+        kernel.sortBy(_._1).toSeq == ref.sortBy(_._1).toSeq
       }
     })
     // interpreted eval — the non-codegen fallback path the DataFrame run
@@ -93,10 +97,11 @@ class PropertySpec extends SparkSpec {
     assert(graft.functions.ArrayKernels.TokenNgrams(withNull, 2, false).eval()
       .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
       .toObjectArray(StringType).map(String.valueOf).toSeq == Seq("a ", " b"))
-    val dfNull = Seq((1L, Seq("a", null, "b"))).toDF("id", "toks")
-    assert(dfNull.select(
+    val dfNull = Seq((1L, Seq("a", null, "b"))).toDF("id", "toks").repartition(1)
+    assert(collectGenerated(dfNull.select(
       graft.functions.ArrayKernels.token_ngrams(col("toks"), 2).as("g"))
-      .as[Seq[String]].head() == Seq("a ", " b")) // codegen path agrees
+      .as[Seq[String]], classOf[graft.functions.ArrayKernels.TokenNgrams])
+      .head == Seq("a ", " b")) // codegen path agrees
   }
 
   test("array kernels: interpreted eval equals whole-stage codegen on random inputs") {
@@ -130,7 +135,6 @@ class PropertySpec extends SparkSpec {
       c => ArrayKernels.TokenNgrams(c(4), 3, distinct = false),
       c => ArrayKernels.TokenNgrams(c(4), 2, distinct = true))
     val names = Seq("d1", "d2", "l1", "l2", "t", "b")
-    val conf = spark.conf
     check(Prop.forAll(Gen.listOfN(25, inGen)) { rows =>
       val df = rows.zipWithIndex.map { case ((d1, d2, l1, l2, t, b), i) =>
         (i.toLong, d1, d2, l1, l2, t, b)
@@ -140,9 +144,8 @@ class PropertySpec extends SparkSpec {
       // LocalRelation (interpreted) and never reaches codegen
       val out = df.repartition(1).select(col("id") +:
         kernels.map(k => org.apache.spark.sql.GraftSqlBridge.column(k(cols))): _*)
-      conf.set("spark.sql.codegen.fallback", "false")
-      val generated = try out.collect().sortBy(_.getLong(0))
-        finally conf.unset("spark.sql.codegen.fallback")
+      val generated = collectGenerated(out, classOf[ArrayKernels.MinHashSignature])
+        .sortBy(_.getLong(0))
       val types = df.schema.map(_.dataType).tail
       generated.length == rows.length && rows.zip(generated).forall { case (r, g) =>
         val lits = r.productIterator.toSeq.zip(types).map { case (v, dt) =>

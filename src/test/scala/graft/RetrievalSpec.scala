@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.Retrieval
+import graft.sources.Sinks
 
 class RetrievalSpec extends SparkSpec {
   import spark.implicits._
@@ -169,9 +170,9 @@ class RetrievalSpec extends SparkSpec {
     val stats = Retrieval.corpusStats(docs, "ret_serve_test")
     val in = MemoryStream[(Long, String)](44, spark, None)
     val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Long, Double, Int)]()
-    val q = Retrieval.bm25Serve(in.toDF().toDF("query_id", "query"),
-        idx, stats, k = 2) { batch =>
-      out ++= batch.as[(Long, Long, Long, Double, Int)].collect()
+    val q = Sinks.eachBatch(in.toDF().toDF("query_id", "query")) { b =>
+      out ++= Retrieval.bm25TopKAll(idx, stats, b, k = 2)
+        .as[(Long, Long, Long, Double, Int)].collect()
     }.start()
     try {
       in.addData((10L, "Spark, JOINS!"))

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.Sampling
+import graft.sources.Sinks
 import org.apache.spark.sql.functions.{col, round}
 
 /** Deterministic hash sampling: the retry-stable, engine-reproducible
@@ -401,15 +402,14 @@ class SamplingSpec extends SparkSpec {
     var state = Sampling.weightedSampleRows(
       wdocs.limit(0), "source", "doc_id", "wt", 12)
       .collect() // empty, but with the state schema
-    val q = Sampling.weightedSampleServe(
-        in.toDF().toDF("doc_id", "source", "wt"),
-        "source", "doc_id", "wt", 12) (
-      () => spark.createDataFrame(
-        spark.sparkContext.parallelize(state.toSeq),
-        Sampling.weightedSampleRows(wdocs, "source", "doc_id", "wt", 12)
-          .schema),
-      merged => state = merged.collect()
-    ).start()
+    val stateSchema =
+      Sampling.weightedSampleRows(wdocs, "source", "doc_id", "wt", 12).schema
+    val q = Sinks.eachBatch(in.toDF().toDF("doc_id", "source", "wt")) { b =>
+      val prev = spark.createDataFrame(
+        spark.sparkContext.parallelize(state.toSeq), stateSchema)
+      state = Sampling.weightedSampleMerge(prev, b, "source", "doc_id", "wt",
+        12).collect()
+    }.start()
     try {
       rows.grouped(700).foreach { b =>
         in.addData(b); q.processAllAvailable()

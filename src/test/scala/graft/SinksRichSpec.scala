@@ -30,6 +30,16 @@ class SinksRichSpec extends SparkSpec {
     assert(back.length == 1 && back.head.getString(0) == "3")
   }
 
+  test("K3 print(): printSink shows the first rows on the console") {
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out) {
+      Sinks.printSink(Seq((1, "alpha"), (2, "beta")).toDF("n", "s"), rows = 1)
+    }
+    val text = out.toString("UTF-8")
+    assert(text.contains("alpha") && !text.contains("beta") &&
+      text.contains("only showing top 1 row"), text)
+  }
+
   test("K4 foreach sink side effect (BuiltIn.scala:196)") {
     val acc: LongAccumulator = spark.sparkContext.longAccumulator("seen")
     Sinks.foreachSink(Seq(1, 2, 3).toDS())(v => acc.add(v))

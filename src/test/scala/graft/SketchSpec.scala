@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.sources.Sinks
+
 /** Sketch aggregates (HLL++ distinct count, quantile sketch): the mergeable
   * fixed-size-state form of distinct/quantile aggregation — at 100 TB the
   * exact forms either shuffle every distinct value (countDistinct) or
@@ -131,11 +133,12 @@ class SketchSpec extends SparkSpec {
       .schema
     var state = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val q = CountMin.serve(in.toDF().toDF("token"), "token", width = 32)(
-      () => state,
-      merged => state = spark.createDataFrame(
+    val q = Sinks.eachBatch(in.toDF().toDF("token")) { b =>
+      val merged = CountMin.merge(state,
+        CountMin.sketch(b, "token", width = 32))
+      state = spark.createDataFrame(
         spark.sparkContext.parallelize(merged.collect().toSeq), schema)
-    ).start()
+    }.start()
     try {
       tokens.grouped(35).foreach { b => in.addData(b); q.processAllAvailable() }
     } finally q.stop()

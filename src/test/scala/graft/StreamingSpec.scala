@@ -13,6 +13,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{array_sort, col}
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
 
+import graft.sources.Sinks
 import graft.streaming.{ForklessLocalFs, LocalCheckpointFs, Stateful, StreamingOps}
 
 /** Streaming semantics: cross-micro-batch state evolution, watermark-driven
@@ -588,6 +589,24 @@ class StreamingSpec extends SparkSpec {
     val deltas = Files.walk(ckpt.resolve("state")).iterator().asScala
       .map(_.getFileName.toString).toSeq
     assert(deltas.contains("3.delta") && deltas.contains(".3.delta.crc"), deltas)
+    // a batch operator served per micro-batch; the key is unset first, so
+    // only eachBatch's own install can keep its checkpoint fork-free
+    val served = MemoryStream[String](89, spark, None)
+    val servedCkpt = Files.createTempDirectory("graft-forks-served")
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    spark.conf.unset(LocalCheckpointFs.Key)
+    val servedCmds = processStarts {
+      val q = Sinks.eachBatch(served.toDF())(b => b.collect().foreach(r => got.add(r.getString(0))))
+        .option("checkpointLocation", servedCkpt.toString).start()
+      withQuery(q) {
+        for (i <- 1 to 3) { served.addData(s"w$i"); q.processAllAvailable() }
+      }
+      new ProcessBuilder("true").start().waitFor()
+    }
+    assert(servedCmds.exists(_.trim == "true"), servedCmds)
+    assert(!servedCmds.exists(isFsFork), servedCmds.filter(isFsFork).take(5))
+    assert(got.asScala.toSet == Set("w1", "w2", "w3"))
+    assert(Files.exists(servedCkpt.resolve("commits/2")))
   }
 
   /** Replays `batches` of (key, event-time s) through the query `build`

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.TextAnalysis
+import graft.sources.Sinks
 
 class TextAnalysisSpec extends SparkSpec {
   import spark.implicits._
@@ -560,8 +561,8 @@ class TextAnalysisSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val in = MemoryStream[Double](94, spark, None)
     val reports = scala.collection.mutable.ArrayBuffer[Seq[(Int, Long, Long, Double)]]()
-    val q = TextAnalysis.distributionDriftServe(
-        in.toDF().toDF("v"), ref, "v", Seq(10.0)) { r =>
+    val q = Sinks.eachBatch(in.toDF().toDF("v")) { b =>
+      val r = TextAnalysis.distributionDriftFrom(ref, b, "v", Seq(10.0))
       reports += r.as[(Int, Long, Long, Double)].collect().sortBy(_._1).toSeq
     }.start()
     try {
@@ -1163,8 +1164,10 @@ class TextAnalysisSpec extends SparkSpec {
     var standing = TextAnalysis.scoreDict(
       Seq.empty[(Double, Int)].toDF("s", "y"), "s", "y").localCheckpoint()
     val in = MemoryStream[(Double, Int)](93, spark, None)
-    val q = TextAnalysis.aucServe(in.toDF().toDF("s", "y"), "s", "y")(
-      () => standing, f => standing = f.localCheckpoint()).start()
+    val q = Sinks.eachBatch(in.toDF().toDF("s", "y")) { b =>
+      standing = TextAnalysis.scoreDictMerge(standing, b, "s", "y")
+        .localCheckpoint()
+    }.start()
     try {
       all.grouped(100).foreach { g => in.addData(g); q.processAllAvailable() }
     } finally q.stop()
@@ -1763,9 +1766,9 @@ class TextAnalysisSpec extends SparkSpec {
       Seq.empty[(Long, String, String)].toDF("doc_id", "text", "lang"))
       .localCheckpoint()
     val in = MemoryStream[(Long, String, String)](94, spark, None)
-    val q = TextAnalysis.lmServe(
-      in.toDF().toDF("doc_id", "text", "lang"))(
-      () => standing, f => standing = f.localCheckpoint()).start()
+    val q = Sinks.eachBatch(in.toDF().toDF("doc_id", "text", "lang")) { b =>
+      standing = TextAnalysis.lmMerge(standing, b).localCheckpoint()
+    }.start()
     try {
       in.addData(Seq((1L, "a b a b a c", "en"))); q.processAllAvailable()
       in.addData(Seq((2L, "b a c a", "en"))); q.processAllAvailable()
@@ -1835,9 +1838,10 @@ class TextAnalysisSpec extends SparkSpec {
       Seq.empty[(Long, String, String)].toDF("doc_id", "gold", "pred"),
       "doc_id", "gold", "pred").localCheckpoint()
     val in = MemoryStream[(Long, String, String)](73, spark, None)
-    val q = TextAnalysis.qaEvalServe(
-      in.toDF().toDF("doc_id", "gold", "pred"), "doc_id", "gold", "pred")(
-      () => standing, f => standing = f.localCheckpoint()).start()
+    val q = Sinks.eachBatch(in.toDF().toDF("doc_id", "gold", "pred")) { b =>
+      standing = TextAnalysis.qaDictMerge(standing, b, "doc_id", "gold", "pred")
+        .localCheckpoint()
+    }.start()
     try {
       all.grouped(20).foreach { g => in.addData(g); q.processAllAvailable() }
     } finally q.stop()

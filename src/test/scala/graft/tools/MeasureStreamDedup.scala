@@ -13,9 +13,10 @@ import graft.streaming.StreamingOps
 /** Recall measurement for [[StreamingOps.streamingNearDedup]] against the
   * batch MinHash+LSH decision at equal threshold — the empirical evidence
   * behind the single-band pre-filter's documented s^bandRows recall claim
-  * (which was previously analytical only). Results in NOTES.md.
+  * (which was previously analytical only). Results: `git show
+  * ba03322:NOTES.md`.
   *
-  * Run: sbt "runMain graft.tools.MeasureStreamDedup /root/testdata/sf0.01"
+  * Run (test sources): sbt "Test/runMain graft.tools.MeasureStreamDedup <sf-dir>"
   */
 object MeasureStreamDedup {
 
@@ -57,7 +58,8 @@ object MeasureStreamDedup {
       .select("b_id").distinct().collect().map(_.getLong(0)).toSet
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
+    val sfDir = args.headOption.getOrElse(
+      sys.error("usage: MeasureStreamDedup <sf-dir>"))
     val spark = SparkSession.builder().master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
