@@ -1,17 +1,17 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.ops._
-import graft.sources.Sinks
+import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract (SURVEY.md §7): the flagship `entry`, and every query
+  * with its DuckDB oracle.
   *
-  * Each entry in `queries` exercises one operator family from SURVEY.md §2
-  * (reference citation in the ops Scaladoc) or one training-data-pipeline
-  * operator (dedup / similarity / text analysis). Column names are aligned
-  * 1:1 with `oracleSql` (the driver sorts columns by name before hashing).
-  * Doubles are rounded on both sides for cross-engine float stability.
+  * Each query is one [[graft.queries.QueryDef]] in the file of the operator
+  * module it exercises (`graft.queries.<Family>Queries`). Column names are
+  * aligned 1:1 between a builder and its oracle (the driver sorts columns
+  * by name before hashing). Doubles are rounded on both sides for
+  * cross-engine float stability.
   */
 object SparkEntry {
 
@@ -24,8604 +24,16 @@ object SparkEntry {
 
   private type Q = (SparkSession, String) => DataFrame
 
-  /** The boilerplate-fixture injection q_boilerplate AND
-    * q_boilerplate_incr share: a site-wide banner (every doc), a
-    * half-site banner (even ids), a 3-doc line STRADDLING the
-    * q_boilerplate_incr snapshot/increment split (hot only with the
-    * index's counts), a 2-doc increment-local line and a 2-doc
-    * snapshot-local line (both under threshold), and per-doc unique
-    * footers.
-    */
-  private def boilerInject(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), concat(col("text"),
-      lit("\nsubscribe to our newsletter"),
-      when(col("doc_id") % 2 === 0, lit("\nfollow us on twitter"))
-        .otherwise(lit("")),
-      when(col("doc_id").isin(42L, 43L, 48L),
-        lit("\ncross boundary banner")).otherwise(lit("")),
-      when(col("doc_id").isin(58L, 59L), lit("\nrare increment line"))
-        .otherwise(lit("")),
-      when(col("doc_id") < 2, lit("\nrare pair line")).otherwise(lit("")),
-      when(col("doc_id") % 3 === 0,
-        concat(lit("\nunique footer "), col("doc_id").cast("string")))
-        .otherwise(lit(""))).as("text"))
-
-  /** The typo-fixture injection q_typo_clusters AND q_typo_apply share:
-    * 1-edit "batch" variants (delete/insert/substitute) + a 2-edit
-    * transposition appended to every 11th document.
-    */
-  private def typoInjected(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      when(col("doc_id") % 11 === 0,
-        concat(col("text"), lit(" batc batchh batxh abtch")))
-        .otherwise(col("text")).as("text"))
-
-  /** The q_mix_solve recipe: 4 weighted domains under a 2-epoch cap
-    * (Seq, not Map — the oracle interpolates it in a deterministic
-    * order). Shared by the query and its oracle SQL so the weights
-    * cannot drift between engines (the QUALITY_W pattern).
-    */
-  private val MIX_SOLVE_W: Seq[(String, Double)] =
-    Seq("src0" -> 0.4, "src1" -> 0.3, "src2" -> 0.2, "src3" -> 0.1)
-
-  /** Half-open price bands for q_range_lookup — bands 1/2 overlap on
-    * [15000, 20000) so a point can match several intervals, and band 4's
-    * ceiling exceeds lineitem's price range so the top band is unbounded
-    * in practice. Shared by the query and its oracle (the QUALITY_W
-    * pattern).
-    */
-  private val RANGE_BANDS: Seq[(Int, Double, Double)] = Seq(
-    (1, 0.0, 20000.0), (2, 15000.0, 40000.0),
-    (3, 40000.0, 70000.0), (4, 70000.0, 200000.0))
-
-  /** [[RANGE_BANDS]] as a DuckDB VALUES body, doubles cast explicitly
-    * (the MMR DECIMAL-folding lesson).
-    */
-  private def rangeBandsSql: String = RANGE_BANDS.map { case (id, lo, hi) =>
-    s"($id, CAST($lo AS DOUBLE), CAST($hi AS DOUBLE))" }.mkString(", ")
-
-  /** q_ingest_gate fixture constants, shared by the query and its
-    * oracle (the QUALITY_W convention). The eval sentinel is a phrase
-    * that cannot occur in the synthetic corpus vocabulary.
-    */
-  private val INGEST_BANNER = "subscribe to our newsletter"
-  private val INGEST_EVAL_TEXT = "ingest gate sentinel check passage"
-
-  /** Stopword-bearing connective the %4 ∈ {2,3} increment classes get:
-    * the synthetic corpus has NO English stopwords, so without it the
-    * Gopher stopword rule rejects every doc and `keep` is a constant.
-    * Inline (no newline) so it can never become a hot boilerplate line.
-    */
-  private val INGEST_FILLER =
-    " with the rest of that batch and more to have it all be done"
-
-  /** Deterministic q_ingest_gate injection: a site banner on every 3rd
-    * doc (hot boilerplate), and on increment docs (doc_id%10 >= 8) by
-    * residue — %4=0 an EXACT COPY of snapshot doc (doc_id−8)'s injected
-    * text (the dup-probe target), %4=1 an eval-sentinel quote, %4=2 an
-    * email. All keyed on doc_id residues so the oracle rebuilds the
-    * same corpus.
-    */
-  private def ingestInject(docs: DataFrame): DataFrame = {
-    val incr = col("doc_id") % 10 >= 8
-    // inline appends FIRST, the banner line LAST: a class-specific suffix
-    // glued onto the banner line would make that variant a hot shared
-    // line of its own and scrub the marker away with it
-    val inj0 = docs.select(col("doc_id"), concat(col("text"),
-      when(incr && col("doc_id") % 4 === 1,
-        lit(" ingest gate sentinel check")).otherwise(lit("")),
-      when(incr && col("doc_id") % 4 === 2,
-        lit(" mail bob@example.com")).otherwise(lit("")),
-      when(incr && (col("doc_id") % 4 === 2 || col("doc_id") % 4 === 3),
-        lit(INGEST_FILLER)).otherwise(lit("")),
-      when(col("doc_id") % 3 === 0, concat(lit("\n"), lit(INGEST_BANNER)))
-        .otherwise(lit(""))).as("text"))
-    // by-NAME equi-join (Seq("doc_id")) on a +8-shifted key rather than
-    // a `col("doc_id") - 8` expression condition: on a SELF-join an
-    // unqualified reference in the condition has two candidate bindings,
-    // and keying the source rows before the join removes the ambiguity
-    // by construction.
-    val src = inj0.select((col("doc_id") + 8).as("doc_id"),
-      col("text").as("_st"))
-    inj0.join(src, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(incr && col("doc_id") % 4 === 0 && col("_st").isNotNull,
-          col("_st")).otherwise(col("text")).as("text"))
-  }
-
-  /** The q_ingest_gate eval-gram literal (bounded by contract — one
-    * sentence; the Decontam.collectEvalGrams bounded-eval precedent).
-    */
-  private def ingestEvalGrams(s: SparkSession): Seq[String] = {
-    import s.implicits._
-    ops.Decontam.collectEvalGrams(
-      Seq((0L, INGEST_EVAL_TEXT)).toDF("doc_id", "text"), "text", n = 3)
-  }
-
-  /** The substring-scrubbed corpus as a STANDING table (the bm25-index
-    * pattern): v7/v8/v9 all curate the same rewritten corpus, and the
-    * scrub's gram-ownership shuffle is the single most expensive stage of
-    * each — "write the scrubbed corpus, then curate the written table" is
-    * the production form the recipe docs prescribe, so the first caller
-    * builds it once per version of the documents files and everyone after
-    * reads parquet.
-    */
-  private def scrubbedCorpus(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    IndexTables.plain(s, IndexTables.ident("scrub_k8", docs))(
-      Dedup.substringScrub(docs, k = 8).select(col("doc_id"), col("text")))
-  }
-
-  /** Standing recipe-prefix decision tables (the scrubbedCorpus /
-    * qscored_v1 pattern): the gate→exact-dedup→SNM→lexical-decontam
-    * chain the v5-v9 recipes share, built ONCE per documents snapshot
-    * and read by every variant — the round-12 verdict's family fix
-    * (the five recipes re-ran the identical prefix per query). Three
-    * tables because the prefix input/stages differ: raw corpus
-    * (v5/v6), substring-scrubbed corpus (v7), scrubbed + semantic
-    * decontam with the surprisal REFIT on the sem survivors (v8/v9 —
-    * derived FROM the scrub table so the shared chain isn't paid
-    * twice). "_v1" pins the baked config (default gates, contamN = 3,
-    * %97 eval split, semMinCos = 0.85): any threshold change must bump
-    * it (the qscored_v1 rule). Oracles keep replaying the whole recipe
-    * from documents.text, so a drift in the prefix build flips all
-    * nine recipe rows red.
-    */
-  private def recipePrefixRaw(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    IndexTables.plain(s, IndexTables.ident("recipeprefix_raw_v1", docs))(
-      Curation.recipePrefixDecisions(docs.where(col("doc_id") % 97 =!= 0),
-        docs.where(col("doc_id") % 97 === 0), contamN = 3))
-  }
-
-  private def recipePrefixScrub(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    IndexTables.plain(s, IndexTables.ident("recipeprefix_scrub_v1", docs))(
-      Curation.recipePrefixDecisions(
-        scrubbedCorpus(s, d).where(col("doc_id") % 97 =!= 0),
-        docs.where(col("doc_id") % 97 === 0), contamN = 3))
-  }
-
-  private def recipePrefixScrubSem(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    IndexTables.plain(s,
-      IndexTables.ident("recipeprefix_scrubsem_v1", docs))(
-      Curation.recipePrefixSemExtend(recipePrefixScrub(s, d),
-        scrubbedCorpus(s, d).where(col("doc_id") % 97 =!= 0),
-        docs.where(col("doc_id") % 97 === 0), semMinCos = 0.85))
-  }
-
-  /** The learned unigram tokenizer as a STANDING model table (the
-    * scrubbedCorpus/bm25-index pattern): train once per documents files,
-    * every apply query — encode, doc stats — reads the model back instead
-    * of re-running EM. This is the production seam: a tokenizer is
-    * trained once per corpus snapshot and applied everywhere.
-    */
-  private def unigramModel(s: SparkSession, d: String): Seq[(String, Double)] = {
-    val docs = Tables.documents(s, d)
-    TextAnalysis.unigramModelOf(IndexTables.plain(s,
-      IndexTables.ident("unigram_v256", docs))(
-      TextAnalysis.unigramLearn(docs, vocabSize = 256, emIters = 2)))
-  }
-
-  /** DuckDB twin of [[asofMicrosFrames]] (epoch_us ≡ unix_micros after
-    * Tables.events' ns→µs truncation — both truncate toward zero).
-    */
-  private val ASOF_US_CTES: String =
-    "v AS (SELECT user_id, epoch_us(ts) AS ts, max(event_id) AS v_id " +
-      "FROM events WHERE event_type = 'view' GROUP BY 1, 2), " +
-      "p AS (SELECT user_id, epoch_us(ts) AS ts, event_id AS p_id " +
-      "FROM events WHERE event_type = 'purchase')"
-
-  /** The q_asof_join purchase/view frames with ts as BIGINT MICROS —
-    * shared by the merge_asof direction queries (exact integer distance
-    * arithmetic in both engines).
-    */
-  private def asofMicrosFrames(s: SparkSession, d: String)
-      : (DataFrame, DataFrame) = {
-    val ev = Tables.events(s, d)
-    val v = ev.where(col("event_type") === "view")
-      .groupBy(col("user_id"), unix_micros(col("ts").cast("timestamp")).as("ts"))
-      .agg(max("event_id").as("v_id"))
-    val p = ev.where(col("event_type") === "purchase")
-      .select(col("user_id"), unix_micros(col("ts").cast("timestamp")).as("ts"),
-        col("event_id").as("p_id"))
-    (p, v)
-  }
-
-  /** The fixed quality classifier's scores joined to the length weak
-    * label and the source group (the q_quality_fit convention) — the
-    * shared input of the classifier-eval family (q_threshold_sweep,
-    * q_auc, q_ap, q_clf_report, q_auc_boot, q_auc_group). STANDING
-    * (IndexTables.plain — the scrubbedCorpus / unigram_v256 precedent):
-    * the corpus is scored and joined ONCE per documents snapshot;
-    * every eval query and every bench pass after the first reads the
-    * materialized (doc_id, quality_score, keep, y, source) table
-    * instead of re-running the score+join chain — at 100 TB, eval
-    * metrics are recomputed far more often than the scorer changes, so
-    * the scored table is the artifact and the queries are
-    * dictionary-sized work on top of it.
-    */
-  private def qualityScoredLabeled(s: SparkSession, d: String): DataFrame =
-    // "_v1" is the scorer-version token (the unigram_v256 precedent):
-    // the ident otherwise keys only on the documents files, so a change
-    // to QUALITY_W, the keep threshold, or the y = n_chars >= 300 label
-    // would silently reuse a stale materialized table — bump the
-    // version with any scorer/label change
-    IndexTables.plain(s,
-      IndexTables.ident("qscored_v1", Tables.documents(s, d)))(
-      TextAnalysis.qualityClassifierScore(Tables.documents(s, d))
-        .join(Tables.documents(s, d).select(col("doc_id"), col("source"),
-          (col("n_chars") >= 300).cast("int").as("y")), "doc_id"))
-
-  /** The MT-eval pair corpus as a STANDING table (the
-    * qualityScoredLabeled precedent): ref = the token-joined text (so
-    * every metric shares the tokenizer's casing), cand = the q_bleu
-    * every-3rd-token-drop degradation, cand_sub = the q_ter
-    * substitute+drop degradation. The tokenize→degrade→rejoin chain
-    * used to run inside EVERY MT query; at 100 TB an eval-pair set is
-    * scored by many metrics per snapshot, so the pair corpus is the
-    * artifact — materialized once per documents snapshot, read by
-    * q_bleu / q_bleu_source / q_chrf / q_rouge / q_rouge2 / q_ter.
-    * Token-level metrics are unchanged by reading ref from the
-    * rejoined text (toks ∘ array_join ∘ toks ≡ toks — the q_chrf ref
-    * convention, now shared); the oracles keep replaying from
-    * documents.text directly, so any drift in the fixture build flips
-    * the rows red. "_v1" is the degradation-recipe version token (the
-    * qscored_v1 rule).
-    */
-  private def evalPairs(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    // kernel fan: the standing pair table is a small single-file parquet
-    // read locally (one-task scan), and every consumer is a row-pure metric
-    // kernel (BLEU/chrF/TER/ROUGE DPs) — the exact shape Par.fanOutKernel
-    // exists for; at scale the probe is a no-op (guide §2.2/§2.6)
-    ops.Par.fanOutKernel(IndexTables.plain(s,
-      IndexTables.ident("evalpairs_v1", docs)) {
-      val t = Core.tokensUni(col("text"))
-      val mut = transform(t, (x, i) =>
-        when((i + 1) % 3 === 0, lit("xx")).otherwise(x))
-      docs.select(col("doc_id"), col("source"),
-        array_join(t, " ").as("ref"),
-        array_join(filter(t, (_, i) => (i + 1) % 3 =!= 0), " ").as("cand"),
-        array_join(filter(mut, (_, i) => (i + 1) % 5 =!= 0), " ")
-          .as("cand_sub"))
-    })
-  }
-
-  /** Deterministic synthetic judge votes for q_bt_ratings: 32
-    * strength-ranked arms (lower id = stronger), one game per document,
-    * pairing and outcome keyed on doc_id residues (stronger arm wins
-    * when (doc_id·13) mod 7 < 4 — a 4/7 upset-prone judge), so the
-    * oracle rebuilds the exact game list with integer arithmetic.
-    */
-  private def btGames(docs: DataFrame): DataFrame = {
-    val a = col("doc_id") % 32
-    val b = (col("doc_id") * 3 + 1) % 32
-    val strongWins = (col("doc_id") * 13) % 7 < 4
-    docs.select(col("doc_id"), a.as("a"), b.as("b"), strongWins.as("sw"))
-      .where(col("a") =!= col("b"))
-      .select(
-        when(col("sw"), least(col("a"), col("b")))
-          .otherwise(greatest(col("a"), col("b"))).as("winner"),
-        when(col("sw"), greatest(col("a"), col("b")))
-          .otherwise(least(col("a"), col("b"))).as("loser"))
-  }
-
-  /** Deterministic URL synthesis for the web-provenance queries (the
-    * documents table carries no URL column): scheme/host case, public
-    * suffix, explicit default port, path id (doc_id % 50 — forces
-    * canonical collisions), trailing slash, tracking params, and fragment
-    * all keyed on doc_id residues so the oracle rebuilds the same URLs.
-    */
-  private def urlInject(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), col("n_chars"), concat(
-      when(col("doc_id") % 4 === 0, lit("HTTPS://WWW."))
-        .otherwise(lit("https://")),
-      col("source"),
-      when(col("doc_id") % 3 === 0, lit(".co.uk")).otherwise(lit(".org")),
-      when(col("doc_id") % 5 === 0, lit(":443")).otherwise(lit("")),
-      lit("/p/"), (col("doc_id") % 50).cast("string"),
-      when(col("doc_id") % 4 === 0, lit("/")).otherwise(lit("")),
-      when(col("doc_id") % 2 === 0, lit("?utm_source=feed&b=2&a=1"))
-        .otherwise(lit("?b=2&a=1")),
-      when(col("doc_id") % 6 === 0, lit("#frag")).otherwise(lit("")))
-      .as("url"))
-
-  /** q_domain_cap / q_k_anon / q_l_diversity / q_code_signals shared
-    * constants (oracles interpolate these — the QUALITY_W convention).
-    */
-  private val DOMAIN_CAP = 8
-  private val K_ANON = 5
-  private val L_DIV = 5
-  private val CURRICULUM_STAGES = 4
-  private val BLOCKED_DOMAINS: Seq[String] =
-    Seq("src3.org", "src7.co.uk", "src11.org", "src19.co.uk")
-
-  /** q_domain_cap_incr's cap: sized ABOVE the ~10-doc base batches (most
-    * domains keep their whole base) so the increment's remaining quota
-    * is small but nonzero — the binding-at-the-margin case.
-    */
-  private val DOMAIN_CAP_INCR = 12
-
-  /** q_profile's audited columns (oracle interpolates the same list). */
-  private val PROFILE_COLS =
-    Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-  private val CODE_BLOCK =
-    "\nfunction f(x) {\n  // add one\n  var y = x + 1;\n  return y;\n}"
-
-  /** Sorted-neighborhood near-dup clusters for `d`, persisted build-once
-    * (threshold baked into the name) and shared by q_dedup_clusters and
-    * q_dedup_keep. The index is keyed on the documents files, so
-    * regenerating or editing the data in place rebuilds the clusters
-    * instead of serving stale ones to the oracle gate.
-    */
-  private def snmClusters(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    IndexTables.plain(s, IndexTables.ident("snm_clusters_t90", docs))(
-      Dedup.nearDupClusters(Dedup.sortedNeighborPairs(docs, threshold = 0.9)))
-  }
-
-  /** The standing BM25 (postings, corpus stats) over `d`'s documents; "pst1"
-    * tags the norm-in-posting schema so a pre-dl index is never reused.
-    */
-  private def bm25Index(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val docs = Tables.documents(s, d)
-    val name = IndexTables.ident("bm25pst1", docs)
-    (Retrieval.postingsIndex(docs, name), Retrieval.corpusStats(docs, name))
-  }
-
-  private def positionalIndex(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    Retrieval.positionalIndex(docs, IndexTables.ident("pospst1", docs))
-  }
-
-  private def ivfIndex(s: SparkSession, d: String): (Array[Array[Double]], DataFrame) = {
-    val emb = Tables.embeddings(s, d)
-    Similarity.ivfIndex(emb, 16, IndexTables.ident("ivf", emb))
-  }
-
-  private def lshIndex(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    Similarity.lshIndex(emb, dim = 64, IndexTables.ident("lsh", emb))
-  }
-
-  /** The name of the standing winnow index of every doc but each 7th,
-    * built at each gram size in `ks`.
-    */
-  private def winnowSnapshot(s: SparkSession, d: String, ks: Int*): String = {
-    val docs = Tables.documents(s, d)
-    val name = IndexTables.ident("winsnap", docs)
-    ks.foreach(k => Dedup.winnowIndex(docs.where(col("doc_id") % 7 =!= 0), name, k = k))
-    name
-  }
-
-  /** q_ingest_gate's (increment, standing line-frequency index, standing
-    * cleaned-text fingerprints); the snapshot is doc_id % 10 < 8.
-    */
-  private def ingestGate(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
-    val docs = ingestInject(Tables.documents(s, d))
-    val base = docs.where(col("doc_id") % 10 < 8)
-    val idx = Dedup.lineFreqIndex(base, IndexTables.ident("ingate_lf", base))
-    val fps = IndexTables.plain(s, IndexTables.ident("ingate_fp", base))(
-      ops.Scrub.scrubPii(Dedup.boilerplateScrub(base, minDocs = 3))
-        .select(md5(col("text")).as("fp")).distinct())
-    (docs.where(col("doc_id") % 10 >= 8), idx, fps)
-  }
-
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, Q] = Map(
-    // ---- core transforms & keyed aggregation (§2.3-2.4) ----
-    "q_keyed_count" -> ((s, d) => Core.keyedCount(Tables.events(s, d), "user_id")),
-    "q_keyed_sum" -> ((s, d) => Core.keyedSum(Tables.events(s, d), "user_id", "value")),
-    "q_fizzbuzz" -> ((s, _) => Core.fizzbuzz(s, 100)),
-    "q_map_dup_even" -> ((s, _) => Core.mapDuplicateFilterEven(s, 4)),
-    "q_word_count" -> ((s, d) => Core.wordCount(Tables.documents(s, d), "text")),
-    "q_expand_qty" -> ((s, d) => Core.expandByQuantity(Tables.lineitem(s, d), "l_returnflag", "l_linenumber")),
-    "q_pricing_summary" -> ((s, d) => Core.pricingSummary(Tables.lineitem(s, d))),
-    "q_charge" -> ((s, d) => Core.chargePerLine(Tables.lineitem(s, d))),
-    // ---- event-time windows (§2.5-2.6) ----
-    "q_window_tumbling" -> ((s, d) =>
-      Windowing.tumblingCount(Tables.events(s, d), "ts", "1 hour", col("event_type"))),
-    "q_window_sliding" -> ((s, d) =>
-      Windowing.slidingCount(Tables.events(s, d), "ts", "1 hour", "15 minutes")),
-    "q_window_session" -> ((s, d) =>
-      Windowing.sessionAgg(Tables.events(s, d), "ts", "30 minutes", "user_id")),
-    "q_window_topk" -> ((s, d) =>
-      Windowing.busiestWindow(Tables.events(s, d), "ts", "1 hour", "15 minutes",
-        col("event_type") === "click")),
-    // ---- multi-stream: union / window join / interval join (§2.8) ----
-    "q_union" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      Joins.unionCounts(
-        ev.where(col("event_type") === "click").select("user_id", "event_type"),
-        ev.where(col("event_type") === "purchase").select("user_id", "event_type"),
-        "event_type")
-    }),
-    "q_window_join" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      Joins.windowJoinCount(
-        ev.where(col("event_type") === "view"),
-        ev.where(col("event_type") === "purchase"),
-        "user_id", "ts", "1 hour")
-    }),
-    "q_interval_join" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      Joins.intervalJoin(
-        ev.where(col("event_type") === "click"),
-        ev.where(col("event_type") === "error"),
-        "user_id", "ts", "event_id", "2 MINUTES")
-    }),
-    // as-of join: each purchase attributed to the user's most recent view
-    // at-or-before it (right side pre-aggregated per (user, ts) so the
-    // boundary match is deterministic in both engines)
-    "q_asof_join" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      val v = ev.where(col("event_type") === "view")
-        .groupBy("user_id", "ts").agg(max("event_id").as("v_id"))
-      val p = ev.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("event_id").as("p_id"))
-      Joins.asofJoin(p, v, "user_id", "ts", "p_id", "v_id")
-        .select("p_id", "v_id")
-    }),
-    // merge_asof directions: forward (earliest view at-or-after each
-    // purchase) and nearest-with-tolerance (closer of the two sides,
-    // tie → backward, within 6 hours). Timestamps ride as BIGINT
-    // micros so the distance arithmetic is exact integer in BOTH
-    // engines — no double-seconds ulp at the tie boundary
-    "q_asof_fwd" -> ((s, d) => {
-      val (p, v) = asofMicrosFrames(s, d)
-      Joins.asofJoinDir(p, v, "user_id", "ts", "p_id", "v_id",
-        direction = "forward").select("p_id", "v_id")
-    }),
-    "q_asof_near" -> ((s, d) => {
-      val (p, v) = asofMicrosFrames(s, d)
-      Joins.asofJoinDir(p, v, "user_id", "ts", "p_id", "v_id",
-        direction = "nearest", toleranceSec = Some(21600e6))
-        .select("p_id", "v_id")
-    }),
-    // point-in-interval lookup: price bands (overlapping on purpose) over
-    // lineitem via BIN-EXPANSION equi-join — a bare pt BETWEEN lo AND hi
-    // join plans as BroadcastNestedLoopJoin (facts × dims work); expanding
-    // each interval to its covered fixed-width bins makes it a hash join
-    // on the bin id. binWidth 8000 ⇒ each band covers 3–7 bins
-    "q_range_lookup" -> ((s, d) => {
-      import s.implicits._
-      val bands = RANGE_BANDS.toDF("band_id", "lo", "hi")
-      Joins.rangeLookup(
-          Tables.lineitem(s, d).select(col("l_extendedprice").as("price")),
-          bands, "price", "lo", "hi", binWidth = 8000.0)
-        .groupBy("band_id")
-        .agg(count(lit(1)).as("n"), round(sum("price"), 2).as("total_price"))
-    }),
-    "q_join_revenue" -> ((s, d) => {
-      val li = Tables.lineitem(s, d)
-      val o = Tables.orders(s, d)
-      val c = Tables.customer(s, d)
-      val n = Tables.nation(s, d)
-      // dims are broadcast: only lineitem⋈orders shuffles at scale
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(c), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-          .as("revenue"))
-    }),
-    // TPC-H Q5-shaped: revenue by supplier nation within one region, the
-    // classic snowflake join — every dimension (region→nation→supplier)
-    // broadcasts; only lineitem⋈orders shuffles at scale
-    "q_local_supplier_volume" -> ((s, d) => {
-      val li = Tables.lineitem(s, d)
-      val o = Tables.orders(s, d)
-      val su = Tables.supplier(s, d)
-      val n = Tables.nation(s, d)
-      val r = Tables.region(s, d)
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(su), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(r.where(col("r_name") === "ASIA")),
-          col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("n_name"))
-        .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-          .as("revenue"))
-    }),
-    // part-dimension stats (TPC-H Q16 family): distinct suppliers per
-    // brand/type bucket via the part⋈lineitem bridge
-    "q_parts_by_brand" -> ((s, d) =>
-      Tables.lineitem(s, d)
-        .join(broadcast(Tables.part(s, d)), col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"))
-        .agg(countDistinct(col("l_suppkey")).as("n_suppliers"),
-          round(sum(col("l_quantity")), 2).as("total_qty"))),
-    // ---- semi/anti joins and pivot (OLAP breadth; Catalyst-native) ----
-    "q_semi_join" -> ((s, d) =>
-      Tables.customer(s, d)
-        .join(Tables.orders(s, d), col("c_custkey") === col("o_custkey"), "left_semi")
-        .select("c_custkey", "c_name")),
-    "q_anti_join" -> ((s, d) =>
-      // customers with no high-value order (non-empty at every SF)
-      Tables.customer(s, d)
-        .join(Tables.orders(s, d).where(col("o_totalprice") > 400000),
-          col("c_custkey") === col("o_custkey"), "left_anti")
-        .select("c_custkey", "c_name")),
-    "q_pivot" -> ((s, d) =>
-      Tables.events(s, d).groupBy("user_id")
-        .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
-        .count().na.fill(0L)),
-    // ---- evictor + keyed-state batch analogues (§2.7 G6, §2.10 X2/X3) ----
-    "q_keep_last3" -> ((s, d) =>
-      Evictors.keepLastN(Tables.events(s, d), "user_id", "ts", "event_id", 3)),
-    // count-evictor in Flink's evictBefore position: the window function
-    // only sees the surviving (last 3) elements per window
-    "q_evict_before" -> ((s, d) =>
-      Evictors.windowCountWithEvictor(Tables.events(s, d), "ts", "event_id",
-        "1 hour", 3, evictBefore = true)),
-    "q_topn_per_key" -> ((s, d) =>
-      Evictors.topNPerKey(Tables.events(s, d), "user_id", "value", "event_id", 2)),
-    "q_list_state" -> ((s, d) =>
-      Evictors.listStatePerKey(Tables.events(s, d), "user_id", "event_id")),
-    "q_map_state" -> ((s, d) =>
-      Evictors.mapStatePerKey(Tables.events(s, d), "user_id", "event_type")),
-    // ---- dedup (exact + sketch-based) ----
-    "q_dedup_exact" -> ((s, d) => Dedup.exactDedupStats(Tables.documents(s, d))),
-    "q_fingerprint" -> ((s, d) => TextAnalysis.fingerprints(Tables.documents(s, d))),
-    // cross-source duplication-leakage matrix: which sources share exact
-    // content (off-diagonal) and which duplicate internally (diagonal)
-    "q_dup_matrix" -> ((s, d) =>
-      Dedup.sourceDupMatrix(Tables.documents(s, d))),
-    // corpus bits-per-token / bits-per-byte under its own unigram LM —
-    // the compression-difficulty dashboard tracked per curation stage
-    "q_bpb" -> ((s, d) => TextAnalysis.bitsPerByte(Tables.documents(s, d))),
-    // MinHash-LSH near-dup pairs off the standing banded index. Oracled
-    // since round 15 via SketchPins (band groups + signatures pinned at
-    // sf0.01; pair-join/eq-count/threshold replay mechanically)
-    "q_minhash_lsh" -> ((s, d) =>
-      Dedup.minHashLshPairs(Tables.documents(s, d), threshold = 0.2,
-        indexName = Some(
-          IndexTables.ident("minhash", Tables.documents(s, d))))),
-    // 64-bit SimHash per doc — oracled since round 15 via the full
-    // signature pin (the sketch IS the output; live kernel drift -> red)
-    "q_simhash" -> ((s, d) => Dedup.simHash(Tables.documents(s, d))),
-    "q_sorted_dedup" -> ((s, d) =>
-      Dedup.sortedNeighborPairs(Tables.documents(s, d), threshold = 0.9)),
-    // price the detector before the 100 TB run: sorted-neighbor pairs
-    // scored against exact-fingerprint truth — dup-class recall is what
-    // the blocking strategy trades away
-    "q_dedup_eval" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      Dedup.detectorEval(docs,
-        Dedup.sortedNeighborPairs(docs, threshold = 0.9))
-    }),
-    "q_ngram_jaccard" -> ((s, d) => {
-      // deterministic candidate set: all pairs among the 20 lowest doc_ids
-      val small = Tables.documents(s, d).where(col("doc_id") < 20)
-      val ids = small.select(col("doc_id"))
-      val pairs = ids.select(col("doc_id").as("a_id"))
-        .join(ids.select(col("doc_id").as("b_id")), col("a_id") < col("b_id"))
-      Dedup.ngramJaccard(small, pairs)
-    }),
-    // asymmetric containment (quote/subset detection): 15-token quotes of
-    // docs 0-9 vs their sources (contained) and off-by-one controls (not)
-    "q_containment" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val quotes = docs.where(col("doc_id") < 10).select(
-        (col("doc_id") + 100000L).as("doc_id"),
-        array_join(slice(Core.tokensUni(col("text")), 1, 15), " ").as("text"))
-      val corpus = docs.select(col("doc_id"), col("text")).unionByName(quotes)
-      val cands = docs.where(col("doc_id") < 10).select(
-          (col("doc_id") + 100000L).as("a_id"), col("doc_id").as("b_id"))
-        .unionByName(docs.where(col("doc_id") < 9).select(
-          (col("doc_id") + 100000L).as("a_id"),
-          (col("doc_id") + 1L).as("b_id")))
-      Dedup.ngramContainment(corpus, cands, threshold = 0.9)
-    }),
-    // ---- text analysis ----
-    "q_token_stats" -> ((s, d) => TextAnalysis.tokenStats(Tables.documents(s, d))),
-    // power-of-two length histogram: the seqLen / truncation decision input
-    "q_token_hist" -> ((s, d) =>
-      TextAnalysis.tokenLengthHistogram(Tables.documents(s, d))),
-    "q_bpe_stats" -> ((s, d) => TextAnalysis.bpeTokenStats(Tables.documents(s, d))),
-    // per-source tokenizer fit: pieces, char-fallback pieces, OOV words
-    "q_vocab_coverage" -> ((s, d) =>
-      TextAnalysis.vocabCoverage(Tables.documents(s, d))),
-    // SymSpell-style vocab typo normalization: each word with its most
-    // frequent verified edit-distance-1 neighbor (self when none
-    // decisively stronger). The clean synthetic vocabulary has no 1-edit
-    // pairs, so typo'd "batch" variants are injected IN the query (the
-    // q_pii_scrub convention): deletion/insertion/substitution must
-    // remap, the transposition (2 edits) must stay its own canonical
-    "q_typo_clusters" -> ((s, d) =>
-      TextAnalysis.typoClusters(typoInjected(Tables.documents(s, d)))),
-    // the apply side: rewrite the injected corpus with its own learned
-    // mapping — every typo token lands on "batch", order preserved,
-    // untouched docs pass through with n_changed 0
-    "q_typo_apply" -> ((s, d) => {
-      val injected = typoInjected(Tables.documents(s, d))
-      TextAnalysis.typoNormalize(injected,
-        TextAnalysis.typoClusters(injected))
-    }),
-    "q_bpe_exact" -> ((s, d) => TextAnalysis.bpeExactStats(Tables.documents(s, d))),
-    // tokenizer APPLY: greedy longest-match segmentation pieces + vocab
-    // ids for every distinct word (the id-sequence feed for packing)
-    "q_bpe_encode" -> ((s, d) => TextAnalysis.bpeEncode(Tables.documents(s, d))),
-    // tokenizer TRAINING: learn 20 BPE merge rules from the corpus itself
-    // (freq-weighted pair argmax per iteration on the distinct-word
-    // dictionary). Iterative global argmax — not SQL-expressible live;
-    // oracled since round 15 via the OutputPins merge-decision pin
-    // (trainer drift flips red); parity also locked by PropertySpec
-    // against an independent sequential reference implementation
-    "q_bpe_learn" -> ((s, d) =>
-      TextAnalysis.bpeLearn(Tables.documents(s, d), nMerges = 20)),
-    // encode the corpus vocabulary under those LEARNED merges (train →
-    // apply round trip; pieces space-joined — the driver compare hashes
-    // scalar cells only)
-    "q_bpe_apply" -> ((s, d) => {
-      val m = TextAnalysis.bpeLearn(Tables.documents(s, d), nMerges = 20)
-        .orderBy("rank").collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq
-      TextAnalysis.bpeEncodeLearned(Tables.documents(s, d), m)
-        .select(col("word"), col("freq"),
-          concat_ws(" ", col("pieces")).as("pieces"), col("n_pieces"))
-    }),
-    // the OTHER learned tokenizer family: unigram-LM (SentencePiece)
-    // training via Viterbi-EM on the distinct-word dictionary. Iterative
-    // global re-estimation — not SQL-expressible live; oracled since
-    // round 15 via the OutputPins vocabulary pin (trainer drift flips
-    // red); parity also locked by PropertySpec against an independent
-    // sequential Viterbi reference
-    "q_unigram_learn" -> ((s, d) =>
-      TextAnalysis.unigramLearn(Tables.documents(s, d), vocabSize = 256,
-        emIters = 2)),
-    // SOFT encode under the standing model — the E-step posterior
-    // application (expected piece usage over ALL segmentations, the
-    // soft-label twin of q_unigram_encode's Viterbi one-best).
-    // ROUND-12 RECAST: this row previously ran the full-EM TRAINING
-    // loop (unigramLearnSoft — which remains in the library, exercised
-    // by PropertySpec's sequential full-EM parity; training stays
-    // represented by the exempt q_unigram_learn row); the APPLY half
-    // is mechanical DP arithmetic under a fixed model, so it is
-    // oracled off UNIGRAM_PINNED via the recursive-CTE
-    // forward/backward replay (the BPE_MERGES_PINNED doctrine — the
-    // live query still reads the trained standing model, so trainer
-    // drift flips the row red)
-    "q_unigram_soft" -> ((s, d) =>
-      TextAnalysis.unigramSoftEncode(Tables.documents(s, d),
-        unigramModel(s, d))),
-    // train → apply round trip under the learned unigram model (pieces
-    // space-joined — the driver compare hashes scalar cells only). The
-    // model comes from the STANDING trained artifact: train once per
-    // corpus snapshot, apply everywhere
-    "q_unigram_encode" -> ((s, d) => {
-      val m = unigramModel(s, d)
-      TextAnalysis.unigramEncodeLearned(Tables.documents(s, d), m)
-        .select(col("word"), col("freq"),
-          concat_ws(" ", col("pieces")).as("pieces"), col("n_pieces"))
-    }),
-    // subword regularization: ONE seeded draw from P(seg)^alpha per
-    // distinct word under the standing model — the per-epoch tokenizer
-    // noise (seed = epoch). Deterministic per (word, seed) on md5-lane
-    // uniforms with a quantized DP (round 12), so the draw is oracled
-    // off UNIGRAM_PINNED: the DuckDB replay rebuilds the forward
-    // filter (q6 logsumexp cells) and the backward walk (integer
-    // micro-mass prefix sums against the same md5 uniform) exactly
-    "q_unigram_sample" -> ((s, d) =>
-      TextAnalysis.unigramSampleEncode(Tables.documents(s, d),
-          unigramModel(s, d), seed = 17L)
-        .select(col("word"), col("freq"),
-          concat_ws(" ", col("pieces")).as("pieces"), col("n_pieces"))),
-    // per-document token budget + fertility under the learned unigram
-    // model — stateless scan-stage (streams as-is); oracled off
-    // UNIGRAM_PINNED like the rest of the apply family
-    "q_unigram_stats" -> ((s, d) =>
-      TextAnalysis.unigramDocStats(Tables.documents(s, d), unigramModel(s, d))),
-    // tokenizer-efficiency by language: corpus fertility (ratio of
-    // sums) per lang under the standing unigram model — the vocab
-    // ablation table
-    "q_fertility_lang" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      TextAnalysis.unigramDocStats(docs, unigramModel(s, d))
-        .join(docs.select(col("doc_id"), col("lang")), "doc_id")
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum("n_words").cast("long").as("n_words"),
-          sum("n_pieces").cast("long").as("n_pieces"))
-        .withColumn("fertility", when(col("n_words") > 0,
-          round(col("n_pieces").cast("double") / col("n_words"), 4)))
-    }),
-    // the corpus-wide id stream: every token instance joined to the
-    // distinct-word dictionary, in (doc, token, piece) order
-    "q_token_ids" -> ((s, d) => TextAnalysis.tokenIds(Tables.documents(s, d))),
-    "q_quality" -> ((s, d) => TextAnalysis.qualityScores(Tables.documents(s, d))),
-    // one-row corpus health dashboard composing the scan-stage signals
-    "q_corpus_report" -> ((s, d) =>
-      TextAnalysis.corpusReport(Tables.documents(s, d))),
-    "q_quality_model" -> ((s, d) =>
-      TextAnalysis.qualityClassifierScore(Tables.documents(s, d))),
-    // ON-CLUSTER trained quality filter: full-batch logistic regression
-    // on the corpus's own weak length labels (3 q6-rounded GD steps,
-    // model-sized collects), then scored in the same job
-    "q_quality_fit" -> ((s, d) =>
-      TextAnalysis.qualityFitScore(Tables.documents(s, d))),
-    // operating-point sweep of the fixed quality classifier against the
-    // length weak label: confusion + P/R/F1 per threshold, all-integer
-    "q_threshold_sweep" -> ((s, d) =>
-      TextAnalysis.thresholdSweep(qualityScoredLabeled(s, d),
-        "quality_score", "y")),
-    // exact tie-aware ROC-AUC of the same scorer (Mann-Whitney form,
-    // distributed prefix sum over the score dictionary)
-    "q_auc" -> ((s, d) =>
-      TextAnalysis.aucScore(qualityScoredLabeled(s, d),
-        "quality_score", "y")),
-    // the monitoring path: the additive (_s, _np, _nn) score dictionary
-    // built from batch 1, MERGEd with batch 2 (doc_id parity split),
-    // exact AUC recomputed from the standing dictionary — contract:
-    // equals the full rebuild, so the oracle IS the q_auc replay (the
-    // q_covariance_incr precedent)
-    "q_auc_incr" -> ((s, d) => {
-      val scored = qualityScoredLabeled(s, d)
-      val dict1 = TextAnalysis.scoreDict(
-        scored.where(col("doc_id") % 2 === 0), "quality_score", "y")
-      TextAnalysis.aucFromDict(TextAnalysis.scoreDictMerge(dict1,
-        scored.where(col("doc_id") % 2 === 1), "quality_score", "y"))
-    }),
-    // exact step-wise average precision (PR-AUC) on the same dictionary
-    "q_ap" -> ((s, d) =>
-      TextAnalysis.apScore(qualityScoredLabeled(s, d),
-        "quality_score", "y")),
-    // one-row classifier scorecard (accuracy/Brier/log-loss)
-    "q_clf_report" -> ((s, d) =>
-      TextAnalysis.scoreReport(qualityScoredLabeled(s, d),
-        "quality_score", "y")),
-    // exact two-sample KS drift test: English vs non-English n_chars
-    "q_ks_drift" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      TextAnalysis.ksTest(
-        docs.where(col("lang") === "en").select(col("n_chars")),
-        docs.where(col("lang") =!= "en").select(col("n_chars")),
-        "n_chars")
-    }),
-    // Poisson-bootstrap CI for the AUC (100 deterministic md5 replicas,
-    // exact nearest-rank interval)
-    "q_auc_boot" -> ((s, d) =>
-      TextAnalysis.aucBootstrap(qualityScoredLabeled(s, d), "doc_id",
-        "quality_score", "y", replicas = 100)),
-    // multi-class Cohen's kappa between two deterministic 3-way judges
-    // (the q_fleiss panel's raters 0 and 1) — the two-judge categorical
-    // agreement gate beside the panel-level Fleiss
-    "q_kappa_multi" -> ((s, d) => {
-      def judge(j: Int) =
-        (((col("doc_id") % (j + 2)) + (col("doc_id") % 3)) % 3).cast("int")
-      TextAnalysis.cohenKappaMulti(
-        Tables.documents(s, d).select(judge(0).as("a"), judge(1).as("b")),
-        "a", "b")
-    }),
-    // McNemar on paired binary decisions: the trained classifier's keep
-    // flag vs the n_chars >= 500 heuristic against the weak label —
-    // only discordant pairs carry signal
-    "q_mcnemar" -> ((s, d) => {
-      val scored = qualityScoredLabeled(s, d)
-        .join(Tables.documents(s, d).select(col("doc_id"), col("n_chars")),
-          "doc_id")
-      TextAnalysis.mcnemarTest(
-        scored.select(col("y"), col("keep").as("a_pred"),
-          (col("n_chars") >= 500).cast("int").as("b_pred")),
-        "y", "a_pred", "b_pred")
-    }),
-    // paired-bootstrap system comparison: per-doc Brier complement of
-    // the trained-weights classifier (A) vs the min(1, n_chars/1000)
-    // length heuristic (B) against the same weak label — one shared
-    // draw per (doc, replica), so item difficulty cancels in Δ
-    "q_sys_compare" -> ((s, d) => {
-      val scored = qualityScoredLabeled(s, d)
-        .join(Tables.documents(s, d).select(col("doc_id"), col("n_chars")),
-          "doc_id")
-      val heur = least(lit(1.0), col("n_chars") / 1000.0)
-      TextAnalysis.pairedBootstrap(
-        scored.select(col("doc_id"),
-          (lit(1.0) - (col("quality_score") - col("y")) *
-            (col("quality_score") - col("y"))).as("m_a"),
-          (lit(1.0) - (heur - col("y")) * (heur - col("y"))).as("m_b")),
-        "doc_id", "m_a", "m_b")
-    }),
-    // paired sign-flip permutation significance over the SAME per-doc
-    // (m_a, m_b) frame as q_sys_compare: deterministic md5-lane coins,
-    // two-sided add-one p — the hypothesis-test complement of the
-    // bootstrap CI
-    "q_perm_test" -> ((s, d) => {
-      val scored = qualityScoredLabeled(s, d)
-        .join(Tables.documents(s, d).select(col("doc_id"), col("n_chars")),
-          "doc_id")
-      val heur = least(lit(1.0), col("n_chars") / 1000.0)
-      TextAnalysis.permTestPaired(
-        scored.select(col("doc_id"),
-          (lit(1.0) - (col("quality_score") - col("y")) *
-            (col("quality_score") - col("y"))).as("m_a"),
-          (lit(1.0) - (heur - col("y")) * (heur - col("y"))).as("m_b")),
-        "doc_id", "m_a", "m_b")
-    }),
-    // the fairness cut: exact AUC per source, off the same standing
-    // scored table as the rest of the eval family
-    "q_auc_group" -> ((s, d) =>
-      TextAnalysis.aucByGroup(qualityScoredLabeled(s, d),
-        "source", "quality_score", "y")),
-    // NFC canonicalization: the synthetic corpus is pure ASCII (NFC
-    // identity), so every 13th doc gets a decomposed-accent + double-space
-    // suffix injected IN the query (chr() codepoints in the oracle SQL) —
-    // the composition path is then hash-validated, not just spec'd
-    "q_normalize" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val injected = docs.select(col("doc_id"),
-        when(col("doc_id") % 13 === 0,
-          concat(col("text"), lit(" cafe\u0301 A\u030Abc  end")))
-          .otherwise(col("text")).as("text"))
-      TextAnalysis.normalizeText(injected)
-    }),
-    "q_repetition" -> ((s, d) => TextAnalysis.repetitionScores(Tables.documents(s, d))),
-    // DEFLATE is not available in DuckDB SQL → the 500 per-doc ratios
-    // are OutputPins literals since round 15 (kernel drift flips red);
-    // accuracy asserted against known-compressibility fixtures in
-    // TextAnalysisSpec
-    "q_compression" -> ((s, d) => TextAnalysis.compressionScores(Tables.documents(s, d))),
-    "q_surprisal" -> ((s, d) => TextAnalysis.surprisalScores(Tables.documents(s, d))),
-    // fixed-memory surprisal: unigram counts served from a 4×64
-    // count-min sketch (width 64 forces real collisions on the 31-word
-    // vocab — the one-sided underestimate of rarity is the point)
-    "q_surprisal_cms" -> ((s, d) =>
-      TextAnalysis.surprisalScoresSketch(Tables.documents(s, d),
-        depth = 4, width = 64)),
-    // perplexity-bucket mixing: quintile buckets over the unigram
-    // surprisal, keep-rate falling with weirdness (the perplexity-filter
-    // recipe as one declarative decision pass)
-    "q_ppl_mix" -> ((s, d) =>
-      Sampling.perplexityMix(
-        TextAnalysis.surprisalScores(Tables.documents(s, d))
-          .select(col("doc_id"), col("avg_surprisal")),
-        "doc_id", "avg_surprisal", PPL_RATES)),
-    "q_surprisal2" -> ((s, d) => TextAnalysis.surprisalScoresBigram(Tables.documents(s, d))),
-    // stupid-backoff bigram LM served from a TRAIN split (even doc_ids):
-    // held-out docs hit unseen bigrams, so the backoff branch really fires
-    "q_surprisal_bo" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      TextAnalysis.surprisalScoresBackoff(
-        docs.where(col("doc_id") % 2 === 0), docs)
-    }),
-    "q_lang_id" -> ((s, d) => TextAnalysis.langId(Tables.documents(s, d))),
-    "q_lang_confusion" -> ((s, d) =>
-      TextAnalysis.langConfusion(Tables.documents(s, d))),
-    // script/charset composition + code-switching flag over injected
-    // CJK (every 4th doc) and Cyrillic (every 6th) segments — the
-    // synthetic corpus is pure ASCII, so the mix needs structure
-    "q_script_mix" -> ((s, d) =>
-      TextAnalysis.scriptMix(Tables.documents(s, d).select(col("doc_id"),
-        concat(col("text"),
-          when(col("doc_id") % 4 === 0, lit(" 机器学习模型训练数据"))
-            .otherwise(lit("")),
-          when(col("doc_id") % 6 === 0, lit(" обучение моделей данных"))
-            .otherwise(lit(""))).as("text")))),
-    "q_tfidf" -> ((s, d) => TextAnalysis.tfIdfTopTerms(Tables.documents(s, d), 3)),
-    // k-means cell occupancy over the IVF quantizer (clustering summary);
-    // probes the SAME persisted index as q_ivf_topk — centroids trained and
-    // assignment written once, and the groupBy("cell") rides the bucketing
-    // (no Exchange)
-    "q_cluster_sizes" -> ((s, d) => {
-      val (_, assigned) = ivfIndex(s, d)
-      assigned.groupBy("cell").count().withColumnRenamed("count", "cnt")
-    }),
-    // ---- custom Aggregator through the SQL-visible udaf() path (§2.11 A5) ----
-    "q_custom_agg" -> ((s, d) => {
-      val mean = udaf(new graft.agg.Aggregators.MeanAggregator[Double](identity),
-        org.apache.spark.sql.Encoders.scalaDouble)
-      Tables.events(s, d).groupBy("event_type")
-        .agg(round(mean(col("value")), 4).as("mean_v"),
-          count(lit(1)).as("cnt"))
-    }),
-    // ---- deterministic sampling (hash-based: retry-stable, engine-
-    // reproducible, pushed down to the scan — no RNG state) ----
-    "q_hash_sample" -> ((s, d) =>
-      Sampling.hashSample(Tables.documents(s, d), "doc_id", 0.1)
-        .select("doc_id", "lang")),
-    "q_stratified_sample" -> ((s, d) =>
-      Sampling.stratifiedHashSample(Tables.documents(s, d), "lang", "doc_id",
-        Map("en" -> 0.5, "de" -> 0.25), defaultRate = 0.05)
-        .groupBy("lang").agg(count(lit(1)).as("cnt"))),
-    "q_hash_split" -> ((s, d) =>
-      Sampling.hashSplit(Tables.documents(s, d), "doc_id", 0.8, 0.1)
-        .groupBy("split").agg(count(lit(1)).as("cnt"))),
-    // exact-k weighted without-replacement draw (A-ES exponential race):
-    // 20 docs per source, length-weighted — the "exactly k, prefer long
-    // docs, reproducibly" quota form next to the fraction samplers
-    "q_weighted_sample" -> ((s, d) =>
-      Sampling.weightedSample(Tables.documents(s, d), "source", "doc_id",
-        "n_chars", k = 20)),
-    // importance resampling: draw 100 non-English docs whose length
-    // histogram tracks the English reference — the q_drift fix, composed
-    // from the stored bucketCounts artifact and the A-ES race
-    "q_resample" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val edges = Seq(150.0, 250.0, 350.0, 450.0)
-      Sampling.matchDistribution(docs.where(col("lang") =!= "en"),
-        TextAnalysis.bucketCounts(docs.where(col("lang") === "en"),
-          "n_chars", edges),
-        "n_chars", edges, k = 100, idCol = "doc_id")
-    }),
-    // near-dup clusters: connected components over the sorted-neighborhood
-    // candidate pairs (oracled via DuckDB's recursive CTE). Persisted like
-    // any index — a dedup DECISION is a reusable artifact in a real
-    // pipeline — and probed by q_dedup_keep instead of re-running
-    // candidate generation + clustering.
-    "q_dedup_clusters" -> ((s, d) => snmClusters(s, d)),
-    // the MERGE step: one survivor per near-dup cluster by QUALITY
-    // (argmax logit, tie -> lowest id), singletons keep themselves
-    "q_dedup_merge" -> ((s, d) =>
-      Dedup.canonicalPerCluster(Tables.documents(s, d), snmClusters(s, d))),
-    // C4-style cleaning pipeline: quality filters → exact dedup → report
-    "q_clean_corpus" -> ((s, d) =>
-      Curation.cleanCorpusStats(Tables.documents(s, d))),
-    // v2: per-source length thresholds + language-agreement gate (drop
-    // docs whose predicted language disagrees with the label)
-    "q_clean_corpus_v2" -> ((s, d) =>
-      Curation.cleanCorpusV2Stats(Tables.documents(s, d),
-        minTokensBySource = Map("src0" -> 60, "src1" -> 40))),
-    // v3: the COMPLETE C4 recipe — quality gates → exact dedup → SNM
-    // near-dup cluster drop → span dedup — reported as the per-stage
-    // attrition counts a data team reads after a cleaning run
-    "q_clean_corpus_v3" -> ((s, d) =>
-      Curation.cleanCorpusV3Stats(Tables.documents(s, d))),
-    // sub-document span dedup: remove k-token spans duplicated across (or
-    // within) documents, keeping the lowest (doc_id, offset) owner, and
-    // reconstruct each document's surviving text
-    "q_span_dedup" -> ((s, d) =>
-      Dedup.spanDedup(Tables.documents(s, d), spanTokens = 20)),
-    // EXACT duplicated-substring removal at 8-gram resolution (Lee et al.
-    // 2107.06499, relational form): first occurrence of every >=8-token
-    // shared run survives, every later copy is scrubbed in place —
-    // alignment-free, unlike the fixed-grid q_span_dedup
-    "q_substring_scrub" -> ((s, d) =>
-      Dedup.substringScrub(Tables.documents(s, d), k = 8)),
-    // INCREMENTAL substring scrub: base corpus owns its grams in a
-    // standing bucketed index; the increment is rewritten against
-    // index ∪ own lower occurrences with batch-identical verdicts
-    "q_substring_incr" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val base = docs.where(col("doc_id") % 10 < 8)
-      val idx = Dedup.substringIndex(base, IndexTables.ident("substr", base))
-      Dedup.substringScrubApply(docs.where(col("doc_id") % 10 >= 8), idx)
-    }),
-    // what did the scrub actually cost each source? per-source token
-    // removal telemetry — the decide-before-you-train report
-    "q_scrub_report" -> ((s, d) =>
-      Dedup.substringScrub(Tables.documents(s, d), k = 8,
-          carry = Seq("source"))
-        .groupBy("source").agg(
-          count(lit(1)).as("n_docs"),
-          sum("n_tokens").as("tokens_before"),
-          sum("n_kept").as("tokens_after"),
-          round(lit(1.0) - sum("n_kept") / sum("n_tokens"), 4)
-            .as("removed_frac"))),
-    // the full dedup decision: clusters → keep lowest id per cluster +
-    // all unpaired docs; per-language survivor counts
-    "q_dedup_keep" -> ((s, d) =>
-      Tables.documents(s, d)
-        .join(snmClusters(s, d).where(col("doc_id") =!= col("cluster_id"))
-          .select("doc_id"), Seq("doc_id"), "left_anti")
-        .groupBy("lang").agg(count(lit(1)).as("n_kept"))),
-    // training-shard assembly: greedy per-partition token-budget packing
-    // (deterministic for fixed parts). Oracled since round 15: only the
-    // murmur3 partition routing is pinned (OutputPins.packPid); the
-    // greedy packing replays as a pid-partitioned recursive CTE
-    "q_pack_shards" -> ((s, d) =>
-      Packing.packByTokenBudget(Tables.documents(s, d), budget = 4096, parts = 8)),
-    // delivery-manifest summary: range-clustered write + distributed
-    // per-file manifest, verified against corpus facts (file names/hashes
-    // are write-specific; the strong per-file assertions live in
-    // SinksRichSpec — here the oracle pins file count, row conservation,
-    // and zero overlapping key ranges)
-    // compaction planning over a virtual manifest (per-source byte
-    // totals — physical parquet sizes are encoder-specific, so the
-    // oracle-checked plan runs on data-derived sizes; production feeds
-    // shardManifest file_bytes through the same planner)
-    "q_compaction" -> ((s, d) => {
-      val vm = Tables.documents(s, d).groupBy("source")
-        .agg(sum(col("n_chars")).as("bytes"))
-      Sinks.compactionPlan(vm, "bytes", "source", target = 15000L)
-    }),
-    "q_shard_manifest" -> ((s, d) => {
-      val dir = "/tmp/graft_shard_manifest/" + d.replaceAll("[^A-Za-z0-9]", "_")
-      Sinks.writeRangeClustered(Tables.documents(s, d), dir, nFiles = 4,
-        clusterCols = Seq("doc_id"))
-      // materialize the nFiles-row manifest once: both aggregates below
-      // derive from it, and referencing the aggregate subtree on both
-      // crossJoin sides would re-scan + re-hash the written files twice
-      // (the q_heavy_hitters lesson)
-      val m = Sinks.shardManifest(s, dir, Seq("doc_id")).localCheckpoint()
-      // overlap audit as a range self-join on the nFiles-row frame, not a
-      // lag over Window.orderBy: the unpartitioned window was harmless on
-      // 4 rows but spammed "No Partition Defined" WARNs into every bench
-      // log, indistinguishable from a real single-partition collapse when
-      // auditing. The pairwise interval test is also the STRONGER
-      // invariant (catches a range containing a non-adjacent one, which
-      // adjacent-only lag misses); both count 0 on a correct write.
-      val a = m.select(col("file").as("fa"), col("min_doc_id").as("amin"),
-        col("max_doc_id").as("amax"))
-      val b = m.select(col("file").as("fb"), col("min_doc_id").as("bmin"),
-        col("max_doc_id").as("bmax"))
-      val ov = a.join(b, col("fa") < col("fb") &&
-          col("amin") <= col("bmax") && col("bmin") <= col("amax"))
-        .agg(count(lit(1)).as("n_overlaps"))
-      m.agg(countDistinct("file").as("n_files"),
-          sum("n_rows").as("total_rows"))
-        .crossJoin(ov)
-    }),
-    // single-stream twin of q_pack_shards: parts=1 makes the greedy pass a
-    // global doc_id-ordered scan, which a DuckDB recursive CTE reproduces
-    // row for row — the VALIDATION variant for the packing algebra (the
-    // partition-local parts=8 form above stays the production query)
-    "q_pack_sorted" -> ((s, d) =>
-      Packing.packByTokenBudget(Tables.documents(s, d), budget = 4096, parts = 1)),
-    // ---- sketches: mergeable approx aggregates (the 100 TB form of
-    // distinct-count / quantiles — fixed-size state, one pass, map-side
-    // combinable; SketchSpec asserts accuracy vs the exact aggregates).
-    // q_hll oracled since round 15: exact counts replay live, the HLL++
-    // estimates are OutputPins literals (sketch drift flips red).
-    "q_hll" -> ((s, d) =>
-      Tables.events(s, d).groupBy("event_type")
-        .agg(approx_count_distinct(col("user_id")).as("approx_users"),
-          count(lit(1)).as("cnt"))),
-    // accuracy 50k keeps the sketch lossless (= exact discrete quantile)
-    // through sf0.1's ~20k-row groups while staying O(accuracy) in memory;
-    // beyond that it degrades gracefully to the rank-error guarantee
-    "q_quantile_sketch" -> ((s, d) =>
-      Tables.events(s, d).groupBy("event_type")
-        .agg(expr("approx_percentile(value, array(0.5, 0.9), 50000)").as("qs"))
-        .select(col("event_type"),
-          round(element_at(col("qs"), 1), 4).as("p50"),
-          round(element_at(col("qs"), 2), 4).as("p90"))),
-    // ---- OLAP extras: percentiles, rollup subtotals, running windows ----
-    "q_percentiles" -> ((s, d) =>
-      Tables.events(s, d).groupBy("event_type").agg(
-        round(expr("percentile(value, 0.5)"), 4).as("median"),
-        round(expr("percentile(value, 0.9)"), 4).as("p90"))),
-    // key-skew profile for a prospective shuffle key: hottest keys +
-    // exact group-size percentiles, measured BEFORE a join/groupBy
-    // commits to plain-hash vs salted vs broadcast
-    "q_skew_report" -> ((s, d) =>
-      Partitioning.keySkewReport(Tables.events(s, d), "user_id")),
-    "q_rollup" -> ((s, d) =>
-      Tables.lineitem(s, d)
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(round(sum(col("l_extendedprice")), 2).as("total"),
-          count(lit(1)).as("cnt"))),
-    "q_running_sum" -> ((s, d) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-      Tables.events(s, d).select(col("user_id"), col("event_id"),
-        round(sum(col("value")).over(w), 4).as("running"))
-    }),
-    // ---- JSON column extraction (§1.3: props via from_json) ----
-    "q_json_props" -> ((s, d) =>
-      Tables.events(s, d)
-        .select(col("event_type"),
-          from_json(col("props"), org.apache.spark.sql.types.StructType.fromDDL("k INT")).getField("k").as("k"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("cnt"), round(avg(col("k")), 4).as("avg_k"))),
-    // link-quality scoring for corpus curation: per-user page-transition
-    // graph (props.k as the page id) → weighted PageRank, 3 synchronous
-    // iterations with dangling-mass redistribution — deterministic, so
-    // the whole fixed-point prefix is oracled with unrolled CTEs
-    "q_pagerank" -> ((s, d) => {
-      val ev = Tables.events(s, d).select(col("user_id"), col("ts"),
-        col("event_id"),
-        from_json(col("props"),
-          org.apache.spark.sql.types.StructType.fromDDL("k INT"))
-          .getField("k").as("page"))
-      Graph.pageRank(
-        Graph.transitionEdges(ev, "page", "user_id", "ts", "event_id"),
-        iterations = 3)
-    }),
-    // ---- multimodal: binary blobs + stubbed decode + real byte features ----
-    "q_media_features" -> ((s, d) => {
-      // oracled since round 15: n_media/avg_width/bin0_total replay
-      // live; only the stub decoder's widths are pinned (exact sums)
-      val media = Tables.documents(s, d).select(
-        col("doc_id").as("media_id"), col("lang").as("kind"),
-        col("text").cast("binary").as("blob"),
-        struct(col("n_chars").cast("int").as("width"),
-          lit(0).as("height"), lit(0).as("sample_rate")).as("meta"))
-      Multimodal.mediaFeatures(media)
-    }),
-    // perceptual image near-dup: decodable synthetic PPMs (groups of 4,
-    // one ~8-byte perturbation per non-first copy) → dHash kernel →
-    // 4-band Hamming join (pigeonhole-exact recall at <= 3). Oracled
-    // since round 15: the dHash values are pinned (sf-independent —
-    // pure media_id hashing) and the whole banded join + bit_count
-    // rescore replays in DuckDB; brute-force parity in MultimodalSpec
-    "q_image_dedup" -> ((s, d) =>
-      Multimodal.imageNearDup(
-        Multimodal.syntheticPpm(s, 500).select(col("media_id"), col("blob")),
-        maxHamming = 3)),
-    // acoustic near-dup over the same banded core: REAL WAV decode →
-    // 64 energy-gradient bits (gain-invariant) → 4-band Hamming join.
-    // Oracled like q_image_dedup (pinned hashes, mechanical replay)
-    "q_audio_dedup" -> ((s, d) =>
-      Multimodal.audioNearDup(
-        Multimodal.syntheticWav(s, 500).select(col("media_id"), col("blob")),
-        maxHamming = 3)),
-    // interleaved image-text assembly (MMC4 shape): 100 synthetic image
-    // media assigned to docs 0-49 by id modulo, one <image> placeholder
-    // inserted per media at a deterministic token offset
-    "q_interleave" -> ((s, d) => {
-      val media = Multimodal.syntheticMedia(s, 300)
-        .where(col("kind") === "image")
-        .select((col("media_id") % 50).as("doc_id"), col("media_id"))
-      Multimodal.interleaveMedia(Tables.documents(s, d), media)
-    }),
-    // ---- similarity search ----
-    "q_cosine" -> ((s, d) => Similarity.cosineToQuery(Tables.embeddings(s, d), 0L)),
-    // Johnson–Lindenstrauss front for the ANN stack: deterministic
-    // ±1/√16 md5-parity matrix, 64 → 16 dims, flattened (the driver
-    // compare hashes scalar cells only)
-    "q_rand_proj" -> ((s, d) =>
-      Similarity.randomProject(Tables.embeddings(s, d), 64, 16)
-        .select(col("vec_id"),
-          posexplode(col("embedding")).as(Seq("dim_idx", "value")))
-        .select(col("vec_id"), col("dim_idx"),
-          round(col("value"), 4).as("value"))),
-    "q_nn" -> ((s, d) => Similarity.nearestNeighbour(Tables.embeddings(s, d))),
-    "q_lsh_pairs" -> ((s, d) =>
-      Similarity.lshCandidatePairs(lshIndex(s, d), minCos = -1.0)),
-    // scale-path NN default: LSH candidates → exact rescore → argmax.
-    // q_nn stays as the exact O(N²) verifier; DedupSimilaritySpec asserts
-    // recall ≥ 0.95 of this path against it.
-    "q_nn_lsh" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Similarity.lshNearestNeighbour(emb, dim = 64,
-        indexName = Some(IndexTables.ident("lsh_nn", emb)))
-    }),
-    // embedding-cosine near-dup dedup decision: LSH bucket candidates at
-    // cos >= 0.99 → connected components → keep lowest id per cluster.
-    // Probes the same persisted LSH index as q_lsh_pairs; oracled since
-    // round 13 (the seeded hyperplanes are plan literals the oracle
-    // replays with e0-exact doubles, then min-label recursion).
-    "q_embed_dedup" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val pairs = Similarity.lshCandidatePairs(lshIndex(s, d), minCos = 0.99)
-        .select("a_id", "b_id")
-      Dedup.dedupCorpus(emb.select(col("vec_id").as("doc_id")), pairs)
-        .agg(count(lit(1)).as("n_kept"))
-    }),
-    // SemDeDup with deterministic sign-bit blocking — the fully
-    // relational twin of q_embed_dedup's seeded-LSH decision.
-    // minCos=0.3 because the synthetic embeddings are quasi-orthogonal
-    // (median true-NN cos 0.41, NOTES round-3): the production 0.95
-    // default flags nothing here, 0.3 exercises both verdicts
-    "q_semdedup" -> ((s, d) =>
-      Similarity.semanticDedupFlags(Tables.embeddings(s, d),
-        minCos = 0.3, signDims = 6)),
-    // BOUNDED semdedup under an ADVERSARIAL collapsed-block corpus (the
-    // round-14 verdict #1): 25 exact replicas of each vec_id < 8 are
-    // unioned in, so (a) natural argmax blocks over 650 vectors exceed
-    // maxBlock=16 and get level-2 refinement, and (b) the replica
-    // families stay hot through every level (identical |component|
-    // ranks) and take the O(leaf) anchor arm — all three cost paths of
-    // semanticDedupFlagsBounded exercised and hash-matched by a full
-    // relational DuckDB replay (refine + occupancy + anchor)
-    "q_semdedup_hot" -> ((s, d) => {
-      val e0 = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-      val rep = e0.where(col("vec_id") < 8)
-        .select(col("vec_id"), col("embedding"),
-          explode(sequence(lit(1L), lit(25L))).as("_k"))
-        .select((col("vec_id") + lit(10000L) * col("_k")).as("vec_id"),
-          col("embedding"))
-      Similarity.semanticDedupFlagsBounded(e0.unionByName(rep),
-        minCos = 0.3, maxBlock = 16, levels = 2)
-    }),
-    // incremental BOUNDED semdedup: the snapshot is a boundedBlocked
-    // build of the 500 base vectors (maxBlock 16 → some leaves refined);
-    // the increment is 25 replicas of each vec_id < 8 (their leaves
-    // BECOME overfull → anchor arm) plus 10 re-idded singles (land in
-    // cold leaves → exact lower-pairs probe vs snapshot ∪ increment).
-    // Routing replays the snapshot's refinement decisions; the oracle
-    // replays the whole incremental semantics relationally
-    "q_semdedup_hot_incr" -> ((s, d) => {
-      val e0 = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-      val snap = Similarity.boundedBlocked(e0, maxBlock = 16, levels = 2)
-      val rep = e0.where(col("vec_id") < 8)
-        .select(col("vec_id"), col("embedding"),
-          explode(sequence(lit(1L), lit(25L))).as("_k"))
-        .select((col("vec_id") + lit(10000L) * col("_k")).as("vec_id"),
-          col("embedding"))
-      val singles = e0.where(col("vec_id") >= 490)
-        .select((col("vec_id") + lit(20000L)).as("vec_id"), col("embedding"))
-      Similarity.semanticDedupFlagsBoundedApply(snap,
-        rep.unionByName(singles), minCos = 0.3, maxBlock = 16, levels = 2)
-    }),
-    "q_ivf_topk" -> ((s, d) => {
-      // nprobe = k probes every cell, so IVF must reproduce exact top-10 —
-      // the oracle then validates the whole index pipeline end-to-end
-      val (cents, assigned) = ivfIndex(s, d)
-      Similarity.ivfTopK(assigned, 0L, 10, cents, nprobe = 16)
-    }),
-    // batch-of-queries ANN: 100 query vectors probed in ONE plan against
-    // the same persisted IVF index (nprobe = all cells ⇒ exact, so DuckDB
-    // reproduces every per-query top-10 row)
-    "q_ivf_topk_multi" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val (cents, assigned) = ivfIndex(s, d)
-      Similarity.ivfTopKAll(assigned, emb.where(col("vec_id") < 100), 10,
-        cents, nprobe = 16)
-    }),
-    // int8-coarse + exact-rescore ANN over the same index: nprobe = all
-    // cells AND k·refine (2000) ≥ candidates-per-query at the verify/bench
-    // SFs ⇒ the shortlist covers everything and the result is exact — the
-    // oracle regime; the recall/refine trade is measured in the spec
-    "q_ivf_quantized" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val (cents, assigned) = ivfIndex(s, d)
-      Similarity.ivfTopKAllQuantized(assigned,
-        emb.where(col("vec_id") < 100), 10, cents, nprobe = 16, refine = 200)
-    }),
-    // hard-negative mining for contrastive training: nearest
-    // DIFFERENT-label vectors per anchor, served from the same IVF index
-    // (nprobe = all cells ⇒ exact, so DuckDB replays it)
-    "q_hard_negatives" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val (cents, assigned) = ivfIndex(s, d)
-      Similarity.hardNegatives(assigned, emb.select(col("vec_id"), col("label")),
-        emb.where(col("vec_id") < 100), k = 5, cents, nprobe = 16)
-    }),
-    // margin-criterion pair mining (ratio margin, "max" strategy): probes
-    // = every 7th vector, corpus = the rest; exact kNN regime so DuckDB
-    // replays the whole criterion. minMargin 1.0 keeps pairs at least as
-    // close as both endpoints' usual top-4 neighbourhoods.
-    "q_margin_knn" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Similarity.marginMine(emb.where(col("vec_id") % 7 =!= 0),
-        emb.where(col("vec_id") % 7 === 0), k = 4, minMargin = 1.0)
-    }),
-    // k-occurrence (hubness) report over the same exact kNN frame
-    "q_hubness" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Similarity.hubness(Similarity.knnAllBrute(
-        emb.where(col("vec_id") % 7 =!= 0),
-        emb.where(col("vec_id") % 7 === 0), k = 4))
-    }),
-    // contrastive triplets: nearest same-label positive + nearest
-    // different-label negative per anchor, with the cosine margin
-    "q_triplets" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val (cents, assigned) = ivfIndex(s, d)
-      Similarity.contrastiveTriplets(assigned,
-        emb.select(col("vec_id"), col("label")),
-        emb.where(col("vec_id") < 100), cents, nprobe = 16)
-    }),
-    // benchmark decontamination: eval set = every 97th doc_id (a stand-in
-    // for a held-out benchmark table); n=3 because the synthetic corpus
-    // vocabulary is ~30 words (n=13, the production default, finds zero
-    // overlap here — measured)
-    "q_decontam" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      Decontam.contaminationCounts(
-        docs.where(col("doc_id") % 97 =!= 0),
-        docs.where(col("doc_id") % 97 === 0),
-        "doc_id", "text", n = 3)
-    }),
-    // graded decontam: overlap normalized by the doc's own gram count —
-    // what threshold/downweight policies actually consume
-    "q_contam_frac" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      Decontam.contaminationFraction(
-        docs.where(col("doc_id") % 97 =!= 0),
-        docs.where(col("doc_id") % 97 === 0),
-        "doc_id", "text", n = 3)
-    }),
-    // SEMANTIC decontamination: paraphrase-robust eval-overlap flags via
-    // hashed-vector cosine under the q_semdedup_text argmax blocking —
-    // catches reworded benchmark items the n-gram family (q_decontam)
-    // can't see; the eval assignment is broadcast (bounded by contract)
-    "q_sem_decontam" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      Decontam.semanticContamination(
-        docs.where(col("doc_id") % 97 =!= 0),
-        docs.where(col("doc_id") % 97 === 0),
-        minCos = 0.9)
-    }),
-    // span-level decontamination: remove exactly the benchmark-overlapping
-    // token spans, keep the rest of the document (same eval-set convention
-    // as q_decontam)
-    "q_decontam_scrub" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      Decontam.scrubContamination(
-        docs.where(col("doc_id") % 97 =!= 0),
-        docs.where(col("doc_id") % 97 === 0),
-        "doc_id", "text", n = 3)
-    }),
-    // PII scrubbing: the synthetic corpus contains no PII-shaped strings
-    // (measured — zero '@', zero digit runs), so every 7th document gets a
-    // deterministic email+IP+phone suffix injected IN the query, mirrored
-    // in the oracle SQL — the redaction path is then hash-validated on
-    // real data, not just spec fixtures
-    "q_pii_scrub" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val injected = docs.select(col("doc_id"),
-        when(col("doc_id") % 7 === 0,
-          concat(col("text"),
-            lit(" contact user"), col("doc_id").cast("string"),
-            lit("@example.com or 10."), (col("doc_id") % 256).cast("string"),
-            lit(".0.1 call +1 415 550 0"), (col("doc_id") % 10).cast("string"),
-            lit("99")))
-          .otherwise(col("text")).as("text"))
-      Scrub.scrubPii(injected)
-    }),
-    // C4 line-level dedup: the synthetic corpus is single-line, so a
-    // shared boilerplate footer (+ a unique line for every 3rd doc) is
-    // injected IN the query — the footer must survive only in the lowest
-    // doc_id, each unique line everywhere
-    "q_line_dedup" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val injected = docs.select(col("doc_id"),
-        concat(col("text"), lit("\nsubscribe to our newsletter"),
-          when(col("doc_id") % 3 === 0,
-            concat(lit("\nunique footer "), col("doc_id").cast("string")))
-            .otherwise(lit(""))).as("text"))
-      Dedup.lineDedup(injected)
-    }),
-    // HTML boilerplate strip: every 4th document wrapped in a deterministic
-    // markup template IN the query (the q_pii_scrub injected-fixture
-    // convention — the synthetic corpus has no markup), then extracted
-    "q_strip_html" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val injected = docs.select(col("doc_id"),
-        when(col("doc_id") % 4 === 0,
-          concat(
-            lit("<html><head><title>Page</title><style>body{color:red}" +
-              "</style><script>var x = 1 < 2;</script></head>" +
-              "<body><!-- nav --><p>"),
-            col("text"),
-            lit("</p><div>&amp; &lt;tail&gt;&nbsp;end</div></body></html>")))
-          .otherwise(col("text")).as("text"))
-      injected.select(col("doc_id"), Scrub.stripHtml(col("text")).as("text"))
-    }),
-    "q_quantize" -> ((s, d) =>
-      Similarity.quantizeInt8Stats(Tables.embeddings(s, d))),
-    // exact heavy hitters (the Space-Saving sketch's oracle twin —
-    // SketchSpec validates the sketch against this form)
-    // count-min point-frequency estimates for a fixed probe list over
-    // the token stream (depth 4 × width 64 cell table; md5 hash family,
-    // so DuckDB replays build + probe exactly)
-    "q_cms" -> ((s, d) => {
-      import s.implicits._
-      // round 17b: kernel fan — the sketch's md5-per-token bucket family
-      // plus the tokenize ran as ONE 1.19 s task on the unsplit local
-      // scan (1185ms/1t of a 1.51 s query); cell counts are integers, so
-      // the map-side combine is placement-independent
-      val toks = ops.Par.fanOutKernel(Tables.documents(s, d))
-        .select(explode(Core.tokensUni(col("text"))).as("token"))
-      val sk = CountMin.sketch(toks, "token", depth = 4, width = 64)
-      val probes = Seq("the", "a", "table", "spark", "window", "query",
-        "zzznope").toDF("token")
-      CountMin.estimate(sk, probes, "token", depth = 4, width = 64)
-    }),
-    "q_heavy_hitters" -> ((s, d) =>
-      TextAnalysis.heavyHitters(Tables.documents(s, d), HH_PHI)),
-    // v4 full recipe: v3's chain + benchmark decontamination (same
-    // eval-set convention as q_decontam) between near-dup and span stages
-    "q_clean_corpus_v4" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      // v4's stages ARE the raw prefix's flag set (quality → exact →
-      // SNM → decontam) — it reads the same standing table as v5/v6
-      Curation.cleanCorpusV4Stats(
-        docs.where(col("doc_id") % 97 =!= 0),
-        docs.where(col("doc_id") % 97 === 0),
-        contamN = 3, prefix = Some(recipePrefixRaw(s, d)))
-    }),
-    // v5: v4 + the perplexity-percentile gate (drop the worst surprisal
-    // quintile of the decontam survivors) before span rewriting — the
-    // full modern recipe
-    "q_clean_corpus_v5" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      Curation.cleanCorpusV5Stats(
-        docs.where(col("doc_id") % 97 =!= 0),
-        docs.where(col("doc_id") % 97 === 0),
-        contamN = 3, prefix = Some(recipePrefixRaw(s, d)))
-    }),
-    // v6: fractional bucket rates — thin the high-surprisal tail instead
-    // of amputating it (deterministic hash-fraction per quantile bucket)
-    "q_clean_corpus_v6" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      Curation.cleanCorpusV6Stats(
-        docs.where(col("doc_id") % 97 =!= 0),
-        docs.where(col("doc_id") % 97 === 0),
-        contamN = 3, pplRates = V6_PPL_RATES,
-        prefix = Some(recipePrefixRaw(s, d)))
-    }),
-    // v7: the exact substring scrub as stage 0 of the recipe — rewrite
-    // duplicated >=8-token runs corpus-wide FIRST, then run the whole v6
-    // chain on the rewritten text (contamination still matches RAW eval
-    // docs; the scrub sees eval docs too, so eval-owned grams scrub out
-    // of training text — decontamination-flavored by design)
-    "q_clean_corpus_v7" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      // the standing scrubbed-corpus table (scrubbedCorpus): the recipe
-      // scans its input's text once per stage, and each scan would
-      // otherwise re-run the whole scrub — its gram-ownership shuffle
-      // included (74 s → 11 s on the 50k stress with a checkpoint;
-      // standing table amortizes it across v7/v8/v9 AND bench passes)
-      val scrubbed = scrubbedCorpus(s, d)
-      Curation.cleanCorpusV6Stats(
-        scrubbed.where(col("doc_id") % 97 =!= 0),
-        docs.where(col("doc_id") % 97 === 0),
-        contamN = 3, pplRates = V6_PPL_RATES,
-        prefix = Some(recipePrefixScrub(s, d)))
-    }),
-    // v8: the FULL composition — substring scrub (v7 stage 0), the whole
-    // v6 chain, plus a SEMANTIC decontamination stage between the lexical
-    // one and the perplexity gate (paraphrased eval items that share no
-    // n-gram with the benchmark still drop)
-    "q_clean_corpus_v8" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      // same standing scrubbed-corpus table as q_clean_corpus_v7
-      val scrubbed = scrubbedCorpus(s, d)
-      Curation.cleanCorpusV8Stats(
-        scrubbed.where(col("doc_id") % 97 =!= 0),
-        docs.where(col("doc_id") % 97 === 0),
-        contamN = 3, pplRates = V6_PPL_RATES, semMinCos = 0.85,
-        prefix = Some(recipePrefixScrubSem(s, d)))
-    }),
-    // v9: the v8 composition + a final importance-resample stage — exact
-    // 50 survivors whose length histogram tracks the RAW train corpus,
-    // shedding the length bias the quality/perplexity gates introduce
-    "q_clean_corpus_v9" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      // same standing scrubbed-corpus table as q_clean_corpus_v7
-      val scrubbed = scrubbedCorpus(s, d)
-      Curation.cleanCorpusV9Stats(
-        scrubbed.where(col("doc_id") % 97 =!= 0),
-        docs.where(col("doc_id") % 97 === 0),
-        contamN = 3, pplRates = V6_PPL_RATES, semMinCos = 0.85,
-        kFinal = 50, prefix = Some(recipePrefixScrubSem(s, d)))
-    }),
-    // domain mixing to per-source token budgets: the prefilter rate keeps
-    // ~15 of each source's 25 docs (~450 tokens) ahead of the 100-500
-    // token budgets, so the exact-trim window runs over a budget-sized set
-    // (the 100 TB contract) while still exercising the budget boundary
-    "q_domain_mix" -> ((s, d) =>
-      Sampling.tokenBudgetMix(Tables.documents(s, d), "source", "doc_id",
-        budgets = MIX_BUDGETS, defaultBudget = MIX_DEFAULT_BUDGET,
-        prefilterRates = Map.empty, defaultPrefilterRate = MIX_RATE)),
-    // corpus snapshot diff: old = ids < 300, new = ids >= 100 with every
-    // 10th overlapping doc's text modified IN the query (the injected-
-    // fixture convention) — exercises all four statuses
-    "q_corpus_diff" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      Dedup.corpusDiff(
-        docs.where(col("doc_id") < 300),
-        docs.where(col("doc_id") >= 100).select(col("doc_id"),
-          when(col("doc_id") % 10 === 0, concat(col("text"), lit(" rev2")))
-            .otherwise(col("text")).as("text")))
-    }),
-    // split-leakage audit: SNM near-dup pairs straddling the 80/10/10
-    // hash-split boundary
-    "q_split_leakage" -> ((s, d) =>
-      Dedup.splitLeakagePairs(Tables.documents(s, d),
-        trainRate = 0.8, validRate = 0.1)),
-    // the split-leakage FIX: split on the exact-dup cluster key (min
-    // doc_id per content fingerprint, multi-member groups only) so no
-    // fingerprint-identical pair can straddle splits; singletons fall
-    // back to their own id = the plain hashSplit assignment
-    "q_cluster_split" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      // the corpus has no exact dups at test SF: re-crawled copies are
-      // injected IN the query (every 9th doc, shifted id) so the
-      // cluster arm actually decides — each copy-pair must co-locate
-      val all = docs.select("doc_id", "text").unionByName(
-        docs.where(col("doc_id") % 9 === 0)
-          .select((col("doc_id") + 100000L).as("doc_id"), col("text")))
-      val fps = TextAnalysis.fingerprints(all)
-      val clusters = fps.groupBy("fp")
-        .agg(min("doc_id").as("cluster_id"), count(lit(1)).as("_n"))
-        .where(col("_n") > 1)
-      val assign = fps.join(clusters, "fp").select("doc_id", "cluster_id")
-      Sampling.clusterSplit(fps.select("doc_id"), assign,
-        trainRate = 0.8, validRate = 0.1)
-        .select("doc_id", "cluster_id", "split")
-    }),
-    // stride-scheduled mixture order: src0 at double weight, src1 halved
-    "q_interleave_order" -> ((s, d) =>
-      Sampling.interleavedOrder(Tables.documents(s, d), "source", "doc_id",
-        weights = Map("src0" -> 2.0, "src1" -> 0.5))),
-    // incremental snapshot dedup: an "incoming crawl" (doc_id >= 200)
-    // overlapping the "previous snapshot" (doc_id < 300) — keep incoming
-    // docs whose content fingerprint is absent from the snapshot, via the
-    // bloom-prefiltered exact anti-join, so only bloom-flagged rows (the
-    // 100 re-crawled docs + ~fpp false positives) reach the join's shuffle
-    "q_incr_dedup" -> ((s, d) => {
-      val fps = TextAnalysis.fingerprints(Tables.documents(s, d))
-      BloomJoin.bloomAntiJoin(
-        fps.where(col("doc_id") >= 200),
-        fps.where(col("doc_id") < 300).select("fp"),
-        "fp")
-    }),
-    // sliding-window sequence prep: 16-token chunks every 8 tokens
-    "q_doc_chunks" -> ((s, d) =>
-      Packing.chunkTokens(Tables.documents(s, d), chunkSize = 16, stride = 8)),
-    // pack-then-chunk at parts=1: the oracle twin of the partition-local
-    // production form (the q_pack_sorted convention — same algebra, one
-    // partition, so DuckDB can replay the global concatenation)
-    "q_pack_seq" -> ((s, d) =>
-      Packing.packedSequences(Tables.documents(s, d), seqLen = 128,
-        parts = 1)),
-    // pack-then-chunk with an end-of-document sentinel appended to every
-    // non-empty doc before concatenation (what a causal-LM trainer
-    // actually consumes); same parts=1 oracle-twin convention
-    "q_pack_eos" -> ((s, d) =>
-      Packing.packedSequences(Tables.documents(s, d), seqLen = 128,
-        parts = 1, eosToken = Some("<eos>"))),
-    // document-boundary metadata of the packed stream (block-diagonal
-    // attention masks + provenance), exploded to scalar rows — the
-    // driver compare hashes scalar cells only (q_embed_pool lesson)
-    "q_pack_bounds" -> ((s, d) =>
-      Packing.packedSequencesWithBounds(Tables.documents(s, d),
-          seqLen = 128, parts = 1)
-        .select(col("seq_id"),
-          posexplode(arrays_zip(col("doc_starts"), col("doc_ids"))))
-        .select(col("seq_id"), col("pos").cast("int").as("k"),
-          col("col.doc_starts").as("doc_start"),
-          col("col.doc_ids").as("doc_id"))),
-    // fill-in-the-middle transform on a deterministic half of the corpus
-    // (PSM order; cut points are pure id arithmetic, so oracle-replayable)
-    "q_fim" -> ((s, d) =>
-      Packing.fimTransform(Tables.documents(s, d), fimRate = 0.5)),
-    // T5 denoising pairs: one 3-token span masked per 16-token window at
-    // a folded-id offset, sentinel-joined input/target (scan-stage only)
-    "q_span_corrupt" -> ((s, d) =>
-      Packing.spanCorrupt(Tables.documents(s, d),
-        spanEvery = 16, spanLen = 3)),
-    // length-bucketed batching: 16-way hash-sharded ordinals per bucket
-    "q_len_batches" -> ((s, d) =>
-      Packing.lengthBucketBatches(Tables.documents(s, d),
-        bucketEdges = Seq(16, 32, 64, 128), batchSize = 8)),
-    // the number bucketed batching exists for: padding waste under the
-    // real edges vs one catch-all bucket (arrival-order batches)
-    "q_padding_waste" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      Packing.paddingWaste(Packing.lengthBucketBatches(docs,
-          bucketEdges = Seq(16, 32, 64, 128), batchSize = 8), "bucketed")
-        .unionByName(Packing.paddingWaste(Packing.lengthBucketBatches(docs,
-          bucketEdges = Seq(1 << 20), batchSize = 8), "unbucketed"))
-    }),
-    // temperature-flattened domain mixture (alpha = 0.5 over source counts)
-    "q_temp_mix" -> ((s, d) =>
-      Sampling.temperatureMix(Tables.documents(s, d), "source", "doc_id",
-        alpha = TEMP_ALPHA, totalRows = TEMP_TOTAL)),
-    // fractional-epoch upsampling: 2.5 epochs of src0, 0.3 of src1, src2
-    // dropped, everything else 1 — deterministic extra-copy choice
-    "q_epoch_mix" -> ((s, d) =>
-      Sampling.epochUpsample(Tables.documents(s, d), "source",
-          Map("src0" -> 2.5, "src1" -> 0.3, "src2" -> 0.0),
-          defaultEpochs = 1.0, salt = "ep")
-        .select(col("source"), col("doc_id"), col("epoch"))),
-    // per-source percentile quality gate: keep each source's best 40 %
-    "q_quality_rank" -> ((s, d) =>
-      TextAnalysis.qualityPercentile(Tables.documents(s, d), "source",
-        keepFrac = QRANK_KEEP)),
-    // reproducible training-order shuffle into 16 hash-range shards
-    "q_shuffle_order" -> ((s, d) =>
-      Sampling.deterministicShuffle(Tables.documents(s, d), "doc_id")),
-    // SFT-sample assembly: per-user event turns rendered in event-time
-    // order into one training text per conversation
-    "q_chat_render" -> ((s, d) =>
-      Conversations.render(Tables.events(s, d))),
-    // session-scoped assembly: one conversation per (user, 30-min-gap
-    // session) — the streaming ingest shape (same definition runs under
-    // a watermark; StreamingSpec parity-asserts the flush)
-    "q_chat_sessions" -> ((s, d) =>
-      Conversations.renderSessions(Tables.events(s, d), "30 minutes")),
-    // data-contract report over a corpus with INJECTED violations (every
-    // 13th row's lang corrupted, every 17th row's n_chars off by one —
-    // the q_pii_scrub injected-fixture convention)
-    "q_contract" -> ((s, d) => {
-      val mutated = Tables.documents(s, d).select(col("doc_id"),
-        col("text"), col("source"),
-        when(col("doc_id") % 13 === 0, lit("xx")).otherwise(col("lang"))
-          .as("lang"),
-        when(col("doc_id") % 17 === 0, col("n_chars") + 1)
-          .otherwise(col("n_chars")).as("n_chars"))
-      Contracts.violations(mutated, Seq(
-        "lang_in_enum" -> col("lang").isin("en", "de", "fr", "es", "zh"),
-        "n_chars_matches_text" -> (col("n_chars") === length(col("text"))),
-        "text_nonempty" -> (length(col("text")) > 0),
-        "source_prefixed" -> col("source").startsWith("src")),
-        idCol = "doc_id")
-    }),
-    // k-anonymity over (lang, source, length-decile) quasi-identifiers
-    "q_kanon" -> ((s, d) =>
-      Contracts.kAnonymity(Tables.documents(s, d)
-          .withColumn("len_bucket", (col("n_chars") / 100).cast("int")),
-        Seq("lang", "source", "len_bucket"), k = 3)),
-    // numeric table profile: every column's metrics in ONE aggregate
-    // pass (exact distinct/percentile here for the oracle; production
-    // uses the approx variants — see Contracts.tableProfile)
-    "q_profile" -> ((s, d) =>
-      Contracts.tableProfile(Tables.lineitem(s, d), PROFILE_COLS)),
-    // per-type daily volume anomalies (2-sigma, exact integer algebra)
-    "q_anomaly" -> ((s, d) =>
-      Windowing.volumeAnomalies(Tables.events(s, d), "ts", "event_type",
-        "1 day")),
-    // weekly retention cohorts over the user event stream
-    "q_retention" -> ((s, d) =>
-      Windowing.retentionCohorts(Tables.events(s, d), "ts", "user_id")),
-    // ordered funnel conversion: view -> click -> purchase, greedy
-    // earliest-completion per user
-    "q_funnel" -> ((s, d) =>
-      Windowing.funnelCounts(Tables.events(s, d),
-        Seq("view", "click", "purchase"))),
-    // SCD2 attribute history: per-user event_type timeline with
-    // [valid_from, valid_to) version rows — the snapshot-versioning layer
-    // (doc license/quality-tier across crawls is the same algebra)
-    "q_scd2" -> ((s, d) =>
-      History.scd2(Tables.events(s, d), "user_id", "ts", "event_id",
-        "event_type")),
-    // incremental MERGE: history from the first half of the month folds
-    // the second half in without revisiting closed versions — result
-    // equals the full-history recompute, so the oracle IS q_scd2's replay
-    "q_scd2_incr" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      val cut = to_timestamp(lit("2024-01-15 00:00:00"))
-      // the first-half history is the STANDING artifact scd2Apply merges
-      // into — materialize it once (the q_lm_ppl standing-model rule):
-      // scd2Apply references it FIVE times (validate join, current rows
-      // ×2, closed passthrough ×2), and unmaterialized each reference
-      // re-ran the full window chain (plan audit r16: 29 Exchanges → 7)
-      History.scd2Apply(
-        History.scd2(ev.where(col("ts") < cut), "user_id", "ts",
-          "event_id", "event_type").localCheckpoint(),
-        ev.where(col("ts") >= cut), "user_id", "ts", "event_id",
-        "event_type")
-    }),
-    // point-in-time reconstruction off the same history
-    "q_scd2_asof" -> ((s, d) =>
-      History.asOf(
-        History.scd2(Tables.events(s, d), "user_id", "ts", "event_id",
-          "event_type"),
-        "user_id", to_timestamp(lit("2024-01-15 00:00:00")))),
-    // per-source dataset card (the corpus report broken out by provenance)
-    "q_data_card" -> ((s, d) =>
-      TextAnalysis.dataCard(Tables.documents(s, d))),
-    // population drift monitor: PSI of the length distribution, English
-    // slice vs the rest (fixed bucket edges — the reference binning)
-    "q_drift" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      TextAnalysis.distributionDrift(
-        docs.where(col("lang") === "en"), docs.where(col("lang") =!= "en"),
-        "n_chars", Seq(150.0, 250.0, 350.0, 450.0))
-    }),
-    // feature-hashed document vectors, long format (the hashing trick —
-    // the model-free text→vector bridge into the similarity stack)
-    "q_hash_embed" -> ((s, d) =>
-      TextAnalysis.hashEmbedLong(Tables.documents(s, d), dim = 64)),
-    // END-TO-END text semantic dedup, hash-verified: raw documents →
-    // hashed vectors → ARGMAX-blocked SemDeDup decision, every stage
-    // deterministic so the whole chain oracles. Argmax, not sign,
-    // blocking: hashed count vectors are mostly zeros, so sign bits
-    // collapsed ~everything into one mega-block and the query benched
-    // 8.5 s at sf0.1 (the N² trap the blocking exists to avoid)
-    "q_semdedup_text" -> ((s, d) =>
-      Similarity.semanticDedupFlagsArgmax(
-        TextAnalysis.hashEmbed(Tables.documents(s, d), dim = 64),
-        minCos = 0.9)),
-    // INCREMENTAL text semdedup: the base corpus is a standing
-    // argmax-block index (built once, bucketed by block); the day's
-    // increment probes it and gets batch-identical verdicts — the oracle
-    // is the full q_semdedup_text replay filtered to the increment rows,
-    // so any drift between apply and batch decision hash-fails
-    "q_semdedup_incr" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val base = docs.where(col("doc_id") % 10 < 8)
-      val idx = TextAnalysis.semanticDedupTextIndex(s, base,
-        IndexTables.ident("semtext", base))
-      TextAnalysis.semanticDedupTextApply(
-        docs.where(col("doc_id") % 10 >= 8), idx, minCos = 0.9)
-    }),
-    // blocking-degeneracy telemetry for the text-dedup blocking: the
-    // Σblock²/N² a dedup decision WOULD pay, measured by aggregation
-    // alone before any pair is formed (the all-ones sign-block trap,
-    // caught for the price of one groupBy)
-    "q_block_report" -> ((s, d) =>
-      Similarity.blockOccupancy(Similarity.argmaxBlocked(
-        TextAnalysis.hashEmbed(Tables.documents(s, d), dim = 64)))),
-    // DSIR importance scoring: hashed-unigram log-likelihood ratios of a
-    // target distribution (the English subset stands in for "curated
-    // reference text") vs the raw pool, fitted once (dim-sized model),
-    // then every document scored in the scan stage with the model as
-    // literals — zero shuffle, the 100 TB data-selection pass
-    "q_dsir" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      TextAnalysis.dsirScores(docs,
-        TextAnalysis.dsirLogRatios(docs, docs.where(col("lang") === "en")))
-    }),
-    // DSIR importance RESAMPLING — the second half of the method: the
-    // q_dsir scores bucketed by their corpus distribution, keep rates
-    // ASCENDING so the target-like tail is retained and the off-target
-    // mass thinned (perplexityMix with the score flipped in meaning)
-    "q_dsir_mix" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val scored = TextAnalysis.dsirScores(docs,
-        TextAnalysis.dsirLogRatios(docs, docs.where(col("lang") === "en")))
-        .select(col("doc_id"), col("dsir_logw"))
-      Sampling.perplexityMix(scored, "doc_id", "dsir_logw", DSIR_RATES,
-        salt = "dsir")
-    }),
-    // trained multiclass NB over hashed token counts — the fasttext-
-    // style router: per-doc argmax prediction vs the true lang label
-    // (the synthetic corpus's labels are vocabulary-independent, so the
-    // model learns priors+noise — exactly what the oracle replays)
-    "q_nb_lang" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val model = TextAnalysis.nbFit(docs, "lang", dim = 64)
-      TextAnalysis.nbPredict(docs, model, carry = Seq("lang"))
-        .withColumn("correct", (col("pred") === col("lang")).cast("int"))
-    }),
-    // the classifier acceptance artifact: true × predicted confusion
-    "q_nb_confusion" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val model = TextAnalysis.nbFit(docs, "lang", dim = 64)
-      TextAnalysis.nbPredict(docs, model, carry = Seq("lang"))
-        .groupBy("lang", "pred").agg(count(lit(1)).as("n"))
-    }),
-    // per-class precision/recall/F1 off the same prediction chain — F1
-    // from the UNROUNDED ratios, NULL metrics on empty denominators
-    "q_nb_prf" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val model = TextAnalysis.nbFit(docs, "lang", dim = 64)
-      TextAnalysis.classifierReport(
-        TextAnalysis.nbPredict(docs, model, carry = Seq("lang")),
-        "lang", "pred")
-    }),
-    // Hamilton largest-remainder apportionment of a 137-draw budget
-    // across sources by char mass — exact integers end to end
-    "q_apportion" -> ((s, d) =>
-      Sampling.apportion(Tables.documents(s, d).groupBy("source")
-        .agg(sum("n_chars").cast("long").as("c")), total = 137L)),
-    // the exact-quota draw: per-stratum salted-hash rank ≤ quota —
-    // Σ rows = 137 exactly, stratum shares within 1 of proportional
-    "q_apportion_draw" -> ((s, d) =>
-      Sampling.apportionedSample(Tables.documents(s, d), "source",
-          "doc_id", total = 137L)
-        .select(col("doc_id"), col("source"))),
-    // token-budget mixture solve: the largest run honoring a 4-domain
-    // recipe under a 2-epoch repetition cap (closed-form waterline)
-    "q_mix_solve" -> ((s, d) =>
-      Sampling.mixtureSolve(
-        Tables.documents(s, d).groupBy(col("source").as("domain"))
-          .agg(sum(size(ops.Core.tokensUni(col("text")))).cast("long")
-            .as("n_tokens")),
-        MIX_SOLVE_W.toMap, maxEpochs = 2.0)),
-    // chance-corrected agreement between two weak labelers (model
-    // quality gate vs Flesch readability gate) over tokenizable docs —
-    // the weak-supervision acceptance check
-    "q_kappa" -> ((s, d) =>
-      TextAnalysis.cohenKappa(
-        TextAnalysis.weakLabels(Tables.documents(s, d)), "keep_a", "keep_b")),
-    // reliability diagram of the quality classifier probability against
-    // the readability proxy label: per-decile mean prediction vs
-    // observed positive rate + Brier contribution
-    "q_calibration" -> ((s, d) =>
-      TextAnalysis.calibrationReport(
-        TextAnalysis.weakLabels(Tables.documents(s, d)),
-        "quality_score", "keep_b")),
-    // the report collapsed to the model-card scalars (ECE/MCE) over
-    // the same bins and the same weak-label frame
-    "q_calibration_error" -> ((s, d) =>
-      TextAnalysis.calibrationError(
-        TextAnalysis.weakLabels(Tables.documents(s, d)),
-        "quality_score", "keep_b")),
-    // Gopher/MassiveText structural quality rules: per-rule flags +
-    // conjunction, every threshold integer-exact (cross-multiplied)
-    "q_gopher_rules" -> ((s, d) =>
-      TextAnalysis.gopherRules(Tables.documents(s, d))),
-    // the complete published gate: structural AND repetition halves
-    // joined per doc over the plain corpus (each half individually
-    // oracled; the conjunction is the production filter)
-    "q_gopher_gate" -> ((s, d) =>
-      TextAnalysis.gopherGate(Tables.documents(s, d))),
-    // the REPETITION half of the Gopher gate, over deterministically
-    // injected repetition (dup lines on every 3rd doc, a doubled
-    // 12-token phrase on every 5th, dup paragraphs on every 7th — the
-    // synthetic corpus is single-line, so the rules need structure to
-    // bite on)
-    "q_gopher_rep" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      TextAnalysis.gopherRepetition(docs.select(col("doc_id"),
-        concat(col("text"),
-          when(col("doc_id") % 3 === 0,
-            lit("\nsubscribe now\nsubscribe now\nsubscribe now"))
-            .otherwise(lit("")),
-          when(col("doc_id") % 5 === 0,
-            lit(s" $GOPHER_REP_PHRASE $GOPHER_REP_PHRASE"))
-            .otherwise(lit("")),
-          when(col("doc_id") % 7 === 0,
-            lit("\n\npromo paragraph block\n\npromo paragraph block"))
-            .otherwise(lit(""))).as("text")))
-    }),
-    // Luhn-validated payment-card scan: the classic Visa test number
-    // (valid) on every 9th doc, an off-by-one check digit (invalid) on
-    // every 13th, a dashed Amex (valid) on every 17th — the checksum
-    // kills digit-run false positives a bare regex can't
-    "q_cc_scan" -> ((s, d) =>
-      Scrub.creditCardScan(Tables.documents(s, d).select(col("doc_id"),
-        concat(col("text"),
-          when(col("doc_id") % 9 === 0, lit(" card 4111 1111 1111 1111"))
-            .otherwise(lit("")),
-          when(col("doc_id") % 13 === 0, lit(" acct 4111111111111112"))
-            .otherwise(lit("")),
-          when(col("doc_id") % 17 === 0, lit(" ref 3782-8224-6310-005"))
-            .otherwise(lit(""))).as("text")))),
-    // entropy-based secret detection over deterministically injected
-    // credentials (md5-hex key on every 7th doc = high entropy; a
-    // repeated-char run on every 11th = the low-entropy control the
-    // threshold must NOT flag)
-    "q_secret_scan" -> ((s, d) =>
-      TextAnalysis.secretScan(Tables.documents(s, d).select(col("doc_id"),
-        concat(col("text"),
-          when(col("doc_id") % 7 === 0,
-            concat(lit(" key_"), md5(col("doc_id").cast("string"))))
-            .otherwise(lit("")),
-          when(col("doc_id") % 11 === 0,
-            lit(" aaaaaaaaaaaaaaaaaaaaaaaa")).otherwise(lit("")))
-          .as("text")))),
-    // SFT loss-mask spans over the q_chat_render text: character offsets
-    // of the turns a trainer computes loss on ('click'/'purchase' stand
-    // in for the assistant role)
-    "q_loss_mask" -> ((s, d) =>
-      Conversations.lossMaskSpans(Tables.events(s, d),
-        Seq("click", "purchase"))),
-    // DPO-style preference pairs: per source, best-vs-worst document by
-    // the model quality LOGIT (raw z — the q_quality_rank tie rationale:
-    // sigmoid's rounding saturates, the logit never does)
-    "q_pref_pairs" -> ((s, d) => {
-      val scored = Tables.documents(s, d).select(col("source"),
-        col("doc_id"), col("text"),
-        TextAnalysis.qualityLogit(col("text")).as("z"))
-      Conversations.preferencePairs(scored, "source", "doc_id", "z", "text")
-    }),
-    // Fleiss' kappa over a deterministic 3-judge panel (label_j =
-    // ((doc_id mod (j+2)) + (doc_id mod 3)) mod 3 — integer residues
-    // the oracle rebuilds exactly; measures κ ≈ 0.086, a realistic
-    // mildly-agreeing panel): the acceptance gate on an LLM-judge
-    // ensemble before its majority votes become labels
-    "q_fleiss" -> ((s, d) => {
-      val votes = Tables.documents(s, d).select(col("doc_id"),
-        explode(array((0 until 3).map(j =>
-          (((col("doc_id") % (j + 2)) + (col("doc_id") % 3)) % 3)
-            .cast("int")): _*)).as("label"))
-      Preference.fleissKappa(votes, "doc_id", "label")
-    }),
-    // Krippendorff's alpha over a RAGGED panel — the q_fleiss judges
-    // with realistic raggedness (judge 1 times out on every 5th doc,
-    // judge 2 on every 7th, a 4th judge joins on every 4th; docs at
-    // the 5·7 residue drop to ONE vote and are excluded as unpairable)
-    // — the agreement statistic fleissKappa refuses raggedness for.
-    // Missing votes are nulls; krippAlpha's null-exclusion builds the
-    // ragged panel from them
-    "q_kripp" -> ((s, d) => {
-      def lbl(j: Int) =
-        (((col("doc_id") % (j + 2)) + (col("doc_id") % 3)) % 3).cast("int")
-      val votes = Tables.documents(s, d).select(col("doc_id"),
-        explode(array(
-          lbl(0),
-          when(col("doc_id") % 5 =!= 0, lbl(1)),
-          when(col("doc_id") % 7 =!= 0, lbl(2)),
-          when(col("doc_id") % 4 === 0, lbl(3)))).as("label"))
-      Preference.krippAlpha(votes, "doc_id", "label")
-    }),
-    // interval-metric Krippendorff over the same ragged panel shape,
-    // judges emitting NUMERIC scores ((doc_id mod (j+3)) + (doc_id
-    // mod 5) — integer-grid, so the sufficient-statistic sums are
-    // exact): squared-difference disagreement, the scalar-score
-    // agreement gate beside q_kripp's categorical one
-    "q_kripp_interval" -> ((s, d) => {
-      def sc(j: Int) =
-        ((col("doc_id") % (j + 3)) + (col("doc_id") % 5)).cast("double")
-      val votes = Tables.documents(s, d).select(col("doc_id"),
-        explode(array(
-          sc(0),
-          when(col("doc_id") % 5 =!= 0, sc(1)),
-          when(col("doc_id") % 7 =!= 0, sc(2)),
-          when(col("doc_id") % 4 === 0, sc(3)))).as("score"))
-      Preference.krippAlphaInterval(votes, "doc_id", "score")
-    }),
-    // ordinal-metric Krippendorff — ragged Likert grades ((doc_id mod
-    // (j+2)) + (doc_id mod 4), a bounded ranked scale): disagreement
-    // weighted by squared between-rank marginal mass, the judge-grade
-    // agreement gate between q_kripp's categorical and
-    // q_kripp_interval's numeric readings
-    "q_kripp_ordinal" -> ((s, d) => {
-      def gr(j: Int) =
-        ((col("doc_id") % (j + 2)) + (col("doc_id") % 4)).cast("double")
-      val votes = Tables.documents(s, d).select(col("doc_id"),
-        explode(array(
-          gr(0),
-          when(col("doc_id") % 5 =!= 0, gr(1)),
-          when(col("doc_id") % 7 =!= 0, gr(2)),
-          when(col("doc_id") % 4 === 0, gr(3)))).as("grade"))
-      Preference.krippAlphaOrdinal(votes, "doc_id", "grade")
-    }),
-    // vocabulary-level drift: KL both ways + Jensen-Shannon divergence
-    // between the en and non-en token distributions (union vocab,
-    // add-half smoothing) — the drift check PSI/KS can't see
-    "q_js_div" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      TextAnalysis.tokenDivergence(docs.where(col("lang") === "en"),
-        docs.where(col("lang") =!= "en"))
-    }),
-    // corpus-planning scorecard: tokens, types, hapax/dis, TTR,
-    // Good-Turing unseen mass (the type-inventory view q_zipf and
-    // q_corpus_report don't carry)
-    "q_vocab_report" -> ((s, d) =>
-      TextAnalysis.vocabReport(Tables.documents(s, d))),
-    // corpus BLEU of a synthetic degraded candidate (every 3rd token
-    // dropped — deterministic, so the oracle rebuilds the exact pair
-    // set) vs the original text: p1 = 1 by construction (dropping only
-    // reduces counts under clipping), higher n-gram precisions and the
-    // brevity penalty price the damage
-    "q_bleu" -> ((s, d) =>
-      TextAnalysis.bleuScore(evalPairs(s, d), "doc_id", "ref", "cand")),
-    // per-source corpus BLEU — the fairness cut of q_bleu (bleuByGroup
-    // stays fully columnar: pivoted per-(group, n) totals, no driver
-    // collect at any group cardinality)
-    "q_bleu_source" -> ((s, d) =>
-      TextAnalysis.bleuByGroup(evalPairs(s, d),
-        "source", "doc_id", "ref", "cand")),
-    // MULTI-REFERENCE corpus BLEU (SacreBLEU convention): ref2 is the
-    // every-3rd-token→"xx" mutation of ref, cand is cand_sub (that same
-    // mutation with every 5th token dropped) — so cand's "xx" grams are
-    // licensed ONLY by ref2 and its clean grams only by ref, exercising
-    // the per-gram max-over-references clip in both directions; the
-    // brevity penalty takes the closest-length (tie: shorter) reference
-    "q_bleu_multiref" -> ((s, d) => {
-      val ep = evalPairs(s, d)
-      val rt = Core.tokensUni(col("ref"))
-      val pairs = ep.select(col("doc_id"), col("ref"),
-        array_join(transform(rt, (x, i) =>
-          when((i + 1) % 3 === 0, lit("xx")).otherwise(x)), " ").as("ref2"),
-        col("cand_sub").as("cand"))
-      TextAnalysis.bleuScoreMulti(pairs, "doc_id", Seq("ref", "ref2"),
-        "cand")
-    }),
-    // chrF2 on the q_bleu fixture (ref = the token-joined text, so both
-    // sides share the tokenizer's casing): character n-gram F with
-    // whitespace removed — pure integer-rational algebra, no logs
-    "q_chrf" -> ((s, d) =>
-      TextAnalysis.chrF(evalPairs(s, d), "doc_id", "ref", "cand")),
-    // chrF++ (word-order-2): the chrF level means extended with word
-    // 1-2 grams — two zero-exchange kernel scans (char + token)
-    "q_chrfpp" -> ((s, d) =>
-      TextAnalysis.chrFpp(evalPairs(s, d), "doc_id", "ref", "cand")),
-    // per-pair smoothed sentence BLEU (BLEU+1): the candidate-ranking
-    // signal beside the corpus number — pure scan off the same-row
-    // clip kernels, zero shuffle
-    "q_bleu_sent" -> ((s, d) =>
-      TextAnalysis.bleuSentence(evalPairs(s, d), "doc_id", "ref", "cand")),
-    // ROUGE-2 per pair on the q_bleu fixture: clipped bigram
-    // recall/precision/F — the reported summarization metric beside
-    // ROUGE-L's subsequence view
-    "q_rouge2" -> ((s, d) =>
-      TextAnalysis.rougeN(evalPairs(s, d), "doc_id", "ref", "cand", n = 2)),
-    // ROUGE-L per pair on the q_bleu fixture: LCS in the codegen DP
-    // kernel, pure scan stage. Dropping tokens keeps the remainder a
-    // subsequence, so lcs = c_len and P = 1 by construction — R and F
-    // price the cut (the complementary recall view to q_bleu)
-    "q_rouge" -> ((s, d) =>
-      TextAnalysis.rougeL(evalPairs(s, d), "doc_id", "ref", "cand")),
-    // TER (shift-free) on a HARDER synthetic degradation than the
-    // q_bleu drop fixture (a pure subsequence makes edit distance
-    // collapse to r_len − c_len): every 3rd token SUBSTITUTED with a
-    // marker and every 5th dropped, so the DP must actually mix
-    // substitutions and deletions. Codegen two-row Levenshtein in the
-    // scan — zero shuffle; oracle replays the DP via the min-plus
-    // prefix identity (the q_rouge recursive-CTE doctrine)
-    // SQuAD-style QA eval over the standing pair fixture: EM on the
-    // shared tokenizer's normal form + token-F1 (= the rougeN n=1 clip)
-    "q_qa_eval" -> ((s, d) =>
-      TextAnalysis.qaEval(evalPairs(s, d), "doc_id", "ref", "cand")),
-    "q_ter" -> ((s, d) =>
-      TextAnalysis.ter(evalPairs(s, d), "doc_id", "ref", "cand_sub")),
-    // greedy-shift TER on sentence-shaped slices (first 32 tokens —
-    // the terShift contract; real MT evals are sentence-segmented),
-    // with the 32-slice of cand_sub ROTATED left by 8 when it has ≥16
-    // tokens so the block-shift loop actually fires (the sub/drop
-    // degradation alone is order-preserving — zero shifts, a fixture
-    // that never exercises the operator). Oracled since round 14 via
-    // the q_bpe_apply pin discipline: the greedy loop's DECISIONS
-    // (applied shifts at sf0.01) are pinned literals, shift application
-    // + the edit DP replay mechanically in DuckDB — kernel drift makes
-    // the replayed edits diverge and the row goes red rather than
-    // silently drifting from the pin.
-    "q_ter_shift" -> ((s, d) => {
-      val ct = slice(Core.tokensUni(col("cand_sub")), 1, 32)
-      val rot = when(size(ct) >= 16,
-        concat(slice(ct, lit(9), size(ct) - 8), slice(ct, 1, 8))).otherwise(ct)
-      val sliced = evalPairs(s, d).select(col("doc_id"),
-        array_join(slice(Core.tokensUni(col("ref")), 1, 32), " ").as("ref"),
-        array_join(rot, " ").as("cand_sub"))
-      TextAnalysis.terShift(sliced, "doc_id", "ref", "cand_sub")
-    }),
-    // TRUE add-k perplexity under the STANDING bigram-count model
-    // (fit on the 97-residue train split, scored over every doc —
-    // held-out docs hit unseen events and the smoothing actually
-    // carries them; the CCNet-style quality filter proper)
-    "q_lm_ppl" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      // the model is the STANDING artifact: materialize it once — the
-      // scorer reads it twice (count join + context rollup), and an
-      // unmaterialized model would re-scan the train split for each
-      // (plan-audited round 11)
-      TextAnalysis.lmPerplexity(docs,
-        TextAnalysis.lmCounts(docs.where(col("doc_id") % 97 =!= 0))
-          .localCheckpoint())
-    }),
-    // Bradley-Terry strengths over the synthetic judge votes (32
-    // strength-ranked arms, one game per doc, stronger arm wins 4/7 of
-    // the time — all integer arithmetic, so the oracle rebuilds the
-    // same games); 3 MM iterations, q6-rounded per step
-    "q_bt_ratings" -> ((s, d) =>
-      Preference.btRatings(btGames(Tables.documents(s, d)),
-        iterations = 3)),
-    // the arena table over the same synthetic games: per unordered
-    // pair, wins/games/rate + Wilson 95% interval (small-n honest —
-    // exact integer counts, IEEE sqrt replays bit-for-bit)
-    "q_win_matrix" -> ((s, d) =>
-      Preference.winMatrix(btGames(Tables.documents(s, d)))),
-    // judge position-bias audit over the PRESENTED game log: the first
-    // slot is keyed on WINNER parity (winner % 2 = 0 puts the winner
-    // first), so rate_first measures P(winner is even) — a synthetic
-    // judge favoring the first slot ~50/50-biased by the arms' strength
-    // layout — and the audit must flag it (0.5 outside the Wilson
-    // interval at sf0.01's ~600 games)
-    "q_position_bias" -> ((s, d) => {
-      val judged = btGames(Tables.documents(s, d)).select(
-        when(col("winner") % 2 === 0, col("winner"))
-          .otherwise(col("loser")).as("first"),
-        when(col("winner") % 2 === 0, col("loser"))
-          .otherwise(col("winner")).as("second"),
-        (col("winner") % 2 === 0).as("first_wins"))
-      Preference.positionBias(judged)
-    }),
-    // verbosity-bias audit: synthetic judge prefers the longer answer
-    // 13/20 of the time (winner length rides a residue draw above or
-    // below the constant loser length) — the audit must flag it
-    "q_length_bias" -> ((s, d) => {
-      val judged = btGames(Tables.documents(s, d)).select(
-        col("winner"), col("loser"),
-        when((col("winner") * 17 + col("loser") * 3) % 20 < 13,
-          lit(200) + col("winner") % 40)
-          .otherwise(lit(50) + col("winner") % 30).as("win_len"),
-        lit(120).as("lose_len"))
-      Preference.lengthBias(judged)
-    }),
-    // length-binned win-rate CURVE over the same game log with
-    // gap-VARYING synthetic lengths (both sides residue draws, so gap
-    // buckets 0-2 fill with mixed outcomes): per |len_w − len_l| / 40
-    // bucket, the exact-integer Wilson read — the stratified view that
-    // reveals gap-dependent verbosity bias the one-row audit collapses
-    "q_len_winrate" -> ((s, d) => {
-      val judged = btGames(Tables.documents(s, d)).select(
-        col("winner"), col("loser"),
-        (lit(100) + (col("winner") * 7 + col("loser") * 11) % 120)
-          .as("win_len"),
-        (lit(100) + (col("winner") * 13 + col("loser") * 5) % 120)
-          .as("lose_len"))
-      Preference.lengthBiasCurve(judged, bucketWidth = 40)
-    }),
-    // unbiased pass@k (Codex §2.1) over synthetic per-problem sample
-    // outcomes (problem = doc_id mod 50, pass = residue rule — the
-    // oracle rebuilds the exact sample sets): the functional-
-    // correctness estimator, 1 - prod (n-c-i)/(n-i)
-    "q_pass_at_k" -> ((s, d) => {
-      val samples = Tables.documents(s, d).select(
-        (col("doc_id") % 50).as("problem"),
-        ((col("doc_id") * 7) % 3 === 0).as("ok"))
-      TextAnalysis.passAtK(samples, "problem", "ok", ks = Seq(1, 5, 10))
-    }),
-    // the incremental form: a standing (problem, n, c) dictionary from
-    // the first 80 % of samples, the rest MERGEd as a rollout batch —
-    // the merged board must equal the full-history run, so the oracle
-    // IS the full replay (the q_bt_incr / q_auc_incr contract)
-    "q_pass_at_k_incr" -> ((s, d) => {
-      val samples = Tables.documents(s, d).select(
-        col("doc_id"),
-        (col("doc_id") % 50).as("problem"),
-        ((col("doc_id") * 7) % 3 === 0).as("ok"))
-      val dict = TextAnalysis.passDict(
-        samples.where(col("doc_id") % 10 < 8), "problem", "ok")
-      TextAnalysis.passAtKFromDict(
-        TextAnalysis.passDictMerge(dict,
-          samples.where(col("doc_id") % 10 >= 8), "problem", "ok"),
-        ks = Seq(1, 5, 10))
-    }),
-    // best-of-n selection eval: per problem the reward-model argmax
-    // over the first n draws (draw order = doc_id; reward = exact
-    // two-decimal residue grid so the argmax replays bit-for-bit;
-    // ok = the pass@k residue rule) — measures what the RM picks,
-    // not whether anything passed
-    "q_best_of_n" -> ((s, d) => {
-      val samples = Tables.documents(s, d).select(
-        (col("doc_id") % 50).as("problem"),
-        col("doc_id").as("draw"),
-        (((col("doc_id") * 37) % 100).cast("double") / 100.0).as("reward"),
-        ((col("doc_id") * 7) % 3 === 0).as("ok"))
-      TextAnalysis.bestOfN(samples, "problem", "draw", "reward", "ok",
-        ns = Seq(1, 2, 4))
-    }),
-    // self-consistency: plurality answer over sampled decodes per
-    // problem vs gold (2/3 of samples emit gold's residue class, the
-    // rest a doc-keyed wrong answer — the oracle rebuilds the votes);
-    // smallest-answer tie-break keeps both engines deterministic
-    "q_self_consist" -> ((s, d) => {
-      val problem = col("doc_id") % 40
-      val samples = Tables.documents(s, d).select(
-        problem.as("problem"),
-        when(col("doc_id") % 3 =!= 0, problem % 4)
-          .otherwise(col("doc_id") % 5).cast("int").as("answer"),
-        (problem % 4).cast("int").as("gold"))
-      TextAnalysis.majorityVote(samples, "problem", "answer", "gold")
-    }),
-    // the incremental form of the vote board (same contract as
-    // q_pass_at_k_incr): 80 % seeds the (problem, answer) dictionary,
-    // the rest merges in; oracle = full replay
-    "q_self_consist_incr" -> ((s, d) => {
-      val problem = col("doc_id") % 40
-      val samples = Tables.documents(s, d).select(
-        col("doc_id"),
-        problem.as("problem"),
-        when(col("doc_id") % 3 =!= 0, problem % 4)
-          .otherwise(col("doc_id") % 5).cast("int").as("answer"),
-        (problem % 4).cast("int").as("gold"))
-      val dict = TextAnalysis.voteDict(
-        samples.where(col("doc_id") % 10 < 8), "problem", "answer", "gold")
-      TextAnalysis.majorityVoteFromDict(
-        TextAnalysis.voteDictMerge(dict,
-          samples.where(col("doc_id") % 10 >= 8),
-          "problem", "answer", "gold"))
-    }),
-    // the incremental form: a standing vote graph built from the first
-    // 80 % of docs, the rest MERGEd as a new batch — ratings from the
-    // merged graph must equal the full-history run, so the oracle IS
-    // the full replay (the q_covariance_incr / q_scd2_incr contract)
-    "q_bt_incr" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val base = Preference.btGraph(btGames(
-        docs.where(col("doc_id") % 10 < 8)))
-      Preference.btRatingsFromGraph(
-        Preference.btMerge(base,
-          btGames(docs.where(col("doc_id") % 10 >= 8))),
-        iterations = 3)
-    }),
-    // winnowing (MOSS) fingerprints: shift-invariant span fingerprinting
-    "q_winnow" -> ((s, d) =>
-      Dedup.winnowFingerprints(Tables.documents(s, d), k = 3, w = 4)),
-    // the MOSS match step: doc pairs sharing >= 2 winnowed fingerprints
-    "q_winnow_pairs" -> ((s, d) =>
-      Dedup.winnowPairs(Tables.documents(s, d), k = 3, w = 4,
-        minShared = 2, maxDocsPerFp = 64)),
-    // the cap-truncation report: how much the maxDocsPerFp guardrail
-    // actually dropped (the oracle mirrors the cap, so q_winnow_pairs
-    // alone cannot reveal it)
-    "q_winnow_stats" -> ((s, d) =>
-      Dedup.winnowPairsStats(Tables.documents(s, d), k = 3, w = 4,
-        maxDocsPerFp = 64)),
-    // incremental MOSS match: the increment (every 7th doc) probed
-    // against the standing winnow index of the rest — increment-sized
-    // work, snapshot text never read
-    "q_winnow_incr" -> ((s, d) =>
-      Dedup.winnowPairsAgainst(
-        Tables.documents(s, d).where(col("doc_id") % 7 === 0),
-        winnowSnapshot(s, d, 3))),
-    // the incremental probe at two resolutions: mirror-grade vs
-    // phrase-level hits against the reference corpus, per increment doc
-    "q_winnow_incr_mk" -> ((s, d) =>
-      Dedup.winnowPairsAgainstMultiK(
-        Tables.documents(s, d).where(col("doc_id") % 7 === 0),
-        winnowSnapshot(s, d, 3, 8))),
-    // multi-resolution match classes: an 8-gram fingerprint share means a
-    // ≥ 8-token verbatim run ('long'); 3-gram-only evidence is phrase
-    // overlap ('short') — the match-length signal one gram size can't give
-    "q_winnow_multik" -> ((s, d) =>
-      Dedup.winnowPairsMultiK(Tables.documents(s, d), kShort = 3, kLong = 8,
-        w = 4, minSharedShort = 2, minSharedLong = 1, maxDocsPerFp = 64)),
-    // one-row line-duplication health report (the lineDedup decision input)
-    "q_line_stats" -> ((s, d) =>
-      Dedup.lineStats(Tables.documents(s, d))),
-    // RefinedWeb-policy boilerplate removal: lines in >= 3 DISTINCT docs
-    // vanish everywhere (no keep-first survivor); the 2-doc "rare pair"
-    // line and the per-doc unique footers stay
-    "q_boilerplate" -> ((s, d) =>
-      Dedup.boilerplateScrub(boilerInject(Tables.documents(s, d)),
-        minDocs = 3)),
-    // incremental form: increment lines scrubbed against the standing
-    // line-frequency index + own-batch counts — the "cross boundary
-    // banner" line is hot ONLY because snapshot counts contribute
-    "q_boilerplate_incr" -> ((s, d) => {
-      val docs = boilerInject(Tables.documents(s, d))
-      val base = docs.where(col("doc_id") % 10 < 8)
-      val idx = Dedup.lineFreqIndex(base, IndexTables.ident("linefreq", base))
-      Dedup.boilerplateScrubApply(docs.where(col("doc_id") % 10 >= 8), idx,
-        minDocs = 3)
-    }),
-    // the ORACLED end-to-end ingest gate (exact-dup variant): snapshot
-    // docs (%10 < 8) maintain the standing line-freq index + cleaned-text
-    // fingerprint set; the increment is judged at increment cost —
-    // boilerplate removal, PII scrub, Gopher gate, eval-sentinel
-    // decontam flag, exact dup probe — one verdict row per incoming doc
-    "q_ingest_gate" -> ((s, d) => {
-      val (incr, idx, fps) = ingestGate(s, d)
-      Curation.ingestGateExact(incr, idx, ingestEvalGrams(s), fps, minDocs = 3)
-        .select(col("doc_id"), col("pass_struct"), col("pass_rep"),
-          col("contaminated"), col("dup_of_corpus"), col("keep"))
-    }),
-    // the one-row batch dashboard over the same gate verdicts: keeps +
-    // rejection-reason histogram (reasons independent, not a partition)
-    "q_ingest_report" -> ((s, d) => {
-      val (incr, idx, fps) = ingestGate(s, d)
-      Curation.ingestSummary(Curation.ingestGateExact(incr, idx,
-        ingestEvalGrams(s), fps, minDocs = 3))
-    }),
-    // conjunctive posting-list search over the query terms only
-    "q_search" -> ((s, d) =>
-      Retrieval.searchAll(Tables.documents(s, d), SEARCH_TERMS)),
-    // BM25 ranking of any-term matches (Robertson/Lucene idf form)
-    "q_bm25" -> ((s, d) =>
-      Retrieval.bm25(Tables.documents(s, d), BM25_TERMS)),
-    // the query-serving twin: same scores served from the persisted
-    // token-bucketed postings + one-row stats tables — no corpus text is
-    // read or tokenized at query time
-    "q_bm25_idx" -> ((s, d) => {
-      val (postings, stats) = bm25Index(s, d)
-      Retrieval.bm25FromIndex(postings, stats, BM25_TERMS)
-    }),
-    // the serving shape: top-25 by score from the standing index
-    // (TakeOrdered — per-partition heads + one k-row merge, no global sort)
-    "q_bm25_topk" -> ((s, d) => {
-      val (postings, stats) = bm25Index(s, d)
-      Retrieval.bm25TopK(postings, stats, BM25_TERMS, k = 25)
-    }),
-    // batch-of-queries serving: a whole query table scored from the
-    // standing index in one bucket-pruned pass (raw query text goes
-    // through the index-side tokenizer; q3's term misses the vocabulary
-    // and returns no rows). rank cast to long for the BIGINT oracle
-    "q_bm25_batch" -> ((s, d) => {
-      import s.implicits._
-      val (postings, stats) = bm25Index(s, d)
-      Retrieval.bm25TopKAll(postings, stats,
-        BM25_QUERIES.toDF("query_id", "query"), k = 10)
-        .withColumn("rank", col("rank").cast("long"))
-    }),
-    // RM3 pseudo-relevance feedback: 5 feedback docs pool score-weighted
-    // term frequencies, 3 strongest new terms expand each query, the
-    // expanded set rescored through the same standing-index path
-    "q_rm3" -> ((s, d) => {
-      import s.implicits._
-      val (postings, stats) = bm25Index(s, d)
-      Retrieval.rm3Expand(postings, stats,
-        BM25_QUERIES.toDF("query_id", "query"), k = 10, fbDocs = 5,
-        fbTerms = 3)
-        .withColumn("rank", col("rank").cast("long"))
-    }),
-    // exact phrase search straight off the corpus: consecutive-token
-    // match with occurrence count + first position; the repeated-term
-    // phrase exercises the distinct-slot vote (one "batch" posting must
-    // not fill both slots of "batch batch")
-    "q_phrase" -> ((s, d) =>
-      Retrieval.phraseSearch(Tables.documents(s, d), PHRASE_Q)),
-    // the serving twin: same phrase semantics from the standing
-    // token-bucketed POSITIONAL index — no corpus text at query time
-    "q_phrase_idx" -> ((s, d) =>
-      Retrieval.phraseFromIndex(positionalIndex(s, d), PHRASE_IDX_Q)),
-    // batch multi-phrase matching off the same standing index — the
-    // C4-blocklist gate shape; phrase 3's first term misses the
-    // vocabulary, so it must yield zero rows
-    "q_phrase_batch" -> ((s, d) => {
-      import s.implicits._
-      Retrieval.phraseSearchAll(positionalIndex(s, d),
-        PHRASE_BATCH.toDF("phrase_id", "phrase"))
-    }),
-    // lexical hard negatives: per query doc (ids 0-2), top-5 BM25-similar
-    // docs excluding itself and its exact-fingerprint copies — the
-    // retriever-training negative miner over the same standing index
-    "q_lex_negatives" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val (postings, stats) = bm25Index(s, d)
-      Retrieval.lexicalHardNegatives(postings, stats,
-        docs.where(col("doc_id") < 3).select("doc_id", "text"),
-        TextAnalysis.fingerprints(docs), k = 5)
-        .withColumn("rank", col("rank").cast("long"))
-    }),
-    // known-item retrieval eval off the standing index: each sampled
-    // doc's 5-token prefix queries for the doc itself; one-row MRR@10 /
-    // recall@1 / recall@10 (MRR in exact lcm-scaled integer arithmetic)
-    "q_retrieval_eval" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val (postings, stats) = bm25Index(s, d)
-      Retrieval.knownItemEval(postings, stats,
-        docs.where(col("doc_id") % 25 === 0), k = 10, queryTokens = 5)
-    }),
-    // nDCG@10 over the same standing index and known-item queries, with
-    // graded qrels: the query doc itself rel 3, its two successor docs
-    // rel 2 and 1 where they exist — deterministic and fully replayable
-    "q_ndcg" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val (postings, stats) = bm25Index(s, d)
-      val qd = docs.where(col("doc_id") % 25 === 0)
-      val qrels = qd.select(col("doc_id").as("query_id"))
-        .select(col("query_id"), explode(array(
-          struct(col("query_id").as("doc_id"), lit(3).as("rel")),
-          struct((col("query_id") + 1).as("doc_id"), lit(2).as("rel")),
-          struct((col("query_id") + 2).as("doc_id"), lit(1).as("rel"))))
-          .as("qr"))
-        .select(col("query_id"), col("qr.doc_id").as("doc_id"),
-          col("qr.rel").as("rel"))
-        .join(docs.select(col("doc_id")), Seq("doc_id"), "left_semi")
-      Retrieval.ndcgAtK(postings, stats, qd, qrels, k = 10, queryTokens = 5)
-    }),
-    // per-label class centroids: element-wise mean pooling of embeddings
-    // in long (label, n, dim, m) format — the compare gate hashes scalar
-    // columns only, and the long form skips the array-reassembly shuffle
-    "q_embed_pool" -> ((s, d) =>
-      Similarity.meanPoolLong(Tables.embeddings(s, d), col("label"))
-        .select(col("grp").as("label"), col("n"),
-          col("i").as("dim"), round(col("m"), 6).as("m"))),
-    // dense leg of hybrid retrieval: feature-hashed query vectors scored
-    // by cosine against the hashed corpus — the exact-recall baseline the
-    // ANN legs are measured against; WindowGroupLimit's partial pass
-    // bounds the pre-shuffle volume to parts×k rows per query
-    "q_dense_topk" -> ((s, d) => {
-      import s.implicits._
-      Retrieval.denseTopKAll(Tables.documents(s, d),
-        BM25_QUERIES.toDF("query_id", "query"), k = 10)
-        .withColumn("rank", col("rank").cast("long"))
-    }),
-    // reciprocal-rank fusion of the lexical (BM25, standing index) and
-    // dense (hashed-vector cosine) runs — rank-only hybrid retrieval, no
-    // score calibration; q3's term misses the lexical vocabulary
-    // entirely, so its fused list is the dense run alone (n_runs = 1)
-    "q_rrf" -> ((s, d) => {
-      import s.implicits._
-      val docs = Tables.documents(s, d)
-      val (postings, stats) = bm25Index(s, d)
-      val qt = BM25_QUERIES.toDF("query_id", "query")
-      val lex = Retrieval.bm25TopKAll(postings, stats, qt, k = 10)
-      val dense = Retrieval.denseTopKAll(docs, qt, k = 10)
-      Retrieval.rrfFuse(Seq(lex, dense), topK = 10)
-    }),
-    // population covariance of the embedding table in long (i, j, cov)
-    // form: one moment-sums scan (shuffle = (d²+d+1) partials per
-    // partition, never N), then d²-row algebra — the statistics half of
-    // PCA/whitening (pcaTop / pcaWhiten, spec-pinned driver-side eigen)
-    "q_covariance" -> ((s, d) =>
-      Similarity.covarianceLong(Tables.embeddings(s, d), dim = 64)),
-    // MMR diversified re-rank of the dense run: greedily pick 5 of each
-    // query's top-10 maximizing λ·rel − (1−λ)·max-sim-to-selected — the
-    // dedup-aware serving head; every frame is (queries × k)-sized, the
-    // oracle is a per-step unrolled replay (the q_pagerank convention)
-    "q_mmr" -> ((s, d) => {
-      import s.implicits._
-      val docs = Tables.documents(s, d)
-      val run = Retrieval.denseTopKAll(docs,
-        BM25_QUERIES.toDF("query_id", "query"), k = 10)
-      Retrieval.mmrRerank(run, TextAnalysis.hashEmbed(docs, 64),
-        m = 5, lambda = 0.7)
-    }),
-    // product-quantization ANN: m=8 nibble codes per 64-dim vector
-    // (64x compression — the RAM-resident 100 TB store layout), ADC
-    // top-10 for query vec 0. Trains LIVE; the oracle replays encode +
-    // ADC under the PINNED sf0.01 codebooks (PQ_CODEBOOK_PINNED), so
-    // trainer drift flips the row red. Recall vs brute force stays
-    // spec-asserted
-    "q_pq_topk" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val cb = Similarity.pqTrain(emb, m = 8, k = 16)
-      val q = emb.where(col("vec_id") === 0L)
-        .select(col("embedding").cast("array<double>"))
-        .head().getSeq[Double](0).toArray
-      Similarity.pqTopK(
-        Similarity.pqEncode(emb.where(col("vec_id") =!= 0L), cb), cb, q, 10)
-    }),
-    // the FAISS layout end-to-end: one standing (vec_id, cell, codes)
-    // table bucketed by cell; probe -> ADC -> exact rescore. At full
-    // coverage (nprobe = kCells, shortlist >= corpus) this IS brute
-    // force — which is what lets the driver hash-oracle it; production
-    // dials nprobe/shortlist down and pays only recall
-    "q_ivfpq_topk" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val rest = emb.where(col("vec_id") =!= 0L)
-      val name = IndexTables.ident("ivfpqr", rest)
-      val (cents, cbs, idx) =
-        Similarity.ivfPqIndex(rest, kCells = 8, m = 8, kCodes = 16, name)
-      val q = emb.where(col("vec_id") === 0L)
-        .select(col("embedding").cast("array<double>"))
-        .head().getSeq[Double](0).toArray
-      Similarity.ivfPqTopK(idx, rest, cents, cbs, q, 10, nprobe = 8,
-        shortlist = 4096)
-    }),
-    // the production two-stage form: ADC shortlist (100) -> exact
-    // rescore of only those rows (measured 0.5 -> 0.9 recall@10 here).
-    // Oracled off the pinned codebooks like q_pq_topk
-    "q_pq_refined" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val cb = Similarity.pqTrain(emb, m = 8, k = 16)
-      val q = emb.where(col("vec_id") === 0L)
-        .select(col("embedding").cast("array<double>"))
-        .head().getSeq[Double](0).toArray
-      val rest = emb.where(col("vec_id") =!= 0L)
-      Similarity.pqTopKRefined(Similarity.pqEncode(rest, cb), rest, cb,
-        q, 10, shortlist = 100)
-    }),
-    // embedding-store sanity gate: per-vector norm, NaN/zero/ragged
-    // flags, norm z-score vs the corpus — the screen that runs BEFORE
-    // any vector reaches an ANN index
-    "q_vec_quality" -> ((s, d) =>
-      Similarity.vectorQuality(Tables.embeddings(s, d), dim = 64)),
-    // leg-overlap diagnostics: how much the lexical and dense top-10s
-    // actually intersect per query — the measurement that justifies (or
-    // kills) RRF; q3 is lexical-miss so its row reports n_a = 0
-    "q_run_overlap" -> ((s, d) => {
-      import s.implicits._
-      val docs = Tables.documents(s, d)
-      val (postings, stats) = bm25Index(s, d)
-      val qt = BM25_QUERIES.toDF("query_id", "query")
-      Retrieval.runOverlap(
-        Retrieval.bm25TopKAll(postings, stats, qt, k = 10),
-        Retrieval.denseTopKAll(docs, qt, k = 10))
-    }),
-    // rank-biased overlap between the same two runs — TOP-WEIGHTED
-    // agreement (reversed top-10s read Jaccard 1.0 but low RBO)
-    "q_rbo" -> ((s, d) => {
-      import s.implicits._
-      val docs = Tables.documents(s, d)
-      val (postings, stats) = bm25Index(s, d)
-      val qt = BM25_QUERIES.toDF("query_id", "query")
-      Retrieval.rboOverlap(
-        Retrieval.bm25TopKAll(postings, stats, qt, k = 10),
-        Retrieval.denseTopKAll(docs, qt, k = 10))
-    }),
-    // Flesch reading ease per document — exact integer counts in the
-    // scan stage (no per-token explode), float only in the final formula
-    "q_readability" -> ((s, d) =>
-      TextAnalysis.readability(Tables.documents(s, d))),
-    // distinct-1/distinct-2 diversity per source — the mode-collapse /
-    // templated-spam audit for generated or scraped corpora
-    "q_diversity" -> ((s, d) =>
-      TextAnalysis.ngramDiversity(Tables.documents(s, d))),
-    // PMI collocations: top-50 adjacent word pairs by pointwise mutual
-    // information (count fence ≥ 5) — the multiword-unit miner; sort key
-    // is the ROUNDED pmi in both engines
-    "q_pmi" -> ((s, d) =>
-      TextAnalysis.pmiCollocations(Tables.documents(s, d))),
-    // Zipf rank-frequency fit over the top-100 words — the one-scalar
-    // "is this natural language" corpus-health check (natural ≈ −1)
-    "q_zipf" -> ((s, d) =>
-      TextAnalysis.zipfFit(Tables.documents(s, d))),
-    // incremental covariance maintenance: the base corpus's moment sums
-    // STAND as a (d²+d+1)-row artifact, the day's increment is the only
-    // thing scanned, and the merged covariance must equal a full-corpus
-    // rebuild — the oracle IS the full q_covariance replay
-    "q_covariance_incr" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val base = emb.where(col("vec_id") % 10 < 8)
-      val name = IndexTables.ident("moments64", emb)
-      Similarity.covarianceFromSums(
-        Similarity.covarianceMerge(
-          Similarity.momentsTable(s, base, 64, name),
-          Similarity.momentSums(emb.where(col("vec_id") % 10 >= 8), 64))
-          .localCheckpoint(true), 64)
-    }),
-    // ---- web provenance: URL canonicalization & domain rollups ----
-    // deterministic URL synthesis (urlInject): mixed-case scheme/host,
-    // default ports, tracking params, unsorted params, trailing slashes
-    // and fragments — every rule normalizeUrl owns, replayed verbatim in
-    // the oracle
-    "q_url_norm" -> ((s, d) =>
-      WebCuration.urlCanonical(urlInject(Tables.documents(s, d)),
-        "doc_id", "url")),
-    "q_domain_stats" -> ((s, d) =>
-      WebCuration.domainStats(urlInject(Tables.documents(s, d)),
-        "doc_id", "url", "n_chars")),
-    // heavy-tail guard: no registered domain contributes more than
-    // DOMAIN_CAP docs; keep decision by salted hash clock, domain-
-    // partitioned window (parallel across domains)
-    "q_domain_cap" -> ((s, d) =>
-      WebCuration.domainCap(urlInject(Tables.documents(s, d)),
-        "doc_id", "url", DOMAIN_CAP)),
-    // ---- privacy release gates ----
-    // k-anonymity over the (nation, market-segment) quasi-identifier:
-    // groups of fewer than K customers re-identify their members
-    "q_k_anon" -> ((s, d) =>
-      Scrub.kAnonymityAudit(Tables.customer(s, d),
-        Seq("c_nationkey", "c_mktsegment"), K_ANON)),
-    // l-diversity: nations whose customers concentrate in < L distinct
-    // market segments leak the segment through the nation alone
-    "q_l_diversity" -> ((s, d) =>
-      Scrub.lDiversityAudit(Tables.customer(s, d),
-        Seq("c_nationkey"), "c_mktsegment", L_DIV)),
-    // ---- code/licensing provenance ----
-    // SPDX tags + license-name patterns over deterministically injected
-    // license texts (doc 0 is dual-licensed by construction)
-    "q_license_scan" -> ((s, d) =>
-      TextAnalysis.licenseScan(Tables.documents(s, d).select(col("doc_id"),
-        concat(col("text"),
-          when(col("doc_id") % 8 === 0,
-            lit(" SPDX-License-Identifier: MIT")).otherwise(lit("")),
-          when(col("doc_id") % 12 === 0,
-            lit(" Licensed under the Apache License, Version 2.0"))
-            .otherwise(lit("")),
-          when(col("doc_id") % 15 === 0,
-            lit(" under the GNU General Public License v3"))
-            .otherwise(lit(""))).as("text")))),
-    // code-vs-prose router signals over an injected code block (every
-    // 9th doc) — statement/indent/comment line fractions, symbol mass,
-    // keyword hits, integer-threshold is_code flag
-    "q_code_signals" -> ((s, d) =>
-      TextAnalysis.codeSignals(Tables.documents(s, d).select(col("doc_id"),
-        concat(col("text"),
-          when(col("doc_id") % 9 === 0, lit(CODE_BLOCK)).otherwise(lit("")))
-          .as("text")))),
-    // domain blocklist filter: the canonical provenance chain ending in
-    // a bloom anti-join against the blocked registered domains — at
-    // 100 TB the blocklist is the big side and non-hits bypass the
-    // shuffle entirely (the q_incr_dedup shape)
-    "q_domain_block" -> ((s, d) => {
-      import s.implicits._
-      BloomJoin.bloomAntiJoin(
-        WebCuration.urlCanonical(urlInject(Tables.documents(s, d)),
-          "doc_id", "url").select("doc_id", "reg_domain"),
-        BLOCKED_DOMAINS.toDF("reg_domain"), "reg_domain")
-    }),
-    // curriculum order: easy-to-hard stages by unigram surprisal
-    // (distributed bucket fit), deterministic shard/pos replay within
-    // each stage — ordered difficulty between stages, shuffled within
-    "q_curriculum" -> ((s, d) =>
-      Sampling.curriculumOrder(
-        TextAnalysis.surprisalScores(Tables.documents(s, d))
-          .select(col("doc_id"), col("avg_surprisal")),
-        "doc_id", "avg_surprisal", CURRICULUM_STAGES)),
-    // crawl-frontier URL dedup: increment probes the standing canonical
-    // -URL fingerprint index (bloom anti-join — never-seen URLs bypass
-    // the shuffle), keep-first within the increment
-    "q_url_frontier" -> ((s, d) => {
-      val all = urlInject(Tables.documents(s, d))
-      WebCuration.urlFrontierApply(
-        all.where(col("doc_id") % 10 >= 8),
-        WebCuration.urlFrontierIndex(
-          all.where(col("doc_id") % 10 < 8), "url"),
-        "doc_id", "url")
-    }),
-    // incremental cap: base batch fills each domain's quota, the
-    // increment admits only into the remainder (arrival-order semantics
-    // — already-shipped base rows are never evicted; the
-    // q_boilerplate_incr standing-index convention)
-    "q_domain_cap_incr" -> ((s, d) => {
-      val all = urlInject(Tables.documents(s, d))
-      val base = all.where(col("doc_id") % 10 < 8)
-      val incr = all.where(col("doc_id") % 10 >= 8)
-      WebCuration.domainCapApply(incr,
-        WebCuration.domainCapIndex(
-          WebCuration.domainCap(base, "doc_id", "url", DOMAIN_CAP_INCR)),
-        "doc_id", "url", DOMAIN_CAP_INCR)
-    }),
-    // ---- multi-column layout: Z-order locality audit ----
-    // Morton keys over (l_partkey, l_suppkey), bucketed at file
-    // granularity: EVERY column's per-bucket span must shrink toward
-    // range/sqrt(nBuckets) — the data-skipping evidence a single-column
-    // sort cannot give. All-integer arithmetic, bit-identical oracle.
-    "q_zorder" -> ((s, d) =>
-      Partitioning.zOrderAudit(Tables.lineitem(s, d),
-        Seq("l_partkey", "l_suppkey"), bits = 8, nBuckets = 16)),
-    // the WRITE-side proof: z-cluster lineitem into 8 parquet files and
-    // audit the manifest — exactly 8 files, rows conserved, and the
-    // files' zval ranges pairwise DISJOINT (range partitioning's
-    // guarantee, independent of its sampled boundaries; the per-file
-    // dual-column span evidence is asserted in SinksRichSpec where the
-    // layout is deterministic)
-    "q_zorder_files" -> ((s, d) => {
-      val dir = "/tmp/graft_zorder_files/" + d.replaceAll("[^A-Za-z0-9]", "_")
-      Sinks.writeZOrdered(
-        Tables.lineitem(s, d).select("l_orderkey", "l_partkey", "l_suppkey"),
-        dir, nFiles = 8, Seq("l_partkey", "l_suppkey"), bits = 8)
-      val m = Sinks.shardManifest(s, dir, Seq("zval")).localCheckpoint()
-      val a = m.select(col("file").as("fa"), col("min_zval").as("amin"),
-        col("max_zval").as("amax"))
-      val b = m.select(col("file").as("fb"), col("min_zval").as("bmin"),
-        col("max_zval").as("bmax"))
-      val ov = a.join(b, col("fa") < col("fb") &&
-          col("amin") <= col("bmax") && col("bmin") <= col("amax"))
-        .agg(count(lit(1)).as("n_overlaps"))
-      m.agg(countDistinct("file").as("n_files"),
-          sum("n_rows").as("total_rows"))
-        .crossJoin(ov)
-    }),
-  )
-
-  /** q_domain_mix / q_heavy_hitters parameters — shared constants so the
-    * oracle SQL below interpolates exactly what the Spark entries run
-    * (the QUALITY_W / LANG_PROFILES convention).
-    */
-  private val MIX_BUDGETS = Map("src0" -> 500L, "src1" -> 100L)
-  private val MIX_DEFAULT_BUDGET = 300L
-  private val MIX_RATE = 0.6
-  private val HH_PHI = 0.02
-  private val TEMP_ALPHA = 0.5
-  private val TEMP_TOTAL = 200L
-  private val QRANK_KEEP = 0.4
-  private val PPL_RATES = Seq(1.0, 0.8, 0.5, 0.25, 0.1)
-
-  /** q_dsir_mix keep rates, ASCENDING by bucket — DSIR importance
-    * RESAMPLING keeps more of the target-like tail (high log-weight =
-    * bucket 5), the mirror image of the perplexity filter's
-    * keep-the-head PPL_RATES.
-    */
-  private val DSIR_RATES = Seq(0.1, 0.25, 0.5, 0.8, 1.0)
-
-  /** q_gopher_rep's injected 12-token phrase — doubled, every 5..10-gram
-    * inside it duplicates and the top-2/3/4-gram mass concentrates.
-    */
-  private val GOPHER_REP_PHRASE =
-    "the quick brown fox jumps over the lazy dog again and again"
-  private val SEARCH_TERMS = Seq("stream", "join", "filter")
-  private val BM25_TERMS = Seq("stream", "join")
-  // repeated-term phrase on purpose: exercises the distinct-slot vote
-  private val PHRASE_Q = "batch batch"
-  private val PHRASE_IDX_Q = "stream spark"
-  private val PHRASE_BATCH: Seq[(Long, String)] = Seq(
-    (1L, "batch batch"), (2L, "stream spark"), (3L, "zzznosuchterm data"))
-
-  /** q_bm25_batch's query table: raw (un-normalized) text on purpose —
-    * the serving path must tokenize queries exactly like the corpus; q3
-    * is a vocabulary miss that must yield zero rows, not an error.
-    */
-  private val BM25_QUERIES: Seq[(Long, String)] = Seq(
-    (1L, "Stream JOIN"),
-    (2L, "filter stream window"),
-    (3L, "zzznosuchterm"))
-
-  /** DuckDB mirror of Core.tokensUni — the script-aware tokenizer every
-    * LLM-pipeline oracle uses. RE2's `\p{L}`/`\p{Nd}` matches Java's.
-    */
-  private val TOKS =
-    "list_filter(string_split_regex(lower(text), '[^\\p{L}\\p{Nd}]+'), x -> x <> '')"
-
-  /** DuckDB mirror of Core.tokens — the reference-fidelity ASCII form,
-    * used only by the word-count oracle.
-    */
-  private val TOKS_ASCII =
-    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')"
-
-  /** DuckDB mirror of TextAnalysis.fingerprint incl. the zero-token guard
-    * (`raw:`-prefixed md5 of the raw text — untokenizable documents never
-    * share a fingerprint unless byte-identical). `toksExpr` must be
-    * evaluated in a scope where `text` is also in scope.
-    */
-  /** DuckDB mirror of [[urlInject]] + WebCuration's parse/normalize/
-    * registered-domain chain. Exposes CTEs `urls` (raw), `rd` (adds
-    * host, norm_url, reg_domain). The regexes and the multi-suffix list
-    * interpolate from the Scala constants — one definition per rule.
-    */
-  private def urlCtes: String = {
-    val suffixes = WebCuration.MULTI_SUFFIXES
-      .map(sfx => s"'$sfx'").mkString(", ")
-    "urls AS (SELECT doc_id, n_chars, " +
-      "CASE WHEN doc_id % 4 = 0 THEN 'HTTPS://WWW.' ELSE 'https://' END || source || " +
-      "CASE WHEN doc_id % 3 = 0 THEN '.co.uk' ELSE '.org' END || " +
-      "CASE WHEN doc_id % 5 = 0 THEN ':443' ELSE '' END || " +
-      "'/p/' || CAST(doc_id % 50 AS VARCHAR) || " +
-      "CASE WHEN doc_id % 4 = 0 THEN '/' ELSE '' END || " +
-      "CASE WHEN doc_id % 2 = 0 THEN '?utm_source=feed&b=2&a=1' ELSE '?b=2&a=1' END || " +
-      "CASE WHEN doc_id % 6 = 0 THEN '#frag' ELSE '' END AS url FROM documents), " +
-      "parts AS (SELECT doc_id, n_chars, url, " +
-      "lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme, " +
-      "lower(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#:]+)', 1)) AS host, " +
-      "regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#:]+:([0-9]+)', 1) AS port, " +
-      "regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]+([^?#]*)', 1) AS path, " +
-      "regexp_extract(url, '\\?([^#]*)', 1) AS qq FROM urls), " +
-      "qs AS (SELECT *, array_to_string(list_sort(list_filter(" +
-      "string_split(qq, '&'), p -> p <> '' AND NOT regexp_matches(p, " +
-      s"'${WebCuration.TRACKING_PARAM_RE}'))), '&') AS q2 FROM parts), " +
-      "norm AS (SELECT doc_id, n_chars, url, host, scheme || '://' || host || " +
-      "CASE WHEN port <> '' AND NOT ((scheme = 'https' AND port = '443') " +
-      "OR (scheme = 'http' AND port = '80')) THEN ':' || port ELSE '' END || " +
-      "CASE WHEN path = '' THEN '/' WHEN length(path) > 1 AND path LIKE '%/' " +
-      "THEN substring(path, 1, length(path) - 1) ELSE path END || " +
-      "CASE WHEN q2 <> '' THEN '?' || q2 ELSE '' END AS norm_url FROM qs), " +
-      "rd AS (SELECT *, CASE WHEN len(labels) >= 3 AND " +
-      s"array_to_string(labels[-2:], '.') IN ($suffixes) " +
-      "THEN array_to_string(labels[-3:], '.') " +
-      "WHEN len(labels) >= 2 THEN array_to_string(labels[-2:], '.') " +
-      "ELSE host END AS reg_domain FROM " +
-      "(SELECT *, string_split(host, '.') AS labels FROM norm) lb)"
-  }
-
-  private def fpSql(toksExpr: String): String =
-    s"CASE WHEN len($toksExpr) > 0 THEN md5(array_to_string($toksExpr, ' ')) " +
-      "ELSE 'raw:' || md5(text) END"
-
-  /** DuckDB mirror of TextAnalysis.NON_ALNUM_RE (same literal — RE2 and
-    * Java agree on these Unicode categories).
-    */
-  private val NON_ALNUM_SQL = ops.TextAnalysis.NON_ALNUM_RE
-
-  /** DuckDB replay of Retrieval's phrase-alignment vote: positions from a
-    * zipped unnest, each matched posting votes for start = pos − slot, a
-    * start with all DISTINCT slots present is an occurrence. Shared by
-    * q_phrase (direct) and q_phrase_idx (standing positional index) — the
-    * index path must land on identical rows by construction.
-    */
-  private def phraseSql(phrase: String): String = {
-    val ts = phrase.toLowerCase.split("[^\\p{L}\\p{Nd}]+")
-      .filter(_.nonEmpty).toSeq
-    val slots = ts.zipWithIndex
-      .map { case (t, i) => s"('$t', $i)" }.mkString(", ")
-    val terms = ts.distinct.map(t => s"'$t'").mkString(", ")
-    s"WITH t AS (SELECT doc_id, $TOKS AS toks FROM documents), " +
-      "p AS (SELECT doc_id, unnest(toks) AS token, " +
-      "unnest(range(len(toks))) AS pos FROM t), " +
-      s"tp AS (SELECT * FROM p WHERE token IN ($terms)), " +
-      s"qt(token, slot) AS (VALUES $slots), " +
-      "al AS (SELECT doc_id, pos - slot AS start FROM tp JOIN qt USING (token) " +
-      s"GROUP BY doc_id, pos - slot " +
-      s"HAVING count(DISTINCT slot) = ${ts.size} AND pos - slot >= 0) " +
-      "SELECT doc_id, count(*) AS n_matches, " +
-      "CAST(min(start) AS BIGINT) AS first_pos FROM al GROUP BY doc_id"
-  }
-
-  /** Shared SymSpell CTE chain (q_typo_clusters AND q_typo_apply): the
-    * injected-typo corpus `base`, per-doc token lists `t2`, vocabulary
-    * `v`, delete-neighborhood keys `k`, verified candidate pairs `p`,
-    * ranked canonicals `c` (rn = 1 is the winner).
-    */
-  private val TYPO_CTES =
-    "base AS (SELECT doc_id, CASE WHEN doc_id % 11 = 0 " +
-      "THEN text || ' batc batchh batxh abtch' ELSE text END AS text " +
-      "FROM documents), " +
-      s"t2 AS (SELECT doc_id, $TOKS AS toks FROM base), " +
-      "vo AS (SELECT unnest(toks) AS word FROM t2), " +
-      "v AS (SELECT word, count(*) AS freq FROM vo GROUP BY word), " +
-      "k AS (SELECT word, freq, unnest(list_distinct(list_prepend(word, " +
-      "list_transform(range(1, len(word)+1), " +
-      "i -> substr(word, 1, i-1) || substr(word, i+1, len(word)))))) AS key " +
-      "FROM v), " +
-      "p AS (SELECT a.word AS word, b.word AS cand, b.freq AS cfreq " +
-      "FROM k a JOIN k b USING (key) " +
-      "WHERE len(a.word) >= 4 AND a.word <> b.word " +
-      "AND levenshtein(a.word, b.word) <= 1 " +
-      "AND b.freq > a.freq AND b.freq >= 2 * a.freq), " +
-      "c AS (SELECT word, cand, cfreq, row_number() OVER " +
-      "(PARTITION BY word ORDER BY cfreq DESC, cand) AS rn FROM p)"
-
-  /** DuckDB mirror of Sampling.hashKey (salt ""): fixed-width 9-digit hex. */
-  private val HASHKEY =
-    "'0' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8)"
-
-  /** Shared SCD2 replay (q_scd2 AND q_scd2_incr — the incremental fold
-    * equals the full-history recompute by contract): run ids from a
-    * running opener-flag sum, per-run seen-through from the last
-    * underlying change, lead() over the openers for valid_to.
-    */
-  private val SCD2_SQL =
-    "WITH o AS (SELECT user_id, ts, event_id, event_type, " +
-      "lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev, " +
-      "row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn " +
-      "FROM events), " +
-      "o2 AS (SELECT *, sum(CASE WHEN rn = 1 OR prev IS DISTINCT FROM event_type " +
-      "THEN 1 ELSE 0 END) OVER (PARTITION BY user_id ORDER BY ts, event_id " +
-      "ROWS UNBOUNDED PRECEDING) AS run FROM o), " +
-      "sn AS (SELECT user_id, run, ts AS seen_ts, event_id AS seen_ord FROM " +
-      "(SELECT user_id, run, ts, event_id, row_number() OVER " +
-      "(PARTITION BY user_id, run ORDER BY ts DESC, event_id DESC) AS rd FROM o2) " +
-      "WHERE rd = 1), " +
-      "v AS (SELECT user_id, ts, event_id, event_type, run FROM o2 " +
-      "WHERE rn = 1 OR prev IS DISTINCT FROM event_type) " +
-      "SELECT v.user_id, CAST(run AS INT) AS version, " +
-      "event_type AS state, ts AS valid_from, " +
-      "lead(ts) OVER (PARTITION BY v.user_id ORDER BY ts, event_id) AS valid_to, " +
-      "CAST(lead(ts) OVER (PARTITION BY v.user_id ORDER BY ts, event_id) " +
-      "IS NULL AS INT) AS is_current, seen_ts, seen_ord " +
-      "FROM v JOIN sn USING (user_id, run)"
-
-  /** v6 recipe bucket rates: keep quintiles 1-3 wholesale, thin 4 and 5. */
-  private val V6_PPL_RATES = Seq(1.0, 1.0, 1.0, 0.5, 0.1)
-
-  /** The v6 fractional-rate bucket predicate, shared by the v6 and v7
-    * recipe oracles.
-    */
-  private lazy val v6PplPredicate: String =
-    "'0' || substring(md5('ppl' || CAST(doc_id AS VARCHAR)), 1, 8) < " +
-      "CASE bucket " + V6_PPL_RATES.zipWithIndex.map { case (r, i) =>
-        s"WHEN ${i + 1} THEN '${ops.Sampling.hexThreshold(r)}'"
-      }.mkString(" ") + " END"
-
-  /** DuckDB replay of `Graph.pageRank` over the events page-transition
-    * graph: the synchronous update is deterministic given the edge list,
-    * so a fixed iteration count unrolls into per-iteration (dangling,
-    * contribution, rank) CTE triples generated by the same loop shape the
-    * Spark side runs — iteration count and damping cannot drift between
-    * engines because both read the same parameters here.
-    */
-  private def pageRankSql(iters: Int, d: String): String = {
-    val base =
-      "tr AS (SELECT user_id, ts, event_id, " +
-        "CAST(regexp_extract(props, '\"k\": (\\d+)', 1) AS INT) AS page FROM events), " +
-        "tr2 AS (SELECT page AS src, lead(page) OVER " +
-        "(PARTITION BY user_id ORDER BY ts, event_id) AS dst FROM tr), " +
-        // edges (od + sh + 2× nodes), sh (per-iteration), nodes, and
-        // every r$i (2 refs per iteration) are MATERIALIZED: the
-        // iteration chain otherwise re-expands ~3× per unrolled step
-        // under DuckDB's per-reference inlining — the q_mmr disease
-        "edges AS MATERIALIZED (SELECT src, dst, CAST(count(*) AS DOUBLE) AS w FROM tr2 " +
-        "WHERE dst IS NOT NULL GROUP BY src, dst), " +
-        "od AS (SELECT src, sum(w) AS deg FROM edges GROUP BY src), " +
-        "sh AS MATERIALIZED (SELECT e.src, e.dst, e.w / od.deg AS share FROM edges e JOIN od USING (src)), " +
-        "nodes AS MATERIALIZED (SELECT DISTINCT src AS node FROM edges " +
-        "UNION SELECT DISTINCT dst FROM edges), " +
-        "nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes), " +
-        "r0 AS MATERIALIZED (SELECT node, 1.0 / nn.n AS r FROM nodes, nn)"
-    val its = (0 until iters).map { i =>
-      s"dang$i AS (SELECT coalesce(sum(r), 0) AS m FROM r$i " +
-        "WHERE node NOT IN (SELECT src FROM sh)), " +
-        s"c$i AS (SELECT sh.dst AS node, sum(r$i.r * sh.share) AS c " +
-        s"FROM sh JOIN r$i ON sh.src = r$i.node GROUP BY sh.dst), " +
-        s"r${i + 1} AS MATERIALIZED (SELECT nodes.node, (1.0 - $d) / nn.n + " +
-        s"$d * (coalesce(c$i.c, 0) + dang$i.m / nn.n) AS r " +
-        s"FROM nodes LEFT JOIN c$i USING (node), nn, dang$i)"
-    }.mkString(", ")
-    s"WITH $base, $its SELECT node, round(r, 6) AS rank FROM r$iters"
-  }
-
-  /** DuckDB mirror of TextAnalysis.hashEmbedLong: the md5-prefix bucket +
-    * sign-digit CTE chain, ending in `sv(doc_id, dim_idx, value)`. ONE
-    * definition for q_hash_embed and q_semdedup_text, so the hashing
-    * scheme cannot drift between the two oracles.
-    */
-  private def hashEmbedCtes(dim: Int): String =
-    s"t AS (SELECT doc_id, unnest($TOKS) AS tok FROM documents), " +
-      "h AS (SELECT doc_id, md5(tok) AS hx FROM t), " +
-      "hb AS (SELECT doc_id, " +
-      s"CAST(CAST(('0x' || substring(hx, 1, 8)) AS UBIGINT) % $dim AS INT) AS dim_idx, " +
-      "CASE WHEN CAST(('0x' || substring(hx, 9, 1)) AS UBIGINT) % 2 = 0 " +
-      "THEN 1.0 ELSE -1.0 END AS sgn FROM h), " +
-      "sv AS (SELECT doc_id, dim_idx, sum(sgn) AS value FROM hb " +
-      "GROUP BY doc_id, dim_idx)"
-
-  /** DuckDB mirror of the TextAnalysis.dsirLogRatios + dsirScores chain
-    * — ONE definition for q_dsir and q_dsir_mix so the score cannot
-    * drift between the standalone scoring and the resample. Ends in
-    * `ds(doc_id, n_tokens, dsir_logw)`; target = lang='en', alpha=1.
-    */
-  private def dsirCtes(dim: Int): String =
-    s"t AS (SELECT doc_id, unnest($TOKS) AS tok FROM documents), " +
-      "h AS (SELECT doc_id, md5(tok) AS hx FROM t), " +
-      "hb AS (SELECT doc_id, " +
-      s"CAST(CAST(('0x' || substring(hx, 1, 8)) AS UBIGINT) % $dim AS INT) AS b FROM h), " +
-      "cd AS (SELECT doc_id, b, CAST(count(*) AS DOUBLE) AS c FROM hb GROUP BY 1, 2), " +
-      s"grid AS (SELECT CAST(range AS INT) AS b FROM range($dim)), " +
-      "craw AS (SELECT g.b, coalesce(sum(cd.c), 0.0) AS c FROM grid g " +
-      "LEFT JOIN cd ON cd.b = g.b GROUP BY g.b), " +
-      "ctgt AS (SELECT g.b, coalesce(sum(cd.c), 0.0) AS c FROM grid g " +
-      "LEFT JOIN (SELECT cd.* FROM cd JOIN documents USING (doc_id) " +
-      "WHERE lang = 'en') cd ON cd.b = g.b GROUP BY g.b), " +
-      s"nr AS (SELECT sum(c) + $dim.0 AS n FROM craw), " +
-      s"nt AS (SELECT sum(c) + $dim.0 AS n FROM ctgt), " +
-      "lr AS (SELECT r.b, ln((tg.c + 1.0) / nt.n) - ln((r.c + 1.0) / nr.n) AS lr " +
-      "FROM craw r JOIN ctgt tg ON tg.b = r.b, nr, nt), " +
-      "sc AS (SELECT cd.doc_id, sum(cd.c * lr.lr) AS s FROM cd " +
-      "JOIN lr ON lr.b = cd.b GROUP BY 1), " +
-      s"ds AS (SELECT d.doc_id, CAST(len($TOKS) AS BIGINT) AS n_tokens, " +
-      // + 0.0: -0.0 normalization (see lshPairCtes note)
-      "round(coalesce(sc.s, 0.0), 4) + 0.0 AS dsir_logw " +
-      "FROM documents d LEFT JOIN sc ON sc.doc_id = d.doc_id)"
-
-  /** WITH-body producing the two ranked runs the run-comparison oracles
-    * (q_run_overlap, q_rbo) share: `lr` (BM25 lexical top-10) and `dr`
-    * (dense hashed-vector top-10), both (query_id, doc_id, rank).
-    */
-  private def twoRunsCtes: String = {
-    val qVals = BM25_QUERIES
-      .map { case (id, q) => s"($id, '$q')" }.mkString(", ")
-    val qToks = TOKS.replace("lower(text)", "lower(query)")
-    s"q AS (SELECT CAST(query_id AS BIGINT) AS query_id, query " +
-      s"FROM (VALUES $qVals) v(query_id, query)), " +
-      s"qt AS (SELECT query_id, unnest(list_distinct($qToks)) AS token FROM q), " +
-      s"t AS (SELECT doc_id, $TOKS AS toks FROM documents), " +
-      "stats AS (SELECT count(*) AS n_docs, " +
-      "avg(CAST(len(toks) AS DOUBLE)) AS avgdl FROM t), " +
-      "terms AS (SELECT DISTINCT token FROM qt), " +
-      "tp2 AS (SELECT doc_id, token, " +
-      "CAST(len(list_filter(toks, x -> x = token)) AS DOUBLE) AS tf, " +
-      "CAST(len(toks) AS DOUBLE) AS dl " +
-      "FROM t JOIN terms ON list_contains(toks, token)), " +
-      "dfs AS (SELECT token, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df " +
-      "FROM tp2 GROUP BY token), " +
-      "sc AS (SELECT qt.query_id, tp2.doc_id, " +
-      "round(sum(ln(1 + (n_docs - df + 0.5) / (df + 0.5)) * " +
-      "tf * (1.2 + 1) / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))), 4) AS score " +
-      "FROM tp2 JOIN dfs USING (token) JOIN qt USING (token), stats " +
-      "GROUP BY qt.query_id, tp2.doc_id), " +
-      "lr AS (SELECT query_id, doc_id, rank FROM " +
-      "(SELECT query_id, doc_id, row_number() OVER (PARTITION BY query_id " +
-      "ORDER BY score DESC, doc_id) AS rank FROM sc) WHERE rank <= 10), " +
-      s"${denseRunCtes(64, 10)}"
-  }
-
-  /** DuckDB replay of Dedup.boilerplateScrub over the boilerInject
-    * fixture (and, with `incrOnly`, of boilerplateScrubApply: the hot
-    * set counts the WHOLE union — the standing index's contribution —
-    * while only increment rows are emitted).
-    */
-  private def boilerplateSql(incrOnly: Boolean): String = {
-    val filterTail = if (incrOnly) " WHERE inj.doc_id % 10 >= 8" else ""
-    "WITH inj AS (SELECT doc_id, text || chr(10) || " +
-      "'subscribe to our newsletter' || " +
-      "CASE WHEN doc_id % 2 = 0 THEN chr(10) || 'follow us on twitter' " +
-      "ELSE '' END || " +
-      "CASE WHEN doc_id IN (42, 43, 48) THEN chr(10) || " +
-      "'cross boundary banner' ELSE '' END || " +
-      "CASE WHEN doc_id IN (58, 59) THEN chr(10) || " +
-      "'rare increment line' ELSE '' END || " +
-      "CASE WHEN doc_id < 2 THEN chr(10) || 'rare pair line' " +
-      "ELSE '' END || " +
-      "CASE WHEN doc_id % 3 = 0 THEN chr(10) || 'unique footer ' || " +
-      "doc_id ELSE '' END AS t FROM documents), " +
-      "p AS (SELECT doc_id, string_split_regex(t, '\\r?\\n') AS parts " +
-      "FROM inj), " +
-      "l AS (SELECT doc_id, generate_subscripts(parts, 1) - 1 AS line_no, " +
-      "trim(unnest(parts)) AS line FROM p), " +
-      "le AS (SELECT * FROM l WHERE len(line) > 0), " +
-      "hot AS (SELECT line FROM (SELECT line, count(DISTINCT doc_id) " +
-      "AS nd FROM le GROUP BY 1) c WHERE nd >= 3), " +
-      "keep AS (SELECT doc_id, line_no, line FROM le " +
-      "WHERE line NOT IN (SELECT line FROM hot)), " +
-      "nl AS (SELECT doc_id, CAST(count(*) AS INT) AS n_lines FROM le " +
-      "GROUP BY doc_id), " +
-      "ag AS (SELECT doc_id, CAST(count(*) AS INT) AS n_kept, " +
-      "string_agg(line, chr(10) ORDER BY line_no) AS kept_text FROM keep " +
-      "GROUP BY doc_id) " +
-      "SELECT inj.doc_id, coalesce(nl.n_lines, 0) AS n_lines, " +
-      "coalesce(ag.n_kept, 0) AS n_kept, " +
-      "coalesce(ag.kept_text, '') AS text " +
-      "FROM inj LEFT JOIN nl USING (doc_id) LEFT JOIN ag USING (doc_id)" +
-      filterTail
-  }
-
-  /** DuckDB replay of the END-TO-END q_ingest_gate: injection →
-    * line-level boilerplate removal (union counts for the increment,
-    * base-only counts for the snapshot fingerprints — the two forms
-    * boilerplateScrubApply vs boilerplateScrub compute) → PII chain →
-    * Gopher gate on the cleaned text (the factored gopher bodies run
-    * against the `piiu` CTE) → eval-sentinel gram flag → exact md5 dup
-    * probe. `piiu` is MATERIALIZED (the q_clean_corpus_v8 CTE-inlining
-    * lesson: it feeds four consumers).
-    */
-  private def ingestGateSql: String = {
-    def pii(src: String) =
-      s"SELECT doc_id, regexp_replace(regexp_replace(regexp_replace(t, " +
-        s"'${Scrub.EMAIL_RE}', '<EMAIL>', 'g'), " +
-        s"'${Scrub.IPV4_RE}', '<IP>', 'g'), " +
-        s"'${Scrub.PHONE_RE}', '<PHONE>', 'g') AS text FROM $src"
-    "WITH inj0 AS (SELECT doc_id, text || " +
-      "CASE WHEN doc_id % 10 >= 8 AND doc_id % 4 = 1 THEN " +
-      "' ingest gate sentinel check' ELSE '' END || " +
-      "CASE WHEN doc_id % 10 >= 8 AND doc_id % 4 = 2 THEN " +
-      "' mail bob@example.com' ELSE '' END || " +
-      "CASE WHEN doc_id % 10 >= 8 AND doc_id % 4 IN (2, 3) THEN " +
-      s"'$INGEST_FILLER' ELSE '' END || " +
-      s"CASE WHEN doc_id % 3 = 0 THEN chr(10) || '$INGEST_BANNER' ELSE '' END " +
-      "AS t FROM documents), " +
-      "inj AS (SELECT a.doc_id, CASE WHEN a.doc_id % 10 >= 8 AND " +
-      "a.doc_id % 4 = 0 AND b.t IS NOT NULL THEN b.t ELSE a.t END AS t " +
-      "FROM inj0 a LEFT JOIN inj0 b ON b.doc_id = a.doc_id - 8), " +
-      "pp AS (SELECT doc_id, string_split_regex(t, '\\r?\\n') AS parts FROM inj), " +
-      "l AS (SELECT doc_id, generate_subscripts(parts, 1) - 1 AS line_no, " +
-      "trim(unnest(parts)) AS line FROM pp), " +
-      "le AS (SELECT * FROM l WHERE len(line) > 0), " +
-      "hotu AS (SELECT line FROM (SELECT line, count(DISTINCT doc_id) AS nd " +
-      "FROM le GROUP BY 1) c WHERE nd >= 3), " +
-      "hotb AS (SELECT line FROM (SELECT line, count(DISTINCT doc_id) AS nd " +
-      "FROM le WHERE doc_id % 10 < 8 GROUP BY 1) c WHERE nd >= 3), " +
-      "keepu AS (SELECT doc_id, line_no, line FROM le WHERE doc_id % 10 >= 8 " +
-      "AND line NOT IN (SELECT line FROM hotu)), " +
-      "agu AS (SELECT doc_id, string_agg(line, chr(10) ORDER BY line_no) " +
-      "AS kept FROM keepu GROUP BY doc_id), " +
-      "scrubu AS (SELECT inj.doc_id, coalesce(agu.kept, '') AS t FROM inj " +
-      "LEFT JOIN agu USING (doc_id) WHERE inj.doc_id % 10 >= 8), " +
-      "keepb AS (SELECT doc_id, line_no, line FROM le WHERE doc_id % 10 < 8 " +
-      "AND line NOT IN (SELECT line FROM hotb)), " +
-      "agb AS (SELECT doc_id, string_agg(line, chr(10) ORDER BY line_no) " +
-      "AS kept FROM keepb GROUP BY doc_id), " +
-      "scrubb AS (SELECT inj.doc_id, coalesce(agb.kept, '') AS t FROM inj " +
-      "LEFT JOIN agb USING (doc_id) WHERE inj.doc_id % 10 < 8), " +
-      s"piiu AS MATERIALIZED (${pii("scrubu")}), " +
-      s"piib AS (${pii("scrubb")}), " +
-      "fps AS (SELECT DISTINCT md5(text) AS fp FROM piib), " +
-      s"ev AS (SELECT '$INGEST_EVAL_TEXT' AS text), " +
-      s"evt AS (SELECT $TOKS AS toks FROM ev), " +
-      "evg AS (SELECT DISTINCT array_to_string(toks[(i+1):(i+3)], ' ') AS g " +
-      "FROM (SELECT toks, unnest(range(len(toks)-2)) AS i FROM evt) x), " +
-      s"put AS (SELECT doc_id, $TOKS AS toks FROM piiu), " +
-      "contam AS (SELECT DISTINCT doc_id FROM (SELECT doc_id, " +
-      "array_to_string(toks[(i+1):(i+3)], ' ') AS g FROM (SELECT doc_id, " +
-      "toks, unnest(range(len(toks)-2)) AS i FROM put WHERE len(toks) >= 3) y) z " +
-      "WHERE g IN (SELECT g FROM evg)), " +
-      "dup AS (SELECT DISTINCT doc_id FROM piiu " +
-      "WHERE md5(text) IN (SELECT fp FROM fps)), " +
-      s"g AS (SELECT doc_id, pass AS pass_struct FROM " +
-      s"(${gopherRulesSql("piiu")}) s), " +
-      s"rep AS (SELECT doc_id, pass AS pass_rep FROM " +
-      s"(${gopherRepSql(inject = false, src = "piiu")}) s2) " +
-      "SELECT p.doc_id, g.pass_struct, rep.pass_rep, " +
-      "CAST(p.doc_id IN (SELECT doc_id FROM contam) AS INT) AS contaminated, " +
-      "CAST(p.doc_id IN (SELECT doc_id FROM dup) AS INT) AS dup_of_corpus, " +
-      "CAST(g.pass_struct = 1 AND rep.pass_rep = 1 AND " +
-      "p.doc_id NOT IN (SELECT doc_id FROM contam) AND " +
-      "p.doc_id NOT IN (SELECT doc_id FROM dup) AS INT) AS keep " +
-      "FROM piiu p JOIN g USING (doc_id) JOIN rep USING (doc_id)"
-  }
-
-  /** DuckDB replay of TextAnalysis.gopherRules — factored so the
-    * q_gopher_gate and q_ingest_gate compositions reuse the identical
-    * body; `src` is the (doc_id, text) relation to gate (an outer CTE
-    * name works — DuckDB scopes inner WITH subqueries lexically).
-    */
-  private def gopherRulesSql(src: String = "documents"): String =
-    s"WITH w AS (SELECT doc_id, text, " +
-      s"list_filter(string_split_regex(text, '${ops.TextAnalysis.WS_RUN_RE}'), x -> x <> '') AS ws, " +
-      s"string_split(text, chr(10)) AS lines, $TOKS AS toks FROM $src), " +
-      "c AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_words, " +
-      "CAST(coalesce(list_sum(list_transform(ws, x -> length(x))), 0) AS BIGINT) AS sumlen, " +
-      "CAST((length(text) - length(replace(text, '#', ''))) + " +
-      "(length(text) - length(replace(text, '…', ''))) + " +
-      "(length(text) - length(replace(text, '...', ''))) / 3 AS BIGINT) AS nsym, " +
-      "CAST(len(lines) AS BIGINT) AS nlines, " +
-      "CAST(len(list_filter(lines, l -> regexp_matches(l, '^[ \\t]*[-*•]'))) AS BIGINT) AS nbullet, " +
-      "CAST(len(list_filter(lines, l -> regexp_matches(l, '(\\.\\.\\.|…)[ \\t]*$'))) AS BIGINT) AS nell, " +
-      "CAST(len(list_filter(ws, x -> regexp_matches(x, '\\p{L}'))) AS BIGINT) AS nalpha, " +
-      "CAST(len(list_filter(['the','be','to','of','and','that','have','with'], " +
-      "s -> list_contains(toks, s))) AS BIGINT) AS nstop FROM w), " +
-      "r AS (SELECT doc_id, n_words, " +
-      "CAST(n_words >= 50 AND n_words <= 100000 AS INT) AS r_word_count, " +
-      "CAST(3 * n_words <= sumlen AND sumlen <= 10 * n_words AS INT) AS r_mean_word_len, " +
-      "CAST(10 * nsym <= n_words AS INT) AS r_symbol_ratio, " +
-      "CAST(10 * nbullet <= 9 * nlines AS INT) AS r_bullet_lines, " +
-      "CAST(10 * nell <= 3 * nlines AS INT) AS r_ellipsis_lines, " +
-      "CAST(5 * nalpha >= 4 * n_words AS INT) AS r_alpha_words, " +
-      "CAST(nstop >= 2 AS INT) AS r_stopwords FROM c) " +
-      "SELECT *, CAST(r_word_count * r_mean_word_len * r_symbol_ratio * " +
-      "r_bullet_lines * r_ellipsis_lines * r_alpha_words * r_stopwords AS INT) AS pass " +
-      "FROM r"
-
-  /** DuckDB replay of TextAnalysis.gopherRepetition (with or without
-    * the q_gopher_rep injected fixture): per-(doc, unit) counts via
-    * unnest+GROUP BY instead of the engine's sorted-run arrays — same
-    * integers, same rounded fractions, same cross-multiplied flags.
-    * Threshold rationals interpolate TextAnalysis.GOPHER_TOP/GOPHER_DUP
-    * — the one definition both sides share.
-    */
-  private def gopherRepSql(inject: Boolean = true,
-      src: String = "documents"): String = {
-    val top = ops.TextAnalysis.GOPHER_TOP
-    val dup = ops.TextAnalysis.GOPHER_DUP
-    val inj = if (!inject) s"inj AS (SELECT doc_id, text FROM $src)"
-    else "inj AS (SELECT doc_id, text || " +
-      "CASE WHEN doc_id % 3 = 0 THEN chr(10) || 'subscribe now' || " +
-      "chr(10) || 'subscribe now' || chr(10) || 'subscribe now' " +
-      "ELSE '' END || " +
-      s"CASE WHEN doc_id % 5 = 0 THEN ' $GOPHER_REP_PHRASE " +
-      s"$GOPHER_REP_PHRASE' ELSE '' END || " +
-      "CASE WHEN doc_id % 7 = 0 THEN chr(10) || chr(10) || " +
-      "'promo paragraph block' || chr(10) || chr(10) || " +
-      "'promo paragraph block' ELSE '' END AS text FROM documents)"
-    val base = s"base AS (SELECT doc_id, $TOKS AS toks, " +
-      "list_filter(list_transform(string_split_regex(text, '\\r?\\n'), " +
-      "x -> trim(x)), x -> x <> '') AS lines, " +
-      "list_filter(list_transform(string_split_regex(text, " +
-      "'(\\r?\\n){2,}'), x -> trim(x)), x -> x <> '') AS paras FROM inj)"
-    def unitStats(cte: String, src: String) =
-      s"$cte AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n, " +
-        "CAST(count(*) AS BIGINT) AS d, " +
-        "CAST(sum(c * len) AS BIGINT) AS ch, " +
-        "CAST(sum((c - 1) * len) AS BIGINT) AS dch FROM " +
-        "(SELECT doc_id, v, count(*) AS c, length(v) AS len FROM " +
-        s"(SELECT doc_id, unnest($src) AS v FROM base) u " +
-        "GROUP BY doc_id, v) r GROUP BY doc_id)"
-    val dt = "dt AS (SELECT doc_id, CAST(coalesce(list_sum(" +
-      "list_transform(toks, x -> length(x))), 0) AS BIGINT) AS dtok " +
-      "FROM base)"
-    // positional grams per n; counts derive from them. Top family:
-    // occurrences × gram char mass of the max-count gram (longest on
-    // ties). Dup family: char mass of the DISTINCT token positions
-    // covered by any duplicated occurrence — chars counted once.
-    val gramCtes = (top ++ dup).map { case (n, _) =>
-      s"gp$n AS (SELECT doc_id, unnest(range(len(toks) - ${n - 1})) " +
-        s"AS i, toks FROM base WHERE len(toks) >= $n), " +
-        s"g$n AS (SELECT doc_id, i, " +
-        s"array_to_string(toks[(i+1):(i+$n)], ' ') AS g FROM gp$n), " +
-        s"c$n AS (SELECT doc_id, g, count(*) AS c, " +
-        s"length(g) - ${n - 1} AS len FROM g$n GROUP BY doc_id, g)"
-    }
-    val topCtes = top.map { case (n, _) =>
-      s"t$n AS (SELECT doc_id, max(c) AS mx FROM c$n GROUP BY doc_id), " +
-        s"top$n AS (SELECT g.doc_id, CAST(t.mx AS BIGINT) * " +
-        s"CAST(max(g.len) AS BIGINT) AS topc FROM c$n g JOIN t$n t " +
-        "ON t.doc_id = g.doc_id AND g.c = t.mx GROUP BY g.doc_id, t.mx)"
-    }
-    val dupCtes = dup.map { case (n, _) =>
-      s"cov$n AS (SELECT DISTINCT g.doc_id, g.i + o.o AS p FROM g$n g " +
-        s"JOIN c$n c ON c.doc_id = g.doc_id AND c.g = g.g AND c.c >= 2 " +
-        s"CROSS JOIN (SELECT unnest(range($n)) AS o) o), " +
-        s"d$n AS (SELECT c.doc_id, CAST(sum(length(" +
-        s"b.toks[CAST(c.p + 1 AS INT)])) AS BIGINT) AS dch " +
-        s"FROM cov$n c JOIN base b ON b.doc_id = c.doc_id " +
-        "GROUP BY c.doc_id)"
-    }
-    def fr(x: String, d: String) =
-      s"round($x / CAST(greatest($d, 1) AS DOUBLE), 4)"
-    def fl(p: Int, q: Int, x: String, d: String) =
-      s"CAST($q * $x <= $p * $d AS INT)"
-    val lineCols =
-      fr("coalesce(ls.n - ls.d, 0)", "coalesce(ls.n, 0)") +
-        " AS dup_line_frac, " +
-        fr("coalesce(ls.dch, 0)", "coalesce(ls.ch, 0)") +
-        " AS dup_line_char_frac, " +
-        fr("coalesce(ps.n - ps.d, 0)", "coalesce(ps.n, 0)") +
-        " AS dup_para_frac, " +
-        fr("coalesce(ps.dch, 0)", "coalesce(ps.ch, 0)") +
-        " AS dup_para_char_frac"
-    val gramCols = (top.map { case (n, _) =>
-      fr(s"coalesce(top$n.topc, 0)", "dt.dtok") +
-        s" AS top_${n}gram_char_frac"
-    } ++ dup.map { case (n, _) =>
-      fr(s"coalesce(d$n.dch, 0)", "dt.dtok") +
-        s" AS dup_${n}gram_char_frac"
-    }).mkString(", ")
-    val flagCols =
-      (Seq(
-        fl(3, 10, "coalesce(ls.n - ls.d, 0)", "coalesce(ls.n, 0)") +
-          " AS r_dup_line",
-        fl(1, 5, "coalesce(ls.dch, 0)", "coalesce(ls.ch, 0)") +
-          " AS r_dup_line_char",
-        fl(3, 10, "coalesce(ps.n - ps.d, 0)", "coalesce(ps.n, 0)") +
-          " AS r_dup_para",
-        fl(1, 5, "coalesce(ps.dch, 0)", "coalesce(ps.ch, 0)") +
-          " AS r_dup_para_char") ++
-        top.map { case (n, (p, q)) =>
-          fl(p, q, s"coalesce(top$n.topc, 0)", "dt.dtok") +
-            s" AS r_top_${n}gram" } ++
-        dup.map { case (n, (p, q)) =>
-          fl(p, q, s"coalesce(d$n.dch, 0)", "dt.dtok") +
-            s" AS r_dup_${n}gram" }).mkString(", ")
-    val joins = "FROM base b JOIN dt ON dt.doc_id = b.doc_id " +
-      "LEFT JOIN ls ON ls.doc_id = b.doc_id " +
-      "LEFT JOIN ps ON ps.doc_id = b.doc_id " +
-      (top.map(t => s"LEFT JOIN top${t._1} ON top${t._1}.doc_id = b.doc_id") ++
-        dup.map(t => s"LEFT JOIN d${t._1} ON d${t._1}.doc_id = b.doc_id"))
-        .mkString(" ", " ", "")
-    val passExpr = (Seq("r_dup_line", "r_dup_line_char", "r_dup_para",
-      "r_dup_para_char") ++ top.map(t => s"r_top_${t._1}gram") ++
-      dup.map(t => s"r_dup_${t._1}gram")).mkString(" * ")
-    s"WITH $inj, $base, ${unitStats("ls", "lines")}, " +
-      s"${unitStats("ps", "paras")}, $dt, " +
-      gramCtes.mkString(", ") + ", " + topCtes.mkString(", ") + ", " +
-      dupCtes.mkString(", ") + " " +
-      s"SELECT * , CAST($passExpr AS INT) AS pass FROM (" +
-      s"SELECT b.doc_id, $lineCols, $gramCols, $flagCols $joins) r"
-  }
-
-  /** Shared per-class P/R/F1 SQL tail over a `conf(<aCol>, <pCol>, n)`
-    * CTE — ONE definition for the q_nb_prf and q_dedup_eval replays
-    * (the classifierReport algebra: F1 from the UNROUNDED ratios, NULL
-    * on empty denominators, full-outer on label).
-    */
-  private def prfTailSql(aCol: String, pCol: String): String =
-    s"bt AS (SELECT $aCol AS label, CAST(sum(n) AS BIGINT) AS n_true, " +
-      s"CAST(coalesce(sum(CASE WHEN $pCol = $aCol THEN n END), 0) AS BIGINT) " +
-      "AS tp FROM conf GROUP BY 1), " +
-      s"bp AS (SELECT $pCol AS label, CAST(sum(n) AS BIGINT) AS n_pred " +
-      "FROM conf GROUP BY 1), " +
-      "jj AS (SELECT coalesce(bt.label, bp.label) AS label, " +
-      "coalesce(tp, 0) AS tp, coalesce(n_true, 0) AS n_true, " +
-      "coalesce(n_pred, 0) AS n_pred " +
-      "FROM bt FULL OUTER JOIN bp ON bt.label = bp.label) " +
-      "SELECT label, tp, n_true, n_pred, " +
-      "CASE WHEN n_pred > 0 THEN round(tp / CAST(n_pred AS DOUBLE), 4) " +
-      "END AS prec, " +
-      "CASE WHEN n_true > 0 THEN round(tp / CAST(n_true AS DOUBLE), 4) " +
-      "END AS rec, " +
-      "CASE WHEN n_pred > 0 AND n_true > 0 AND " +
-      "(tp / CAST(n_pred AS DOUBLE) + tp / CAST(n_true AS DOUBLE)) > 0 " +
-      "THEN round(2 * (tp / CAST(n_pred AS DOUBLE)) * " +
-      "(tp / CAST(n_true AS DOUBLE)) / (tp / CAST(n_pred AS DOUBLE) + " +
-      "tp / CAST(n_true AS DOUBLE)), 4) END AS f1 FROM jj"
-
-  /** DuckDB replay of the TextAnalysis.nbFit + nbPredict chain — the
-    * model RE-FIT in SQL (cls × range(dim) smoothing grid, add-1, doc
-    * -count priors) rather than interpolated, the dsirCtes discipline.
-    * Argmax on the ROUNDED per-(doc, class) score, ties to the
-    * lexicographically first label (rn over s DESC, cand ASC = the
-    * engine's first-win over the label-sorted score array). Ends in
-    * `pr(doc_id, lang, pred)`.
-    */
-  private def nbCtes(dim: Int): String =
-    s"t AS (SELECT doc_id, unnest($TOKS) AS tok FROM documents), " +
-      "h AS (SELECT doc_id, md5(tok) AS hx FROM t), " +
-      "hb AS (SELECT doc_id, " +
-      s"CAST(CAST(('0x' || substring(hx, 1, 8)) AS UBIGINT) % $dim AS INT) AS b FROM h), " +
-      "cd AS (SELECT doc_id, b, CAST(count(*) AS DOUBLE) AS c FROM hb GROUP BY 1, 2), " +
-      s"grid AS (SELECT CAST(range AS INT) AS b FROM range($dim)), " +
-      "cls AS (SELECT DISTINCT lang FROM documents), " +
-      "dc AS (SELECT lang, count(*) AS n FROM documents GROUP BY 1), " +
-      "ntot AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM documents), " +
-      "cdl AS (SELECT d.lang, cd.b, cd.c FROM cd " +
-      "JOIN documents d ON d.doc_id = cd.doc_id), " +
-      "cb AS (SELECT l.lang, g.b, coalesce(q.c, 0.0) AS c FROM cls l " +
-      "CROSS JOIN grid g LEFT JOIN (SELECT lang, b, sum(c) AS c " +
-      "FROM cdl GROUP BY 1, 2) q ON q.lang = l.lang AND q.b = g.b), " +
-      s"nl AS (SELECT lang, sum(c) + $dim.0 AS ntok FROM cb GROUP BY 1), " +
-      "lp AS (SELECT cb.lang, cb.b, ln((cb.c + 1.0) / nl.ntok) AS lp " +
-      "FROM cb JOIN nl USING (lang)), " +
-      "pri AS (SELECT dc.lang, ln(dc.n / ntot.n) AS pri FROM dc, ntot), " +
-      "sc AS (SELECT d.doc_id, d.lang AS true_lang, l.lang AS cand, " +
-      "round(pri.pri + coalesce(sum(cd.c * lp.lp), 0.0), 4) AS s " +
-      "FROM documents d CROSS JOIN cls l " +
-      "JOIN pri ON pri.lang = l.lang " +
-      "LEFT JOIN cd ON cd.doc_id = d.doc_id " +
-      "LEFT JOIN lp ON lp.lang = l.lang AND lp.b = cd.b " +
-      "GROUP BY d.doc_id, d.lang, l.lang, pri.pri), " +
-      "rk AS (SELECT doc_id, true_lang, cand, row_number() OVER " +
-      "(PARTITION BY doc_id ORDER BY s DESC, cand ASC) AS rn FROM sc), " +
-      "pr AS (SELECT doc_id, true_lang AS lang, cand AS pred FROM rk " +
-      "WHERE rn = 1)"
-
-  /** DuckDB mirror of TextAnalysis.weakLabels — the quality-gate /
-    * readability-gate labeler frame, ONE definition for q_kappa and
-    * q_calibration. Composes the q_quality_model feature chain and the
-    * q_readability Flesch counts over tokenizable documents; ends in
-    * `l(doc_id, s, a, b)` with s = rounded sigmoid, a = model keep,
-    * b = rounded-Flesch >= fleschT.
-    */
-  private def weakLabelCtes(fleschT: Double): String = {
-    val (bias, wLog, wAvg, wStop, wNon, keepT) = ops.TextAnalysis.QUALITY_W
-    s"t AS (SELECT doc_id, text, $TOKS AS toks FROM documents), " +
-      "f AS (SELECT doc_id, text, toks, len(toks) AS n, " +
-      "coalesce(list_aggregate(list_transform(toks, x -> length(x)), 'sum'), 0) / " +
-      "greatest(len(toks), 1) AS avg_len, " +
-      "len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','on'], x))) / " +
-      "greatest(len(toks), 1) AS stop_r, " +
-      s"(length(text) - length(regexp_replace(lower(text), '$NON_ALNUM_SQL', '', 'g'))) / " +
-      "greatest(length(text), 1) AS non_al FROM t WHERE len(toks) > 0), " +
-      s"z AS (SELECT doc_id, text, toks, n, ($bias) + ($wLog) * ln(1 + n) + " +
-      s"($wAvg) * avg_len + ($wStop) * stop_r + ($wNon) * non_al AS z FROM f), " +
-      "r AS (SELECT doc_id, z, n AS n_words, " +
-      "CAST(greatest(1, len(list_filter(string_split_regex(text, '[.!?]+'), " +
-      "x -> regexp_matches(x, '\\p{L}')))) AS BIGINT) AS n_sents, " +
-      "CAST(list_sum(list_transform(toks, w -> greatest(1, " +
-      "len(regexp_extract_all(w, '[aeiouy]+'))))) AS BIGINT) AS n_syll FROM z), " +
-      "l AS (SELECT doc_id, round(1.0 / (1.0 + exp(-z)), 4) AS s, " +
-      s"CAST(1.0 / (1.0 + exp(-z)) >= $keepT AS INT) AS a, " +
-      "CAST(round(206.835 - 1.015 * (CAST(n_words AS DOUBLE) / n_sents) - " +
-      s"84.6 * (CAST(n_syll AS DOUBLE) / n_words), 4) >= $fleschT AS INT) AS b " +
-      "FROM r)"
-  }
-
-  /** DuckDB mirror of Retrieval.denseTopKAll: the [[hashEmbedCtes]]
-    * md5-bucket/sign chain run over BOTH the corpus (dd* CTEs) and the
-    * query table (dq* CTEs, expecting a CTE `q(query_id, query)` in
-    * scope), densified over a range(dim) grid, cosine-scored, and ranked
-    * per query on (rounded score DESC, doc_id). Ends in
-    * `dr(query_id, doc_id, score, rank)` with rank ≤ k. ONE definition
-    * for q_dense_topk and q_rrf so the dense leg cannot drift between
-    * the standalone run and the fusion.
-    */
-  private def denseRunCtes(dim: Int, k: Int): String = {
-    val qToks = TOKS.replace("lower(text)", "lower(query)")
-    // MATERIALIZED on the multiply-referenced stages (ddsv feeds ddids +
-    // dddv, ddn/dqn feed dsc + downstream cand joins, dr feeds u/cand):
-    // DuckDB 1.0 inlines CTEs per reference, re-running the whole
-    // embedding chain each time — the q_clean_corpus_v8 lesson
-    // (SparkEntry recipeV5Sql), applied here for q_mmr/q_rrf/q_dense_topk
-    s"ddt AS (SELECT doc_id, unnest($TOKS) AS tok FROM documents), " +
-      "ddh AS (SELECT doc_id, md5(tok) AS hx FROM ddt), " +
-      "ddb AS (SELECT doc_id, " +
-      s"CAST(CAST(('0x' || substring(hx, 1, 8)) AS UBIGINT) % $dim AS INT) AS dim_idx, " +
-      "CASE WHEN CAST(('0x' || substring(hx, 9, 1)) AS UBIGINT) % 2 = 0 " +
-      "THEN 1.0 ELSE -1.0 END AS sgn FROM ddh), " +
-      "ddsv AS MATERIALIZED (SELECT doc_id, dim_idx, sum(sgn) AS value FROM ddb " +
-      "GROUP BY doc_id, dim_idx), " +
-      "ddids AS (SELECT DISTINCT doc_id FROM ddsv), " +
-      s"ddgrid AS (SELECT ddids.doc_id, r.range AS i FROM ddids, range($dim) r), " +
-      "dddv AS (SELECT g.doc_id, g.i, coalesce(sv.value, 0.0) AS v FROM ddgrid g " +
-      "LEFT JOIN ddsv sv ON sv.doc_id = g.doc_id AND sv.dim_idx = g.i), " +
-      "dde AS (SELECT doc_id, list(v ORDER BY i) AS dv FROM dddv GROUP BY doc_id), " +
-      "ddn AS MATERIALIZED (SELECT doc_id, dv, sqrt(list_dot_product(dv, dv)) AS nd FROM dde " +
-      "WHERE sqrt(list_dot_product(dv, dv)) > 0), " +
-      s"dqt AS (SELECT query_id, unnest($qToks) AS tok FROM q), " +
-      "dqh AS (SELECT query_id, md5(tok) AS hx FROM dqt), " +
-      "dqb AS (SELECT query_id, " +
-      s"CAST(CAST(('0x' || substring(hx, 1, 8)) AS UBIGINT) % $dim AS INT) AS dim_idx, " +
-      "CASE WHEN CAST(('0x' || substring(hx, 9, 1)) AS UBIGINT) % 2 = 0 " +
-      "THEN 1.0 ELSE -1.0 END AS sgn FROM dqh), " +
-      "dqsv AS MATERIALIZED (SELECT query_id, dim_idx, sum(sgn) AS value FROM dqb " +
-      "GROUP BY query_id, dim_idx), " +
-      "dqids AS (SELECT DISTINCT query_id FROM dqsv), " +
-      s"dqgrid AS (SELECT dqids.query_id, r.range AS i FROM dqids, range($dim) r), " +
-      "dqdv AS (SELECT g.query_id, g.i, coalesce(sv.value, 0.0) AS v FROM dqgrid g " +
-      "LEFT JOIN dqsv sv ON sv.query_id = g.query_id AND sv.dim_idx = g.i), " +
-      "dqe AS (SELECT query_id, list(v ORDER BY i) AS qv FROM dqdv GROUP BY query_id), " +
-      "dqn AS MATERIALIZED (SELECT query_id, qv, sqrt(list_dot_product(qv, qv)) AS nq FROM dqe " +
-      "WHERE sqrt(list_dot_product(qv, qv)) > 0), " +
-      "dsc AS (SELECT dqn.query_id, ddn.doc_id, " +
-      "round(list_dot_product(ddn.dv, dqn.qv) / (ddn.nd * dqn.nq), 4) AS score " +
-      "FROM ddn, dqn), " +
-      "dr AS MATERIALIZED (SELECT query_id, doc_id, score, rank FROM " +
-      "(SELECT query_id, doc_id, score, row_number() OVER " +
-      "(PARTITION BY query_id ORDER BY score DESC, doc_id) AS rank FROM dsc) " +
-      s"WHERE rank <= $k)"
-  }
-
-  /** The BPE merge list [[graft.ops.TextAnalysis.bpeLearn]] converges to
-    * on the sf0.01 documents snapshot (nMerges = 20), PINNED as the
-    * standing trained-tokenizer literal for the q_bpe_apply oracle:
-    * training itself is the iterative-argmax exemption (parity-locked in
-    * PropertySpec), but merge APPLICATION under a fixed list is
-    * mechanical, so the oracle replays it in DuckDB with the learned
-    * list shipped as literals — the q_bpe_encode pinned-vocab precedent.
-    * If bpeLearn's argmax ever changes, q_bpe_apply goes red rather than
-    * silently drifting from the pin (the live query still trains).
-    */
-  private val BPE_MERGES_PINNED: Seq[(String, String)] = Seq(
-    (" ", "s"), ("e", "r"), ("i", "n"), ("o", "w"), ("o", "r"),
-    ("m", "er"), ("a", "t"), ("l", "u"), (" ", "c"), ("a", "s"),
-    (" ", "b"), (" ", "v"), ("a", "r"), ("p", "ar"), (" ", "f"),
-    (" ", "a"), (" ", "t"), ("j", "o"), ("jo", "in"), ("as", "h"))
-
-  /** The (piece, logp) unigram model [[graft.ops.TextAnalysis.unigramLearn]]
-    * (vocabSize 256, emIters 2) converges to on the sf0.01 snapshot —
-    * exactly the standing `unigram_v256` artifact [[unigramModel]] serves —
-    * PINNED for the q_unigram_stats oracle (the [[BPE_MERGES_PINNED]]
-    * doctrine: train is exempt, apply is oracled). logps are the standing
-    * table's round(·,6) values, so the literals match the live model
-    * bit-for-bit.
-    */
-  private val UNIGRAM_PINNED: Seq[(String, Double)] = Seq(
-    (" ", -1.9861), (" join", -3.539672), ("column", -3.552438),
-    ("filter", -3.553509), (" hash", -3.557805), (" row", -3.565369),
-    (" scan", -3.567541), (" small", -3.569717), (" batch", -3.570807),
-    ("vector", -3.576274), (" custo", -3.577371), ("mer", -3.577371),
-    (" slow", -3.5873), (" order", -3.591744), (" merge", -3.592858),
-    (" line", -3.596208), (" data", -3.598448), (" agg", -3.602942),
-    ("stream", -3.602942), (" table", -3.604069), ("window", -3.605197),
-    (" value", -3.607457), (" big", -3.622272), (" key", -3.623421),
-    (" spark", -3.623421), (" group", -3.634982), (" part", -3.634982),
-    (" a", -3.636145), (" sort", -3.63731), (" query", -3.639644),
-    (" fast", -3.656134), (" the", -3.688726), (" dup", -7.133818),
-    ("key", -7.133818), ("the", -7.173038), ("custom", -7.25642),
-    ("er", -7.25642), ("a", -7.347392), ("merge", -7.347392),
-    ("row", -7.347392), ("table", -7.347392), ("batch", -7.396182),
-    ("group", -7.501542), ("hash", -7.501542), ("join", -7.501542),
-    ("part", -7.501542), ("data", -7.619325), ("line", -7.619325),
-    ("scan", -7.619325), ("slow", -7.619325), ("query", -7.683864),
-    ("order", -7.752857), ("sort", -7.752857), ("agg", -7.826965),
-    ("value", -7.826965), ("fast", -7.907008), ("small", -8.089329),
-    ("spark", -8.089329), ("big", -8.782476)) ++
-    "bcdefghijklmnopqrstuvwy".map(c => (c.toString, -10.391914))
-
-  /** The m=8 × k=16 × dsub=8 product-quantization codebooks
-    * [[graft.ops.Similarity.pqTrain]] (iters 5, sampleSize 4096)
-    * converges to on the sf0.01 embeddings snapshot, PINNED for the
-    * q_pq_topk / q_pq_refined oracles (the [[BPE_MERGES_PINNED]]
-    * doctrine: k-means TRAINING stays the iterative exemption, but
-    * encode + asymmetric-distance top-k under a FIXED codebook is
-    * mechanical argmin / Σ-lookup arithmetic a DuckDB replay reproduces
-    * exactly). The live queries still train — if pqTrain's hash-ordered
-    * sampling or Lloyd updates ever change, both rows go red rather
-    * than silently drifting from the pin. codebooks(sub)(code) is a
-    * dsub-dim centroid, exactly pqTrain's return layout.
-    */
-  private val PQ_CODEBOOK_PINNED: Array[Array[Array[Double]]] =
-    Array(
-    Array(Array(0.08959474382219197, 0.08905179385775029, 0.02271179955803298, 0.012919652105205763, -0.07708175768083973, 0.06306424866129091, 0.1859009698772138, -0.03296835088201857),
-      Array(-0.11691134189668015, -0.009176241166532827, 0.03120212729359745, -0.023862443292423152, 0.09519242630508462, -0.10763599999339755, -0.12353251914571527, -0.10740324881106002),
-      Array(0.02650755505059693, -0.05762481763365443, -0.05253986031943688, 0.041693852305654894, 0.11506605627939315, -0.15102644566504056, -0.07585189007316807, 0.1058017467572156),
-      Array(-0.08439269938786591, -0.03694312172169459, 0.1739162906377523, -0.005792652973333692, -0.10575628295271434, 0.07327904195489152, 0.03279634876790167, 0.047034909695200314),
-      Array(-0.007335383382206361, 0.014617029950274252, 0.018289201368574898, 0.16995130652840776, 0.0230435903449887, -0.041564230784263495, 0.03851292016402521, -0.06650079394437305),
-      Array(0.009050213391279253, -0.05522576861157773, 0.03925528688334122, -0.01899814415068684, 0.09611908921227563, 0.07721964305619916, 0.14018748712817644, -0.11321106031910994),
-      Array(0.0811798886749266, -9.008894179956218E-4, -0.011736753546118492, -0.07304592068206772, -0.12388968379782196, -0.10951577362935314, -0.0020972210263306558, -0.031105753847305163),
-      Array(-0.09396263714317311, -0.05120280732326365, -0.1081048355317745, -0.14118309959926037, 0.10331518733572667, 0.053592595754404296, 0.05138061571549411, -0.0737940954312785),
-      Array(-0.03554891895215823, 0.10134843533404203, -0.013338822886798125, -0.027607855163695877, -0.13702539386523135, 0.09811521309826292, -0.08725178910663367, -0.024168447239164247),
-      Array(0.1078441588634801, -0.13651207188914305, -0.017670103769445774, 0.06793282432030055, 1.8174748159852826E-4, 0.10911159211267711, -0.08745239417204659, -0.03664016417584516),
-      Array(-0.07142780900456615, 0.04509388281236535, 0.12761316291367933, -0.022806053115949992, -0.0017045424458877684, -0.17037112878488805, 0.14343259548048348, 0.06495323060353667),
-      Array(0.04475748558043493, 0.008804815118235507, 0.07590628252080125, 0.07259855756332895, 0.023125717168348037, 0.016440348084995136, -0.24126217714977546, -0.04187620062534263),
-      Array(-0.005338670393859081, 0.10750631816250061, -0.17495152128873903, -0.04352959932561263, -0.013513059454933288, 0.06472420471147547, 0.01929794770879981, 0.14040514883250674),
-      Array(0.18065551256098095, 0.009998553225191395, 0.02806904396372664, -0.04249585573871275, 0.053369614936942956, 0.01812389663117368, 0.0033900392514255354, 0.13407153755177145),
-      Array(-0.056489141939730064, 0.09645074944229363, 0.008002681005989122, 0.09322056649988968, 0.1260043873912465, 0.17056204312399748, -0.10740462900522268, -0.011121536582740144),
-      Array(-0.08649868403665996, -0.0959754926298146, 0.022588758217625828, -0.06266264746312386, 0.026033676657287265, 0.03090165151733136, -0.09718208815116433, 0.10071356636293984)),
-    Array(Array(0.039676146547154685, -0.08614482992978058, 0.14848965207357956, 0.05399680318348495, 0.0022353884994974465, -0.006626386896543115, 0.096460844878391, 0.08256777593073424),
-      Array(-0.07091719402590553, -0.12933693087914983, 0.047843527036243186, -0.007194508640360505, -0.06097301397473995, 0.016458534666886862, -0.00619661037845547, -0.16274372787855257),
-      Array(-0.04529940933234382, -0.024839739456475746, -0.12106463044380175, 0.11967101867683652, 0.08449837908287135, 0.13919203139426267, -0.047509935824819924, -0.09431968241220078),
-      Array(-0.07572785630250435, 0.21086913911925453, -0.11048872599324334, -0.16051778567829522, 0.05859579228988956, -0.0665463636696478, -0.03065113946791529, -0.0019055098461047222),
-      Array(-0.01941654068208328, 0.18076826736389792, 0.08464393043305968, 0.10556856218504493, -0.10189432374130208, 0.058852984285362106, -0.04657295945350483, -0.04125847883597219),
-      Array(-0.017194863419055215, 0.0286245701916892, 0.017597952527756793, -0.11083165764811499, -0.07021978729887718, -0.02465494302596778, -0.12271478487107003, 0.029731121690120307),
-      Array(0.1717180133303424, 0.010885221902393945, -0.022763267029090817, -0.009694828863313376, -0.14813533017106761, -0.04966249408270399, -0.0031745298163273882, -0.051771198784928446),
-      Array(0.011899047846119889, -0.02622865016196357, -0.06514523274969852, 0.18741360959638897, -0.040086272164571585, -0.057774866327305996, -0.006744240693104246, 0.06630044765408173),
-      Array(0.020758104036279656, -0.09893186943097475, 0.08404254189879382, -0.01639134379881094, 0.11540839951210535, 0.07429757713544301, -0.11141828391780527, 0.12813962487655772),
-      Array(-0.041889065426999, 0.07592190543640731, -0.110882325843445, 0.010762871864225301, 0.07925833248718464, 0.003074398677665985, -0.06277071695077023, 0.15460336705748026),
-      Array(-0.009297996703322424, -0.022469012336392147, -0.04540439663826235, -0.04836548935178627, -0.020142978563289737, 0.2128238467464451, 0.07150375431930302, 0.07354828774349009),
-      Array(0.1235057518535854, 0.001125771050965418, -0.06685755159025908, -0.018431446652171352, 0.10239067204840845, -0.028798988004630065, 0.16159377197925495, -0.0013361412035183767),
-      Array(-0.02594080173362089, -0.055513595579268625, 0.14889903260616158, -0.12543511216689446, 0.043091131140687085, -0.1909774009395742, -0.04488766041591535, 0.06271183063206183),
-      Array(-0.12894784050072508, -0.166640059610346, -0.051751212266747997, -0.039307265404979225, -0.09513142651865068, 0.01530431900236684, 0.003368270975392724, 0.07836443356946424),
-      Array(-6.853299639709859E-4, 0.027650447145190982, 0.10163812162854212, -0.08126306158152079, 0.0972652999838225, -0.028380693704546527, 0.039642881680903554, -0.11388923988905478),
-      Array(-0.06067739312016148, 0.17304558885373578, -0.015734334031461357, 0.07586421223788338, 0.07208256883766949, -0.10048091937187244, 0.08099246697138107, -0.05577053176389336)),
-    Array(Array(0.10719346573851961, 0.06764523513410546, -0.08071983641804134, -0.14373329058709267, 0.05740917566271607, -0.04269912289451841, 0.05004875360720898, 0.07228986338306001),
-      Array(0.1165878634550889, -0.08737472828215774, -0.05033571454848393, -0.05159767649797084, -0.06862058725970382, 0.07370394248251422, 0.03214799037079399, -0.14896328905584866),
-      Array(0.005895751861613722, -0.0590678468153714, -0.14445648244529932, 0.12450010938272477, 0.015278585590474148, -0.004657283774310925, 0.09417774120293353, 0.03807682281019314),
-      Array(0.139704315217742, 0.0028895192002355964, -0.010366377091524673, -0.00485140219269054, -0.16581181750686066, -0.06839184643673586, -0.042477835168130994, 0.02995686025224691),
-      Array(0.004517026792300353, 0.021925482949758275, 0.08630613848585829, -0.014292694383088361, -0.06613605628171679, 0.14361973398365005, 0.04900954555703221, 0.13178183238447097),
-      Array(-0.10882513936244187, 0.10950596658760789, -0.0030101542525369754, 0.09643673551730823, -0.01929845644898502, 0.02507257946015645, -0.051108020961327216, -0.02341671540799405),
-      Array(0.15751573903766233, -0.0437747402275613, -0.09662355035693211, 0.059712967725270225, 0.06469529728444298, 0.047078487692113716, -0.14008970348713096, 0.04353984596523418),
-      Array(-0.05892566858504775, 0.2005648919350258, 0.029937220748800654, 0.008328692331729838, -0.055164257522142046, -0.1476260271358637, 0.04074924653349721, -0.062454497759308496),
-      Array(-0.08538177730958416, 0.10053679939877223, 0.03125868873885247, -0.18122599004506929, 0.026219307104218267, 0.06368206397093289, 0.0683282718469432, -0.15995866618299848),
-      Array(0.02267596833969754, -0.05678311828044985, 0.17709024557715283, 0.003983631563725981, -0.006947931320025313, -0.12799129440268564, 0.0421260578327891, -0.014578151366743263),
-      Array(-0.13345405082647044, -0.18522776000899333, -0.07999167856020244, -0.042579627358734676, 0.024126703286373372, 0.008722794044780694, -0.08668926979822236, -0.008598016005681974),
-      Array(-0.058968807587385826, 9.135290035992573E-4, -0.08033955825053757, -0.0518435933376978, -0.13067848805986126, -0.03922163331855133, -0.017770210158395378, -0.012310077299947576),
-      Array(0.06752383540368605, 0.07631411448487241, 0.010921686152197234, 0.0409328319442486, 0.07184477600819085, -0.034825348897987954, 0.07567430943618803, -0.19831674157881463),
-      Array(-0.06157070531533262, -0.056449105991247604, 0.04443796040277839, 0.01985049186171908, 0.14467687504941956, 0.06356597818477605, 0.10033168649883048, 0.011861755033536852),
-      Array(0.009914931308623094, 0.0014755665285152077, 0.10731904273699532, 0.027765403147020442, 0.0867500326850403, -0.01969093668406155, -0.15100778435965406, 0.004466185115260559),
-      Array(0.03592578618291156, -0.025455353165046254, 0.1196045425263235, 0.021944280593002064, -0.0027812032789099766, -0.07981301494960943, -0.0854287006597133, 0.24820327917744267)),
-    Array(Array(0.025358961994758993, 0.043003239281381764, -0.08883807125288984, 0.09303545614872903, 0.17785144346700837, 0.04575426787181693, -0.003872696946714103, -0.028146179005543517),
-      Array(-0.15057047994423198, 0.02292922005558807, 0.1334246483756016, 0.11869084218894968, -0.14924093311531642, 0.11687077755101362, -0.004204907438726414, -0.010858843746135332),
-      Array(0.04995821434689435, 0.030694013146868482, -0.07232929060489371, -0.06440782742064065, 0.0155050394793393, 0.1344975384742901, 0.11035439473272333, -0.03051699095863283),
-      Array(-0.022443383096311706, 0.0892065256845013, 0.08416218446485754, -0.0563307693672948, 0.025149612661347312, -0.18751435630128352, 0.03551146495766019, 0.024105308812681376),
-      Array(0.08807076351340849, 0.06391212525016844, 0.16197151911016283, -0.08660868061432908, 0.052942312122804445, 0.11253484943567728, -0.028096463943415473, -0.09483436750664488),
-      Array(-0.11705069327683669, 0.08757017785659273, 0.05122091466634156, -0.020350913410797044, 0.09219179696685949, 0.11623531659570836, -0.14659853787695784, -0.004529542635400496),
-      Array(-0.05462477104726226, -0.057626111378271186, -0.0028571641201182935, 0.09772759042470161, 0.009582075881843649, -0.04049259762662816, -0.102917314682332, 0.1316950388567018),
-      Array(-0.006190812201792471, -0.16505671402419855, 0.05236408763545104, 0.005877704703649758, 0.06639538857022394, 0.025299711986627952, 0.13984174804361363, 0.04905080992100344),
-      Array(-0.09487200287334574, -0.08151356386624031, 0.018485784034758045, 0.044849663478899376, -0.018955598428934347, 0.020645176804058966, 0.09584671141323502, -0.10759384079270663),
-      Array(-0.16764169468511791, 0.01935023800655383, -0.08383956039971482, -0.11131120356159248, 0.09071270929920118, -0.09853618909959215, -0.0019629458049516026, -0.11263770886430377),
-      Array(0.1211077545786713, 0.1001776738329714, 0.01816169547796487, 0.09702065751463555, -0.15678646682721953, 0.0017031324176968986, 0.1152006448885805, -0.07030237984043669),
-      Array(0.09595602259394825, 0.16057406542001942, 0.09771786919243425, 0.014988893131152805, -4.8789578228552126E-5, 0.029813384920175275, -0.022131504964305965, 0.15453716244786764),
-      Array(0.014935312319739134, 0.013767421738359053, -0.08729532723931373, -0.0965835769103453, -0.10841350572213558, 0.037821103890371875, -0.11007276297177963, 0.03860698227839582),
-      Array(0.03691306155847829, 0.007979940863648855, -0.1397948272520252, 0.052782782185602305, -0.03586029453107365, -0.04325000419414777, 0.10706737694161396, 0.1044898453556116),
-      Array(-0.03537212603739214, 0.0510798577900989, -0.07267804951331709, 0.06016804322538018, -0.09392416446182371, -0.06728632241783801, -0.08020327859053249, -0.1326183307158316),
-      Array(0.12325710474449522, -0.12139931457278595, 0.02688124422968579, 0.05479627759013665, -6.488425880396649E-4, -0.09301974817733435, 0.004377017699248545, -0.08158410310777463)),
-    Array(Array(-0.11135469828125621, -0.051619788364251455, -0.06882623972474236, -0.11891474974093302, 0.05055588113308201, -0.11817694788477796, 0.052073732309117306, 0.07019089649344079),
-      Array(-0.055891391597036995, -0.034845350864636214, 0.04230786581315216, 0.04931849752464755, 0.036623952293553516, 0.09455306230010917, 0.05696857522355085, 0.21783408379142383),
-      Array(0.09382008259628245, 0.17567199532492372, 0.11842840336268724, 0.05528696951213392, -0.057429606085258295, 0.08414069060581546, -0.036147402125599616, 0.05018118003306218),
-      Array(-0.056622546282277926, 0.03439191941593401, 0.08123062844129886, 0.11223066480516565, -0.09828269180731135, -0.1257323878609105, 0.051459765901300816, -0.03858926506519114),
-      Array(-0.12287251692120033, 0.05985371893901596, -0.05163251636961432, -0.08199192497392811, -0.10366609930398656, 0.08707690297378277, -0.09953322746728448, -0.056580483416737465),
-      Array(0.01026907382175656, -0.11242322206974578, -0.04455309268639898, 0.02377174937109473, -0.09181356732152203, -0.12494956039406648, -0.00763310844243219, 0.12542072045979624),
-      Array(-0.003212651999641571, -0.04656075213341904, -0.03393336885097405, 0.1670185027650921, 0.1111727429473878, 0.0059150461825899356, 0.043140991696037696, -0.025905841009194366),
-      Array(0.030473260019871367, -0.08286615677166015, -0.026907375579716473, 8.075861032808024E-4, 0.017407022945352377, 0.026514580593954954, -0.13619942885105477, -0.12141339750256473),
-      Array(-0.021378900903665256, -0.036951122007489866, 0.016521686964311215, 0.10680996133288603, -0.1859032667005326, 0.11146472078067192, 0.011146053666080001, -0.001247825404710725),
-      Array(0.0021338988098991963, -0.027800197549339566, 0.16888843914096546, -0.0822713575948936, 0.04544950138005185, 4.0028499686672463E-4, 0.06893554537451159, -0.05589046912094692),
-      Array(0.17203519591523436, -0.04475820688739305, -0.010593494586961395, -0.026279049409872163, 0.04633822103761121, 0.09524719631706254, -0.013107535320096527, 0.0492229272579436),
-      Array(-0.10861255166754823, -0.14864232092003618, -0.04501294133684373, -0.06897937811149102, 0.001956788754669624, 0.04938304089371733, -0.04101255189993528, -0.01621396543732576),
-      Array(0.045707065516174095, -0.07170569294921404, 0.008058196294935606, -0.13559802640478494, 0.0799454027824229, -0.12825534827451282, -0.11843757560042954, 0.10244744436833074),
-      Array(0.02380564172149143, 0.1732315978906227, -0.04902130063391396, -0.00739241107156489, 0.02012176603842383, 0.03088421540169859, 0.15400697873607158, 0.006073763796616782),
-      Array(0.07132537445640039, 0.12387858895102331, -0.003875713160141385, 0.009511063386841614, 0.058591474958842024, -0.1260933939502193, -0.11321018644411991, -0.07312160581572208),
-      Array(0.09272618243836128, -0.03616842903754618, -0.04946728409193449, -0.12097143185457784, -0.09010645702587586, -0.06136887862998702, 0.1757577443621765, -0.047077263140792476)),
-    Array(Array(-0.08603839998633381, 0.1433380615982783, -0.004330815422752989, -0.057629056215712175, 0.054897153651657135, -0.035300972297478334, 0.1325361106944359, 0.024246063503998154),
-      Array(0.04657897687683512, -0.16379568527116165, 0.04554267685957393, -0.03306794918650154, -0.14735336682255606, 0.04447300165114375, -0.002239894128585551, 0.05336616841307312),
-      Array(-0.13517799989518717, 0.004938460201269804, -0.06378697409900036, -0.11761915382337892, -0.11764896798043184, 0.03258069129622538, -0.11506441342114036, -0.055692867175468404),
-      Array(0.13678523814715549, 0.053766523148575655, -0.024893178713326768, 0.11922306436531077, 0.0592011781988121, -0.11570462809107164, 0.058143651867849824, -0.03834073999025713),
-      Array(-0.1174718417808687, -0.07465843787878526, -0.011841014613558942, 0.072213077163328, 0.001681608226085763, -0.0016995189128103526, 0.06938922359917724, 0.12131406938869332),
-      Array(0.032643369858299943, -0.09430609982015044, 0.03994243047251834, 0.15577741760862612, 0.04100520361882246, 0.08962311050048212, -0.08097037909401072, 0.05949517311523318),
-      Array(0.03673217932553133, -0.028143850106120933, 0.24232846708618436, -0.03558426053001666, 0.10303377161621241, 0.04281369406465674, 0.038847939394795736, -0.00973263823010713),
-      Array(0.05625719940946668, 0.02987177889102147, 0.04438000593783572, -0.07663462587003673, -0.0069627093870869294, -0.16557335768386117, -0.1075720513155604, -0.010670348231060986),
-      Array(-0.1849754254673035, -0.04241895831794818, 0.13437654195191998, 0.056805157712750784, -0.11161507500986882, 0.07200709657092255, -0.00652550632302938, 0.007275334932352662),
-      Array(-0.025206041462105953, -0.14551300043429624, -0.042872517780323985, -0.011803350539257688, 0.04136076021028253, -0.09134435682666611, 0.06756276562472643, -0.11494126828920442),
-      Array(0.029461581597334974, 0.09842248824908675, 0.18884863808219662, 0.002190020138591056, -0.12572943558537272, 0.009271208596449714, -0.008351018098309789, -0.1328688607999504),
-      Array(0.042141244240679075, 0.03454810916399302, -0.06736136096845323, 0.15736704523228534, -0.10380420947715165, 0.09572505365688537, 0.12130707586755136, -0.09264169356489856),
-      Array(-0.026269413573028578, 0.11864830755293122, -0.07093158044752977, 0.013935002128196391, -0.08923382586484192, -0.047536866655012736, -0.037563249410396474, 0.10471980053494719),
-      Array(0.052658722194219874, 0.025675799740186484, -0.027875364909423092, -0.014827068221270705, 0.021526586409554297, 0.11731068011777662, -0.07931700955462231, -0.08613220610200185),
-      Array(-0.07138424878119076, -0.01648904579629394, -0.1365729331533219, -0.10291074304432374, 0.1475028471614455, 0.025510125359766843, -0.03358685517069978, 0.03989693938240975),
-      Array(0.1395160903956283, -0.07798404184329423, -0.0660494558131486, -0.12467707028404168, 0.0257987905801293, 0.03810869027219567, 0.02581313516962785, 0.11516613371492469)),
-    Array(Array(-0.02234761183013422, -0.02716883355528901, -0.027128321174324836, -0.10272718565996627, -0.1660431826736312, -0.01770583826884412, 0.07561772937373157, 0.04032438124794461),
-      Array(-0.057264256856278825, 0.013413943866677651, -0.043372486661172036, -0.08081782488087826, 0.060973872970703516, 0.108603075463305, 0.08111479450439635, -0.08032540890842231),
-      Array(0.07846674710298787, -0.10441996815766208, 0.2107220555599071, 0.05677126038742628, -0.040870069768965026, 0.016852321474420846, 0.09716394442018012, 0.045207224988074966),
-      Array(-0.12679364203100302, 0.019317408772171266, -0.10709800857738118, 0.034117887149494174, 0.13431277218217955, -0.05485319494487639, 0.0043762799504902935, 0.015173172976770812),
-      Array(0.003940102060783191, 0.09691075897953448, -0.021981675765188478, 0.1323890832905476, -0.07078949159768473, -0.08824091673552308, 0.05298776276664561, 0.04021177798803895),
-      Array(0.11682599651176678, 0.05743683793228622, 0.09182656000278232, -0.15893405838117697, -0.004029085667693376, -0.004913033004534312, -0.09755475162446929, -0.055278245742467515),
-      Array(-0.030100418904008164, 0.013119365624656735, 0.07916266435042538, -0.009088799785232157, 0.12458846525769687, -0.11935696779964361, 0.13458052988901245, -0.057875175197871914),
-      Array(0.11267570226408964, -0.030063092485952965, -0.08504881023492437, 0.03920781355049109, -0.032752199586658086, 0.11910468338745435, 0.07900556065601687, 0.1016870644882322),
-      Array(-0.00769170911542486, 0.049640251218823477, 0.041853914152749465, -0.034497442598081844, -0.07904448778435828, -0.03350074708820527, -0.05108577209399805, -0.2465250396934857),
-      Array(-0.14845891417404472, 0.007944261699217473, -2.537579973700105E-4, 0.09556348438640713, -0.13563047806000875, 0.08580362990553819, -0.034017643759454035, -0.08769460041974604),
-      Array(-0.09207233710513459, 0.09756757634911724, 0.12214759222862498, 0.052823119651240535, 0.07429407121814129, 0.09779099374191097, -0.05495124417375001, 0.08552697800363447),
-      Array(-0.06206929304155166, -0.14458684989804924, 0.08816681017400038, 0.07643094071529163, 0.07072489333216059, -0.010783873170748328, -0.021875201973184877, -0.016521227857853767),
-      Array(0.10297882247239741, 0.14212618612473035, 0.02850681688598534, -0.01544979853491142, 0.12417132256946214, -0.04555116985133491, -0.00978434900231429, 0.02764830162261713),
-      Array(0.04746507141948332, -0.09561538324910525, -0.025962560480190678, -0.012587193592873512, -0.02099468914816859, -0.1844646231225529, -0.06896970671596057, -0.06566477313223279),
-      Array(0.21196464414250157, -0.16871427387442664, -0.009019919030577358, -0.009439652102643015, 0.010393272776103695, 0.10159157563729855, -0.0684455910608404, -0.016488339183104696),
-      Array(-0.01744621330466732, -0.09684919467763844, -0.05767674388846938, -0.02448605550224442, 0.02100130157808153, -0.005351258754319819, -0.07016742865927388, 0.12954892702688428)),
-    Array(Array(-0.08140541587899935, -0.04594340217726086, 0.10036401428622585, 0.03938285080200585, -0.04197008024005846, -0.09854362100170658, 0.0848518474776284, -0.08108653219199065),
-      Array(5.954402012324034E-4, -0.01620272410037303, -0.038771818480166004, 0.17396438987312712, -0.06295467700626128, -0.0015460556263277498, 0.11844515805963955, -0.006355211103646273),
-      Array(-0.009420935772089068, -0.025032846947122246, -0.07440234786441287, -0.005472264024834341, 0.07353060858899421, 0.16138831624361896, 0.08806027800254332, -0.05782298999567681),
-      Array(0.03371884041143459, 0.1151264681721851, -0.020404958888728356, 0.038084747309944905, -0.15435679005615416, -0.06548587463940167, -0.04385546609155478, 0.04781070635999184),
-      Array(0.12132662181844116, 0.03510964833868099, 0.05439168365225, 0.018592052395718504, 0.0843328026318203, -0.15139022394785417, 0.11857764062147011, -0.07308098260876106),
-      Array(0.12573601766685466, -0.04599588675544756, 0.11596782412864061, 0.06530285409112574, 0.036463626839749214, 0.14224881776204637, 0.0010457759205663472, 0.023478945085548677),
-      Array(-0.16225944932786063, -0.006054733766722023, 0.06251248953924606, -0.09320900547269324, -0.03631912419131768, 0.04074054771286341, 0.06608440280872381, 0.11753717265946932),
-      Array(-0.044351741889030655, 0.017673890589930685, -0.2151053995334823, 0.040400819144012654, -0.002476272845701591, -0.05012113050066016, 0.03348019922104107, 0.06291744648624217),
-      Array(-0.0635787643052924, -0.12585404171205825, -0.03782824214189852, -0.06786860819832423, 0.020180738566694945, -0.008203169641189795, -0.07045773350646418, -0.11172130808522858),
-      Array(0.07690974798285352, 0.027858993667962045, -0.04380421293889612, -0.176359678633141, -0.08504190920922262, 0.007240610908561601, 0.024122169394926334, -0.07231962478291931),
-      Array(0.08338223942031181, -0.01230406054607312, -0.07425508239550066, 0.07546934670737933, 0.13226642137806144, -0.05844880403827788, -0.08607373253022153, 0.09921804161593595),
-      Array(-0.04179150046372492, 0.04911417006659159, -0.08489570031256503, -0.17011083662451362, 0.10939157666989047, -0.0670905903375276, -0.013006781774255833, 0.018225328926665747),
-      Array(-0.013358918747483404, 0.0233197457834108, 0.036907752808948785, 0.07341447634542114, -0.07043152273986884, 0.10108400602686717, -0.11680398375775716, -0.09595491296509226),
-      Array(0.08425747873816986, -0.16255127208691159, 5.426025474586962E-4, -0.09899630644244085, 0.0262134769490743, 0.03933866597577556, 0.08218255697839556, 0.12948139993763064),
-      Array(-0.03640557350019315, 0.07519223123790778, 0.15863384104542608, -0.08539727527506727, -0.06374496005434273, -0.0035660330435312903, -0.11229853052030195, 0.05809204620133112),
-      Array(0.15154207389896635, 0.14523232921917117, 0.11161711406445195, -0.04606895171786165, 0.12164311419436634, 0.023387821807618985, -0.1436164520994408, -0.0915156384713635)))
-
-  /** DuckDB mirror of [[graft.ops.Similarity.pqEncode]] +
-    * [[graft.ops.Similarity.pqTopK]] under [[PQ_CODEBOOK_PINNED]]: the
-    * shared WITH-prefix builds unit vectors (list_transform divide by
-    * the dot-product norm — the unitVecs definition), the query's
-    * flattened m×k ADC lookup table (one list_reduce dot per (s, c) —
-    * ascending-i fold, the adcFoldExpr order), the per-vector
-    * per-subspace distance lists staged exactly like withPqCodes
-    * (subvector → 16 squared-L2s → first-minimum argmin via
-    * list_position(d, list_min(d))), and the ADC score as the m-term
-    * ascending-s lookup fold rounded 4. Ties and fold orders replicate
-    * the Spark expressions term for term, so the replay is exact, not
-    * approximate.
-    */
-  private def pqCommonSql: String = {
-    val cbLit = "[" + PQ_CODEBOOK_PINNED.map(sub =>
-      "[" + sub.map(cw => "[" + cw.mkString(", ") + "]").mkString(", ") +
-        "]").mkString(", ") + "]"
-    s"WITH cb(cb) AS (SELECT $cbLit), " +
-      "ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-      "u AS (SELECT vec_id, list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS e " +
-      "FROM ev WHERE sqrt(list_dot_product(v, v)) > 0), " +
-      "q AS (SELECT e AS qe FROM u WHERE vec_id = 0), " +
-      "t AS (SELECT list_transform(range(1, 129), sc -> " +
-      "list_reduce(list_transform(range(1, 9), i -> " +
-      "qe[CAST((sc-1)//16 AS INT)*8 + i] * cb[CAST((sc-1)//16 AS INT)+1][CAST((sc-1)%16 AS INT)+1][i]), " +
-      "(a, b) -> a + b)) AS tab FROM q, cb), " +
-      "st1 AS (SELECT vec_id, list_transform(range(1, 9), s -> " +
-      "list_transform(cb[s], cw -> " +
-      "list_reduce(list_transform(range(1, 9), i -> " +
-      "(e[(s-1)*8+i]-cw[i])*(e[(s-1)*8+i]-cw[i])), (a, b) -> a+b))) AS ds " +
-      "FROM u, cb WHERE vec_id <> 0), " +
-      "st2 AS (SELECT vec_id, list_transform(ds, d -> " +
-      "CAST(list_position(d, list_min(d)) - 1 AS INT)) AS cds FROM st1), " +
-      "sc AS (SELECT vec_id, round(list_reduce(list_transform(range(1, 9), s -> " +
-      "tab[(s-1)*16 + cds[s] + 1]), (a, b) -> a+b), 4) AS pq_score " +
-      "FROM st2, t)"
-  }
-
-  private def pqTopKSql: String = pqCommonSql +
-    " SELECT vec_id, pq_score FROM sc ORDER BY pq_score DESC, vec_id ASC LIMIT 10"
-
-  /** The [[pqCommonSql]] ADC scores as a 100-deep shortlist, exact
-    * rounded-cosine rescore of only those rows — pqTopKRefined's
-    * two-stage shape replayed verbatim.
-    */
-  private def pqRefinedSql: String = pqCommonSql +
-    ", short AS (SELECT vec_id FROM sc ORDER BY pq_score DESC, vec_id ASC LIMIT 100) " +
-    "SELECT u.vec_id, round(list_dot_product(u.e, q.qe), 4) AS cos " +
-    "FROM u JOIN short USING (vec_id), q " +
-    "ORDER BY cos DESC, u.vec_id ASC LIMIT 10"
-
-  /** SQL string literal with quotes doubled. */
-  private def sqlLit(s: String): String = "'" + s.replace("'", "''") + "'"
-
-  /** Exact-roundtrip DOUBLE literal for DuckDB: a bare decimal literal
-    * parses through DECIMAL(38) and can lose the final ulp (measured:
-    * 9/64 gaussian literals off by one bit), which would corrupt the
-    * raw-double sign tests and argmax orderings the LSH/IVF oracles
-    * replay. Scientific notation forces the DOUBLE parser — bit-exact
-    * roundtrip (300/300 random vectors verified).
-    */
-  private def dLit(x: Double): String = {
-    val s = x.toString
-    if (s.contains("E") || s.contains("e")) s else s + "e0"
-  }
-
-  /** The [[graft.ops.Similarity.lshBucket]] hyperplanes as a DuckDB
-    * list-of-lists literal — the SAME doubles the live plan bakes in
-    * (Similarity.lshPlanes is the shared source), emitted through
-    * [[dLit]] so each plane component roundtrips bit-exactly.
-    */
-  private def lshPlanesSqlLit(dim: Int, numPlanes: Int, seed: Long): String =
-    "[" + graft.ops.Similarity.lshPlanes(dim, numPlanes, seed)
-      .map(p => "[" + p.map(dLit).mkString(", ") + "]").mkString(", ") + "]"
-
-  /** DuckDB mirror of the lshBucket sign-bit fold: Σ 2^i over strictly
-    * positive projections (bitwiseOR of distinct bits ≡ sum).
-    * `list_dot_product` is a plain ascending multiply-add fold — verified
-    * bit-identical to the ArrayDotProduct kernel on 300 random vector
-    * pairs — so the raw-double `> 0` test replays exactly, no rounding
-    * needed.
-    */
-  private def lshBucketFoldSql(e: String, pl: String, numPlanes: Int): String =
-    (0 until numPlanes).map(i =>
-      s"(CASE WHEN list_dot_product($e, $pl[${i + 1}]) > 0 " +
-        s"THEN ${1L << i} ELSE 0 END)").mkString(" + ")
-
-  /** Shared unit-vector CTEs over embeddings — the unitVecs definition
-    * (double cast, x / sqrt(Σx²), zero-norm rows excluded), bit-exact on
-    * both engines (correctly-rounded IEEE divide + sqrt over identical
-    * parquet floats).
-    */
-  private val UNIT_VEC_CTES =
-    "ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-      "u AS (SELECT vec_id, " +
-      "list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS e " +
-      "FROM ev WHERE sqrt(list_dot_product(v, v)) > 0)"
-
-  /** (vec_id, e, bucket) CTEs for the q_lsh_pairs / q_embed_dedup index
-    * (dim 64, 8 planes, seed 42 — the lshIndex defaults) plus the
-    * intra-bucket lower-id pair scan with rounded-cosine `c`.
-    */
-  private def lshPairCtes: String =
-    UNIT_VEC_CTES +
-      s", pl(pl) AS (SELECT ${lshPlanesSqlLit(64, 8, 42L)}), " +
-      s"b AS (SELECT vec_id, e, ${lshBucketFoldSql("e", "pl", 8)} AS bucket " +
-      "FROM u, pl), " +
-      // + 0.0 normalizes DuckDB's IEEE-signed round (-1e-9 → -0.0) to
-      // Spark's BigDecimal round (never -0.0): the driver hashes string
-      // reprs, where they differ — latent rows surfaced by the r14
-      // sf0.1 sweep
-      "p AS (SELECT a.vec_id AS a_id, b2.vec_id AS b_id, " +
-      "round(list_dot_product(a.e, b2.e), 4) + 0.0 AS cos " +
-      "FROM b a JOIN b b2 ON a.bucket = b2.bucket AND a.vec_id < b2.vec_id)"
-
-  /** The k=16 coarse-quantizer centroids
-    * [[graft.ops.Similarity.ivfCentroids]] (iters 5, sampleSize 4096)
-    * converges to on the sf0.01 embeddings snapshot, PINNED for the
-    * q_cluster_sizes oracle (the [[PQ_CODEBOOK_PINNED]] doctrine:
-    * k-means TRAINING stays the iterative exemption, but cell argmax
-    * under FIXED centroids is mechanical arithmetic a DuckDB replay
-    * reproduces exactly; the live query still trains, so trainer drift
-    * flips the row red). Captured via tools/pin_ivf_r13.scala.
-    */
-  private val IVF_CENTROIDS_PINNED: Array[Array[Double]] =
-    Array(
-      Array(0.04175034027277473, 0.14099123185233392, -0.08156142762637152, 0.007490972478748892, -0.02192760841842231, 0.04175185124356823, 0.18953563147180397, 0.13929188891917804, -0.07133342292985273, -0.09486851306376123, 0.29391732699619305, -0.15551635825528304, -0.019379132268020457, 0.05453857448777325, 0.03794464276426358, 0.21255461500782039, 0.2418984324079458, 0.07571946453862236, -0.11431769313665624, -0.008796193446619922, -0.05338239441384, -0.026828396120743, -0.004463489136813806, 0.17798144502244823, -0.044482644808781995, 0.024414532349812775, 0.043139853885860016, 0.037664082135280434, 0.21642060255355228, 0.10109946660714919, 0.30191831106756356, 0.07058536558289392, 0.028874726888421354, 0.02352860470568645, -0.1924765073220483, 0.09286352899850919, 0.028143492397438234, -0.2922986730259081, -0.1251757252041721, 0.08149592917520553, -0.15354075250564408, 0.037349676265137584, -0.2244974722398799, -0.09374437534045679, -0.02684652450602136, -0.027353084988128835, 0.0921991845187206, 0.06751311741704169, 0.03631010477373384, -0.11472774232786899, -0.004360337455439161, -0.05786188010147894, -0.18818384641749428, 0.11389452518206962, 0.023708102807383, 0.044970491366704814, -0.10227149386285374, -0.0903675327796589, -0.14029739786540368, -0.06286126188005713, -0.06055745412376385, -0.22344946017557438, 0.133558330925332, -0.17601586389940121),
-      Array(0.00805798786930207, 0.05119373826414542, -0.12166719241077653, 0.022558257988282038, 0.22238453339215267, 0.09625040872005257, -0.11026085067628587, -0.1760421695548629, -0.04531239208424396, -0.13601800638959055, 0.13942100693019344, -0.11971980637826295, -0.07651012268117778, 0.03254601665578056, 0.115000630858144, -0.18318510768342317, 0.17258048187664818, 0.009119913791373254, -0.14318338377171544, -0.03315122354926137, 0.08029354163589988, 0.16770559247877898, 0.14259254820424722, -0.21982622886330094, -0.017936465747434842, 0.09014075178032298, 0.14614974823047217, 0.2722877141411913, -0.26153326908291585, 0.01958516630034375, 0.04556413182945903, -0.09784228763060866, -0.06143148061815462, -0.10400356574924549, 0.10251874567668075, 0.04129459620818928, 0.06813470674352652, 0.040995515811925766, 0.12950057946814758, 0.27434440128706733, -0.06746535930606061, 0.09401157553138773, -0.027128539021149957, -0.0022910847844334033, -0.08114119633538604, -0.10157163627025638, -0.031546374739299464, -0.06717925917114664, -0.05817293873153004, 0.19003783593062368, 0.11395141262383209, -0.2228200226274809, 0.14010149442426195, -0.030272266720903968, -0.01201684711652633, -0.03280372893742194, 0.06266943269825902, -0.17947112526815026, -0.07693365255139742, 0.1894381178724657, 0.13385594577044688, 0.062390871242990024, 0.13054391137462387, -0.17505117293180328),
-      Array(0.18094488840321846, -0.018653104991785848, 0.09033636433339376, -0.0010124343686543273, -0.047211734803953145, -0.2683148271900167, -0.02644075435420277, 0.2588357270844247, -0.1115836299519327, 0.17818171727661067, -0.01218677789535648, -0.048449348631054365, 0.15023759217625543, 0.04539278376078211, 0.025080446761196102, 0.08809871280893182, -0.14437450294979337, 0.09924039360211756, -0.13281750959333058, 0.026850722278259152, -0.05737531261289225, -0.06359216936036582, 0.07787222679495459, 0.06903670749432253, 0.06823190817666906, -0.11670400297011066, -0.1983028471397997, 0.1543864848953998, -0.10505359014582814, 0.18024748375069935, 0.07637249185300411, -0.002072927550771091, 0.08333330610129161, 0.23992002711465737, 0.1693076350180139, -0.001394287979954844, -0.09264605919157327, 0.041289989391639526, -0.09168747941882681, 0.050424695525667466, -0.18721769992580362, -0.13110384355620838, 0.07320917379016129, 0.03945777278735691, -0.03642474737000193, 0.07485513464141468, -0.2338042351761524, 0.1446194378914325, 0.017526438474049912, -0.06925084704133673, 0.3065073455432343, 0.21741438309871897, 0.06934983377580764, -0.03229796462784393, 0.10304750865508656, 0.018025103797541252, 0.012223971727020258, -0.03891057427186121, -0.09049551071938798, 0.0506408099610575, -0.040570470799919704, -0.08282490999752218, -0.029227993605153952, -0.3132572829698337),
-      Array(-0.06973095996338398, 0.0835715833077195, 0.22540457002160388, -0.09313182745475095, -0.16500820531521834, 0.1269340934720212, 0.02446570324444215, 0.11865074904702085, -0.06140675896938259, 0.25164127110180406, -0.045861071688775484, 0.1485194579336228, 0.03902695555525896, -0.2985838563189822, 0.06151445786898188, 0.030057375804257987, 0.19003316026683018, 0.11556433624012355, 0.02022407432694423, 0.03724191533824253, -0.05968426616290497, -0.13882140587092068, -0.12048922251112049, -0.03974576682757557, -0.023702852004093694, 0.1404640270527523, 0.18436543110449702, -0.026206512589584157, 0.1374330197431233, -0.10381579174002357, 6.710307669448739E-5, -0.007247976533117091, 0.10381051372989406, 0.08030366230577489, -0.02036649345668439, 0.17060143799540883, -0.07715571834276835, -0.2433211040217313, 0.021777312377436516, 0.03795083041630247, 0.09782815465081697, 0.06854023882855352, 0.10394597714372139, 0.048055665590000234, -0.02309807661035646, -0.3224059764726259, -0.01164619347290613, 0.17036707955206942, 0.039022542901735235, 0.046072347354778255, -0.08912063014473659, 0.12024871018153854, 0.11222650787540642, -0.21055688971698364, -0.0018526719930371575, 0.1442102628911215, 0.013176061101802495, 0.07667005412284088, -0.17680707578061647, -0.09600178359250483, -0.2221839396557656, -0.06630264736891262, -0.15856761771841618, -0.07144936640745782),
-      Array(0.04793303844818282, 0.12823888605918304, 0.001540267908007929, 0.15110675268450666, 0.04618927414711127, 0.15457825650503174, -0.19326009704716882, 0.22699374706653547, -0.03155228298575756, -0.03855094715794686, 0.10596389009509506, 0.22563831642740612, -0.2767781291441046, -0.028419603726174435, 0.021912701810083295, 0.05981719679691232, -0.15214677301976845, -0.06075259031640819, 0.200411236189774, -0.10207410500074492, -0.06314564905456437, 0.19747335144023045, -0.014163969767122114, 0.2181405067433252, 0.04003033840426451, 0.028704876749601538, 0.19578665782306526, 0.0038111357777404964, 0.03421397869968886, -0.00776954507825571, 0.022904132512259964, 0.10983549082997876, -0.1850674180072501, 0.00493414052409602, -0.03149913046620383, 0.08869399659503045, -0.18614489881545615, 0.23394044620532986, 0.03455559119819363, -0.01607074558100184, -0.1884491697914356, -0.21116439436693518, -0.15828748332648682, 0.1341206147129101, -0.12710874785496953, 0.020831242823854783, 0.02670485819710083, 0.10185566920318118, 0.04648756797169825, -0.1495291121844293, 0.10976001587405533, -0.027353678971908043, -0.11356073548946638, -0.15842879813541758, -0.07191810175762495, 0.0011849621092076736, 0.14926757998478699, 0.10132878970583029, 0.059333929745542455, 0.20770613988097372, 0.05926177766411497, -0.13364211703983006, 0.016898911944030974, 0.0921756582757157),
-      Array(-0.07006704774725976, 0.006545888210646212, 0.1328537123245544, -0.09428054367827127, 0.10100734461803443, -0.033280092806358616, -0.03314088190959131, -0.1841414506376629, 0.0067007682473693144, -0.243322573313886, 0.16394571609103586, -0.16773799843779805, -0.10136800950681, 2.5919959852891376E-4, -0.20798844510744458, 0.03896621499076651, -0.23747098472314343, 0.14162539835677695, 0.04183631053148484, 0.13943397788391215, -0.021648403216715583, -0.11768166809725354, -0.1174094358275269, 0.01722177363610758, -0.27989910168435284, 0.09707743643597072, -0.051692506288602245, -0.11182294064461606, 0.19556097511925644, 0.1751091100633151, -0.19772860136557455, -0.15208192172371748, 0.012739263168012865, -0.08581267802845605, -0.027816626184716742, -0.24499573444562492, -0.15443132352808558, -0.06967812661067481, -0.12254353038834634, 0.10049744198290624, 0.01980135306149263, -0.12580021432611863, 0.17508899651975848, 0.054833924875231206, 0.04132605478922999, 0.25835574583560567, 0.013335375298658622, 0.05889992284845765, 0.10461885238436411, 0.15433396653711023, 0.07203262670429368, -0.1698117922718773, 0.04389778785393026, -0.13384392659853844, -0.07901814126996755, -0.1998265093486955, 0.0732318776455883, -0.03047014133828521, 0.05164944629313803, 0.01077355918166484, 0.03631747401261428, -0.04450894740999327, -0.020159466676010977, 0.032297582189537696),
-      Array(0.06719865063667943, -0.17164466042688334, 0.0571611679073815, 0.014522141870310973, -0.09257148742928517, -0.09032914342605496, 0.0012331654023844112, -0.2114193158651024, 0.04001905942700068, 0.02563376169805826, -0.05249756388981152, 0.004574057690770883, -0.32234112093048706, 0.08888249721997728, -0.12061692979884317, -0.06996345091245434, 0.28426606278058963, 0.07217542166211285, 0.04583877720793406, 0.21796157878165293, -2.0154772365199122E-4, 0.15290898053983226, -0.10563857039035582, 0.16133418413821643, 0.018041446589946396, -0.29866559472951637, 0.016836212425376636, 0.18187139830305965, -0.12762895444511166, -0.052187607305250405, -0.07018366482878119, 0.05213677350698628, -0.12458273732100113, -0.1735132043434758, 0.15672844125156768, 0.09007705131300336, 0.09815375821820939, -0.21172169671309807, -0.12046744990080059, 0.04055573912810378, 0.03552067515914201, 0.06856893674813763, 0.19039788482172032, -0.18010041557317114, 0.1800031491130295, 0.022115101024840326, 0.01697307938984808, 0.07327909467478681, -0.06949800814910481, -0.028427733348500565, -0.018916089068193805, 0.08080312157391273, 0.18116638970459037, -0.16185555457885498, 0.15016346987439727, 0.05942353930269418, -0.03798588794678546, -0.044094571001673216, 0.10589544867184901, -0.001640935524548422, -0.06959125466301834, 0.19434758583589962, 0.036884264246374955, 0.027763302245046022),
-      Array(-0.02810942144660398, 0.05331611792473668, -0.04658767283603144, -0.22228124814874595, 0.15458295137172465, 0.1076720677329885, -0.2287145675667743, -0.11029357355525755, -0.09844780957074938, 0.09670062034794555, -0.059722354062658745, -0.008189706616987754, -0.0390783151787247, 0.0038203133982478597, -0.015758179421940157, 0.03608676445381894, 0.08851426104556663, 0.17596626814240973, -0.052659645324925626, 0.02810100429136158, 0.025286321522499697, -0.3310178728535779, 0.19129778821003698, -0.025239617971771895, -0.008938198594545392, -0.21306968843550103, -0.20874160275723724, 0.09942572527639539, -0.0076302406918944245, -0.03373052533139954, 0.23766001185107566, -0.13256952879866266, -0.032452008404958876, -0.07072398759277727, -0.1067532986542173, -0.13376701257838958, 0.017312484792462637, 0.05926172516373297, -0.05848648889388792, -0.23190690778139347, -0.07015226644516037, 0.035659411394544746, 0.0601895270019176, 0.07327757751217623, -0.09587806811087654, 0.1271712204141499, -0.13315967258698913, 0.06518131180870482, 0.1487387611373629, -0.1869028675499009, -0.06905370217833048, 0.04993639631120998, -0.1572091308607949, 0.18323435325720386, 0.11754364482179126, 0.13188832868877703, -0.00550854411929821, 0.12519262455538296, -0.19217868298170207, 0.10114870810127545, 0.0709005681845335, 0.07170651701446032, 0.1790343047605268, 0.19303487794065396),
-      Array(0.09219355428546248, -0.19151599021361088, -0.050463792405535196, 0.08073905092584262, 0.05284693060873648, 0.25940151840269227, -0.12112825297643337, 0.24754467447397058, 0.09427817041273737, -0.12748701066485466, 0.11919241283398392, 0.11288646351429002, -0.03976796525077462, 0.10669305985482606, -0.25131562656987966, 0.11639975243934768, -0.011596844777089672, 0.1113012002351876, -0.01366135913429173, -0.1915990356725319, -0.025268086409988563, -0.06244183474599375, 0.15386968724340408, -0.27347711549651893, -0.15469329526687156, 0.025073143379711952, 0.01576212526857267, 0.07520024980204192, 0.010767650115018195, 0.024178045214099615, 0.01866823578193491, -0.04198980872443404, 0.059171074342612165, 0.08028782673141001, 0.09670948904276173, 0.20655309547586645, -0.24871513163577105, 0.19503159967524186, 0.18666813711068495, 0.012351294818824856, -0.02400611057930123, -9.278789008006248E-4, 0.046311780557953916, 0.05868640952829376, -0.1786388491212108, -0.071372579715527, 0.024921122981214152, -0.015099353165589937, -0.01925458005442072, 0.03058881193719485, -5.019428019747557E-6, -0.07820935043024178, -0.11406603397943349, 0.16200610180214559, 0.12910344226319365, -0.3478139724988441, -0.022073615547867194, -0.0025351379668843675, 0.11764701782954665, -0.1399473350781941, -0.03754814821748856, 0.022746998125151706, -0.10587838008866686, 0.001917010891089354),
-      Array(-0.11065344399004531, -0.13105137845246853, 0.057206794885725304, -0.06394743514770217, 0.2442735502849552, 0.07307840958901053, -0.2895681931681565, -0.0563645770641493, -0.004036351283283894, 0.17395483259339314, -0.22517184491214778, 0.16079028019480768, 0.08269459332236695, 0.050312305363101, -0.041551419373499696, 0.11550638582411657, -0.032177677186006934, -0.12289801902394085, 0.030662355673977935, -0.004762479225659617, 0.009220519629024426, 0.014371059385222935, -0.0027972115346100003, -0.09494968424313292, -0.20833064009966112, 0.19796049623475878, 0.10965559176118647, -0.10362248970713799, 0.057139521582016455, -0.3490063363011401, 0.07284868807836216, -0.18976098340830858, 0.060561642953344194, -0.056818427913332636, 0.24122475487597442, -0.21655695975408318, 0.04915706377349181, 0.10005887785777741, 0.023693384772523116, -0.08708590456983287, -0.07257954893067506, -0.1504748025559307, -0.05101555494848118, -0.20091392600913285, 0.10400197481816995, -0.17231807827988288, -0.05324579839424309, -0.07208698004591557, -0.09321910201940618, 9.728990826033058E-5, -0.039325056833396675, -0.013832500794090877, -0.08105345566550558, 0.16836096270086856, -0.09673293470891624, -0.048387648819150406, -0.15278392481704908, 0.0017178282695464028, 0.04353297425210003, -0.12941217425274104, -0.1268135177894007, -0.007884696312091202, 0.08475819251061975, -0.08615285413467982),
-      Array(-0.043621157011963854, -0.06918085109825609, 0.06550376579325061, 0.027603630987517752, 0.012287507846384677, -0.07515924010033943, 0.11130007770236496, 0.04013622387328517, -0.010025383477894, 0.11542128069555671, -0.061472130337134966, -0.08650999436099598, -0.010322393573128218, 0.17254515656024985, 0.11075534370976145, 0.12425819037383051, -0.15794750426578683, -0.28060766857157243, 0.09656064186710811, 0.1412733736332602, -0.014311063812114397, -0.06102904009563227, -0.1339514675962408, 0.10534151047055443, 0.056637119861371266, -0.0038118718444756796, -0.13656721566929747, 0.025536080662205998, -0.04995274214713532, 0.005875282185415307, -0.08636429949361075, -0.1073543557345758, -0.0146471657772488, -0.08299944760881407, -0.04139230197211052, 0.06748062388681833, 0.24291521058737264, -0.06917586743899787, -0.15596127664925738, 0.00251289763174626, 0.17418124547962244, 0.05386239202237608, 0.1264547248199106, 0.10630089573368011, -0.35099518123994244, -0.0892065580429557, 0.00623308200082399, -0.20800963252651852, -0.12311963748203479, 0.2711737370093959, 0.24227946299895833, 0.10507262256387861, 0.20675042821641565, -0.0012189301411208516, 0.09220567595489446, 0.05429856227830022, 0.16197192739561966, 0.040570164123613923, -0.16852222358173535, 0.013383591319162384, 0.1970831004351348, -0.13443354926480014, -0.09292003132841146, -0.07131511804631885),
-      Array(-0.009536222507743134, 0.004819460916268385, 0.13927819013983728, -0.01642949387091414, -0.18219343553318654, -0.051335175249655446, -0.10923750663950345, -0.03811826439723417, 0.15458372056816214, -0.026115139995085603, -0.2137888792578481, 0.02222577291434831, 0.02758986871138808, 0.039505695686342504, -0.0538445943148102, -0.016493365092129366, -0.06379632337126968, 0.02252382913912768, -0.09791280899298288, -0.0028876206153215216, -0.23646964141257815, 0.19857523841390023, 0.0919626079232589, -0.07359188401475818, 0.1709509605027517, 0.19214017161387592, 0.10278861866198107, 0.03191226213429274, 0.11634675227419922, 0.10426950417219406, 0.11054979548735258, 0.2110945656721181, -0.10032429591505579, -0.15401695371144963, -0.12285865407916238, -0.05476135221080656, -0.12187972614080526, 0.11323782562359978, -0.0819376788363796, -0.18458633605034525, 0.10698169425815315, 0.02437859494941645, -0.08653946015235811, 0.2066482228261554, -0.10532178554542343, 0.3409826986833756, 0.3120995533902353, -0.11801435229734226, -0.19810487945682753, 0.010445781065036174, 0.011655974521502372, 0.08425960340671866, 0.029830898986987774, 0.11201106231276713, 0.002524512017773509, 0.10885295627668026, -0.054885161551579485, -0.034018040407320614, -0.21588239244373109, -0.06903034886262209, 0.03478353316246141, 0.10872892190753625, 0.10341490839024019, 5.008563693701023E-4),
-      Array(0.09631970193355045, -0.03434631277662832, -0.2007884890715102, -0.08007000587550475, 0.11556402661479075, -0.01930743465417611, -0.2812455431133873, 0.23976210437225443, 0.10877624928263874, 0.11839920933929227, 0.11519550322284652, -0.08808888377101044, 0.19707044537902807, -0.14510911172432495, 0.07346249633853798, 0.0013836217011510608, -0.08865485854778946, 0.16771745516583925, 0.0659609797233368, -0.17478199366444896, 0.08124945676950222, 0.10946031743837836, 0.20766771398481876, -0.24594012187571526, 0.04862187397600047, 0.12519429042583333, -0.07862823380935313, -0.17139250287876082, -0.16604950268059565, 0.17770354458005766, -0.1913970219946536, 0.10605590470964635, 0.10801169518152892, -0.10148621384568104, -0.013127749041976965, -0.09659455080448495, 0.09859545608783253, 0.02501845633001776, -0.031576067193249256, 0.08782934921716373, -0.09591734224307893, -0.07961431784179872, -0.028927006789562996, 0.011721558331973563, 0.0806154488078069, -0.07357181371667616, -0.023595994154525048, -0.05414730557957324, 0.0676311947495168, -0.16751938984553477, -0.05053563965949951, -0.019020365195617134, 0.15843511130792912, 0.00276317987639975, -0.20415232940338068, -0.00435049565466732, 0.04503845152450807, -0.04986599410951804, 0.1510594357344285, 0.06720844651792249, 0.0047932227645199705, 0.23476790911532144, -0.1219383141686105, -0.19990458715968762),
-      Array(0.022440892236309167, 0.05713250774848462, -0.051062880555822705, -0.03163334673400967, -0.08816935875659253, -0.1846386340802426, 0.10956154658097, 0.09102853119297727, -0.21630888800851944, -0.3736192818942633, -0.23504447116390573, 0.016780078569424917, 0.005344067504362611, 0.08009308002703444, 0.005517938246524148, -0.04021745884547207, -0.08329035507986148, -0.10106500033807007, 0.03402872575094712, -0.1488802279760651, 0.09934709657041216, 0.07770984767575288, 0.1364932662482447, -0.09693988900295386, 0.10799075576139464, 0.0526351524631802, -0.18407397856938848, -0.018896652669444614, 0.07182410350914689, -0.06440872545370926, -0.021534146708211504, -0.05852579196548765, 0.0206324889946684, 0.12580059260802284, 0.022184989544051414, 0.07144323160191854, 0.1374056875243455, 0.03214132389646723, 0.4029416648273066, 0.013011810595455408, 0.048436247155130195, -0.0038119603192661427, 0.06083632143474395, -0.11868111032733057, 0.049877459862957815, 0.05804316283847355, 0.05880239022404571, -0.015717256973492518, 0.0940941529211578, -0.2625446829191296, -0.0634151451154242, -0.0011838517634087983, 0.00614435620877514, -0.1192533284521588, 0.014044859514923305, -0.020662824460676073, 0.051790650310661976, -0.2569407873061392, -0.08298702027590117, -0.21490222710233076, -0.06406749332430016, 0.06124560164054538, 0.09288037213199458, 0.25543227190458884),
-      Array(0.06825746678530699, 0.14346245352882706, -0.007110962862025568, 0.1762718515370372, 0.16460597367777377, 0.20857278848400765, 0.04935298722821803, -0.15434480143700258, -0.05816065080407985, -0.10176940790840477, 0.08824502136649946, 0.09396408993941695, 0.26395104983280004, -0.07096939089991106, 0.16428637083722816, -0.16038164588661202, -0.075416555293172, 0.037317209976239725, -0.00542499627384499, 0.17561980256470178, 0.1476099566498938, 0.05602889589024281, -0.24064699257672378, -0.11130752140419124, 0.09670233208587589, 0.1707853674695871, -0.002584138629845429, 0.03294504334319261, -0.0315689373461504, 0.07160144413413251, -0.07690740114654743, -0.1866972224998461, 0.12136017271278807, 0.01053515664309222, -0.09511981248359344, 0.08139319629024397, 0.07798102536460372, -0.0806663437842323, -0.1452280761848445, -0.27397858341543374, 0.05365525635537826, -0.052871890390431206, -0.16252776170969355, -0.09487814454457465, 0.16209493337065792, 0.008839329135559107, -0.10054033435310633, 0.06491935483385611, -0.06363946334226675, -0.30631796519125803, -0.19089492677180372, -0.03031960299717386, -0.012990221238198449, -0.07192115638250847, 0.017150821679384146, 0.03383619084334374, 0.049807409281796305, 0.10328141423439341, 0.14463840994060403, -0.20481804071293752, 0.13232036990391824, 0.10126545254395186, -0.032031407089948144, 0.038327480983557274),
-      Array(-0.18358859420032353, -0.16570787231624362, -0.07431730676797815, -0.08791321722089185, -0.024428366739028044, 0.011786618764606129, 0.01636369825637342, -0.01910491970147471, 0.16977505697693737, 0.13978753607667024, 0.16485510158088515, 0.05770354136720341, 0.04747047102395756, -0.10717152618347217, 0.17809366280404393, -0.14217277316031632, 0.18266545175202745, -0.19776470913576855, 0.05615551144190014, -0.03909771753257164, -0.04272015907408934, 0.03338802624293496, -0.08413632600964546, 0.06317930446886734, 0.14155792466942796, 0.14956316948081308, -0.020423109725284824, -0.048495855307958344, -0.16701681004816138, -0.20232930783008096, -0.031218698276505412, 0.1845317053384298, 0.2935138602430917, -0.09967294456260829, 0.027007141652984415, -0.13950204994746554, -0.0913857142368716, 0.03665892239901083, 0.060343002570325516, -0.018765226055390282, 0.23078284433163174, -0.21030310739053684, -0.16242090108830728, -0.08017499260161799, -0.050991478956371426, 0.14290380987316845, 0.023537787337647234, 0.07451944845592968, -0.08742498217851867, -0.0488110538478631, 0.0328814854682657, -0.10634438435327341, 0.11225789372888373, -0.07448279236389839, -0.05197991966980802, -0.0022097759008223505, 0.02253491115202209, 0.16524746572877297, 0.2652067706682258, -0.10724324780210907, -0.017750533863528678, 0.1368776358404467, -0.2497485657138702, -0.12543252062880184))
-
-  /** DuckDB mirror of [[graft.ops.TextAnalysis.bpeEncodeLearned]] under
-    * [[BPE_MERGES_PINNED]]: each merge is ONE left-to-right
-    * non-overlapping fusion pass (the BpeMergeEncode kernel semantics),
-    * which is exactly what a chained `replace` does on a
-    * delimiter-framed symbol string. Each symbol is wrapped as
-    * `\u0001 sym \u0001`, so adjacent syms share a `\u0001\u0001` seam;
-    * replacing `\u0001 l \u0001\u0001 r \u0001` with `\u0001 lr \u0001`
-    * fuses whole symbols only (syms never contain \u0001 — BPE
-    * pre-tokens are text chars; chr(1) absence from the corpus is the
-    * pin's precondition) and, because replace() scans the ORIGINAL
-    * remainder left-to-right, reproduces the kernel's i+=2 skip exactly.
-    */
-  private def bpeApplySql: String = {
-    val D = "\u0001"
-    val init = s"${sqlLit(D)} || array_to_string(" +
-      s"regexp_extract_all(word, '(?s).'), ${sqlLit(D + D)}) || ${sqlLit(D)}"
-    val enc = BPE_MERGES_PINNED.foldLeft(init) { case (e, (l, r)) =>
-      s"replace($e, ${sqlLit(D + l + D + D + r + D)}, ${sqlLit(D + l + r + D)})"
-    }
-    s"WITH t AS (SELECT unnest(regexp_extract_all(lower(text), " +
-      s"'${ops.TextAnalysis.bpePatternSql}')) AS word FROM documents), " +
-      "g AS (SELECT word, count(*) AS freq FROM t GROUP BY word), " +
-      s"s AS (SELECT word, freq, $enc AS enc FROM g) " +
-      s"SELECT word, freq, replace(trim(enc, ${sqlLit(D)}), " +
-      s"${sqlLit(D + D)}, ' ') AS pieces, " +
-      s"CAST(len(string_split(trim(enc, ${sqlLit(D)}), ${sqlLit(D + D)})) " +
-      "AS INT) AS n_pieces FROM s"
-  }
-
-  /** DuckDB mirror of [[graft.ops.TextAnalysis.unigramDocStats]] under
-    * [[UNIGRAM_PINNED]]: the UnigramViterbi DP replayed per DISTINCT
-    * word as a recursive CTE that advances one code-point boundary per
-    * step, carrying the full best-score (`fwd`) and best-piece-count
-    * (`np`) vectors as lists. At each position the candidate scores over
-    * predecessor boundaries j (ascending = longest piece first) are a
-    * list_transform against the model shipped as a MAP literal;
-    * `list_position(scores, list_max(scores))` picks the FIRST maximum —
-    * exactly the kernel's strict-`>` replacement rule, so equal-scored
-    * segmentations resolve to the longest piece in both engines. The
-    * per-doc stats then join the word stream back to the distinct-word
-    * DP results (the corpus text itself never enters the recursion).
-    */
-  private def unigramStatsSql: String = {
-    val maxLen = UNIGRAM_PINNED.map(_._1.length).max
-    val plist = UNIGRAM_PINNED.map(p => sqlLit(p._1)).mkString("[", ",", "]")
-    val llist = UNIGRAM_PINNED.map(p => java.lang.Double.toString(p._2))
-      .mkString("[", ",", "]") + "::DOUBLE[]"
-    val unk = java.lang.Double.toString(ops.TextAnalysis.UNIGRAM_UNK_LOGP)
-    s"WITH RECURSIVE base AS (SELECT doc_id, regexp_extract_all(lower(text), " +
-      s"'${ops.TextAnalysis.bpePatternSql}') AS toks FROM documents), " +
-      "words AS (SELECT DISTINCT unnest(toks) AS word FROM base), " +
-      "dp(word, n, pos, fwd, np) AS (" +
-      "SELECT word, length(word), 0, [0.0]::DOUBLE[], [0] FROM words " +
-      "UNION ALL " +
-      "SELECT word, n, p, list_append(fwd, scores[bj]), " +
-      "list_append(np, np[idxs[bj]+1] + 1) FROM (" +
-      "SELECT word, n, p, fwd, np, idxs, scores, " +
-      "list_position(scores, list_max(scores)) AS bj FROM (" +
-      "SELECT word, n, p, fwd, np, idxs, " +
-      s"list_transform(idxs, j -> fwd[j+1] + coalesce(" +
-      s"map_extract(map($plist, $llist), substring(word, j+1, p-j))[1], " +
-      s"CASE WHEN p - j = 1 THEN $unk END)) AS scores FROM (" +
-      "SELECT word, n, pos + 1 AS p, fwd, np, " +
-      s"range(greatest(0, pos + 1 - $maxLen), pos + 1) AS idxs " +
-      "FROM dp WHERE pos < n)))), " +
-      "ws AS (SELECT word, np[n+1] AS wnp FROM dp WHERE pos = n), " +
-      "st AS (SELECT doc_id, unnest(toks) AS word FROM base), " +
-      "agg AS (SELECT st.doc_id, count(*) AS nw, sum(ws.wnp) AS npc " +
-      "FROM st JOIN ws USING (word) GROUP BY st.doc_id) " +
-      "SELECT b.doc_id, CAST(coalesce(a.nw, 0) AS INT) AS n_words, " +
-      "CAST(coalesce(a.npc, 0) AS INT) AS n_pieces, " +
-      "CASE WHEN coalesce(a.nw, 0) > 0 THEN " +
-      "round(CAST(a.npc AS DOUBLE) / a.nw, 4) END AS fertility " +
-      "FROM base b LEFT JOIN agg a USING (doc_id)"
-  }
-
-  /** DuckDB mirror of [[graft.ops.TextAnalysis.unigramEncodeLearned]]
-    * under [[UNIGRAM_PINNED]]: the [[unigramStatsSql]] Viterbi DP
-    * extended to CARRY the best-path segmentation per boundary (a
-    * VARCHAR[][] column appended alongside the score vector — same
-    * first-maximum tie-break, so the emitted pieces match the kernel's
-    * piece-for-piece), joined to distinct-word frequencies.
-    */
-  private def unigramEncodeSql: String = {
-    val maxLen = UNIGRAM_PINNED.map(_._1.length).max
-    val plist = UNIGRAM_PINNED.map(p => sqlLit(p._1)).mkString("[", ",", "]")
-    val llist = UNIGRAM_PINNED.map(p => java.lang.Double.toString(p._2))
-      .mkString("[", ",", "]") + "::DOUBLE[]"
-    val unk = java.lang.Double.toString(ops.TextAnalysis.UNIGRAM_UNK_LOGP)
-    s"WITH RECURSIVE base AS (SELECT doc_id, regexp_extract_all(lower(text), " +
-      s"'${ops.TextAnalysis.bpePatternSql}') AS toks FROM documents), " +
-      "g AS (SELECT unnest(toks) AS word FROM base), " +
-      "wf AS (SELECT word, count(*) AS freq FROM g GROUP BY word), " +
-      "dp(word, n, pos, fwd, segs) AS (" +
-      "SELECT word, length(word), 0, [0.0]::DOUBLE[], [[]::VARCHAR[]] " +
-      "FROM (SELECT DISTINCT word FROM wf) " +
-      "UNION ALL " +
-      "SELECT word, n, p, list_append(fwd, scores[bj]), " +
-      "list_append(segs, list_append(segs[idxs[bj]+1], " +
-      "substring(word, idxs[bj]+1, p-idxs[bj]))) FROM (" +
-      "SELECT word, n, p, fwd, segs, idxs, scores, " +
-      "list_position(scores, list_max(scores)) AS bj FROM (" +
-      "SELECT word, n, p, fwd, segs, idxs, " +
-      s"list_transform(idxs, j -> fwd[j+1] + coalesce(" +
-      s"map_extract(map($plist, $llist), substring(word, j+1, p-j))[1], " +
-      s"CASE WHEN p - j = 1 THEN $unk END)) AS scores FROM (" +
-      "SELECT word, n, pos + 1 AS p, fwd, segs, " +
-      s"range(greatest(0, pos + 1 - $maxLen), pos + 1) AS idxs " +
-      "FROM dp WHERE pos < n)))) " +
-      "SELECT wf.word, wf.freq, array_to_string(dp.segs[dp.n+1], ' ') AS pieces, " +
-      "CAST(len(dp.segs[dp.n+1]) AS INT) AS n_pieces " +
-      "FROM wf JOIN dp ON dp.word = wf.word AND dp.pos = dp.n"
-  }
-
-  /** Shared CTE text for the quantized unigram FORWARD filter under
-    * [[UNIGRAM_PINNED]] (q_unigram_sample / q_unigram_soft): the
-    * [[unigramStatsSql]] DP with the Viterbi max swapped for a
-    * logsumexp list_reduce in the kernel's ascending-j fold order,
-    * each cell round(·,6) — exactly UnigramSample/quantized
-    * UnigramExpectedCounts' forward arithmetic, so every fwd entry is
-    * the same double in both engines. Emits `words` (distinct corpus
-    * words) and `dp(word, n, pos, fwd)`.
-    */
-  private def unigramFwdCtes: String = {
-    val maxLen = UNIGRAM_PINNED.map(_._1.length).max
-    val plist = UNIGRAM_PINNED.map(p => sqlLit(p._1)).mkString("[", ",", "]")
-    val llist = UNIGRAM_PINNED.map(p => java.lang.Double.toString(p._2))
-      .mkString("[", ",", "]") + "::DOUBLE[]"
-    val unk = java.lang.Double.toString(ops.TextAnalysis.UNIGRAM_UNK_LOGP)
-    s"base AS (SELECT doc_id, regexp_extract_all(lower(text), " +
-      s"'${ops.TextAnalysis.bpePatternSql}') AS toks FROM documents), " +
-      "g AS (SELECT unnest(toks) AS word FROM base), " +
-      "wf AS (SELECT word, count(*) AS freq FROM g GROUP BY word), " +
-      "words AS (SELECT DISTINCT word FROM wf), " +
-      "dp(word, n, pos, fwd) AS (" +
-      "SELECT word, length(word), 0, [0.0]::DOUBLE[] FROM words " +
-      "UNION ALL " +
-      "SELECT word, n, p, list_append(fwd, round(list_reduce(terms, " +
-      "(a, b) -> CASE WHEN a >= b THEN a + ln(1 + exp(b - a)) " +
-      "ELSE b + ln(1 + exp(a - b)) END), 6)) FROM (" +
-      "SELECT word, n, p, fwd, list_filter(list_transform(idxs, " +
-      s"j -> fwd[j+1] + 1.0*coalesce(map_extract(map($plist, $llist), " +
-      s"substring(word, j+1, p-j))[1], " +
-      s"CASE WHEN p - j = 1 THEN $unk END)), x -> x IS NOT NULL) AS terms " +
-      "FROM (SELECT word, n, pos + 1 AS p, fwd, " +
-      s"range(greatest(0, pos + 1 - $maxLen), pos + 1) AS idxs " +
-      "FROM dp WHERE pos < n)))"
-  }
-
-  /** DuckDB mirror of [[graft.ops.TextAnalysis.unigramSampleEncode]]
-    * (seed 17, alpha 1) under [[UNIGRAM_PINNED]]: the
-    * [[unigramFwdCtes]] forward filter, then the backward WALK as a
-    * second recursive CTE — at each boundary the valid arcs' integer
-    * micro-masses round(exp(fwd_j + s − fwd_pos)·10⁶) prefix-sum
-    * ascending-j (exact integers in doubles) against the md5-lane
-    * uniform u·10⁶ rebuilt from the kernel's own key; first prefix
-    * past u wins, last feasible arc on quantization slack. Pieces
-    * accumulate by list_prepend so the walk emits them in order.
-    *
-    * Doctrine caveat (round-12 advice): the Scala side quantizes with
-    * math.rint (HALF_EVEN) and scores with log1p, while DuckDB's
-    * round() is half-away-from-zero and its ln(1+exp()) pre-rounds
-    * 1+x — the q6/micro-mass grids absorb the ulp gap everywhere it
-    * can arise (all rows green), but a value landing EXACTLY on a
-    * half-grid point would split the two engines. Keep grid steps at
-    * 1e6 and scores off exact halves when extending this family.
-    */
-  private def unigramSampleSql: String = {
-    val maxLen = UNIGRAM_PINNED.map(_._1.length).max
-    val plist = UNIGRAM_PINNED.map(p => sqlLit(p._1)).mkString("[", ",", "]")
-    val llist = UNIGRAM_PINNED.map(p => java.lang.Double.toString(p._2))
-      .mkString("[", ",", "]") + "::DOUBLE[]"
-    val unk = java.lang.Double.toString(ops.TextAnalysis.UNIGRAM_UNK_LOGP)
-    s"WITH RECURSIVE $unigramFwdCtes, " +
-      "bs(word, n, fwd, pos, pieces) AS (" +
-      "SELECT word, n, fwd, n, []::VARCHAR[] FROM dp WHERE pos = n " +
-      "UNION ALL " +
-      "SELECT word, n, fwd, arcs[ks].j, " +
-      "list_prepend(substring(word, arcs[ks].j + 1, pos - arcs[ks].j), pieces) " +
-      "FROM (" +
-      "SELECT word, n, fwd, pos, pieces, arcs, " +
-      "CASE WHEN len(list_filter(cums, c -> u6 >= c)) + 1 <= len(arcs) " +
-      "THEN len(list_filter(cums, c -> u6 >= c)) + 1 ELSE len(arcs) END AS ks " +
-      "FROM (" +
-      "SELECT word, n, fwd, pos, pieces, arcs, " +
-      "list_transform(range(1, len(arcs) + 1), k -> " +
-      "list_aggregate(ms[1:k], 'sum')) AS cums, " +
-      "((('0x' || substring(md5(word || chr(1) || '17' || chr(1) || " +
-      "CAST(pos AS VARCHAR)), 1, 8))::UBIGINT + 0.5) / 4294967296.0) " +
-      "* 1000000.0 AS u6 " +
-      "FROM (" +
-      "SELECT word, n, fwd, pos, pieces, arcs, " +
-      "list_transform(arcs, a -> " +
-      "round(exp(fwd[a.j + 1] + 1.0*a.s - fwd[pos + 1]) * 1000000.0)) AS ms " +
-      "FROM (" +
-      "SELECT word, n, fwd, pos, pieces, " +
-      s"list_filter(list_transform(range(greatest(0, pos - $maxLen), pos), " +
-      s"j -> {'j': j, 's': coalesce(map_extract(map($plist, $llist), " +
-      s"substring(word, j + 1, pos - j))[1], " +
-      s"CASE WHEN pos - j = 1 THEN $unk END)}), " +
-      "a -> a.s IS NOT NULL) AS arcs " +
-      "FROM bs WHERE pos > 0))))) " +
-      "SELECT wf.word, wf.freq, array_to_string(b.pieces, ' ') AS pieces, " +
-      "CAST(len(b.pieces) AS INT) AS n_pieces " +
-      "FROM wf JOIN bs b ON b.word = wf.word AND b.pos = 0"
-  }
-
-  /** DuckDB mirror of [[graft.ops.TextAnalysis.unigramSoftEncode]]
-    * under [[UNIGRAM_PINNED]]: [[unigramFwdCtes]] (α), a BACKWARD
-    * recursive CTE building β by list_prepend (same q6-per-cell
-    * logsumexp, the kernel's ascending-i fold with the s + β term
-    * order), then every valid arc's posterior as an integer NANOMASS
-    * round(exp(α_j + s + β_i − Z)·10⁹) summed per (word, piece) —
-    * exact integers, aggregation-order-free — and ec = Σ/10⁹
-    * unrounded (one shared exact division, the kernel's output form).
-    */
-  private def unigramSoftSql: String = {
-    val maxLen = UNIGRAM_PINNED.map(_._1.length).max
-    val plist = UNIGRAM_PINNED.map(p => sqlLit(p._1)).mkString("[", ",", "]")
-    val llist = UNIGRAM_PINNED.map(p => java.lang.Double.toString(p._2))
-      .mkString("[", ",", "]") + "::DOUBLE[]"
-    val unk = java.lang.Double.toString(ops.TextAnalysis.UNIGRAM_UNK_LOGP)
-    val mdl = s"map($plist, $llist)"
-    s"WITH RECURSIVE $unigramFwdCtes, " +
-      "bt(word, n, p, bt) AS (" +
-      "SELECT word, length(word), length(word), [0.0]::DOUBLE[] FROM words " +
-      "UNION ALL " +
-      "SELECT word, n, p - 1, " +
-      "list_prepend(round(list_reduce(terms, " +
-      "(a, b) -> CASE WHEN a >= b THEN a + ln(1 + exp(b - a)) " +
-      "ELSE b + ln(1 + exp(a - b)) END), 6), bt) FROM (" +
-      "SELECT word, n, p, bt, list_filter(list_transform(is_, " +
-      s"i -> coalesce(map_extract($mdl, substring(word, p, i - p + 1))[1], " +
-      s"CASE WHEN i - p + 1 = 1 THEN $unk END) + bt[i - p + 1]), " +
-      "x -> x IS NOT NULL) AS terms " +
-      "FROM (SELECT word, n, p, bt, " +
-      s"range(p, least(n, p - 1 + $maxLen) + 1) AS is_ " +
-      "FROM bt WHERE p > 0)))," +
-      "af AS (SELECT word, n, fwd FROM dp WHERE pos = n), " +
-      "bf AS (SELECT word, bt FROM bt WHERE p = 0), " +
-      "arcs AS (SELECT word, n, fwd, bt, unnest(range(0, n)) AS j " +
-      "FROM af JOIN bf USING (word)), " +
-      s"arc2 AS (SELECT word, n, fwd, bt, j, " +
-      s"unnest(range(j + 1, least(n, j + $maxLen) + 1)) AS i FROM arcs), " +
-      "contrib AS (SELECT word, substring(word, j + 1, i - j) AS piece, " +
-      "round(exp(fwd[j+1] + s + bt[i+1] - fwd[n+1]) * 1000000000.0) AS m " +
-      s"FROM (SELECT *, coalesce(map_extract($mdl, " +
-      s"substring(word, j + 1, i - j))[1], " +
-      s"CASE WHEN i - j = 1 THEN $unk END) AS s FROM arc2) " +
-      "WHERE s IS NOT NULL), " +
-      "ec AS (SELECT word, piece, sum(m) / 1000000000.0 AS ec " +
-      "FROM contrib GROUP BY word, piece) " +
-      "SELECT wf.word, wf.freq, ec.piece, ec.ec FROM wf JOIN ec USING (word)"
-  }
-
-  /** The [[unigramStatsSql]] replay aggregated per language — exact
-    * integer totals, fertility as one rounded ratio of sums (a corpus
-    * fertility, not an average of per-doc ratios).
-    */
-  private def fertilityLangSql: String = {
-    val i = unigramStatsSql.lastIndexOf("SELECT b.doc_id")
-    require(i > 0, "fertilityLangSql: unigramStatsSql final-select anchor moved")
-    // the prefix ends after the last CTE's closing paren — re-open the
-    // CTE list with a comma before appending `per`
-    unigramStatsSql.substring(0, i).stripSuffix(" ") + ", " +
-      "per AS (SELECT b.doc_id, coalesce(a.nw, 0) AS nw, " +
-      "coalesce(a.npc, 0) AS npc FROM base b LEFT JOIN agg a USING (doc_id)) " +
-      "SELECT d.lang, count(*) AS n_docs, " +
-      "CAST(sum(per.nw) AS BIGINT) AS n_words, " +
-      "CAST(sum(per.npc) AS BIGINT) AS n_pieces, " +
-      "CASE WHEN sum(per.nw) > 0 THEN " +
-      "round(CAST(sum(per.npc) AS DOUBLE) / sum(per.nw), 4) END AS fertility " +
-      "FROM per JOIN documents d USING (doc_id) GROUP BY d.lang"
-  }
-
-  /** The q_quality_model score CTEs joined to the length weak label —
-    * the shared `j(s, y)` input of the classifier-eval oracles
-    * (q_threshold_sweep / q_auc), mirroring [[qualityScoredLabeled]].
-    */
-  private def qualityLabeledCtes: String = {
-    val (bias, wLog, wAvg, wStop, wNon, _) = ops.TextAnalysis.QUALITY_W
-    s"t AS (SELECT doc_id, source, text, n_chars, $TOKS AS toks FROM documents), " +
-      "f AS (SELECT doc_id, source, n_chars, len(toks) AS n, " +
-      "coalesce(list_aggregate(list_transform(toks, x -> length(x)), 'sum'), 0) / " +
-      "greatest(len(toks), 1) AS avg_len, " +
-      "len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','on'], x))) / " +
-      "greatest(len(toks), 1) AS stop_r, " +
-      s"(length(text) - length(regexp_replace(lower(text), '$NON_ALNUM_SQL', '', 'g'))) / " +
-      "greatest(length(text), 1) AS non_al FROM t), " +
-      s"z AS (SELECT doc_id, source, n_chars, ($bias) + ($wLog) * ln(1 + n) + " +
-      s"($wAvg) * avg_len + ($wStop) * stop_r + ($wNon) * non_al AS z FROM f), " +
-      "j AS (SELECT doc_id, source, round(1.0 / (1.0 + exp(-z)), 4) AS s, " +
-      "CAST(n_chars >= 300 AS INT) AS y FROM z)"
-  }
-
-  /** DuckDB mirror of [[graft.ops.TextAnalysis.thresholdSweep]] over the
-    * [[qualityLabeledCtes]] input: all-integer confusion algebra.
-    */
-  private def thresholdSweepSql: String = {
-    val grid = (0 to 20).map(k => java.lang.Double.toString(k / 20.0))
-      .mkString("[", ",", "]")
-    s"WITH $qualityLabeledCtes, " +
-      s"g AS (SELECT unnest($grid) AS threshold), " +
-      "c AS (SELECT g.threshold, " +
-      "CAST(sum(CASE WHEN j.s >= g.threshold THEN j.y ELSE 0 END) AS BIGINT) AS tp, " +
-      "CAST(sum(CASE WHEN j.s >= g.threshold THEN 1 - j.y ELSE 0 END) AS BIGINT) AS fp, " +
-      "CAST(sum(CASE WHEN j.s < g.threshold THEN j.y ELSE 0 END) AS BIGINT) AS fn, " +
-      "CAST(sum(CASE WHEN j.s < g.threshold THEN 1 - j.y ELSE 0 END) AS BIGINT) AS tn " +
-      "FROM j, g GROUP BY g.threshold) " +
-      "SELECT threshold, tp, fp, fn, tn, " +
-      "round(CASE WHEN tp + fp > 0 THEN tp / CAST(tp + fp AS DOUBLE) END, 4) AS precision, " +
-      "round(CASE WHEN tp + fn > 0 THEN tp / CAST(tp + fn AS DOUBLE) END, 4) AS recall, " +
-      "round(CASE WHEN 2*tp + fp + fn > 0 THEN 2*tp / CAST(2*tp + fp + fn AS DOUBLE) END, 4) AS f1 " +
-      "FROM c"
-  }
-
-  /** DuckDB mirror of [[graft.ops.TextAnalysis.aucScore]] over the same
-    * input: Mann-Whitney with the tie term, cumulative negatives via an
-    * ordered window over the distinct-score dictionary (DuckDB side is
-    * free to use the plain window — the distributed prefix sum is the
-    * Spark side's scale obligation, not the oracle's).
-    */
-  private def aucSql: String =
-    s"WITH $qualityLabeledCtes, " +
-      "d AS (SELECT s, CAST(sum(y) AS DOUBLE) AS np, " +
-      "CAST(sum(1 - y) AS DOUBLE) AS nn FROM j GROUP BY s), " +
-      "c AS (SELECT s, np, nn, coalesce(sum(nn) OVER (ORDER BY s " +
-      "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS below FROM d) " +
-      "SELECT CAST(sum(np) AS BIGINT) AS n_pos, " +
-      "CAST(sum(nn) AS BIGINT) AS n_neg, " +
-      "round(CASE WHEN sum(np) > 0 AND sum(nn) > 0 THEN " +
-      "sum(np * (below + nn / 2)) / (sum(np) * sum(nn)) END, 6) AS auc " +
-      "FROM c"
-
-  /** DuckDB mirror of [[graft.ops.TextAnalysis.aucByGroup]]: the aucSql
-    * algebra with every stage keyed by source.
-    */
-  private def aucGroupSql: String =
-    s"WITH $qualityLabeledCtes, " +
-      "d AS (SELECT source, s, CAST(sum(y) AS DOUBLE) AS np, " +
-      "CAST(sum(1 - y) AS DOUBLE) AS nn FROM j GROUP BY source, s), " +
-      "c AS (SELECT source, s, np, nn, coalesce(sum(nn) OVER " +
-      "(PARTITION BY source ORDER BY s " +
-      "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS below FROM d) " +
-      "SELECT source, CAST(sum(np) AS BIGINT) AS n_pos, " +
-      "CAST(sum(nn) AS BIGINT) AS n_neg, " +
-      "round(CASE WHEN sum(np) > 0 AND sum(nn) > 0 THEN " +
-      "sum(np * (below + nn / 2)) / (sum(np) * sum(nn)) END, 6) AS auc " +
-      "FROM c GROUP BY source"
-
-  /** DuckDB mirror of [[graft.ops.TextAnalysis.aucBootstrap]]: the same
-    * deterministic md5 Poisson(1) weights (the '0x'||hex UBIGINT cast
-    * replay of Spark's conv), per-replica Mann-Whitney, and the
-    * nearest-rank CI over the sorted replica AUCs.
-    */
-  private def aucBootSql(replicas: Int): String = {
-    val cdf = ops.TextAnalysis.POISSON1_CDF
-      .map(java.lang.Double.toString).mkString("[", ",", "]")
-    s"WITH $qualityLabeledCtes, " +
-      s"e AS (SELECT j.doc_id, j.s, j.y, CAST(r.range AS BIGINT) AS b " +
-      s"FROM j, range($replicas) r), " +
-      "wts AS (SELECT s, y, b, " +
-      s"CAST(len(list_filter($cdf, c -> ((CAST(('0x' || " +
-      "substring(md5('boot' || '|' || CAST(doc_id AS VARCHAR) || '|' || " +
-      "CAST(b // 4 AS VARCHAR)), CAST((b % 4) * 8 + 1 AS INT), 8)) " +
-      "AS UBIGINT) + 0.5) / 4294967296.0) >= c)) " +
-      "AS DOUBLE) AS w FROM e), " +
-      "d AS (SELECT b, s, sum(w * y) AS np, sum(w * (1 - y)) AS nn " +
-      "FROM wts WHERE w > 0 GROUP BY b, s), " +
-      "c AS (SELECT b, s, np, nn, coalesce(sum(nn) OVER (PARTITION BY b " +
-      "ORDER BY s ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) " +
-      "AS below FROM d), " +
-      "per AS (SELECT b, sum(np) AS p, sum(nn) AS n, " +
-      "sum(np * (below + nn / 2)) AS u FROM c GROUP BY b), " +
-      "aucs AS (SELECT round(u / (p * n), 6) AS auc FROM per " +
-      "WHERE p > 0 AND n > 0), " +
-      "ranked AS (SELECT auc, row_number() OVER (ORDER BY auc) AS rn, " +
-      "count(*) OVER () AS cnt FROM aucs) " +
-      "SELECT CAST(max(cnt) AS INT) AS n_replicas, " +
-      "round(sum(auc) / max(cnt), 6) AS auc_mean, " +
-      "max(CASE WHEN rn = greatest(CAST(ceil(0.025 * cnt) AS INT), 1) " +
-      "THEN auc END) AS ci_lo, " +
-      "max(CASE WHEN rn = CAST(ceil(0.975 * cnt) AS INT) THEN auc END) " +
-      "AS ci_hi FROM ranked"
-  }
-
-  /** DuckDB mirror of [[graft.ops.TextAnalysis.pairedBootstrap]] over
-    * the q_sys_compare fixture: per-doc Brier complements of the fixed
-    * classifier vs the length heuristic, the aucBootSql md5-lane draw,
-    * one shared weight per (doc, replica), Δ = Σw(b−a)/Σw q6,
-    * nearest-rank interval + win rate.
-    */
-  private def sysCompareSql(replicas: Int): String =
-    s"WITH $qualityLabeledCtes, " +
-      "m AS (SELECT j.doc_id, " +
-      "1.0 - (j.s - j.y) * (j.s - j.y) AS ma, " +
-      "1.0 - (least(1.0, d.n_chars/1000.0) - j.y) * " +
-      "(least(1.0, d.n_chars/1000.0) - j.y) AS mb " +
-      "FROM j JOIN documents d USING (doc_id)), " +
-      s"e AS (SELECT m.doc_id, m.ma, m.mb, CAST(r.range AS BIGINT) AS b " +
-      s"FROM m, range($replicas) r), " +
-      "wts AS (SELECT ma, mb, b, " +
-      s"CAST(len(list_filter(${poisson1CdfSql}, c -> ((CAST(('0x' || " +
-      "substring(md5('pair' || '|' || CAST(doc_id AS VARCHAR) || '|' || " +
-      "CAST(b // 4 AS VARCHAR)), CAST((b % 4) * 8 + 1 AS INT), 8)) " +
-      "AS UBIGINT) + 0.5) / 4294967296.0) >= c)) " +
-      "AS DOUBLE) AS w FROM e), " +
-      "per AS (SELECT b, sum(w * (mb - ma)) AS sd, sum(w) AS sw " +
-      "FROM wts WHERE w > 0 GROUP BY b), " +
-      "ds AS (SELECT round(sd / sw, 6) AS d FROM per WHERE sw > 0), " +
-      "ranked AS (SELECT d, row_number() OVER (ORDER BY d) AS rn, " +
-      "count(*) OVER () AS cnt FROM ds) " +
-      "SELECT CAST(max(cnt) AS INT) AS n_replicas, " +
-      "round(sum(d) / max(cnt), 6) AS delta_mean, " +
-      "max(CASE WHEN rn = greatest(CAST(ceil(0.025 * cnt) AS INT), 1) " +
-      "THEN d END) AS ci_lo, " +
-      "max(CASE WHEN rn = CAST(ceil(0.975 * cnt) AS INT) THEN d END) " +
-      "AS ci_hi, " +
-      "round(sum(CASE WHEN d > 0 THEN 1 ELSE 0 END) / (1.0 * max(cnt)), 6) " +
-      "AS b_win_rate FROM ranked"
-
-  /** DuckDB mirror of [[graft.ops.TextAnalysis.bleuByGroup]] on the
-    * q_bleu fixture grouped by source: pivoted per-(source, n) totals,
-    * the same q6-ln mean and brevity-penalty expressions per group.
-    */
-  private def bleuSourceSql(maxN: Int): String = {
-    val piv = (1 to maxN).map(n =>
-      s"coalesce(sum(CASE WHEN n = $n THEN m END), 0) AS m$n, " +
-        s"coalesce(sum(CASE WHEN n = $n THEN t END), 0) AS t$n").mkString(", ")
-    val anyZero = (1 to maxN).map(n => s"t$n = 0 OR m$n = 0").mkString(" OR ")
-    val meanLog = "(" + (1 to maxN).map(n =>
-      s"round(ln(m$n/(1.0*t$n)), 6)").mkString(" + ") + s")/$maxN"
-    s"WITH tk AS (SELECT doc_id, source, $TOKS AS rt FROM documents), " +
-      "pair AS (SELECT doc_id, source, rt, list_filter(rt, (x, i) -> i % 3 <> 0) AS ct FROM tk), " +
-      "lens AS (SELECT source, count(*) AS np, CAST(coalesce(sum(len(ct)), 0) AS BIGINT) AS cl, " +
-      "CAST(coalesce(sum(len(rt)), 0) AS BIGINT) AS rl FROM pair GROUP BY source), " +
-      "grams AS (SELECT doc_id, source, n.n AS n, " +
-      "list_transform(range(1, len(ct)-n.n+2), i -> array_to_string(list_slice(ct, i, i+n.n-1), ' ')) AS cg, " +
-      "list_transform(range(1, len(rt)-n.n+2), i -> array_to_string(list_slice(rt, i, i+n.n-1), ' ')) AS rg " +
-      s"FROM pair, (SELECT unnest(range(1, ${maxN + 1})) AS n) n), " +
-      "cg AS (SELECT source, doc_id, n, g, count(*) AS cc FROM " +
-      "(SELECT source, doc_id, n, unnest(cg) AS g FROM grams) GROUP BY 1, 2, 3, 4), " +
-      "rg AS (SELECT source, doc_id, n, g, count(*) AS cr FROM " +
-      "(SELECT source, doc_id, n, unnest(rg) AS g FROM grams) GROUP BY 1, 2, 3, 4), " +
-      "pern AS (SELECT cg.source, cg.n, sum(least(cc, coalesce(cr, 0))) AS m, sum(cc) AS t " +
-      "FROM cg LEFT JOIN rg ON cg.source = rg.source AND cg.doc_id = rg.doc_id " +
-      "AND cg.n = rg.n AND cg.g = rg.g " +
-      "GROUP BY 1, 2), " +
-      s"piv AS (SELECT source, $piv FROM pern GROUP BY source) " +
-      "SELECT l.source, l.np AS n_pairs, l.cl AS c_len, l.rl AS r_len, " +
-      "CASE WHEN l.cl = 0 THEN NULL " +
-      s"WHEN $anyZero THEN 0.0 " +
-      s"ELSE round(exp($meanLog + least(0.0, 1.0 - l.rl/(1.0*l.cl))), 4) " +
-      "END AS bleu FROM lens l LEFT JOIN piv USING (source)"
-  }
-
-  /** The [[graft.ops.TextAnalysis.POISSON1_CDF]] thresholds as a DuckDB
-    * list literal (shared by the bootstrap draw replays).
-    */
-  private def poisson1CdfSql: String =
-    ops.TextAnalysis.POISSON1_CDF
-      .map(java.lang.Double.toString).mkString("[", ",", "]")
-
-  /** DuckDB mirror of [[graft.ops.TextAnalysis.apScore]] over the same
-    * input: step-wise average precision from the strictly-below
-    * cumulative counts, term order matching the Spark expression.
-    */
-  private def apSql: String =
-    s"WITH $qualityLabeledCtes, " +
-      "d AS (SELECT s, CAST(sum(y) AS DOUBLE) AS np, " +
-      "CAST(sum(1 - y) AS DOUBLE) AS nn FROM j GROUP BY s), " +
-      "c AS (SELECT s, np, nn, " +
-      "coalesce(sum(np) OVER (ORDER BY s ROWS BETWEEN UNBOUNDED PRECEDING " +
-      "AND 1 PRECEDING), 0) AS pb, " +
-      "coalesce(sum(nn) OVER (ORDER BY s ROWS BETWEEN UNBOUNDED PRECEDING " +
-      "AND 1 PRECEDING), 0) AS nb FROM d), " +
-      "tot AS (SELECT sum(np) AS p, sum(nn) AS n FROM d) " +
-      "SELECT CAST(tot.p AS BIGINT) AS n_pos, CAST(tot.n AS BIGINT) AS n_neg, " +
-      "round(CASE WHEN tot.p > 0 THEN sum(CASE WHEN c.np > 0 THEN " +
-      "(c.np / tot.p) * ((tot.p - c.pb) / ((tot.p - c.pb) + (tot.n - c.nb))) " +
-      "ELSE 0 END) END, 6) AS ap FROM c, tot GROUP BY tot.p, tot.n"
-
-  /** DuckDB mirror of [[graft.ops.TextAnalysis.qualityFitScore]]: the
-    * feature frame (the q_quality expressions, unrounded), a q6-rounded
-    * standardization CTE, then one (gradient / weights) CTE pair per GD
-    * iteration — the btRatingsSql unrolled-iteration convention — and
-    * the final σ(wᵀx) scoring select.
-    */
-  private def qualityFitSql(iterations: Int, lr: Double,
-      minChars: Int): String = {
-    val lrs = java.lang.Double.toString(lr)
-    val head =
-      s"WITH f0_ AS (SELECT doc_id, CAST(n_chars >= $minChars AS INT) AS y, " +
-        s"ln(1 + CAST(len($TOKS) AS DOUBLE)) AS f0, " +
-        s"CAST(coalesce(list_aggregate(list_transform($TOKS, x -> length(x)), 'sum'), 0) AS DOUBLE) " +
-        s"/ greatest(len($TOKS), 1) AS f1, " +
-        s"CAST(len(list_filter($TOKS, x -> list_contains(['the','a','of','and','to','in','is','on'], x))) AS DOUBLE) " +
-        s"/ greatest(len($TOKS), 1) AS f2, " +
-        "CAST(length(text) - length(regexp_replace(lower(text), " +
-        "'[^\\p{L}\\p{Nd}]', '', 'g')) AS DOUBLE) " +
-        "/ greatest(length(text), 1) AS f3 FROM documents), " +
-        "st AS (SELECT " + (0 to 3).map(i =>
-          s"round(avg(f$i),6) AS m$i, greatest(round(stddev_samp(f$i),6), 1e-6) AS s$i")
-          .mkString(", ") + " FROM f0_), " +
-        "f AS (SELECT doc_id, y, " + (0 to 3).map(i =>
-          s"(f$i-m$i)/s$i AS f$i").mkString(", ") + " FROM f0_, st), " +
-        "w0 AS (SELECT " + (0 to 4).map(i =>
-          s"CAST(0 AS DOUBLE) AS w$i").mkString(", ") + ")"
-    def z = "(w.w0 + w.w1*f.f0 + w.w2*f.f1 + w.w3*f.f2 + w.w4*f.f3)"
-    def r = s"(f.y - 1.0/(1.0 + exp(-$z)))"
-    val body = (1 to iterations).map { k =>
-      s", g$k AS (SELECT sum($r) AS g0, " + (0 to 3).map(i =>
-        s"sum($r*f.f$i) AS g${i + 1}").mkString(", ") +
-        s", count(*) AS n FROM f, w${k - 1} w), " +
-        s"w$k AS (SELECT " + (0 to 4).map(i =>
-          s"round(w.w$i + $lrs*g.g$i/g.n, 6) AS w$i").mkString(", ") +
-        s" FROM w${k - 1} w, g$k g)"
-    }.mkString
-    head + body +
-      " SELECT f.doc_id, f.y AS label, " +
-      s"round(1.0/(1.0 + exp(-$z)), 4) AS p, " +
-      s"CAST(1.0/(1.0 + exp(-$z)) >= 0.5 AS INT) AS keep " +
-      s"FROM f, w$iterations w"
-  }
-
-  /** DuckDB mirror of [[graft.ops.Preference.btRatings]] over the
-    * [[btGames]] synthesis: the MM update unrolled one CTE trio
-    * (denominator / raw update / renormalized rating) per iteration —
-    * the pageRank convention — with btRatings' own q6 per-step rounding,
-    * which is what keeps cross-engine float-sum order differences from
-    * compounding across iterations.
-    */
-  private def btRatingsSql(iterations: Int): String = {
-    val head =
-      "WITH g AS (SELECT doc_id % 32 AS a, (doc_id * 3 + 1) % 32 AS b, " +
-        "CASE WHEN (doc_id * 13) % 7 < 4 THEN 1 ELSE 0 END AS sw " +
-        "FROM documents WHERE doc_id % 32 <> (doc_id * 3 + 1) % 32), " +
-        "p AS (SELECT CASE WHEN sw = 1 THEN least(a, b) ELSE greatest(a, b) END AS w, " +
-        "CASE WHEN sw = 1 THEN greatest(a, b) ELSE least(a, b) END AS l FROM g), " +
-        "dir AS (SELECT w, l, count(*) AS n FROM p GROUP BY w, l), " +
-        "e AS (SELECT i, j, CAST(sum(n) AS BIGINT) AS n FROM " +
-        "(SELECT w AS i, l AS j, n FROM dir UNION ALL SELECT l AS i, w AS j, n FROM dir) " +
-        "GROUP BY i, j), " +
-        "wn AS (SELECT w AS item, CAST(sum(n) AS BIGINT) AS wins FROM dir GROUP BY w), " +
-        "items AS (SELECT i AS item, CAST(sum(n) AS BIGINT) AS games FROM e GROUP BY i), " +
-        "r0 AS (SELECT item, CAST(1.0 AS DOUBLE) AS r FROM items)"
-    val body = (1 to iterations).map { k =>
-      s", d$k AS (SELECT e.i AS item, sum(e.n / (ri.r + rj.r)) AS den FROM e " +
-        s"JOIN r${k - 1} ri ON ri.item = e.i JOIN r${k - 1} rj ON rj.item = e.j " +
-        "GROUP BY e.i), " +
-        s"u$k AS (SELECT it.item, CAST(coalesce(wn.wins, 0) AS DOUBLE) / d$k.den AS u " +
-        s"FROM items it LEFT JOIN wn ON wn.item = it.item JOIN d$k ON d$k.item = it.item), " +
-        s"r$k AS (SELECT item, greatest(round(u / (SELECT avg(u) FROM u$k), 6), 1e-6) AS r FROM u$k)"
-    }.mkString
-    head + body +
-      s" SELECT it.item, r$iterations.r AS rating, " +
-      "CAST(coalesce(wn.wins, 0) AS BIGINT) AS wins, it.games " +
-      "FROM items it LEFT JOIN wn ON wn.item = it.item " +
-      s"JOIN r$iterations ON r$iterations.item = it.item"
-  }
-
-  /** DuckDB mirror of Similarity.covarianceLong: (vec_id, i, x) long
-    * grid self-joined on vec_id, population cov rounded 6. ONE
-    * definition for q_covariance and q_covariance_incr — the
-    * incremental path's contract is exactly "equals the full rebuild",
-    * so its oracle IS this replay.
-    */
-  private val COVARIANCE_SQL: String =
-    "WITH el AS (SELECT vec_id, CAST(r.range AS BIGINT) AS i, " +
-      "CAST(embedding[CAST(r.range AS INT) + 1] AS DOUBLE) AS x " +
-      "FROM embeddings, range(64) r WHERE len(embedding) = 64), " +
-      "n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM embeddings " +
-      "WHERE len(embedding) = 64), " +
-      "m AS (SELECT i, sum(x) AS sx FROM el GROUP BY i), " +
-      "p AS (SELECT a.i AS i, b.i AS j, sum(a.x * b.x) AS sxy " +
-      "FROM el a JOIN el b ON a.vec_id = b.vec_id GROUP BY 1, 2) " +
-      // `+ 0.0` canonicalizes IEEE -0.0 → +0.0: DuckDB's round keeps the
-      // sign on tiny negatives (cov ≈ -3.5e-7 → -0.0) while Spark's
-      // BigDecimal round is signless; the driver hashes the raw bytes.
-      "SELECT p.i, p.j, round(sxy / n.n - (ma.sx / n.n) * (mb.sx / n.n), 6) + 0.0 AS cov " +
-      "FROM p JOIN m ma ON ma.i = p.i JOIN m mb ON mb.i = p.j, n"
-
-  /** DuckDB mirror of Retrieval.mmrRerank over the [[denseRunCtes]]
-    * candidates: greedy MMR unrolled one CTE trio (pick/sel/ms) per
-    * step — the pagerankSql convention for iteration. λ and (1−λ) are
-    * spelled so both engines execute the SAME IEEE ops on the SAME
-    * grid-rounded inputs (rel and sim carry round(·,4)), making every
-    * intermediate mmr value bit-identical; ties break by doc_id.
-    */
-  private def mmrSql(dim: Int, k: Int, m: Int, lambda: Double): String = {
-    // BOTH weights are Scala-computed doubles shipped as DOUBLE literals:
-    // a bare `(1 - 0.7)` would be DuckDB DECIMAL arithmetic (exactly 0.3,
-    // a DIFFERENT double than Scala's 1.0-0.7) and flip rounding
-    // boundaries — caught by a real 1e-4 mismatch at first verify
-    val lam = s"CAST(${lambda} AS DOUBLE)"
-    val lamBar = s"CAST(${1.0 - lambda} AS DOUBLE)"
-    // Every step CTE is MATERIALIZED: sel$t/ms$t reference sel$p/ms$p,
-    // so under DuckDB 1.0's per-reference inlining the unrolled chain
-    // re-expands EXPONENTIALLY in m (each of pick/sel/ms at step t
-    // inlines the step t-1 trio twice) — this single oracle replayed in
-    // 90 s and helped zero the round-13 driver compare. Materialized,
-    // each step runs once over k-row frames.
-    val base =
-      s"${denseRunCtes(dim, k)}, " +
-        "cand AS MATERIALIZED (SELECT dr.query_id, dr.doc_id, dr.score AS rel, " +
-        "ddn.dv, ddn.nd FROM dr JOIN ddn USING (doc_id)), " +
-        "ps AS MATERIALIZED (SELECT a.query_id, a.doc_id AS ca, b.doc_id AS cb, " +
-        "round(list_dot_product(a.dv, b.dv) / (a.nd * b.nd), 4) AS sim " +
-        "FROM cand a JOIN cand b ON a.query_id = b.query_id " +
-        "AND a.doc_id <> b.doc_id), " +
-        s"sel1 AS MATERIALIZED (SELECT query_id, doc_id, $lam * rel AS mmr, " +
-        "CAST(1 AS BIGINT) AS r FROM (SELECT query_id, doc_id, rel, " +
-        "row_number() OVER (PARTITION BY query_id " +
-        "ORDER BY rel DESC, doc_id) AS rn FROM cand) WHERE rn = 1), " +
-        "ms1 AS MATERIALIZED (SELECT ps.query_id, ps.ca AS doc_id, max(ps.sim) AS ms " +
-        "FROM ps JOIN sel1 s ON ps.query_id = s.query_id " +
-        "AND ps.cb = s.doc_id GROUP BY 1, 2)"
-    val steps = (2 to m).map { t =>
-      val p = t - 1
-      s"pick$t AS MATERIALIZED (SELECT query_id, doc_id, mmr, CAST($t AS BIGINT) AS r " +
-        "FROM (SELECT query_id, doc_id, mmr, row_number() OVER " +
-        "(PARTITION BY query_id ORDER BY mmr DESC, doc_id) AS rn FROM " +
-        s"(SELECT c.query_id, c.doc_id, $lam * c.rel - $lamBar * " +
-        s"coalesce(mp.ms, 0) AS mmr FROM cand c LEFT JOIN ms$p mp " +
-        "ON mp.query_id = c.query_id AND mp.doc_id = c.doc_id " +
-        s"WHERE NOT EXISTS (SELECT 1 FROM sel$p s " +
-        "WHERE s.query_id = c.query_id AND s.doc_id = c.doc_id))) " +
-        "WHERE rn = 1), " +
-        s"sel$t AS MATERIALIZED (SELECT * FROM sel$p UNION ALL SELECT * FROM pick$t), " +
-        s"ms$t AS MATERIALIZED (SELECT query_id, doc_id, max(ms) AS ms FROM " +
-        s"(SELECT * FROM ms$p UNION ALL SELECT ps.query_id, ps.ca AS doc_id, " +
-        s"ps.sim AS ms FROM ps JOIN pick$t p ON ps.query_id = p.query_id " +
-        "AND ps.cb = p.doc_id) GROUP BY 1, 2)"
-    }.mkString(", ")
-    s"$base, $steps SELECT query_id, doc_id, round(mmr, 4) AS mmr_score, " +
-      s"r AS mmr_rank FROM sel$m"
-  }
-
-  /** The [[hashEmbedCtes]] chain densified over a range(dim) grid and
-    * argmax-blocked — DuckDB mirror of
-    * `Similarity.argmaxBlocked(TextAnalysis.hashEmbed(…))`, ending in
-    * `b(vec_id, v, block)` over non-zero-norm vectors. ONE definition
-    * feeding the q_semdedup_text / q_semdedup_incr / q_block_report
-    * oracles, so blocking semantics cannot drift between them.
-    */
-  private def argmaxBlockedCtes(dim: Int): String =
-    s"${hashEmbedCtes(dim)}, " +
-      "ids AS (SELECT DISTINCT doc_id FROM sv), " +
-      s"grid AS (SELECT ids.doc_id, r.range AS i FROM ids, range($dim) r), " +
-      "dv AS (SELECT g.doc_id, g.i, coalesce(sv.value, 0.0) AS v FROM grid g " +
-      "LEFT JOIN sv ON sv.doc_id = g.doc_id AND sv.dim_idx = g.i), " +
-      "e AS (SELECT doc_id AS vec_id, v, list_transform(v, x -> abs(x)) AS a " +
-      "FROM (SELECT doc_id, list(v ORDER BY i) AS v FROM dv GROUP BY doc_id)), " +
-      "b AS (SELECT vec_id, v, " +
-      "CAST(list_position(a, list_max(a)) AS BIGINT) AS block " +
-      "FROM e WHERE sqrt(list_dot_product(v, v)) > 0)"
-
-  /** [[argmaxBlockedCtes]] generalized to any token source and a CTE-name
-    * suffix, so a composite oracle (the v8 recipe) can run the SAME
-    * blocking chain over two populations (recipe survivors' toks, raw
-    * eval docs) inside one WITH without name collisions. The suffixed
-    * chain is textually the [[argmaxBlockedCtes]] chain — one semantics,
-    * two spellings guarded by the shared hash/densify/argmax formulas
-    * below.
-    */
-  private def argmaxBlockedCtesFrom(dim: Int, sfx: String,
-      tokSource: String): String =
-    s"t$sfx AS ($tokSource), " +
-      s"h$sfx AS (SELECT doc_id, md5(tok) AS hx FROM t$sfx), " +
-      s"hb$sfx AS (SELECT doc_id, " +
-      s"CAST(CAST(('0x' || substring(hx, 1, 8)) AS UBIGINT) % $dim AS INT) AS dim_idx, " +
-      "CASE WHEN CAST(('0x' || substring(hx, 9, 1)) AS UBIGINT) % 2 = 0 " +
-      s"THEN 1.0 ELSE -1.0 END AS sgn FROM h$sfx), " +
-      s"sv$sfx AS (SELECT doc_id, dim_idx, sum(sgn) AS value FROM hb$sfx " +
-      "GROUP BY doc_id, dim_idx), " +
-      s"ids$sfx AS (SELECT DISTINCT doc_id FROM sv$sfx), " +
-      s"grid$sfx AS (SELECT ids$sfx.doc_id, r.range AS i FROM ids$sfx, range($dim) r), " +
-      s"dv$sfx AS (SELECT g.doc_id, g.i, coalesce(s.value, 0.0) AS v FROM grid$sfx g " +
-      s"LEFT JOIN sv$sfx s ON s.doc_id = g.doc_id AND s.dim_idx = g.i), " +
-      s"e$sfx AS (SELECT doc_id AS vec_id, v, list_transform(v, x -> abs(x)) AS a " +
-      s"FROM (SELECT doc_id, list(v ORDER BY i) AS v FROM dv$sfx GROUP BY doc_id)), " +
-      // MATERIALIZED: the chain terminal is consumed 2× downstream
-      // (semp join + semdocs join for the "d" chain) and is the whole
-      // embedding cost — same per-reference-inlining guard as recipeV5Sql
-      s"b$sfx AS MATERIALIZED (SELECT vec_id, v, " +
-      "CAST(list_position(a, list_max(a)) AS BIGINT) AS block " +
-      s"FROM e$sfx WHERE sqrt(list_dot_product(v, v)) > 0)"
-
-  /** The v8 semantic-decontamination CTE block, spliced into
-    * [[recipeV5Sql]] after `dec`: embed the s5 survivors (their recipe
-    * toks — the scrubbed text's tokenization) and the RAW eval docs under
-    * the same argmax blocking, join on block, and keep survivors whose
-    * max rounded cosine stays under `minCos` — the DuckDB mirror of
-    * `Decontam.semanticContamination` filtered to is_contam = 0. Ends in
-    * `semdocs(doc_id, toks)`.
-    */
-  private def semDecontamCtes(minCos: Double): String =
-    argmaxBlockedCtesFrom(64, "d",
-      "SELECT doc_id, unnest(toks) AS tok FROM dec") + ", " +
-      argmaxBlockedCtesFrom(64, "q",
-        s"SELECT doc_id, unnest($TOKS) AS tok FROM documents WHERE doc_id % 97 = 0") + ", " +
-      "semp AS (SELECT bd.vec_id AS a_id, " +
-      "round(list_cosine_similarity(bd.v, bq.v), 4) AS c " +
-      "FROM bd JOIN bq ON bd.block = bq.block), " +
-      "semm AS (SELECT a_id, max(c) AS mx FROM semp GROUP BY a_id), " +
-      // MATERIALIZED: semdocs feeds the surprisal chain AND two stage
-      // counts — same inlining-blowup guard as `dec` in [[recipeV5Sql]]
-      "semdocs AS MATERIALIZED (SELECT dec.doc_id, dec.toks FROM dec " +
-      "JOIN bd ON dec.doc_id = bd.vec_id " +
-      "LEFT JOIN semm ON bd.vec_id = semm.a_id " +
-      s"WHERE coalesce(semm.mx, -2) < $minCos)"
-
-  /** The full text-SemDeDup decision replay over [[argmaxBlockedCtes]],
-    * with an optional trailing row filter (the incremental oracle is the
-    * batch decision restricted to the increment's rows).
-    */
-  private def semdedupTextSql(rowFilter: String): String =
-    s"WITH ${argmaxBlockedCtes(64)}, " +
-      "p AS (SELECT a.vec_id AS a_id, " +
-      "round(list_cosine_similarity(a.v, b2.v), 4) AS c " +
-      "FROM b a JOIN b b2 ON a.block = b2.block AND b2.vec_id < a.vec_id), " +
-      "m AS (SELECT a_id, max(c) AS mx FROM p GROUP BY a_id) " +
-      "SELECT b.vec_id, b.block, m.mx AS max_lower_cos, " +
-      "CAST(CASE WHEN coalesce(m.mx, -2) >= 0.9 THEN 1 ELSE 0 END AS INT) AS is_dup " +
-      s"FROM b LEFT JOIN m ON b.vec_id = m.a_id$rowFilter"
-
-  /** The known-item BM25 ranking replay (5-token-prefix queries over the
-    * doc_id % 25 sample, the q_bm25_batch scoring form), ending in
-    * `r(query_id, doc_id, rank)` plus `q`/`t` for downstream metric
-    * tails — ONE definition shared by the q_retrieval_eval and q_ndcg
-    * oracles so ranking semantics cannot drift between them.
-    */
-  private val KNOWN_ITEM_BM25_CTES: String =
-    s"t AS (SELECT doc_id, $TOKS AS toks FROM documents), " +
-      "q AS MATERIALIZED (SELECT doc_id AS query_id, toks[1:5] AS qtoks FROM t " +
-      "WHERE doc_id % 25 = 0 AND len(toks) > 0), " +
-      "qt AS (SELECT query_id, unnest(list_distinct(qtoks)) AS token FROM q), " +
-      "stats AS (SELECT count(*) AS n_docs, " +
-      "avg(CAST(len(toks) AS DOUBLE)) AS avgdl FROM t), " +
-      "terms AS (SELECT DISTINCT token FROM qt), " +
-      "tp2 AS (SELECT doc_id, token, " +
-      "CAST(len(list_filter(toks, x -> x = token)) AS DOUBLE) AS tf, " +
-      "CAST(len(toks) AS DOUBLE) AS dl " +
-      "FROM t JOIN terms ON list_contains(toks, token)), " +
-      "dfs AS (SELECT token, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df " +
-      "FROM tp2 GROUP BY token), " +
-      "sc AS (SELECT qt.query_id, tp2.doc_id, " +
-      "round(sum(ln(1 + (n_docs - df + 0.5) / (df + 0.5)) * " +
-      "tf * (1.2 + 1) / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))), 4) AS score " +
-      "FROM tp2 JOIN dfs USING (token) JOIN qt USING (token), stats " +
-      "GROUP BY qt.query_id, tp2.doc_id), " +
-      "r AS MATERIALIZED (SELECT query_id, doc_id, " +
-      "row_number() OVER (PARTITION BY query_id " +
-      "ORDER BY score DESC, doc_id) AS rank FROM sc)"
-
-  /** DuckDB replay of q_minhash_lsh under the [[graft.model.SketchPins]]
-    * sf0.01 literals (round-14 verdict #2, the pin_ter_r14 doctrine):
-    * the multi-doc band GROUPS (singleton buckets generate no candidate
-    * pairs) and the grouped docs' full 32-lane signatures are pinned;
-    * the candidate pair-join, per-lane eq count, est_jaccard = m/32 and
-    * the 0.2 threshold replay mechanically. The live query keeps
-    * computing signatures and banding — any kernel/banding drift changes
-    * its pairs or estimates and the row goes red against the pin.
-    */
-  private def minhashLshSql: String = {
-    val groups = graft.model.SketchPins.minhashGroups.flatMap { t =>
-      val Array(g, ids) = t.split(":")
-      ids.split(",").map(id => s"($g, $id)")
-    }.mkString(", ")
-    val sigs = graft.model.SketchPins.minhashSigs.map { t =>
-      val Array(id, s) = t.split(":")
-      s"($id, [$s]::BIGINT[])"
-    }.mkString(", ")
-    s"WITH gp(gid, doc_id) AS (SELECT * FROM (VALUES $groups)), " +
-      s"sg(doc_id, sig) AS (SELECT * FROM (VALUES $sigs)), " +
-      "pr AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id " +
-      "FROM gp a JOIN gp b ON a.gid = b.gid AND a.doc_id < b.doc_id), " +
-      "eq AS (SELECT a_id, b_id, " +
-      "len(list_filter(range(1, 33), i -> sa.sig[i] = sb.sig[i])) AS m " +
-      "FROM pr JOIN sg sa ON sa.doc_id = pr.a_id " +
-      "JOIN sg sb ON sb.doc_id = pr.b_id) " +
-      "SELECT CAST(a_id AS BIGINT) AS a_id, CAST(b_id AS BIGINT) AS b_id, " +
-      "m / 32.0 AS est_jaccard FROM eq WHERE m / 32.0 >= 0.2"
-  }
-
-  /** DuckDB side of q_simhash: the full sf0.01 signature pin (there is
-    * no downstream join to replay in that query — the sketch IS the
-    * output). The live query recomputes from scratch; drift flips red.
-    */
-  private def simhashSql: String = {
-    val vals = graft.model.SketchPins.simhash.map { t =>
-      val Array(id, s) = t.split(":"); s"($id, $s)"
-    }.mkString(", ")
-    s"SELECT CAST(doc_id AS BIGINT) AS doc_id, " +
-      "CAST(simhash AS BIGINT) AS simhash " +
-      s"FROM (VALUES $vals) AS t(doc_id, simhash)"
-  }
-
-  /** DuckDB replay of the banded-Hamming near-dup join (q_image_dedup /
-    * q_audio_dedup) under pinned 64-bit perceptual hashes: the 4×16-bit
-    * band split, candidate equi-join, exact bit_count(xor) rescore and
-    * the ≤ maxHamming filter all replay mechanically (Spark's min-band
-    * ownership is an exchange-avoidance trick, not semantics — DISTINCT
-    * pairs is the same set). These pins are sf-INDEPENDENT: the synthetic
-    * media derive from pure media_id hashing, so the replay is valid at
-    * every sweep scale. Arithmetic note: DuckDB `>>` is an arithmetic
-    * shift, but `& 65535` keeps only the low 16 bits of the shifted
-    * value, which agree with Spark's shiftrightunsigned for every band.
-    */
-  private def bandedHammingSql(pins: Array[String]): String = {
-    val vals = pins.map { t =>
-      val Array(id, h) = t.split(":"); s"($id, $h)"
-    }.mkString(", ")
-    s"WITH hp AS (SELECT CAST(media_id AS BIGINT) AS media_id, " +
-      "CAST(dh AS BIGINT) AS dh " +
-      s"FROM (VALUES $vals) AS t(media_id, dh)), " +
-      "bd AS (SELECT media_id, dh, r.range AS band, " +
-      "(dh >> CAST(r.range * 16 AS INT)) & 65535 AS bval FROM hp, range(4) r), " +
-      "cand AS (SELECT a.media_id AS a_id, b.media_id AS b_id, " +
-      "a.dh AS a_dh, b.dh AS b_dh FROM bd a JOIN bd b " +
-      "ON a.band = b.band AND a.bval = b.bval AND a.media_id < b.media_id) " +
-      "SELECT DISTINCT a_id, b_id, " +
-      "CAST(bit_count(xor(a_dh, b_dh)) AS INT) AS hamming " +
-      "FROM cand WHERE bit_count(xor(a_dh, b_dh)) <= 3"
-  }
-
-  private def sqlStr(s: String): String = "'" + s.replace("'", "''") + "'"
-
-  /** DuckDB side of q_bpe_learn under [[graft.model.OutputPins]]: the 20
-    * merge DECISIONS (rank, pair, pair count at merge time) are the pin;
-    * `merged` recomputes as the concatenation. The live query still runs
-    * the full iterative trainer, so any drift in the argmax sequence or
-    * the counted frequencies flips the row red (the q_ter_shift
-    * decisions-pinned doctrine; the APPLY half has been oracled off
-    * BPE_MERGES_PINNED since round 12).
-    */
-  private def bpeLearnSql: String = {
-    val vals = graft.model.OutputPins.bpeLearn.map { t =>
-      val Array(r, l, rt, c) = t.split("\\|", -1)
-      s"($r, ${sqlStr(l)}, ${sqlStr(rt)}, $c)"
-    }.mkString(", ")
-    "SELECT CAST(rank AS INT) AS rank, \"left\", \"right\", " +
-      "\"left\" || \"right\" AS merged, CAST(cnt AS BIGINT) AS cnt " +
-      s"""FROM (VALUES $vals) AS t(rank, "left", "right", cnt)"""
-  }
-
-  /** DuckDB side of q_unigram_learn: the EM-trained vocabulary rows
-    * (rank, piece, count, q6 logp) pinned via Double.toString and
-    * replayed as e0 literals — trainer drift flips the row red; the
-    * soft-encode/sampling APPLY paths have been oracled off
-    * UNIGRAM_PINNED since round 12.
-    */
-  private def unigramLearnSql: String = {
-    val vals = graft.model.OutputPins.unigramLearn.map { t =>
-      val Array(r, p, c, lp) = t.split("\\|", -1)
-      s"($r, ${sqlStr(p)}, $c, ${lp}e0)"
-    }.mkString(", ")
-    "SELECT CAST(rank AS INT) AS rank, piece, CAST(cnt AS BIGINT) AS cnt, " +
-      s"CAST(logp AS DOUBLE) AS logp FROM (VALUES $vals) " +
-      "AS t(rank, piece, cnt, logp)"
-  }
-
-  /** DuckDB side of q_hll: exact per-type counts replay LIVE; only the
-    * HLL++ cardinality estimates are pinned (register layout is engine
-    * internal). A change to Spark's sketch or its default rsd moves the
-    * estimates and flips the row red.
-    */
-  private def hllSql: String = {
-    val vals = graft.model.OutputPins.hll.map { t =>
-      val Array(e, u) = t.split("\\|", -1)
-      s"(${sqlStr(e)}, $u)"
-    }.mkString(", ")
-    "WITH c AS (SELECT event_type, count(*) AS cnt FROM events " +
-      "GROUP BY event_type), " +
-      s"p(event_type, approx_users) AS (VALUES $vals) " +
-      "SELECT p.event_type, CAST(p.approx_users AS BIGINT) AS approx_users, " +
-      "c.cnt FROM p JOIN c USING (event_type)"
-  }
-
-  /** DuckDB side of q_compression: DEFLATE is not available in DuckDB
-    * SQL, so the 500 per-doc ratios are the pin (Double.toString → e0
-    * literals); kernel drift flips the row red. Accuracy against
-    * known-compressibility fixtures stays in TextAnalysisSpec.
-    */
-  private def compressionSql: String = {
-    val vals = graft.model.OutputPins.compression.map { t =>
-      val Array(d, r) = t.split("\\|", -1)
-      s"($d, ${r}e0)"
-    }.mkString(", ")
-    s"SELECT CAST(doc_id AS BIGINT) AS doc_id, " +
-      "CAST(deflate_ratio AS DOUBLE) AS deflate_ratio " +
-      s"FROM (VALUES $vals) AS t(doc_id, deflate_ratio)"
-  }
-
-  /** DuckDB side of q_pack_shards — the LAST exemption converted: only
-    * the murmur3 partition routing is pinned (OutputPins.packPid =
-    * `pmod(hash(doc_id), parts)`, the same data-derived route the
-    * runtime stamps into shard ids); the greedy
-    * token-budget packing itself — the operator's actual algebra —
-    * replays as the q_pack_sorted recursion PARTITIONED by pid
-    * (set-based recursion advances every partition one rank per step).
-    * shard_id = pid·2^32 + local shard, exactly the Scala fold.
-    */
-  private def packShardsSql: String = {
-    val vals = graft.model.OutputPins.packPid.map { t =>
-      val Array(d, p) = t.split(":"); s"($d, $p)"
-    }.mkString(", ")
-    s"WITH RECURSIVE pid(doc_id, pid) AS (SELECT * FROM (VALUES $vals)), " +
-      s"t AS (SELECT d.doc_id, CAST(len($TOKS) AS BIGINT) AS n, pid.pid " +
-      "FROM documents d JOIN pid ON d.doc_id = pid.doc_id), " +
-      "o AS MATERIALIZED (SELECT doc_id, n, pid, " +
-      "row_number() OVER (PARTITION BY pid ORDER BY doc_id) AS rn FROM t), " +
-      "g(pid, rn, doc_id, n, shard, used) AS (" +
-      "SELECT pid, rn, doc_id, n, CAST(0 AS BIGINT), n FROM o WHERE rn = 1 " +
-      "UNION ALL SELECT o.pid, o.rn, o.doc_id, o.n, " +
-      "CASE WHEN g.used > 0 AND g.used + o.n > 4096 THEN g.shard + 1 ELSE g.shard END, " +
-      "CASE WHEN g.used > 0 AND g.used + o.n > 4096 THEN o.n ELSE g.used + o.n END " +
-      "FROM g JOIN o ON o.pid = g.pid AND o.rn = g.rn + 1) " +
-      "SELECT doc_id, n AS n_tokens, " +
-      "CAST(pid * 4294967296 + shard AS BIGINT) AS shard_id FROM g"
-  }
-
-  /** DuckDB mirror of Similarity.signBlock over a 1-based list column:
-    * Σ 2^(i−1) over non-negative components — shared by the q_semdedup
-    * and q_semdedup_text oracles.
-    */
-  private def signBlockSql(v: String, bits: Int): String =
-    (1 to bits)
-      .map(i => s"(CASE WHEN $v[$i] >= 0 THEN ${1 << (i - 1)} ELSE 0 END)")
-      .mkString(" + ")
-
-  /** The full v5/v6 recipe oracle (quality → exact dedup → SNM clusters →
-    * decontam → surprisal-quantile stage → span dedup) with the perplexity
-    * stage's keep predicate as the one parameter: v5 passes the hard
-    * bucket-prefix cut, v6 the per-bucket hash-fraction predicate —
-    * everything upstream/downstream is shared so the two oracles cannot
-    * drift.
-    */
-  private def recipeV5Sql(pplPredicate: String,
-      prefixCtes: String = "", docsFrom: String = "documents",
-      semMinCos: Option[Double] = None,
-      resampleK: Option[Int] = None): String = {
-    // optional v8 semantic-decontamination stage: CTE block after `dec`,
-    // downstream stages re-sourced to its survivors, stage labels shifted
-    val semBlock = semMinCos.map(c => semDecontamCtes(c) + ", ").getOrElse("")
-    val pplSrc = if (semMinCos.isDefined) "semdocs" else "dec"
-    val pplLabel = if (semMinCos.isDefined) "s7_perplexity" else "s6_perplexity"
-    val spanIdx = (if (semMinCos.isDefined) 8 else 7) +
-      (if (resampleK.isDefined) 1 else 0)
-    val spanPfx = s"s$spanIdx"
-    val semRow = if (semMinCos.isDefined)
-      "UNION ALL SELECT 's6_sem_decontam', count(*) FROM semdocs " else ""
-    // optional v9 importance-resample stage: length-bucket likelihood
-    // ratios (reference = the raw t0 corpus), the A-ES clock race,
-    // ORDER BY clock LIMIT k — the q_resample replay re-rooted on the
-    // recipe's own frames; span dedup then runs over the resampled set.
-    // Edges come from the ONE shared constant the Spark side buckets
-    // with, so engine and oracle cannot drift
-    val resampleEdges = ops.Curation.RESAMPLE_EDGES
-    val rBex = resampleEdges.map(e =>
-      s"CAST(length(text) >= $e AS INT)").mkString(" + ")
-    val resBlock = resampleK.map { kF =>
-      s"spiner AS (SELECT CAST(range AS INT) AS bucket FROM range(${resampleEdges.length + 1})), " +
-        s"rref AS MATERIALIZED (SELECT spiner.bucket, CAST(coalesce(cnt, 0) AS BIGINT) AS ref_cnt " +
-        s"FROM spiner LEFT JOIN (SELECT $rBex AS bucket, count(*) AS cnt " +
-        "FROM t0 GROUP BY 1) rr USING (bucket)), " +
-        "rsv AS MATERIALIZED (SELECT t0.doc_id, text FROM t0 JOIN ppl USING (doc_id)), " +
-        s"rcur AS MATERIALIZED (SELECT spiner.bucket, CAST(coalesce(cnt, 0) AS BIGINT) AS cur_cnt " +
-        s"FROM spiner LEFT JOIN (SELECT $rBex AS bucket, count(*) AS cnt " +
-        "FROM rsv GROUP BY 1) rc USING (bucket)), " +
-        "rw AS (SELECT rref.bucket, ((ref_cnt + 0.5) / (rt.rn + 2.5)) / " +
-        "((cur_cnt + 0.5) / (ct.cn + 2.5)) AS w " +
-        "FROM rref JOIN rcur ON rref.bucket = rcur.bucket, " +
-        "(SELECT sum(ref_cnt) AS rn FROM rref) rt, " +
-        "(SELECT sum(cur_cnt) AS cn FROM rcur) ct), " +
-        s"rcl AS (SELECT doc_id, -ln((CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8)) " +
-        "AS UBIGINT) + 0.5) / 4294967296.0) / w AS clock " +
-        s"FROM (SELECT doc_id, $rBex AS bucket FROM rsv) rb JOIN rw USING (bucket)), " +
-        s"resampled AS MATERIALIZED (SELECT doc_id FROM rcl ORDER BY clock, doc_id LIMIT $kF), "
-    }.getOrElse("")
-    val resRow = if (resampleK.isDefined)
-      s"UNION ALL SELECT 's${spanIdx - 1}_resample', count(*) FROM resampled "
-    else ""
-    // Every multiply-referenced stage CTE is MATERIALIZED (its own stage-
-    // count row + 1-2 downstream consumers): DuckDB 1.0 inlines CTEs per
-    // reference, so the unmaterialized recipe re-ran the whole upstream
-    // chain once per stage row — q_clean_corpus_v7 replayed in 302 s,
-    // v5 in 105 s, v6 in 43 s, and together they blew the driver's ~600 s
-    // compare window (CORRECTNESS_r13 = {}). Same fix as the v8 `dec`
-    // measurement below (302 s-class → seconds).
-    s"WITH RECURSIVE ${prefixCtes}t0 AS MATERIALIZED (SELECT doc_id, text, $TOKS AS toks " +
-      s"FROM $docsFrom WHERE doc_id % 97 <> 0), " +
-      "passed AS MATERIALIZED (SELECT doc_id, text, toks FROM t0 WHERE len(toks) >= 10 " +
-      s"AND CAST(length(text) - length(regexp_replace(lower(text), '$NON_ALNUM_SQL', '', 'g')) AS DOUBLE) " +
-      "/ greatest(length(text), 1) <= 0.35 " +
-      "AND CAST(len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','on'], x))) AS DOUBLE) " +
-      "/ greatest(len(toks), 1) <= 0.7), " +
-      "keepw AS (SELECT min(doc_id) AS doc_id FROM (SELECT doc_id, " +
-      "md5(array_to_string(toks, ' ')) AS fp FROM passed) GROUP BY fp), " +
-      "exact AS MATERIALIZED (SELECT doc_id, text, toks FROM passed " +
-      "WHERE doc_id IN (SELECT doc_id FROM keepw)), " +
-      sortedCtes("exact") + ", " +
-      "prs AS MATERIALIZED (SELECT a_id, b_id FROM j WHERE jaccard >= 0.9), " +
-      "edges AS MATERIALIZED (SELECT a_id AS src, b_id AS dst FROM prs " +
-      "UNION SELECT b_id, a_id FROM prs), " +
-      "reach(id, lbl) AS (SELECT src, src FROM edges " +
-      "UNION SELECT e.src, r.lbl FROM edges e JOIN reach r ON e.dst = r.id), " +
-      "drops AS (SELECT id FROM reach GROUP BY id HAVING min(lbl) <> id), " +
-      "near AS MATERIALIZED (SELECT doc_id, toks FROM exact " +
-      "WHERE doc_id NOT IN (SELECT id FROM drops)), " +
-      s"ev AS (SELECT $TOKS AS toks FROM documents WHERE doc_id % 97 = 0), " +
-      "evi AS (SELECT toks, unnest(range(greatest(len(toks)-2, 0))) AS i FROM ev), " +
-      "evg AS (SELECT DISTINCT array_to_string(toks[i+1:i+3], ' ') AS g FROM evi), " +
-      "ni AS (SELECT doc_id, toks, unnest(range(greatest(len(toks)-2, 0))) AS i FROM near), " +
-      "ng AS (SELECT doc_id, array_to_string(toks[i+1:i+3], ' ') AS g FROM ni), " +
-      "contam AS (SELECT DISTINCT ng.doc_id FROM ng JOIN evg USING (g)), " +
-      // dec is ALWAYS materialized since round 14: it feeds the surprisal
-      // chain, pdocs, its own stage row, and (v8) semdocs. The original
-      // v8-only guard carried the measurement: the plain v8 oracle ran
-      // minutes; materialized, 4.5 s.
-      "dec AS MATERIALIZED " +
-      "(SELECT doc_id, toks FROM near " +
-      "WHERE doc_id NOT IN (SELECT doc_id FROM contam)), " +
-      semBlock +
-      s"st AS MATERIALIZED (SELECT doc_id, unnest(toks) AS word FROM $pplSrc), " +
-      "stf AS MATERIALIZED (SELECT word, count(*) AS cnt FROM st GROUP BY word), " +
-      "sn AS (SELECT CAST(sum(cnt) AS DOUBLE) AS n_total FROM stf), " +
-      "ss AS MATERIALIZED (SELECT doc_id, round(avg(-ln(cnt / n_total)), 4) AS sc " +
-      "FROM st JOIN stf USING (word), sn GROUP BY doc_id), " +
-      "scnt AS MATERIALIZED (SELECT sc, count(*) AS c FROM ss GROUP BY 1), " +
-      "sna AS (SELECT CAST(sum(c) AS DOUBLE) AS n_all FROM scnt), " +
-      "scum AS (SELECT sc, c, sum(c) OVER (ORDER BY sc " +
-      "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM scnt), " +
-      "sb AS (SELECT sc, CAST(floor((cum - c) * 5 / n_all) AS INT) + 1 " +
-      "AS bucket FROM scum, sna), " +
-      "ppl AS MATERIALIZED (SELECT doc_id FROM ss JOIN sb USING (sc) " +
-      s"WHERE $pplPredicate), " +
-      resBlock +
-      s"pdocs AS (SELECT doc_id, toks FROM $pplSrc " +
-      s"WHERE doc_id IN (SELECT doc_id FROM " +
-      s"${if (resampleK.isDefined) "resampled" else "ppl"})), " +
-      "sp0 AS (SELECT doc_id, toks, " +
-      "unnest(range(CAST(ceil(len(toks) / 20.0) AS BIGINT))) AS i FROM pdocs), " +
-      "sp AS MATERIALIZED (SELECT doc_id, CAST(i AS INT) AS span_idx, " +
-      "array_to_string(toks[i*20+1 : i*20+20], ' ') AS span FROM sp0), " +
-      "own AS (SELECT doc_id, span_idx, " +
-      "row_number() OVER (PARTITION BY md5(span) ORDER BY doc_id, span_idx) AS rn FROM sp) " +
-      "SELECT 's1_raw' AS stage, count(*) AS n FROM t0 " +
-      "UNION ALL SELECT 's2_quality', count(*) FROM passed " +
-      "UNION ALL SELECT 's3_exact_dedup', count(*) FROM exact " +
-      "UNION ALL SELECT 's4_near_dedup', count(*) FROM near " +
-      "UNION ALL SELECT 's5_decontam', count(*) FROM dec " +
-      semRow +
-      s"UNION ALL SELECT '$pplLabel', count(*) FROM ppl " +
-      resRow +
-      s"UNION ALL SELECT '${spanPfx}_spans_total', count(*) FROM sp " +
-      s"UNION ALL SELECT '${spanPfx}_spans_kept', count(*) FROM own WHERE rn = 1"
-  }
-
-  /** Language-scoring SQL GENERATED from [[ops.TextAnalysis.LANG_PROFILES]]
-    * — the same char-n-gram constant the Spark side scores with, so the
-    * profiles and tie-break order cannot drift between engine and oracle.
-    * Occurrence counting is the identical replace-length arithmetic over
-    * the padded lowercased text (`pad` must be in scope); `//` is DuckDB's
-    * integer division (the char-diff is always a multiple of the gram
-    * length, matching the Spark side's lossless int cast).
-    */
-  private val LANG_SCORE_COLS = ops.TextAnalysis.LANG_PROFILES.map { case (l, gs) =>
-    gs.map { g =>
-      val e = g.replace("'", "''")
-      s"(length(pad) - length(replace(pad, '$e', ''))) // ${g.length}"
-    }.mkString("(", " + ", s") AS score_$l")
-  }.mkString(", ")
-
-  private val LANG_PRED_CASE = {
-    val g = s"greatest(${ops.TextAnalysis.LANG_PROFILES.map("score_" + _._1).mkString(", ")})"
-    s"CASE WHEN $g <= 0 THEN 'und' " +
-      ops.TextAnalysis.LANG_PROFILES.map { case (l, _) =>
-        s"WHEN score_$l = $g THEN '$l' "
-      }.mkString + "ELSE 'und' END"
-  }
-
-  /** DuckDB mirror of TextAnalysis.langPad — the scoring surface. */
-  private val LANG_PAD = "' ' || lower(text) || ' '"
-
-  /** Shared CTE chain scoring language profiles and predicting a language
-    * per document — q_lang_id reads the prediction, q_lang_confusion
-    * aggregates it against the label.
-    */
-  private val LANGID_CTES =
-    (s"t AS (SELECT doc_id, lang, $LANG_PAD AS pad FROM documents), " +
-      s"s AS (SELECT doc_id, lang, $LANG_SCORE_COLS FROM t), " +
-      s"pred AS (SELECT doc_id, lang, $LANG_PRED_CASE AS pred_lang FROM s)")
-
-  /** Shared CTE chain producing the sorted-neighborhood pair table `j` —
-    * used by q_sorted_dedup, (as the edge source, under WITH RECURSIVE)
-    * q_dedup_clusters, and — parameterized over its source relation —
-    * q_clean_corpus_v3 (pairs over the exact-dedup survivors).
-    */
-  private def sortedCtes(src: String): String =
-    (s"k AS (SELECT doc_id, list_distinct(toks) AS tset, " +
-      "array_to_string(toks[1:3], ' ') AS blk, array_to_string(toks[1:2], ' ') AS blk_pfx " +
-      s"FROM (SELECT doc_id, $TOKS AS toks FROM $src)), " +
-      "p AS (SELECT doc_id, tset, lag(doc_id) OVER w AS prev_id, lag(tset) OVER w AS prev_tset " +
-      "FROM k WINDOW w AS (PARTITION BY blk_pfx ORDER BY blk, doc_id)), " +
-      "j AS (SELECT least(prev_id, doc_id) AS a_id, greatest(prev_id, doc_id) AS b_id, " +
-      "round(CAST(len(list_intersect(tset, prev_tset)) AS DOUBLE) / " +
-      "greatest(len(list_distinct(tset || prev_tset)), 1), 4) AS jaccard " +
-      "FROM p WHERE prev_id IS NOT NULL)")
-
-  private val SORTED_CTES = sortedCtes("documents")
-
-  /** Shared winnowing CTE chain (k=3, w=4 — must track the q_winnow* Spark
-    * entries): gram md5-prefix hashes → window-min selection → distinct
-    * (doc_id, fp) in `fps`. One definition so the fingerprint query and
-    * the pair query cannot drift.
-    */
-  private def winnowCtes(k: Int, w: Int, sfx: String,
-      from: String = "documents"): String =
-    s"t$sfx AS (SELECT doc_id, $TOKS AS toks FROM $from), " +
-      s"gi$sfx AS (SELECT doc_id, toks, unnest(range(len(toks) - ${k - 1})) AS i " +
-      s"FROM t$sfx WHERE len(toks) >= $k), " +
-      s"g$sfx AS (SELECT doc_id, i, len(toks) - ${k - 1} AS ng, " +
-      s"substring(md5(array_to_string(toks[i+1:i+$k], ' ')), 1, 16) AS h FROM gi$sfx), " +
-      s"m$sfx AS (SELECT doc_id, i, ng, min(h) OVER (PARTITION BY doc_id " +
-      s"ORDER BY i ROWS BETWEEN CURRENT ROW AND ${w - 1} FOLLOWING) AS fp FROM g$sfx), " +
-      s"fps$sfx AS (SELECT DISTINCT doc_id, fp FROM m$sfx WHERE i <= greatest(ng - $w, 0))"
-
-  private val WINNOW_CTES = winnowCtes(3, 4, "")
-
-  /** The q_substring_scrub replay (Dedup.substringScrub at k=8), with an
-    * optional final filter — the incremental oracle is the SAME batch
-    * decision restricted to the increment's rows, and the report oracle
-    * reuses the CTE chain ([[substringScrubCtes]]) under its own select.
-    */
-  private def substringScrubSql(finalFilter: String): String =
-    s"WITH ${substringScrubCtes()} " +
-      "SELECT t.doc_id, CAST(len(t.toks) AS INT) AS n_tokens, " +
-      "coalesce(ag.n_kept, 0) AS n_kept, coalesce(ag.text, '') AS text " +
-      s"FROM t LEFT JOIN ag USING (doc_id)$finalFilter"
-
-  /** Scrub CTE chain with suffixed names (`x` below) so it composes into
-    * larger oracles (the v7 recipe) without CTE-name collisions.
-    */
-  private def substringScrubCtes(x: String = ""): String =
-    // t$x is MATERIALIZED: gi$x, ti$x, and the caller's `scrubbed` all
-    // reference it — unmaterialized, the tokenizer scan re-ran per
-    // reference (the q_clean_corpus_v7 302 s replay)
-    s"t$x AS MATERIALIZED (SELECT doc_id, $TOKS AS toks FROM documents), " +
-      s"gi$x AS (SELECT doc_id, toks, unnest(range(len(toks) - 7)) AS i " +
-      s"FROM t$x WHERE len(toks) >= 8), " +
-      s"g$x AS (SELECT doc_id, CAST(i AS INT) AS pos, " +
-      s"substring(md5(array_to_string(toks[i+1:i+8], ' ')), 1, 16) AS h FROM gi$x), " +
-      s"d$x AS (SELECT doc_id, pos FROM (SELECT doc_id, pos, " +
-      s"row_number() OVER (PARTITION BY h ORDER BY doc_id, pos) AS rn FROM g$x) " +
-      "WHERE rn > 1), " +
-      s"b$x AS (SELECT doc_id, pos, CASE WHEN lag(pos) OVER w$x IS NULL " +
-      s"OR pos > lag(pos) OVER w$x + 8 THEN 1 ELSE 0 END AS brk FROM d$x " +
-      s"WINDOW w$x AS (PARTITION BY doc_id ORDER BY pos)), " +
-      s"gr$x AS (SELECT doc_id, pos, sum(brk) OVER " +
-      s"(PARTITION BY doc_id ORDER BY pos) AS grp FROM b$x), " +
-      s"sp$x AS (SELECT doc_id, min(pos) AS s, max(pos) + 7 AS e " +
-      s"FROM gr$x GROUP BY doc_id, grp), " +
-      s"ti$x AS (SELECT doc_id, toks, unnest(range(len(toks))) AS i FROM t$x), " +
-      s"kept$x AS (SELECT ti$x.doc_id, CAST(ti$x.i AS INT) AS i, toks[i+1] AS tok " +
-      s"FROM ti$x WHERE NOT EXISTS (SELECT 1 FROM sp$x " +
-      s"WHERE sp$x.doc_id = ti$x.doc_id AND ti$x.i BETWEEN sp$x.s AND sp$x.e)), " +
-      s"ag$x AS (SELECT doc_id, CAST(count(*) AS INT) AS n_kept, " +
-      s"string_agg(tok, ' ' ORDER BY i) AS text FROM kept$x GROUP BY doc_id)"
-
-  /** The applied-shift decisions [[graft.functions.ArrayKernels.TerShiftStats]]'s
-    * greedy loop converges to on the sf0.01 q_ter_shift fixture
-    * (rotated degraded 32-slices), PINNED via tools/pin_ter_r14.scala as
-    * `doc_id:step:start:len:ins` tokens (0-indexed start/ins, exactly as
-    * the kernel records them) — the q_bpe_apply pin discipline: the
-    * iterative argmin's DECISIONS are pinned, shift APPLICATION and the
-    * edit-distance DP replay mechanically in DuckDB. If the greedy
-    * loop's choices ever change, the replayed edits diverge from the
-    * kernel's and q_ter_shift goes red rather than silently drifting
-    * (the live query still runs the full loop).
-    */
-  private val TER_SHIFT_PINNED: Seq[(Long, Int, Int, Int, Int)] =
-    ("0:1:18:2:0 0:2:24:1:10 1:1:2:2:12 1:2:14:2:27 2:1:16:2:30 2:2:2:2:12 " +
-      "2:3:0:1:10 3:1:14:2:0 3:2:19:2:6 3:3:19:1:1 4:1:2:2:12 4:2:14:2:27 " +
-      "5:1:14:2:27 5:2:2:2:12 7:1:9:2:21 8:1:16:2:30 8:2:2:2:12 8:3:14:1:27 " +
-      "9:1:2:2:12 10:1:9:2:21 11:1:2:2:12 11:2:14:2:27 12:1:2:2:12 12:2:0:1:10 " +
-      "12:3:25:1:20 13:1:14:2:27 13:2:3:3:14 14:1:14:2:27 14:2:2:2:12 15:1:16:2:30 " +
-      "15:2:22:2:0 15:3:4:2:12 15:4:14:1:27 17:1:14:1:27 18:1:24:2:0 18:2:29:2:6 " +
-      "18:3:18:2:27 18:4:24:1:10 20:1:16:2:30 20:2:14:2:27 20:3:2:2:12 20:4:20:2:0 " +
-      "20:5:4:2:15 21:1:4:1:29 21:2:21:2:0 22:1:24:2:0 22:2:4:2:12 22:3:16:1:27 " +
-      "23:1:16:2:0 24:1:2:2:12 24:2:0:1:10 24:3:14:2:27 24:4:22:2:14 25:1:14:2:27 " +
-      "25:2:22:2:0 25:3:4:2:12 27:1:24:2:0 27:2:29:2:6 28:1:14:2:27 28:2:2:2:12 " +
-      "29:1:20:2:0 29:2:18:2:26 30:1:17:2:0 31:1:24:2:0 31:2:7:1:31 31:3:10:2:21 " +
-      "32:1:4:2:15 33:1:16:2:30 33:2:9:2:21 33:3:2:1:12 34:1:16:2:0 35:1:2:2:12 " +
-      "35:2:14:2:27 37:1:24:2:0 37:2:18:1:1 37:3:30:1:7 38:1:21:2:0 38:2:19:1:2 " +
-      "38:3:26:2:6 39:1:9:2:17 40:1:2:2:12 41:1:4:2:15 41:2:25:1:19 42:1:24:2:0 " +
-      "42:2:6:1:15 42:3:16:2:27 42:4:21:2:17 43:1:15:2:0 43:2:18:1:3 43:3:20:2:6 " +
-      "44:1:9:2:18 44:2:0:1:19 44:3:14:2:6 45:1:16:2:30 45:2:9:2:21 46:1:24:2:0 " +
-      "46:2:27:1:11 47:1:2:2:12 47:2:0:1:10 47:3:14:1:27 48:1:16:2:0 48:2:21:2:6 " +
-      "49:1:24:2:0 50:1:2:2:12 50:2:14:2:27 51:1:24:2:0 51:2:18:2:30 53:1:20:2:0 " +
-      "53:2:18:2:26 53:3:23:2:6 54:1:24:2:0 54:2:29:2:6 54:3:13:2:21 55:1:2:2:12 " +
-      "56:1:24:2:0 56:2:6:1:15 56:3:16:2:27 57:1:9:2:21 58:1:3:3:14 58:2:2:1:12 " +
-      "58:3:3:1:7 59:1:12:2:0 60:1:24:2:0 60:2:18:2:30 61:1:4:2:15 62:1:4:2:15 " +
-      "63:1:0:1:10 64:1:12:2:0 65:1:4:2:14 65:2:6:2:0 66:1:24:2:0 66:2:18:2:30 " +
-      "67:1:2:2:12 68:1:19:2:0 68:2:24:2:6 68:3:24:1:3 69:1:2:3:12 69:2:16:2:30 " +
-      "70:1:2:2:12 70:2:14:2:27 70:3:22:2:0 70:4:4:2:15 71:1:4:2:15 72:1:3:3:14 " +
-      "73:1:24:2:0 73:2:4:2:12 75:1:0:1:28 75:2:3:2:15 76:1:24:2:0 76:2:29:2:6 " +
-      "77:1:12:1:25 78:1:24:2:0 80:1:18:2:0 80:2:18:1:4 80:3:18:2:5 80:4:23:2:6 " +
-      "81:1:2:2:12 81:2:16:2:30 82:1:14:2:27 82:2:9:1:23 84:1:14:2:27 84:2:2:1:19 " +
-      "85:1:17:2:0 85:2:20:1:2 85:3:22:2:6 85:4:21:1:8 86:1:11:2:0 86:2:11:2:17 " +
-      "86:3:14:2:6 87:1:2:2:12 87:2:7:2:17 88:1:9:2:21 88:2:2:2:12 88:3:14:2:30 " +
-      "88:4:22:2:0 88:5:4:2:15 90:1:4:1:2 90:2:9:2:18 91:1:24:2:0 91:2:5:1:13 " +
-      "91:3:16:2:27 92:1:13:2:0 93:1:12:2:0 94:1:9:2:18 95:1:2:1:12 95:2:29:1:18 " +
-      "96:1:24:1:0 97:1:14:2:27 98:1:14:2:27 98:2:22:2:0 99:1:23:2:0 99:2:5:2:13 " +
-      "100:1:24:2:0 101:1:29:2:6 101:2:17:1:30 102:1:9:2:21 102:2:2:2:12 " +
-      "102:3:0:1:10 103:1:4:2:15 103:2:2:2:12 104:1:24:2:0 104:2:27:1:3 " +
-      "105:1:3:3:14 105:2:29:1:20 107:1:9:2:21 107:2:7:1:0 109:1:14:3:27 " +
-      "109:2:2:2:12 111:1:4:2:15 112:1:24:2:0 112:2:16:2:27 113:1:0:1:29 " +
-      "113:2:1:2:12 114:1:21:2:0 114:2:16:2:2 114:3:18:2:27 114:4:24:2:6 " +
-      "115:1:2:2:12 115:2:7:2:18 115:3:15:2:6 117:1:0:1:10 118:1:2:2:12 " +
-      "118:2:14:2:27 120:1:22:2:0 120:2:18:2:28 121:1:16:2:0 122:1:2:2:12 " +
-      "123:1:15:2:0 123:2:21:1:1 124:1:5:1:16 125:1:20:2:0 126:1:24:2:0 " +
-      "126:2:4:2:12 127:1:16:2:30 127:2:9:2:21 128:1:24:2:0 128:2:18:2:30 " +
-      "128:3:12:1:29 129:1:14:3:27 129:2:9:2:21 129:3:4:2:15 129:4:2:2:12 " +
-      "130:1:16:2:0 131:1:9:2:21 132:1:24:2:0 133:1:4:2:15 134:1:2:2:12 " +
-      "134:2:7:2:18 135:1:24:2:0 135:2:4:1:12 136:1:14:2:27 137:1:3:3:14 " +
-      "137:2:13:1:0 138:1:4:2:15 138:2:21:2:28 138:3:22:1:17 139:1:2:3:12 " +
-      "140:1:15:2:0 140:2:21:1:1 141:1:9:2:21 141:2:2:2:12 142:1:24:2:0 " +
-      "142:2:23:1:2 142:3:27:1:3 142:4:29:2:6 143:1:0:1:10 145:1:2:2:12 " +
-      "145:2:14:1:27 146:1:2:1:12 146:2:6:1:17 147:1:2:3:12 147:2:16:2:30 " +
-      "147:3:0:1:10 148:1:22:2:0 149:1:14:2:0 150:1:3:3:14 150:2:17:1:31 " +
-      "151:1:2:2:12 152:1:4:2:15 152:2:0:1:13 153:1:4:2:15 153:2:0:1:10 " +
-      "153:3:30:1:28 154:1:2:2:12 154:2:14:2:27 155:1:24:2:0 159:1:2:2:12 " +
-      "159:2:16:2:30 159:3:20:1:23 160:1:14:2:27 160:2:4:1:25 161:1:24:2:0 " +
-      "161:2:24:1:0 162:1:2:2:12 162:2:14:2:27 163:1:2:2:12 163:2:0:1:10 " +
-      "163:3:16:2:30 164:1:4:2:14 164:2:2:2:12 164:3:0:1:10 164:4:2:1:15 " +
-      "165:1:2:2:12 166:1:4:2:15 167:1:2:2:12 167:2:16:2:30 167:3:14:2:27 " +
-      "168:1:3:3:14 168:2:22:1:27 169:1:2:2:12 169:2:14:2:27 170:1:10:2:0 " +
-      "171:1:16:2:30 171:2:2:2:12 171:3:15:1:28 172:1:8:2:0 172:2:13:2:6 " +
-      "172:3:8:2:14 173:1:24:2:0 174:1:2:2:11 174:2:14:1:27 175:1:16:2:0 " +
-      "176:1:4:2:15 177:1:14:2:27 177:2:2:2:12 178:1:23:2:0 178:2:28:2:6 " +
-      "178:3:28:1:3 178:4:24:1:5 179:1:14:2:27 179:2:9:2:21 179:3:20:1:0 " +
-      "180:1:18:2:0 182:1:2:2:12 183:1:0:1:10 183:2:13:2:6 184:1:2:2:12 " +
-      "185:1:4:2:15 186:1:14:2:27 186:2:3:2:14 187:1:4:2:15 188:1:24:2:0 " +
-      "188:2:21:1:2 188:3:27:1:3 188:4:29:2:6 189:1:22:2:0 189:2:27:2:6 " +
-      "189:3:23:1:10 190:1:16:2:30 191:1:3:1:13 192:1:13:2:0 192:2:11:2:19 " +
-      "193:1:17:2:0 193:2:22:1:2 193:3:21:1:3 194:1:16:2:0 195:1:14:2:27 " +
-      "195:2:9:2:21 195:3:20:1:0 196:1:2:2:12 196:2:14:2:27 196:3:13:3:29 " +
-      "196:4:19:2:0 196:5:4:2:15 197:1:0:1:21 197:2:1:1:8 198:1:14:2:27 " +
-      "198:2:2:2:12 199:1:16:2:0 200:1:24:2:0 200:2:27:1:14 201:1:2:2:12 " +
-      "201:2:15:3:29 202:1:14:3:27 202:2:9:2:21 203:1:17:2:6 204:1:9:2:0 " +
-      "204:2:14:2:6 205:1:21:1:1 206:1:12:2:0 207:1:24:2:0 208:1:7:1:1 " +
-      "208:2:15:2:6 209:1:3:3:14 209:2:30:1:20 210:1:9:2:21 210:2:2:2:12 " +
-      "211:1:14:2:27 212:1:14:3:27 212:2:0:1:22 213:1:24:2:0 215:1:2:2:12 " +
-      "215:2:15:3:29 216:1:15:1:1 217:1:4:2:15 217:2:2:2:12 218:1:4:2:15 " +
-      "218:2:0:1:10 219:1:16:2:0 219:2:19:1:3 219:3:21:2:6 220:1:2:3:12 " +
-      "221:1:16:2:30 222:1:24:2:0 222:2:18:1:2 222:3:27:1:3 222:4:29:2:6 " +
-      "223:1:24:2:0 223:2:4:2:12 224:1:14:2:27 224:2:4:2:15 224:3:0:1:10 " +
-      "225:1:4:1:1 225:2:15:3:29 225:3:9:2:21 226:1:8:2:0 227:1:24:2:0 " +
-      "227:2:29:2:6 228:1:9:2:21 228:2:2:2:12 228:3:20:1:14 229:1:2:2:12 " +
-      "229:2:16:2:30 229:3:14:2:27 229:4:17:1:26 230:1:2:2:12 230:2:30:1:21 " +
-      "231:1:4:2:15 232:1:14:4:27 232:2:9:2:21 232:3:2:2:12 233:1:2:2:12 " +
-      "234:1:9:2:21 234:2:4:2:15 235:1:29:2:6 235:2:18:2:30 237:1:24:2:0 " +
-      "237:2:6:1:27 238:1:24:2:0 238:2:29:2:6 238:3:8:2:15 238:4:9:1:12 " +
-      "238:5:18:2:22 239:1:16:2:0 240:1:9:2:21 240:2:2:2:12 241:1:16:2:30 " +
-      "241:2:4:2:15 242:1:2:2:12 242:2:0:1:10 243:1:19:2:0 244:1:5:1:1 " +
-      "244:2:16:2:30 244:3:15:1:28 244:4:19:1:3 245:1:16:2:30 245:2:2:2:12 " +
-      "245:3:14:1:27 246:1:20:2:0 247:1:3:1:13 247:2:16:1:30 248:1:4:2:15 " +
-      "249:1:14:2:27 249:2:2:2:12 250:1:24:2:0 250:2:18:2:30 251:1:9:2:21 " +
-      "251:2:5:1:16 252:1:2:2:12 253:1:23:2:0 254:1:8:2:0 255:1:15:2:0 " +
-      "255:2:20:1:1 257:1:9:2:0 257:2:14:2:6 258:1:9:2:21 259:1:2:1:21 " +
-      "260:1:13:2:0 261:1:0:1:14 262:1:14:2:27 262:2:22:1:0 263:1:29:2:6 " +
-      "263:2:26:1:9 264:1:9:2:21 265:1:14:2:27 265:2:17:1:2 266:1:4:1:30 " +
-      "267:1:16:2:30 267:2:9:2:21 268:1:24:2:0 268:2:29:2:6 268:3:8:2:15 " +
-      "268:4:20:2:30 269:1:2:2:12 269:2:16:2:30 270:1:4:2:15 270:2:2:1:28 " +
-      "271:1:2:2:9 271:2:16:2:30 271:3:14:2:27 271:4:2:2:15 271:5:7:2:9 " +
-      "272:1:9:2:21 272:2:2:2:12 273:1:15:2:0 274:1:24:2:0 274:2:16:2:27 " +
-      "274:3:25:1:3 276:1:2:2:12 276:2:16:2:30 277:1:18:2:0 277:2:21:1:1 " +
-      "278:1:4:2:15 278:2:5:1:30 278:3:16:1:2 279:1:16:2:30 279:2:2:2:12 " +
-      "280:1:15:3:29 280:2:0:1:10 281:1:16:2:0 281:2:21:1:1 282:1:18:2:0 " +
-      "282:2:23:1:1 283:1:14:2:27 283:2:0:1:10 284:1:16:2:2 284:2:4:2:12 " +
-      "285:1:14:2:27 285:2:4:2:15 286:1:2:2:12 286:2:16:2:22 288:1:18:2:0 " +
-      "289:1:16:2:29 290:1:14:2:27 290:2:22:2:0 291:1:2:2:12 291:2:14:1:27 " +
-      "291:3:20:2:16 292:1:16:2:30 292:2:2:2:12 292:3:14:2:27 293:1:3:3:14 " +
-      "293:2:2:1:12 293:3:3:1:7 295:1:18:2:0 296:1:2:2:12 297:1:2:2:27 " +
-      "298:1:18:2:0 299:1:2:2:12 300:1:16:2:30 301:1:14:2:27 301:2:4:2:15 " +
-      "302:1:9:2:21 303:1:2:2:12 304:1:4:2:15 306:1:14:2:27 306:2:22:2:0 " +
-      "306:3:6:1:15 307:1:24:2:0 307:2:2:1:10 309:1:29:2:6 309:2:11:2:21 " +
-      "311:1:2:2:12 312:1:24:2:0 312:2:29:2:6 312:3:29:1:3 314:1:22:2:0 " +
-      "315:1:24:2:0 315:2:11:2:21 316:1:14:2:27 317:1:3:2:30 317:2:0:1:14 " +
-      "317:3:27:2:19 318:1:24:2:0 318:2:14:1:25 319:1:2:2:12 320:1:14:2:27 " +
-      "320:2:2:2:12 321:1:2:2:12 321:2:15:2:29 322:1:24:2:0 322:2:11:2:21 " +
-      "323:1:4:2:15 324:1:14:2:3 324:2:6:2:15 325:1:14:2:27 326:1:21:2:0 " +
-      "326:2:16:2:3 326:3:26:2:6 327:1:19:2:0 327:2:18:2:25 328:1:16:2:30 " +
-      "328:2:4:2:15 329:1:9:2:21 329:2:29:2:24 330:1:0:1:10 331:1:24:2:0 " +
-      "331:2:18:1:2 331:3:27:1:3 331:4:29:2:6 331:5:27:1:14 332:1:21:2:0 " +
-      "332:2:18:2:27 333:1:18:2:0 333:2:23:1:6 334:1:2:2:12 334:2:14:2:27 " +
-      "335:1:14:1:1 336:1:14:1:21 337:1:2:2:12 337:2:14:2:27 339:1:18:2:0 " +
-      "340:1:24:2:0 340:2:21:1:1 341:1:14:2:27 341:2:2:2:12 342:1:2:2:12 " +
-      "342:2:0:1:10 342:3:7:1:16 343:1:16:2:0 343:2:19:1:2 343:3:21:2:6 " +
-      "344:1:14:2:27 344:2:2:2:12 345:1:2:2:12 345:2:14:2:27 346:1:9:2:21 " +
-      "347:1:24:2:0 347:2:11:2:21 348:1:12:2:0 349:1:9:2:21 349:2:0:1:10 " +
-      "350:1:24:2:0 350:2:4:2:12 350:3:16:2:27 351:1:2:3:12 352:1:14:3:27 " +
-      "352:2:2:2:12 353:1:24:2:0 353:2:11:2:21 354:1:4:1:15 355:1:14:2:27 " +
-      "355:2:0:1:10 356:1:9:2:21 357:1:2:2:12 359:1:16:2:30 359:2:20:1:6 " +
-      "360:1:16:2:30 360:2:9:1:21 361:1:29:2:6 363:1:24:2:0 364:1:29:2:6 " +
-      "364:2:11:1:26 366:1:14:2:27 366:2:4:2:15 366:3:2:1:12 367:1:2:2:12 " +
-      "367:2:16:2:30 369:1:16:1:7 370:1:14:2:27 371:1:2:2:12 371:2:14:2:27 " +
-      "372:1:15:2:0 372:2:21:1:10 373:1:14:2:27 373:2:14:1:0 374:1:17:2:0 " +
-      "376:1:9:2:21 376:2:2:2:12 377:1:3:3:14 378:1:2:2:12 379:1:4:2:15 " +
-      "379:2:2:2:12 380:1:24:2:0 381:1:4:1:23 381:2:8:1:24 381:3:12:2:27 " +
-      "382:1:12:2:0 383:1:24:2:0 383:2:7:1:31 383:3:10:2:21 385:1:2:2:12 " +
-      "386:1:14:2:27 386:2:0:1:10 387:1:9:2:21 387:2:7:1:0 388:1:2:2:12 " +
-      "389:1:15:2:0 389:2:20:1:2 389:3:19:1:3 390:1:13:2:0 390:2:18:2:6 " +
-      "391:1:7:1:25 393:1:2:3:12 393:2:15:2:28 394:1:14:3:27 394:2:9:2:21 " +
-      "394:3:19:2:0 394:4:4:2:12 395:1:24:2:0 396:1:9:2:21 396:2:4:1:15 " +
-      "397:1:24:2:0 397:2:29:2:6 397:3:18:2:27 398:1:2:2:12 398:2:6:2:0 " +
-      "399:1:5:1:29 399:2:2:2:12 399:3:0:1:10 400:1:12:2:0 401:1:9:2:21 " +
-      "401:2:19:1:6 402:1:17:2:0 403:1:14:2:27 404:1:2:2:12 404:2:14:2:27 " +
-      "405:1:9:2:21 406:1:2:2:12 407:1:13:2:6 409:1:16:2:30 409:2:0:1:10 " +
-      "410:1:3:3:14 410:2:11:2:27 410:3:12:3:14 411:1:0:1:28 412:1:24:2:0 " +
-      "412:2:16:2:27 412:3:14:1:25 413:1:16:2:30 413:2:9:2:21 414:1:22:1:9 " +
-      "415:1:15:3:29 415:2:9:2:21 416:1:24:2:0 416:2:29:2:6 416:3:8:2:15 " +
-      "417:1:2:2:12 417:2:14:1:27 418:1:9:2:21 418:2:10:1:20 419:1:8:2:0 " +
-      "420:1:2:3:12 420:2:15:2:28 421:1:2:2:12 422:1:0:1:27 422:2:1:2:12 " +
-      "423:1:16:2:30 423:2:9:2:21 424:1:0:1:10 425:1:12:2:0 426:1:2:3:12 " +
-      "427:1:2:3:12 428:1:2:3:12 428:2:16:2:30 429:1:24:2:0 429:2:23:1:2 " +
-      "429:3:27:1:3 429:4:29:2:6 430:1:2:2:12 430:2:14:1:27 431:1:2:3:12 " +
-      "431:2:16:2:30 432:1:9:2:21 432:2:4:2:15 432:3:0:1:12 433:1:17:2:0 " +
-      "433:2:22:1:1 434:1:14:2:27 434:2:2:2:12 435:1:17:2:0 436:1:14:2:27 " +
-      "436:2:9:2:21 437:1:24:2:0 437:2:9:1:18 438:1:17:2:0 439:1:19:2:0 " +
-      "440:1:24:2:0 440:2:14:1:11 440:3:18:1:12 441:1:9:2:21 441:2:2:2:12 " +
-      "442:1:16:2:30 442:2:9:2:21 442:3:2:2:12 443:1:2:2:12 444:1:16:2:30 " +
-      "446:1:12:2:0 447:1:2:2:12 447:2:14:2:27 447:3:22:2:0 447:4:4:2:15 " +
-      "448:1:0:1:10 448:2:3:2:15 448:3:29:2:6 448:4:14:2:27 449:1:19:2:0 " +
-      "449:2:24:2:6 450:1:12:2:0 451:1:3:3:13 451:2:2:1:12 451:3:0:1:10 " +
-      "451:4:2:1:15 452:1:24:2:0 453:1:9:2:21 453:2:2:2:12 454:1:15:2:0 " +
-      "454:2:20:2:6 456:1:11:2:0 456:2:17:1:1 458:1:2:1:29 458:2:0:1:10 " +
-      "459:1:14:2:27 459:2:4:1:15 460:1:16:2:30 461:1:9:2:21 462:1:2:1:29 " +
-      "462:2:0:1:10 463:1:2:2:12 463:2:14:2:27 464:1:20:2:0 465:1:24:2:0 " +
-      "465:2:27:1:3 465:3:17:1:13 466:1:2:2:12 466:2:16:2:30 466:3:17:1:26 " +
-      "467:1:24:2:0 467:2:21:1:1 467:3:27:1:3 467:4:29:2:6 468:1:9:2:21 " +
-      "470:1:29:2:6 470:2:16:1:27 471:1:24:2:0 471:2:4:2:12 471:3:17:3:29 " +
-      "472:1:23:2:0 472:2:28:1:11 473:1:9:2:21 473:2:2:2:12 473:3:0:1:10 " +
-      "474:1:9:2:21 474:2:2:2:12 477:1:15:2:0 478:1:2:2:12 478:2:14:2:27 " +
-      "479:1:0:1:31 479:2:1:2:12 480:1:14:1:22 482:1:16:2:0 483:1:4:2:15 " +
-      "483:2:17:1:31 484:1:2:2:12 484:2:14:2:27 485:1:11:2:0 485:2:16:2:6 " +
-      "486:1:18:2:0 487:1:0:1:10 487:2:17:1:23 487:3:29:1:25 488:1:21:2:0 " +
-      "488:2:24:1:1 488:3:26:2:6 489:1:2:2:12 489:2:0:1:10 489:3:14:2:27 " +
-      "490:1:14:2:27 490:2:2:2:12 491:1:2:2:12 491:2:14:3:27 493:1:2:3:12 " +
-      "494:1:23:2:0 494:2:18:2:29 495:1:24:2:0 495:2:24:1:2 495:3:27:1:3 " +
-      "495:4:29:2:6 496:1:24:2:0 496:2:16:2:27 497:1:8:2:0 497:2:13:2:6 " +
-      "498:1:2:2:12 499:1:19:2:0 499:2:24:1:6")
-      .trim.split("\\s+").toSeq.map { tok =>
-        val Array(d, st, s, l, p) = tok.split(":").map(_.toLong)
-        (d, st.toInt, s.toInt, l.toInt, p.toInt)
-      }
-
-  /** DuckDB replay of q_ter_shift under [[TER_SHIFT_PINNED]]: rebuild
-    * the fixture (sub/drop degradation, 32-slice, rotate-left-8 when
-    * >= 16 tokens), apply the pinned shifts step by step (unrolled to
-    * the pin's max step count; each step is one slice/concat rewrite
-    * of the hypothesis list), then run the q_ter min-plus-prefix edit
-    * DP on the shifted hypothesis. shifts = the doc's pin count.
-    */
-  private def terShiftSql: String = {
-    val maxStep = TER_SHIFT_PINNED.map(_._2).max
-    val pinVals = TER_SHIFT_PINNED.map { case (d, st, s, l, p) =>
-      s"($d, $st, $s, $l, $p)"
-    }.mkString(", ")
-    // one CTE per pinned step: remove ct[st+1 .. st+bl] (1-indexed),
-    // re-insert at 0-indexed position ip of the remainder; docs without
-    // a pin at this step pass through (LEFT JOIN null guard)
-    val stepCtes = (1 to maxStep).map { k =>
-      val prev = if (k == 1) "pair" else s"h${k - 1}"
-      s"h$k AS MATERIALIZED (SELECT doc_id, rt, " +
-        "CASE WHEN st IS NULL THEN ct " +
-        "ELSE rest[1:ip] || blk || rest[ip+1:] END AS ct FROM " +
-        s"(SELECT h.doc_id, h.rt, h.ct, pin.st, pin.ip, " +
-        "h.ct[pin.st+1:pin.st+pin.bl] AS blk, " +
-        "h.ct[1:pin.st] || h.ct[pin.st+pin.bl+1:] AS rest " +
-        s"FROM $prev h LEFT JOIN pins pin ON pin.pd = h.doc_id " +
-        s"AND pin.step = $k))"
-    }.mkString(", ")
-    val hFin = s"h$maxStep"
-    s"WITH RECURSIVE tk AS (SELECT doc_id, $TOKS AS t FROM documents), " +
-      s"pins(pd, step, st, bl, ip) AS (SELECT * FROM (VALUES $pinVals) " +
-      "v(pd, step, st, bl, ip)), " +
-      // the fixture: rt = full-token 32-slice; ct = degraded list
-      // (sub every 3rd, drop every 5th — 1-based DuckDB lambda indexes,
-      // the q_ter convention), 32-sliced, rotated left by 8 iff >= 16
-      "pair AS MATERIALIZED (SELECT doc_id, rt, CASE WHEN len(ct0) >= 16 " +
-      "THEN ct0[9:] || ct0[1:8] ELSE ct0 END AS ct FROM " +
-      "(SELECT doc_id, t[1:32] AS rt, " +
-      "list_filter(list_transform(t, (x, i) -> CASE WHEN i % 3 = 0 " +
-      "THEN 'xx' ELSE x END), (x, i) -> i % 5 <> 0)[1:32] AS ct0 " +
-      "FROM tk WHERE len(t) > 0)), " +
-      s"$stepCtes, " +
-      // q_ter's min-plus-prefix Levenshtein DP, row source = the
-      // post-shift hypothesis
-      "rec(doc_id, i, dp) AS (" +
-      s"SELECT doc_id, 0, list_transform(range(0, len(rt)+1), x -> x) FROM $hFin " +
-      "UNION ALL " +
-      "SELECT doc_id, i + 1, " +
-      "list_transform(range(0, len(tl)), j -> " +
-      "list_min(list_transform(range(0, j+1), k -> tl[k+1] + (j - k)))) FROM (" +
-      "SELECT r.doc_id, r.i AS i, " +
-      "list_prepend(r.i + 1, list_transform(range(1, len(p.rt)+1), j -> " +
-      s"least(dp[j+1] + 1, dp[j] + CASE WHEN p.ct[r.i+1] = p.rt[j] THEN 0 ELSE 1 END))) AS tl " +
-      s"FROM rec r JOIN $hFin p ON r.doc_id = p.doc_id " +
-      "WHERE r.i < len(p.ct))), " +
-      s"fin AS (SELECT r.doc_id, dp[len(p.rt)+1] AS e, len(p.ct) AS cl, " +
-      s"len(p.rt) AS rl FROM rec r JOIN $hFin p ON r.doc_id = p.doc_id " +
-      "WHERE r.i = len(p.ct)), " +
-      "shc AS (SELECT pd AS doc_id, count(*) AS ns FROM pins GROUP BY pd) " +
-      "SELECT f.doc_id, CAST(coalesce(shc.ns, 0) AS BIGINT) AS shifts, " +
-      "CAST(e AS BIGINT) AS edits, CAST(cl AS BIGINT) AS c_len, " +
-      "CAST(rl AS BIGINT) AS r_len, " +
-      "round((coalesce(shc.ns, 0) + e)/(1.0*rl), 6) AS ter_shift " +
-      "FROM fin f LEFT JOIN shc ON f.doc_id = shc.doc_id"
-  }
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
-    */
-  def oracleSql: Map[String, String] = Map(
-    "q_keyed_count" ->
-      "SELECT user_id, count(*) AS cnt FROM events GROUP BY user_id",
-    "q_keyed_sum" ->
-      "SELECT user_id, round(sum(value), 4) AS total FROM events GROUP BY user_id",
-    "q_fizzbuzz" ->
-      ("SELECT n, CASE WHEN n % 15 = 0 THEN 'fizzbuzz' WHEN n % 3 = 0 THEN 'fizz' " +
-        "WHEN n % 5 = 0 THEN 'buzz' ELSE CAST(n AS VARCHAR) END AS output " +
-        "FROM range(1, 101) t(n)"),
-    "q_map_dup_even" ->
-      ("SELECT x FROM (SELECT n * 10 AS x FROM range(1, 5) t(n)), " +
-        "(VALUES (1), (2)) dup(i) WHERE x % 2 = 0"),
-    "q_word_count" ->
-      (s"SELECT word, count(*) AS cnt FROM (SELECT unnest($TOKS_ASCII) AS word " +
-        "FROM documents) GROUP BY word"),
-    "q_expand_qty" ->
-      ("SELECT l_returnflag AS item, CAST(sum(l_linenumber) AS BIGINT) AS cnt " +
-        "FROM lineitem GROUP BY 1"),
-    "q_pricing_summary" ->
-      ("SELECT l_returnflag, l_linestatus, round(sum(l_quantity), 2) AS sum_qty, " +
-        "round(sum(l_extendedprice), 2) AS sum_base_price, " +
-        "round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price, " +
-        "round(avg(l_quantity), 4) AS avg_qty, round(avg(l_discount), 4) AS avg_disc, " +
-        "count(*) AS count_order FROM lineitem " +
-        "WHERE l_shipdate <= TIMESTAMP '1998-09-02' GROUP BY l_returnflag, l_linestatus"),
-    "q_charge" ->
-      ("SELECT l_orderkey, l_linenumber, " +
-        "l_extendedprice * (1 - l_discount) * (1 + l_tax) AS charge " +
-        "FROM lineitem WHERE l_shipdate >= TIMESTAMP '1998-01-01'"),
-    "q_window_tumbling" ->
-      ("SELECT time_bucket(INTERVAL '1 hour', ts) AS w_start, " +
-        "time_bucket(INTERVAL '1 hour', ts) + INTERVAL '1 hour' AS w_end, " +
-        "event_type, count(*) AS cnt FROM events GROUP BY 1, 2, 3"),
-    "q_window_sliding" ->
-      ("SELECT time_bucket(INTERVAL '15 minutes', ts) - k * INTERVAL '15 minutes' AS w_start, " +
-        "time_bucket(INTERVAL '15 minutes', ts) - k * INTERVAL '15 minutes' + INTERVAL '1 hour' AS w_end, " +
-        "count(*) AS cnt FROM events, range(4) t(k) GROUP BY 1, 2"),
-    "q_window_session" ->
-      // strict '<': Spark session_window starts a NEW session for events
-      // exactly gap apart (merge requires gap strictly less than the gap)
-      ("WITH m AS (SELECT user_id, ts, CASE WHEN ts - lag(ts) OVER " +
-        "(PARTITION BY user_id ORDER BY ts) < INTERVAL '30 minutes' THEN 0 ELSE 1 END AS new_sess " +
-        "FROM events), s AS (SELECT user_id, ts, sum(new_sess) OVER " +
-        "(PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sess FROM m) " +
-        "SELECT user_id, min(ts) AS sess_start, max(ts) + INTERVAL '30 minutes' AS sess_end, " +
-        "count(*) AS cnt FROM s GROUP BY user_id, sess"),
-    "q_window_topk" ->
-      ("WITH w AS (SELECT time_bucket(INTERVAL '15 minutes', ts) - k * INTERVAL '15 minutes' AS w_start, " +
-        "count(*) AS cnt FROM events, range(4) t(k) WHERE event_type = 'click' GROUP BY 1) " +
-        "SELECT w_start, cnt FROM w ORDER BY cnt DESC, w_start ASC LIMIT 1"),
-    "q_union" ->
-      ("SELECT event_type, count(*) AS cnt FROM (" +
-        "SELECT user_id, event_type FROM events WHERE event_type = 'click' " +
-        "UNION ALL SELECT user_id, event_type FROM events WHERE event_type = 'purchase') " +
-        "GROUP BY event_type"),
-    "q_window_join" ->
-      ("WITH a AS (SELECT user_id AS k, time_bucket(INTERVAL '1 hour', ts) AS w_start " +
-        "FROM events WHERE event_type = 'view'), " +
-        "b AS (SELECT user_id AS k, time_bucket(INTERVAL '1 hour', ts) AS w_start " +
-        "FROM events WHERE event_type = 'purchase') " +
-        "SELECT w_start, count(*) AS cnt FROM a JOIN b USING (k, w_start) GROUP BY 1"),
-    "q_interval_join" ->
-      ("SELECT a.event_id AS a_id, b.event_id AS b_id FROM events a JOIN events b " +
-        "ON a.user_id = b.user_id AND a.event_type = 'click' AND b.event_type = 'error' " +
-        "AND b.ts > a.ts - INTERVAL '2 minutes' AND b.ts < a.ts + INTERVAL '2 minutes'"),
-    "q_asof_join" ->
-      ("WITH v AS (SELECT user_id, ts, max(event_id) AS v_id FROM events " +
-        "WHERE event_type = 'view' GROUP BY user_id, ts), " +
-        "p AS (SELECT user_id, ts, event_id AS p_id FROM events " +
-        "WHERE event_type = 'purchase') " +
-        "SELECT p.p_id, v.v_id FROM p ASOF JOIN v " +
-        "ON p.user_id = v.user_id AND v.ts <= p.ts"),
-    // merge_asof forward: correlated earliest-at-or-after per purchase
-    // (exact integer micros on both sides)
-    "q_asof_fwd" ->
-      (s"WITH $ASOF_US_CTES, " +
-        "m AS (SELECT p.p_id, (SELECT v.v_id FROM v WHERE " +
-        "v.user_id = p.user_id AND v.ts >= p.ts ORDER BY v.ts ASC LIMIT 1) " +
-        "AS v_id FROM p) SELECT p_id, v_id FROM m WHERE v_id IS NOT NULL"),
-    // merge_asof nearest, tie -> backward, tolerance 6 h (21600e6 us)
-    "q_asof_near" ->
-      (s"WITH $ASOF_US_CTES, " +
-        "m AS (SELECT p.p_id, p.ts, " +
-        "(SELECT v.ts FROM v WHERE v.user_id = p.user_id AND v.ts <= p.ts " +
-        "ORDER BY v.ts DESC LIMIT 1) AS bts, " +
-        "(SELECT v.v_id FROM v WHERE v.user_id = p.user_id AND v.ts <= p.ts " +
-        "ORDER BY v.ts DESC LIMIT 1) AS bv, " +
-        "(SELECT v.ts FROM v WHERE v.user_id = p.user_id AND v.ts >= p.ts " +
-        "ORDER BY v.ts ASC LIMIT 1) AS fts, " +
-        "(SELECT v.v_id FROM v WHERE v.user_id = p.user_id AND v.ts >= p.ts " +
-        "ORDER BY v.ts ASC LIMIT 1) AS fv FROM p), " +
-        "sel AS (SELECT p_id, ts, " +
-        "CASE WHEN bts IS NULL THEN fv WHEN fts IS NULL THEN bv " +
-        "WHEN (fts - ts) < (ts - bts) THEN fv ELSE bv END AS v_id, " +
-        "CASE WHEN bts IS NULL THEN fts WHEN fts IS NULL THEN bts " +
-        "WHEN (fts - ts) < (ts - bts) THEN fts ELSE bts END AS mts FROM m) " +
-        "SELECT p_id, v_id FROM sel WHERE v_id IS NOT NULL " +
-        "AND abs(ts - mts) <= 21600000000"),
-    "q_range_lookup" ->
-      (s"WITH bands(band_id, lo, hi) AS (VALUES $rangeBandsSql) " +
-        "SELECT band_id, count(*) AS n, " +
-        "round(sum(l_extendedprice), 2) AS total_price " +
-        "FROM lineitem JOIN bands " +
-        "ON l_extendedprice >= lo AND l_extendedprice < hi " +
-        "GROUP BY band_id"),
-    "q_join_revenue" ->
-      ("SELECT n_name, round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue " +
-        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
-        "JOIN customer ON o_custkey = c_custkey " +
-        "JOIN nation ON c_nationkey = n_nationkey GROUP BY n_name"),
-    "q_local_supplier_volume" ->
-      ("SELECT n_name, round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue " +
-        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
-        "JOIN supplier ON l_suppkey = s_suppkey " +
-        "JOIN nation ON s_nationkey = n_nationkey " +
-        "JOIN region ON n_regionkey = r_regionkey " +
-        "WHERE r_name = 'ASIA' GROUP BY n_name"),
-    "q_parts_by_brand" ->
-      ("SELECT p_brand, count(DISTINCT l_suppkey) AS n_suppliers, " +
-        "round(sum(l_quantity), 2) AS total_qty " +
-        "FROM lineitem JOIN part ON l_partkey = p_partkey GROUP BY p_brand"),
-    "q_keep_last3" ->
-      ("SELECT user_id, event_id, rn FROM (SELECT user_id, event_id, " +
-        "CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS INT) AS rn " +
-        "FROM events) WHERE rn <= 3"),
-    "q_evict_before" ->
-      ("SELECT time_bucket(INTERVAL '1 hour', ts) AS w_start, " +
-        "time_bucket(INTERVAL '1 hour', ts) + INTERVAL '1 hour' AS w_end, " +
-        "least(count(*), 3) AS cnt FROM events GROUP BY 1, 2"),
-    "q_semi_join" ->
-      ("SELECT c_custkey, c_name FROM customer WHERE EXISTS " +
-        "(SELECT 1 FROM orders WHERE o_custkey = c_custkey)"),
-    "q_anti_join" ->
-      ("SELECT c_custkey, c_name FROM customer WHERE NOT EXISTS " +
-        "(SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 400000)"),
-    "q_pivot" ->
-      ("SELECT user_id, " +
-        "count(*) FILTER (WHERE event_type = 'click') AS click, " +
-        "count(*) FILTER (WHERE event_type = 'error') AS error, " +
-        "count(*) FILTER (WHERE event_type = 'purchase') AS purchase, " +
-        "count(*) FILTER (WHERE event_type = 'signup') AS signup, " +
-        "count(*) FILTER (WHERE event_type = 'view') AS view " +
-        "FROM events GROUP BY user_id"),
-    "q_topn_per_key" ->
-      ("SELECT user_id, event_id, value, rn FROM (SELECT user_id, event_id, value, " +
-        "CAST(row_number() OVER (PARTITION BY user_id ORDER BY value DESC, event_id ASC) AS INT) AS rn " +
-        "FROM events) WHERE rn <= 2"),
-    "q_list_state" ->
-      "SELECT user_id, string_agg(event_id, ',' ORDER BY event_id) AS ids FROM events GROUP BY user_id",
-    "q_map_state" ->
-      "SELECT user_id, event_type, count(*) AS cnt FROM events GROUP BY user_id, event_type",
-    "q_dedup_exact" ->
-      (s"SELECT lang, count(DISTINCT ${fpSql(TOKS)}) AS n_unique, " +
-        "count(*) AS n_docs FROM documents GROUP BY lang"),
-    "q_fingerprint" ->
-      s"SELECT doc_id, ${fpSql(TOKS)} AS fp FROM documents",
-    "q_sorted_dedup" ->
-      s"WITH $SORTED_CTES SELECT a_id, b_id, jaccard FROM j WHERE jaccard >= 0.9",
-    // detector eval replay: the q_sorted_dedup pairs vs exact-fp truth
-    // through the q_nb_prf report algebra (one definition each side)
-    "q_dedup_eval" ->
-      (s"WITH $SORTED_CTES, " +
-        "prs AS (SELECT a_id, b_id FROM j WHERE jaccard >= 0.9), " +
-        s"fps AS (SELECT doc_id, coalesce(${fpSql(TOKS)}, '') AS fp " +
-        "FROM documents), " +
-        "fcnt AS (SELECT fp, count(*) AS c FROM fps GROUP BY 1), " +
-        "tr AS (SELECT doc_id, CASE WHEN c > 1 THEN 'dup' ELSE 'uniq' " +
-        "END AS truth FROM fps JOIN fcnt USING (fp)), " +
-        "fl AS (SELECT DISTINCT doc_id FROM (SELECT a_id AS doc_id " +
-        "FROM prs UNION ALL SELECT b_id FROM prs) u), " +
-        "pd AS (SELECT tr.truth, CASE WHEN fl.doc_id IS NULL THEN 'uniq' " +
-        "ELSE 'dup' END AS pred FROM tr LEFT JOIN fl USING (doc_id)), " +
-        "conf AS (SELECT truth, pred, count(*) AS n FROM pd GROUP BY 1, 2), " +
-        prfTailSql("truth", "pred")),
-    "q_dedup_clusters" ->
-      (s"WITH RECURSIVE $SORTED_CTES, " +
-        "prs AS (SELECT a_id, b_id FROM j WHERE jaccard >= 0.9), " +
-        "edges AS (SELECT a_id AS src, b_id AS dst FROM prs " +
-        "UNION SELECT b_id, a_id FROM prs), " +
-        "reach(id, lbl) AS (SELECT src, src FROM edges " +
-        "UNION SELECT e.src, r.lbl FROM edges e JOIN reach r ON e.dst = r.id) " +
-        "SELECT id AS doc_id, min(lbl) AS cluster_id FROM reach GROUP BY id"),
-    // cluster labels (the q_dedup_clusters recursion) + singleton
-    // fallback, survivor = argmax quality logit (the q_pref_pairs z), tie
-    // to lowest doc_id
-    "q_dedup_merge" -> {
-      val (bias, wLog, wAvg, wStop, wNon, _) = ops.TextAnalysis.QUALITY_W
-      s"WITH RECURSIVE $SORTED_CTES, " +
-        "prs AS (SELECT a_id, b_id FROM j WHERE jaccard >= 0.9), " +
-        "edges AS (SELECT a_id AS src, b_id AS dst FROM prs " +
-        "UNION SELECT b_id, a_id FROM prs), " +
-        "reach(id, lbl) AS (SELECT src, src FROM edges " +
-        "UNION SELECT e.src, r.lbl FROM edges e JOIN reach r ON e.dst = r.id), " +
-        "cl AS (SELECT id AS doc_id, min(lbl) AS cluster_id FROM reach GROUP BY id), " +
-        s"t AS (SELECT doc_id, text, $TOKS AS toks FROM documents), " +
-        "f AS (SELECT doc_id, len(toks) AS n, " +
-        "coalesce(list_aggregate(list_transform(toks, x -> length(x)), 'sum'), 0) / " +
-        "greatest(len(toks), 1) AS avg_len, " +
-        "len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','on'], x))) / " +
-        "greatest(len(toks), 1) AS stop_r, " +
-        s"(length(text) - length(regexp_replace(lower(text), '$NON_ALNUM_SQL', '', 'g'))) / " +
-        "greatest(length(text), 1) AS non_al FROM t), " +
-        s"z AS (SELECT doc_id, ($bias) + ($wLog) * ln(1 + n) + " +
-        s"($wAvg) * avg_len + ($wStop) * stop_r + ($wNon) * non_al AS z FROM f), " +
-        "m AS (SELECT z.doc_id, coalesce(cl.cluster_id, z.doc_id) AS cluster_id, z.z " +
-        "FROM z LEFT JOIN cl USING (doc_id)), " +
-        "rk AS (SELECT *, row_number() OVER (PARTITION BY cluster_id " +
-        "ORDER BY z DESC, doc_id ASC) AS rn, " +
-        "count(*) OVER (PARTITION BY cluster_id) AS n_members FROM m) " +
-        "SELECT cluster_id, CAST(n_members AS BIGINT) AS n_members, " +
-        "doc_id AS keep_id, round(z, 4) + 0.0 AS keep_z FROM rk WHERE rn = 1"
-    },
-    "q_clean_corpus" ->
-      (s"WITH passed AS (SELECT doc_id, lang, source, text FROM " +
-        s"(SELECT *, $TOKS AS toks FROM documents) " +
-        "WHERE len(toks) >= 10 " +
-        "AND CAST(length(text) - length(regexp_replace(lower(text), '[^a-z0-9]', '', 'g')) AS DOUBLE) " +
-        "/ greatest(length(text), 1) <= 0.35 " +
-        "AND CAST(len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','on'], x))) AS DOUBLE) " +
-        "/ greatest(len(toks), 1) <= 0.7), " +
-        s"keep AS (SELECT min(doc_id) AS doc_id FROM " +
-        s"(SELECT doc_id, md5(array_to_string($TOKS, ' ')) AS fp FROM passed) GROUP BY fp) " +
-        "SELECT lang, source, count(*) AS n_kept FROM passed " +
-        "WHERE doc_id IN (SELECT doc_id FROM keep) GROUP BY lang, source"),
-    // v2: v1's chain + per-source min-token CASE + pred_lang = lang gate
-    // (scoring/prediction SQL generated from the same LANG_PROFILES the
-    // Spark side uses — see LANG_SCORE_COLS/LANG_PRED_CASE)
-    "q_clean_corpus_v2" ->
-      (s"WITH t AS (SELECT doc_id, lang, source, text, $TOKS AS toks, " +
-        s"$LANG_PAD AS pad FROM documents), " +
-        s"s AS (SELECT *, $LANG_SCORE_COLS FROM t), " +
-        s"pred AS (SELECT *, $LANG_PRED_CASE AS pred_lang FROM s), " +
-        // MATERIALIZED: passed feeds the keep subquery AND the final
-        // grouped scan — unmaterialized, the lang-scoring chain ran twice
-        "passed AS MATERIALIZED (SELECT doc_id, lang, source, toks FROM pred " +
-        "WHERE len(toks) >= CASE WHEN source = 'src0' THEN 60 " +
-        "WHEN source = 'src1' THEN 40 ELSE 10 END " +
-        "AND CAST(length(text) - length(regexp_replace(lower(text), '[^a-z0-9]', '', 'g')) AS DOUBLE) " +
-        "/ greatest(length(text), 1) <= 0.35 " +
-        "AND CAST(len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','on'], x))) AS DOUBLE) " +
-        "/ greatest(len(toks), 1) <= 0.7 " +
-        "AND pred_lang = lang), " +
-        "keep AS (SELECT min(doc_id) AS doc_id FROM " +
-        "(SELECT doc_id, md5(array_to_string(toks, ' ')) AS fp FROM passed) GROUP BY fp) " +
-        "SELECT lang, source, count(*) AS n_kept FROM passed " +
-        "WHERE doc_id IN (SELECT doc_id FROM keep) GROUP BY lang, source"),
-    // v3: quality CTE (as v1) → exact-dedup winners → sorted-neighborhood
-    // pairs OVER THE SURVIVORS (sortedCtes parameterized source) →
-    // recursive-CTE components → span ownership; one count per stage
-    "q_clean_corpus_v3" ->
-      (s"WITH RECURSIVE t0 AS (SELECT doc_id, text, $TOKS AS toks FROM documents), " +
-        "passed AS MATERIALIZED (SELECT doc_id, text, toks FROM t0 WHERE len(toks) >= 10 " +
-        s"AND CAST(length(text) - length(regexp_replace(lower(text), '$NON_ALNUM_SQL', '', 'g')) AS DOUBLE) " +
-        "/ greatest(length(text), 1) <= 0.35 " +
-        "AND CAST(len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','on'], x))) AS DOUBLE) " +
-        "/ greatest(len(toks), 1) <= 0.7), " +
-        "keepw AS (SELECT min(doc_id) AS doc_id FROM (SELECT doc_id, " +
-        "md5(array_to_string(toks, ' ')) AS fp FROM passed) GROUP BY fp), " +
-        "exact AS MATERIALIZED (SELECT doc_id, text, toks FROM passed " +
-        "WHERE doc_id IN (SELECT doc_id FROM keepw)), " +
-        sortedCtes("exact") + ", " +
-        "prs AS MATERIALIZED (SELECT a_id, b_id FROM j WHERE jaccard >= 0.9), " +
-        "edges AS MATERIALIZED (SELECT a_id AS src, b_id AS dst FROM prs " +
-        "UNION SELECT b_id, a_id FROM prs), " +
-        "reach(id, lbl) AS (SELECT src, src FROM edges " +
-        "UNION SELECT e.src, r.lbl FROM edges e JOIN reach r ON e.dst = r.id), " +
-        "drops AS (SELECT id FROM reach GROUP BY id HAVING min(lbl) <> id), " +
-        "near AS MATERIALIZED (SELECT doc_id, toks FROM exact " +
-        "WHERE doc_id NOT IN (SELECT id FROM drops)), " +
-        "sp0 AS (SELECT doc_id, toks, " +
-        "unnest(range(CAST(ceil(len(toks) / 20.0) AS BIGINT))) AS i FROM near), " +
-        "sp AS MATERIALIZED (SELECT doc_id, CAST(i AS INT) AS span_idx, " +
-        "array_to_string(toks[i*20+1 : i*20+20], ' ') AS span FROM sp0), " +
-        "own AS (SELECT doc_id, span_idx, " +
-        "row_number() OVER (PARTITION BY md5(span) ORDER BY doc_id, span_idx) AS rn FROM sp) " +
-        "SELECT 's1_raw' AS stage, count(*) AS n FROM documents " +
-        "UNION ALL SELECT 's2_quality', count(*) FROM passed " +
-        "UNION ALL SELECT 's3_exact_dedup', count(*) FROM exact " +
-        "UNION ALL SELECT 's4_near_dedup', count(*) FROM near " +
-        "UNION ALL SELECT 's5_spans_total', count(*) FROM sp " +
-        "UNION ALL SELECT 's5_spans_kept', count(*) FROM own WHERE rn = 1"),
-    // v4: the v3 chain restricted to the train split, plus a decontam CTE
-    // block (trigram overlap vs the doc_id % 97 = 0 eval set, matching
-    // q_decontam) between near-dup and span stages
-    "q_clean_corpus_v4" ->
-      (s"WITH RECURSIVE t0 AS (SELECT doc_id, text, $TOKS AS toks " +
-        "FROM documents WHERE doc_id % 97 <> 0), " +
-        "passed AS MATERIALIZED (SELECT doc_id, text, toks FROM t0 WHERE len(toks) >= 10 " +
-        s"AND CAST(length(text) - length(regexp_replace(lower(text), '$NON_ALNUM_SQL', '', 'g')) AS DOUBLE) " +
-        "/ greatest(length(text), 1) <= 0.35 " +
-        "AND CAST(len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','on'], x))) AS DOUBLE) " +
-        "/ greatest(len(toks), 1) <= 0.7), " +
-        "keepw AS (SELECT min(doc_id) AS doc_id FROM (SELECT doc_id, " +
-        "md5(array_to_string(toks, ' ')) AS fp FROM passed) GROUP BY fp), " +
-        "exact AS MATERIALIZED (SELECT doc_id, text, toks FROM passed " +
-        "WHERE doc_id IN (SELECT doc_id FROM keepw)), " +
-        sortedCtes("exact") + ", " +
-        "prs AS MATERIALIZED (SELECT a_id, b_id FROM j WHERE jaccard >= 0.9), " +
-        "edges AS MATERIALIZED (SELECT a_id AS src, b_id AS dst FROM prs " +
-        "UNION SELECT b_id, a_id FROM prs), " +
-        "reach(id, lbl) AS (SELECT src, src FROM edges " +
-        "UNION SELECT e.src, r.lbl FROM edges e JOIN reach r ON e.dst = r.id), " +
-        "drops AS (SELECT id FROM reach GROUP BY id HAVING min(lbl) <> id), " +
-        "near AS MATERIALIZED (SELECT doc_id, toks FROM exact " +
-        "WHERE doc_id NOT IN (SELECT id FROM drops)), " +
-        s"ev AS (SELECT $TOKS AS toks FROM documents WHERE doc_id % 97 = 0), " +
-        "evi AS (SELECT toks, unnest(range(greatest(len(toks)-2, 0))) AS i FROM ev), " +
-        "evg AS (SELECT DISTINCT array_to_string(toks[i+1:i+3], ' ') AS g FROM evi), " +
-        "ni AS (SELECT doc_id, toks, unnest(range(greatest(len(toks)-2, 0))) AS i FROM near), " +
-        "ng AS (SELECT doc_id, array_to_string(toks[i+1:i+3], ' ') AS g FROM ni), " +
-        "contam AS (SELECT DISTINCT ng.doc_id FROM ng JOIN evg USING (g)), " +
-        "dec AS MATERIALIZED (SELECT doc_id, toks FROM near " +
-        "WHERE doc_id NOT IN (SELECT doc_id FROM contam)), " +
-        "sp0 AS (SELECT doc_id, toks, " +
-        "unnest(range(CAST(ceil(len(toks) / 20.0) AS BIGINT))) AS i FROM dec), " +
-        "sp AS MATERIALIZED (SELECT doc_id, CAST(i AS INT) AS span_idx, " +
-        "array_to_string(toks[i*20+1 : i*20+20], ' ') AS span FROM sp0), " +
-        "own AS (SELECT doc_id, span_idx, " +
-        "row_number() OVER (PARTITION BY md5(span) ORDER BY doc_id, span_idx) AS rn FROM sp) " +
-        "SELECT 's1_raw' AS stage, count(*) AS n FROM t0 " +
-        "UNION ALL SELECT 's2_quality', count(*) FROM passed " +
-        "UNION ALL SELECT 's3_exact_dedup', count(*) FROM exact " +
-        "UNION ALL SELECT 's4_near_dedup', count(*) FROM near " +
-        "UNION ALL SELECT 's5_decontam', count(*) FROM dec " +
-        "UNION ALL SELECT 's6_spans_total', count(*) FROM sp " +
-        "UNION ALL SELECT 's6_spans_kept', count(*) FROM own WHERE rn = 1"),
-    // v5: the v4 chain + the surprisal/quantile CTEs over the decontam
-    // survivors (worst quintile dropped; 0/1 rates are deterministic, so
-    // no hash predicate is needed in the replay)
-    "q_clean_corpus_v5" -> recipeV5Sql("bucket <= 4"),
-    // v6 = the same chain with FRACTIONAL bucket rates: the ppl stage
-    // keeps a hash-fraction per bucket (q_ppl_mix's predicate, salt 'ppl')
-    "q_clean_corpus_v6" -> recipeV5Sql(v6PplPredicate),
-    // v7 = the substring scrub FEEDING the v6 chain: scrub over the full
-    // corpus (eval docs may own grams — decontamination-flavored, by
-    // design), then the whole v6 recipe runs on the rewritten text while
-    // contamination still matches the RAW eval documents
-    "q_clean_corpus_v7" -> recipeV5Sql(v6PplPredicate,
-      prefixCtes = substringScrubCtes("7") +
-        ", scrubbed AS (SELECT t7.doc_id, coalesce(ag7.text, '') AS text " +
-        "FROM t7 LEFT JOIN ag7 USING (doc_id)), ",
-      docsFrom = "scrubbed"),
-    // v8 = the v7 composition + the semantic-decontamination CTE block
-    // (argmax-blocked cosine vs the raw eval docs) between dec and the
-    // perplexity stage
-    "q_clean_corpus_v8" -> recipeV5Sql(v6PplPredicate,
-      prefixCtes = substringScrubCtes("7") +
-        ", scrubbed AS (SELECT t7.doc_id, coalesce(ag7.text, '') AS text " +
-        "FROM t7 LEFT JOIN ag7 USING (doc_id)), ",
-      docsFrom = "scrubbed", semMinCos = Some(0.85)),
-    // v9 = v8 + the resample CTE block (length-bucket likelihood weights
-    // vs the raw t0 reference, clock race, LIMIT k) ahead of span dedup
-    "q_clean_corpus_v9" -> recipeV5Sql(v6PplPredicate,
-      prefixCtes = substringScrubCtes("7") +
-        ", scrubbed AS (SELECT t7.doc_id, coalesce(ag7.text, '') AS text " +
-        "FROM t7 LEFT JOIN ag7 USING (doc_id)), ",
-      docsFrom = "scrubbed", semMinCos = Some(0.85),
-      resampleK = Some(50)),
-    // both sides fingerprinted, full-outer by id; the new side's every
-    // 10th overlapping doc carries the same injected ' rev2' suffix
-    "q_corpus_diff" -> {
-      val newToks = TOKS.replace("lower(text)", "lower(text2)")
-      s"WITH o AS (SELECT doc_id, ${fpSql(TOKS)} AS ofp FROM documents WHERE doc_id < 300), " +
-        "n0 AS (SELECT doc_id, text, CASE WHEN doc_id % 10 = 0 " +
-        "THEN text || ' rev2' ELSE text END AS text2 " +
-        "FROM documents WHERE doc_id >= 100), " +
-        "n AS (SELECT doc_id, CASE WHEN len(" + newToks + ") > 0 " +
-        "THEN md5(array_to_string(" + newToks + ", ' ')) " +
-        "ELSE 'raw:' || md5(text2) END AS nfp FROM n0) " +
-        "SELECT coalesce(o.doc_id, n.doc_id) AS doc_id, " +
-        "CASE WHEN o.doc_id IS NULL THEN 'added' " +
-        "WHEN n.doc_id IS NULL THEN 'removed' " +
-        "WHEN ofp IS NOT DISTINCT FROM nfp THEN 'unchanged' " +
-        "ELSE 'changed' END AS status " +
-        "FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id"
-    },
-    // SNM pairs >= 0.9 with both ids' split labels; keep cross-split only
-    "q_split_leakage" ->
-      (s"WITH $SORTED_CTES, " +
-        "prs AS (SELECT a_id, b_id, jaccard FROM j WHERE jaccard >= 0.9), " +
-        s"sp AS (SELECT doc_id, CASE WHEN $HASHKEY < '${ops.Sampling.hexThreshold(0.8)}' THEN 'train' " +
-        s"WHEN $HASHKEY < '${ops.Sampling.hexThreshold(0.9)}' THEN 'valid' " +
-        "ELSE 'test' END AS split FROM documents) " +
-        "SELECT a_id, b_id, jaccard, sa.split AS split_a, sb.split AS split_b " +
-        "FROM prs JOIN sp sa ON prs.a_id = sa.doc_id " +
-        "JOIN sp sb ON prs.b_id = sb.doc_id WHERE sa.split <> sb.split"),
-    // split key = coalesce(cluster_id, doc_id) hashed with the same
-    // 9-digit hex thresholds; multi-member fingerprint groups only
-    "q_cluster_split" ->
-      ("WITH base AS (SELECT doc_id, text FROM documents " +
-        "UNION ALL SELECT doc_id + 100000, text FROM documents " +
-        "WHERE doc_id % 9 = 0), " +
-        s"fps AS (SELECT doc_id, ${fpSql(TOKS)} AS fp FROM base), " +
-        "cl AS (SELECT fp, min(doc_id) AS cluster_id, count(*) AS n " +
-        "FROM fps GROUP BY fp), " +
-        "asg AS (SELECT f.doc_id, CASE WHEN cl.n > 1 THEN cl.cluster_id END " +
-        "AS cluster_id FROM fps f JOIN cl USING (fp)), " +
-        "k AS (SELECT doc_id, cluster_id, '0' || substring(md5(" +
-        "CAST(coalesce(cluster_id, doc_id) AS VARCHAR)), 1, 8) AS hk FROM asg) " +
-        s"SELECT doc_id, cluster_id, CASE WHEN hk < '${ops.Sampling.hexThreshold(0.8)}' " +
-        s"THEN 'train' WHEN hk < '${ops.Sampling.hexThreshold(0.9)}' THEN 'valid' " +
-        "ELSE 'test' END AS split FROM k"),
-    // per-source (hash, id) rank; vtime = rank / weight — identical
-    // integer-by-literal division on both engines
-    "q_interleave_order" ->
-      ("WITH r AS (SELECT source, doc_id, " +
-        "CAST(row_number() OVER (PARTITION BY source " +
-        "ORDER BY '0' || substring(md5('ord' || CAST(doc_id AS VARCHAR)), 1, 8), doc_id) " +
-        "AS INT) AS stratum_rank FROM documents) " +
-        "SELECT source, doc_id, stratum_rank, " +
-        "CAST(stratum_rank AS DOUBLE) / (CASE WHEN source = 'src0' THEN 2.0 " +
-        "WHEN source = 'src1' THEN 0.5 ELSE 1.0 END) AS vtime FROM r"),
-    "q_span_dedup" ->
-      (s"WITH t AS (SELECT doc_id, $TOKS AS toks FROM documents), " +
-        "sp0 AS (SELECT doc_id, toks, " +
-        "unnest(range(CAST(ceil(len(toks) / 20.0) AS BIGINT))) AS i FROM t), " +
-        "sp AS MATERIALIZED (SELECT doc_id, CAST(i AS INT) AS span_idx, " +
-        "array_to_string(toks[i*20+1 : i*20+20], ' ') AS span FROM sp0), " +
-        "own AS (SELECT doc_id, span_idx, span, " +
-        "row_number() OVER (PARTITION BY md5(span) ORDER BY doc_id, span_idx) AS rn FROM sp), " +
-        "k AS (SELECT doc_id, CAST(count(*) AS INT) AS n_kept, " +
-        "string_agg(span, ' ' ORDER BY span_idx) AS text " +
-        "FROM own WHERE rn = 1 GROUP BY doc_id) " +
-        "SELECT t.doc_id, CAST(ceil(len(t.toks) / 20.0) AS INT) AS n_spans, " +
-        "coalesce(k.n_kept, 0) AS n_kept, coalesce(k.text, '') AS text " +
-        "FROM t LEFT JOIN k USING (doc_id)"),
-    // exact k-gram substring scrub: ownership rn=1 per gram hash, covered
-    // positions fused gaps-and-islands (break when pos > prev + k), kept
-    // token indices = those outside every span
-    "q_substring_scrub" -> substringScrubSql(""),
-    // incremental apply == the batch scrub over base ∪ increment,
-    // restricted to increment rows (any drift between the standing-index
-    // apply and the batch decision hash-fails)
-    "q_substring_incr" -> substringScrubSql(" WHERE t.doc_id % 10 >= 8"),
-    // per-source removal telemetry over the same scrub CTE chain
-    "q_scrub_report" ->
-      (s"WITH ${substringScrubCtes()}, " +
-        "base AS (SELECT t.doc_id, CAST(len(t.toks) AS INT) AS n_tokens, " +
-        "coalesce(ag.n_kept, 0) AS n_kept FROM t LEFT JOIN ag USING (doc_id)) " +
-        "SELECT d.source, count(*) AS n_docs, " +
-        "CAST(sum(base.n_tokens) AS BIGINT) AS tokens_before, " +
-        "CAST(sum(base.n_kept) AS BIGINT) AS tokens_after, " +
-        "round(1.0 - CAST(sum(base.n_kept) AS DOUBLE) / sum(base.n_tokens), 4) " +
-        "AS removed_frac FROM base JOIN documents d USING (doc_id) " +
-        "GROUP BY d.source"),
-    "q_dedup_keep" ->
-      (s"WITH RECURSIVE $SORTED_CTES, " +
-        "prs AS (SELECT a_id, b_id FROM j WHERE jaccard >= 0.9), " +
-        "edges AS (SELECT a_id AS src, b_id AS dst FROM prs " +
-        "UNION SELECT b_id, a_id FROM prs), " +
-        "reach(id, lbl) AS (SELECT src, src FROM edges " +
-        "UNION SELECT e.src, r.lbl FROM edges e JOIN reach r ON e.dst = r.id), " +
-        "drops AS (SELECT id FROM reach GROUP BY id HAVING min(lbl) <> id) " +
-        "SELECT lang, count(*) AS n_kept FROM documents " +
-        "WHERE doc_id NOT IN (SELECT id FROM drops) GROUP BY lang"),
-    // sequential greedy packing as linear recursion: row rn folds (shard,
-    // used) exactly like the Spark partition pass (used>0 guard included:
-    // an oversized document keeps its own shard)
-    "q_pack_sorted" ->
-      // o is MATERIALIZED: the recursion joins it once PER STEP (one row
-      // per doc), and unmaterialized each step re-ran tokenize+sort of
-      // the whole corpus — 6.3 s replay, the round-14 budget's slowest
-      (s"WITH RECURSIVE t AS (SELECT doc_id, CAST(len($TOKS) AS BIGINT) AS n FROM documents), " +
-        "o AS MATERIALIZED (SELECT doc_id, n, row_number() OVER (ORDER BY doc_id) AS rn FROM t), " +
-        "g(rn, doc_id, n, shard, used) AS (" +
-        "SELECT rn, doc_id, n, CAST(0 AS BIGINT), n FROM o WHERE rn = 1 " +
-        "UNION ALL SELECT o.rn, o.doc_id, o.n, " +
-        "CASE WHEN g.used > 0 AND g.used + o.n > 4096 THEN g.shard + 1 ELSE g.shard END, " +
-        "CASE WHEN g.used > 0 AND g.used + o.n > 4096 THEN o.n ELSE g.used + o.n END " +
-        "FROM g JOIN o ON o.rn = g.rn + 1) " +
-        "SELECT doc_id, n AS n_tokens, shard AS shard_id FROM g"),
-    "q_hash_sample" ->
-      (s"SELECT doc_id, lang FROM documents WHERE $HASHKEY < " +
-        s"'${ops.Sampling.hexThreshold(0.1)}'"),
-    "q_stratified_sample" ->
-      (s"SELECT lang, count(*) AS cnt FROM documents WHERE $HASHKEY < " +
-        s"CASE WHEN lang = 'en' THEN '${ops.Sampling.hexThreshold(0.5)}' " +
-        s"WHEN lang = 'de' THEN '${ops.Sampling.hexThreshold(0.25)}' " +
-        s"ELSE '${ops.Sampling.hexThreshold(0.05)}' END GROUP BY lang"),
-    "q_hash_split" ->
-      (s"WITH h AS (SELECT $HASHKEY AS k FROM documents) " +
-        s"SELECT CASE WHEN k < '${ops.Sampling.hexThreshold(0.8)}' THEN 'train' " +
-        s"WHEN k < '${ops.Sampling.hexThreshold(0.8 + 0.1)}' THEN 'valid' " +
-        "ELSE 'test' END AS split, count(*) AS cnt FROM h GROUP BY 1"),
-    // importance-resampling replay: spine-complete bucket counts both
-    // sides, smoothed likelihood-ratio weights, the A-ES clock race
-    "q_resample" -> {
-      val bexpr = "CAST(n_chars >= 150.0 AS INT) + CAST(n_chars >= 250.0 AS INT) + " +
-        "CAST(n_chars >= 350.0 AS INT) + CAST(n_chars >= 450.0 AS INT)"
-      "WITH spine AS (SELECT CAST(range AS INT) AS bucket FROM range(5)), " +
-        s"refc AS (SELECT spine.bucket, CAST(coalesce(cnt, 0) AS BIGINT) AS ref_cnt " +
-        s"FROM spine LEFT JOIN (SELECT $bexpr AS bucket, count(*) AS cnt " +
-        "FROM documents WHERE lang = 'en' AND n_chars IS NOT NULL GROUP BY 1) r USING (bucket)), " +
-        s"curc AS (SELECT spine.bucket, CAST(coalesce(cnt, 0) AS BIGINT) AS cur_cnt " +
-        s"FROM spine LEFT JOIN (SELECT $bexpr AS bucket, count(*) AS cnt " +
-        "FROM documents WHERE lang <> 'en' AND n_chars IS NOT NULL GROUP BY 1) c USING (bucket)), " +
-        "w AS (SELECT refc.bucket, " +
-        "((ref_cnt + 0.5) / (rt.rn + 2.5)) / ((cur_cnt + 0.5) / (ct.cn + 2.5)) AS w " +
-        "FROM refc JOIN curc ON refc.bucket = curc.bucket, " +
-        "(SELECT sum(ref_cnt) AS rn FROM refc) rt, " +
-        "(SELECT sum(cur_cnt) AS cn FROM curc) ct), " +
-        s"d AS (SELECT doc_id, $bexpr AS bucket FROM documents " +
-        "WHERE lang <> 'en' AND n_chars IS NOT NULL), " +
-        "cl AS (SELECT doc_id, " +
-        "-ln((CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8)) " +
-        "AS UBIGINT) + 0.5) / 4294967296.0) / w AS clock " +
-        "FROM d JOIN w USING (bucket)), " +
-        "r AS (SELECT doc_id, clock FROM cl ORDER BY clock, doc_id LIMIT 100) " +
-        "SELECT doc_id, round(clock, 4) AS clock FROM r"
-    },
-    // A-ES replay: the same 32-bit md5 uniform, exponential clock, and
-    // per-source rank (clock asc, id asc)
-    "q_weighted_sample" ->
-      ("WITH c AS (SELECT source, doc_id, " +
-        "-ln((CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8)) " +
-        "AS UBIGINT) + 0.5) / 4294967296.0) / n_chars AS clock " +
-        "FROM documents WHERE n_chars IS NOT NULL AND n_chars > 0), " +
-        "r AS (SELECT source, doc_id, clock, CAST(row_number() OVER " +
-        "(PARTITION BY source ORDER BY clock ASC, doc_id ASC) AS INT) AS rn " +
-        "FROM c) " +
-        "SELECT source, doc_id, round(clock, 4) AS clock, rn " +
-        "FROM r WHERE rn <= 20"),
-    "q_ngram_jaccard" ->
-      (s"WITH t AS (SELECT doc_id, $TOKS AS toks FROM documents WHERE doc_id < 20), " +
-        "s AS (SELECT doc_id, list_distinct(list_transform(range(len(toks) - 2), " +
-        "i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])) AS sh FROM t) " +
-        "SELECT a.doc_id AS a_id, b.doc_id AS b_id, " +
-        "round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) / " +
-        "greatest(len(list_distinct(a.sh || b.sh)), 1), 4) AS jaccard " +
-        "FROM s a JOIN s b ON a.doc_id < b.doc_id"),
-    // containment replay: synthesized 15-token quotes, shingle-count
-    // integers, scaled-integer threshold flags (no float division)
-    "q_containment" ->
-      (s"WITH qd AS (SELECT doc_id + 100000 AS doc_id, " +
-        s"array_to_string(($TOKS)[1:15], ' ') AS text " +
-        "FROM documents WHERE doc_id < 10), " +
-        "c AS (SELECT doc_id, text FROM documents UNION ALL SELECT doc_id, text FROM qd), " +
-        s"t AS (SELECT doc_id, $TOKS AS toks FROM c), " +
-        "s AS (SELECT doc_id, list_distinct(list_transform(range(len(toks) - 2), " +
-        "i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])) AS sh FROM t), " +
-        "cand AS (SELECT doc_id + 100000 AS a_id, doc_id AS b_id " +
-        "FROM documents WHERE doc_id < 10 " +
-        "UNION ALL SELECT doc_id + 100000, doc_id + 1 FROM documents WHERE doc_id < 9), " +
-        "j AS (SELECT a_id, b_id, " +
-        "CAST(len(list_intersect(a.sh, b.sh)) AS INT) AS n_inter, " +
-        "CAST(len(a.sh) AS INT) AS n_a, CAST(len(b.sh) AS INT) AS n_b " +
-        "FROM cand JOIN s a ON a.doc_id = a_id JOIN s b ON b.doc_id = b_id) " +
-        "SELECT a_id, b_id, n_inter, n_a, n_b, " +
-        "CAST(n_a > 0 AND CAST(n_inter AS BIGINT) * 10000 >= 9000 * n_a AS INT) AS a_in_b, " +
-        "CAST(n_b > 0 AND CAST(n_inter AS BIGINT) * 10000 >= 9000 * n_b AS INT) AS b_in_a " +
-        "FROM j"),
-    "q_token_stats" ->
-      (s"WITH t AS (SELECT lang, len($TOKS) AS n_tokens FROM documents) " +
-        "SELECT lang, count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS total_tokens, " +
-        "round(avg(n_tokens), 4) AS avg_tokens FROM t GROUP BY lang"),
-    // exact integer floor-log2 via binary-string length in BOTH engines
-    "q_token_hist" ->
-      (s"WITH t AS (SELECT coalesce(len($TOKS), 0) AS n FROM documents), " +
-        "b AS (SELECT CASE WHEN n = 0 THEN -1 " +
-        "ELSE CAST(length(bin(n)) - 1 AS INT) END AS bucket, n FROM t) " +
-        "SELECT bucket, count(*) AS n_docs, " +
-        "CAST(sum(n) AS BIGINT) AS total_tokens FROM b GROUP BY bucket"),
-    "q_bpe_stats" ->
-      (s"WITH t AS (SELECT lang, len(regexp_extract_all(lower(text), " +
-        s"'${ops.TextAnalysis.bpePatternSql}')) AS n FROM documents) " +
-        "SELECT lang, CAST(sum(n) AS BIGINT) AS total_bpe, " +
-        "round(avg(n), 4) AS avg_bpe FROM t GROUP BY lang"),
-    // greedy longest-match segmentation over the distinct word vocabulary
-    // (the Spark side's fold over character positions = this recursion)
-    "q_bpe_exact" ->
-      (s"WITH RECURSIVE t AS (SELECT lang, unnest($TOKS) AS word FROM documents), " +
-        "g AS (SELECT lang, word, count(*) AS cnt FROM t GROUP BY lang, word), " +
-        "words AS (SELECT DISTINCT word FROM g), " +
-        "seg(word, pos, cnt) AS (SELECT word, 1, 0 FROM words " +
-        "UNION ALL SELECT word, pos + coalesce(list_max(list_transform(" +
-        s"${ops.TextAnalysis.bpeVocabSql}, " +
-        "v -> CASE WHEN substring(word, pos, length(v)) = v THEN length(v) END)), 1), " +
-        "cnt + 1 FROM seg WHERE pos <= length(word)), " +
-        "sc AS (SELECT word, max(cnt) AS seg FROM seg GROUP BY word), " +
-        "exact AS (SELECT lang, CAST(sum(g.cnt * sc.seg) AS BIGINT) AS total_exact " +
-        "FROM g JOIN sc USING (word) GROUP BY lang), " +
-        "proxy AS (SELECT lang, CAST(sum(len(regexp_extract_all(lower(text), " +
-        s"'${ops.TextAnalysis.bpePatternSql}'))) AS BIGINT) AS total_proxy " +
-        "FROM documents GROUP BY lang) " +
-        "SELECT lang, total_exact, total_proxy, " +
-        "round(CAST(total_exact AS DOUBLE) / total_proxy, 4) AS drift " +
-        "FROM exact JOIN proxy USING (lang)"),
-    // Bradley-Terry MM unrolled per-iteration (the pagerank convention);
-    // the incremental form's contract is exactly "equals the full
-    // rebuild", so its oracle IS the same replay
-    "q_bt_ratings" -> btRatingsSql(3),
-    "q_bt_incr" -> btRatingsSql(3),
-    // arena win matrix: the btRatingsSql game CTEs rolled to unordered
-    // pairs; Wilson bounds with z^2 emitted as the exact double literal
-    "q_win_matrix" -> {
-      val z = 1.96
-      val z2 = java.lang.Double.toString(z * z)
-      "WITH g AS (SELECT doc_id % 32 AS a, (doc_id * 3 + 1) % 32 AS b, " +
-        "CASE WHEN (doc_id * 13) % 7 < 4 THEN 1 ELSE 0 END AS sw " +
-        "FROM documents WHERE doc_id % 32 <> (doc_id * 3 + 1) % 32), " +
-        "p AS (SELECT CASE WHEN sw = 1 THEN least(a, b) ELSE greatest(a, b) END AS w, " +
-        "CASE WHEN sw = 1 THEN greatest(a, b) ELSE least(a, b) END AS l FROM g), " +
-        "dir AS (SELECT w, l, count(*) AS n FROM p GROUP BY w, l), " +
-        "und AS (SELECT least(w, l) AS a, greatest(w, l) AS b, " +
-        "CAST(sum(CASE WHEN w < l THEN n ELSE 0 END) AS BIGINT) AS wins_a, " +
-        "CAST(sum(n) AS BIGINT) AS games FROM dir GROUP BY 1, 2), " +
-        "e AS (SELECT a, b, games, wins_a, CAST(games AS DOUBLE) AS nd, " +
-        "wins_a/(1.0*games) AS pd FROM und) " +
-        "SELECT a, b, games, wins_a, round(pd, 6) AS rate_a, " +
-        s"round((pd + $z2/(nd*2) - $z*sqrt(pd*(1.0-pd)/nd + $z2/(nd*nd*4)))/" +
-        s"(1.0 + $z2/nd), 6) AS lo95, " +
-        s"round((pd + $z2/(nd*2) + $z*sqrt(pd*(1.0-pd)/nd + $z2/(nd*nd*4)))/" +
-        s"(1.0 + $z2/nd), 6) AS hi95 FROM e"
-    },
-    // the q_win_matrix Wilson replay on the slot counts; biased =
-    // interval excludes the fair coin
-    "q_position_bias" -> {
-      val z = 1.96
-      val z2 = java.lang.Double.toString(z * z)
-      "WITH g AS (SELECT doc_id % 32 AS a, (doc_id * 3 + 1) % 32 AS b, " +
-        "CASE WHEN (doc_id * 13) % 7 < 4 THEN 1 ELSE 0 END AS sw " +
-        "FROM documents WHERE doc_id % 32 <> (doc_id * 3 + 1) % 32), " +
-        "p AS (SELECT CASE WHEN sw = 1 THEN least(a, b) ELSE greatest(a, b) END AS w " +
-        "FROM g), " +
-        "j AS (SELECT CASE WHEN w % 2 = 0 THEN 1 ELSE 0 END AS fw FROM p), " +
-        "t AS (SELECT count(*) AS games, " +
-        "CAST(coalesce(sum(fw), 0) AS BIGINT) AS first_wins FROM j), " +
-        "e AS (SELECT games, first_wins, CAST(games AS DOUBLE) AS nd, " +
-        "first_wins/(1.0*games) AS pd FROM t) " +
-        "SELECT games, first_wins, round(pd, 6) AS rate_first, " +
-        s"round((pd + $z2/(nd*2) - $z*sqrt(pd*(1.0-pd)/nd + $z2/(nd*nd*4)))/" +
-        s"(1.0 + $z2/nd), 6) AS lo95, " +
-        s"round((pd + $z2/(nd*2) + $z*sqrt(pd*(1.0-pd)/nd + $z2/(nd*nd*4)))/" +
-        s"(1.0 + $z2/nd), 6) AS hi95, " +
-        "CASE WHEN games > 0 THEN CAST(" +
-        s"((pd + $z2/(nd*2) - $z*sqrt(pd*(1.0-pd)/nd + $z2/(nd*nd*4)))/" +
-        s"(1.0 + $z2/nd) > 0.5 OR " +
-        s"(pd + $z2/(nd*2) + $z*sqrt(pd*(1.0-pd)/nd + $z2/(nd*nd*4)))/" +
-        s"(1.0 + $z2/nd) < 0.5) AS INT) END AS biased FROM e"
-    },
-    // the same Wilson replay on the longer-wins flag (win_len > 120
-    // iff the 13/20 residue draw fires)
-    // the stratified curve: same game rebuild, gap-varying length draws,
-    // bucketed Wilson reads per |gap| // 40 (exact integer counts)
-    "q_len_winrate" -> {
-      val z = 1.96
-      val z2 = java.lang.Double.toString(z * z)
-      "WITH g AS (SELECT doc_id % 32 AS a, (doc_id * 3 + 1) % 32 AS b, " +
-        "CASE WHEN (doc_id * 13) % 7 < 4 THEN 1 ELSE 0 END AS sw " +
-        "FROM documents WHERE doc_id % 32 <> (doc_id * 3 + 1) % 32), " +
-        "p AS (SELECT CASE WHEN sw = 1 THEN least(a, b) ELSE greatest(a, b) END AS w, " +
-        "CASE WHEN sw = 1 THEN greatest(a, b) ELSE least(a, b) END AS l FROM g), " +
-        "j AS (SELECT 100 + (w * 7 + l * 11) % 120 AS wl, " +
-        "100 + (w * 13 + l * 5) % 120 AS ll FROM p), " +
-        "f AS (SELECT CAST(abs(wl - ll) // 40 AS BIGINT) AS gap_bucket, " +
-        "CASE WHEN wl > ll THEN 1 ELSE 0 END AS lw FROM j WHERE wl <> ll), " +
-        "t AS (SELECT gap_bucket, count(*) AS games, " +
-        "CAST(coalesce(sum(lw), 0) AS BIGINT) AS longer_wins FROM f GROUP BY gap_bucket), " +
-        "e AS (SELECT gap_bucket, games, longer_wins, CAST(games AS DOUBLE) AS nd, " +
-        "longer_wins/(1.0*games) AS pd FROM t) " +
-        "SELECT gap_bucket, gap_bucket * 40 AS gap_lo, " +
-        "(gap_bucket + 1) * 40 - 1 AS gap_hi, games, longer_wins, " +
-        "round(pd, 6) AS rate_longer, " +
-        s"round((pd + $z2/(nd*2) - $z*sqrt(pd*(1.0-pd)/nd + $z2/(nd*nd*4)))/" +
-        s"(1.0 + $z2/nd), 6) AS lo95, " +
-        s"round((pd + $z2/(nd*2) + $z*sqrt(pd*(1.0-pd)/nd + $z2/(nd*nd*4)))/" +
-        s"(1.0 + $z2/nd), 6) AS hi95, " +
-        s"CAST(((pd + $z2/(nd*2) - $z*sqrt(pd*(1.0-pd)/nd + $z2/(nd*nd*4)))/" +
-        s"(1.0 + $z2/nd) > 0.5 OR " +
-        s"(pd + $z2/(nd*2) + $z*sqrt(pd*(1.0-pd)/nd + $z2/(nd*nd*4)))/" +
-        s"(1.0 + $z2/nd) < 0.5) AS INT) AS biased FROM e"
-    },
-    "q_length_bias" -> {
-      val z = 1.96
-      val z2 = java.lang.Double.toString(z * z)
-      "WITH g AS (SELECT doc_id % 32 AS a, (doc_id * 3 + 1) % 32 AS b, " +
-        "CASE WHEN (doc_id * 13) % 7 < 4 THEN 1 ELSE 0 END AS sw " +
-        "FROM documents WHERE doc_id % 32 <> (doc_id * 3 + 1) % 32), " +
-        "p AS (SELECT CASE WHEN sw = 1 THEN least(a, b) ELSE greatest(a, b) END AS w, " +
-        "CASE WHEN sw = 1 THEN greatest(a, b) ELSE least(a, b) END AS l FROM g), " +
-        "j AS (SELECT CASE WHEN (w * 17 + l * 3) % 20 < 13 THEN 1 ELSE 0 END AS lw FROM p), " +
-        "t AS (SELECT count(*) AS games, " +
-        "CAST(coalesce(sum(lw), 0) AS BIGINT) AS longer_wins FROM j), " +
-        "e AS (SELECT games, longer_wins, CAST(games AS DOUBLE) AS nd, " +
-        "longer_wins/(1.0*games) AS pd FROM t) " +
-        "SELECT games, longer_wins, round(pd, 6) AS rate_longer, " +
-        s"round((pd + $z2/(nd*2) - $z*sqrt(pd*(1.0-pd)/nd + $z2/(nd*nd*4)))/" +
-        s"(1.0 + $z2/nd), 6) AS lo95, " +
-        s"round((pd + $z2/(nd*2) + $z*sqrt(pd*(1.0-pd)/nd + $z2/(nd*nd*4)))/" +
-        s"(1.0 + $z2/nd), 6) AS hi95, " +
-        "CASE WHEN games > 0 THEN CAST(" +
-        s"((pd + $z2/(nd*2) - $z*sqrt(pd*(1.0-pd)/nd + $z2/(nd*nd*4)))/" +
-        s"(1.0 + $z2/nd) > 0.5 OR " +
-        s"(pd + $z2/(nd*2) + $z*sqrt(pd*(1.0-pd)/nd + $z2/(nd*nd*4)))/" +
-        s"(1.0 + $z2/nd) < 0.5) AS INT) END AS biased FROM e"
-    },
-    // self-consistency: per-(problem, answer) counts, plurality via
-    // row_number (count desc, answer asc — the smallest-answer
-    // tie-break verbatim)
-    "q_self_consist" ->
-      ("WITH s AS (SELECT doc_id % 40 AS problem, " +
-        "CAST(CASE WHEN doc_id % 3 <> 0 THEN (doc_id % 40) % 4 " +
-        "ELSE doc_id % 5 END AS VARCHAR) AS answer, " +
-        "CAST((doc_id % 40) % 4 AS VARCHAR) AS gold FROM documents), " +
-        "c AS (SELECT problem, answer, count(*) AS cnt FROM s GROUP BY 1, 2), " +
-        "top AS (SELECT problem, answer AS vote_answer, cnt AS vote_n FROM " +
-        "(SELECT problem, answer, cnt, row_number() OVER " +
-        "(PARTITION BY problem ORDER BY cnt DESC, answer ASC) AS rn FROM c) " +
-        "WHERE rn = 1), " +
-        "tot AS (SELECT problem, count(*) AS n, " +
-        "count(DISTINCT answer) AS n_answers, max(gold) AS gold " +
-        "FROM s GROUP BY problem) " +
-        "SELECT tot.problem, tot.n, CAST(tot.n_answers AS BIGINT) AS n_answers, " +
-        "tot.gold, top.vote_answer, top.vote_n, " +
-        "CAST(top.vote_answer = tot.gold AS INT) AS correct " +
-        "FROM tot JOIN top USING (problem)"),
-    // merged vote dictionary ≡ rebuild: oracle = the q_self_consist
-    // full replay
-    "q_self_consist_incr" ->
-      ("WITH s AS (SELECT doc_id % 40 AS problem, " +
-        "CAST(CASE WHEN doc_id % 3 <> 0 THEN (doc_id % 40) % 4 " +
-        "ELSE doc_id % 5 END AS VARCHAR) AS answer, " +
-        "CAST((doc_id % 40) % 4 AS VARCHAR) AS gold FROM documents), " +
-        "c AS (SELECT problem, answer, count(*) AS cnt FROM s GROUP BY 1, 2), " +
-        "top AS (SELECT problem, answer AS vote_answer, cnt AS vote_n FROM " +
-        "(SELECT problem, answer, cnt, row_number() OVER " +
-        "(PARTITION BY problem ORDER BY cnt DESC, answer ASC) AS rn FROM c) " +
-        "WHERE rn = 1), " +
-        "tot AS (SELECT problem, count(*) AS n, " +
-        "count(DISTINCT answer) AS n_answers, max(gold) AS gold " +
-        "FROM s GROUP BY problem) " +
-        "SELECT tot.problem, tot.n, CAST(tot.n_answers AS BIGINT) AS n_answers, " +
-        "tot.gold, top.vote_answer, top.vote_n, " +
-        "CAST(top.vote_answer = tot.gold AS INT) AS correct " +
-        "FROM tot JOIN top USING (problem)"),
-    // pass@k: the product estimator folded ascending-i per k, NULL
-    // when k exceeds the problem's sample count
-    "q_pass_at_k" ->
-      ("WITH s AS (SELECT doc_id % 50 AS problem, " +
-        "CASE WHEN (doc_id * 7) % 3 = 0 THEN 1 ELSE 0 END AS ok FROM documents), " +
-        "agg AS (SELECT problem, count(*) AS n, sum(ok) AS c FROM s GROUP BY problem) " +
-        "SELECT problem, CAST(n AS BIGINT) AS n, CAST(c AS BIGINT) AS c, " +
-        Seq(1, 5, 10).map { k =>
-          s"CASE WHEN n >= $k THEN round(1.0 - list_reduce(" +
-          s"list_transform(range(0, $k), i -> (n-c-i)/(1.0*(n-i))), " +
-          s"(x, y) -> x*y), 6) END AS pass_$k"
-        }.mkString(", ") +
-        " FROM agg"),
-    // merge ≡ rebuild is the contract, so the incremental dictionary's
-    // oracle IS the full-sample-history pass@k replay
-    "q_pass_at_k_incr" ->
-      ("WITH s AS (SELECT doc_id % 50 AS problem, " +
-        "CASE WHEN (doc_id * 7) % 3 = 0 THEN 1 ELSE 0 END AS ok FROM documents), " +
-        "agg AS (SELECT problem, count(*) AS n, sum(ok) AS c FROM s GROUP BY problem) " +
-        "SELECT problem, CAST(n AS BIGINT) AS n, CAST(c AS BIGINT) AS c, " +
-        Seq(1, 5, 10).map { k =>
-          s"CASE WHEN n >= $k THEN round(1.0 - list_reduce(" +
-          s"list_transform(range(0, $k), i -> (n-c-i)/(1.0*(n-i))), " +
-          s"(x, y) -> x*y), 6) END AS pass_$k"
-        }.mkString(", ") +
-        " FROM agg"),
-    // best-of-n: row_number draw order, per-n argmax on (reward DESC,
-    // draw ASC) — the struct-max (reward, -rn) order verbatim
-    "q_best_of_n" ->
-      ("WITH s AS (SELECT doc_id % 50 AS problem, doc_id AS draw, " +
-        "((doc_id * 37) % 100) / CAST(100 AS DOUBLE) AS reward, " +
-        "CASE WHEN (doc_id * 7) % 3 = 0 THEN 1 ELSE 0 END AS ok FROM documents), " +
-        "r AS (SELECT *, CAST(row_number() OVER (PARTITION BY problem " +
-        "ORDER BY draw) AS INT) AS rn FROM s), " +
-        "tot AS (SELECT problem, count(*) AS n_samples FROM r GROUP BY problem), " +
-        Seq(1, 2, 4).map { n =>
-          s"b$n AS (SELECT problem, ok AS best_$n FROM " +
-          s"(SELECT problem, ok, row_number() OVER (PARTITION BY problem " +
-          s"ORDER BY reward DESC, rn ASC) AS rk FROM r WHERE rn <= $n) " +
-          s"WHERE rk = 1)"
-        }.mkString(", ") +
-        " SELECT tot.problem, tot.n_samples, " +
-        Seq(1, 2, 4).map { n =>
-          s"CASE WHEN tot.n_samples >= $n THEN b$n.best_$n END AS best_$n"
-        }.mkString(", ") +
-        " FROM tot " +
-        Seq(1, 2, 4).map(n => s"LEFT JOIN b$n USING (problem)")
-          .mkString(" ")),
-    // trained logistic quality filter, GD unrolled per-iteration
-    "q_quality_fit" -> qualityFitSql(3, 0.5, 300),
-    // classifier eval: integer confusion sweep + exact tie-aware AUC
-    "q_threshold_sweep" -> thresholdSweepSql,
-    "q_auc" -> aucSql,
-    // merge ≡ rebuild is the contract, so the incremental path's oracle
-    // IS the full-corpus AUC replay
-    "q_auc_incr" -> aucSql,
-    // Fleiss' kappa: votes rebuilt from the doc_id residues, the exact
-    // Fleiss algebra over (item, label) counts — every term an
-    // integer-derived rational, kappa from the UNROUNDED pbar/pe
-    "q_fleiss" ->
-      ("WITH votes AS (SELECT doc_id, CAST(((doc_id % (j+2)) + (doc_id % 3)) % 3 AS INT) AS label " +
-        "FROM documents, range(0,3) r(j)), " +
-        "cell AS (SELECT doc_id AS i, label AS jl, count(*) AS nij FROM votes GROUP BY 1, 2), " +
-        "item AS (SELECT i, sum(nij) AS n, sum(nij*nij) AS sq FROM cell GROUP BY i), " +
-        "tot AS (SELECT count(*) AS ni, any_value(n) AS n, sum(sq) AS ssq FROM item), " +
-        // P̄ and P̄_e as single divisions of exact integer sums — the
-        // fleissKappa arithmetic verbatim
-        "pb AS (SELECT (tot.ssq - tot.ni*tot.n)/(1.0*tot.ni*tot.n*(tot.n-1)) AS pbar FROM tot), " +
-        "pe AS (SELECT sum(cj*cj)/((tot.ni*tot.n)*1.0*(tot.ni*tot.n)) AS pe FROM " +
-        "(SELECT jl, sum(nij) AS cj FROM cell GROUP BY jl), tot GROUP BY tot.ni, tot.n) " +
-        "SELECT CAST(tot.ni AS BIGINT) AS n_items, CAST(tot.n AS BIGINT) AS n_raters, " +
-        "round(pb.pbar, 6) AS p_bar, round(pe.pe, 6) AS p_e, " +
-        "CASE WHEN pe.pe < 1 THEN round((pb.pbar - pe.pe)/(1 - pe.pe), 6) END AS kappa " +
-        "FROM tot, pb, pe"),
-    // Krippendorff alpha on the ragged q_kripp panel: coincidence-form
-    // integer sums, one division per distinct rater count m (items
-    // grouped by m share the (m-1) denominator — the krippAlpha
-    // arithmetic verbatim), single-vote items excluded from EVERY total
-    "q_kripp" ->
-      ("WITH votes AS (SELECT doc_id, ((doc_id % (j+2)) + (doc_id % 3)) % 3 AS label " +
-        "FROM documents, range(0,4) r(j) " +
-        "WHERE j = 0 OR (j = 1 AND doc_id % 5 <> 0) " +
-        "OR (j = 2 AND doc_id % 7 <> 0) OR (j = 3 AND doc_id % 4 = 0)), " +
-        "cell AS (SELECT doc_id AS i, label, count(*) AS nij FROM votes GROUP BY 1, 2), " +
-        "item AS (SELECT i, sum(nij) AS m, sum(1.0*nij*nij) AS sq " +
-        "FROM cell GROUP BY i HAVING sum(nij) >= 2), " +
-        "tot AS (SELECT count(*) AS ni, coalesce(sum(m), 0) AS n FROM item), " +
-        "dm AS (SELECT m, sum(1.0*m*m - sq) AS num FROM item GROUP BY m), " +
-        "dd AS (SELECT coalesce(sum(num/(m - 1.0)), 0) AS d_o FROM dm), " +
-        "marg AS (SELECT count(*) AS nl, coalesce(sum(1.0*c*c), 0) AS sc2 FROM " +
-        "(SELECT cell.label, sum(cell.nij) AS c FROM cell JOIN item ON cell.i = item.i " +
-        "GROUP BY cell.label)), " +
-        "de AS (SELECT CASE WHEN tot.n > 1 THEN (1.0*tot.n*tot.n - marg.sc2)/(tot.n - 1.0) " +
-        "ELSE 0.0 END AS d_e FROM tot, marg) " +
-        "SELECT CAST(tot.ni AS BIGINT) AS n_items, CAST(tot.n AS BIGINT) AS n_pairable, " +
-        "CAST(marg.nl AS BIGINT) AS n_labels, round(dd.d_o, 6) AS d_o, " +
-        "round(de.d_e, 6) AS d_e, " +
-        "CASE WHEN de.d_e > 0 THEN round(1.0 - dd.d_o/de.d_e, 6) END AS alpha " +
-        "FROM tot, marg, dd, de"),
-    // interval Krippendorff: the pairwise squared differences collapse
-    // to per-item (m, Σv, Σv²) sufficient statistics — the krippAlpha
-    // per-distinct-m division discipline on top
-    "q_kripp_interval" ->
-      ("WITH votes AS (SELECT doc_id, CAST((doc_id % (j+3)) + (doc_id % 5) AS DOUBLE) AS v " +
-        "FROM documents, range(0,4) r(j) " +
-        "WHERE j = 0 OR (j = 1 AND doc_id % 5 <> 0) " +
-        "OR (j = 2 AND doc_id % 7 <> 0) OR (j = 3 AND doc_id % 4 = 0)), " +
-        "item AS (SELECT doc_id AS i, count(*) AS m, sum(v) AS s1, " +
-        "sum(v*v) AS s2 FROM votes GROUP BY doc_id HAVING count(*) >= 2), " +
-        "tot AS (SELECT count(*) AS ni, coalesce(sum(m), 0) AS n, " +
-        "coalesce(sum(s1), 0) AS t1, coalesce(sum(s2), 0) AS t2 FROM item), " +
-        "dm AS (SELECT m, sum(2.0*(m*s2 - s1*s1)) AS num FROM item GROUP BY m), " +
-        "dd AS (SELECT coalesce(sum(num/(m - 1.0)), 0) AS d_o FROM dm), " +
-        "de AS (SELECT CASE WHEN tot.n > 1 THEN " +
-        "2.0*(tot.n*tot.t2 - tot.t1*tot.t1)/(tot.n - 1.0) ELSE 0.0 END AS d_e FROM tot) " +
-        "SELECT CAST(tot.ni AS BIGINT) AS n_items, CAST(tot.n AS BIGINT) AS n_pairable, " +
-        "round(dd.d_o, 6) AS d_o, round(de.d_e, 6) AS d_e, " +
-        "CASE WHEN de.d_e > 0 THEN round(1.0 - dd.d_o/de.d_e, 6) END AS alpha " +
-        "FROM tot, dd, de"),
-    // ordinal Krippendorff: delta as exact half-integers off the
-    // cumulative pairable marginals, quarter-integer products, the
-    // per-distinct-m division discipline
-    "q_kripp_ordinal" ->
-      ("WITH votes AS (SELECT doc_id, CAST((doc_id % (j+2)) + (doc_id % 4) AS DOUBLE) AS v " +
-        "FROM documents, range(0,4) r(j) " +
-        "WHERE j = 0 OR (j = 1 AND doc_id % 5 <> 0) " +
-        "OR (j = 2 AND doc_id % 7 <> 0) OR (j = 3 AND doc_id % 4 = 0)), " +
-        "cell AS (SELECT doc_id AS i, v, count(*) AS nij FROM votes GROUP BY 1, 2), " +
-        "item AS (SELECT i, sum(nij) AS m FROM cell GROUP BY i HAVING sum(nij) >= 2), " +
-        "marg AS (SELECT v, sum(nij) AS c FROM cell JOIN item USING (i) GROUP BY v), " +
-        "cum AS (SELECT v, c, sum(c) OVER (ORDER BY v ROWS BETWEEN " +
-        "UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM marg), " +
-        "tot AS (SELECT count(*) AS nl, coalesce(sum(c), 0) AS n FROM marg), " +
-        "dta AS (SELECT a.v AS va, b.v AS vb, " +
-        "CASE WHEN a.v <= b.v THEN (b.cum - a.cum + a.c) - (a.c + b.c)/2.0 " +
-        "ELSE (a.cum - b.cum + b.c) - (b.c + a.c)/2.0 END AS delta " +
-        "FROM cum a, cum b WHERE a.v <> b.v), " +
-        "d2q AS (SELECT va, vb, delta*delta AS d2 FROM dta), " +
-        "de AS (SELECT CASE WHEN tot.n > 1 THEN " +
-        "coalesce(sum(ma.c * mb.c * q.d2), 0)/(tot.n - 1.0) ELSE 0.0 END AS d_e " +
-        "FROM d2q q JOIN marg ma ON ma.v = q.va JOIN marg mb ON mb.v = q.vb, tot " +
-        "GROUP BY tot.n), " +
-        "nm AS (SELECT it.m AS m, sum(ca.nij * cb.nij * q.d2) AS num " +
-        "FROM cell ca JOIN cell cb ON ca.i = cb.i AND ca.v <> cb.v " +
-        "JOIN d2q q ON q.va = ca.v AND q.vb = cb.v " +
-        "JOIN item it ON it.i = ca.i GROUP BY it.m), " +
-        "dd AS (SELECT coalesce(sum(num/(m - 1.0)), 0) AS d_o FROM nm) " +
-        "SELECT CAST((SELECT count(*) FROM item) AS BIGINT) AS n_items, " +
-        "CAST(tot.n AS BIGINT) AS n_pairable, CAST(tot.nl AS BIGINT) AS n_labels, " +
-        "round(dd.d_o, 6) AS d_o, round(de.d_e, 6) AS d_e, " +
-        "CASE WHEN de.d_e > 0 THEN round(1.0 - dd.d_o/de.d_e, 6) END AS alpha " +
-        "FROM tot, dd, de"),
-    // KL/JS over the union vocabulary with add-half smoothing; each ln
-    // term q6-rounded before the sum (the tokenDivergence convention)
-    "q_js_div" ->
-      (s"WITH ca AS (SELECT t, count(*) AS c FROM " +
-        s"(SELECT unnest($TOKS) AS t FROM documents WHERE lang = 'en') GROUP BY t), " +
-        s"cb AS (SELECT t, count(*) AS c FROM " +
-        s"(SELECT unnest($TOKS) AS t FROM documents WHERE lang <> 'en') GROUP BY t), " +
-        "j AS (SELECT coalesce(ca.c, 0) AS ca, coalesce(cb.c, 0) AS cb " +
-        "FROM ca FULL JOIN cb ON ca.t = cb.t), " +
-        "tot AS (SELECT sum(ca) AS na, sum(cb) AS nb, count(*) AS v FROM j), " +
-        "pq AS (SELECT (ca+0.5)/(tot.na+0.5*tot.v) AS p, (cb+0.5)/(tot.nb+0.5*tot.v) AS q FROM j, tot) " +
-        // scalar subqueries, not GROUP BY over pq: a token-free union
-        // must yield ONE all-null row (the tokenDivergence contract),
-        // not zero rows
-        "SELECT CAST(coalesce(tot.na, 0) AS BIGINT) AS n_a, " +
-        "CAST(coalesce(tot.nb, 0) AS BIGINT) AS n_b, " +
-        "CAST(tot.v AS BIGINT) AS vocab, " +
-        "(SELECT round(sum(round(p*ln(p/q), 6)), 6) FROM pq) AS kl_ab, " +
-        "(SELECT round(sum(round(q*ln(q/p), 6)), 6) FROM pq) AS kl_ba, " +
-        "(SELECT round(sum(round(p*ln(p/((p+q)/2))/2, 6) + round(q*ln(q/((p+q)/2))/2, 6)), 6) FROM pq) AS js " +
-        "FROM tot"),
-    // vocab scorecard: one dictionary aggregate (the Zipf shape scalar
-    // is q_zipf's)
-    "q_vocab_report" ->
-      (s"WITH c AS (SELECT t, count(*) AS c FROM " +
-        s"(SELECT unnest($TOKS) AS t FROM documents) GROUP BY t) " +
-        "SELECT CAST(sum(c) AS BIGINT) AS n_tokens, " +
-        "CAST(count(*) AS BIGINT) AS vocab, " +
-        "CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS hapax, " +
-        "CAST(sum(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS BIGINT) AS dis, " +
-        "round(count(*)/(1.0*sum(c)), 6) AS ttr, " +
-        "round(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END)/(1.0*sum(c)), 6) AS gt_unseen " +
-        "FROM c"),
-    // corpus BLEU: the pair set rebuilt with DuckDB's 1-based indexed
-    // list_filter (≡ Spark's 0-based (i+1)%3), clipped matches via the
-    // per-(pair, n, gram) count join, q6 per-level logs, BP in the
-    // exponent — the bleuScore arithmetic term for term
-    "q_bleu" ->
-      (s"WITH tk AS (SELECT doc_id, $TOKS AS rt FROM documents), " +
-        "pair AS (SELECT doc_id, rt, list_filter(rt, (x, i) -> i % 3 <> 0) AS ct FROM tk), " +
-        "lens AS (SELECT count(*) AS np, CAST(coalesce(sum(len(ct)), 0) AS BIGINT) AS cl, " +
-        "CAST(coalesce(sum(len(rt)), 0) AS BIGINT) AS rl FROM pair), " +
-        "grams AS (SELECT doc_id, n.n AS n, " +
-        "list_transform(range(1, len(ct)-n.n+2), i -> array_to_string(list_slice(ct, i, i+n.n-1), ' ')) AS cg, " +
-        "list_transform(range(1, len(rt)-n.n+2), i -> array_to_string(list_slice(rt, i, i+n.n-1), ' ')) AS rg " +
-        "FROM pair, (SELECT unnest(range(1, 5)) AS n) n), " +
-        "cg AS (SELECT doc_id, n, g, count(*) AS cc FROM " +
-        "(SELECT doc_id, n, unnest(cg) AS g FROM grams) GROUP BY 1, 2, 3), " +
-        "rg AS (SELECT doc_id, n, g, count(*) AS cr FROM " +
-        "(SELECT doc_id, n, unnest(rg) AS g FROM grams) GROUP BY 1, 2, 3), " +
-        "pern AS (SELECT cg.n, sum(least(cc, coalesce(cr, 0))) AS m, sum(cc) AS t " +
-        "FROM cg LEFT JOIN rg ON cg.doc_id = rg.doc_id AND cg.n = rg.n AND cg.g = rg.g " +
-        "GROUP BY cg.n), " +
-        "p AS (SELECT n, CASE WHEN t > 0 THEN m/(1.0*t) END AS p FROM pern), " +
-        // ln only inside the p > 0 branch: DuckDB ln(0) THROWS, and a
-        // zero-match level must read bleu = 0.0, not crash the gate
-        "agg AS (SELECT sum(CASE WHEN p > 0 THEN round(ln(p), 6) END)/4 AS mlp, " +
-        "min(CASE WHEN p IS NULL OR p = 0 THEN 0 ELSE 1 END) AS ok, count(*) AS k FROM p) " +
-        "SELECT lens.np AS n_pairs, lens.cl AS c_len, lens.rl AS r_len, " +
-        "round((SELECT p FROM p WHERE n = 1), 6) AS p1, " +
-        "round((SELECT p FROM p WHERE n = 2), 6) AS p2, " +
-        "round((SELECT p FROM p WHERE n = 3), 6) AS p3, " +
-        "round((SELECT p FROM p WHERE n = 4), 6) AS p4, " +
-        "CASE WHEN lens.cl = 0 THEN NULL " +
-        "WHEN agg.ok = 0 OR agg.k < 4 THEN 0.0 " +
-        "ELSE round(exp(agg.mlp + least(0.0, 1.0 - lens.rl/(1.0*lens.cl))), 4) " +
-        "END AS bleu FROM lens, agg"),
-    // per-source BLEU: the q_bleu replay pivoted per (source, n)
-    "q_bleu_source" -> bleuSourceSql(4),
-    // multi-reference BLEU: the q_bleu replay with (a) clipped matches
-    // against the per-gram MAX over both references and (b) r_len = Σ of
-    // the per-pair closest-length (tie: shorter) reference length.
-    // 1-based DuckDB lambdas ≡ Spark's 0-based (i+1) residues.
-    "q_bleu_multiref" ->
-      (s"WITH tk AS (SELECT doc_id, $TOKS AS rt FROM documents), " +
-        "pair AS (SELECT doc_id, rt, " +
-        "list_transform(rt, (x, i) -> CASE WHEN i % 3 = 0 THEN 'xx' ELSE x END) AS rt2, " +
-        "list_filter(list_transform(rt, (x, i) -> CASE WHEN i % 3 = 0 THEN 'xx' ELSE x END), " +
-        "(x, i) -> i % 5 <> 0) AS ct FROM tk), " +
-        "lens AS (SELECT count(*) AS np, CAST(coalesce(sum(len(ct)), 0) AS BIGINT) AS cl, " +
-        "CAST(coalesce(sum(CASE WHEN abs(len(rt2) - len(ct)) < abs(len(rt) - len(ct)) " +
-        "OR (abs(len(rt2) - len(ct)) = abs(len(rt) - len(ct)) AND len(rt2) < len(rt)) " +
-        "THEN len(rt2) ELSE len(rt) END), 0) AS BIGINT) AS rl FROM pair), " +
-        "grams AS (SELECT doc_id, n.n AS n, " +
-        "list_transform(range(1, len(ct)-n.n+2), i -> array_to_string(list_slice(ct, i, i+n.n-1), ' ')) AS cg, " +
-        "list_transform(range(1, len(rt)-n.n+2), i -> array_to_string(list_slice(rt, i, i+n.n-1), ' ')) AS rg, " +
-        "list_transform(range(1, len(rt2)-n.n+2), i -> array_to_string(list_slice(rt2, i, i+n.n-1), ' ')) AS rg2 " +
-        "FROM pair, (SELECT unnest(range(1, 5)) AS n) n), " +
-        "cg AS (SELECT doc_id, n, g, count(*) AS cc FROM " +
-        "(SELECT doc_id, n, unnest(cg) AS g FROM grams) GROUP BY 1, 2, 3), " +
-        "rg AS (SELECT doc_id, n, g, count(*) AS cr FROM " +
-        "(SELECT doc_id, n, unnest(rg) AS g FROM grams) GROUP BY 1, 2, 3), " +
-        "rg2 AS (SELECT doc_id, n, g, count(*) AS cr2 FROM " +
-        "(SELECT doc_id, n, unnest(rg2) AS g FROM grams) GROUP BY 1, 2, 3), " +
-        "pern AS (SELECT cg.n, " +
-        "sum(least(cc, greatest(coalesce(cr, 0), coalesce(cr2, 0)))) AS m, " +
-        "sum(cc) AS t FROM cg " +
-        "LEFT JOIN rg ON cg.doc_id = rg.doc_id AND cg.n = rg.n AND cg.g = rg.g " +
-        "LEFT JOIN rg2 ON cg.doc_id = rg2.doc_id AND cg.n = rg2.n AND cg.g = rg2.g " +
-        "GROUP BY cg.n), " +
-        "p AS (SELECT n, CASE WHEN t > 0 THEN m/(1.0*t) END AS p FROM pern), " +
-        "agg AS (SELECT sum(CASE WHEN p > 0 THEN round(ln(p), 6) END)/4 AS mlp, " +
-        "min(CASE WHEN p IS NULL OR p = 0 THEN 0 ELSE 1 END) AS ok, count(*) AS k FROM p) " +
-        "SELECT lens.np AS n_pairs, lens.cl AS c_len, lens.rl AS r_len, " +
-        "round((SELECT p FROM p WHERE n = 1), 6) AS p1, " +
-        "round((SELECT p FROM p WHERE n = 2), 6) AS p2, " +
-        "round((SELECT p FROM p WHERE n = 3), 6) AS p3, " +
-        "round((SELECT p FROM p WHERE n = 4), 6) AS p4, " +
-        "CASE WHEN lens.cl = 0 THEN NULL " +
-        "WHEN agg.ok = 0 OR agg.k < 4 THEN 0.0 " +
-        "ELSE round(exp(agg.mlp + least(0.0, 1.0 - lens.rl/(1.0*lens.cl))), 4) " +
-        "END AS bleu FROM lens, agg"),
-    // chrF2: character-gram clipped stats (chars of the token-joined,
-    // whitespace-removed text), effective-order means, β² = 4 — pure
-    // integer-rational algebra
-    "q_chrf" ->
-      (s"WITH tk AS (SELECT doc_id, $TOKS AS t FROM documents), " +
-        "pair AS (SELECT doc_id, " +
-        "regexp_extract_all(array_to_string(t, ''), '(?s).') AS rt, " +
-        "regexp_extract_all(array_to_string(list_filter(t, (x, i) -> i % 3 <> 0), ''), '(?s).') AS ct " +
-        "FROM tk), " +
-        "lens AS (SELECT count(*) AS np, CAST(coalesce(sum(len(ct)), 0) AS BIGINT) AS cl, " +
-        "CAST(coalesce(sum(len(rt)), 0) AS BIGINT) AS rl FROM pair), " +
-        "grams AS (SELECT doc_id, n.n AS n, " +
-        "list_transform(range(1, len(ct)-n.n+2), i -> array_to_string(list_slice(ct, i, i+n.n-1), ' ')) AS cg, " +
-        "list_transform(range(1, len(rt)-n.n+2), i -> array_to_string(list_slice(rt, i, i+n.n-1), ' ')) AS rg " +
-        "FROM pair, (SELECT unnest(range(1, 7)) AS n) n), " +
-        "cg AS (SELECT doc_id, n, g, count(*) AS cc FROM " +
-        "(SELECT doc_id, n, unnest(cg) AS g FROM grams) GROUP BY 1, 2, 3), " +
-        "rg AS (SELECT doc_id, n, g, count(*) AS cr FROM " +
-        "(SELECT doc_id, n, unnest(rg) AS g FROM grams) GROUP BY 1, 2, 3), " +
-        "pern AS (SELECT coalesce(cg.n, rg.n) AS n, " +
-        "sum(least(coalesce(cc, 0), coalesce(cr, 0))) AS m, " +
-        "sum(coalesce(cc, 0)) AS t, sum(coalesce(cr, 0)) AS tr " +
-        "FROM cg FULL JOIN rg ON cg.doc_id = rg.doc_id AND cg.n = rg.n AND cg.g = rg.g " +
-        "GROUP BY 1), " +
-        "pr AS (SELECT coalesce(avg(CASE WHEN t > 0 THEN m/(1.0*t) END), 0) AS p, " +
-        "coalesce(avg(CASE WHEN tr > 0 THEN m/(1.0*tr) END), 0) AS r FROM pern) " +
-        // either side character-free → NULL metrics (the chrF contract),
-        // not 0.0 — a degenerate snapshot must not flip the row
-        "SELECT lens.np AS n_pairs, lens.cl AS c_chars, lens.rl AS r_chars, " +
-        "CASE WHEN lens.cl > 0 AND lens.rl > 0 THEN round(p, 6) END AS chr_p, " +
-        "CASE WHEN lens.cl > 0 AND lens.rl > 0 THEN round(r, 6) END AS chr_r, " +
-        "CASE WHEN lens.cl = 0 OR lens.rl = 0 THEN NULL " +
-        "WHEN p + r = 0 THEN 0.0 ELSE round(5.0*p*r/(4.0*p+r), 6) END AS chrf " +
-        "FROM lens, pr"),
-    // chrF++: the q_chrf char pern UNIONed with a word 1-2 gram pern
-    // (word levels keyed n+100 so the pooled effective-order average
-    // runs over all 8 levels exactly like chrFpp's ps/rs means)
-    "q_chrfpp" ->
-      (s"WITH tk AS (SELECT doc_id, $TOKS AS t FROM documents), " +
-        "pair AS (SELECT doc_id, " +
-        "regexp_extract_all(array_to_string(t, ''), '(?s).') AS rc, " +
-        "regexp_extract_all(array_to_string(list_filter(t, (x, i) -> i % 3 <> 0), ''), '(?s).') AS cc, " +
-        "t AS rw, list_filter(t, (x, i) -> i % 3 <> 0) AS cw FROM tk), " +
-        "lens AS (SELECT count(*) AS np, CAST(coalesce(sum(len(cc)), 0) AS BIGINT) AS cl, " +
-        "CAST(coalesce(sum(len(rc)), 0) AS BIGINT) AS rl, " +
-        "CAST(coalesce(sum(len(cw)), 0) AS BIGINT) AS cwn, " +
-        "CAST(coalesce(sum(len(rw)), 0) AS BIGINT) AS rwn FROM pair), " +
-        "grams AS (SELECT doc_id, n.n AS n, " +
-        "list_transform(range(1, len(cc)-n.n+2), i -> array_to_string(list_slice(cc, i, i+n.n-1), ' ')) AS cg, " +
-        "list_transform(range(1, len(rc)-n.n+2), i -> array_to_string(list_slice(rc, i, i+n.n-1), ' ')) AS rg " +
-        "FROM pair, (SELECT unnest(range(1, 7)) AS n) n " +
-        "UNION ALL SELECT doc_id, n.n + 100 AS n, " +
-        "list_transform(range(1, len(cw)-n.n+2), i -> array_to_string(list_slice(cw, i, i+n.n-1), ' ')) AS cg, " +
-        "list_transform(range(1, len(rw)-n.n+2), i -> array_to_string(list_slice(rw, i, i+n.n-1), ' ')) AS rg " +
-        "FROM pair, (SELECT unnest(range(1, 3)) AS n) n), " +
-        "cg AS (SELECT doc_id, n, g, count(*) AS cc FROM " +
-        "(SELECT doc_id, n, unnest(cg) AS g FROM grams) GROUP BY 1, 2, 3), " +
-        "rg AS (SELECT doc_id, n, g, count(*) AS cr FROM " +
-        "(SELECT doc_id, n, unnest(rg) AS g FROM grams) GROUP BY 1, 2, 3), " +
-        "pern AS (SELECT coalesce(cg.n, rg.n) AS n, " +
-        "sum(least(coalesce(cc, 0), coalesce(cr, 0))) AS m, " +
-        "sum(coalesce(cc, 0)) AS t, sum(coalesce(cr, 0)) AS tr " +
-        "FROM cg FULL JOIN rg ON cg.doc_id = rg.doc_id AND cg.n = rg.n AND cg.g = rg.g " +
-        "GROUP BY 1), " +
-        "pr AS (SELECT coalesce(avg(CASE WHEN t > 0 THEN m/(1.0*t) END), 0) AS p, " +
-        "coalesce(avg(CASE WHEN tr > 0 THEN m/(1.0*tr) END), 0) AS r FROM pern) " +
-        "SELECT lens.np AS n_pairs, lens.cl AS c_chars, lens.rl AS r_chars, " +
-        "lens.cwn AS c_words, lens.rwn AS r_words, " +
-        "CASE WHEN lens.cl > 0 AND lens.rl > 0 THEN round(p, 6) END AS chr_p, " +
-        "CASE WHEN lens.cl > 0 AND lens.rl > 0 THEN round(r, 6) END AS chr_r, " +
-        "CASE WHEN lens.cl = 0 OR lens.rl = 0 THEN NULL " +
-        "WHEN p + r = 0 THEN 0.0 ELSE round(5.0*p*r/(4.0*p+r), 6) END AS chrfpp " +
-        "FROM lens, pr"),
-    // sentence BLEU+1: per-doc clipped level counts pivoted, p1
-    // unsmoothed, (m+1)/(t+1) above, q6 per-ln + brevity — the
-    // bleuSentence arithmetic verbatim
-    "q_bleu_sent" ->
-      (s"WITH tk AS (SELECT doc_id, $TOKS AS rt FROM documents), " +
-        "pair AS (SELECT doc_id, rt, list_filter(rt, (x, i) -> i % 3 <> 0) AS ct " +
-        "FROM tk WHERE len(rt) > 0), " +
-        "grams AS (SELECT doc_id, n.n AS n, " +
-        "list_transform(range(1, len(ct)-n.n+2), i -> array_to_string(list_slice(ct, i, i+n.n-1), ' ')) AS cg, " +
-        "list_transform(range(1, len(rt)-n.n+2), i -> array_to_string(list_slice(rt, i, i+n.n-1), ' ')) AS rg " +
-        "FROM pair, (SELECT unnest(range(1, 5)) AS n) n), " +
-        "cg AS (SELECT doc_id, n, g, count(*) AS cc FROM " +
-        "(SELECT doc_id, n, unnest(cg) AS g FROM grams) GROUP BY 1, 2, 3), " +
-        "rg AS (SELECT doc_id, n, g, count(*) AS cr FROM " +
-        "(SELECT doc_id, n, unnest(rg) AS g FROM grams) GROUP BY 1, 2, 3), " +
-        "pern AS (SELECT coalesce(cg.doc_id, rg.doc_id) AS doc_id, " +
-        "coalesce(cg.n, rg.n) AS n, " +
-        "sum(least(coalesce(cc, 0), coalesce(cr, 0))) AS m, " +
-        "sum(coalesce(cc, 0)) AS t " +
-        "FROM cg FULL JOIN rg ON cg.doc_id = rg.doc_id AND cg.n = rg.n AND cg.g = rg.g " +
-        "GROUP BY 1, 2), " +
-        "piv AS (SELECT p.doc_id, len(p.ct) AS cl, len(p.rt) AS rl, " +
-        "coalesce(sum(CASE WHEN n = 1 THEN m END), 0) AS m1, " +
-        "coalesce(sum(CASE WHEN n = 1 THEN t END), 0) AS t1, " +
-        "coalesce(sum(CASE WHEN n = 2 THEN m END), 0) AS m2, " +
-        "coalesce(sum(CASE WHEN n = 2 THEN t END), 0) AS t2, " +
-        "coalesce(sum(CASE WHEN n = 3 THEN m END), 0) AS m3, " +
-        "coalesce(sum(CASE WHEN n = 3 THEN t END), 0) AS t3, " +
-        "coalesce(sum(CASE WHEN n = 4 THEN m END), 0) AS m4, " +
-        "coalesce(sum(CASE WHEN n = 4 THEN t END), 0) AS t4 " +
-        "FROM pair p LEFT JOIN pern ON pern.doc_id = p.doc_id " +
-        "GROUP BY 1, 2, 3) " +
-        "SELECT doc_id, CAST(cl AS BIGINT) AS c_len, CAST(rl AS BIGINT) AS r_len, " +
-        "CASE WHEN cl = 0 THEN NULL WHEN m1 = 0 THEN 0.0 ELSE " +
-        "round(exp((round(ln(m1/(1.0*t1)), 6) + round(ln((m2+1)/(1.0*(t2+1))), 6) + " +
-        "round(ln((m3+1)/(1.0*(t3+1))), 6) + round(ln((m4+1)/(1.0*(t4+1))), 6))/4 " +
-        "+ least(0.0, 1.0 - rl/(1.0*cl))), 4) END AS bleu_s " +
-        "FROM piv"),
-    // ROUGE-2: per-doc clipped bigram counts, the q_bleu gram
-    // machinery at one level with per-pair outputs
-    "q_rouge2" ->
-      (s"WITH tk AS (SELECT doc_id, $TOKS AS rt FROM documents), " +
-        "pair AS (SELECT doc_id, rt, list_filter(rt, (x, i) -> i % 3 <> 0) AS ct FROM tk), " +
-        "g AS (SELECT doc_id, " +
-        "list_transform(range(1, len(ct)), i -> array_to_string(list_slice(ct, i, i+1), ' ')) AS cg, " +
-        "list_transform(range(1, len(rt)), i -> array_to_string(list_slice(rt, i, i+1), ' ')) AS rg " +
-        "FROM pair WHERE len(ct) >= 2 AND len(rt) >= 2), " +
-        "cg AS (SELECT doc_id, gg, count(*) AS cc FROM " +
-        "(SELECT doc_id, unnest(cg) AS gg FROM g) GROUP BY 1, 2), " +
-        "rg AS (SELECT doc_id, gg, count(*) AS cr FROM " +
-        "(SELECT doc_id, unnest(rg) AS gg FROM g) GROUP BY 1, 2), " +
-        "m AS (SELECT coalesce(cg.doc_id, rg.doc_id) AS doc_id, " +
-        "sum(least(coalesce(cc, 0), coalesce(cr, 0))) AS matches " +
-        "FROM cg FULL JOIN rg ON cg.doc_id = rg.doc_id AND cg.gg = rg.gg GROUP BY 1), " +
-        "lens AS (SELECT doc_id, len(cg) AS cgr, len(rg) AS rgr FROM g) " +
-        "SELECT l.doc_id, CAST(m.matches AS BIGINT) AS matches, " +
-        "CAST(l.cgr AS BIGINT) AS c_grams, CAST(l.rgr AS BIGINT) AS r_grams, " +
-        "round(m.matches/(1.0*l.cgr), 6) AS rouge_p, " +
-        "round(m.matches/(1.0*l.rgr), 6) AS rouge_r, " +
-        "CASE WHEN m.matches > 0 THEN round(2.0*(m.matches/(1.0*l.cgr))*(m.matches/(1.0*l.rgr))/" +
-        "((m.matches/(1.0*l.cgr))+(m.matches/(1.0*l.rgr))), 6) ELSE 0.0 END AS rouge_f " +
-        "FROM lens l JOIN m USING (doc_id)"),
-    // the q_rouge2 unigram clip (grams = the tokens themselves) + list
-    // equality for EM, averaged; gold = ref, pred = cand (every-3rd-
-    // token drop), both replayed from documents.text
-    "q_qa_eval" ->
-      (s"WITH tk AS (SELECT doc_id, $TOKS AS rt FROM documents), " +
-        "pair AS (SELECT doc_id, rt, list_filter(rt, (x, i) -> i % 3 <> 0) AS ct FROM tk), " +
-        "cg AS (SELECT doc_id, gg, count(*) AS cc FROM " +
-        "(SELECT doc_id, unnest(ct) AS gg FROM pair) GROUP BY 1, 2), " +
-        "rg AS (SELECT doc_id, gg, count(*) AS cr FROM " +
-        "(SELECT doc_id, unnest(rt) AS gg FROM pair) GROUP BY 1, 2), " +
-        "m AS (SELECT coalesce(cg.doc_id, rg.doc_id) AS doc_id, " +
-        "sum(least(coalesce(cc, 0), coalesce(cr, 0))) AS matches " +
-        "FROM cg FULL JOIN rg ON cg.doc_id = rg.doc_id AND cg.gg = rg.gg GROUP BY 1), " +
-        "lens AS (SELECT doc_id, len(ct) AS cgr, len(rt) AS rgr, " +
-        "CASE WHEN ct = rt THEN 1 ELSE 0 END AS em FROM pair " +
-        "WHERE len(ct) > 0 AND len(rt) > 0), " +
-        "per AS (SELECT l.doc_id, l.em, " +
-        "CASE WHEN m.matches > 0 THEN round(2.0*(m.matches/(1.0*l.cgr))*(m.matches/(1.0*l.rgr))/" +
-        "((m.matches/(1.0*l.cgr))+(m.matches/(1.0*l.rgr))), 6) ELSE 0.0 END AS f " +
-        "FROM lens l JOIN m USING (doc_id)) " +
-        "SELECT CAST(count(*) AS BIGINT) AS n_pairs, " +
-        "round(avg(em), 4) AS exact_match, round(avg(f), 4) AS token_f1 FROM per"),
-    // ROUGE-L: the LCS DP replayed as a recursive CTE — row i of the
-    // DP table advances per candidate token, and the in-row sequential
-    // dependence resolves via the prefix-max identity
-    // dp'[j] = max(dp[j], max over matches k<=j of dp[k-1]+1)
-    "q_rouge" ->
-      (s"WITH RECURSIVE tk AS (SELECT doc_id, $TOKS AS rt FROM documents), " +
-        "pair AS (SELECT doc_id, rt, list_filter(rt, (x, i) -> i % 3 <> 0) AS ct FROM tk), " +
-        "rec(doc_id, i, dp) AS (" +
-        "SELECT doc_id, 0, list_transform(range(0, len(rt)+1), x -> 0) FROM pair " +
-        "UNION ALL " +
-        "SELECT r.doc_id, r.i + 1, " +
-        "(SELECT list_prepend(0, list_transform(range(1, len(p.rt)+1), j -> " +
-        "greatest(dp[j+1], " +
-        "coalesce(list_max(list_transform(range(1, j+1), k -> " +
-        "CASE WHEN p.ct[r.i+1] = p.rt[k] THEN dp[k] + 1 END)), 0))))) " +
-        "FROM rec r JOIN pair p ON r.doc_id = p.doc_id " +
-        "WHERE r.i < len(p.ct)), " +
-        "fin AS (SELECT r.doc_id, dp[len(p.rt)+1] AS l, len(p.ct) AS cl, " +
-        "len(p.rt) AS rl FROM rec r JOIN pair p ON r.doc_id = p.doc_id " +
-        "WHERE r.i = len(p.ct)) " +
-        "SELECT doc_id, CAST(l AS BIGINT) AS lcs, CAST(cl AS BIGINT) AS c_len, " +
-        "CAST(rl AS BIGINT) AS r_len, " +
-        "round(l/(1.0*cl), 6) AS rouge_p, round(l/(1.0*rl), 6) AS rouge_r, " +
-        "CASE WHEN l > 0 THEN round(2.0*(l/(1.0*cl))*(l/(1.0*rl))/((l/(1.0*cl))+(l/(1.0*rl))), 6) " +
-        "ELSE 0.0 END AS rouge_f " +
-        "FROM fin WHERE cl > 0 AND rl > 0"),
-    // shift-free TER: the Levenshtein DP replayed as a recursive CTE —
-    // the q_rouge prefix trick for the in-row sequential dependence,
-    // here the MIN-PLUS identity cur[j] = min_k<=j (t[k] + (j-k)) with
-    // t[k] = min(del, sub) candidates off the previous row
-    "q_ter" ->
-      // pair is MATERIALIZED: the DP recursion joins it per step, and
-      // unmaterialized each step re-tokenized + re-degraded the corpus
-      (s"WITH RECURSIVE tk AS (SELECT doc_id, $TOKS AS rt FROM documents), " +
-        "pair AS MATERIALIZED (SELECT doc_id, rt, " +
-        "list_filter(list_transform(rt, (x, i) -> CASE WHEN i % 3 = 0 THEN 'xx' ELSE x END), " +
-        "(x, i) -> i % 5 <> 0) AS ct FROM tk WHERE len(rt) > 0), " +
-        "rec(doc_id, i, dp) AS (" +
-        "SELECT doc_id, 0, list_transform(range(0, len(rt)+1), x -> x) FROM pair " +
-        "UNION ALL " +
-        "SELECT doc_id, i + 1, " +
-        "list_transform(range(0, len(tl)), j -> " +
-        "list_min(list_transform(range(0, j+1), k -> tl[k+1] + (j - k)))) FROM (" +
-        "SELECT r.doc_id, r.i AS i, " +
-        "list_prepend(r.i + 1, list_transform(range(1, len(p.rt)+1), j -> " +
-        "least(dp[j+1] + 1, dp[j] + CASE WHEN p.ct[r.i+1] = p.rt[j] THEN 0 ELSE 1 END))) AS tl " +
-        "FROM rec r JOIN pair p ON r.doc_id = p.doc_id " +
-        "WHERE r.i < len(p.ct))), " +
-        "fin AS (SELECT r.doc_id, dp[len(p.rt)+1] AS e, len(p.ct) AS cl, " +
-        "len(p.rt) AS rl FROM rec r JOIN pair p ON r.doc_id = p.doc_id " +
-        "WHERE r.i = len(p.ct)) " +
-        "SELECT doc_id, CAST(e AS BIGINT) AS edits, CAST(cl AS BIGINT) AS c_len, " +
-        "CAST(rl AS BIGINT) AS r_len, round(e/(1.0*rl), 6) AS ter FROM fin"),
-    // greedy-shift TER replay under the PINNED sf0.01 shift decisions
-    // (tools/pin_ter_r14.scala): application + edit DP are mechanical,
-    // the argmin decisions ride as literals — converted from rows-only
-    // in round 14 (the q_bpe_apply precedent)
-    "q_ter_shift" -> terShiftSql,
-    // add-k perplexity under the train-split bigram model: V+1 for the
-    // OOV bucket, per-term q6 logs, ppl = exp of the ROUNDED ce
-    "q_lm_ppl" ->
-      (s"WITH tk AS (SELECT doc_id, $TOKS AS t FROM documents), " +
-        "pairs AS (SELECT doc_id, z[1] AS prev, z[2] AS word FROM " +
-        "(SELECT doc_id, unnest(list_zip(t[1:len(t)-1], t[2:len(t)])) AS z " +
-        "FROM tk WHERE len(t) >= 2)), " +
-        "m AS (SELECT prev, word, count(*) AS cnt FROM pairs WHERE doc_id % 97 <> 0 GROUP BY 1, 2), " +
-        "vv AS (SELECT count(DISTINCT word) + 1 AS v FROM m), " +
-        "ctx AS (SELECT prev, sum(cnt) AS c1 FROM m GROUP BY prev), " +
-        "sc AS (SELECT p.doc_id, " +
-        "round(ln((coalesce(m.cnt, 0) + 0.5)/(coalesce(ctx.c1, 0) + 0.5*vv.v)), 6) AS logp " +
-        "FROM pairs p LEFT JOIN m ON p.prev = m.prev AND p.word = m.word " +
-        "LEFT JOIN ctx ON p.prev = ctx.prev, vv) " +
-        "SELECT doc_id, count(*) AS n_bigrams, round(-avg(logp), 4) AS cross_entropy, " +
-        "round(exp(round(-avg(logp), 4)), 4) AS ppl FROM sc GROUP BY doc_id"),
-    "q_ap" -> apSql,
-    "q_auc_group" -> aucGroupSql,
-    "q_auc_boot" -> aucBootSql(100),
-    // paired bootstrap: the q_auc_boot md5-lane draw replay, one shared
-    // weight per (doc, replica), delta = Σw(b−a)/Σw q6, nearest-rank CI
-    "q_sys_compare" -> sysCompareSql(100),
-    // sign-flip permutation replay on the q_sys_compare (ma, mb) frame:
-    // md5(salt|doc|replica) 4-hex-digit parity coins, q6 replica means,
-    // |Δ_r| ≥ |Δ_obs| counted on the rounded grid, add-one p
-    "q_perm_test" ->
-      (s"WITH $qualityLabeledCtes, " +
-        "m AS (SELECT j.doc_id, " +
-        "1.0 - (j.s - j.y) * (j.s - j.y) AS ma, " +
-        "1.0 - (least(1.0, d.n_chars/1000.0) - j.y) * " +
-        "(least(1.0, d.n_chars/1000.0) - j.y) AS mb " +
-        "FROM j JOIN documents d USING (doc_id)), " +
-        "ob AS (SELECT CAST(count(*) AS BIGINT) AS n, " +
-        "round(sum(mb - ma) / count(*), 6) AS dobs FROM m), " +
-        "e AS (SELECT m.doc_id, m.ma, m.mb, CAST(r.range AS BIGINT) AS b " +
-        "FROM m, range(200) r), " +
-        "sgn AS (SELECT b, CASE WHEN CAST(('0x' || " +
-        "substring(md5('perm' || '|' || CAST(doc_id AS VARCHAR) || '|' || " +
-        "CAST(b AS VARCHAR)), 1, 4)) AS UBIGINT) % 2 = 0 " +
-        "THEN (mb - ma) ELSE -(mb - ma) END AS sd FROM e), " +
-        "per AS (SELECT b, round(sum(sd) / (SELECT n FROM ob), 6) AS d " +
-        "FROM sgn GROUP BY b) " +
-        "SELECT ob.n AS n_items, CAST(200 AS INT) AS n_replicas, " +
-        "ob.dobs AS delta_obs, " +
-        "CASE WHEN ob.n > 0 THEN round((1 + (SELECT count(*) FROM per " +
-        "WHERE abs(per.d) >= abs(ob.dobs))) / 201.0, 6) END AS p_value " +
-        "FROM ob"),
-    // multi-class Cohen: exact integer sums (agree, Σ row_k·col_k)
-    // divided once — the fleissKappa arithmetic
-    "q_kappa_multi" ->
-      ("WITH v AS (SELECT CAST(((doc_id % 2) + (doc_id % 3)) % 3 AS VARCHAR) AS a, " +
-        "CAST(((doc_id % 3) + (doc_id % 3)) % 3 AS VARCHAR) AS b FROM documents), " +
-        "cell AS (SELECT a, b, count(*) AS c FROM v GROUP BY a, b), " +
-        "tot AS (SELECT coalesce(sum(c), 0) AS n, " +
-        "coalesce(sum(CASE WHEN a = b THEN c END), 0) AS agree FROM cell), " +
-        "rm AS (SELECT a AS k, sum(c) AS r FROM cell GROUP BY a), " +
-        "cm AS (SELECT b AS k, sum(c) AS cc FROM cell GROUP BY b), " +
-        "mg AS (SELECT count(*) AS nl, " +
-        "coalesce(sum(coalesce(r, 0) * coalesce(cc, 0)), 0) AS src " +
-        "FROM rm FULL JOIN cm USING (k)) " +
-        "SELECT CAST(tot.n AS BIGINT) AS n, CAST(mg.nl AS BIGINT) AS n_labels, " +
-        "round(tot.agree/(1.0*tot.n), 6) AS po, " +
-        "round(mg.src/(tot.n*1.0*tot.n), 6) AS pe, " +
-        "CASE WHEN mg.src/(tot.n*1.0*tot.n) < 1 THEN " +
-        "round((tot.agree/(1.0*tot.n) - mg.src/(tot.n*1.0*tot.n))/" +
-        "(1 - mg.src/(tot.n*1.0*tot.n)), 6) END AS kappa FROM tot, mg"),
-    // McNemar: discordant-pair counts + the continuity-corrected
-    // chi-square(1) statistic, keep flag from the same logit CTEs
-    "q_mcnemar" ->
-      (s"WITH $qualityLabeledCtes, " +
-        // keep compares the UNROUNDED sigmoid to keepT (the
-        // qualityClassifierScore definition — j.s is rounded 4)
-        s"m AS (SELECT CAST(z.n_chars >= 300 AS INT) AS y, " +
-        s"CAST(1.0 / (1.0 + exp(-z.z)) >= ${ops.TextAnalysis.QUALITY_W._6} AS INT) AS a, " +
-        "CAST(z.n_chars >= 500 AS INT) AS b FROM z), " +
-        "agg AS (SELECT count(*) AS n, " +
-        "CAST(sum(CASE WHEN a = y AND b <> y THEN 1 ELSE 0 END) AS BIGINT) AS b_only, " +
-        "CAST(sum(CASE WHEN a <> y AND b = y THEN 1 ELSE 0 END) AS BIGINT) AS c_only FROM m) " +
-        "SELECT n, b_only, c_only, " +
-        "CASE WHEN b_only + c_only > 0 THEN " +
-        "round((abs(1.0*b_only - c_only) - 1) * (abs(1.0*b_only - c_only) - 1) / (1.0*b_only + c_only), 6) END AS statistic, " +
-        "CASE WHEN b_only + c_only > 0 THEN " +
-        "CAST((abs(1.0*b_only - c_only) - 1) * (abs(1.0*b_only - c_only) - 1) / (1.0*b_only + c_only) > 3.841 AS INT) END AS reject_05 " +
-        "FROM agg"),
-    // scorecard: per-row expression aggregate, log-loss eps-clamped
-    "q_clf_report" ->
-      (s"WITH $qualityLabeledCtes " +
-        "SELECT count(*) AS n, CAST(sum(y) AS BIGINT) AS n_pos, " +
-        "round(avg(CAST((s >= 0.5) = (y = 1) AS INT)), 4) AS accuracy, " +
-        "round(avg((s - y) * (s - y)), 6) AS brier, " +
-        "round(-avg(y * ln(greatest(s, 1e-15)) + " +
-        "(1 - y) * ln(greatest(1.0 - s, 1e-15))), 6) AS logloss FROM j"),
-    // exact KS: integer-rational CDF gap maximized over the dictionary
-    "q_ks_drift" ->
-      ("WITH t AS (SELECT CAST(n_chars AS DOUBLE) AS v, " +
-        "CAST(lang = 'en' AS INT) AS y FROM documents), " +
-        "d AS (SELECT v, CAST(sum(y) AS DOUBLE) AS np, " +
-        "CAST(sum(1 - y) AS DOUBLE) AS nn FROM t GROUP BY v), " +
-        "c AS (SELECT v, np, nn, " +
-        "coalesce(sum(np) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED " +
-        "PRECEDING AND 1 PRECEDING), 0) AS pb, " +
-        "coalesce(sum(nn) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED " +
-        "PRECEDING AND 1 PRECEDING), 0) AS nb FROM d), " +
-        "tot AS (SELECT sum(np) AS na, sum(nn) AS nb2 FROM d) " +
-        "SELECT CAST(tot.na AS BIGINT) AS n_a, " +
-        "CAST(tot.nb2 AS BIGINT) AS n_b, " +
-        "round(max(abs((c.pb + c.np) / tot.na - (c.nb + c.nn) / tot.nb2)), 6) AS ks, " +
-        "CAST(max(abs((c.pb + c.np) / tot.na - (c.nb + c.nn) / tot.nb2)) > " +
-        "1.358 * sqrt((tot.na + tot.nb2) / (tot.na * tot.nb2)) AS INT) " +
-        "AS reject_05 FROM c, tot GROUP BY tot.na, tot.nb2"),
-    // PQ encode + asymmetric-distance top-k replayed off the PINNED
-    // sf0.01 codebooks (k-means training stays exempt; see
-    // PQ_CODEBOOK_PINNED)
-    "q_pq_topk" -> pqTopKSql,
-    // the two-stage form: pinned-codebook ADC shortlist-100, exact
-    // cosine rescore of only those rows
-    "q_pq_refined" -> pqRefinedSql,
-    // learned-merge application replayed off the PINNED sf0.01 merge
-    // list (training stays exempt; see BPE_MERGES_PINNED)
-    "q_bpe_apply" -> bpeApplySql,
-    // Viterbi segmentation stats replayed off the PINNED sf0.01 unigram
-    // model (see UNIGRAM_PINNED)
-    "q_unigram_stats" -> unigramStatsSql,
-    "q_fertility_lang" -> fertilityLangSql,
-    // train → apply round trip: the apply half replayed off the pinned
-    // model with the path-carrying Viterbi DP
-    "q_unigram_encode" -> unigramEncodeSql,
-    // the seeded subword-regularization draw replayed off the pinned
-    // model: q6 logsumexp forward filter + md5-lane integer-mass
-    // backward walk (the kernel's exact arithmetic)
-    "q_unigram_sample" -> unigramSampleSql,
-    // the E-step soft encode replayed off the pinned model: forward +
-    // backward q6 DPs, integer-nanomass arc posteriors grouped per
-    // (word, piece)
-    "q_unigram_soft" -> unigramSoftSql,
-    // greedy longest-match segmentation as a recursion tracking the piece
-    // (the q_bpe_exact recursion, carrying substring(word, pos, L));
-    // seed row idx=-1 is the pre-first-piece state and is filtered out
-    "q_bpe_encode" ->
-      (s"WITH RECURSIVE words AS (SELECT DISTINCT unnest($TOKS) AS word FROM documents), " +
-        "seg(word, pos, idx, piece) AS (" +
-        "SELECT word, 1, -1, CAST(NULL AS VARCHAR) FROM words " +
-        "UNION ALL SELECT word, pos + L, idx + 1, substring(word, pos, L) " +
-        "FROM (SELECT word, pos, idx, coalesce(list_max(list_transform(" +
-        s"${ops.TextAnalysis.bpeVocabSql}, " +
-        "v -> CASE WHEN substring(word, pos, length(v)) = v THEN length(v) END)), 1) AS L " +
-        "FROM seg WHERE pos <= length(word))) " +
-        "SELECT word, CAST(idx AS INT) AS seg_idx, piece, " +
-        s"CAST(coalesce(list_position(${ops.TextAnalysis.bpeVocabSql}, piece), 0) AS INT) AS piece_id " +
-        "FROM seg WHERE idx >= 0"),
-    // the q_bpe_encode recursion aggregated per word, joined back to the
-    // per-source word stream: counts only (rates are the consumer's)
-    "q_vocab_coverage" ->
-      (s"WITH RECURSIVE w0 AS (SELECT source, unnest($TOKS) AS word FROM documents), " +
-        "words AS (SELECT DISTINCT word FROM w0), " +
-        "seg(word, pos, idx, piece) AS (" +
-        "SELECT word, 1, -1, CAST(NULL AS VARCHAR) FROM words " +
-        "UNION ALL SELECT word, pos + L, idx + 1, substring(word, pos, L) " +
-        "FROM (SELECT word, pos, idx, coalesce(list_max(list_transform(" +
-        s"${ops.TextAnalysis.bpeVocabSql}, " +
-        "v -> CASE WHEN substring(word, pos, length(v)) = v THEN length(v) END)), 1) AS L " +
-        "FROM seg WHERE pos <= length(word))), " +
-        "d AS (SELECT word, count(*) AS n_p, " +
-        s"sum(CASE WHEN coalesce(list_position(${ops.TextAnalysis.bpeVocabSql}, piece), 0) = 0 " +
-        "THEN 1 ELSE 0 END) AS n_f " +
-        "FROM seg WHERE idx >= 0 GROUP BY word) " +
-        "SELECT source, count(*) AS n_words, CAST(sum(n_p) AS BIGINT) AS n_pieces, " +
-        "CAST(sum(n_f) AS BIGINT) AS n_fallback_pieces, " +
-        "CAST(sum(CASE WHEN n_f > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_oov_words " +
-        "FROM w0 JOIN d USING (word) GROUP BY source"),
-    // SymSpell replay: {word} ∪ single-deletion keys, join, levenshtein
-    // verify, strict-majority canonical by (freq desc, word asc)
-    "q_typo_clusters" ->
-      (s"WITH $TYPO_CTES " +
-        "SELECT v.word, v.freq, coalesce(c.cand, v.word) AS canonical, " +
-        "coalesce(c.cfreq, v.freq) AS canon_freq " +
-        "FROM v LEFT JOIN c ON v.word = c.word AND c.rn = 1"),
-    // the learned mapping applied back: ordered string_agg reassembly,
-    // untokenizable docs pass through via the left join
-    "q_typo_apply" ->
-      (s"WITH $TYPO_CTES, " +
-        "st AS (SELECT doc_id, unnest(toks) AS word, " +
-        "unnest(range(len(toks))) AS pos FROM t2), " +
-        "corr AS (SELECT word, cand FROM c WHERE rn = 1), " +
-        "j AS (SELECT doc_id, pos, coalesce(cand, st.word) AS w, " +
-        "CASE WHEN cand IS NOT NULL THEN 1 ELSE 0 END AS ch " +
-        "FROM st LEFT JOIN corr ON st.word = corr.word), " +
-        "a AS (SELECT doc_id, string_agg(w, ' ' ORDER BY pos) AS text, " +
-        "count(*) AS n_tokens, CAST(sum(ch) AS BIGINT) AS n_changed " +
-        "FROM j GROUP BY doc_id) " +
-        "SELECT b.doc_id, coalesce(a.text, b.text) AS text, " +
-        "coalesce(a.n_tokens, 0) AS n_tokens, " +
-        "coalesce(a.n_changed, 0) AS n_changed " +
-        "FROM base b LEFT JOIN a USING (doc_id)"),
-    // the q_bpe_encode recursion joined back to the token stream
-    "q_token_ids" ->
-      (s"WITH RECURSIVE t AS (SELECT doc_id, $TOKS AS toks FROM documents), " +
-        "stream AS (SELECT doc_id, CAST(i AS INT) AS ti, toks[i+1] AS word " +
-        "FROM (SELECT doc_id, toks, unnest(range(len(toks))) AS i FROM t)), " +
-        "words AS (SELECT DISTINCT word FROM stream), " +
-        "seg(word, pos, idx, piece) AS (" +
-        "SELECT word, 1, -1, CAST(NULL AS VARCHAR) FROM words " +
-        "UNION ALL SELECT word, pos + L, idx + 1, substring(word, pos, L) " +
-        "FROM (SELECT word, pos, idx, coalesce(list_max(list_transform(" +
-        s"${ops.TextAnalysis.bpeVocabSql}, " +
-        "v -> CASE WHEN substring(word, pos, length(v)) = v THEN length(v) END)), 1) AS L " +
-        "FROM seg WHERE pos <= length(word))) " +
-        "SELECT stream.doc_id, stream.ti, CAST(seg.idx AS INT) AS seg_idx, " +
-        s"CAST(coalesce(list_position(${ops.TextAnalysis.bpeVocabSql}, seg.piece), 0) AS INT) AS piece_id " +
-        "FROM stream JOIN seg USING (word) WHERE seg.idx >= 0"),
-    "q_quality" ->
-      (s"WITH t AS (SELECT doc_id, text, $TOKS AS toks FROM documents) " +
-        "SELECT doc_id, len(toks) AS n_tokens, " +
-        "round(coalesce(list_aggregate(list_transform(toks, x -> length(x)), 'sum'), 0) / " +
-        "greatest(len(toks), 1), 4) AS avg_token_len, " +
-        "round(len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','on'], x))) / " +
-        "greatest(len(toks), 1), 4) AS stopword_ratio, " +
-        "round((length(text) - length(regexp_replace(lower(text), '[^a-z0-9]', '', 'g'))) / " +
-        "greatest(length(text), 1), 4) AS non_alnum_ratio FROM t"),
-    // fixture injected via chr() codepoints (769 = U+0301 combining
-    // acute, 778 = U+030A combining ring) so the SQL carries no raw
-    // combining bytes; DuckDB's nfc_normalize (utf8proc) and Java's
-    // Normalizer implement the same Unicode NFC
-    "q_normalize" ->
-      ("WITH inj AS (SELECT doc_id, CASE WHEN doc_id % 13 = 0 THEN text || " +
-        "' cafe' || chr(769) || ' A' || chr(778) || 'bc  end' " +
-        "ELSE text END AS t0 FROM documents), " +
-        "n AS (SELECT doc_id, t0, trim(regexp_replace(nfc_normalize(t0), " +
-        s"'${ops.TextAnalysis.WS_RUN_RE}', ' ', 'g')) AS t1 FROM inj) " +
-        "SELECT doc_id, t1 AS text, CAST(length(t0) AS INT) AS orig_len, " +
-        "CAST(length(t1) AS INT) AS norm_len FROM n"),
-    // weights interpolated from the same QUALITY_W constant the Spark
-    // side compiles; round(4) absorbs libm exp/ln ulp differences
-    "q_quality_model" -> {
-      val (bias, wLog, wAvg, wStop, wNon, keepT) = ops.TextAnalysis.QUALITY_W
-      s"WITH t AS (SELECT doc_id, text, $TOKS AS toks FROM documents), " +
-        "f AS (SELECT doc_id, len(toks) AS n, " +
-        "coalesce(list_aggregate(list_transform(toks, x -> length(x)), 'sum'), 0) / " +
-        "greatest(len(toks), 1) AS avg_len, " +
-        "len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','on'], x))) / " +
-        "greatest(len(toks), 1) AS stop_r, " +
-        s"(length(text) - length(regexp_replace(lower(text), '$NON_ALNUM_SQL', '', 'g'))) / " +
-        "greatest(length(text), 1) AS non_al FROM t), " +
-        s"z AS (SELECT doc_id, ($bias) + ($wLog) * ln(1 + n) + ($wAvg) * avg_len + " +
-        s"($wStop) * stop_r + ($wNon) * non_al AS z FROM f) " +
-        "SELECT doc_id, round(1.0 / (1.0 + exp(-z)), 4) AS quality_score, " +
-        s"CAST(1.0 / (1.0 + exp(-z)) >= $keepT AS INT) AS keep FROM z"
-    },
-    // the health report composes the quality-feature, lang-score, and
-    // fingerprint SQL the per-signal oracles already use
-    "q_corpus_report" -> {
-      val (bias, wLog, wAvg, wStop, wNon, keepT) = ops.TextAnalysis.QUALITY_W
-      s"WITH t AS (SELECT doc_id, text, $TOKS AS toks, $LANG_PAD AS pad FROM documents), " +
-        "f AS (SELECT *, len(toks) AS n, " +
-        "coalesce(list_aggregate(list_transform(toks, x -> length(x)), 'sum'), 0) / " +
-        "greatest(len(toks), 1) AS avg_len, " +
-        "len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','on'], x))) / " +
-        "greatest(len(toks), 1) AS stop_r, " +
-        s"(length(text) - length(regexp_replace(lower(text), '$NON_ALNUM_SQL', '', 'g'))) / " +
-        "greatest(length(text), 1) AS non_al FROM t), " +
-        s"z AS (SELECT *, ($bias) + ($wLog) * ln(1 + n) + ($wAvg) * avg_len + " +
-        s"($wStop) * stop_r + ($wNon) * non_al AS z FROM f), " +
-        s"sc AS (SELECT *, $LANG_SCORE_COLS FROM z), " +
-        s"p AS (SELECT n, $LANG_PRED_CASE AS pred_lang, ${fpSql("toks")} AS fp, " +
-        "1.0 / (1.0 + exp(-z)) AS q FROM sc) " +
-        "SELECT CAST(count(*) AS BIGINT) AS n_docs, " +
-        "CAST(coalesce(sum(n), 0) AS BIGINT) AS n_tokens, " +
-        "round(avg(n), 4) AS avg_doc_tokens, " +
-        "CASE WHEN count(*) > 0 THEN round(1.0 - " +
-        "CAST(count(DISTINCT fp) AS DOUBLE) / count(*), 4) ELSE 0.0 END AS exact_dup_frac, " +
-        "round(avg(q), 4) AS avg_quality, " +
-        s"round(avg(CAST(q >= $keepT AS INT)), 4) AS quality_keep_frac, " +
-        "round(avg(CAST(pred_lang = 'en' AS INT)), 4) AS en_frac FROM p"
-    },
-    "q_repetition" ->
-      (s"WITH t AS (SELECT doc_id, $TOKS AS toks FROM documents), " +
-        "r AS (SELECT doc_id, toks, " +
-        "CASE WHEN len(toks) >= 3 THEN list_transform(range(len(toks) - 2), " +
-        "i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3]) " +
-        "ELSE [] END AS sh FROM t) " +
-        "SELECT doc_id, " +
-        "round(CAST(coalesce(list_max(list_transform(list_distinct(toks), " +
-        "x -> len(list_filter(toks, y -> y = x)))), 0) AS DOUBLE) " +
-        "/ greatest(len(toks), 1), 4) AS top_tok_frac, " +
-        "round(CAST(len(sh) - len(list_distinct(sh)) AS DOUBLE) " +
-        "/ greatest(len(sh), 1), 4) AS dup_3gram_frac FROM r"),
-    "q_surprisal" ->
-      (s"WITH terms AS (SELECT doc_id, unnest($TOKS) AS word FROM documents), " +
-        "tf AS (SELECT word, count(*) AS cnt FROM terms GROUP BY word), " +
-        "n AS (SELECT CAST(sum(cnt) AS DOUBLE) AS n_total FROM tf) " +
-        "SELECT doc_id, count(*) AS n_tokens, " +
-        "round(avg(-ln(cnt / n_total)), 4) AS avg_surprisal " +
-        "FROM terms JOIN tf USING (word), n GROUP BY doc_id"),
-    // the q_cms md5-slice cell replay feeding the q_surprisal scoring
-    // shape: estimates per distinct word (min over d cells, floored at
-    // 1), exact token total, same rounding contract
-    "q_surprisal_cms" ->
-      (s"WITH terms AS (SELECT doc_id, unnest($TOKS) AS word FROM documents), " +
-        "n AS (SELECT CAST(count(*) AS DOUBLE) AS n_total FROM terms), " +
-        "ds AS (SELECT CAST(range AS INT) AS d FROM range(4)), " +
-        "cells AS (SELECT d, CAST(('0x' || substring(md5('cm0-' || word), 1 + 8 * d, 8)) " +
-        "AS UBIGINT) % 64 AS bucket, count(*) AS cnt FROM terms, ds GROUP BY 1, 2), " +
-        "dict AS (SELECT DISTINCT word FROM terms), " +
-        "pb AS (SELECT word, d, CAST(('0x' || substring(md5('cm0-' || word), 1 + 8 * d, 8)) " +
-        "AS UBIGINT) % 64 AS bucket FROM dict, ds), " +
-        "est AS (SELECT word, greatest(CAST(min(coalesce(cnt, 0)) AS BIGINT), 1) AS est " +
-        "FROM pb LEFT JOIN cells USING (d, bucket) GROUP BY word) " +
-        "SELECT doc_id, count(*) AS n_tokens, " +
-        "round(avg(-ln(est / n_total)), 4) AS avg_surprisal " +
-        "FROM terms JOIN est USING (word), n GROUP BY doc_id"),
-    // the q_surprisal per-doc rows (rounded avgs — part of the contract)
-    // re-aggregated to one corpus row with octet_length denominators
-    "q_bpb" ->
-      (s"WITH terms AS (SELECT doc_id, unnest($TOKS) AS word FROM documents), " +
-        "tf AS (SELECT word, count(*) AS cnt FROM terms GROUP BY word), " +
-        "n AS (SELECT CAST(sum(cnt) AS DOUBLE) AS n_total FROM tf), " +
-        "ss AS (SELECT doc_id, count(*) AS n_tokens, " +
-        "round(avg(-ln(cnt / n_total)), 4) AS avg_surprisal " +
-        "FROM terms JOIN tf USING (word), n GROUP BY doc_id), " +
-        "b AS (SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS bytes FROM documents) " +
-        "SELECT count(*) AS n_docs, CAST(sum(ss.n_tokens) AS BIGINT) AS total_tokens, " +
-        "CAST(sum(b.bytes) AS BIGINT) AS total_bytes, " +
-        "round(sum(ss.n_tokens * ss.avg_surprisal) / sum(ss.n_tokens) / ln(2), 4) AS bits_per_token, " +
-        "round(sum(ss.n_tokens * ss.avg_surprisal) / sum(b.bytes) / ln(2), 4) AS bits_per_byte " +
-        "FROM ss JOIN b USING (doc_id)"),
-    // (gram, source) occupancy self-joined per 8-gram (the q_decontam
-    // gram CTE idiom); diagonal = within-source multiplicity >= 2
-    "q_dup_matrix" ->
-      (s"WITH t AS (SELECT source, $TOKS AS toks FROM documents), " +
-        "ti AS (SELECT source, toks, unnest(range(greatest(len(toks)-7, 0))) AS i FROM t), " +
-        "g0 AS (SELECT source, array_to_string(toks[i+1:i+8], ' ') AS g FROM ti), " +
-        "g AS (SELECT g, source, count(*) AS n FROM g0 GROUP BY g, source) " +
-        "SELECT a.source AS source_a, b.source AS source_b, " +
-        "count(*) AS n_shared_grams FROM g a JOIN g b ON a.g = b.g " +
-        "WHERE a.source < b.source OR (a.source = b.source AND a.n >= 2) " +
-        "GROUP BY 1, 2"),
-    // the Spark side must reproduce these from ACTUAL written files:
-    // exactly 4 range-partitioned files, every corpus row present, and
-    // strictly disjoint per-file doc_id ranges (0 overlaps)
-    "q_shard_manifest" ->
-      "SELECT 4 AS n_files, count(*) AS total_rows, 0 AS n_overlaps FROM documents",
-    // planner replay: self-join cumulative offset, integer-division bins
-    "q_compaction" ->
-      ("WITH m AS (SELECT source, CAST(sum(n_chars) AS BIGINT) AS bytes " +
-        "FROM documents GROUP BY source), " +
-        "c AS (SELECT a.source, a.bytes, CAST(coalesce(sum(b.bytes), 0) AS BIGINT) AS cum " +
-        "FROM m a LEFT JOIN m b ON b.source < a.source GROUP BY a.source, a.bytes) " +
-        "SELECT source, bytes, CAST(cum // 15000 AS INT) AS grp FROM c"),
-    // the q_surprisal chain + a distinct-score cumulative distribution
-    // (ROWS frame explicit; the score dictionary has no peer rows) +
-    // per-bucket hash thresholds interpolated from the shared constants
-    "q_ppl_mix" -> {
-      val caseThr = PPL_RATES.zipWithIndex.map { case (r, i) =>
-        s"WHEN ${i + 1} THEN '${ops.Sampling.hexThreshold(r)}'"
-      }.mkString(" ")
-      s"WITH terms AS (SELECT doc_id, unnest($TOKS) AS word FROM documents), " +
-        "tf AS (SELECT word, count(*) AS cnt FROM terms GROUP BY word), " +
-        "n AS (SELECT CAST(sum(cnt) AS DOUBLE) AS n_total FROM tf), " +
-        "s AS (SELECT doc_id, round(avg(-ln(cnt / n_total)), 4) AS avg_surprisal " +
-        "FROM terms JOIN tf USING (word), n GROUP BY doc_id), " +
-        "cnts AS (SELECT avg_surprisal, count(*) AS c FROM s GROUP BY 1), " +
-        "na AS (SELECT CAST(sum(c) AS DOUBLE) AS n_all FROM cnts), " +
-        "cum AS (SELECT avg_surprisal, c, sum(c) OVER (ORDER BY avg_surprisal " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM cnts), " +
-        s"b AS (SELECT avg_surprisal, CAST(floor((cum - c) * ${PPL_RATES.length} " +
-        "/ n_all) AS INT) + 1 AS bucket FROM cum, na) " +
-        "SELECT s.doc_id, s.avg_surprisal, b.bucket " +
-        "FROM s JOIN b USING (avg_surprisal) " +
-        "WHERE '0' || substring(md5('ppl' || CAST(doc_id AS VARCHAR)), 1, 8) < " +
-        s"CASE b.bucket $caseThr END"
-    },
-    "q_surprisal2" ->
-      (s"WITH t AS (SELECT doc_id, $TOKS AS toks FROM documents), " +
-        "p AS (SELECT doc_id, unnest(toks[1:len(toks)-1]) AS prev, " +
-        "unnest(toks[2:len(toks)]) AS word FROM t WHERE len(toks) >= 2), " +
-        "c2 AS (SELECT prev, word, count(*) AS cnt2 FROM p GROUP BY prev, word), " +
-        "c1 AS (SELECT prev, sum(cnt2) AS cnt1 FROM c2 GROUP BY prev) " +
-        "SELECT doc_id, count(*) AS n_bigrams, " +
-        "round(avg(-ln(CAST(cnt2 AS DOUBLE) / cnt1)), 4) AS avg_surprisal2 " +
-        "FROM p JOIN c2 USING (prev, word) JOIN c1 USING (prev) GROUP BY doc_id"),
-    // counts from the even-id train half; CASE = seen-pair ratio vs
-    // alpha-scaled unigram backoff, word-OOV bigrams excluded
-    "q_surprisal_bo" ->
-      (s"WITH tr AS (SELECT doc_id, $TOKS AS toks FROM documents WHERE doc_id % 2 = 0), " +
-        "trp AS (SELECT unnest(toks[1:len(toks)-1]) AS prev, " +
-        "unnest(toks[2:len(toks)]) AS word FROM tr WHERE len(toks) >= 2), " +
-        "c2 AS (SELECT prev, word, count(*) AS cnt2 FROM trp GROUP BY prev, word), " +
-        "c1 AS (SELECT prev, sum(cnt2) AS cnt1 FROM c2 GROUP BY prev), " +
-        "u AS (SELECT unnest(toks) AS word FROM tr), " +
-        "uw AS (SELECT word, count(*) AS cntw FROM u GROUP BY word), " +
-        "nt AS (SELECT CAST(sum(cntw) AS DOUBLE) AS n_total FROM uw), " +
-        s"al AS (SELECT doc_id, $TOKS AS toks FROM documents), " +
-        "sp AS (SELECT doc_id, unnest(toks[1:len(toks)-1]) AS prev, " +
-        "unnest(toks[2:len(toks)]) AS word FROM al WHERE len(toks) >= 2), " +
-        "j AS (SELECT sp.doc_id, CASE WHEN c2.cnt2 IS NOT NULL " +
-        "THEN CAST(c2.cnt2 AS DOUBLE) / c1.cnt1 " +
-        "ELSE 0.4 * (CAST(uw.cntw AS DOUBLE) / n_total) END AS s " +
-        "FROM sp LEFT JOIN c2 USING (prev, word) LEFT JOIN c1 USING (prev) " +
-        "LEFT JOIN uw USING (word), nt) " +
-        "SELECT doc_id, CAST(count(*) AS BIGINT) AS n_scored, " +
-        "round(avg(-ln(s)), 4) AS avg_surprisal_bo " +
-        "FROM j WHERE s IS NOT NULL GROUP BY doc_id"),
-    "q_lang_id" -> s"WITH $LANGID_CTES SELECT doc_id, pred_lang FROM pred",
-    "q_lang_confusion" ->
-      (s"WITH $LANGID_CTES SELECT lang, pred_lang, count(*) AS cnt " +
-        "FROM pred GROUP BY lang, pred_lang"),
-    // script-mix replay: same injection, RE2 script classes (\p{Latin}
-    // vs Java's \p{IsLatin} — same semantics), length-difference counts,
-    // the same dominant CASE order = lexicographic tie-break
-    "q_script_mix" ->
-      ("WITH inj AS (SELECT doc_id, text || " +
-        "CASE WHEN doc_id % 4 = 0 THEN ' 机器学习模型训练数据' ELSE '' END || " +
-        "CASE WHEN doc_id % 6 = 0 THEN ' обучение моделей данных' ELSE '' END " +
-        "AS text FROM documents), " +
-        "c AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS len, " +
-        "CAST(length(text) - length(regexp_replace(text, '\\p{Latin}', '', 'g')) AS BIGINT) AS n_latin, " +
-        "CAST(length(text) - length(regexp_replace(text, '\\p{Han}', '', 'g')) AS BIGINT) AS n_han, " +
-        "CAST(length(text) - length(regexp_replace(text, '\\p{Cyrillic}', '', 'g')) AS BIGINT) AS n_cyrillic, " +
-        "CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS BIGINT) AS n_digit, " +
-        "CAST(length(text) - length(regexp_replace(text, '[ \\t\\n\\r\\f]', '', 'g')) AS BIGINT) AS n_space " +
-        "FROM inj) " +
-        "SELECT doc_id, n_latin, n_han, n_cyrillic, n_digit, n_space, " +
-        "len - n_latin - n_han - n_cyrillic - n_digit - n_space AS n_other, " +
-        "round(n_latin / CAST(greatest(len - n_space, 1) AS DOUBLE), 4) AS latin_frac, " +
-        "round(n_han / CAST(greatest(len - n_space, 1) AS DOUBLE), 4) AS han_frac, " +
-        "round(n_cyrillic / CAST(greatest(len - n_space, 1) AS DOUBLE), 4) AS cyrillic_frac, " +
-        "CASE WHEN greatest(n_latin, n_han, n_cyrillic) = 0 THEN 'none' " +
-        "WHEN n_cyrillic = greatest(n_latin, n_han, n_cyrillic) THEN 'cyrillic' " +
-        "WHEN n_han = greatest(n_latin, n_han, n_cyrillic) THEN 'han' " +
-        "ELSE 'latin' END AS dominant, " +
-        "CAST((CASE WHEN n_latin >= 5 THEN 1 ELSE 0 END + " +
-        "CASE WHEN n_han >= 5 THEN 1 ELSE 0 END + " +
-        "CASE WHEN n_cyrillic >= 5 THEN 1 ELSE 0 END) >= 2 AS INT) AS mixed " +
-        "FROM c"),
-    "q_custom_agg" ->
-      ("SELECT event_type, round(avg(value), 4) AS mean_v, count(*) AS cnt " +
-        "FROM events GROUP BY event_type"),
-    "q_tfidf" ->
-      (s"WITH terms AS (SELECT doc_id, unnest($TOKS) AS word FROM documents), " +
-        "tf AS (SELECT doc_id, word, count(*) AS tf FROM terms GROUP BY doc_id, word), " +
-        "df AS (SELECT word, count(DISTINCT doc_id) AS df FROM terms GROUP BY word), " +
-        "n AS (SELECT count(*) AS n_docs FROM documents), " +
-        "scored AS (SELECT doc_id, tf.word AS word, tf, " +
-        "round(tf * ln(CAST(n_docs AS DOUBLE) / df), 4) AS tfidf, " +
-        "CAST(row_number() OVER (PARTITION BY doc_id ORDER BY tf * ln(CAST(n_docs AS DOUBLE) / df) DESC, tf.word ASC) AS INT) AS rk " +
-        "FROM tf, df, n WHERE tf.word = df.word) " +
-        "SELECT doc_id, word, tfidf, rk FROM scored WHERE rk <= 3"),
-    // valid while per-group n < accuracy=50000 (true through sf0.1):
-    // the sketch is then lossless and equals the exact discrete quantile
-    "q_quantile_sketch" ->
-      ("SELECT event_type, round(quantile_disc(value, 0.5), 4) AS p50, " +
-        "round(quantile_disc(value, 0.9), 4) AS p90 FROM events GROUP BY event_type"),
-    "q_percentiles" ->
-      ("SELECT event_type, round(quantile_cont(value, 0.5), 4) AS median, " +
-        "round(quantile_cont(value, 0.9), 4) AS p90 FROM events GROUP BY event_type"),
-    "q_skew_report" ->
-      ("WITH c AS (SELECT CAST(user_id AS VARCHAR) AS key, count(*) AS cnt " +
-        "FROM events GROUP BY 1), " +
-        "s AS (SELECT CAST(sum(cnt) AS BIGINT) AS n_rows, count(*) AS n_keys, " +
-        "round(quantile_cont(cnt, 0.5), 4) AS p50_cnt, " +
-        "round(quantile_cont(cnt, 0.99), 4) AS p99_cnt FROM c), " +
-        "t AS (SELECT key, cnt, CAST(row_number() OVER " +
-        "(ORDER BY cnt DESC, key) AS INT) AS rank FROM c) " +
-        "SELECT rank, key, cnt, round(CAST(cnt AS DOUBLE) / n_rows, 6) AS share, " +
-        "n_rows, n_keys, p50_cnt, p99_cnt FROM t, s WHERE rank <= 10"),
-    "q_rollup" ->
-      ("SELECT l_returnflag, l_linestatus, round(sum(l_extendedprice), 2) AS total, " +
-        "count(*) AS cnt FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)"),
-    "q_running_sum" ->
-      ("SELECT user_id, event_id, round(sum(value) OVER (PARTITION BY user_id " +
-        "ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING), 4) AS running FROM events"),
-    "q_json_props" ->
-      ("SELECT event_type, count(*) AS cnt, " +
-        "round(avg(CAST(regexp_extract(props, '\"k\": (\\d+)', 1) AS BIGINT)), 4) AS avg_k " +
-        "FROM events GROUP BY event_type"),
-    "q_pagerank" -> pageRankSql(3, "0.85"),
-    "q_cosine" ->
-      ("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings), " +
-        "q AS (SELECT emb AS q_emb FROM e WHERE vec_id = 0) " +
-        "SELECT vec_id, round(list_cosine_similarity(emb, q_emb), 4) AS cos " +
-        "FROM e, q WHERE vec_id <> 0"),
-    // the ±1/√16 matrix replayed from the same md5-parity formula the
-    // kernel bakes in (first hex digit of md5('rp-i-j'))
-    "q_rand_proj" ->
-      ("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings), " +
-        "w AS (SELECT i.range AS i, j.range AS j, " +
-        "(CASE WHEN CAST(('0x' || substring(md5('rp-' || i.range || '-' || j.range), 1, 1)) AS UBIGINT) % 2 = 0 " +
-        "THEN 1.0 ELSE -1.0 END) / sqrt(16.0) AS w FROM range(64) i, range(16) j), " +
-        "t AS (SELECT e.vec_id, w.j, sum(e.emb[w.i + 1] * w.w) AS v " +
-        "FROM e, w GROUP BY e.vec_id, w.j) " +
-        "SELECT vec_id, CAST(j AS INT) AS dim_idx, round(v, 4) + 0.0 AS value FROM t"),
-    "q_nn" ->
-      ("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings), " +
-        "p AS (SELECT a.vec_id AS a_id, b.vec_id AS b_id, " +
-        "list_cosine_similarity(a.emb, b.emb) AS cos FROM e a JOIN e b ON a.vec_id <> b.vec_id) " +
-        "SELECT a_id, b_id AS nn_id, round(cos, 4) AS cos FROM (" +
-        "SELECT a_id, b_id, cos, row_number() OVER (PARTITION BY a_id ORDER BY cos DESC, b_id ASC) AS rn " +
-        "FROM p) WHERE rn = 1"),
-    // merge-sort replay of the desc-order insertion: placeholders key
-    // (offset, 0, media_id), tokens (index, 1, -1) — placeholder-before-
-    // token at equal offset, equal-offset media in ascending id order
-    "q_interleave" ->
-      ("WITH im AS (SELECT unnest(range(300)) AS media_id), " +
-        "a AS (SELECT media_id % 50 AS doc_id, media_id FROM im WHERE media_id % 3 = 0), " +
-        s"t AS (SELECT doc_id, text, $TOKS AS toks FROM documents), " +
-        "tok AS (SELECT doc_id, toks, unnest(range(len(toks))) AS i FROM t), " +
-        "trow AS (SELECT doc_id, CAST(i AS BIGINT) AS pos, 1 AS flag, " +
-        "CAST(-1 AS BIGINT) AS mid, toks[i+1] AS tok FROM tok), " +
-        "prow AS (SELECT a.doc_id, ((a.media_id % 1000003) * 7919) % (len(t.toks) + 1) AS pos, " +
-        "0 AS flag, a.media_id AS mid, '<image>' AS tok FROM a JOIN t USING (doc_id)), " +
-        "allr AS (SELECT * FROM trow UNION ALL SELECT * FROM prow), " +
-        "agg AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY pos, flag, mid) AS text2 " +
-        "FROM allr GROUP BY doc_id), " +
-        "ni AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_images FROM a GROUP BY doc_id) " +
-        "SELECT t.doc_id, coalesce(ni.n_images, 0) AS n_images, " +
-        "CASE WHEN ni.doc_id IS NULL THEN t.text ELSE coalesce(agg.text2, '') END AS text " +
-        "FROM t LEFT JOIN ni USING (doc_id) LEFT JOIN agg USING (doc_id)"),
-    // sign-bit block = Σ 2^i over non-negative components; intra-block
-    // lower-id pairs exactly rescored; verdict on the ROUNDED cosine
-    "q_semdedup" ->
-      ("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "b AS (SELECT vec_id, v, " +
-        s"CAST(${signBlockSql("v", 6)} AS BIGINT) AS block " +
-        "FROM e WHERE sqrt(list_dot_product(v, v)) > 0), " +
-        "p AS (SELECT a.vec_id AS a_id, " +
-        "round(list_cosine_similarity(a.v, b2.v), 4) AS c " +
-        "FROM b a JOIN b b2 ON a.block = b2.block AND b2.vec_id < a.vec_id), " +
-        "m AS (SELECT a_id, max(c) AS mx FROM p GROUP BY a_id) " +
-        "SELECT b.vec_id, b.block, m.mx AS max_lower_cos, " +
-        "CAST(CASE WHEN coalesce(m.mx, -2) >= 0.3 THEN 1 ELSE 0 END AS INT) AS is_dup " +
-        "FROM b LEFT JOIN m ON b.vec_id = m.a_id"),
-    // bounded semdedup: full relational replay of the hierarchical
-    // argmax refine (level-2 key = blk*4096 + argmax of the masked abs
-    // array; masked positions read -1, which no |x| ties), occupancy
-    // split at maxBlock=16, exact lower-pairs on cold leaves, anchor
-    // (min-id) comparison on hot leaves. Blocking reads the RAW
-    // |components| in both engines — no normalization ulp can flip an
-    // argmax tie.
-    "q_semdedup_hot" ->
-      ("WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "rep AS (SELECT vec_id + 10000 * CAST(r.range AS BIGINT) AS vec_id, v " +
-        "FROM e0, range(1, 26) r WHERE vec_id < 8), " +
-        "c0 AS (SELECT vec_id, v FROM e0 UNION ALL SELECT vec_id, v FROM rep), " +
-        "u AS (SELECT vec_id, v, list_transform(v, x -> abs(x)) AS a FROM c0 " +
-        "WHERE sqrt(list_dot_product(v, v)) > 0), " +
-        "p1 AS (SELECT vec_id, v, a, list_position(a, list_max(a)) AS p FROM u), " +
-        "b1 AS MATERIALIZED (SELECT vec_id, v, CAST(p AS BIGINT) AS blk, " +
-        "list_concat(list_concat(a[1:p-1], [CAST(-1 AS DOUBLE)]), a[p+1:len(a)]) AS a " +
-        "FROM p1), " +
-        "c1 AS (SELECT blk, count(*) AS c FROM b1 GROUP BY blk), " +
-        "p2 AS (SELECT b1.vec_id, b1.v, b1.blk, c1.c, " +
-        "list_position(b1.a, list_max(b1.a)) AS p FROM b1 JOIN c1 USING (blk)), " +
-        "b2 AS MATERIALIZED (SELECT vec_id, v, CASE WHEN c > 16 " +
-        "THEN blk * 4096 + CAST(p AS BIGINT) ELSE blk END AS block FROM p2), " +
-        "c2 AS (SELECT block, count(*) AS c FROM b2 GROUP BY block), " +
-        "bb AS MATERIALIZED (SELECT b2.vec_id, b2.v, b2.block, " +
-        "CASE WHEN c2.c > 16 THEN 1 ELSE 0 END AS hot FROM b2 JOIN c2 USING (block)), " +
-        "pc AS (SELECT a.vec_id AS a_id, round(list_cosine_similarity(a.v, b.v), 4) AS cc " +
-        "FROM bb a JOIN bb b ON a.block = b.block AND b.vec_id < a.vec_id " +
-        "AND a.hot = 0 AND b.hot = 0), " +
-        "mc AS (SELECT a_id, max(cc) AS mx FROM pc GROUP BY a_id), " +
-        "an AS (SELECT block, min(vec_id) AS aid FROM bb WHERE hot = 1 GROUP BY block), " +
-        "av AS (SELECT an.block, an.aid, bb.v AS ae FROM an " +
-        "JOIN bb ON bb.block = an.block AND bb.vec_id = an.aid), " +
-        "hd AS (SELECT bb.vec_id, bb.block, CASE WHEN bb.vec_id = av.aid THEN NULL " +
-        "ELSE round(list_cosine_similarity(bb.v, av.ae), 4) END AS mx " +
-        "FROM bb JOIN av ON bb.block = av.block WHERE bb.hot = 1) " +
-        "SELECT bb.vec_id, bb.block, CAST(bb.hot AS INT) AS hot, mc.mx AS max_lower_cos, " +
-        "CAST(CASE WHEN coalesce(mc.mx, -2) >= 0.3 THEN 1 ELSE 0 END AS INT) AS is_dup " +
-        "FROM bb LEFT JOIN mc ON bb.vec_id = mc.a_id WHERE bb.hot = 0 " +
-        "UNION ALL SELECT vec_id, block, CAST(1 AS INT) AS hot, mx AS max_lower_cos, " +
-        "CAST(CASE WHEN coalesce(mx, -2) >= 0.3 THEN 1 ELSE 0 END AS INT) AS is_dup " +
-        "FROM hd"),
-    // incremental bounded semdedup: snapshot boundedBlocked replay (the
-    // q_semdedup_hot chain minus replicas), then the incremental
-    // semantics — refinement ROUTING from the snapshot's refined set,
-    // combined-occupancy hot split, global-min anchors, cold lower-pairs
-    // probe over snapshot ∪ increment — all relational
-    "q_semdedup_hot_incr" ->
-      ("WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "u AS (SELECT vec_id, v, list_transform(v, x -> abs(x)) AS a FROM e0 " +
-        "WHERE sqrt(list_dot_product(v, v)) > 0), " +
-        "p1 AS (SELECT vec_id, v, a, list_position(a, list_max(a)) AS p FROM u), " +
-        "b1 AS MATERIALIZED (SELECT vec_id, v, CAST(p AS BIGINT) AS blk, " +
-        "list_concat(list_concat(a[1:p-1], [CAST(-1 AS DOUBLE)]), a[p+1:len(a)]) AS a " +
-        "FROM p1), " +
-        "c1 AS (SELECT blk, count(*) AS c FROM b1 GROUP BY blk), " +
-        "p2 AS (SELECT b1.vec_id, b1.v, b1.blk, c1.c, " +
-        "list_position(b1.a, list_max(b1.a)) AS p FROM b1 JOIN c1 USING (blk)), " +
-        "b2 AS MATERIALIZED (SELECT vec_id, v, CASE WHEN c > 16 " +
-        "THEN blk * 4096 + CAST(p AS BIGINT) ELSE blk END AS block FROM p2), " +
-        "c2 AS (SELECT block, count(*) AS c FROM b2 GROUP BY block), " +
-        "bb AS MATERIALIZED (SELECT b2.vec_id, b2.v, b2.block, " +
-        "CASE WHEN c2.c > 16 THEN 1 ELSE 0 END AS hot FROM b2 JOIN c2 USING (block)), " +
-        "inc0 AS (SELECT vec_id + 10000 * CAST(r.range AS BIGINT) AS vec_id, v " +
-        "FROM e0, range(1, 26) r WHERE vec_id < 8 " +
-        "UNION ALL SELECT vec_id + 20000, v FROM e0 WHERE vec_id >= 490), " +
-        "iu AS (SELECT vec_id, v, list_transform(v, x -> abs(x)) AS a FROM inc0 " +
-        "WHERE sqrt(list_dot_product(v, v)) > 0), " +
-        "ip AS (SELECT vec_id, v, a, list_position(a, list_max(a)) AS p FROM iu), " +
-        "ib AS (SELECT vec_id, v, CAST(p AS BIGINT) AS blk, " +
-        "list_concat(list_concat(a[1:p-1], [CAST(-1 AS DOUBLE)]), a[p+1:len(a)]) AS a " +
-        "FROM ip), " +
-        "ir AS MATERIALIZED (SELECT ib.vec_id, ib.v, " +
-        "CASE WHEN c1.c > 16 THEN ib.blk * 4096 + " +
-        "CAST(list_position(ib.a, list_max(ib.a)) AS BIGINT) ELSE ib.blk END AS block " +
-        "FROM ib LEFT JOIN c1 ON ib.blk = c1.blk), " +
-        "ic AS (SELECT block, count(*) AS icnt, min(vec_id) AS imin FROM ir GROUP BY block), " +
-        "ss AS (SELECT block, count(*) AS sc, min(vec_id) AS smin, max(hot) AS shot " +
-        "FROM bb GROUP BY block), " +
-        "plan AS MATERIALIZED (SELECT ic.block, " +
-        "CASE WHEN coalesce(ss.shot, 0) = 1 OR coalesce(ss.sc, 0) + ic.icnt > 16 " +
-        "THEN 1 ELSE 0 END AS hot, " +
-        "least(coalesce(ss.smin, 9223372036854775807), ic.imin) AS aid " +
-        "FROM ic LEFT JOIN ss USING (block)), " +
-        "allrows AS (SELECT vec_id, v, block FROM bb " +
-        "UNION ALL SELECT vec_id, v, block FROM ir), " +
-        "av AS (SELECT p.block, p.aid, x.v AS ae FROM plan p " +
-        "JOIN allrows x ON x.block = p.block AND x.vec_id = p.aid WHERE p.hot = 1), " +
-        "hd AS (SELECT ir.vec_id, ir.block, CASE WHEN ir.vec_id = av.aid THEN NULL " +
-        "ELSE round(list_cosine_similarity(ir.v, av.ae), 4) END AS mx " +
-        "FROM ir JOIN av ON ir.block = av.block), " +
-        "ci AS MATERIALIZED (SELECT ir.vec_id, ir.v, ir.block FROM ir " +
-        "JOIN plan ON ir.block = plan.block WHERE plan.hot = 0), " +
-        "pc AS (SELECT a.vec_id AS a_id, round(list_cosine_similarity(a.v, x.v), 4) AS cc " +
-        "FROM ci a JOIN (SELECT vec_id, v, block FROM bb " +
-        "UNION ALL SELECT vec_id, v, block FROM ci) x " +
-        "ON x.block = a.block AND x.vec_id < a.vec_id), " +
-        "mc AS (SELECT a_id, max(cc) AS mx FROM pc GROUP BY a_id) " +
-        "SELECT ci.vec_id, ci.block, CAST(0 AS INT) AS hot, mc.mx AS max_lower_cos, " +
-        "CAST(CASE WHEN coalesce(mc.mx, -2) >= 0.3 THEN 1 ELSE 0 END AS INT) AS is_dup " +
-        "FROM ci LEFT JOIN mc ON ci.vec_id = mc.a_id " +
-        "UNION ALL SELECT vec_id, block, CAST(1 AS INT) AS hot, mx AS max_lower_cos, " +
-        "CAST(CASE WHEN coalesce(mx, -2) >= 0.3 THEN 1 ELSE 0 END AS INT) AS is_dup " +
-        "FROM hd"),
-    "q_ivf_topk" ->
-      ("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings), " +
-        "q AS (SELECT emb AS q_emb FROM e WHERE vec_id = 0) " +
-        "SELECT vec_id, round(list_cosine_similarity(emb, q_emb), 4) AS cos " +
-        "FROM e, q WHERE vec_id <> 0 ORDER BY cos DESC, vec_id ASC LIMIT 10"),
-    // full-coverage IVF-PQ ≡ brute force after the exact rescore — the
-    // q_ivf_topk replay verbatim
-    "q_ivfpq_topk" ->
-      ("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings), " +
-        "q AS (SELECT emb AS q_emb FROM e WHERE vec_id = 0) " +
-        "SELECT vec_id, round(list_cosine_similarity(emb, q_emb), 4) AS cos " +
-        "FROM e, q WHERE vec_id <> 0 ORDER BY cos DESC, vec_id ASC LIMIT 10"),
-    "q_ivf_topk_multi" ->
-      ("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings), " +
-        "q AS (SELECT vec_id AS q_id, emb AS q_emb FROM e WHERE vec_id < 100), " +
-        "p AS (SELECT q_id, vec_id, round(list_cosine_similarity(emb, q_emb), 4) AS c, " +
-        "CAST(row_number() OVER (PARTITION BY q_id " +
-        "ORDER BY round(list_cosine_similarity(emb, q_emb), 4) DESC, vec_id ASC) AS INT) AS rk " +
-        "FROM e, q WHERE vec_id <> q_id) " +
-        "SELECT q_id, vec_id, c AS cos, rk FROM p WHERE rk <= 10"),
-    // exact under full-coverage shortlist ⇒ the q_ivf_topk_multi replay
-    "q_ivf_quantized" ->
-      ("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings), " +
-        "q AS (SELECT vec_id AS q_id, emb AS q_emb FROM e WHERE vec_id < 100), " +
-        "p AS (SELECT q_id, vec_id, round(list_cosine_similarity(emb, q_emb), 4) AS c, " +
-        "CAST(row_number() OVER (PARTITION BY q_id " +
-        "ORDER BY round(list_cosine_similarity(emb, q_emb), 4) DESC, vec_id ASC) AS INT) AS rk " +
-        "FROM e, q WHERE vec_id <> q_id) " +
-        "SELECT q_id, vec_id, c AS cos, rk FROM p WHERE rk <= 10"),
-    // full margin-criterion replay: exact top-4 forward (probe → corpus),
-    // neighbourhood SUMS of rounded cosines (grid-exact — the marginMine
-    // numeric-determinism note), ratio margin 2k·cos/(s_fwd+s_bwd) on the
-    // rank-1 pair
-    "q_margin_knn" ->
-      ("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings), " +
-        "a AS (SELECT vec_id AS q_id, emb AS q_emb FROM e WHERE vec_id % 7 = 0), " +
-        "b AS (SELECT vec_id, emb FROM e WHERE vec_id % 7 <> 0), " +
-        "fp AS (SELECT q_id, vec_id, round(list_cosine_similarity(emb, q_emb), 4) AS cos, " +
-        "CAST(row_number() OVER (PARTITION BY q_id " +
-        "ORDER BY round(list_cosine_similarity(emb, q_emb), 4) DESC, vec_id ASC) AS INT) AS rk " +
-        "FROM b, a) , " +
-        "fwd AS (SELECT * FROM fp WHERE rk <= 4), " +
-        "af AS (SELECT q_id, round(sum(cos), 4) AS s_fwd FROM fwd GROUP BY q_id), " +
-        "cand AS (SELECT DISTINCT vec_id FROM fwd), " +
-        "bp AS (SELECT b.vec_id AS vec_id, a.q_id AS p_id, " +
-        "round(list_cosine_similarity(a.q_emb, b.emb), 4) AS cos, " +
-        "CAST(row_number() OVER (PARTITION BY b.vec_id " +
-        "ORDER BY round(list_cosine_similarity(a.q_emb, b.emb), 4) DESC, a.q_id ASC) AS INT) AS rk " +
-        "FROM b JOIN cand USING (vec_id), a), " +
-        "ab AS (SELECT vec_id, round(sum(cos), 4) AS s_bwd FROM bp WHERE rk <= 4 GROUP BY vec_id) " +
-        "SELECT f.q_id, f.vec_id, f.cos, af.s_fwd, ab.s_bwd, " +
-        "round(8 * f.cos / (af.s_fwd + ab.s_bwd), 4) AS margin " +
-        "FROM fwd f JOIN af USING (q_id) JOIN ab USING (vec_id) " +
-        "WHERE f.rk = 1 AND round(8 * f.cos / (af.s_fwd + ab.s_bwd), 4) >= 1.0"),
-    // k-occurrence counts over the same exact forward kNN frame
-    "q_hubness" ->
-      ("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings), " +
-        "a AS (SELECT vec_id AS q_id, emb AS q_emb FROM e WHERE vec_id % 7 = 0), " +
-        "b AS (SELECT vec_id, emb FROM e WHERE vec_id % 7 <> 0), " +
-        "fp AS (SELECT q_id, vec_id, round(list_cosine_similarity(emb, q_emb), 4) AS cos, " +
-        "CAST(row_number() OVER (PARTITION BY q_id " +
-        "ORDER BY round(list_cosine_similarity(emb, q_emb), 4) DESC, vec_id ASC) AS INT) AS rk " +
-        "FROM b, a) " +
-        "SELECT vec_id, count(*) AS hits, min(rk) AS best_rk, " +
-        "round(sum(cos), 4) AS sum_cos FROM fp WHERE rk <= 4 GROUP BY vec_id"),
-    // the q_ivf_topk_multi replay with the label inequality inside the
-    // candidate set (filter BEFORE ranking): k nearest negatives exactly
-    "q_hard_negatives" ->
-      ("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb, label " +
-        "FROM embeddings), " +
-        "q AS (SELECT vec_id AS q_id, emb AS q_emb, label AS q_lab " +
-        "FROM e WHERE vec_id < 100), " +
-        "p AS (SELECT q_id, vec_id AS neg_id, e.label AS neg_label, " +
-        "round(list_cosine_similarity(emb, q_emb), 4) AS c, " +
-        "CAST(row_number() OVER (PARTITION BY q_id " +
-        "ORDER BY round(list_cosine_similarity(emb, q_emb), 4) DESC, vec_id ASC) " +
-        "AS INT) AS rk " +
-        "FROM e, q WHERE vec_id <> q_id AND e.label <> q_lab) " +
-        "SELECT q_id, neg_id, neg_label, c AS cos, rk FROM p WHERE rk <= 5"),
-    // the q_hard_negatives replay twice (label =, label <>), top-1 each,
-    // inner-joined per anchor; margin over the rounded cosines
-    "q_triplets" ->
-      ("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb, label " +
-        "FROM embeddings), " +
-        "q AS (SELECT vec_id AS q_id, emb AS q_emb, label AS q_lab " +
-        "FROM e WHERE vec_id < 100), " +
-        "p AS (SELECT q_id, vec_id, e.label AS lab, q_lab, " +
-        "round(list_cosine_similarity(emb, q_emb), 4) AS c " +
-        "FROM e, q WHERE vec_id <> q_id), " +
-        "pos AS (SELECT q_id, vec_id AS pos_id, c AS pos_cos FROM " +
-        "(SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY c DESC, " +
-        "vec_id ASC) AS rk FROM p WHERE lab = q_lab) WHERE rk = 1), " +
-        "neg AS (SELECT q_id, vec_id AS neg_id, c AS neg_cos FROM " +
-        "(SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY c DESC, " +
-        "vec_id ASC) AS rk FROM p WHERE lab <> q_lab) WHERE rk = 1) " +
-        "SELECT q_id, pos_id, pos_cos, neg_id, neg_cos, " +
-        "round(pos_cos - neg_cos, 4) AS margin " +
-        "FROM pos JOIN neg USING (q_id)"),
-    "q_decontam" ->
-      (s"WITH tr AS (SELECT doc_id, $TOKS AS toks FROM documents WHERE doc_id % 97 <> 0), " +
-        s"ev AS (SELECT $TOKS AS toks FROM documents WHERE doc_id % 97 = 0), " +
-        "evi AS (SELECT toks, unnest(range(greatest(len(toks)-2, 0))) AS i FROM ev), " +
-        "evg AS (SELECT DISTINCT array_to_string(toks[i+1:i+3], ' ') AS g FROM evi), " +
-        "tri AS (SELECT doc_id, toks, unnest(range(greatest(len(toks)-2, 0))) AS i FROM tr), " +
-        "trg AS (SELECT doc_id, array_to_string(toks[i+1:i+3], ' ') AS g FROM tri), " +
-        "m AS (SELECT doc_id, count(DISTINCT g) AS nc FROM trg JOIN evg USING (g) GROUP BY doc_id) " +
-        "SELECT tr.doc_id, coalesce(m.nc, 0) AS n_contam, " +
-        "CAST(coalesce(m.nc, 0) > 0 AS INT) AS contaminated " +
-        "FROM tr LEFT JOIN m USING (doc_id)"),
-    // graded decontam over the same gram CTEs, + per-doc distinct-gram
-    // denominator
-    "q_contam_frac" ->
-      (s"WITH tr AS (SELECT doc_id, $TOKS AS toks FROM documents WHERE doc_id % 97 <> 0), " +
-        s"ev AS (SELECT $TOKS AS toks FROM documents WHERE doc_id % 97 = 0), " +
-        "evi AS (SELECT toks, unnest(range(greatest(len(toks)-2, 0))) AS i FROM ev), " +
-        "evg AS (SELECT DISTINCT array_to_string(toks[i+1:i+3], ' ') AS g FROM evi), " +
-        "tri AS (SELECT doc_id, toks, unnest(range(greatest(len(toks)-2, 0))) AS i FROM tr), " +
-        "trg AS (SELECT doc_id, array_to_string(toks[i+1:i+3], ' ') AS g FROM tri), " +
-        "ng AS (SELECT doc_id, count(DISTINCT g) AS ng FROM trg GROUP BY doc_id), " +
-        "m AS (SELECT doc_id, count(DISTINCT g) AS nc FROM trg JOIN evg USING (g) GROUP BY doc_id) " +
-        "SELECT tr.doc_id, CAST(coalesce(ng.ng, 0) AS BIGINT) AS n_grams, " +
-        "CAST(coalesce(m.nc, 0) AS BIGINT) AS n_contam, " +
-        "round(CASE WHEN coalesce(ng.ng, 0) > 0 " +
-        "THEN CAST(coalesce(m.nc, 0) AS DOUBLE) / ng.ng ELSE 0 END, 4) AS contam_frac " +
-        "FROM tr LEFT JOIN ng USING (doc_id) LEFT JOIN m USING (doc_id)"),
-    // the argmax-blocked embedding chain (shared CTEs with the
-    // q_semdedup_text oracle) split into train/eval populations by the
-    // %97 convention, block-joined, max rounded cosine per train doc
-    "q_sem_decontam" ->
-      (s"WITH ${argmaxBlockedCtes(64)}, " +
-        "tr AS (SELECT * FROM b WHERE vec_id % 97 <> 0), " +
-        "ev AS (SELECT * FROM b WHERE vec_id % 97 = 0), " +
-        "p AS (SELECT tr.vec_id AS a_id, " +
-        "round(list_cosine_similarity(tr.v, ev.v), 4) AS c " +
-        "FROM tr JOIN ev ON tr.block = ev.block), " +
-        "m AS (SELECT a_id, max(c) AS mx FROM p GROUP BY a_id) " +
-        "SELECT tr.vec_id, tr.block, m.mx AS max_probe_cos, " +
-        "CAST(CASE WHEN coalesce(m.mx, -2) >= 0.9 THEN 1 ELSE 0 END AS INT) AS is_contam " +
-        "FROM tr LEFT JOIN m ON tr.vec_id = m.a_id"),
-    // same gram CTEs as q_decontam, then: covered token set = union of
-    // [i, i+3) over matched gram starts; survivors string_agg'd in token
-    // order; untouched docs keep their ORIGINAL text (CASE on hits)
-    "q_decontam_scrub" ->
-      (s"WITH tr AS (SELECT doc_id, text, $TOKS AS toks FROM documents WHERE doc_id % 97 <> 0), " +
-        s"ev AS (SELECT $TOKS AS toks FROM documents WHERE doc_id % 97 = 0), " +
-        "evi AS (SELECT toks, unnest(range(greatest(len(toks)-2, 0))) AS i FROM ev), " +
-        "evg AS (SELECT DISTINCT array_to_string(toks[i+1:i+3], ' ') AS g FROM evi), " +
-        "tri AS (SELECT doc_id, toks, unnest(range(greatest(len(toks)-2, 0))) AS i FROM tr), " +
-        "trg AS (SELECT doc_id, i, array_to_string(toks[i+1:i+3], ' ') AS g FROM tri), " +
-        "m AS (SELECT doc_id, i FROM trg JOIN evg USING (g)), " +
-        "hits AS (SELECT doc_id, count(*) AS n_hits FROM m GROUP BY doc_id), " +
-        "cov AS (SELECT DISTINCT doc_id, unnest(range(i, i+3)) AS j FROM m), " +
-        "tok AS (SELECT doc_id, toks, unnest(range(len(toks))) AS j FROM tr), " +
-        "kept AS (SELECT t.doc_id, t.j, t.toks[t.j+1] AS tok FROM tok t " +
-        "LEFT JOIN cov c ON t.doc_id = c.doc_id AND t.j = c.j WHERE c.doc_id IS NULL), " +
-        "reb AS (SELECT doc_id, count(*) AS n_kept, " +
-        "string_agg(tok, ' ' ORDER BY j) AS txt FROM kept GROUP BY doc_id), " +
-        "tl AS (SELECT doc_id, len(toks) AS n_toks FROM tr) " +
-        "SELECT tr.doc_id, coalesce(hits.n_hits, 0) AS n_hits, " +
-        "CAST(CASE WHEN hits.doc_id IS NULL THEN 0 " +
-        "ELSE tl.n_toks - coalesce(reb.n_kept, 0) END AS BIGINT) AS n_removed, " +
-        "CASE WHEN hits.doc_id IS NULL THEN tr.text " +
-        "ELSE coalesce(reb.txt, '') END AS text " +
-        "FROM tr LEFT JOIN hits USING (doc_id) LEFT JOIN reb USING (doc_id) " +
-        "JOIN tl USING (doc_id)"),
-    // quantizer = floor(x/scale + 0.5), deliberately not round(): engine
-    // round() tie rules differ, floor is bit-identical everywhere
-    "q_quantize" ->
-      ("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "m AS (SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) AS ma FROM e), " +
-        "s AS (SELECT vec_id, v, ma / 127.0 AS sc FROM m " +
-        "WHERE ma > 0 AND NOT isnan(ma) AND NOT isinf(ma)), " +
-        "q AS (SELECT vec_id, sc, v, " +
-        "list_transform(v, x -> floor(x / sc + 0.5) * sc) AS r FROM s), " +
-        "er AS (SELECT vec_id, sc, " +
-        "list_max(list_transform(range(len(v)), i -> abs(v[i+1] - r[i+1]))) AS mx, " +
-        "list_sum(list_transform(range(len(v)), i -> (v[i+1] - r[i+1]) * (v[i+1] - r[i+1]))) " +
-        "/ len(v) AS ms FROM q) " +
-        "SELECT vec_id, round(sc, 6) AS scale, round(mx, 6) AS max_err, " +
-        "round(sqrt(ms), 6) AS rmse FROM er"),
-    // CMS replay: rows 0-3 slice ONE 'cm0-'-salted md5 digest into four
-    // 32-bit words (the engine's 4x-fewer-hashes form), mod-64 cells,
-    // min over the 4 rows with absent cells read as 0
-    "q_cms" ->
-      (s"WITH tk AS (SELECT unnest($TOKS) AS token FROM documents), " +
-        "ds AS (SELECT CAST(range AS INT) AS d FROM range(4)), " +
-        "cells AS (SELECT d, CAST(('0x' || substring(md5('cm0-' || token), 1 + 8 * d, 8)) " +
-        "AS UBIGINT) % 64 AS bucket, count(*) AS cnt FROM tk, ds GROUP BY 1, 2), " +
-        "pr AS (SELECT unnest(['the', 'a', 'table', 'spark', 'window', 'query', " +
-        "'zzznope']) AS token), " +
-        "pb AS (SELECT token, d, CAST(('0x' || substring(md5('cm0-' || token), 1 + 8 * d, 8)) " +
-        "AS UBIGINT) % 64 AS bucket FROM pr, ds) " +
-        "SELECT pb.token, CAST(min(coalesce(cnt, 0)) AS BIGINT) AS est " +
-        "FROM pb LEFT JOIN cells USING (d, bucket) GROUP BY pb.token"),
-    "q_heavy_hitters" ->
-      (s"WITH tk AS (SELECT unnest($TOKS) AS token FROM documents), " +
-        "wc AS (SELECT token, count(*) AS cnt FROM tk GROUP BY token), " +
-        "t AS (SELECT CAST(sum(cnt) AS DOUBLE) AS total FROM wc) " +
-        s"SELECT token, cnt FROM wc, t WHERE CAST(cnt AS DOUBLE) > total * $HH_PHI"),
-    // regexes interpolated from the same Scrub constants the Spark side
-    // compiles — the patterns stay in the Java/RE2 agreement subset
-    "q_pii_scrub" ->
-      ("WITH inj AS (SELECT doc_id, CASE WHEN doc_id % 7 = 0 THEN text || " +
-        "' contact user' || doc_id || '@example.com or 10.' || (doc_id % 256) || " +
-        "'.0.1 call +1 415 550 0' || (doc_id % 10) || '99' ELSE text END AS t0 " +
-        "FROM documents), " +
-        s"s1 AS (SELECT doc_id, t0, regexp_replace(t0, '${Scrub.EMAIL_RE}', '<EMAIL>', 'g') AS t1 FROM inj), " +
-        s"s2 AS (SELECT *, regexp_replace(t1, '${Scrub.IPV4_RE}', '<IP>', 'g') AS t2 FROM s1), " +
-        s"s3 AS (SELECT *, regexp_replace(t2, '${Scrub.PHONE_RE}', '<PHONE>', 'g') AS t3 FROM s2) " +
-        "SELECT doc_id, t3 AS text, " +
-        s"CAST(len(regexp_extract_all(t0, '${Scrub.EMAIL_RE}')) AS INT) AS n_email, " +
-        s"CAST(len(regexp_extract_all(t1, '${Scrub.IPV4_RE}')) AS INT) AS n_ip, " +
-        s"CAST(len(regexp_extract_all(t2, '${Scrub.PHONE_RE}')) AS INT) AS n_phone " +
-        "FROM s3"),
-    // line-dedup replay: first-occurrence ownership via row_number over
-    // (doc_id, line_no); numbering from the pre-filter split index
-    "q_line_dedup" ->
-      ("WITH inj AS (SELECT doc_id, text || chr(10) || 'subscribe to our newsletter' || " +
-        "CASE WHEN doc_id % 3 = 0 THEN chr(10) || 'unique footer ' || doc_id " +
-        "ELSE '' END AS t FROM documents), " +
-        "p AS (SELECT doc_id, string_split_regex(t, '\\r?\\n') AS parts FROM inj), " +
-        "l AS (SELECT doc_id, generate_subscripts(parts, 1) - 1 AS line_no, " +
-        "trim(unnest(parts)) AS line FROM p), " +
-        "le AS (SELECT * FROM l WHERE len(line) > 0), " +
-        "keep AS (SELECT doc_id, line_no, line FROM (SELECT *, row_number() " +
-        "OVER (PARTITION BY line ORDER BY doc_id, line_no) AS rn FROM le) WHERE rn = 1), " +
-        "nl AS (SELECT doc_id, CAST(count(*) AS INT) AS n_lines FROM le GROUP BY doc_id), " +
-        "ag AS (SELECT doc_id, CAST(count(*) AS INT) AS n_kept, " +
-        "string_agg(line, chr(10) ORDER BY line_no) AS kept_text FROM keep GROUP BY doc_id) " +
-        "SELECT inj.doc_id, coalesce(nl.n_lines, 0) AS n_lines, " +
-        "coalesce(ag.n_kept, 0) AS n_kept, coalesce(ag.kept_text, '') AS text " +
-        "FROM inj LEFT JOIN nl USING (doc_id) LEFT JOIN ag USING (doc_id)"),
-    // line algebra shared with q_line_dedup (split \r?\n, trim, drop
-    // empties, md5 identity); sums cast to BIGINT (DuckDB widens to
-    // HUGEINT), division through DOUBLE like the Spark expression
-    "q_line_stats" ->
-      ("WITH p AS (SELECT string_split_regex(coalesce(text, ''), '\\r?\\n') " +
-        "AS parts FROM documents), " +
-        "l AS (SELECT trim(unnest(parts)) AS line FROM p), " +
-        "le AS (SELECT line FROM l WHERE len(line) > 0), " +
-        "per AS (SELECT md5(line) AS h, count(*) AS c FROM le GROUP BY 1) " +
-        "SELECT CAST(coalesce(sum(c), 0) AS BIGINT) AS n_lines, " +
-        "count(*) AS n_distinct_lines, " +
-        "round(1.0 - count(*) / CAST(coalesce(sum(c), 1) AS DOUBLE), 6) " +
-        "AS dup_line_fraction, " +
-        "CAST(coalesce(max(c), 0) AS BIGINT) AS max_line_freq FROM per"),
-    // boilerplate policy replay: hot = lines in >= 3 distinct docs
-    // (union-wide), removed everywhere — no keep-first survivor
-    "q_boilerplate" -> boilerplateSql(incrOnly = false),
-    // the incremental twin IS the batch replay filtered to increment
-    // rows — the hot set still counts the whole union (index + batch),
-    // which is exactly the apply's contract under disjoint doc ids
-    "q_boilerplate_incr" -> boilerplateSql(incrOnly = true),
-    "q_ingest_gate" -> ingestGateSql,
-    "q_ingest_report" ->
-      (s"SELECT CAST(count(*) AS BIGINT) AS n_in, " +
-        "CAST(sum(keep) AS BIGINT) AS n_keep, " +
-        "CAST(sum(CASE WHEN pass_struct = 0 OR pass_rep = 0 THEN 1 ELSE 0 END) " +
-        "AS BIGINT) AS n_gopher_reject, " +
-        "CAST(sum(contaminated) AS BIGINT) AS n_contaminated, " +
-        "CAST(sum(dup_of_corpus) AS BIGINT) AS n_dup, " +
-        "round(sum(keep) / CAST(greatest(count(*), 1) AS DOUBLE), 4) " +
-        s"AS keep_rate FROM ($ingestGateSql) v"),
-    // same pass order as Scrub.stripHtml, patterns interpolated from the
-    // same constants; 'gs' option = global ('s' is inline in the pattern
-    // where needed); &amp; decoded last like the Spark side
-    "q_strip_html" ->
-      ("WITH inj AS (SELECT doc_id, CASE WHEN doc_id % 4 = 0 THEN " +
-        "'<html><head><title>Page</title><style>body{color:red}</style>" +
-        "<script>var x = 1 < 2;</script></head><body><!-- nav --><p>' " +
-        "|| text || '</p><div>&amp; &lt;tail&gt;&nbsp;end</div></body></html>' " +
-        "ELSE text END AS t0 FROM documents), " +
-        s"s1 AS (SELECT doc_id, regexp_replace(t0, '${Scrub.SCRIPT_RE}', ' ', 'g') AS t FROM inj), " +
-        s"s2 AS (SELECT doc_id, regexp_replace(t, '${Scrub.STYLE_RE}', ' ', 'g') AS t FROM s1), " +
-        s"s3 AS (SELECT doc_id, regexp_replace(t, '${Scrub.COMMENT_RE}', ' ', 'g') AS t FROM s2), " +
-        s"s4 AS (SELECT doc_id, regexp_replace(t, '${Scrub.TAG_RE}', ' ', 'g') AS t FROM s3), " +
-        "s5 AS (SELECT doc_id, replace(replace(replace(replace(replace(replace(t, " +
-        "'&nbsp;', ' '), '&lt;', '<'), '&gt;', '>'), '&quot;', '\"'), " +
-        "'&#39;', ''''), '&amp;', '&') AS t FROM s4) " +
-        s"SELECT doc_id, trim(regexp_replace(t, '${Scrub.WS_RE}', ' ', 'g')) AS text FROM s5"),
-    // thresholds/budgets interpolated from the same constants as the
-    // Spark query; explicit ROWS frame on both sides
-    "q_domain_mix" ->
-      (s"WITH f AS (SELECT doc_id, source, text FROM documents " +
-        s"WHERE $HASHKEY < '${ops.Sampling.hexThreshold(MIX_RATE)}'), " +
-        s"t AS (SELECT doc_id, source, len($TOKS) AS n, $HASHKEY AS hk FROM f), " +
-        "c AS (SELECT doc_id, source, n, CAST(sum(n) OVER (PARTITION BY source " +
-        "ORDER BY hk, doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) " +
-        "AS BIGINT) AS cum FROM t) " +
-        "SELECT source, doc_id, CAST(n AS INT) AS n_tokens, cum AS cum_tokens " +
-        "FROM c WHERE cum <= CASE " +
-        MIX_BUDGETS.map { case (src, b) =>
-          s"WHEN source = '$src' THEN $b "
-        }.mkString +
-        s"ELSE $MIX_DEFAULT_BUDGET END"),
-    // the bloom prefilter is invisible to the oracle by design: the
-    // operator's contract is exact equality with the plain anti-join
-    "q_incr_dedup" ->
-      (s"WITH f AS (SELECT doc_id, ${fpSql(TOKS)} AS fp FROM documents) " +
-        "SELECT doc_id, fp FROM f WHERE doc_id >= 200 " +
-        "AND fp NOT IN (SELECT fp FROM f WHERE doc_id < 300)"),
-    // chunk grid: starts 0, 8, 16, … up to len-16+8-1 inclusive (the last
-    // start that still contributes new tokens); final partial chunk kept
-    "q_doc_chunks" ->
-      (s"WITH t AS (SELECT doc_id, $TOKS AS toks FROM documents), " +
-        "s AS (SELECT doc_id, toks, " +
-        "unnest(generate_series(0, greatest(len(toks) - 16 + 7, 0), 8)) AS st " +
-        "FROM t WHERE len(toks) > 0) " +
-        "SELECT doc_id, CAST(st // 8 AS INT) AS chunk_idx, " +
-        "CAST(st AS INT) AS chunk_start, " +
-        "CAST(least(16, len(toks) - st) AS INT) AS n_tokens, " +
-        "array_to_string(toks[st + 1 : st + 16], ' ') AS chunk_text FROM s"),
-    // global doc_id-ordered concatenation cut into 128-token sequences;
-    // seq_id = chunk ordinal (partition 0 at parts=1)
-    "q_pack_seq" ->
-      (s"WITH t AS (SELECT doc_id, $TOKS AS toks FROM documents), " +
-        "a AS (SELECT flatten(list(toks ORDER BY doc_id)) AS ts FROM t), " +
-        "s AS (SELECT ts, unnest(generate_series(0, greatest(len(ts) - 1, 0), 128)) AS st " +
-        "FROM a WHERE len(ts) > 0) " +
-        "SELECT st // 128 AS seq_id, " +
-        "CAST(least(128, len(ts) - st) AS INT) AS n_tokens, " +
-        "array_to_string(ts[st + 1 : st + 128], ' ') AS text FROM s"),
-    // the q_pack_seq replay over sentinel-terminated token streams
-    "q_pack_eos" ->
-      (s"WITH t0 AS (SELECT doc_id, $TOKS AS toks FROM documents), " +
-        "t AS (SELECT doc_id, CASE WHEN len(toks) > 0 " +
-        "THEN list_append(toks, '<eos>') ELSE toks END AS toks FROM t0), " +
-        "a AS (SELECT flatten(list(toks ORDER BY doc_id)) AS ts FROM t), " +
-        "s AS (SELECT ts, unnest(generate_series(0, greatest(len(ts) - 1, 0), 128)) AS st " +
-        "FROM a WHERE len(ts) > 0) " +
-        "SELECT st // 128 AS seq_id, " +
-        "CAST(least(128, len(ts) - st) AS INT) AS n_tokens, " +
-        "array_to_string(ts[st + 1 : st + 128], ' ') AS text FROM s"),
-    // boundary replay: each doc's absolute start offset in the parts=1
-    // concatenation (cumulative token sum), mapped to (sequence, offset);
-    // k = ordinal of the boundary within its sequence
-    "q_pack_bounds" ->
-      (s"WITH t AS (SELECT doc_id, $TOKS AS toks FROM documents), " +
-        "n AS (SELECT doc_id, len(toks) AS n FROM t WHERE len(toks) > 0), " +
-        "c AS (SELECT doc_id, CAST(sum(n) OVER (ORDER BY doc_id " +
-        "ROWS UNBOUNDED PRECEDING) - n AS BIGINT) AS abs_start FROM n) " +
-        "SELECT CAST(abs_start // 128 AS BIGINT) AS seq_id, " +
-        "CAST(row_number() OVER (PARTITION BY abs_start // 128 " +
-        "ORDER BY abs_start) - 1 AS INT) AS k, " +
-        "CAST(abs_start % 128 AS INT) AS doc_start, doc_id FROM c"),
-    // row_number replay over the same (bucket, shard) partitions and
-    // (hash, id) order
-    "q_len_batches" ->
-      (s"WITH t AS (SELECT doc_id, greatest(len($TOKS), 0) AS n FROM documents), " +
-        "b AS (SELECT doc_id, n, CASE WHEN n <= 16 THEN 16 WHEN n <= 32 THEN 32 " +
-        "WHEN n <= 64 THEN 64 WHEN n <= 128 THEN 128 ELSE 2147483647 END AS bucket, " +
-        "'0' || substring(md5('lb' || CAST(doc_id AS VARCHAR)), 1, 8) AS hk FROM t), " +
-        "r AS (SELECT doc_id, n, bucket, substring(hk, 2, 1) AS shard, " +
-        "CAST(row_number() OVER (PARTITION BY bucket, substring(hk, 2, 1) " +
-        "ORDER BY hk, doc_id) - 1 AS INT) AS rk FROM b) " +
-        "SELECT doc_id, CAST(n AS INT) AS n_tokens, bucket, shard, " +
-        "CAST(rk // 8 AS INT) AS batch_idx, CAST(rk % 8 AS INT) AS pos_in_batch FROM r"),
-    // the same folded-id cut arithmetic and list slicing; unselected and
-    // zero-token docs pass through with their original text
-    "q_fim" ->
-      (s"WITH t AS (SELECT doc_id, text, $TOKS AS toks FROM documents), " +
-        "c AS (SELECT doc_id, text, toks, len(toks) AS n, " +
-        "((doc_id % 1000003) * 7919) % (len(toks) + 1) AS c1 FROM t), " +
-        "c2t AS (SELECT *, c1 + ((doc_id % 1000003) * 104729) % (n - c1 + 1) AS c2 FROM c), " +
-        "sel AS (SELECT *, '0' || substring(md5('fim' || CAST(doc_id AS VARCHAR)), 1, 8) " +
-        s"< '${ops.Sampling.hexThreshold(0.5)}' AS s FROM c2t) " +
-        "SELECT doc_id, CAST(CASE WHEN s AND n > 0 THEN 1 ELSE 0 END AS INT) AS fim, " +
-        "CASE WHEN s AND n > 0 THEN array_to_string(" +
-        "['<fim_prefix>'] || toks[1:c1] || ['<fim_suffix>'] || toks[c2+1:n] || " +
-        "['<fim_middle>'] || toks[c1+1:c2], ' ') ELSE text END AS text FROM sel"),
-    // the q_fim folded-id arithmetic per 16-token window: offset o(i) =
-    // (fold·7919 + (i+1)·104729) % 14, span = 3 tokens at o(i)
-    "q_span_corrupt" ->
-      (s"WITH t AS (SELECT doc_id, $TOKS AS toks FROM documents), " +
-        "c AS (SELECT doc_id, toks, len(toks) AS n, len(toks) // 16 AS nseg FROM t), " +
-        "s AS (SELECT doc_id, n, nseg, " +
-        "flatten(list_transform(range(nseg), i -> " +
-        "toks[i*16+1 : i*16 + ((doc_id % 1000003) * 7919 + (i+1) * 104729) % 14] || " +
-        "['<extra_id_' || i || '>'] || " +
-        "toks[i*16 + ((doc_id % 1000003) * 7919 + (i+1) * 104729) % 14 + 4 : (i+1)*16])) " +
-        "|| toks[nseg*16+1 : n] AS inp, " +
-        "flatten(list_transform(range(nseg), i -> " +
-        "['<extra_id_' || i || '>'] || " +
-        "toks[i*16 + ((doc_id % 1000003) * 7919 + (i+1) * 104729) % 14 + 1 : " +
-        "i*16 + ((doc_id % 1000003) * 7919 + (i+1) * 104729) % 14 + 3])) " +
-        "|| ['<extra_id_' || nseg || '>'] AS tgt FROM c) " +
-        "SELECT doc_id, CAST(n AS BIGINT) AS n_tokens, " +
-        "CAST(nseg AS BIGINT) AS n_spans, " +
-        "array_to_string(inp, ' ') AS input, " +
-        "array_to_string(tgt, ' ') AS target FROM s"),
-    // weight rounded to 6 decimals BEFORE the target arithmetic on both
-    // sides: pow is the one step IEEE doesn't require exactly rounded
-    "q_temp_mix" ->
-      (s"WITH c AS (SELECT source, count(*) AS c FROM documents GROUP BY source), " +
-        s"p AS (SELECT source, c, pow(c, $TEMP_ALPHA) AS pw FROM c), " +
-        "t AS (SELECT sum(pw) AS tot FROM p), " +
-        "g AS (SELECT source, c, round(pw / tot, 6) AS weight FROM p, t), " +
-        "n AS (SELECT source, weight, least(c, " +
-        s"CAST(floor(weight * $TEMP_TOTAL + 0.5) AS BIGINT)) AS n_target FROM g), " +
-        "r AS (SELECT source, doc_id, CAST(row_number() OVER " +
-        s"(PARTITION BY source ORDER BY $HASHKEY, doc_id) AS INT) AS rk " +
-        "FROM documents) " +
-        "SELECT r.source, r.doc_id, rk, n.weight, n.n_target " +
-        "FROM r JOIN n USING (source) WHERE rk <= n_target"),
-    // epoch upsampling: whole-epoch copies + a hash-fraction extra copy,
-    // replicated via range(n) (same salted md5 key as the Spark side)
-    "q_epoch_mix" -> {
-      val thr05 = ops.Sampling.hexThreshold(0.5)
-      val thr03 = ops.Sampling.hexThreshold(0.3)
-      val thr0 = ops.Sampling.hexThreshold(0.0)
-      "WITH e AS (SELECT source, doc_id, " +
-        "CASE WHEN source = 'src0' THEN 2 WHEN source = 'src1' THEN 0 " +
-        "WHEN source = 'src2' THEN 0 ELSE 1 END + " +
-        "CASE WHEN ('0' || substring(md5('ep' || CAST(doc_id AS VARCHAR)), 1, 8)) < " +
-        s"(CASE WHEN source = 'src0' THEN '$thr05' WHEN source = 'src1' THEN '$thr03' " +
-        s"WHEN source = 'src2' THEN '$thr0' ELSE '$thr0' END) THEN 1 ELSE 0 END AS n " +
-        "FROM documents) " +
-        "SELECT source, doc_id, CAST(unnest(range(n)) AS INT) AS epoch " +
-        "FROM e WHERE n > 0"
-    },
-    // rank on the raw logit (monotone in the score but never saturates to
-    // a tie the way sigmoid's double rounding can); cume_dist — not
-    // percent_rank, which zeroes single-doc strata — is an exact rational
-    // so the keep boundary agrees across engines
-    "q_quality_rank" -> {
-      val (bias, wLog, wAvg, wStop, wNon, _) = ops.TextAnalysis.QUALITY_W
-      s"WITH t AS (SELECT doc_id, source, text, $TOKS AS toks FROM documents), " +
-        "f AS (SELECT doc_id, source, len(toks) AS n, " +
-        "coalesce(list_aggregate(list_transform(toks, x -> length(x)), 'sum'), 0) / " +
-        "greatest(len(toks), 1) AS avg_len, " +
-        "len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','on'], x))) / " +
-        "greatest(len(toks), 1) AS stop_r, " +
-        s"(length(text) - length(regexp_replace(lower(text), '$NON_ALNUM_SQL', '', 'g'))) / " +
-        "greatest(length(text), 1) AS non_al FROM t), " +
-        s"z AS (SELECT doc_id, source, ($bias) + ($wLog) * ln(1 + n) + " +
-        s"($wAvg) * avg_len + ($wStop) * stop_r + ($wNon) * non_al AS z FROM f), " +
-        "p AS (SELECT doc_id, source, z, cume_dist() OVER " +
-        "(PARTITION BY source ORDER BY z) AS cd FROM z) " +
-        "SELECT doc_id, source, round(1.0 / (1.0 + exp(-z)), 4) AS quality_score, " +
-        "round(cd, 6) AS pctl, " +
-        s"CAST(cd > 1.0 - $QRANK_KEEP AS INT) AS keep FROM p"
-    },
-    // shard = leading hash hex digit ⇒ (shard, pos) replays exact global
-    // hash order without a global window
-    "q_shuffle_order" ->
-      (s"WITH h AS (SELECT doc_id, $HASHKEY AS hk FROM documents), " +
-        "s AS (SELECT doc_id, hk, CAST(strpos('0123456789abcdef', " +
-        "substring(hk, 2, 1)) - 1 AS INT) AS shard FROM h) " +
-        "SELECT doc_id, shard, CAST(row_number() OVER " +
-        "(PARTITION BY shard ORDER BY hk, doc_id) AS INT) AS pos FROM s"),
-    // (ts, event_id) is unique, so the ordered string_agg is a pure
-    // function of the data; both engines read the same µs-truncated ts
-    "q_chat_render" ->
-      ("SELECT user_id, count(*) AS n_turns, " +
-        "string_agg('[' || coalesce(event_type, '') || '#' || event_id || '] ' " +
-        "|| coalesce(props, ''), " +
-        "chr(10) ORDER BY ts, event_id) AS text " +
-        "FROM events GROUP BY user_id"),
-    // same md5-prefix bucket/sign arithmetic; values are exact signed
-    // counts, so no rounding is needed
-    "q_hash_embed" ->
-      (s"WITH ${hashEmbedCtes(64)} " +
-        "SELECT doc_id, dim_idx, value FROM sv"),
-    // DSIR replay: UNSIGNED bucket counts (same md5 scheme, no sign),
-    // add-1-smoothed target (lang='en') vs raw distributions over the
-    // full range(64) grid, per-doc Σ c·lr; zero-token docs score 0.0
-    "q_dsir" ->
-      (s"WITH ${dsirCtes(64)} " +
-        "SELECT doc_id, n_tokens, dsir_logw FROM ds"),
-    // DSIR importance RESAMPLING: the q_dsir scores through the
-    // q_ppl_mix bucket/keep machinery with ASCENDING rates (keep the
-    // target-like tail) — ONE score definition (dsirCtes), one bucket
-    // replay, salt 'dsir'
-    "q_dsir_mix" -> {
-      val caseThr = DSIR_RATES.zipWithIndex.map { case (r, i) =>
-        s"WHEN ${i + 1} THEN '${ops.Sampling.hexThreshold(r)}'"
-      }.mkString(" ")
-      s"WITH ${dsirCtes(64)}, " +
-        "s AS (SELECT doc_id, dsir_logw FROM ds), " +
-        "cnts AS (SELECT dsir_logw, count(*) AS c FROM s GROUP BY 1), " +
-        "na AS (SELECT CAST(sum(c) AS DOUBLE) AS n_all FROM cnts), " +
-        "cum AS (SELECT dsir_logw, c, sum(c) OVER (ORDER BY dsir_logw " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM cnts), " +
-        s"b AS (SELECT dsir_logw, CAST(floor((cum - c) * ${DSIR_RATES.length} " +
-        "/ n_all) AS INT) + 1 AS bucket FROM cum, na) " +
-        "SELECT s.doc_id, s.dsir_logw, b.bucket " +
-        "FROM s JOIN b USING (dsir_logw) " +
-        "WHERE '0' || substring(md5('dsir' || CAST(doc_id AS VARCHAR)), 1, 8) < " +
-        s"CASE b.bucket $caseThr END"
-    },
-    // Hamilton apportionment replay: integer div/mod quota + largest-
-    // remainder rank — every value exact, no rounding anywhere
-    "q_apportion" ->
-      ("WITH cnt AS (SELECT source, CAST(sum(n_chars) AS BIGINT) AS c " +
-        "FROM documents GROUP BY 1), " +
-        "tot AS (SELECT greatest(coalesce(sum(c), 0), 1) AS ctot FROM cnt), " +
-        "b AS (SELECT source, c, (137 * c) // ctot AS base, " +
-        "(137 * c) % ctot AS rem FROM cnt, tot), " +
-        "lf AS (SELECT 137 - coalesce(sum(base), 0) AS lft FROM b), " +
-        "r AS (SELECT *, row_number() OVER (ORDER BY rem DESC, " +
-        "source ASC) AS rn FROM b) " +
-        "SELECT source, c, CAST(base + CASE WHEN rn <= lft THEN 1 " +
-        "ELSE 0 END AS BIGINT) AS quota FROM r, lf"),
-    // the draw: same quota chain over row counts, then the salted
-    // 32-bit hash clock rank within each stratum (hashKey verbatim)
-    "q_apportion_draw" ->
-      ("WITH cnt AS (SELECT source, CAST(count(*) AS BIGINT) AS c " +
-        "FROM documents GROUP BY 1), " +
-        "tot AS (SELECT greatest(coalesce(sum(c), 0), 1) AS ctot FROM cnt), " +
-        "b AS (SELECT source, c, (137 * c) // ctot AS base, " +
-        "(137 * c) % ctot AS rem FROM cnt, tot), " +
-        "lf AS (SELECT 137 - coalesce(sum(base), 0) AS lft FROM b), " +
-        "r AS (SELECT *, row_number() OVER (ORDER BY rem DESC, " +
-        "source ASC) AS rn FROM b), " +
-        "q AS (SELECT source, base + CASE WHEN rn <= lft THEN 1 ELSE 0 " +
-        "END AS quota FROM r, lf), " +
-        "rk AS (SELECT d.doc_id, d.source, row_number() OVER " +
-        "(PARTITION BY d.source ORDER BY '0' || " +
-        "substring(md5('apportion' || CAST(d.doc_id AS VARCHAR)), 1, 8), " +
-        "d.doc_id) AS rn FROM documents d) " +
-        "SELECT rk.doc_id, rk.source FROM rk JOIN q USING (source) " +
-        "WHERE rk.rn <= q.quota"),
-    // NB classifier replay: the model re-fit in SQL, per-doc argmax on
-    // the rounded score with the same lexicographic tie-break
-    "q_nb_lang" ->
-      (s"WITH ${nbCtes(64)} " +
-        "SELECT doc_id, lang, pred, CAST(pred = lang AS INT) AS correct " +
-        "FROM pr"),
-    // confusion matrix off the same prediction chain
-    "q_nb_confusion" ->
-      (s"WITH ${nbCtes(64)} " +
-        "SELECT lang, pred, count(*) AS n FROM pr GROUP BY 1, 2"),
-    // per-class P/R/F1 replay — F1's harmonic mean from the unrounded
-    // ratios, CASE-guarded NULLs on empty denominators
-    "q_nb_prf" ->
-      (s"WITH ${nbCtes(64)}, " +
-        "conf AS (SELECT lang, pred, count(*) AS n FROM pr GROUP BY 1, 2), " +
-        prfTailSql("lang", "pred")),
-    // closed-form waterline: T* = min over weighted domains of
-    // maxEpochs·c_d/w_d; weights interpolated from MIX_SOLVE_W (the
-    // QUALITY_W pattern), every literal CAST AS DOUBLE (the MMR
-    // DECIMAL-folding lesson)
-    "q_mix_solve" -> {
-      val vals = MIX_SOLVE_W.map { case (dom, w) =>
-        s"('$dom', CAST($w AS DOUBLE))" }.mkString(", ")
-      s"WITH inv AS (SELECT source AS domain, " +
-        s"CAST(coalesce(sum(len($TOKS)), 0) AS BIGINT) AS n_tokens " +
-        "FROM documents GROUP BY 1), " +
-        s"w AS (SELECT * FROM (VALUES $vals) AS v(domain, wraw)), " +
-        "ws AS (SELECT sum(wraw) AS s FROM w), " +
-        "nw AS (SELECT domain, wraw / ws.s AS w FROM w, ws), " +
-        "j AS (SELECT inv.domain, inv.n_tokens, coalesce(nw.w, CAST(0 AS DOUBLE)) AS w " +
-        "FROM inv LEFT JOIN nw USING (domain)), " +
-        "ts AS (SELECT min(CAST(2.0 AS DOUBLE) * n_tokens / w) AS tstar FROM j WHERE w > 0) " +
-        "SELECT domain, n_tokens, round(w, 6) AS weight, " +
-        "round(w * tstar, 4) AS alloc_tokens, " +
-        "round(least(w * tstar / n_tokens, CAST(1 AS DOUBLE)), 6) AS rate, " +
-        "round(w * tstar / n_tokens, 4) AS epochs FROM j, ts"
-    },
-    // κ replay over the shared weak-label CTEs: exact integer counts,
-    // then the same double ratio arithmetic as the engine
-    "q_kappa" ->
-      (s"WITH ${weakLabelCtes(30.0)}, " +
-        "agg AS (SELECT CAST(count(*) AS BIGINT) AS n, sum(a) AS na, " +
-        "sum(b) AS nb, sum(CASE WHEN a = b THEN 1 ELSE 0 END) AS agree FROM l) " +
-        "SELECT n, round(na / CAST(n AS DOUBLE), 4) AS p_a, " +
-        "round(nb / CAST(n AS DOUBLE), 4) AS p_b, " +
-        "round(agree / CAST(n AS DOUBLE), 4) AS po, " +
-        "round((na * nb + (n - na) * (n - nb)) / (n * CAST(n AS DOUBLE)), 4) AS pe, " +
-        "round(CASE WHEN (na * nb + (n - na) * (n - nb)) / (n * CAST(n AS DOUBLE)) < 1.0 " +
-        "THEN (agree / CAST(n AS DOUBLE) - " +
-        "(na * nb + (n - na) * (n - nb)) / (n * CAST(n AS DOUBLE))) / " +
-        "(1.0 - (na * nb + (n - na) * (n - nb)) / (n * CAST(n AS DOUBLE))) END, 4) AS kappa " +
-        "FROM agg"),
-    // Gopher-rule replay: whitespace words, newline lines, the same
-    // regexes, every threshold cross-multiplied in BIGINT — no float
-    // anywhere, so the rows must match exactly, not just post-round
-    "q_gopher_rules" -> gopherRulesSql(),
-    // repetition-gate replay: per-(doc, unit) counts via unnest+GROUP BY
-    // instead of the engine's sorted-run arrays — same exact integers,
-    // same rounded fractions, same cross-multiplied flags
-    "q_gopher_rep" -> gopherRepSql(),
-    // the COMPLETE table-A1 gate: both halves over the SAME (plain)
-    // corpus, conjunction per doc
-    "q_gopher_gate" ->
-      ("SELECT r.doc_id, r.pass AS pass_struct, p.pass AS pass_rep, " +
-        "CAST(r.pass * p.pass AS INT) AS pass " +
-        s"FROM (${gopherRulesSql()}) r JOIN (${gopherRepSql(inject = false)}) p " +
-        "ON p.doc_id = r.doc_id"),
-    // Luhn replay: same injection and candidate class; from the right,
-    // 0-based-even positions count as-is, odd double (−9 above 9 ⇔
-    // digit > 4); one list_sum per candidate
-    "q_cc_scan" -> {
-      def dig = "CAST(substring(reverse(digits), CAST(i + 1 AS INT), 1) AS INT)"
-      "WITH inj AS (SELECT doc_id, text || " +
-        "CASE WHEN doc_id % 9 = 0 THEN ' card 4111 1111 1111 1111' ELSE '' END || " +
-        "CASE WHEN doc_id % 13 = 0 THEN ' acct 4111111111111112' ELSE '' END || " +
-        "CASE WHEN doc_id % 17 = 0 THEN ' ref 3782-8224-6310-005' ELSE '' END " +
-        "AS text FROM documents), " +
-        "cands AS (SELECT DISTINCT doc_id, candidate FROM " +
-        "(SELECT doc_id, unnest(regexp_extract_all(text, " +
-        "'[0-9]([ -]?[0-9]){12,18}')) AS candidate FROM inj) u), " +
-        "lu AS (SELECT doc_id, candidate, " +
-        "regexp_replace(candidate, '[^0-9]', '', 'g') AS digits FROM cands) " +
-        "SELECT doc_id, candidate, digits, " +
-        "CAST(CAST(list_sum(list_transform(range(length(digits)), i -> " +
-        s"CASE WHEN i % 2 = 0 THEN $dig " +
-        s"WHEN $dig > 4 THEN $dig * 2 - 9 " +
-        s"ELSE $dig * 2 END)) AS BIGINT) % 10 = 0 AS INT) AS luhn_valid " +
-        "FROM lu"
-    },
-    // secret-scan replay: same injection, same candidate class, char
-    // entropy re-derived via a substring histogram (engine byte = char:
-    // candidates are ASCII by the class), flag on the ROUNDED bits
-    "q_secret_scan" ->
-      ("WITH inj AS (SELECT doc_id, text || " +
-        "CASE WHEN doc_id % 7 = 0 THEN ' key_' || md5(CAST(doc_id AS VARCHAR)) ELSE '' END || " +
-        "CASE WHEN doc_id % 11 = 0 THEN ' aaaaaaaaaaaaaaaaaaaaaaaa' ELSE '' END AS text " +
-        "FROM documents), " +
-        "cands AS (SELECT DISTINCT doc_id, candidate FROM " +
-        "(SELECT doc_id, unnest(regexp_extract_all(text, '[A-Za-z0-9+/=_-]{20,}')) " +
-        "AS candidate FROM inj) u), " +
-        "ch AS (SELECT doc_id, candidate, unnest(list_transform(range(length(candidate)), " +
-        "i -> substring(candidate, CAST(i + 1 AS INT), 1))) AS c FROM cands), " +
-        "cc AS (SELECT doc_id, candidate, c, count(*) AS n FROM ch GROUP BY 1, 2, 3), " +
-        "ent AS (SELECT doc_id, candidate, " +
-        "round(sum(-(CAST(n AS DOUBLE) / length(candidate)) * " +
-        "ln(CAST(n AS DOUBLE) / length(candidate))) / ln(2.0), 4) AS entropy " +
-        "FROM cc GROUP BY 1, 2) " +
-        "SELECT doc_id, candidate, entropy, " +
-        "CAST(entropy >= 3.0 AS INT) AS is_secret FROM ent"),
-    // reliability-diagram replay: bins on the ROUNDED score (both
-    // engines bin the identical 4-decimal double)
-    "q_calibration" ->
-      (s"WITH ${weakLabelCtes(30.0)}, " +
-        "bb AS (SELECT least(CAST(floor(s * 10) AS INT) + 1, 10) AS bin, s, b FROM l) " +
-        "SELECT bin, CAST(count(*) AS BIGINT) AS n, " +
-        "round(avg(s), 4) AS mean_score, " +
-        "round(avg(CAST(b AS DOUBLE)), 4) AS frac_pos, " +
-        "round(avg((s - b) * (s - b)), 4) AS brier " +
-        "FROM bb GROUP BY bin"),
-    // per-bin exact sums; ECE's n_b weight cancels to |Σs − Σb|
-    "q_calibration_error" ->
-      (s"WITH ${weakLabelCtes(30.0)}, " +
-        "bb AS (SELECT least(CAST(floor(s * 10) AS INT) + 1, 10) AS bin, s, b FROM l), " +
-        "g AS (SELECT bin, count(*) AS n, sum(s) AS ss, " +
-        "sum(CAST(b AS DOUBLE)) AS sy FROM bb GROUP BY bin) " +
-        "SELECT CAST(sum(n) AS BIGINT) AS n, " +
-        "CAST(count(*) AS BIGINT) AS n_bins, " +
-        "round(sum(abs(ss - sy)) / CAST(sum(n) AS DOUBLE), 4) AS ece, " +
-        "round(max(abs(ss / n - sy / n)), 4) AS mce FROM g"),
-    // the q_hash_embed CTEs densified over a range(64) grid, then the
-    // q_semdedup sign-block/pairwise replay at vec_id = doc_id
-    "q_semdedup_text" -> semdedupTextSql(""),
-    // the SAME full-corpus replay filtered to the increment rows: the
-    // incremental apply's contract is batch-identical verdicts, so its
-    // oracle IS the batch oracle restricted to the rows it decided
-    "q_semdedup_incr" ->
-      semdedupTextSql(" WHERE b.vec_id % 10 >= 8"),
-    // block histogram aggregates over the same argmax-blocked assignment
-    "q_block_report" ->
-      (s"WITH ${argmaxBlockedCtes(64)}, " +
-        "cnt AS (SELECT block, count(*) AS c FROM b GROUP BY block) " +
-        "SELECT CAST(count(*) AS BIGINT) AS n_blocks, " +
-        "CAST(sum(c) AS BIGINT) AS n_vecs, " +
-        "CAST(max(c) AS BIGINT) AS max_block, " +
-        "CAST(sum(c*c) AS BIGINT) AS sum_block_sq, " +
-        "round(CAST(sum(c*c) AS DOUBLE) / (CAST(sum(c) AS DOUBLE) * sum(c)), 6) AS nsq_ratio, " +
-        "round(CAST(max(c) AS DOUBLE) * max(c) / CAST(sum(c*c) AS DOUBLE), 4) AS max_share " +
-        "FROM cnt"),
-    "q_data_card" ->
-      (s"WITH t AS (SELECT source, lang, n_chars, $TOKS AS toks, " +
-        s"${fpSql(TOKS)} AS fp FROM documents) " +
-        "SELECT source, CAST(count(*) AS BIGINT) AS n_docs, " +
-        "CAST(coalesce(sum(len(toks)), 0) AS BIGINT) AS n_tokens, " +
-        "round(avg(len(toks)), 4) AS avg_doc_tokens, " +
-        "CASE WHEN count(*) > 0 THEN round(1.0 - " +
-        "CAST(count(DISTINCT fp) AS DOUBLE) / count(*), 4) ELSE 0.0 END AS exact_dup_frac, " +
-        "CAST(count(DISTINCT lang) AS BIGINT) AS n_langs, " +
-        "round(avg(n_chars), 4) AS avg_chars " +
-        "FROM t GROUP BY source"),
-    // PSI replay: same fixed edges, +0.5 Laplace smoothing, ln ratio
-    "q_drift" ->
-      ("WITH ca AS (SELECT CAST(n_chars >= 150.0 AS INT) + CAST(n_chars >= 250.0 AS INT) + " +
-        "CAST(n_chars >= 350.0 AS INT) + CAST(n_chars >= 450.0 AS INT) AS bucket, " +
-        "count(*) AS cnt_a FROM documents WHERE lang = 'en' AND n_chars IS NOT NULL GROUP BY 1), " +
-        "cb AS (SELECT CAST(n_chars >= 150.0 AS INT) + CAST(n_chars >= 250.0 AS INT) + " +
-        "CAST(n_chars >= 350.0 AS INT) + CAST(n_chars >= 450.0 AS INT) AS bucket, " +
-        "count(*) AS cnt_b FROM documents WHERE lang <> 'en' AND n_chars IS NOT NULL GROUP BY 1), " +
-        "sp AS (SELECT CAST(range AS INT) AS bucket FROM range(5)), " +
-        "j AS (SELECT sp.bucket, CAST(coalesce(cnt_a, 0) AS BIGINT) AS cnt_a, " +
-        "CAST(coalesce(cnt_b, 0) AS BIGINT) AS cnt_b " +
-        "FROM sp LEFT JOIN ca USING (bucket) LEFT JOIN cb USING (bucket)), " +
-        "t AS (SELECT sum(cnt_a) AS n_a, sum(cnt_b) AS n_b FROM j) " +
-        "SELECT bucket, cnt_a, cnt_b, " +
-        "round(((cnt_a + 0.5) / (n_a + 2.5) - (cnt_b + 0.5) / (n_b + 2.5)) * " +
-        "ln(((cnt_a + 0.5) / (n_a + 2.5)) / ((cnt_b + 0.5) / (n_b + 2.5))), 6) AS psi " +
-        "FROM j, t"),
-    // offsets replay: running (len+1) sum in the same (ts, event_id)
-    // order as the render; filter to trainable types after the cursor
-    "q_loss_mask" ->
-      ("WITH l AS (SELECT user_id, ts, event_id, event_type, " +
-        "'[' || coalesce(event_type, '') || '#' || event_id || '] ' " +
-        "|| coalesce(props, '') AS line FROM events), " +
-        "o AS (SELECT user_id, ts, event_id, event_type, " +
-        "CAST(length(line) AS BIGINT) AS len, " +
-        "coalesce(sum(length(line) + 1) OVER (PARTITION BY user_id " +
-        "ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS st " +
-        "FROM l) " +
-        "SELECT user_id, CAST(row_number() OVER (PARTITION BY user_id " +
-        "ORDER BY ts, event_id) - 1 AS INT) AS k, event_id, " +
-        "CAST(st AS BIGINT) AS span_start, CAST(st + len AS BIGINT) AS span_end " +
-        "FROM o WHERE event_type IN ('click', 'purchase')"),
-    // best/worst per source on the raw logit; both tie-breaks prefer the
-    // lowest doc_id; strict-preference filter mirrors the Spark guard
-    "q_pref_pairs" -> {
-      val (bias, wLog, wAvg, wStop, wNon, _) = ops.TextAnalysis.QUALITY_W
-      s"WITH t AS (SELECT doc_id, source, text, $TOKS AS toks FROM documents), " +
-        "f AS (SELECT doc_id, source, text, len(toks) AS n, " +
-        "coalesce(list_aggregate(list_transform(toks, x -> length(x)), 'sum'), 0) / " +
-        "greatest(len(toks), 1) AS avg_len, " +
-        "len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','on'], x))) / " +
-        "greatest(len(toks), 1) AS stop_r, " +
-        s"(length(text) - length(regexp_replace(lower(text), '$NON_ALNUM_SQL', '', 'g'))) / " +
-        "greatest(length(text), 1) AS non_al FROM t), " +
-        s"z AS (SELECT doc_id, source, text, ($bias) + ($wLog) * ln(1 + n) + " +
-        s"($wAvg) * avg_len + ($wStop) * stop_r + ($wNon) * non_al AS z FROM f), " +
-        "zs AS (SELECT * FROM z WHERE z IS NOT NULL), " +
-        "rk AS (SELECT *, row_number() OVER (PARTITION BY source ORDER BY z DESC, doc_id ASC) AS rc, " +
-        "row_number() OVER (PARTITION BY source ORDER BY z ASC, doc_id ASC) AS rr FROM zs), " +
-        "n AS (SELECT source, count(*) AS n_cands FROM zs GROUP BY source) " +
-        "SELECT c.source, c.doc_id AS chosen_id, c.text AS chosen, " +
-        "r.doc_id AS rejected_id, r.text AS rejected, " +
-        "round(c.z - r.z, 4) AS score_gap, n.n_cands " +
-        "FROM (SELECT * FROM rk WHERE rc = 1) c " +
-        "JOIN (SELECT * FROM rk WHERE rr = 1) r USING (source) " +
-        "JOIN n USING (source) WHERE c.z > r.z"
-    },
-    // gaps-and-islands sessions (strict '<' like q_window_session) + the
-    // same per-session string_agg render
-    "q_chat_sessions" ->
-      ("WITH m AS (SELECT user_id, ts, event_id, event_type, props, " +
-        "CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts) " +
-        "< INTERVAL '30 minutes' THEN 0 ELSE 1 END AS new_sess FROM events), " +
-        "s AS (SELECT *, sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts " +
-        "ROWS UNBOUNDED PRECEDING) AS sess FROM m) " +
-        "SELECT user_id, min(ts) AS sess_start, " +
-        "max(ts) + INTERVAL '30 minutes' AS sess_end, count(*) AS n_turns, " +
-        "string_agg('[' || coalesce(event_type, '') || '#' || event_id || '] ' " +
-        "|| coalesce(props, ''), chr(10) ORDER BY ts, event_id) AS text " +
-        "FROM s GROUP BY user_id, sess"),
-    // contract replay: same injected mutations, per-rule stacked counts
-    "q_contract" ->
-      ("WITH m AS (SELECT doc_id, text, source, " +
-        "CASE WHEN doc_id % 13 = 0 THEN 'xx' ELSE lang END AS lang, " +
-        "CASE WHEN doc_id % 17 = 0 THEN n_chars + 1 ELSE n_chars END AS n_chars " +
-        "FROM documents), " +
-        "f AS (SELECT doc_id, " +
-        "NOT coalesce(lang IN ('en','de','fr','es','zh'), false) AS b0, " +
-        "NOT coalesce(n_chars = length(text), false) AS b1, " +
-        "NOT coalesce(length(text) > 0, false) AS b2, " +
-        "NOT coalesce(source LIKE 'src%', false) AS b3 FROM m) " +
-        "SELECT 'lang_in_enum' AS rule, CAST(sum(CASE WHEN b0 THEN 1 ELSE 0 END) AS BIGINT) AS n_violations, " +
-        "min(CASE WHEN b0 THEN doc_id END) AS first_bad_id, count(*) AS n_rows FROM f " +
-        "UNION ALL SELECT 'n_chars_matches_text', CAST(sum(CASE WHEN b1 THEN 1 ELSE 0 END) AS BIGINT), " +
-        "min(CASE WHEN b1 THEN doc_id END), count(*) FROM f " +
-        "UNION ALL SELECT 'text_nonempty', CAST(sum(CASE WHEN b2 THEN 1 ELSE 0 END) AS BIGINT), " +
-        "min(CASE WHEN b2 THEN doc_id END), count(*) FROM f " +
-        "UNION ALL SELECT 'source_prefixed', CAST(sum(CASE WHEN b3 THEN 1 ELSE 0 END) AS BIGINT), " +
-        "min(CASE WHEN b3 THEN doc_id END), count(*) FROM f"),
-    // k-anonymity replay: QI-cell counts, small-cell algebra
-    "q_kanon" ->
-      ("WITH c AS (SELECT lang, source, n_chars // 100 AS len_bucket, " +
-        "count(*) AS cnt FROM documents GROUP BY 1, 2, 3) " +
-        "SELECT count(*) AS n_cells, " +
-        "CAST(sum(CASE WHEN cnt < 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_small_cells, " +
-        "CAST(sum(CASE WHEN cnt < 3 THEN cnt ELSE 0 END) AS BIGINT) AS n_rows_at_risk, " +
-        "min(cnt) AS min_cell FROM c"),
-    // cohort replay: ISO-Monday weeks, min-week cohort, day-diff offsets
-    "q_retention" ->
-      ("WITH wk AS (SELECT DISTINCT user_id, date_trunc('week', ts) AS week " +
-        "FROM events), " +
-        "ch AS (SELECT user_id, min(week) AS cohort_week FROM wk GROUP BY 1) " +
-        "SELECT cohort_week, " +
-        "CAST(date_diff('day', cohort_week, week) // 7 AS INT) AS week_offset, " +
-        "count(*) AS n_active FROM wk JOIN ch USING (user_id) GROUP BY 1, 2"),
-    // anomaly replay: spine-completed (type, day) counts (null-SAFE key
-    // joins — a null-labeled source stays monitored), the exact integer
-    // deviation test (n*cnt - S)^2 > sigma^2*(n*SS - S^2)
-    "q_anomaly" ->
-      ("WITH c AS (SELECT event_type, time_bucket(INTERVAL '1 day', ts) AS w_start, " +
-        "count(*) AS cnt FROM events GROUP BY 1, 2), " +
-        "sp AS (SELECT event_type, w_start FROM " +
-        "(SELECT DISTINCT event_type FROM c), (SELECT DISTINCT w_start FROM c)), " +
-        "f AS (SELECT sp.event_type, sp.w_start, CAST(coalesce(cnt, 0) AS BIGINT) AS cnt " +
-        "FROM sp LEFT JOIN c ON sp.event_type IS NOT DISTINCT FROM c.event_type " +
-        "AND sp.w_start = c.w_start), " +
-        "st AS (SELECT event_type, CAST(count(*) AS DECIMAL(38,0)) AS n, " +
-        "CAST(sum(cnt) AS DECIMAL(38,0)) AS s, " +
-        "sum(CAST(cnt AS DECIMAL(38,0)) * CAST(cnt AS DECIMAL(38,0))) AS ss " +
-        "FROM f GROUP BY 1) " +
-        "SELECT f.event_type, f.w_start, f.cnt, " +
-        "CAST((n * f.cnt - s) * (n * f.cnt - s) > 4 * (n * ss - s * s) AS INT) AS anomaly " +
-        "FROM f JOIN st ON f.event_type IS NOT DISTINCT FROM st.event_type"),
-    // funnel replay: sequential greedy mins (t1 = min view; t2 = min
-    // click >= t1; t3 = min purchase >= t2), prefix counts
-    "q_funnel" ->
-      ("WITH t1 AS (SELECT user_id, min(ts) AS t1 FROM events " +
-        "WHERE event_type = 'view' GROUP BY user_id), " +
-        "t2 AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e " +
-        "JOIN t1 ON e.user_id = t1.user_id AND e.ts >= t1.t1 " +
-        "WHERE e.event_type = 'click' GROUP BY e.user_id), " +
-        "t3 AS (SELECT e.user_id, min(e.ts) AS t3 FROM events e " +
-        "JOIN t2 ON e.user_id = t2.user_id AND e.ts >= t2.t2 " +
-        "WHERE e.event_type = 'purchase' GROUP BY e.user_id) " +
-        "SELECT * FROM (VALUES " +
-        "(0, 'view', (SELECT count(*) FROM t1)), " +
-        "(1, 'click', (SELECT count(*) FROM t2)), " +
-        "(2, 'purchase', (SELECT count(*) FROM t3))) " +
-        "v(step_idx, step, reached)"),
-    // the incremental fold equals the full recompute BY CONTRACT, so its
-    // oracle is q_scd2's full-history replay verbatim
-    "q_scd2_incr" -> SCD2_SQL,
-    // SCD2 replay: run ids via a running opener-flag sum, seen-through =
-    // each run's last underlying change (collapsed re-statements incl.),
-    // lead() for valid_to
-    "q_scd2" -> SCD2_SQL,
-    "q_scd2_asof" ->
-      ("WITH o AS (SELECT user_id, ts, event_id, event_type, " +
-        "lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev, " +
-        "row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn " +
-        "FROM events), " +
-        "v AS (SELECT user_id, ts, event_id, event_type FROM o " +
-        "WHERE rn = 1 OR prev IS DISTINCT FROM event_type), " +
-        "h AS (SELECT user_id, CAST(row_number() OVER " +
-        "(PARTITION BY user_id ORDER BY ts, event_id) AS INT) AS version, " +
-        "event_type AS state, ts AS valid_from, " +
-        "lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to " +
-        "FROM v) " +
-        "SELECT user_id, version, state FROM h " +
-        "WHERE valid_from <= TIMESTAMP '2024-01-15 00:00:00' " +
-        "AND (valid_to IS NULL OR valid_to > TIMESTAMP '2024-01-15 00:00:00')"),
-    // relational replay of the array-expression winnowing: window-min
-    // over gram hashes with a truncated final frame; md5-prefix string
-    // hashes make min() engine-identical (binary order on [0-9a-f])
-    "q_winnow" ->
-      s"WITH $WINNOW_CTES SELECT doc_id, fp FROM fps",
-    // MOSS match step over the same winnow CTE chain: per-fp postings
-    // capped at 64 docs (hot-fingerprint guardrail, mirrored Spark-side)
-    "q_winnow_pairs" ->
-      (s"WITH $WINNOW_CTES, " +
-        "capped AS (SELECT doc_id, fp FROM (SELECT doc_id, fp, row_number() " +
-        "OVER (PARTITION BY fp ORDER BY doc_id) AS rn FROM fps) WHERE rn <= 64) " +
-        "SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS n_shared " +
-        "FROM capped a JOIN capped b USING (fp) WHERE a.doc_id < b.doc_id " +
-        "GROUP BY 1, 2 HAVING count(*) >= 2"),
-    // increment/snapshot winnow chains (suffixed CTEs over filtered
-    // derived tables); snapshot postings capped like the Spark side
-    "q_winnow_incr" ->
-      (s"WITH ${winnowCtes(3, 4, "_n",
-          "(SELECT doc_id, text FROM documents WHERE doc_id % 7 = 0) inc")}, " +
-        s"${winnowCtes(3, 4, "_o",
-          "(SELECT doc_id, text FROM documents WHERE doc_id % 7 <> 0) snap")}, " +
-        "capped AS (SELECT doc_id, fp FROM (SELECT doc_id, fp, row_number() " +
-        "OVER (PARTITION BY fp ORDER BY doc_id) AS rn FROM fps_o) WHERE rn <= 64) " +
-        "SELECT n.doc_id AS new_id, o.doc_id AS snap_id, count(*) AS n_shared " +
-        "FROM fps_n n JOIN capped o USING (fp) WHERE n.doc_id <> o.doc_id " +
-        "GROUP BY 1, 2 HAVING count(*) >= 2"),
-    // four winnow chains (two gram sizes × increment/snapshot), each
-    // resolution replaying the capped incremental probe with the
-    // identity-pair exclusion, full-outer-joined per (new, snap) pair
-    "q_winnow_incr_mk" -> {
-      val inc = "(SELECT doc_id, text FROM documents WHERE doc_id % 7 = 0) inc"
-      val snap = "(SELECT doc_id, text FROM documents WHERE doc_id % 7 <> 0) snap"
-      s"WITH ${winnowCtes(3, 4, "_ns", inc)}, ${winnowCtes(3, 4, "_os", snap)}, " +
-        s"${winnowCtes(8, 4, "_nl", inc)}, ${winnowCtes(8, 4, "_ol", snap)}, " +
-        "capped_s AS (SELECT doc_id, fp FROM (SELECT doc_id, fp, row_number() " +
-        "OVER (PARTITION BY fp ORDER BY doc_id) AS rn FROM fps_os) WHERE rn <= 64), " +
-        "ps AS (SELECT n.doc_id AS new_id, o.doc_id AS snap_id, count(*) AS n_shared " +
-        "FROM fps_ns n JOIN capped_s o USING (fp) WHERE n.doc_id <> o.doc_id " +
-        "GROUP BY 1, 2 HAVING count(*) >= 2), " +
-        "capped_l AS (SELECT doc_id, fp FROM (SELECT doc_id, fp, row_number() " +
-        "OVER (PARTITION BY fp ORDER BY doc_id) AS rn FROM fps_ol) WHERE rn <= 64), " +
-        "pl AS (SELECT n.doc_id AS new_id, o.doc_id AS snap_id, count(*) AS n_shared " +
-        "FROM fps_nl n JOIN capped_l o USING (fp) WHERE n.doc_id <> o.doc_id " +
-        "GROUP BY 1, 2 HAVING count(*) >= 1) " +
-        "SELECT coalesce(s.new_id, l.new_id) AS new_id, " +
-        "coalesce(s.snap_id, l.snap_id) AS snap_id, " +
-        "coalesce(s.n_shared, 0) AS n_shared_short, " +
-        "coalesce(l.n_shared, 0) AS n_shared_long, " +
-        "CASE WHEN coalesce(l.n_shared, 0) >= 1 THEN 'long' ELSE 'short' " +
-        "END AS match_class " +
-        "FROM ps s FULL JOIN pl l ON s.new_id = l.new_id AND s.snap_id = l.snap_id"
-    },
-    // two full winnow chains at k=3 and k=8 (suffixed CTEs), each pair
-    // table replaying the capped MOSS match, full-outer-joined per pair
-    "q_winnow_multik" ->
-      (s"WITH ${winnowCtes(3, 4, "_s")}, ${winnowCtes(8, 4, "_l")}, " +
-        "capped_s AS (SELECT doc_id, fp FROM (SELECT doc_id, fp, row_number() " +
-        "OVER (PARTITION BY fp ORDER BY doc_id) AS rn FROM fps_s) WHERE rn <= 64), " +
-        "ps AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS n_shared " +
-        "FROM capped_s a JOIN capped_s b USING (fp) WHERE a.doc_id < b.doc_id " +
-        "GROUP BY 1, 2 HAVING count(*) >= 2), " +
-        "capped_l AS (SELECT doc_id, fp FROM (SELECT doc_id, fp, row_number() " +
-        "OVER (PARTITION BY fp ORDER BY doc_id) AS rn FROM fps_l) WHERE rn <= 64), " +
-        "pl AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS n_shared " +
-        "FROM capped_l a JOIN capped_l b USING (fp) WHERE a.doc_id < b.doc_id " +
-        "GROUP BY 1, 2 HAVING count(*) >= 1) " +
-        "SELECT coalesce(s.a_id, l.a_id) AS a_id, " +
-        "coalesce(s.b_id, l.b_id) AS b_id, " +
-        "coalesce(s.n_shared, 0) AS n_shared_short, " +
-        "coalesce(l.n_shared, 0) AS n_shared_long, " +
-        "CASE WHEN coalesce(l.n_shared, 0) >= 1 THEN 'long' ELSE 'short' " +
-        "END AS match_class " +
-        "FROM ps s FULL JOIN pl l ON s.a_id = l.a_id AND s.b_id = l.b_id"),
-    // cap-truncation report over the same winnow chain (sums cast to
-    // BIGINT: DuckDB widens sum(BIGINT) to HUGEINT, Spark keeps LONG)
-    "q_winnow_stats" ->
-      (s"WITH $WINNOW_CTES, " +
-        "per_fp AS (SELECT fp, count(*) AS n_docs FROM fps GROUP BY fp) " +
-        "SELECT count(*) AS n_fps, " +
-        "count(CASE WHEN n_docs > 64 THEN 1 END) AS n_capped_fps, " +
-        "CAST(coalesce(sum(CASE WHEN n_docs > 64 THEN n_docs - 64 END), 0) " +
-        "AS BIGINT) AS n_dropped_postings, " +
-        "CAST(coalesce(max(n_docs), 0) AS BIGINT) AS max_docs_per_fp " +
-        "FROM per_fp"),
-    "q_search" -> {
-      val termList = SEARCH_TERMS.map(t => s"'$t'").mkString("[", ", ", "]")
-      s"WITH t AS (SELECT doc_id, $TOKS AS toks FROM documents), " +
-        s"tp AS (SELECT doc_id, unnest(list_intersect(toks, $termList)) AS token FROM t) " +
-        "SELECT doc_id FROM tp GROUP BY doc_id " +
-        s"HAVING count(DISTINCT token) = ${SEARCH_TERMS.size}"
-    },
-    "q_phrase" -> phraseSql(PHRASE_Q),
-    "q_phrase_idx" -> phraseSql(PHRASE_IDX_Q),
-    "q_phrase_batch" -> {
-      val slots = PHRASE_BATCH.flatMap { case (pid, p) =>
-        p.toLowerCase.split("[^\\p{L}\\p{Nd}]+").filter(_.nonEmpty)
-          .zipWithIndex.map { case (t, i) => s"($pid, '$t', $i)" }
-      }.mkString(", ")
-      val terms = PHRASE_BATCH.flatMap(_._2.toLowerCase
-          .split("[^\\p{L}\\p{Nd}]+")).filter(_.nonEmpty)
-        .distinct.map(t => s"'$t'").mkString(", ")
-      s"WITH t AS (SELECT doc_id, $TOKS AS toks FROM documents), " +
-        "p AS (SELECT doc_id, unnest(toks) AS token, " +
-        "unnest(range(len(toks))) AS pos FROM t), " +
-        s"qt(pid, token, slot) AS (VALUES $slots), " +
-        "ns AS (SELECT pid, count(*) AS n FROM qt GROUP BY pid), " +
-        s"tp AS (SELECT * FROM p WHERE token IN ($terms)), " +
-        "al AS (SELECT pid, doc_id, pos - slot AS start, " +
-        "count(DISTINCT slot) AS hit FROM tp JOIN qt USING (token) " +
-        "GROUP BY 1, 2, 3), " +
-        "m AS (SELECT pid, doc_id, start FROM al JOIN ns USING (pid) " +
-        "WHERE hit = n AND start >= 0) " +
-        "SELECT pid AS phrase_id, doc_id, count(*) AS n_matches, " +
-        "CAST(min(start) AS BIGINT) AS first_pos FROM m GROUP BY 1, 2"
-    },
-    // every intermediate CAST AS DOUBLE: DuckDB decimal/decimal division
-    // truncates scale, doubles match Spark bit-for-bit pre-round
-    "q_bm25" -> {
-      val termList = BM25_TERMS.map(t => s"'$t'").mkString("[", ", ", "]")
-      s"WITH t AS (SELECT doc_id, $TOKS AS toks FROM documents), " +
-        "stats AS (SELECT count(*) AS n_docs, " +
-        "avg(CAST(len(toks) AS DOUBLE)) AS avgdl FROM t), " +
-        s"tp AS (SELECT doc_id, unnest(list_intersect(toks, $termList)) AS token, toks FROM t), " +
-        "tp2 AS (SELECT doc_id, token, " +
-        "CAST(len(list_filter(toks, x -> x = token)) AS DOUBLE) AS tf, " +
-        "CAST(len(toks) AS DOUBLE) AS dl FROM tp), " +
-        "dfs AS (SELECT token, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df " +
-        "FROM tp2 GROUP BY token) " +
-        "SELECT doc_id, count(*) AS n_terms, " +
-        "round(sum(ln(1 + (n_docs - df + 0.5) / (df + 0.5)) * " +
-        "tf * (1.2 + 1) / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))), 4) AS score " +
-        "FROM tp2 JOIN dfs USING (token), stats GROUP BY doc_id"
-    },
-    // top-k serving: same scores, deterministic (score desc, doc_id) head
-    "q_bm25_topk" -> {
-      val termList = BM25_TERMS.map(t => s"'$t'").mkString("[", ", ", "]")
-      s"WITH t AS (SELECT doc_id, $TOKS AS toks FROM documents), " +
-        "stats AS (SELECT count(*) AS n_docs, " +
-        "avg(CAST(len(toks) AS DOUBLE)) AS avgdl FROM t), " +
-        s"tp AS (SELECT doc_id, unnest(list_intersect(toks, $termList)) AS token, toks FROM t), " +
-        "tp2 AS (SELECT doc_id, token, " +
-        "CAST(len(list_filter(toks, x -> x = token)) AS DOUBLE) AS tf, " +
-        "CAST(len(toks) AS DOUBLE) AS dl FROM tp), " +
-        "dfs AS (SELECT token, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df " +
-        "FROM tp2 GROUP BY token), " +
-        "sc AS (SELECT doc_id, count(*) AS n_terms, " +
-        "round(sum(ln(1 + (n_docs - df + 0.5) / (df + 0.5)) * " +
-        "tf * (1.2 + 1) / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))), 4) AS score " +
-        "FROM tp2 JOIN dfs USING (token), stats GROUP BY doc_id) " +
-        "SELECT doc_id, n_terms, score FROM sc " +
-        "ORDER BY score DESC, doc_id LIMIT 25"
-    },
-    // index-served BM25 must produce byte-identical scores to the direct
-    // path, so its oracle IS the direct path's SQL
-    "q_bm25_idx" -> {
-      val termList = BM25_TERMS.map(t => s"'$t'").mkString("[", ", ", "]")
-      s"WITH t AS (SELECT doc_id, $TOKS AS toks FROM documents), " +
-        "stats AS (SELECT count(*) AS n_docs, " +
-        "avg(CAST(len(toks) AS DOUBLE)) AS avgdl FROM t), " +
-        s"tp AS (SELECT doc_id, unnest(list_intersect(toks, $termList)) AS token, toks FROM t), " +
-        "tp2 AS (SELECT doc_id, token, " +
-        "CAST(len(list_filter(toks, x -> x = token)) AS DOUBLE) AS tf, " +
-        "CAST(len(toks) AS DOUBLE) AS dl FROM tp), " +
-        "dfs AS (SELECT token, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df " +
-        "FROM tp2 GROUP BY token) " +
-        "SELECT doc_id, count(*) AS n_terms, " +
-        "round(sum(ln(1 + (n_docs - df + 0.5) / (df + 0.5)) * " +
-        "tf * (1.2 + 1) / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))), 4) AS score " +
-        "FROM tp2 JOIN dfs USING (token), stats GROUP BY doc_id"
-    },
-    // batch-of-queries serving: queries as a VALUES table whose raw text
-    // is tokenized with the SAME expression as the corpus; df over the
-    // union of all batch terms (per-token global — identical either way);
-    // rank = row_number over (rounded score DESC, doc_id), ≤ k
-    "q_bm25_batch" -> {
-      val qVals = BM25_QUERIES
-        .map { case (id, q) => s"($id, '$q')" }.mkString(", ")
-      val qToks = TOKS.replace("lower(text)", "lower(query)")
-      s"WITH q AS (SELECT CAST(query_id AS BIGINT) AS query_id, query " +
-        s"FROM (VALUES $qVals) v(query_id, query)), " +
-        s"qt AS (SELECT query_id, unnest(list_distinct($qToks)) AS token FROM q), " +
-        s"t AS (SELECT doc_id, $TOKS AS toks FROM documents), " +
-        "stats AS (SELECT count(*) AS n_docs, " +
-        "avg(CAST(len(toks) AS DOUBLE)) AS avgdl FROM t), " +
-        "terms AS (SELECT DISTINCT token FROM qt), " +
-        "tp2 AS (SELECT doc_id, token, " +
-        "CAST(len(list_filter(toks, x -> x = token)) AS DOUBLE) AS tf, " +
-        "CAST(len(toks) AS DOUBLE) AS dl " +
-        "FROM t JOIN terms ON list_contains(toks, token)), " +
-        "dfs AS (SELECT token, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df " +
-        "FROM tp2 GROUP BY token), " +
-        "sc AS (SELECT qt.query_id, tp2.doc_id, count(*) AS n_terms, " +
-        "round(sum(ln(1 + (n_docs - df + 0.5) / (df + 0.5)) * " +
-        "tf * (1.2 + 1) / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))), 4) AS score " +
-        "FROM tp2 JOIN dfs USING (token) JOIN qt USING (token), stats " +
-        "GROUP BY qt.query_id, tp2.doc_id), " +
-        "r AS (SELECT query_id, doc_id, n_terms, score, " +
-        "row_number() OVER (PARTITION BY query_id " +
-        "ORDER BY score DESC, doc_id) AS rank FROM sc) " +
-        "SELECT query_id, doc_id, n_terms, score, rank FROM r WHERE rank <= 10"
-    },
-    // RM3 replay: feedback rank<=5 off the q_bm25_batch scoring CTEs,
-    // score-weighted tf pooling (grid-exact sums), 3 strongest new terms
-    // per query via NOT EXISTS, rescore of the expanded term set
-    "q_rm3" -> {
-      val qVals = BM25_QUERIES
-        .map { case (id, q) => s"($id, '$q')" }.mkString(", ")
-      val qToks = TOKS.replace("lower(text)", "lower(query)")
-      s"WITH q AS (SELECT CAST(query_id AS BIGINT) AS query_id, query " +
-        s"FROM (VALUES $qVals) v(query_id, query)), " +
-        s"qt AS (SELECT query_id, unnest(list_distinct($qToks)) AS token FROM q), " +
-        s"t AS (SELECT doc_id, $TOKS AS toks FROM documents), " +
-        "stats AS (SELECT count(*) AS n_docs, " +
-        "avg(CAST(len(toks) AS DOUBLE)) AS avgdl FROM t), " +
-        "terms AS (SELECT DISTINCT token FROM qt), " +
-        "tp2 AS (SELECT doc_id, token, " +
-        "CAST(len(list_filter(toks, x -> x = token)) AS DOUBLE) AS tf, " +
-        "CAST(len(toks) AS DOUBLE) AS dl " +
-        "FROM t JOIN terms ON list_contains(toks, token)), " +
-        "dfs AS (SELECT token, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df " +
-        "FROM tp2 GROUP BY token), " +
-        "sc AS (SELECT qt.query_id, tp2.doc_id, " +
-        "round(sum(ln(1 + (n_docs - df + 0.5) / (df + 0.5)) * " +
-        "tf * (1.2 + 1) / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))), 4) AS score " +
-        "FROM tp2 JOIN dfs USING (token) JOIN qt USING (token), stats " +
-        "GROUP BY qt.query_id, tp2.doc_id), " +
-        "fb AS (SELECT query_id, doc_id, score FROM (SELECT query_id, doc_id, score, " +
-        "row_number() OVER (PARTITION BY query_id ORDER BY score DESC, doc_id) AS rank " +
-        "FROM sc) WHERE rank <= 5), " +
-        "fpost AS (SELECT doc_id, token, CAST(count(*) AS BIGINT) AS tf FROM " +
-        "(SELECT doc_id, unnest(toks) AS token FROM t " +
-        "JOIN (SELECT DISTINCT doc_id FROM fb) USING (doc_id)) GROUP BY 1, 2), " +
-        "ew AS (SELECT fb.query_id, fpost.token, round(sum(fpost.tf * fb.score), 4) AS w " +
-        "FROM fb JOIN fpost USING (doc_id) GROUP BY 1, 2), " +
-        "ex AS (SELECT query_id, token FROM (SELECT ew.query_id, ew.token, " +
-        "row_number() OVER (PARTITION BY ew.query_id ORDER BY w DESC, ew.token) AS rn " +
-        "FROM ew WHERE NOT EXISTS (SELECT 1 FROM qt " +
-        "WHERE qt.query_id = ew.query_id AND qt.token = ew.token)) WHERE rn <= 3), " +
-        "qt2 AS (SELECT query_id, token FROM qt UNION SELECT query_id, token FROM ex), " +
-        "terms2 AS (SELECT DISTINCT token FROM qt2), " +
-        "tp3 AS (SELECT doc_id, token, " +
-        "CAST(len(list_filter(toks, x -> x = token)) AS DOUBLE) AS tf, " +
-        "CAST(len(toks) AS DOUBLE) AS dl " +
-        "FROM t JOIN terms2 ON list_contains(toks, token)), " +
-        "dfs2 AS (SELECT token, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df " +
-        "FROM tp3 GROUP BY token), " +
-        "sc2 AS (SELECT qt2.query_id, tp3.doc_id, count(*) AS n_terms, " +
-        "round(sum(ln(1 + (n_docs - df + 0.5) / (df + 0.5)) * " +
-        "tf * (1.2 + 1) / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))), 4) AS score " +
-        "FROM tp3 JOIN dfs2 USING (token) JOIN qt2 USING (token), stats " +
-        "GROUP BY qt2.query_id, tp3.doc_id), " +
-        "r2 AS (SELECT query_id, doc_id, n_terms, score, " +
-        "row_number() OVER (PARTITION BY query_id " +
-        "ORDER BY score DESC, doc_id) AS rank FROM sc2) " +
-        "SELECT query_id, doc_id, n_terms, score, rank FROM r2 WHERE rank <= 10"
-    },
-    // the dense hybrid leg alone: hashEmbed chain over corpus AND query
-    // strings, densified, cosine-ranked per query on (rounded score
-    // DESC, doc_id)
-    "q_dense_topk" -> {
-      val qVals = BM25_QUERIES
-        .map { case (id, q) => s"($id, '$q')" }.mkString(", ")
-      s"WITH q AS (SELECT CAST(query_id AS BIGINT) AS query_id, query " +
-        s"FROM (VALUES $qVals) v(query_id, query)), " +
-        s"${denseRunCtes(64, 10)} " +
-        "SELECT query_id, doc_id, score, CAST(rank AS BIGINT) AS rank FROM dr"
-    },
-    // RRF replay: the q_bm25_batch lexical chain (rank <= 10) UNION ALL
-    // the q_dense_topk dense chain (rank <= 10), fused per (query, doc)
-    // as a SORTED sum of 1/(60+rank) contributions (the Spark side folds
-    // in ascending order too — unordered double sums are
-    // summation-order-dependent), rounded to 6, re-ranked
-    "q_rrf" -> {
-      val qVals = BM25_QUERIES
-        .map { case (id, q) => s"($id, '$q')" }.mkString(", ")
-      val qToks = TOKS.replace("lower(text)", "lower(query)")
-      s"WITH q AS (SELECT CAST(query_id AS BIGINT) AS query_id, query " +
-        s"FROM (VALUES $qVals) v(query_id, query)), " +
-        s"qt AS (SELECT query_id, unnest(list_distinct($qToks)) AS token FROM q), " +
-        s"t AS (SELECT doc_id, $TOKS AS toks FROM documents), " +
-        "stats AS (SELECT count(*) AS n_docs, " +
-        "avg(CAST(len(toks) AS DOUBLE)) AS avgdl FROM t), " +
-        "terms AS (SELECT DISTINCT token FROM qt), " +
-        "tp2 AS (SELECT doc_id, token, " +
-        "CAST(len(list_filter(toks, x -> x = token)) AS DOUBLE) AS tf, " +
-        "CAST(len(toks) AS DOUBLE) AS dl " +
-        "FROM t JOIN terms ON list_contains(toks, token)), " +
-        "dfs AS (SELECT token, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df " +
-        "FROM tp2 GROUP BY token), " +
-        "sc AS (SELECT qt.query_id, tp2.doc_id, " +
-        "round(sum(ln(1 + (n_docs - df + 0.5) / (df + 0.5)) * " +
-        "tf * (1.2 + 1) / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))), 4) AS score " +
-        "FROM tp2 JOIN dfs USING (token) JOIN qt USING (token), stats " +
-        "GROUP BY qt.query_id, tp2.doc_id), " +
-        "lr AS (SELECT query_id, doc_id, rank FROM " +
-        "(SELECT query_id, doc_id, row_number() OVER (PARTITION BY query_id " +
-        "ORDER BY score DESC, doc_id) AS rank FROM sc) WHERE rank <= 10), " +
-        s"${denseRunCtes(64, 10)}, " +
-        "u AS (SELECT query_id, doc_id, rank FROM lr " +
-        "UNION ALL SELECT query_id, doc_id, rank FROM dr), " +
-        "f AS (SELECT query_id, doc_id, CAST(count(*) AS BIGINT) AS n_runs, " +
-        "round(list_sum(list_sort(list(1.0 / (60.0 + rank)))), 6) AS rrf_score " +
-        "FROM u GROUP BY 1, 2) " +
-        "SELECT query_id, doc_id, n_runs, rrf_score, rank FROM " +
-        "(SELECT query_id, doc_id, n_runs, rrf_score, " +
-        "CAST(row_number() OVER (PARTITION BY query_id " +
-        "ORDER BY rrf_score DESC, doc_id) AS BIGINT) AS rank FROM f) " +
-        "WHERE rank <= 10"
-    },
-    // greedy MMR unrolled per step over the dense-run candidates; the
-    // q CTE feeds denseRunCtes exactly as in q_dense_topk
-    "q_mmr" -> {
-      val qVals = BM25_QUERIES
-        .map { case (id, q) => s"($id, '$q')" }.mkString(", ")
-      s"WITH q AS (SELECT CAST(query_id AS BIGINT) AS query_id, query " +
-        s"FROM (VALUES $qVals) v(query_id, query)), " +
-        mmrSql(64, 10, 5, 0.7)
-    },
-    // vector sanity gate replay: norm/NaN per vector + one-row corpus
-    // stats; flag decisions run on the ROUNDED z/norm grid in both
-    // engines so float-sum order can't flip a threshold
-    "q_vec_quality" ->
-      ("WITH base AS (SELECT vec_id, CAST(len(embedding) AS BIGINT) AS n_dims, " +
-        "sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), " +
-        "CAST(embedding AS DOUBLE[]))) AS nrm, " +
-        "len(list_filter(embedding, x -> isnan(x))) > 0 AS has_nan " +
-        "FROM embeddings), " +
-        "stats AS (SELECT avg(nrm) AS mu, stddev_pop(nrm) AS sigma FROM base " +
-        "WHERE NOT has_nan AND n_dims = 64 AND nrm > 0), " +
-        "z AS (SELECT vec_id, n_dims, has_nan, round(nrm, 4) AS norm, " +
-        "round(CASE WHEN sigma > 0 THEN (nrm - mu) / sigma ELSE 0.0 END, 4) AS z " +
-        "FROM base, stats) " +
-        "SELECT vec_id, n_dims, has_nan, norm, z, " +
-        "(has_nan OR n_dims <> 64 OR norm = 0.0 OR abs(z) > 3.0) AS flag FROM z"),
-    // run-overlap replay: the q_bm25_batch lexical chain and the dense
-    // chain, set-intersected per query over a FULL OUTER join (q3 has no
-    // lexical row)
-    "q_run_overlap" -> {
-      s"WITH $twoRunsCtes, " +
-        "sa AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_a, " +
-        "list(doc_id) AS da FROM lr GROUP BY 1), " +
-        "sb AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_b, " +
-        "list(doc_id) AS db FROM dr GROUP BY 1), " +
-        "j AS (SELECT coalesce(sa.query_id, sb.query_id) AS query_id, " +
-        "coalesce(n_a, 0) AS n_a, coalesce(n_b, 0) AS n_b, " +
-        "CAST(len(list_intersect(coalesce(da, []), coalesce(db, []))) AS BIGINT) " +
-        "AS n_common FROM sa FULL OUTER JOIN sb ON sa.query_id = sb.query_id) " +
-        "SELECT query_id, n_a, n_b, n_common, " +
-        "CASE WHEN n_a + n_b - n_common > 0 THEN " +
-        "round(CAST(n_common AS DOUBLE) / (n_a + n_b - n_common), 4) " +
-        "ELSE 0.0 END AS jaccard, " +
-        "CASE WHEN least(n_a, n_b) > 0 THEN " +
-        "round(CAST(n_common AS DOUBLE) / least(n_a, n_b), 4) " +
-        "ELSE 0.0 END AS overlap_coef FROM j"
-    },
-    // RBO replay: tail sum per common doc from its first co-present
-    // depth; (1−p) as an explicit DOUBLE subtraction — DuckDB folds
-    // 1 - 0.9 in DECIMAL to a DIFFERENT double (the MMR lesson)
-    "q_rbo" -> {
-      val omp = "(CAST(1 AS DOUBLE) - CAST(0.9 AS DOUBLE))"
-      s"WITH $twoRunsCtes, " +
-        "pr AS (SELECT lr.query_id, greatest(lr.rank, dr.rank) AS m " +
-        "FROM lr JOIN dr USING (query_id, doc_id)), " +
-        "qq AS (SELECT DISTINCT query_id FROM " +
-        "(SELECT query_id FROM lr UNION ALL SELECT query_id FROM dr) u), " +
-        "rb AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_common, " +
-        "sum(list_sum(list_transform(range(m - 1, 10), d0 -> " +
-        s"$omp * power(CAST(0.9 AS DOUBLE), d0) / (d0 + 1)))) AS s " +
-        "FROM pr GROUP BY 1) " +
-        "SELECT qq.query_id, coalesce(rb.n_common, 0) AS n_common, " +
-        "round(coalesce(rb.s, 0.0), 4) AS rbo " +
-        "FROM qq LEFT JOIN rb USING (query_id)"
-    },
-    // Flesch replay: [.!?]+ segments with a letter (floored at 1),
-    // vowel-group runs per word (floored at 1), exact integer counts;
-    // the formula's constants promote to DOUBLE (no DECIMAL folding
-    // hazard: every product has a DOUBLE operand)
-    "q_readability" ->
-      (s"WITH t AS (SELECT doc_id, text, $TOKS AS toks FROM documents), " +
-        "r AS (SELECT doc_id, CAST(len(toks) AS INT) AS n_words, " +
-        "CAST(greatest(1, len(list_filter(string_split_regex(text, '[.!?]+'), " +
-        "x -> regexp_matches(x, '\\p{L}')))) AS BIGINT) AS n_sents, " +
-        "CAST(list_sum(list_transform(toks, w -> greatest(1, " +
-        "len(regexp_extract_all(w, '[aeiouy]+'))))) AS BIGINT) AS n_syll " +
-        "FROM t WHERE len(toks) > 0) " +
-        "SELECT doc_id, n_words, n_sents, n_syll, " +
-        "round(206.835 - 1.015 * (CAST(n_words AS DOUBLE) / n_sents) - " +
-        "84.6 * (CAST(n_syll AS DOUBLE) / n_words), 4) AS flesch FROM r"),
-    // distinct-n replay: unigrams + positional bigrams, per-source
-    // distinct/total gram counts
-    "q_diversity" ->
-      (s"WITH t AS (SELECT source, $TOKS AS toks FROM documents), " +
-        "u1 AS (SELECT source, unnest(toks) AS gram FROM t), " +
-        "g1 AS (SELECT source, gram, count(*) AS c FROM u1 GROUP BY 1, 2), " +
-        "d1 AS (SELECT source, 1 AS n, CAST(count(*) AS BIGINT) AS distinct_grams, " +
-        "CAST(sum(c) AS BIGINT) AS total_grams FROM g1 GROUP BY source), " +
-        "u2 AS (SELECT source, unnest(list_transform(range(len(toks) - 1), " +
-        "i -> toks[i+1] || ' ' || toks[i+2])) AS gram FROM t), " +
-        "g2 AS (SELECT source, gram, count(*) AS c FROM u2 GROUP BY 1, 2), " +
-        "d2 AS (SELECT source, 2 AS n, CAST(count(*) AS BIGINT) AS distinct_grams, " +
-        "CAST(sum(c) AS BIGINT) AS total_grams FROM g2 GROUP BY source), " +
-        "u AS (SELECT * FROM d1 UNION ALL SELECT * FROM d2) " +
-        "SELECT source, n, distinct_grams, total_grams, " +
-        "round(CAST(distinct_grams AS DOUBLE) / total_grams, 4) AS distinct_ratio " +
-        "FROM u"),
-    // PMI replay: positional adjacent pairs, three dictionary counts,
-    // one-row N; ln on exact integer ratios, top-50 on the rounded grid
-    "q_pmi" ->
-      (s"WITH t AS (SELECT $TOKS AS toks FROM documents), " +
-        "p AS (SELECT toks[i+1] AS x, toks[i+2] AS y FROM " +
-        "(SELECT toks, unnest(range(len(toks) - 1)) AS i FROM t)), " +
-        "px AS (SELECT x, count(*) AS c_x FROM p GROUP BY x), " +
-        "py AS (SELECT y, count(*) AS c_y FROM p GROUP BY y), " +
-        "pxy AS (SELECT x, y, count(*) AS c FROM p GROUP BY x, y), " +
-        "n AS (SELECT CAST(sum(c) AS BIGINT) AS n_pairs FROM pxy) " +
-        "SELECT x || ' ' || y AS bigram, CAST(c AS BIGINT) AS c, " +
-        "round(ln(CAST(c AS DOUBLE) * n_pairs / (c_x * c_y)), 4) AS pmi " +
-        "FROM pxy JOIN px USING (x) JOIN py USING (y), n " +
-        "WHERE c >= 5 ORDER BY pmi DESC, bigram LIMIT 50"),
-    // Zipf replay: top-100 word head (freq DESC, word — deterministic at
-    // the cutoff), least-squares on (ln rank, ln freq)
-    "q_zipf" ->
-      (s"WITH t AS (SELECT $TOKS AS toks FROM documents), " +
-        "wds AS (SELECT unnest(toks) AS word FROM t), " +
-        "c AS (SELECT word, count(*) AS c FROM wds GROUP BY word " +
-        "ORDER BY c DESC, word LIMIT 100), " +
-        "r AS (SELECT ln(CAST(row_number() OVER (ORDER BY c DESC, word) " +
-        "AS DOUBLE)) AS x, ln(CAST(c AS DOUBLE)) AS y FROM c), " +
-        "s AS (SELECT CAST(count(*) AS BIGINT) AS n_words, sum(x) AS sx, " +
-        "sum(y) AS sy, sum(x * y) AS sxy, sum(x * x) AS sxx FROM r) " +
-        "SELECT n_words, " +
-        "round((sxy - sx * sy / n_words) / (sxx - sx * sx / n_words), 4) AS slope, " +
-        "round(sy / n_words - ((sxy - sx * sy / n_words) / " +
-        "(sxx - sx * sx / n_words)) * sx / n_words, 4) AS intercept FROM s"),
-    // covariance replay: the (vec_id, i, x) long grid self-joined on
-    // vec_id — cov(i,j) = E[xy] - E[x]E[y], population form, rounded 6
-    "q_covariance" -> COVARIANCE_SQL,
-    // incremental maintenance contract: merged base+increment moments
-    // must reproduce the full-corpus covariance — the oracle IS the
-    // full replay
-    "q_covariance_incr" -> COVARIANCE_SQL,
-    // known-item eval: the q_bm25_batch scoring replay with 5-token-prefix
-    // queries, hits = rank of the query doc itself; MRR as exact
-    // lcm(1..10)-scaled integer sum (double reciprocal sums are
-    // summation-order-dependent across engines)
-    "q_retrieval_eval" ->
-      (s"WITH $KNOWN_ITEM_BM25_CTES, " +
-        "h AS (SELECT query_id, rank FROM r WHERE rank <= 10 AND doc_id = query_id), " +
-        "nq AS (SELECT CAST(count(*) AS BIGINT) AS n_queries FROM q), " +
-        "s AS (SELECT sum(CAST(2520 / rank AS BIGINT)) AS irr, " +
-        "sum(CASE WHEN rank = 1 THEN 1 ELSE 0 END) AS h1, count(*) AS hk FROM h) " +
-        "SELECT n_queries, " +
-        "round((coalesce(irr, 0) / 2520.0) / n_queries, 4) AS mrr, " +
-        "round(CAST(coalesce(h1, 0) AS DOUBLE) / n_queries, 4) AS recall_1, " +
-        "round(CAST(hk AS DOUBLE) / n_queries, 4) AS recall_k FROM nq, s"),
-    // nDCG@10 over the same known-item ranking chain with graded qrels
-    // (query doc rel 3, its two successor docs rel 2/1 where they exist);
-    // each log term q6-rounds as gain / (ln(pos+1)/ln(2)) — the exact
-    // expression the Spark side evaluates (libm-parity class)
-    "q_ndcg" ->
-      (s"WITH $KNOWN_ITEM_BM25_CTES, " +
-        "qr AS (SELECT q.query_id, q.query_id + g.range AS doc_id, " +
-        "CAST(3 - g.range AS BIGINT) AS rel FROM q, range(3) g), " +
-        "qre AS MATERIALIZED (SELECT qr.query_id, qr.doc_id, qr.rel " +
-        "FROM qr JOIN t ON t.doc_id = qr.doc_id), " +
-        "dcg AS (SELECT r.query_id, " +
-        "round(sum(round((power(2, qre.rel) - 1) / " +
-        "(ln(r.rank + 1.0) / ln(2.0)), 6)), 6) AS dcg " +
-        "FROM r JOIN qre ON r.query_id = qre.query_id AND r.doc_id = qre.doc_id " +
-        "WHERE r.rank <= 10 GROUP BY r.query_id), " +
-        "iw AS (SELECT query_id, rel, row_number() OVER (PARTITION BY query_id " +
-        "ORDER BY rel DESC, doc_id) AS i FROM qre), " +
-        "idcg AS (SELECT query_id, round(sum(round((power(2, rel) - 1) / " +
-        "(ln(i + 1.0) / ln(2.0)), 6)), 6) AS idcg FROM iw WHERE i <= 10 " +
-        "GROUP BY query_id) " +
-        "SELECT q.query_id, coalesce(dcg.dcg, 0.0) AS dcg, idcg.idcg, " +
-        "CASE WHEN idcg.idcg > 0 THEN round(coalesce(dcg.dcg, 0.0) / idcg.idcg, 4) " +
-        "END AS ndcg FROM q LEFT JOIN idcg USING (query_id) " +
-        "LEFT JOIN dcg USING (query_id)"),
-    // the q_bm25_batch scoring replay with query docs as their own query
-    // strings, minus the fingerprint-identical exclusion set, ranked
-    // AFTER exclusion
-    "q_lex_negatives" -> {
-      val qToks = TOKS.replace("lower(text)", "lower(query)")
-      s"WITH q AS (SELECT doc_id AS query_id, text AS query FROM documents WHERE doc_id < 3), " +
-        s"qt AS (SELECT query_id, unnest(list_distinct($qToks)) AS token FROM q), " +
-        s"t AS (SELECT doc_id, text, $TOKS AS toks FROM documents), " +
-        "stats AS (SELECT count(*) AS n_docs, " +
-        "avg(CAST(len(toks) AS DOUBLE)) AS avgdl FROM t), " +
-        "terms AS (SELECT DISTINCT token FROM qt), " +
-        "tp2 AS (SELECT doc_id, token, " +
-        "CAST(len(list_filter(toks, x -> x = token)) AS DOUBLE) AS tf, " +
-        "CAST(len(toks) AS DOUBLE) AS dl " +
-        "FROM t JOIN terms ON list_contains(toks, token)), " +
-        "dfs AS (SELECT token, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df " +
-        "FROM tp2 GROUP BY token), " +
-        "sc AS (SELECT qt.query_id, tp2.doc_id, count(*) AS n_terms, " +
-        "round(sum(ln(1 + (n_docs - df + 0.5) / (df + 0.5)) * " +
-        "tf * (1.2 + 1) / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))), 4) AS score " +
-        "FROM tp2 JOIN dfs USING (token) JOIN qt USING (token), stats " +
-        "GROUP BY qt.query_id, tp2.doc_id), " +
-        s"f AS (SELECT doc_id, ${fpSql("toks")} AS fp FROM t), " +
-        "qf AS (SELECT q.query_id, f.fp AS qfp FROM q JOIN f ON q.query_id = f.doc_id), " +
-        "excl AS (SELECT qf.query_id, f.doc_id FROM qf JOIN f ON f.fp = qf.qfp), " +
-        "fs AS (SELECT sc.query_id, sc.doc_id, sc.n_terms, sc.score FROM sc " +
-        "LEFT JOIN excl ON sc.query_id = excl.query_id AND sc.doc_id = excl.doc_id " +
-        "WHERE excl.doc_id IS NULL), " +
-        "r AS (SELECT query_id, doc_id, n_terms, score, " +
-        "row_number() OVER (PARTITION BY query_id " +
-        "ORDER BY score DESC, doc_id) AS rank FROM fs) " +
-        "SELECT query_id, doc_id, n_terms, score, rank FROM r WHERE rank <= 5"
-    },
-    // element-wise mean via aligned unnest/subscripts; means rounded to 6
-    // decimals (cross-engine sum order); long format — one row per
-    // (label, dim) — because the compare gate hashes scalar cells only
-    "q_embed_pool" ->
-      ("WITH e AS (SELECT label, unnest(CAST(embedding AS DOUBLE[])) AS x, " +
-        "generate_subscripts(embedding, 1) AS i FROM embeddings) " +
-        "SELECT label, count(*) AS n, CAST(i - 1 AS INT) AS dim, " +
-        "round(avg(x), 6) AS m FROM e GROUP BY label, i"),
-    // URL canonicalization replay: same injection, same regex parses,
-    // same normalization algebra (lowercase scheme/host, default-port
-    // drop, fragment drop, tracking-param filter + param sort, trailing
-    // slash) and the same multi-suffix registered-domain rule
-    "q_url_norm" ->
-      (s"WITH $urlCtes SELECT doc_id, url, norm_url, reg_domain FROM rd"),
-    "q_domain_stats" ->
-      (s"WITH $urlCtes SELECT reg_domain, " +
-        "CAST(count(*) AS BIGINT) AS n_docs, " +
-        "CAST(count(DISTINCT norm_url) AS BIGINT) AS n_urls, " +
-        "CAST(count(DISTINCT host) AS BIGINT) AS n_hosts, " +
-        "CAST(sum(n_chars) AS BIGINT) AS n_chars FROM rd GROUP BY reg_domain"),
-    // same salted md5 hash clock, same (hash, id) tie-break
-    "q_domain_cap" ->
-      (s"WITH $urlCtes, rk AS (SELECT doc_id, reg_domain, " +
-        "row_number() OVER (PARTITION BY reg_domain ORDER BY " +
-        "'0' || substring(md5('domcap' || CAST(doc_id AS VARCHAR)), 1, 8), " +
-        "doc_id) AS rn FROM rd) " +
-        s"SELECT doc_id, reg_domain FROM rk WHERE rn <= $DOMAIN_CAP"),
-    "q_k_anon" ->
-      ("SELECT c_nationkey, c_mktsegment, CAST(count(*) AS BIGINT) AS n, " +
-        s"CAST(count(*) < $K_ANON AS INT) AS k_violation " +
-        "FROM customer GROUP BY c_nationkey, c_mktsegment"),
-    "q_l_diversity" ->
-      ("SELECT c_nationkey, CAST(count(*) AS BIGINT) AS n, " +
-        "CAST(count(DISTINCT c_mktsegment) AS BIGINT) AS n_sensitive, " +
-        s"CAST(count(DISTINCT c_mktsegment) < $L_DIV AS INT) AS l_violation " +
-        "FROM customer GROUP BY c_nationkey"),
-    // license patterns interpolated from the Scala constants so the two
-    // engines can never drift on a regex
-    "q_license_scan" -> {
-      val spdx = TextAnalysis.SPDX_RE
-      val nameCases = TextAnalysis.LICENSE_NAMES.map { case (re, label) =>
-        s"CASE WHEN regexp_matches(text, '$re') THEN '$label' END"
-      }.mkString(", ")
-      "WITH inj AS (SELECT doc_id, text || " +
-        "CASE WHEN doc_id % 8 = 0 THEN ' SPDX-License-Identifier: MIT' ELSE '' END || " +
-        "CASE WHEN doc_id % 12 = 0 THEN ' Licensed under the Apache License, Version 2.0' ELSE '' END || " +
-        "CASE WHEN doc_id % 15 = 0 THEN ' under the GNU General Public License v3' ELSE '' END " +
-        "AS text FROM documents), " +
-        "lab AS (SELECT doc_id, unnest(list_filter([" +
-        s"CASE WHEN regexp_matches(text, '$spdx') THEN 'spdx:' || " +
-        s"regexp_extract(text, '$spdx', 1) END, $nameCases" +
-        "], x -> x IS NOT NULL)) AS license FROM inj) " +
-        "SELECT DISTINCT doc_id, license FROM lab"
-    },
-    // code-signals replay: same line classes, same symbol class (with
-    // DuckDB's explicit 'g' flag — its regexp_replace is first-match by
-    // default where Spark's is global), same integer thresholds
-    "q_code_signals" -> {
-      val block = "'" + CODE_BLOCK.replace("\n", "' || chr(10) || '") + "'"
-      "WITH inj AS (SELECT doc_id, text || " +
-        s"CASE WHEN doc_id % 9 = 0 THEN $block ELSE '' END AS text " +
-        "FROM documents), " +
-        "l AS (SELECT doc_id, text, " +
-        "list_filter(string_split(text, chr(10)), x -> x <> '') AS ne FROM inj), " +
-        "m AS (SELECT doc_id, len(ne) AS n, " +
-        "len(list_filter(ne, x -> regexp_matches(x, '[;{}]$'))) AS stmt, " +
-        "len(list_filter(ne, x -> regexp_matches(x, '^(  |\t)'))) AS ind, " +
-        "len(list_filter(ne, x -> regexp_matches(x, '^[ \t]*(//|#|/\\*)'))) AS com, " +
-        "length(text) - length(regexp_replace(text, '[{}()\\[\\];=<>]', '', 'g')) AS sym, " +
-        "length(text) AS tl, " +
-        "len(regexp_extract_all(text, '\\b(function|return|import|void|def)\\b')) AS kw " +
-        "FROM l) " +
-        "SELECT doc_id, CAST(n AS INT) AS n_lines, " +
-        "CASE WHEN n > 0 THEN round(CAST(stmt AS DOUBLE) / n, 4) ELSE 0.0 END AS stmt_line_frac, " +
-        "CASE WHEN n > 0 THEN round(CAST(ind AS DOUBLE) / n, 4) ELSE 0.0 END AS indent_frac, " +
-        "CASE WHEN n > 0 THEN round(CAST(com AS DOUBLE) / n, 4) ELSE 0.0 END AS comment_frac, " +
-        "CASE WHEN tl > 0 THEN round(CAST(sym AS DOUBLE) / tl, 4) ELSE 0.0 END AS sym_frac, " +
-        "CAST(kw AS INT) AS kw_hits, " +
-        "CAST((n > 0 AND stmt * 10 >= n * 3) OR (kw >= 2 AND sym * 40 >= tl) AS INT) AS is_code " +
-        "FROM m"
-    },
-    // bloom anti-join ≡ plain anti-join (no false negatives; flagged
-    // rows exactly adjudicated) — the oracle is the plain NOT IN
-    "q_domain_block" -> {
-      val blocked = BLOCKED_DOMAINS.map(b => s"'$b'").mkString(", ")
-      s"WITH $urlCtes SELECT doc_id, reg_domain FROM rd " +
-        s"WHERE reg_domain NOT IN ($blocked)"
-    },
-    // the q_ppl_mix surprisal + strict-below bucket chain (4 stages, no
-    // keep filter), then the q_shuffle_order shard/pos replay inside
-    // each (stage, shard) group — salt 'cur'
-    "q_curriculum" ->
-      (s"WITH terms AS (SELECT doc_id, unnest($TOKS) AS word FROM documents), " +
-        "tf AS (SELECT word, count(*) AS cnt FROM terms GROUP BY word), " +
-        "n AS (SELECT CAST(sum(cnt) AS DOUBLE) AS n_total FROM tf), " +
-        "s AS (SELECT doc_id, round(avg(-ln(cnt / n_total)), 4) AS avg_surprisal " +
-        "FROM terms JOIN tf USING (word), n GROUP BY doc_id), " +
-        "cnts AS (SELECT avg_surprisal, count(*) AS c FROM s GROUP BY 1), " +
-        "na AS (SELECT CAST(sum(c) AS DOUBLE) AS n_all FROM cnts), " +
-        "cum AS (SELECT avg_surprisal, c, sum(c) OVER (ORDER BY avg_surprisal " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM cnts), " +
-        s"b AS (SELECT avg_surprisal, CAST(floor((cum - c) * $CURRICULUM_STAGES " +
-        "/ n_all) AS INT) + 1 AS stage FROM cum, na), " +
-        "st AS (SELECT s.doc_id, s.avg_surprisal, b.stage " +
-        "FROM s JOIN b USING (avg_surprisal)), " +
-        "h AS (SELECT *, '0' || substring(md5('cur' || CAST(doc_id AS VARCHAR)), 1, 8) " +
-        "AS hk FROM st), " +
-        "sh AS (SELECT *, CAST(strpos('0123456789abcdef', substring(hk, 2, 1)) - 1 " +
-        "AS INT) AS shard FROM h) " +
-        "SELECT doc_id, avg_surprisal, stage, shard, " +
-        "CAST(row_number() OVER (PARTITION BY stage, shard " +
-        "ORDER BY hk, doc_id) AS INT) AS pos FROM sh"),
-    // per-column UNION ALL replay of the one-pass profile (CAST AS
-    // DOUBLE everywhere — the DECIMAL truncation lesson; quantile_cont
-    // is DuckDB's exact interpolated percentile)
-    "q_profile" -> PROFILE_COLS.map { c =>
-      s"SELECT '$c' AS col_name, CAST(count($c) AS BIGINT) AS n, " +
-        s"CAST(count(*) - count($c) AS BIGINT) AS n_null, " +
-        s"CAST(count(DISTINCT $c) AS BIGINT) AS n_distinct, " +
-        s"round(CAST(min($c) AS DOUBLE), 4) AS min, " +
-        s"round(CAST(max($c) AS DOUBLE), 4) AS max, " +
-        s"round(avg(CAST($c AS DOUBLE)), 4) AS mean, " +
-        s"round(stddev_samp(CAST($c AS DOUBLE)), 4) AS std, " +
-        s"round(quantile_cont(CAST($c AS DOUBLE), 0.5), 4) AS p50, " +
-        s"round(quantile_cont(CAST($c AS DOUBLE), 0.95), 4) AS p95 " +
-        "FROM lineitem"
-    }.mkString(" UNION ALL "),
-    // arrival-order incremental cap replay: base quota fill, then the
-    // increment ranked into each domain's remainder
-    "q_domain_cap_incr" ->
-      (s"WITH $urlCtes, " +
-        "base AS (SELECT doc_id, reg_domain FROM rd WHERE doc_id % 10 < 8), " +
-        "bk AS (SELECT doc_id, reg_domain, row_number() OVER " +
-        "(PARTITION BY reg_domain ORDER BY " +
-        "'0' || substring(md5('domcap' || CAST(doc_id AS VARCHAR)), 1, 8), " +
-        "doc_id) AS rn FROM base), " +
-        s"cnt AS (SELECT reg_domain, count(*) AS c FROM bk WHERE rn <= $DOMAIN_CAP_INCR " +
-        "GROUP BY reg_domain), " +
-        "inc AS (SELECT doc_id, reg_domain FROM rd WHERE doc_id % 10 >= 8), " +
-        "ik AS (SELECT doc_id, reg_domain, row_number() OVER " +
-        "(PARTITION BY reg_domain ORDER BY " +
-        "'0' || substring(md5('domcap' || CAST(doc_id AS VARCHAR)), 1, 8), " +
-        "doc_id) AS rn FROM inc) " +
-        "SELECT ik.doc_id, ik.reg_domain FROM ik LEFT JOIN cnt USING (reg_domain) " +
-        s"WHERE ik.rn <= $DOMAIN_CAP_INCR - coalesce(cnt.c, 0)"),
-    // frontier replay: base fingerprints, NOT IN probe, keep-first
-    "q_url_frontier" ->
-      (s"WITH $urlCtes, " +
-        "bse AS (SELECT md5(norm_url) AS url_fp FROM rd WHERE doc_id % 10 < 8 " +
-        "GROUP BY 1), " +
-        "inc AS (SELECT doc_id, md5(norm_url) AS url_fp FROM rd " +
-        "WHERE doc_id % 10 >= 8) " +
-        "SELECT min(doc_id) AS doc_id, url_fp FROM inc " +
-        "WHERE url_fp NOT IN (SELECT url_fp FROM bse) GROUP BY url_fp"),
-    // both policies' batch algebra replayed: per-batch n·max − Σ, then
-    // the one-row fold (BIGINT everywhere)
-    "q_padding_waste" -> {
-      def leg(bucketCase: String, label: String, x: String) =
-        s"b$x AS (SELECT doc_id, n, $bucketCase AS bucket, " +
-          "'0' || substring(md5('lb' || CAST(doc_id AS VARCHAR)), 1, 8) AS hk FROM t), " +
-          s"r$x AS (SELECT n, bucket, substring(hk, 2, 1) AS shard, " +
-          "CAST(row_number() OVER (PARTITION BY bucket, substring(hk, 2, 1) " +
-          s"ORDER BY hk, doc_id) - 1 AS INT) AS rk FROM b$x), " +
-          s"g$x AS (SELECT bucket, shard, rk // 8 AS batch_idx, " +
-          "CAST(count(*) AS BIGINT) AS bn, CAST(max(n) AS BIGINT) AS mx, " +
-          s"CAST(sum(n) AS BIGINT) AS sm FROM r$x GROUP BY 1, 2, 3), " +
-          s"p$x AS (SELECT '$label' AS policy, CAST(count(*) AS BIGINT) AS n_batches, " +
-          "CAST(sum(bn) AS BIGINT) AS n_docs, CAST(sum(sm) AS BIGINT) AS total_tokens, " +
-          "CAST(sum(bn * mx - sm) AS BIGINT) AS padded_slots, " +
-          "round(CAST(sum(bn * mx - sm) AS DOUBLE) / " +
-          s"(sum(bn * mx - sm) + sum(sm)), 4) AS waste_frac FROM g$x)"
-      s"WITH t AS (SELECT doc_id, greatest(len($TOKS), 0) AS n FROM documents), " +
-        leg("CASE WHEN n <= 16 THEN 16 WHEN n <= 32 THEN 32 WHEN n <= 64 THEN 64 " +
-          "WHEN n <= 128 THEN 128 ELSE 2147483647 END", "bucketed", "1") + ", " +
-        leg("CASE WHEN n <= 1048576 THEN 1048576 ELSE 2147483647 END",
-          "unbucketed", "2") +
-        " SELECT * FROM p1 UNION ALL SELECT * FROM p2"
-    },
-    // layout-independent write invariants only (range boundaries are
-    // sampled): file count, row conservation, disjoint zval ranges
-    "q_zorder_files" ->
-      "SELECT 8 AS n_files, count(*) AS total_rows, 0 AS n_overlaps FROM lineitem",
-    // Morton-key replay: identical affine quantization (BIGINT div) and
-    // bit-plane interleave, bucket = top-4-bits of the 16-bit key
-    "q_zorder" -> {
-      val terms = (for (b <- 0 until 8) yield Seq(
-        s"((qp // ${1L << b}) % 2) * ${1L << (2 * b)}",
-        s"((qs // ${1L << b}) % 2) * ${1L << (2 * b + 1)}")).flatten
-        .mkString(" + ")
-      "WITH st AS (SELECT CAST(min(l_partkey) AS BIGINT) AS minp, " +
-        "CAST(max(l_partkey) AS BIGINT) AS maxp, " +
-        "CAST(min(l_suppkey) AS BIGINT) AS mins, " +
-        "CAST(max(l_suppkey) AS BIGINT) AS maxs FROM lineitem), " +
-        "q AS (SELECT l_partkey, l_suppkey, " +
-        "((CAST(l_partkey AS BIGINT) - minp) * 256) // (maxp - minp + 1) AS qp, " +
-        "((CAST(l_suppkey AS BIGINT) - mins) * 256) // (maxs - mins + 1) AS qs " +
-        "FROM lineitem, st), " +
-        s"z AS (SELECT l_partkey, l_suppkey, $terms AS zval FROM q) " +
-        "SELECT zval // 4096 AS bucket, CAST(count(*) AS BIGINT) AS n, " +
-        "CAST(max(l_partkey) - min(l_partkey) AS BIGINT) AS span_l_partkey, " +
-        "CAST(max(l_suppkey) - min(l_suppkey) AS BIGINT) AS span_l_suppkey " +
-        "FROM z GROUP BY bucket"
-    },
-    // hyperplane-LSH candidate pairs: the seeded planes are plan
-    // literals (Similarity.lshPlanes), replayed through dLit so the
-    // raw-double sign fold is bit-exact; intra-bucket lower-id pairs
-    // exactly rescored at rounded cosine
-    "q_lsh_pairs" ->
-      (s"WITH $lshPairCtes " +
-        "SELECT a_id, b_id, cos FROM p WHERE cos >= -1.0"),
-    // 2-table (seeds 42, 43) 6-plane multi-probe LSH NN: left side
-    // probes its own bucket + every Hamming-1 flip, candidates exactly
-    // rescored, per-vector argmax on the RAW cosine with lowest-id
-    // tie-break (the struct-max (cos, -b_id) order), rounded after
-    {
-      val probes = ("r.bucket" +: (0 until 6).map(i =>
-        s"xor(r.bucket, ${1L << i})")).mkString(", ")
-      "q_nn_lsh" ->
-        (s"WITH $UNIT_VEC_CTES, " +
-          s"pl0(pl0) AS (SELECT ${lshPlanesSqlLit(64, 6, 42L)}), " +
-          s"pl1(pl1) AS (SELECT ${lshPlanesSqlLit(64, 6, 43L)}), " +
-          s"b AS (SELECT vec_id, e, 0 AS tbl, ${lshBucketFoldSql("e", "pl0", 6)} AS bucket FROM u, pl0 " +
-          "UNION ALL " +
-          s"SELECT vec_id, e, 1 AS tbl, ${lshBucketFoldSql("e", "pl1", 6)} AS bucket FROM u, pl1), " +
-          s"l AS (SELECT tbl, unnest([$probes]) AS pb, " +
-          "vec_id AS a_id, e AS a_e FROM b r), " +
-          "c AS (SELECT l.a_id, r.vec_id AS b_id, " +
-          "list_dot_product(l.a_e, r.e) AS cs " +
-          "FROM l JOIN b r ON l.tbl = r.tbl AND l.pb = r.bucket " +
-          "AND l.a_id <> r.vec_id), " +
-          "rk AS (SELECT a_id, b_id, cs, row_number() OVER " +
-          "(PARTITION BY a_id ORDER BY cs DESC, b_id ASC) AS rn FROM c) " +
-          "SELECT a_id, CAST(b_id AS BIGINT) AS nn_id, round(cs, 4) AS cos " +
-          "FROM rk WHERE rn = 1")
-    },
-    // the q_lsh_pairs candidates at rounded cos >= 0.99 through the
-    // q_dedup_clusters min-label recursion; kept = all vectors minus
-    // non-root cluster members (dedupCorpus's anti-join)
-    "q_embed_dedup" ->
-      (s"WITH RECURSIVE $lshPairCtes, " +
-        "prs AS (SELECT a_id, b_id FROM p WHERE cos >= 0.99), " +
-        "edges AS (SELECT a_id AS src, b_id AS dst FROM prs " +
-        "UNION SELECT b_id, a_id FROM prs), " +
-        "reach(id, lbl) AS (SELECT src, src FROM edges " +
-        "UNION SELECT e2.src, r.lbl FROM edges e2 JOIN reach r ON e2.dst = r.id), " +
-        "cl AS (SELECT id, min(lbl) AS cluster_id FROM reach GROUP BY id), " +
-        "drp AS (SELECT id FROM cl WHERE id <> cluster_id) " +
-        "SELECT count(*) AS n_kept FROM embeddings " +
-        "WHERE vec_id NOT IN (SELECT id FROM drp)"),
-    // cell occupancy under the PINNED sf0.01 IVF centroids: argmax dot
-    // with first-maximum (lowest-cell) tie-break — list_position returns
-    // the FIRST index of the max, matching the struct-max (d, -cell)
-    // order; the live query still trains, so trainer drift goes red
-    "q_cluster_sizes" -> {
-      val cl = "[" + IVF_CENTROIDS_PINNED
-        .map(c => "[" + c.map(dLit).mkString(", ") + "]").mkString(", ") + "]"
-      s"WITH $UNIT_VEC_CTES, " +
-        s"cc(cc) AS (SELECT $cl), " +
-        "d AS (SELECT vec_id, list_transform(range(1, 17), i -> " +
-        "list_dot_product(e, cc[i])) AS ds FROM u, cc), " +
-        "a AS (SELECT vec_id, CAST(list_position(ds, list_max(ds)) - 1 AS INT) " +
-        "AS cell FROM d) " +
-        "SELECT cell, count(*) AS cnt FROM a GROUP BY cell"
-    },
-    // xxhash64 sketch families, oracled since round 15 via the pin
-    // doctrine (SketchPins + tools/pin_sketch_r15.scala): downstream
-    // joins replay mechanically, live kernels drift → red. q_minhash_lsh
-    // and q_simhash are sf0.01-pinned (check_oracle.py allowlist);
-    // the media pins are sf-independent (synthetic media_id hashing).
-    "q_minhash_lsh" -> minhashLshSql,
-    "q_simhash" -> simhashSql,
-    // training/sketch OUTPUT pins (OutputPins.scala, round 15): the live
-    // queries keep training/sketching/deflating — drift flips red
-    "q_bpe_learn" -> bpeLearnSql,
-    "q_unigram_learn" -> unigramLearnSql,
-    "q_hll" -> hllSql,
-    "q_compression" -> compressionSql,
-    "q_pack_shards" -> packShardsSql,
-    // media features: n_media / avg_width / bin0_total replay LIVE
-    // (bin 0 of the 16-bin byte histogram = bytes 0x00-0x0F; in UTF-8
-    // a codepoint <= 15 is one byte and no continuation byte is < 0x80,
-    // so the char-class count equals the byte count); only the stub
-    // decoder's xxhash64 widths are pinned — as exact per-lang integer
-    // SUMS (tools note in /tmp/pin_media recorder form), so the avg
-    // division replays bit-for-bit. sf0.01-pinned (allowlisted).
-    "q_media_features" ->
-      ("WITH g AS (SELECT lang AS kind, CAST(count(*) AS BIGINT) AS n_media, " +
-        "avg(CAST(n_chars AS DOUBLE)) AS avg_width, " +
-        "CAST(coalesce(sum(len(regexp_extract_all(text, '[\\x00-\\x0f]'))), 0) AS BIGINT) AS ctl " +
-        "FROM documents GROUP BY lang), " +
-        "dw(kind, sw, n) AS (VALUES ('de', 35165, 70), ('en', 118131, 218), " +
-        "('es', 39471, 73), ('fr', 36951, 64), ('zh', 45695, 75)) " +
-        "SELECT g.kind, g.n_media, g.avg_width, " +
-        "CAST(dw.sw AS DOUBLE) / dw.n AS avg_dec_width, g.ctl AS bin0_total " +
-        "FROM g JOIN dw USING (kind)"),
-    "q_image_dedup" -> bandedHammingSql(graft.model.SketchPins.imageDh),
-    "q_audio_dedup" -> bandedHammingSql(graft.model.SketchPins.audioDh)
-  )
+  /** Every query, grouped by operator module. */
+  val all: Seq[QueryDef] =
+    EssentialsQueries.all ++ DedupQueries.all ++ SimilarityQueries.all ++
+      TextAnalysisQueries.all ++ TextEvalQueries.all ++ RetrievalQueries.all ++
+      SamplingQueries.all ++ CurationQueries.all ++ PackingQueries.all ++
+      PreferenceQueries.all ++ MultimodalQueries.all
+
+  /** Query name → builder over (session, data dir). Renders no oracle SQL. */
+  lazy val queries: Map[String, Q] = all.iterator.map(q => q.name -> q.build).toMap
+
+  /** Query name → DuckDB SQL over the same parquet tables. */
+  def oracleSql: Map[String, String] = all.iterator.map(q => q.name -> q.oracle()).toMap
 }

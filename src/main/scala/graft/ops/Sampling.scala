@@ -32,7 +32,7 @@ object Sampling {
     concat(lit("0"), substring(md5(concat(lit(salt), id.cast("string"))), 1, 8))
 
   /** 9-digit hex threshold selecting `rate` of the 32-bit hash space.
-    * `private[graft]` so SparkEntry's DuckDB oracle strings interpolate the
+    * `private[graft]` so the queries' DuckDB oracle strings interpolate the
     * same constants instead of hand-duplicating them.
     */
   private[graft] def hexThreshold(rate: Double): String = {

@@ -336,7 +336,7 @@ object TextAnalysis {
     * padded text), so counting is `(len(s) - len(replace(s, g))) / len(g)` —
     * pure codegen'd string arithmetic, zero regex, and character-identical
     * in the DuckDB oracle (the SQL twin is generated from this same
-    * constant in SparkEntry). Grams shared across related languages
+    * constant in `queries.Shared`). Grams shared across related languages
     * (" de" in de/fr/pt) are fine: scores are sums, argmax disambiguates.
     */
   private[graft] val LANG_PROFILES: Seq[(String, Seq[String])] = Seq(
@@ -401,7 +401,7 @@ object TextAnalysis {
       lit("und"))
 
   /** Deterministic language argmax over reference score columns — the SQL
-    * twin is generated as LANG_PRED_CASE in SparkEntry, so the tie-break
+    * twin is generated as LANG_PRED_CASE in `queries.Shared`, so the tie-break
     * rule (first profile language reaching the max; 'und' when no gram
     * hits) lives in one Scala place and one generated-SQL place; the
     * production kernel implements the same rule (spec-pinned).
@@ -3850,35 +3850,6 @@ object TextAnalysis {
   private[graft] val GOPHER_DUP: Seq[(Int, (Int, Int))] =
     Seq(5 -> (3, 20), 6 -> (7, 50), 7 -> (13, 100), 8 -> (3, 25),
       9 -> (11, 100), 10 -> (1, 10))
-
-  /** Run-length encoding of a SORTED string array as
-    * ARRAY<STRUCT<c:int, len:int>> — one struct per distinct value with
-    * its occurrence count and char length minus `sepAdj` (the n-gram
-    * space separators, so `len` is pure token char mass). O(m) over the
-    * sorted input: run starts are the positions whose value differs from
-    * their predecessor, run length is the gap to the next start.
-    *
-    * `s` MUST be a materialized column (not an inline sort_array chain):
-    * the lambdas probe it with element_at per position, and an inline
-    * expression would re-sort per element (the pmiCollocations
-    * re-tokenization trap).
-    */
-  private def sortedRuns(s: Column, sepAdj: Int): Column = {
-    val m = size(s)
-    // the greatest() keeps the probe index valid at i=1 without relying
-    // on Or short-circuiting under ANSI (s[1] vs s[1] is a no-op there —
-    // the first disjunct already marks position 1 a run start)
-    val starts = filter(sequence(lit(1), m), i =>
-      (i === 1) || (element_at(s, i) =!=
-        element_at(s, greatest(i - 1, lit(1)))))
-    val ends = concat(
-      slice(starts, lit(2), greatest(size(starts) - 1, lit(0))),
-      array(m + 1))
-    when(m >= 1, zip_with(starts, ends, (a, b) => struct(
-        (b - a).as("c"),
-        (length(element_at(s, a)) - lit(sepAdj)).as("len"))))
-      .otherwise(array().cast("array<struct<c:int,len:int>>"))
-  }
 
   /** The COMPLETE Gopher/MassiveText gate: the structural rules
     * ([[gopherRules]]) AND the repetition battery ([[gopherRepetition]])

@@ -1,6 +1,6 @@
 // Round-15 pin recorder (the tools/pin_ter_r14.scala doctrine, applied to
 // the four remaining sketch exemptions): print the sf0.01 xxhash64-family
-// sketch outputs as Scala literal lines for SparkEntry's pinned oracles.
+// sketch outputs as Scala literal lines for graft.model.SketchPins.
 //   - q_minhash_lsh: multi-doc band groups (singleton buckets generate no
 //     pairs, so only groups are pinned) + the full 32-lane signatures of
 //     the docs in those groups — DuckDB replays pair-join, eq-count and
