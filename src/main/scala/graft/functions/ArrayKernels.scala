@@ -2,11 +2,13 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, GenericInternalRow, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Custom Catalyst expressions for the hot array kernels.
   *
@@ -15,16 +17,62 @@ import org.apache.spark.sql.types._
   * executed 4M times per stage or a 32-hash MinHash over every shingle of
   * every document is exactly the hot path WholeStageCodegen exists for.
   *
-  * The rule: each kernel's algorithm is ONE Scala method (`compute`, or a
-  * static helper on this object), called from both the interpreted
-  * `nullSafeEval` and the generated code — `doGenCode` only emits
-  * `$ref.compute(...)` against `ctx.addReferenceObj(..., this, ...)`, so
-  * the two paths cannot drift. A loop written out as generated Java is
-  * allowed only where baking the kernel's parameters into the code as
-  * constants was measured to pay; [[MinHashSignature]] is the one such
-  * kernel.
+  * Each kernel's algorithm is ONE Scala method, `compute`. A kernel
+  * extends [[UnaryKernel]], [[BinaryKernel]] or [[TernaryKernel]], which
+  * call `compute` from both the interpreted `nullSafeEval` and the
+  * generated code (`$ref.compute(...)` against `ctx.addReferenceObj(...,
+  * this, ...)`), so the two paths cannot drift; its input types are
+  * Spark's `ExpectsInputTypes` check over `inputTypes`, with no casts.
+  * Outside that shape:
+  *  - [[MinHashSignature]] writes its loop out as generated Java: baking
+  *    its parameters into the code as constants was measured to pay;
+  *  - [[PpmDHash]] unboxes its null-or-`Long` result in its own code;
+  *  - [[GramMaxMerge]] and [[GramClipStats]] keep a hand-written type
+  *    check: they match struct field names case-sensitively, which
+  *    `inputTypes` does not under case-insensitive analysis;
+  *  - [[MmrGreedy]] is interpreted only (`CodegenFallback`: its rows are
+  *    query-batch-sized) and checks struct field types but not names.
   */
 object ArrayKernels {
+
+  /** One-input kernel: the class supplies `dataType`, `inputTypes` and
+    * `compute`. `mayReturnNull` marks a `compute` that returns null for
+    * an input it cannot parse. No input type of any kernel may be
+    * `AnyRef`: the generated code's compiler also sees the erased bridge
+    * `Object compute(Object)` and rejects a second `compute(Object)`.
+    */
+  private[functions] trait UnaryKernel[A, R] extends UnaryExpression with ExpectsInputTypes {
+    def compute(a: A): R
+    protected def mayReturnNull: Boolean = false
+    override def nullable: Boolean = mayReturnNull || child.nullable
+    override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[A])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val ref = ctx.addReferenceObj(prettyName, this, getClass.getName)
+      val isNull = if (mayReturnNull) s"\n${ev.isNull} = ${ev.value} == null;" else ""
+      nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);$isNull")
+    }
+  }
+
+  /** Two-input kernel: [[UnaryKernel]]'s wiring over `left` and `right`. */
+  private[functions] trait BinaryKernel[A, B, R] extends BinaryExpression with ExpectsInputTypes {
+    def compute(a: A, b: B): R
+    override def nullSafeEval(a: Any, b: Any): Any = compute(a.asInstanceOf[A], b.asInstanceOf[B])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val ref = ctx.addReferenceObj(prettyName, this, getClass.getName)
+      nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.compute($a, $b);")
+    }
+  }
+
+  /** Three-input kernel: [[UnaryKernel]]'s wiring over three children. */
+  private[functions] trait TernaryKernel[A, B, C, R] extends TernaryExpression with ExpectsInputTypes {
+    def compute(a: A, b: B, c: C): R
+    override def nullSafeEval(a: Any, b: Any, c: Any): Any =
+      compute(a.asInstanceOf[A], b.asInstanceOf[B], c.asInstanceOf[C])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val ref = ctx.addReferenceObj(prettyName, this, getClass.getName)
+      nullSafeCodeGen(ctx, ev, (a, b, c) => s"${ev.value} = $ref.compute($a, $b, $c);")
+    }
+  }
 
   /** `poisson1_weight(key, lane)` — the deterministic Poisson(1)
     * bootstrap multiplicity: md5 the UTF-8 bytes of `key`, read 32-bit
@@ -38,7 +86,7 @@ object ArrayKernels {
     * codegen (measured 9×: 105 s vs ~13 s at 100M draws).
     */
   case class Poisson1Weight(left: Expression, right: Expression,
-      thresholds: Seq[Double]) extends BinaryExpression {
+      thresholds: Seq[Double]) extends BinaryKernel[UTF8String, Int, Int] {
     require(thresholds.nonEmpty && thresholds == thresholds.sorted,
       "poisson1_weight thresholds must be sorted and non-empty")
     private val ts: Array[Double] = thresholds.toArray
@@ -48,14 +96,8 @@ object ArrayKernels {
           java.security.MessageDigest.getInstance("MD5")
       }
     override def dataType: DataType = IntegerType
-    override def checkInputDataTypes(): TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (StringType, IntegerType) => TypeCheckResult.TypeCheckSuccess
-        case (l, r) => TypeCheckResult.TypeCheckFailure(
-          s"poisson1_weight requires (STRING, INT), got ${l.catalogString}, ${r.catalogString}")
-      }
-    def compute(key: org.apache.spark.unsafe.types.UTF8String,
-        lane: Int): Int = {
+    override def inputTypes = Seq(StringType, IntegerType)
+    def compute(key: UTF8String, lane: Int): Int = {
       require(lane >= 0 && lane <= 3, s"poisson1_weight lane $lane not in 0..3")
       val md = digest.get()
       md.reset()
@@ -68,14 +110,6 @@ object ArrayKernels {
       while (k < ts.length && u >= ts(k)) k += 1
       k
     }
-    override def nullSafeEval(a: Any, b: Any): Any =
-      compute(a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-        b.asInstanceOf[Int])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("poissonWeightKernel", this,
-        classOf[Poisson1Weight].getName)
-      nullSafeCodeGen(ctx, ev, (k, l) => s"${ev.value} = $ref.compute($k, $l);")
-    }
     override protected def withNewChildrenInternal(newLeft: Expression,
         newRight: Expression): Expression =
       copy(left = newLeft, right = newRight)
@@ -83,27 +117,15 @@ object ArrayKernels {
 
   /** `array_dot(a, b)` — Σ aᵢ·bᵢ over two ARRAY<DOUBLE> columns. */
   case class ArrayDotProduct(left: Expression, right: Expression)
-      extends BinaryExpression {
+      extends BinaryKernel[ArrayData, ArrayData, Double] {
     override def dataType: DataType = DoubleType
-    override def checkInputDataTypes(): TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) => TypeCheckResult.TypeCheckSuccess
-        case (l, r) => TypeCheckResult.TypeCheckFailure(
-          s"array_dot requires two ARRAY<DOUBLE>, got ${l.catalogString} and ${r.catalogString}")
-      }
-
+    override def inputTypes = Seq(ArrayType(DoubleType), ArrayType(DoubleType))
     def compute(x: ArrayData, y: ArrayData): Double = {
       val n = math.min(x.numElements(), y.numElements())
       var s = 0.0
       var i = 0
       while (i < n) { s += x.getDouble(i) * y.getDouble(i); i += 1 }
       s
-    }
-    override def nullSafeEval(a: Any, b: Any): Any =
-      compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("dotKernel", this, classOf[ArrayDotProduct].getName)
-      nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.compute($a, $b);")
     }
     override protected def withNewChildrenInternal(newLeft: Expression,
         newRight: Expression): Expression = copy(left = newLeft, right = newRight)
@@ -117,18 +139,12 @@ object ArrayKernels {
     * need no dedup: duplicates never change a min.
     */
   case class MinHashSignature(child: Expression, shingleK: Int, a: Array[Long],
-      b: Array[Long], p: Long) extends UnaryExpression {
+      b: Array[Long], p: Long) extends UnaryKernel[ArrayData, ArrayData] {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"minhash_sig requires ARRAY<BIGINT>, got ${other.catalogString}")
-      }
+    override def inputTypes = Seq(ArrayType(LongType))
 
     private def k = a.length
-    override def nullSafeEval(in: Any): Any = {
-      val hs = in.asInstanceOf[ArrayData]
+    def compute(hs: ArrayData): ArrayData = {
       val n = hs.numElements()
       val mins = Array.fill(k)(Long.MaxValue)
       // docs with fewer than shingleK tokens have an EMPTY shingle set:
@@ -156,7 +172,7 @@ object ArrayKernels {
     // `$ref.compute` call form (400k rows, local[4], median of 7 runs, two
     // rounds), the call form was 9-17 % slower (3663 -> 3975 ms and
     // 3305 -> 3882 ms); the other array kernels moved by at most ~9 %
-    // either way. Parity with `nullSafeEval` is pinned in PropertySpec.
+    // either way. Parity with `compute` is pinned in PropertySpec.
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val aRef = ctx.addReferenceObj("minhashA", a, "long[]")
       val bRef = ctx.addReferenceObj("minhashB", b, "long[]")
@@ -198,27 +214,15 @@ object ArrayKernels {
     * agree; the MinHash similarity estimate numerator, codegen'd.
     */
   case class ArrayEqCount(left: Expression, right: Expression)
-      extends BinaryExpression {
+      extends BinaryKernel[ArrayData, ArrayData, Int] {
     override def dataType: DataType = IntegerType
-    override def checkInputDataTypes(): TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
-        case (l, r) => TypeCheckResult.TypeCheckFailure(
-          s"array_eq_count requires two ARRAY<BIGINT>, got ${l.catalogString} and ${r.catalogString}")
-      }
-
+    override def inputTypes = Seq(ArrayType(LongType), ArrayType(LongType))
     def compute(x: ArrayData, y: ArrayData): Int = {
       val n = math.min(x.numElements(), y.numElements())
       var c = 0
       var i = 0
       while (i < n) { if (x.getLong(i) == y.getLong(i)) c += 1; i += 1 }
       c
-    }
-    override def nullSafeEval(a: Any, b: Any): Any =
-      compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("eqCountKernel", this, classOf[ArrayEqCount].getName)
-      nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.compute($a, $b);")
     }
     override protected def withNewChildrenInternal(newLeft: Expression,
         newRight: Expression): Expression = copy(left = newLeft, right = newRight)
@@ -229,15 +233,9 @@ object ArrayKernels {
     * `aggregate(...)` bit-vote expressions.
     */
   case class SimHash64(child: Expression)
-      extends UnaryExpression {
+      extends UnaryKernel[ArrayData, Long] {
     override def dataType: DataType = LongType
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"simhash64 requires ARRAY<BIGINT>, got ${other.catalogString}")
-      }
-
+    override def inputTypes = Seq(ArrayType(LongType))
     def compute(hs: ArrayData): Long = {
       val n = hs.numElements()
       val votes = new Array[Int](64)
@@ -256,11 +254,6 @@ object ArrayKernels {
       while (bit < 64) { if (votes(bit) > 0) sig |= (1L << bit); bit += 1 }
       sig
     }
-    override def nullSafeEval(in: Any): Any = compute(in.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("simhashKernel", this, classOf[SimHash64].getName)
-      nullSafeCodeGen(ctx, ev, in => s"${ev.value} = $ref.compute($in);")
-    }
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
@@ -269,15 +262,11 @@ object ArrayKernels {
     * column, `bins` equal-width buckets of the 0..255 range. The canonical
     * cheap per-media feature vector; codegen'd single pass.
     */
-  case class ByteHistogram(child: Expression, bins: Int) extends UnaryExpression {
+  case class ByteHistogram(child: Expression, bins: Int)
+      extends UnaryKernel[Array[Byte], ArrayData] {
     require(bins > 0 && bins <= 256, s"byte_histogram: bins must be in 1..256, got $bins")
     override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case BinaryType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"byte_histogram requires BINARY, got ${other.catalogString}")
-      }
+    override def inputTypes = Seq(BinaryType)
     def compute(bytes: Array[Byte]): ArrayData = {
       val hist = new Array[Int](bins)
       var i = 0
@@ -286,11 +275,6 @@ object ArrayKernels {
         i += 1
       }
       new GenericArrayData(hist)
-    }
-    override def nullSafeEval(in: Any): Any = compute(in.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("histKernel", this, classOf[ByteHistogram].getName)
-      nullSafeCodeGen(ctx, ev, in => s"${ev.value} = $ref.compute($in);")
     }
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -306,51 +290,35 @@ object ArrayKernels {
     ThreadLocal.withInitial[(java.util.zip.Deflater, Array[Byte])](() =>
       (new java.util.zip.Deflater(6, true), new Array[Byte](8192)))
 
-  /** Static helper for [[DeflateRatio]] (called from generated code via the
-    * object's static forwarder). Raw DEFLATE (nowrap — no zlib envelope
-    * skewing short inputs), level 6. Empty input returns 1.0 by convention
-    * ("no compression possible") — empty/degenerate-short documents are the
-    * length filters' job, not this signal's; callers relying on a low-ratio
-    * cut must gate on length first.
-    */
-  def deflateRatio(bytes: Array[Byte]): Double = {
-    if (bytes.isEmpty) return 1.0
-    val (d, buf) = deflaters.get()
-    d.reset()
-    d.setInput(bytes)
-    d.finish()
-    var total = 0L
-    while (!d.finished()) total += d.deflate(buf)
-    total.toDouble / bytes.length
-  }
-
   /** `deflate_ratio(text|binary)` — compressed/raw size under DEFLATE: the
     * language-agnostic repetitiveness signal (Gopher/MassiveText filter
     * boilerplate and degenerate text on exactly this — highly repetitive
-    * documents compress far below natural text). Runs once per document
-    * (not per pair), so the generated code just calls the static helper.
+    * documents compress far below natural text). Raw DEFLATE (nowrap — no
+    * zlib envelope skewing short inputs), level 6. Empty input returns 1.0
+    * by convention ("no compression possible") — empty/degenerate-short
+    * documents are the length filters' job, not this signal's; callers
+    * relying on a low-ratio cut must gate on length first.
     */
-  case class DeflateRatio(child: Expression) extends UnaryExpression {
+  case class DeflateRatio(child: Expression)
+      extends UnaryKernel[java.io.Serializable, Double] {
     override def dataType: DataType = DoubleType
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case StringType | BinaryType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"deflate_ratio requires STRING or BINARY, got ${other.catalogString}")
+    override def inputTypes = Seq(GraftSqlBridge.stringOrBinary)
+    // Serializable: the narrowest type over UTF8String and byte[] that is
+    // not Object (see UnaryKernel)
+    def compute(in: java.io.Serializable): Double = {
+      val bytes = in match {
+        case s: UTF8String => s.getBytes
+        case b: Array[Byte] => b
       }
-    private def toBytes(in: Any): Array[Byte] = child.dataType match {
-      case StringType => in.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes
-      case _ => in.asInstanceOf[Array[Byte]]
+      if (bytes.isEmpty) return 1.0
+      val (d, buf) = deflaters.get()
+      d.reset()
+      d.setInput(bytes)
+      d.finish()
+      var total = 0L
+      while (!d.finished()) total += d.deflate(buf)
+      total.toDouble / bytes.length
     }
-    override def nullSafeEval(in: Any): Any = deflateRatio(toBytes(in))
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, in => {
-        val bytes = child.dataType match {
-          case StringType => s"$in.getBytes()"
-          case _ => in
-        }
-        s"${ev.value} = graft.functions.ArrayKernels.deflateRatio($bytes);"
-      })
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
@@ -363,15 +331,15 @@ object ArrayKernels {
     StructField("sample_rate", IntegerType),
     StructField("codec", StringType)))
 
-  private val PPM_CODEC = org.apache.spark.unsafe.types.UTF8String.fromString("ppm")
-  private val BMP_CODEC = org.apache.spark.unsafe.types.UTF8String.fromString("bmp")
-  private val WAV_CODEC = org.apache.spark.unsafe.types.UTF8String.fromString("wav")
-  private val JPEG_CODEC = org.apache.spark.unsafe.types.UTF8String.fromString("jpeg")
-  private val PNG_CODEC = org.apache.spark.unsafe.types.UTF8String.fromString("png")
-  private val GIF_CODEC = org.apache.spark.unsafe.types.UTF8String.fromString("gif")
-  private val MP3_CODEC = org.apache.spark.unsafe.types.UTF8String.fromString("mp3")
-  private val AVI_CODEC = org.apache.spark.unsafe.types.UTF8String.fromString("avi")
-  private val MP4_CODEC = org.apache.spark.unsafe.types.UTF8String.fromString("mp4")
+  private val PPM_CODEC = UTF8String.fromString("ppm")
+  private val BMP_CODEC = UTF8String.fromString("bmp")
+  private val WAV_CODEC = UTF8String.fromString("wav")
+  private val JPEG_CODEC = UTF8String.fromString("jpeg")
+  private val PNG_CODEC = UTF8String.fromString("png")
+  private val GIF_CODEC = UTF8String.fromString("gif")
+  private val MP3_CODEC = UTF8String.fromString("mp3")
+  private val AVI_CODEC = UTF8String.fromString("avi")
+  private val MP4_CODEC = UTF8String.fromString("mp4")
 
   private def leUInt(b: Array[Byte], off: Int, n: Int): Long = {
     var v = 0L
@@ -498,7 +466,7 @@ object ArrayKernels {
           y += 1
         }
         val n = (y1 - y0).toDouble * (x1 - x0)
-        out(pr * cols + pc) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+        out(pr * cols + pc) = new GenericInternalRow(
           Array[Any](pr, pc, sr / n, sg / n, sb / n))
         pc += 1
       }
@@ -555,26 +523,24 @@ object ArrayKernels {
   }
 
   /** `ppm_dhash(blob)` — the [[ppmDHash]] kernel as an expression. */
-  case class PpmDHash(child: Expression) extends UnaryExpression {
-    override def nullable: Boolean = true
+  case class PpmDHash(child: Expression) extends UnaryKernel[Array[Byte], Any] {
+    override protected def mayReturnNull: Boolean = true
     override def dataType: DataType = LongType
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case BinaryType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"ppm_dhash requires BINARY, got ${other.catalogString}")
-      }
-    override def nullSafeEval(in: Any): Any =
-      ppmDHash(in.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    override def inputTypes = Seq(BinaryType)
+    def compute(b: Array[Byte]): Any = ppmDHash(b)
+    // `compute` returns a boxed Long or null: unbox it here, as the
+    // trait's `value = compute(...)` line would throw on a null
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val ref = ctx.addReferenceObj(prettyName, this, getClass.getName)
       nullSafeCodeGen(ctx, ev, in => {
         val pdh = ctx.freshName("pdh")
         s"""
-          |Object $pdh = graft.functions.ArrayKernels.ppmDHash($in);
+          |Object $pdh = $ref.compute($in);
           |${ev.isNull} = $pdh == null;
           |${ev.value} = ${ev.isNull} ? -1L : ((java.lang.Long) $pdh).longValue();
          """.stripMargin
       })
+    }
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
@@ -590,23 +556,12 @@ object ArrayKernels {
     * bytes as one codegen'd kernel call; null for anything else.
     */
   case class PpmPatchMeans(child: Expression, patch: Int)
-      extends UnaryExpression {
+      extends UnaryKernel[Array[Byte], ArrayData] {
     require(patch > 0, s"ppm_patch_means: patch must be positive, got $patch")
-    override def nullable: Boolean = true
+    override protected def mayReturnNull: Boolean = true
     override def dataType: DataType = PATCH_T
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case BinaryType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"ppm_patch_means requires BINARY, got ${other.catalogString}")
-      }
-    override def nullSafeEval(in: Any): Any =
-      ppmPatchMeans(in.asInstanceOf[Array[Byte]], patch)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, in => s"""
-        |${ev.value} = graft.functions.ArrayKernels.ppmPatchMeans($in, $patch);
-        |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
+    override def inputTypes = Seq(BinaryType)
+    def compute(b: Array[Byte]): ArrayData = ppmPatchMeans(b, patch)
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
@@ -616,24 +571,13 @@ object ArrayKernels {
     * anything that is not canonical PCM16 WAV.
     */
   case class WavFrameRms(child: Expression, frameSamples: Int)
-      extends UnaryExpression {
+      extends UnaryKernel[Array[Byte], ArrayData] {
     require(frameSamples > 0,
       s"wav_frame_rms: frameSamples must be positive, got $frameSamples")
-    override def nullable: Boolean = true
+    override protected def mayReturnNull: Boolean = true
     override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case BinaryType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"wav_frame_rms requires BINARY, got ${other.catalogString}")
-      }
-    override def nullSafeEval(in: Any): Any =
-      wavFrameRms(in.asInstanceOf[Array[Byte]], frameSamples)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, in => s"""
-        |${ev.value} = graft.functions.ArrayKernels.wavFrameRms($in, $frameSamples);
-        |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
+    override def inputTypes = Seq(BinaryType)
+    def compute(b: Array[Byte]): ArrayData = wavFrameRms(b, frameSamples)
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
@@ -653,8 +597,7 @@ object ArrayKernels {
     * jumps segment-to-segment by declared length, so it is linear in
     * header bytes and never scans entropy-coded data.
     */
-  def jpegSof(b: Array[Byte]): org.apache.spark.sql.catalyst.InternalRow = {
-    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+  def jpegSof(b: Array[Byte]): InternalRow = {
     var i = 2 // past SOI
     while (i + 3 < b.length) {
       if ((b(i) & 0xff) != 0xff) return null
@@ -692,8 +635,7 @@ object ArrayKernels {
     * DEFLATE-compressed. NULL on a malformed signature, a non-IHDR first
     * chunk, an unknown color type, or zero/out-of-int-range dimensions.
     */
-  def pngIhdr(b: Array[Byte]): org.apache.spark.sql.catalyst.InternalRow = {
-    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+  def pngIhdr(b: Array[Byte]): InternalRow = {
     if (b.length < 26) return null
     if (!((b(4) & 0xff) == 0x0d && (b(5) & 0xff) == 0x0a &&
         (b(6) & 0xff) == 0x1a && (b(7) & 0xff) == 0x0a)) return null
@@ -736,8 +678,7 @@ object ArrayKernels {
     * arbitrary bytes essentially never satisfy the chain. NULL
     * otherwise. Audio stays MPEG-encoded; this is metadata only.
     */
-  def mp3Header(b: Array[Byte]): org.apache.spark.sql.catalyst.InternalRow = {
-    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+  def mp3Header(b: Array[Byte]): InternalRow = {
     var off = 0
     if (b.length >= 10 && b(0) == 'I' && b(1) == 'D' && b(2) == '3') {
       // ID3v2: 4-byte syncsafe (7-bit) size at 6..9, tag body follows
@@ -814,8 +755,7 @@ object ArrayKernels {
     * truncated boxes, a missing moov (e.g. a header-only capture of a
     * moov-at-end file), no tkhd — returns NULL, never a guess.
     */
-  def mp4Tkhd(b: Array[Byte]): org.apache.spark.sql.catalyst.InternalRow = {
-    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+  def mp4Tkhd(b: Array[Byte]): InternalRow = {
     // Shared box-header reader: returns (payloadStart, boxEnd) packed in
     // a Long, or -1 on a malformed/truncated header. `limit` is the
     // enclosing box's end — children must stay inside the parent.
@@ -953,8 +893,7 @@ object ArrayKernels {
     * channels + sample rate from the first validated mp4a stsd entry). The compressed codecs are
     * metadata-only; sample/pixel decode still needs a codec library.
     */
-  def parseMediaHeader(b: Array[Byte]): org.apache.spark.sql.catalyst.InternalRow = {
-    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+  def parseMediaHeader(b: Array[Byte]): InternalRow = {
     if (b == null) return null
     if (b.length >= 2 && b(0) == 'P' && b(1) == '6') {
       // ASCII header: three whitespace-separated decimal ints after "P6",
@@ -1039,25 +978,14 @@ object ArrayKernels {
   /** `media_header(blob)` — header sniffing for the codec-free media
     * containers as ONE kernel call per blob, replacing the retired
     * substring→hex→lpad→conv expression tree (~12 string ops per 4-byte
-    * read, three reads per blob). The parse is a static helper over the
-    * raw byte[]; generated code is a single call + null check.
+    * read, three reads per blob). The parse is [[parseMediaHeader]] over
+    * the raw byte[].
     */
-  case class MediaHeader(child: Expression) extends UnaryExpression {
-    override def nullable: Boolean = true
+  case class MediaHeader(child: Expression) extends UnaryKernel[Array[Byte], InternalRow] {
+    override protected def mayReturnNull: Boolean = true
     override def dataType: DataType = MEDIA_HEADER_T
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case BinaryType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"media_header requires BINARY, got ${other.catalogString}")
-      }
-    override def nullSafeEval(in: Any): Any =
-      parseMediaHeader(in.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, in => s"""
-        |${ev.value} = graft.functions.ArrayKernels.parseMediaHeader($in);
-        |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
+    override def inputTypes = Seq(BinaryType)
+    def compute(b: Array[Byte]): InternalRow = parseMediaHeader(b)
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
@@ -1083,25 +1011,20 @@ object ArrayKernels {
     * pinned in TextAnalysisSpec.
     */
   case class LangPredict(child: Expression,
-      profiles: Seq[(String, Seq[String])]) extends UnaryExpression {
+      profiles: Seq[(String, Seq[String])]) extends UnaryKernel[UTF8String, UTF8String] {
     override def dataType: DataType = StringType
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"lang_predict requires STRING, got ${t.catalogString}")
-    }
+    override def inputTypes = Seq(StringType)
 
     @transient private lazy val gramBytes: Array[Array[Array[Byte]]] =
       profiles.map(_._2.map(_.getBytes("UTF-8")).toArray).toArray
     @transient private lazy val names
-        : Array[org.apache.spark.unsafe.types.UTF8String] =
+        : Array[UTF8String] =
       profiles.map(p =>
-        org.apache.spark.unsafe.types.UTF8String.fromString(p._1)).toArray
+        UTF8String.fromString(p._1)).toArray
     @transient private lazy val und =
-      org.apache.spark.unsafe.types.UTF8String.fromString("und")
+      UTF8String.fromString("und")
 
-    def predict(s: org.apache.spark.unsafe.types.UTF8String)
-        : org.apache.spark.unsafe.types.UTF8String = {
+    def compute(s: UTF8String): UTF8String = {
       val hay = s.getBytes
       var bestScore = 0
       var bestIdx = -1
@@ -1126,13 +1049,6 @@ object ArrayKernels {
       }
       if (bestScore <= 0) und else names(bestIdx)
     }
-
-    override def nullSafeEval(x: Any): Any =
-      predict(x.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("langPredict", this, classOf[LangPredict].getName)
-      nullSafeCodeGen(ctx, ev, in => s"${ev.value} = $ref.predict($in);")
-    }
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
@@ -1147,20 +1063,14 @@ object ArrayKernels {
     * loop here. Documents with fewer than `n` tokens yield an empty array.
     */
   case class TokenNgrams(child: Expression, n: Int, distinct: Boolean)
-      extends UnaryExpression {
+      extends UnaryKernel[ArrayData, ArrayData] {
     require(n >= 1, s"n-gram size must be >= 1, got $n")
     override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"token_ngrams requires ARRAY<STRING>, got ${other.catalogString}")
-      }
+    override def inputTypes = Seq(ArrayType(StringType))
 
-    private val SEP = org.apache.spark.unsafe.types.UTF8String.fromString(" ")
+    private val SEP = UTF8String.fromString(" ")
 
     def compute(toks: ArrayData): ArrayData = {
-      import org.apache.spark.unsafe.types.UTF8String
       val cnt = math.max(toks.numElements() - n + 1, 0)
       val buf = new Array[UTF8String](n)
       // null tokens read as EMPTY (never produced by tokensUni, but the
@@ -1180,54 +1090,34 @@ object ArrayKernels {
         new GenericArrayData(seen.toArray)
       } else new GenericArrayData(Array.tabulate[Any](cnt)(gram))
     }
-
-    override def nullSafeEval(in: Any): Any = compute(in.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("ngramKernel", this, classOf[TokenNgrams].getName)
-      nullSafeCodeGen(ctx, ev, in => s"${ev.value} = $ref.compute($in);")
-    }
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
-
-  /** Static helper for [[NfcNormalize]]: Unicode NFC via
-    * `java.text.Normalizer` (the same normalization DuckDB's
-    * `nfc_normalize`/utf8proc implements — the oracle mirrors it
-    * directly). Fast path: NFC is the identity on pure-ASCII text, and a
-    * web corpus is majority ASCII — `numBytes == numChars` detects it
-    * without materializing a java.lang.String.
-    */
-  def nfcNormalize(s: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.unsafe.types.UTF8String =
-    if (s.numBytes == s.numChars) s
-    else {
-      // non-ASCII web text is overwhelmingly ALREADY composed — check
-      // before normalizing so the common case pays one quick-check scan,
-      // not a rebuild + UTF-8 re-encode of an identical string
-      val str = s.toString
-      if (java.text.Normalizer.isNormalized(str, java.text.Normalizer.Form.NFC)) s
-      else org.apache.spark.unsafe.types.UTF8String.fromString(
-        java.text.Normalizer.normalize(str, java.text.Normalizer.Form.NFC))
-    }
 
   /** `nfc_normalize(text)` — Unicode NFC composition. The canonicalization
     * pass that must run BEFORE fingerprinting on real crawl data: "café"
     * composed and decomposed are different byte strings (different md5,
     * different shingles) for identical rendered text, so un-normalized
-    * corpora under-deduplicate.
+    * corpora under-deduplicate. `java.text.Normalizer` implements the same
+    * normalization as DuckDB's `nfc_normalize`/utf8proc, so the oracle
+    * mirrors it directly. Fast path: NFC is the identity on pure-ASCII
+    * text, and a web corpus is majority ASCII — `numBytes == numChars`
+    * detects it without materializing a java.lang.String.
     */
-  case class NfcNormalize(child: Expression) extends UnaryExpression {
+  case class NfcNormalize(child: Expression) extends UnaryKernel[UTF8String, UTF8String] {
     override def dataType: DataType = StringType
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case StringType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"nfc_normalize requires STRING, got ${other.catalogString}")
+    override def inputTypes = Seq(StringType)
+    def compute(s: UTF8String): UTF8String =
+      if (s.numBytes == s.numChars) s
+      else {
+        // non-ASCII web text is overwhelmingly ALREADY composed — check
+        // before normalizing so the common case pays one quick-check scan,
+        // not a rebuild + UTF-8 re-encode of an identical string
+        val str = s.toString
+        if (java.text.Normalizer.isNormalized(str, java.text.Normalizer.Form.NFC)) s
+        else UTF8String.fromString(
+          java.text.Normalizer.normalize(str, java.text.Normalizer.Form.NFC))
       }
-    override def nullSafeEval(in: Any): Any =
-      nfcNormalize(in.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, in =>
-        s"${ev.value} = graft.functions.ArrayKernels.nfcNormalize($in);")
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
@@ -1248,7 +1138,7 @@ object ArrayKernels {
   }
 
   private def hashEmbedAccum(toks: ArrayData, dim: Int,
-      signed: Boolean = true): (Array[Double], Array[Boolean]) = {
+      signed: Boolean): (Array[Double], Array[Boolean]) = {
     val md = md5Pool.get()
     val vals = new Array[Double](dim)
     val touched = new Array[Boolean](dim)
@@ -1272,51 +1162,21 @@ object ArrayKernels {
     (vals, touched)
   }
 
-  /** Called from generated code (static forwarder). */
-  def hashEmbedEntriesEval(toks: ArrayData, dim: Int): ArrayData = {
-    val (vals, touched) = hashEmbedAccum(toks, dim)
+  /** The touched buckets of [[hashEmbedAccum]] as (dim_idx, value) rows. */
+  private def touchedEntries(toks: ArrayData, dim: Int, signed: Boolean): ArrayData = {
+    val (vals, touched) = hashEmbedAccum(toks, dim, signed)
     val out = new scala.collection.mutable.ArrayBuffer[Any](8)
     var i = 0
     while (i < dim) {
-      if (touched(i)) {
-        out += new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          Array[Any](i, vals(i)))
-      }
+      if (touched(i)) out += new GenericInternalRow(Array[Any](i, vals(i)))
       i += 1
     }
     new GenericArrayData(out.toArray)
   }
 
-  /** Called from generated code (static forwarder): the UNSIGNED variant —
-    * plain occurrence counts per touched bucket (no ±1 sign), the feature
-    * form importance estimators (DSIR-style log-likelihood ratios) need:
-    * a probability can be estimated from counts but not from signed sums,
-    * whose cancellations destroy non-negativity. Bucket scheme is
-    * byte-identical to [[hashEmbedEntriesEval]] (first 8 md5 hex digits
-    * mod dim), so oracle replays share the CTE.
-    */
-  def hashCountEntriesEval(toks: ArrayData, dim: Int): ArrayData = {
-    val (vals, touched) = hashEmbedAccum(toks, dim, signed = false)
-    val out = new scala.collection.mutable.ArrayBuffer[Any](8)
-    var i = 0
-    while (i < dim) {
-      if (touched(i)) {
-        out += new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          Array[Any](i, vals(i)))
-      }
-      i += 1
-    }
-    new GenericArrayData(out.toArray)
-  }
-
-  /** Called from generated code (static forwarder). */
-  def hashEmbedDenseEval(toks: ArrayData, dim: Int): ArrayData = {
-    val (vals, _) = hashEmbedAccum(toks, dim)
-    val out = new Array[Float](dim)
-    var i = 0
-    while (i < dim) { out(i) = vals(i).toFloat; i += 1 }
-    new GenericArrayData(out)
-  }
+  private val HASH_ENTRIES_T = ArrayType(StructType(Seq(
+    StructField("dim_idx", IntegerType, nullable = false),
+    StructField("value", DoubleType, nullable = false))), containsNull = false)
 
   /** `bpe_segment_ids(word)` — greedy longest-match subword segmentation
     * straight to vocabulary ids (1-based unit index, 0 = single-char
@@ -1331,18 +1191,13 @@ object ArrayKernels {
     * index, which equals code-point matching only for ASCII units.
     */
   case class BpeSegmentIds(child: Expression, vocab: Seq[String])
-      extends UnaryExpression {
+      extends UnaryKernel[UTF8String, ArrayData] {
     require(vocab.nonEmpty && vocab.forall(v => v.nonEmpty && v.forall(_ < 128)),
       "bpe_segment_ids requires a non-empty ASCII vocabulary")
     private val units: Array[String] = vocab.toArray
     override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case StringType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"bpe_segment_ids requires STRING, got ${other.catalogString}")
-      }
-    def compute(in: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
+    override def inputTypes = Seq(StringType)
+    def compute(in: UTF8String): ArrayData = {
       val w = in.toString
       val out = new scala.collection.mutable.ArrayBuffer[Any](8)
       var i = 0
@@ -1362,13 +1217,6 @@ object ArrayKernels {
       }
       new GenericArrayData(out.toArray)
     }
-    override def nullSafeEval(in: Any): Any =
-      compute(in.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("bpeSegKernel", this,
-        classOf[BpeSegmentIds].getName)
-      nullSafeCodeGen(ctx, ev, in => s"${ev.value} = $ref.compute($in);")
-    }
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
@@ -1386,7 +1234,7 @@ object ArrayKernels {
     * ships with the expression.
     */
   case class SignedRandomProject(child: Expression, inDim: Int, outDim: Int,
-      tag: String) extends UnaryExpression {
+      tag: String) extends UnaryKernel[ArrayData, ArrayData] {
     require(inDim > 0 && outDim > 0,
       s"dims must be positive, got $inDim -> $outDim")
     private val w: Array[Double] = {
@@ -1408,12 +1256,7 @@ object ArrayKernels {
       arr
     }
     override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"signed_project requires ARRAY<DOUBLE>, got ${other.catalogString}")
-      }
+    override def inputTypes = Seq(ArrayType(DoubleType))
     def compute(in: ArrayData): ArrayData = {
       val n = math.min(in.numElements(), inDim)
       val out = new Array[Double](outDim)
@@ -1429,12 +1272,6 @@ object ArrayKernels {
       }
       new GenericArrayData(out)
     }
-    override def nullSafeEval(in: Any): Any = compute(in.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("signedProjKernel", this,
-        classOf[SignedRandomProject].getName)
-      nullSafeCodeGen(ctx, ev, in => s"${ev.value} = $ref.compute($in);")
-    }
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
@@ -1446,22 +1283,11 @@ object ArrayKernels {
     * per-document kernel + explode of a ≤dim-entry array — zero shuffles.
     */
   case class HashEmbedEntries(child: Expression, dim: Int)
-      extends UnaryExpression {
+      extends UnaryKernel[ArrayData, ArrayData] {
     require(dim > 0, s"dim must be positive, got $dim")
-    override def dataType: DataType = ArrayType(StructType(Seq(
-      StructField("dim_idx", IntegerType, nullable = false),
-      StructField("value", DoubleType, nullable = false))), containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"hash_embed_entries requires ARRAY<STRING>, got ${other.catalogString}")
-      }
-    override def nullSafeEval(in: Any): Any =
-      hashEmbedEntriesEval(in.asInstanceOf[ArrayData], dim)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, in =>
-        s"${ev.value} = graft.functions.ArrayKernels.hashEmbedEntriesEval($in, $dim);")
+    override def dataType: DataType = HASH_ENTRIES_T
+    override def inputTypes = Seq(ArrayType(StringType))
+    def compute(toks: ArrayData): ArrayData = touchedEntries(toks, dim, signed = true)
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
@@ -1469,26 +1295,17 @@ object ArrayKernels {
   /** `hash_count_entries(toks, dim)` — [[HashEmbedEntries]] without the
     * sign: ARRAY<STRUCT<dim_idx, value>> of touched-bucket OCCURRENCE
     * counts, the non-negative feature form importance estimators (DSIR
-    * hashed log-likelihood ratios) consume. Same bucket scheme, same
-    * zero-shuffle scan-stage shape.
+    * hashed log-likelihood ratios) consume: a probability can be estimated
+    * from counts but not from signed sums, whose cancellations destroy
+    * non-negativity. Same bucket scheme (first 8 md5 hex digits mod dim,
+    * so oracle replays share the CTE), same zero-shuffle scan-stage shape.
     */
   case class HashCountEntries(child: Expression, dim: Int)
-      extends UnaryExpression {
+      extends UnaryKernel[ArrayData, ArrayData] {
     require(dim > 0, s"dim must be positive, got $dim")
-    override def dataType: DataType = ArrayType(StructType(Seq(
-      StructField("dim_idx", IntegerType, nullable = false),
-      StructField("value", DoubleType, nullable = false))), containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"hash_count_entries requires ARRAY<STRING>, got ${other.catalogString}")
-      }
-    override def nullSafeEval(in: Any): Any =
-      hashCountEntriesEval(in.asInstanceOf[ArrayData], dim)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, in =>
-        s"${ev.value} = graft.functions.ArrayKernels.hashCountEntriesEval($in, $dim);")
+    override def dataType: DataType = HASH_ENTRIES_T
+    override def inputTypes = Seq(ArrayType(StringType))
+    def compute(toks: ArrayData): ArrayData = touchedEntries(toks, dim, signed = false)
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
@@ -1502,41 +1319,29 @@ object ArrayKernels {
     * with an ASCII character class (see
     * [[graft.ops.TextAnalysis.secretScan]]). Empty string → 0.0.
     */
-  case class CharEntropy(child: Expression) extends UnaryExpression {
+  case class CharEntropy(child: Expression) extends UnaryKernel[UTF8String, Double] {
     override def dataType: DataType = DoubleType
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case StringType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"char_entropy requires STRING, got ${other.catalogString}")
+    override def inputTypes = Seq(StringType)
+    def compute(s: UTF8String): Double = {
+      val bytes = s.getBytes
+      val n = bytes.length
+      if (n == 0) return 0.0
+      val counts = new Array[Int](256)
+      var i = 0
+      while (i < n) { counts(bytes(i) & 0xFF) += 1; i += 1 }
+      var h = 0.0
+      i = 0
+      while (i < 256) {
+        if (counts(i) > 0) {
+          val p = counts(i).toDouble / n
+          h -= p * math.log(p)
+        }
+        i += 1
       }
-    override def nullSafeEval(in: Any): Any =
-      charEntropyEval(in.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, in =>
-        s"${ev.value} = graft.functions.ArrayKernels.charEntropyEval($in);")
+      h / math.log(2.0)
+    }
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
-  }
-
-  /** Called from generated code (static forwarder). */
-  def charEntropyEval(s: org.apache.spark.unsafe.types.UTF8String): Double = {
-    val bytes = s.getBytes
-    val n = bytes.length
-    if (n == 0) return 0.0
-    val counts = new Array[Int](256)
-    var i = 0
-    while (i < n) { counts(bytes(i) & 0xFF) += 1; i += 1 }
-    var h = 0.0
-    i = 0
-    while (i < 256) {
-      if (counts(i) > 0) {
-        val p = counts(i).toDouble / n
-        h -= p * math.log(p)
-      }
-      i += 1
-    }
-    h / math.log(2.0)
   }
 
   /** `hash_embed_dense(toks, dim)` — dense form: ARRAY<FLOAT> of all `dim`
@@ -1545,20 +1350,17 @@ object ArrayKernels {
     * per-document shuffle) with the same single scan-stage pass.
     */
   case class HashEmbedDense(child: Expression, dim: Int)
-      extends UnaryExpression {
+      extends UnaryKernel[ArrayData, ArrayData] {
     require(dim > 0, s"dim must be positive, got $dim")
     override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"hash_embed_dense requires ARRAY<STRING>, got ${other.catalogString}")
-      }
-    override def nullSafeEval(in: Any): Any =
-      hashEmbedDenseEval(in.asInstanceOf[ArrayData], dim)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, in =>
-        s"${ev.value} = graft.functions.ArrayKernels.hashEmbedDenseEval($in, $dim);")
+    override def inputTypes = Seq(ArrayType(StringType))
+    def compute(toks: ArrayData): ArrayData = {
+      val (vals, _) = hashEmbedAccum(toks, dim, signed = true)
+      val out = new Array[Float](dim)
+      var i = 0
+      while (i < dim) { out(i) = vals(i).toFloat; i += 1 }
+      new GenericArrayData(out)
+    }
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
@@ -1573,20 +1375,15 @@ object ArrayKernels {
     * merge pair is a driver-chosen literal.
     */
   case class BpeMergePair(child: Expression, left: String, right: String)
-      extends UnaryExpression {
+      extends UnaryKernel[ArrayData, ArrayData] {
     require(left.nonEmpty && right.nonEmpty,
       "bpe_merge_pair requires non-empty merge symbols")
-    private val mergedSym = org.apache.spark.unsafe.types.UTF8String
+    private val mergedSym = UTF8String
       .fromString(left + right)
-    private val leftSym = org.apache.spark.unsafe.types.UTF8String.fromString(left)
-    private val rightSym = org.apache.spark.unsafe.types.UTF8String.fromString(right)
+    private val leftSym = UTF8String.fromString(left)
+    private val rightSym = UTF8String.fromString(right)
     override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"bpe_merge_pair requires ARRAY<STRING>, got ${other.catalogString}")
-      }
+    override def inputTypes = Seq(ArrayType(StringType))
     def compute(in: ArrayData): ArrayData = {
       val n = in.numElements()
       val out = new scala.collection.mutable.ArrayBuffer[Any](n)
@@ -1598,12 +1395,6 @@ object ArrayKernels {
         } else { out += in.getUTF8String(i); i += 1 }
       }
       new GenericArrayData(out.toArray)
-    }
-    override def nullSafeEval(in: Any): Any = compute(in.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("bpeMergeKernel", this,
-        classOf[BpeMergePair].getName)
-      nullSafeCodeGen(ctx, ev, in => s"${ev.value} = $ref.compute($in);")
     }
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -1621,19 +1412,14 @@ object ArrayKernels {
     * per token instance.
     */
   case class BpeMergeEncode(child: Expression, merges: Seq[(String, String)])
-      extends UnaryExpression {
+      extends UnaryKernel[UTF8String, ArrayData] {
     require(merges.forall(m => m._1.nonEmpty && m._2.nonEmpty),
       "bpe_merge_encode requires non-empty merge symbols")
     private val lefts: Array[String] = merges.map(_._1).toArray
     private val rights: Array[String] = merges.map(_._2).toArray
     override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case StringType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"bpe_merge_encode requires STRING, got ${other.catalogString}")
-      }
-    def compute(in: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
+    override def inputTypes = Seq(StringType)
+    def compute(in: UTF8String): ArrayData = {
       val w = in.toString
       var syms = new java.util.ArrayList[String](w.length)
       var ci = 0
@@ -1656,17 +1442,10 @@ object ArrayKernels {
       val out = new Array[Any](syms.size)
       var i = 0
       while (i < syms.size) {
-        out(i) = org.apache.spark.unsafe.types.UTF8String.fromString(syms.get(i))
+        out(i) = UTF8String.fromString(syms.get(i))
         i += 1
       }
       new GenericArrayData(out)
-    }
-    override def nullSafeEval(in: Any): Any =
-      compute(in.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("bpeEncodeKernel", this,
-        classOf[BpeMergeEncode].getName)
-      nullSafeCodeGen(ctx, ev, in => s"${ev.value} = $ref.compute($in);")
     }
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -1689,7 +1468,7 @@ object ArrayKernels {
     * once per DISTINCT word in the scan stage: zero shuffle, zero joins.
     */
   case class UnigramViterbi(child: Expression, pieces: Seq[String],
-      logps: Seq[Double], unkLogp: Double) extends UnaryExpression {
+      logps: Seq[Double], unkLogp: Double) extends UnaryKernel[UTF8String, ArrayData] {
     require(pieces.nonEmpty, "unigram_viterbi requires a non-empty model")
     require(pieces.length == logps.length,
       s"pieces/logps length mismatch: ${pieces.length} vs ${logps.length}")
@@ -1713,13 +1492,8 @@ object ArrayKernels {
     private val maxLenCp: Int =
       pieces.map(p => p.codePointCount(0, p.length)).max
     override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case StringType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"unigram_viterbi requires STRING, got ${other.catalogString}")
-      }
-    def compute(in: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
+    override def inputTypes = Seq(StringType)
+    def compute(in: UTF8String): ArrayData = {
       val w = in.toString
       // char offset of each code-point boundary: cpOff(0)=0 .. cpOff(n)=len
       val n = w.codePointCount(0, w.length)
@@ -1764,18 +1538,11 @@ object ArrayKernels {
       var pos = n
       while (pos > 0) {
         val j = back(pos)
-        rev += org.apache.spark.unsafe.types.UTF8String
+        rev += UTF8String
           .fromString(w.substring(cpOff(j), cpOff(pos)))
         pos = j
       }
       new GenericArrayData(rev.reverseIterator.toArray)
-    }
-    override def nullSafeEval(in: Any): Any =
-      compute(in.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("unigramViterbiKernel", this,
-        classOf[UnigramViterbi].getName)
-      nullSafeCodeGen(ctx, ev, in => s"${ev.value} = $ref.compute($in);")
     }
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -1798,7 +1565,7 @@ object ArrayKernels {
     */
   case class UnigramExpectedCounts(child: Expression, pieces: Seq[String],
       logps: Seq[Double], unkLogp: Double, quantize: Boolean = false)
-      extends UnaryExpression {
+      extends UnaryKernel[UTF8String, ArrayData] {
     require(pieces.nonEmpty, "unigram_expected_counts requires a model")
     require(pieces.length == logps.length,
       s"pieces/logps length mismatch: ${pieces.length} vs ${logps.length}")
@@ -1821,19 +1588,14 @@ object ArrayKernels {
     override def dataType: DataType = ArrayType(StructType(Seq(
       StructField("piece", StringType, nullable = false),
       StructField("ec", DoubleType, nullable = false))), containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case StringType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"unigram_expected_counts requires STRING, got ${other.catalogString}")
-      }
+    override def inputTypes = Seq(StringType)
     // log(e^a + e^b) without overflow; -Inf is the additive identity
     private def logAdd(a: Double, b: Double): Double =
       if (a == Double.NegativeInfinity) b
       else if (b == Double.NegativeInfinity) a
       else if (a >= b) a + math.log1p(math.exp(b - a))
       else b + math.log1p(math.exp(a - b))
-    def compute(in: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
+    def compute(in: UTF8String): ArrayData = {
       val w = in.toString
       val n = w.codePointCount(0, w.length)
       if (n == 0) return new GenericArrayData(Array.empty[Any])
@@ -1937,19 +1699,12 @@ object ArrayKernels {
       var idx = 0
       while (it.hasNext) {
         val e = it.next()
-        out(idx) = org.apache.spark.sql.catalyst.InternalRow(
-          org.apache.spark.unsafe.types.UTF8String.fromString(e.getKey),
+        out(idx) = InternalRow(
+          UTF8String.fromString(e.getKey),
           e.getValue.doubleValue())
         idx += 1
       }
       new GenericArrayData(out)
-    }
-    override def nullSafeEval(in: Any): Any =
-      compute(in.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("unigramEcKernel", this,
-        classOf[UnigramExpectedCounts].getName)
-      nullSafeCodeGen(ctx, ev, in => s"${ev.value} = $ref.compute($in);")
     }
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -1984,7 +1739,7 @@ object ArrayKernels {
     */
   case class UnigramSample(child: Expression, pieces: Seq[String],
       logps: Seq[Double], unkLogp: Double, seed: Long, alpha: Double)
-      extends UnaryExpression {
+      extends UnaryKernel[UTF8String, ArrayData] {
     require(pieces.nonEmpty, "unigram_sample requires a model")
     require(pieces.length == logps.length,
       s"pieces/logps length mismatch: ${pieces.length} vs ${logps.length}")
@@ -2007,12 +1762,7 @@ object ArrayKernels {
     private val maxLenCp: Int =
       pieces.map(p => p.codePointCount(0, p.length)).max
     override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case StringType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"unigram_sample requires STRING, got ${other.catalogString}")
-      }
+    override def inputTypes = Seq(StringType)
     @transient private lazy val digest =
       new ThreadLocal[java.security.MessageDigest] {
         override def initialValue(): java.security.MessageDigest =
@@ -2023,7 +1773,7 @@ object ArrayKernels {
       else if (b == Double.NegativeInfinity) a
       else if (a >= b) a + math.log1p(math.exp(b - a))
       else b + math.log1p(math.exp(a - b))
-    def compute(in: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
+    def compute(in: UTF8String): ArrayData = {
       val w = in.toString
       val n = w.codePointCount(0, w.length)
       if (n == 0) return new GenericArrayData(Array.empty[Any])
@@ -2112,18 +1862,11 @@ object ArrayKernels {
             }
           }
         }
-        rev += org.apache.spark.unsafe.types.UTF8String
+        rev += UTF8String
           .fromString(w.substring(cpOff(chosen), cpOff(pos)))
         pos = chosen
       }
       new GenericArrayData(rev.reverseIterator.toArray)
-    }
-    override def nullSafeEval(in: Any): Any =
-      compute(in.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("unigramSampleKernel", this,
-        classOf[UnigramSample].getName)
-      nullSafeCodeGen(ctx, ev, in => s"${ev.value} = $ref.compute($in);")
     }
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -2187,19 +1930,10 @@ object ArrayKernels {
     * paths can never disagree on a null slot.
     */
   case class TokenLcsLen(left: Expression, right: Expression)
-      extends BinaryExpression {
+      extends BinaryKernel[ArrayData, ArrayData, Int] {
     override def dataType: DataType = IntegerType
-    override def checkInputDataTypes(): TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (ArrayType(StringType, _), ArrayType(StringType, _)) =>
-          TypeCheckResult.TypeCheckSuccess
-        case (l, r) => TypeCheckResult.TypeCheckFailure(
-          s"token_lcs_len requires (ARRAY<STRING>, ARRAY<STRING>), " +
-            s"got ${l.catalogString}, ${r.catalogString}")
-      }
-
+    override def inputTypes = Seq(ArrayType(StringType), ArrayType(StringType))
     def compute(aIn: ArrayData, bIn: ArrayData): Int = {
-      import org.apache.spark.unsafe.types.UTF8String
       val n = aIn.numElements()
       val m = bIn.numElements()
       if (n == 0 || m == 0) return 0
@@ -2228,15 +1962,6 @@ object ArrayKernels {
         i += 1
       }
       prev(m)
-    }
-
-    override def nullSafeEval(a: Any, b: Any): Any =
-      compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("lcsKernel", this,
-        classOf[TokenLcsLen].getName)
-      nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.compute($a, $b);")
     }
 
     override protected def withNewChildrenInternal(newLeft: Expression,
@@ -2294,22 +2019,13 @@ object ArrayKernels {
     * 32 tokens, real MT evals are sentence-segmented anyway).
     */
   case class TerShiftStats(left: Expression, right: Expression,
-      maxShiftLen: Int) extends BinaryExpression {
+      maxShiftLen: Int) extends BinaryKernel[ArrayData, ArrayData, InternalRow] {
     require(maxShiftLen >= 1 && maxShiftLen <= 32,
       s"ter_shift_stats: bad maxShiftLen $maxShiftLen")
     override def dataType: DataType = StructType(Seq(
       StructField("shifts", LongType, nullable = false),
       StructField("edits", LongType, nullable = false)))
-    override def checkInputDataTypes(): TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (ArrayType(StringType, _), ArrayType(StringType, _)) =>
-          TypeCheckResult.TypeCheckSuccess
-        case (l, r) => TypeCheckResult.TypeCheckFailure(
-          s"ter_shift_stats requires (ARRAY<STRING>, ARRAY<STRING>), " +
-            s"got ${l.catalogString}, ${r.catalogString}")
-      }
-
-    import org.apache.spark.unsafe.types.UTF8String
+    override def inputTypes = Seq(ArrayType(StringType), ArrayType(StringType))
 
     private def editDist(a: Array[UTF8String],
         b: Array[UTF8String]): Int = {
@@ -2424,8 +2140,7 @@ object ArrayKernels {
       (buf.toSeq, s, e)
     }
 
-    def compute(cIn: ArrayData, rIn: ArrayData)
-        : org.apache.spark.sql.catalyst.InternalRow = {
+    def compute(cIn: ArrayData, rIn: ArrayData): InternalRow = {
       def arr(a: ArrayData): Array[UTF8String] = {
         val out = new Array[UTF8String](a.numElements())
         var i = 0
@@ -2437,16 +2152,7 @@ object ArrayKernels {
         out
       }
       val (shifts, edits) = greedy(arr(cIn), arr(rIn), (_, _, _) => ())
-      org.apache.spark.sql.catalyst.InternalRow(shifts, edits)
-    }
-
-    override def nullSafeEval(a: Any, b: Any): Any =
-      compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("terShiftKernel", this,
-        classOf[TerShiftStats].getName)
-      nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.compute($a, $b);")
+      InternalRow(shifts, edits)
     }
 
     override protected def withNewChildrenInternal(newLeft: Expression,
@@ -2464,19 +2170,10 @@ object ArrayKernels {
     * inserts/deletes).
     */
   case class TokenEditDist(left: Expression, right: Expression)
-      extends BinaryExpression {
+      extends BinaryKernel[ArrayData, ArrayData, Int] {
     override def dataType: DataType = IntegerType
-    override def checkInputDataTypes(): TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (ArrayType(StringType, _), ArrayType(StringType, _)) =>
-          TypeCheckResult.TypeCheckSuccess
-        case (l, r) => TypeCheckResult.TypeCheckFailure(
-          s"token_edit_dist requires (ARRAY<STRING>, ARRAY<STRING>), " +
-            s"got ${l.catalogString}, ${r.catalogString}")
-      }
-
+    override def inputTypes = Seq(ArrayType(StringType), ArrayType(StringType))
     def compute(aIn: ArrayData, bIn: ArrayData): Int = {
-      import org.apache.spark.unsafe.types.UTF8String
       val n = aIn.numElements()
       val m = bIn.numElements()
       if (n == 0) return m
@@ -2511,18 +2208,30 @@ object ArrayKernels {
       prev(m)
     }
 
-    override def nullSafeEval(a: Any, b: Any): Any =
-      compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("editDistKernel", this,
-        classOf[TokenEditDist].getName)
-      nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.compute($a, $b);")
-    }
-
     override protected def withNewChildrenInternal(newLeft: Expression,
         newRight: Expression): Expression =
       copy(left = newLeft, right = newRight)
+  }
+
+  /** A per-document (gram → count) dictionary. */
+  private val GRAM_DICT_T = ArrayType(StructType(Seq(
+    StructField("g", StringType, nullable = false),
+    StructField("c", LongType, nullable = false))), containsNull = false)
+
+  /** Both inputs are gram dictionaries with fields named exactly `g` and
+    * `c`: `inputTypes` alone would also accept `G`/`C` under
+    * case-insensitive analysis.
+    */
+  private def gramDictCheck(k: BinaryExpression): TypeCheckResult = {
+    def isDict(t: DataType) = t match {
+      case ArrayType(s: StructType, _) =>
+        s.fields.map(f => (f.name, f.dataType)).toSeq == Seq("g" -> StringType, "c" -> LongType)
+      case _ => false
+    }
+    if (isDict(k.left.dataType) && isDict(k.right.dataType)) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(s"${k.prettyName} requires two " +
+      s"ARRAY<STRUCT<g STRING, c BIGINT>>, got ${k.left.dataType.catalogString}, " +
+      k.right.dataType.catalogString)
   }
 
   def char_ngram_counts(text: Column, n: Int): Column =
@@ -2541,18 +2250,11 @@ object ArrayKernels {
     * (chrF strips it first). Empty/short input → empty array.
     */
   case class CharNgramCounts(child: Expression, n: Int)
-      extends UnaryExpression {
+      extends UnaryKernel[UTF8String, ArrayData] {
     require(n >= 1 && n <= 16, s"char_ngram_counts: bad n $n")
-    override def dataType: DataType = ArrayType(StructType(Seq(
-      StructField("g", StringType, nullable = false),
-      StructField("c", LongType, nullable = false))), containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case StringType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"char_ngram_counts requires STRING, got ${other.catalogString}")
-      }
-    def compute(in: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
+    override def dataType: DataType = GRAM_DICT_T
+    override def inputTypes = Seq(StringType)
+    def compute(in: UTF8String): ArrayData = {
       val w = in.toString
       val ncp = w.codePointCount(0, w.length)
       if (ncp < n) return new GenericArrayData(Array.empty[Any])
@@ -2579,19 +2281,12 @@ object ArrayKernels {
       var idx = 0
       while (it.hasNext) {
         val e = it.next()
-        out(idx) = org.apache.spark.sql.catalyst.InternalRow(
-          org.apache.spark.unsafe.types.UTF8String.fromString(e.getKey),
+        out(idx) = InternalRow(
+          UTF8String.fromString(e.getKey),
           e.getValue.longValue())
         idx += 1
       }
       new GenericArrayData(out)
-    }
-    override def nullSafeEval(in: Any): Any =
-      compute(in.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("charNgramKernel", this,
-        classOf[CharNgramCounts].getName)
-      nullSafeCodeGen(ctx, ev, in => s"${ev.value} = $ref.compute($in);")
     }
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -2609,19 +2304,11 @@ object ArrayKernels {
     * compiled pass, first-occurrence entry order.
     */
   case class TokenNgramCounts(child: Expression, n: Int)
-      extends UnaryExpression {
+      extends UnaryKernel[ArrayData, ArrayData] {
     require(n >= 1 && n <= 16, s"token_ngram_counts: bad n $n")
-    override def dataType: DataType = ArrayType(StructType(Seq(
-      StructField("g", StringType, nullable = false),
-      StructField("c", LongType, nullable = false))), containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"token_ngram_counts requires ARRAY<STRING>, got ${other.catalogString}")
-      }
+    override def dataType: DataType = GRAM_DICT_T
+    override def inputTypes = Seq(ArrayType(StringType))
     def compute(in: ArrayData): ArrayData = {
-      import org.apache.spark.unsafe.types.UTF8String
       val len = in.numElements()
       if (len < n) return new GenericArrayData(Array.empty[Any])
       val ts = new Array[UTF8String](len)
@@ -2653,18 +2340,11 @@ object ArrayKernels {
       var idx = 0
       while (it.hasNext) {
         val e = it.next()
-        out(idx) = org.apache.spark.sql.catalyst.InternalRow(
+        out(idx) = InternalRow(
           e.getKey, e.getValue.longValue())
         idx += 1
       }
       new GenericArrayData(out)
-    }
-    override def nullSafeEval(in: Any): Any =
-      compute(in.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("tokNgramKernel", this,
-        classOf[TokenNgramCounts].getName)
-      nullSafeCodeGen(ctx, ev, in => s"${ev.value} = $ref.compute($in);")
     }
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -2687,27 +2367,11 @@ object ArrayKernels {
     * view into a reused unsafe buffer must not outlive the row read).
     */
   case class GramMaxMerge(left: Expression, right: Expression)
-      extends BinaryExpression {
-    private val entryType = StructType(Seq(
-      StructField("g", StringType, nullable = false),
-      StructField("c", LongType, nullable = false)))
-    override def dataType: DataType =
-      ArrayType(entryType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (ArrayType(l: StructType, _), ArrayType(r: StructType, _))
-          if l.fields.map(f => (f.name, f.dataType)).toSeq ==
-            entryType.fields.map(f => (f.name, f.dataType)).toSeq &&
-            r.fields.map(f => (f.name, f.dataType)).toSeq ==
-              entryType.fields.map(f => (f.name, f.dataType)).toSeq =>
-          TypeCheckResult.TypeCheckSuccess
-        case (l, r) => TypeCheckResult.TypeCheckFailure(
-          s"gram_max_merge requires two ARRAY<STRUCT<g STRING, c BIGINT>>, " +
-            s"got ${l.catalogString}, ${r.catalogString}")
-      }
-
+      extends BinaryKernel[ArrayData, ArrayData, ArrayData] {
+    override def dataType: DataType = GRAM_DICT_T
+    override def inputTypes = Seq(GRAM_DICT_T, GRAM_DICT_T)
+    override def checkInputDataTypes(): TypeCheckResult = gramDictCheck(this)
     def compute(aIn: ArrayData, bIn: ArrayData): ArrayData = {
-      import org.apache.spark.unsafe.types.UTF8String
       val na = aIn.numElements()
       val nb = bIn.numElements()
       val m = new java.util.LinkedHashMap[UTF8String, java.lang.Long](
@@ -2734,20 +2398,11 @@ object ArrayKernels {
       var idx = 0
       while (it.hasNext) {
         val e = it.next()
-        out(idx) = org.apache.spark.sql.catalyst.InternalRow(
+        out(idx) = InternalRow(
           e.getKey, e.getValue.longValue())
         idx += 1
       }
       new GenericArrayData(out)
-    }
-
-    override def nullSafeEval(a: Any, b: Any): Any =
-      compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("gramMaxMergeKernel", this,
-        classOf[GramMaxMerge].getName)
-      nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.compute($a, $b);")
     }
 
     override protected def withNewChildrenInternal(newLeft: Expression,
@@ -2771,30 +2426,14 @@ object ArrayKernels {
     * per row per level.
     */
   case class GramClipStats(left: Expression, right: Expression)
-      extends BinaryExpression {
-    private val entryType = StructType(Seq(
-      StructField("g", StringType, nullable = false),
-      StructField("c", LongType, nullable = false)))
+      extends BinaryKernel[ArrayData, ArrayData, InternalRow] {
     override def dataType: DataType = StructType(Seq(
       StructField("m", LongType, nullable = false),
       StructField("t", LongType, nullable = false),
       StructField("tr", LongType, nullable = false)))
-    override def checkInputDataTypes(): TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (ArrayType(l: StructType, _), ArrayType(r: StructType, _))
-          if l.fields.map(f => (f.name, f.dataType)).toSeq ==
-            entryType.fields.map(f => (f.name, f.dataType)).toSeq &&
-            r.fields.map(f => (f.name, f.dataType)).toSeq ==
-              entryType.fields.map(f => (f.name, f.dataType)).toSeq =>
-          TypeCheckResult.TypeCheckSuccess
-        case (l, r) => TypeCheckResult.TypeCheckFailure(
-          s"gram_clip_stats requires two ARRAY<STRUCT<g STRING, c BIGINT>>, " +
-            s"got ${l.catalogString}, ${r.catalogString}")
-      }
-
-    def compute(aIn: ArrayData, bIn: ArrayData)
-        : org.apache.spark.sql.catalyst.InternalRow = {
-      import org.apache.spark.unsafe.types.UTF8String
+    override def inputTypes = Seq(GRAM_DICT_T, GRAM_DICT_T)
+    override def checkInputDataTypes(): TypeCheckResult = gramDictCheck(this)
+    def compute(aIn: ArrayData, bIn: ArrayData): InternalRow = {
       val nb = bIn.numElements()
       var tr = 0L
       val refMap = new java.util.HashMap[UTF8String, java.lang.Long](nb * 2)
@@ -2818,16 +2457,7 @@ object ArrayKernels {
         if (rc != null) m += math.min(c, rc.longValue())
         i += 1
       }
-      org.apache.spark.sql.catalyst.InternalRow(m, t, tr)
-    }
-
-    override def nullSafeEval(a: Any, b: Any): Any =
-      compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("gramClipKernel", this,
-        classOf[GramClipStats].getName)
-      nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.compute($a, $b);")
+      InternalRow(m, t, tr)
     }
 
     override protected def withNewChildrenInternal(newLeft: Expression,
@@ -2859,24 +2489,14 @@ object ArrayKernels {
     */
   case class GopherRepStats(first: Expression, second: Expression,
       third: Expression, lite: Boolean = false)
-      extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
+      extends TernaryKernel[ArrayData, ArrayData, ArrayData, InternalRow] {
     private val longField = (n: String) => StructField(n, LongType, nullable = false)
     override def dataType: DataType = StructType(Seq(
       "d", "nl", "dl", "lch", "dlch", "np", "dp", "pch", "dpch",
       "t2", "t3", "t4", "d5", "d6", "d7", "d8", "d9", "d10",
       "ntok", "t1c", "d3i").map(longField))
-    override def checkInputDataTypes(): TypeCheckResult =
-      (first.dataType, second.dataType, third.dataType) match {
-        case (ArrayType(StringType, _), ArrayType(StringType, _),
-          ArrayType(StringType, _)) => TypeCheckResult.TypeCheckSuccess
-        case (a, b, c) => TypeCheckResult.TypeCheckFailure(
-          s"gopher_rep_stats requires three ARRAY<STRING>, got " +
-            s"${a.catalogString}, ${b.catalogString}, ${c.catalogString}")
-      }
-
-    def compute(t: ArrayData, ls: ArrayData, ps: ArrayData)
-        : org.apache.spark.sql.catalyst.InternalRow = {
-      import org.apache.spark.unsafe.types.UTF8String
+    override def inputTypes = Seq.fill(3)(ArrayType(StringType))
+    def compute(t: ArrayData, ls: ArrayData, ps: ArrayData): InternalRow = {
       val L = t.numElements()
       val tstr = new Array[UTF8String](L)
       val tlen = new Array[Int](L)
@@ -2998,26 +2618,15 @@ object ArrayKernels {
       // lite mode (repetitionScores): only ntok/t1c/d3i are consumed —
       // skip the nine gopher gram levels, emit zeros in their slots
       if (lite)
-        org.apache.spark.sql.catalyst.InternalRow(
+        InternalRow(
           dtok, nl, dl, lch, dlch, np, dp, pch, dpch,
           0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, L.toLong, t1c, d3i)
       else
-        org.apache.spark.sql.catalyst.InternalRow(
+        InternalRow(
           dtok, nl, dl, lch, dlch, np, dp, pch, dpch,
           topStats(2), t3, topStats(4),
           dupStats(5), dupStats(6), dupStats(7), dupStats(8), dupStats(9),
           dupStats(10), L.toLong, t1c, d3i)
-    }
-
-    override def nullSafeEval(a: Any, b: Any, c: Any): Any =
-      compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-        c.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("gopherRepKernel", this,
-        classOf[GopherRepStats].getName)
-      nullSafeCodeGen(ctx, ev,
-        (a, b, c) => s"${ev.value} = $ref.compute($a, $b, $c);")
     }
 
     override protected def withNewChildrenInternal(newFirst: Expression,
@@ -3094,13 +2703,13 @@ object ArrayKernels {
     * codegen: rows here are query-batch-sized, never corpus-sized.
     */
   case class MmrGreedy(left: Expression, right: Expression, m: Int,
-      lambda: Double) extends BinaryExpression
-      with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+      lambda: Double) extends BinaryExpression with CodegenFallback {
     require(m > 0, s"mmr_greedy: m must be positive, got $m")
     override def dataType: DataType = ArrayType(StructType(Seq(
       StructField("id", LongType, nullable = false),
       StructField("mmr", DoubleType, nullable = false),
       StructField("rank", LongType, nullable = false))), containsNull = false)
+    // by hand: the struct field types are fixed, their names are not
     override def checkInputDataTypes(): TypeCheckResult =
       (left.dataType, right.dataType) match {
         case (ArrayType(StructType(cf), _), ArrayType(StructType(sf), _))
@@ -3124,7 +2733,6 @@ object ArrayKernels {
 
   def mmrGreedyEval(cands: ArrayData, sims: ArrayData, m: Int,
       lambda: Double): ArrayData = {
-    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
     val n = cands.numElements()
     if (n == 0) return new GenericArrayData(Array.empty[Any])
     val ids = new Array[Long](n)

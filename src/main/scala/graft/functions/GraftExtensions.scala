@@ -19,6 +19,14 @@ object GraftExtensions {
   private def info(name: String, usage: String) =
     new ExpressionInfo(ArrayKernels.getClass.getName, null, name, usage, "", "", "", "", "", "", "built-in")
 
+  /** The value of an INT or in-range BIGINT literal argument. */
+  private def intLit(e: Expression, what: String): Int = e match {
+    case Literal(i: Int, _) => i
+    case Literal(l: Long, _) if l.isValidInt => l.toInt
+    case other => throw new IllegalArgumentException(
+      s"$what must be an INT-range integer literal, got $other")
+  }
+
   private[functions] val functions: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     ("array_dot",
       info("array_dot", "array_dot(a, b) - dot product of two ARRAY<DOUBLE>"),
@@ -28,12 +36,8 @@ object GraftExtensions {
       (exprs: Seq[Expression]) => SimHash64(exprs.head)),
     ("byte_histogram",
       info("byte_histogram", "byte_histogram(blob, bins) - byte-value histogram of BINARY"),
-      (exprs: Seq[Expression]) => ByteHistogram(exprs(0), exprs(1) match {
-        case Literal(i: Int, _) => i
-        case Literal(l: Long, _) => l.toInt
-        case other => throw new IllegalArgumentException(
-          s"byte_histogram(blob, bins): bins must be an integer literal, got $other")
-      })),
+      (exprs: Seq[Expression]) =>
+        ByteHistogram(exprs(0), intLit(exprs(1), "byte_histogram(blob, bins): bins"))),
     ("array_eq_count",
       info("array_eq_count", "array_eq_count(a, b) - positions where two ARRAY<BIGINT> agree"),
       (exprs: Seq[Expression]) => ArrayEqCount(exprs(0), exprs(1))),
@@ -47,19 +51,11 @@ object GraftExtensions {
     ("token_ngrams",
       info("token_ngrams",
         "token_ngrams(toks, n[, distinct]) - space-joined token n-grams of ARRAY<STRING>"),
-      (exprs: Seq[Expression]) => {
-        def intLit(e: Expression, what: String): Int = e match {
-          case Literal(i: Int, _) => i
-          case Literal(l: Long, _) => l.toInt
-          case other => throw new IllegalArgumentException(
-            s"token_ngrams: $what must be an integer literal, got $other")
-        }
-        exprs match {
-          case Seq(toks, n) => TokenNgrams(toks, intLit(n, "n"), distinct = false)
-          case Seq(toks, n, Literal(d: Boolean, _)) => TokenNgrams(toks, intLit(n, "n"), d)
-          case other => throw new IllegalArgumentException(
-            s"token_ngrams(toks, n[, distinct]) takes 2-3 arguments, got ${other.length}")
-        }
+      (exprs: Seq[Expression]) => exprs match {
+        case Seq(toks, n) => TokenNgrams(toks, intLit(n, "token_ngrams: n"), distinct = false)
+        case Seq(toks, n, Literal(d: Boolean, _)) => TokenNgrams(toks, intLit(n, "token_ngrams: n"), d)
+        case other => throw new IllegalArgumentException(
+          s"token_ngrams(toks, n[, distinct]) takes 2-3 arguments, got ${other.length}")
       }),
     ("token_lcs_len",
       info("token_lcs_len",
@@ -80,19 +76,17 @@ object GraftExtensions {
       info("wav_frame_rms",
         "wav_frame_rms(blob, frameSamples) - per-frame RMS of canonical PCM16 WAV BINARY"),
       (exprs: Seq[Expression]) => exprs match {
-        case Seq(blob, Literal(i: Int, _)) => WavFrameRms(blob, i)
-        case Seq(blob, Literal(l: Long, _)) => WavFrameRms(blob, l.toInt)
+        case Seq(blob, n) => WavFrameRms(blob, intLit(n, "wav_frame_rms(blob, frameSamples): frameSamples"))
         case other => throw new IllegalArgumentException(
-          s"wav_frame_rms(blob, frameSamples): frameSamples must be an integer literal, got $other")
+          s"wav_frame_rms(blob, frameSamples) takes exactly 2 arguments, got ${other.length}")
       }),
     ("ppm_patch_means",
       info("ppm_patch_means",
         "ppm_patch_means(blob, patch) - patch-grid mean RGB of raw P6 PPM BINARY"),
       (exprs: Seq[Expression]) => exprs match {
-        case Seq(blob, Literal(i: Int, _)) => PpmPatchMeans(blob, i)
-        case Seq(blob, Literal(l: Long, _)) => PpmPatchMeans(blob, l.toInt)
+        case Seq(blob, n) => PpmPatchMeans(blob, intLit(n, "ppm_patch_means(blob, patch): patch"))
         case other => throw new IllegalArgumentException(
-          s"ppm_patch_means(blob, patch): patch must be an integer literal, got $other")
+          s"ppm_patch_means(blob, patch) takes exactly 2 arguments, got ${other.length}")
       }))
 
   /** Register into a live session. */

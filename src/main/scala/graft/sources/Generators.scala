@@ -55,14 +55,6 @@ object Generators {
     }
   }
 
-  /** S1/S2/S9: `fromElements`/`fromCollection` → createDataset. */
-  def fromCollection[T: org.apache.spark.sql.Encoder](spark: SparkSession, xs: Seq[T]): Dataset[T] =
-    spark.createDataset(xs)
-
-  /** S3: `fromSequence(a, b)` → spark.range (distributed, no driver list). */
-  def fromSequence(spark: SparkSession, from: Long, to: Long): Dataset[java.lang.Long] =
-    spark.range(from, to + 1).as[java.lang.Long](org.apache.spark.sql.Encoders.LONG)
-
   /** S4: socket text stream — `socketTextStream(host, port)` →
     * Structured Streaming socket source (untyped line stream).
     */

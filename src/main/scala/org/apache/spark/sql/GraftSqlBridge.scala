@@ -11,6 +11,11 @@ object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** STRING or BINARY, as an `ExpectsInputTypes` entry (`TypeCollection`
+    * is `private[sql]`).
+    */
+  val stringOrBinary = types.TypeCollection(types.StringType, types.BinaryType)
+
   /** Register a function into an existing session's registry (the
     * per-session twin of `SparkSessionExtensions.injectFunction`).
     */

@@ -105,46 +105,99 @@ class PropertySpec extends SparkSpec {
   }
 
   test("array kernels: interpreted eval equals whole-stage codegen on random inputs") {
-    // every kernel whose loop was once written twice, plus MinHash, which
-    // still is: interpreted `eval()` row by row must equal the generated
-    // code. Inputs include null rows, null tokens and arrays shorter than
-    // n / shingleK.
+    // every kernel on the UnaryKernel/BinaryKernel/TernaryKernel wiring,
+    // plus MinHash and ppm_dhash, which write their own generated code:
+    // interpreted `eval()` row by row must equal the generated code.
+    // Inputs include null rows, null tokens, empty and short arrays,
+    // decomposed accents, and blobs that are (or are almost) PPM and WAV.
+    // BpeMergePair gets null-free symbols: a null symbol passes through
+    // into its containsNull = false result.
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.catalyst.CatalystTypeConverters
     import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
     import org.apache.spark.sql.types._
     import graft.functions.ArrayKernels
+    import graft.functions.ArrayKernels._
     def opt[T](g: Gen[T]): Gen[Option[T]] =
       Gen.frequency(1 -> Gen.const(None), 6 -> g.map(Some(_)))
     def arr[T](g: Gen[T]): Gen[Seq[T]] =
       Gen.chooseNum(0, 7).flatMap(Gen.listOfN(_, g))
     val longs = Gen.oneOf(Gen.choose(0L, 3L), Gen.choose(Long.MinValue, Long.MaxValue))
-    val tok = Gen.frequency(1 -> Gen.const(null: String), 5 -> Gen.oneOf("a", "b", "c"))
+    val tok = Gen.frequency(1 -> Gen.const(null: String), 5 -> Gen.oneOf("a", "b", "c", "ab"))
+    val str = Gen.chooseNum(0, 12).flatMap(n =>
+      Gen.listOfN(n, Gen.oneOf("a", "b", "c", "th", "he", " ", "e\u0301", "\u00e9", "日"))
+        .map(_.mkString))
+    def bytes(n: Int) = Gen.listOfN(n, Gen.choose(Byte.MinValue, Byte.MaxValue)).map(_.toArray)
+    val ppm = for {
+      w <- Gen.choose(1, 12); h <- Gen.choose(1, 10); cut <- Gen.choose(0, 2)
+      px <- bytes(w * h * 3 - cut)
+    } yield s"P6 $w $h 255\n".getBytes("US-ASCII") ++ px
+    val wav = for { n <- Gen.choose(0, 24); pcm <- bytes(2 * n) } yield {
+      val bb = java.nio.ByteBuffer.allocate(44).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      bb.put("RIFF".getBytes).putInt(36 + pcm.length).put("WAVEfmt ".getBytes)
+        .putInt(16).putShort(1.toShort).putShort(1.toShort).putInt(8000).putInt(16000)
+        .putShort(2.toShort).putShort(16.toShort).put("data".getBytes).putInt(pcm.length)
+      bb.array() ++ pcm
+    }
+    val blob = Gen.oneOf(Gen.chooseNum(0, 40).flatMap(bytes), ppm, wav)
     val inGen = for {
       d1 <- opt(arr(Gen.choose(-10.0, 10.0))); d2 <- opt(arr(Gen.choose(-10.0, 10.0)))
-      l1 <- opt(arr(longs)); l2 <- opt(arr(longs)); t <- opt(arr(tok))
-      b <- opt(arr(Gen.choose(Byte.MinValue, Byte.MaxValue)).map(_.toArray))
-    } yield (d1, d2, l1, l2, t, b)
+      l1 <- opt(arr(longs)); l2 <- opt(arr(longs)); t <- opt(arr(tok)); t2 <- opt(arr(tok))
+      b <- opt(blob); s <- opt(str); lane <- opt(Gen.choose(0, 3))
+      syms <- opt(arr(Gen.oneOf("a", "b", "c")))
+    } yield (d1, d2, l1, l2, t, t2, b, s, lane, syms)
     val (mhA, mhB) = (Array(3L, -5L, 1000003L), Array(7L, 11L, -13L))
+    val pieces = Seq("a", "b", "ab", "th", "the", "\u00e9")
+    val logps = Seq(-1.0, -1.5, -0.8, -1.2, -0.5, -2.0)
     val kernels: Seq[Seq[Expression] => Expression] = Seq(
-      c => ArrayKernels.ArrayDotProduct(c(0), c(1)),
-      c => ArrayKernels.ArrayEqCount(c(2), c(3)),
-      c => ArrayKernels.SimHash64(c(2)),
-      c => ArrayKernels.MinHashSignature(c(2), 3, mhA, mhB, 2147483647L),
-      c => ArrayKernels.ByteHistogram(c(5), 7),
-      c => ArrayKernels.TokenNgrams(c(4), 3, distinct = false),
-      c => ArrayKernels.TokenNgrams(c(4), 2, distinct = true))
-    val names = Seq("d1", "d2", "l1", "l2", "t", "b")
-    check(Prop.forAll(Gen.listOfN(25, inGen)) { rows =>
-      val df = rows.zipWithIndex.map { case ((d1, d2, l1, l2, t, b), i) =>
-        (i.toLong, d1, d2, l1, l2, t, b)
+      c => ArrayDotProduct(c(0), c(1)),
+      c => ArrayEqCount(c(2), c(3)),
+      c => SimHash64(c(2)),
+      c => MinHashSignature(c(2), 3, mhA, mhB, 2147483647L),
+      c => ByteHistogram(c(6), 7),
+      c => DeflateRatio(c(6)),
+      c => DeflateRatio(c(7)),
+      c => PpmDHash(c(6)),
+      c => PpmPatchMeans(c(6), 4),
+      c => WavFrameRms(c(6), 5),
+      c => MediaHeader(c(6)),
+      c => LangPredict(c(7), Seq("en" -> Seq("th", "he"), "xx" -> Seq("ab", "c"))),
+      c => TokenNgrams(c(4), 3, distinct = false),
+      c => TokenNgrams(c(4), 2, distinct = true),
+      c => NfcNormalize(c(7)),
+      c => BpeSegmentIds(c(7), Seq("ab", "a", "th")),
+      c => SignedRandomProject(c(0), 5, 3, "p"),
+      c => HashEmbedEntries(c(4), 8),
+      c => HashCountEntries(c(4), 8),
+      c => HashEmbedDense(c(4), 8),
+      c => CharEntropy(c(7)),
+      c => BpeMergePair(c(9), "a", "b"),
+      c => BpeMergeEncode(c(7), Seq("a" -> "b", "t" -> "h", "th" -> "e")),
+      c => UnigramViterbi(c(7), pieces, logps, -5.0),
+      c => UnigramExpectedCounts(c(7), pieces, logps, -5.0),
+      c => UnigramExpectedCounts(c(7), pieces, logps, -5.0, quantize = true),
+      c => UnigramSample(c(7), pieces, logps, -5.0, 17L, 0.5),
+      c => Poisson1Weight(c(7), c(8), Seq(0.2, 0.5, 0.9)),
+      c => TokenLcsLen(c(4), c(5)),
+      c => TokenEditDist(c(4), c(5)),
+      c => TerShiftStats(c(4), c(5), 3),
+      c => CharNgramCounts(c(7), 2),
+      c => TokenNgramCounts(c(4), 2),
+      c => GramMaxMerge(CharNgramCounts(c(7), 1), TokenNgramCounts(c(5), 1)),
+      c => GramClipStats(TokenNgramCounts(c(4), 1), TokenNgramCounts(c(5), 1)),
+      c => GopherRepStats(c(4), c(5), c(4)),
+      c => GopherRepStats(c(4), c(5), c(5), lite = true))
+    val names = Seq("d1", "d2", "l1", "l2", "t", "t2", "b", "s", "lane", "syms")
+    check(Prop.forAll(Gen.listOfN(40, inGen)) { rows =>
+      val df = rows.zipWithIndex.map { case ((d1, d2, l1, l2, t, t2, b, s, lane, syms), i) =>
+        (i.toLong, d1, d2, l1, l2, t, t2, b, s, lane, syms)
       }.toDF("id" +: names: _*)
       val cols = names.map(n => org.apache.spark.sql.GraftSqlBridge.expression(col(n)))
       // repartition: a projection over a local Seq is folded into the
       // LocalRelation (interpreted) and never reaches codegen
       val out = df.repartition(1).select(col("id") +:
         kernels.map(k => org.apache.spark.sql.GraftSqlBridge.column(k(cols))): _*)
-      val generated = collectGenerated(out, classOf[ArrayKernels.MinHashSignature])
+      val generated = collectGenerated(out, classOf[ArrayKernels.GopherRepStats])
         .sortBy(_.getLong(0))
       val types = df.schema.map(_.dataType).tail
       generated.length == rows.length && rows.zip(generated).forall { case (r, g) =>

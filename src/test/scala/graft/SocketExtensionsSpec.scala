@@ -71,4 +71,29 @@ class SocketExtensionsSpec extends SparkSpec {
       spark.sql("SELECT array_dot(array(1.0d), array(1.0d))").collect()
     }
   }
+
+  test("GraftExtensions: a wrong-typed argument fails analysis for every SQL kernel") {
+    val s2 = spark.newSession()
+    graft.functions.GraftExtensions.install(s2)
+    val calls = Seq(
+      "array_dot(1, 2)", "simhash64('x')", "byte_histogram('x', 4)",
+      "array_eq_count(array(1.0d), array(2.0d))", "deflate_ratio(1)",
+      "token_ngrams('x', 2)", "token_lcs_len(array(1), array(2))",
+      "nfc_normalize(array('a'))", "wav_frame_rms('x', 4)", "ppm_patch_means('x', 2)")
+    calls.foreach { c =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](s2.sql(s"SELECT $c").collect())
+      assert(e.getMessage.contains("DATATYPE_MISMATCH"), s"$c: ${e.getMessage}")
+    }
+  }
+
+  test("GraftExtensions: an integer argument outside the INT range is rejected") {
+    val s2 = spark.newSession()
+    graft.functions.GraftExtensions.install(s2)
+    // 4294967304 = 2^32 + 8: read as an Int it would silently be 8 bins
+    intercept[IllegalArgumentException] {
+      s2.sql("SELECT byte_histogram(cast('aa' as binary), 4294967304)").collect()
+    }
+    assert(s2.sql("SELECT byte_histogram(cast('aa' as binary), 8L)")
+      .collect().head.getSeq[Int](0).sum == 2)
+  }
 }
