@@ -1382,7 +1382,11 @@ object ArrayKernels {
       .fromString(left + right)
     private val leftSym = UTF8String.fromString(left)
     private val rightSym = UTF8String.fromString(right)
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
+    // a null symbol passes through: the result may hold nulls iff the input may
+    override def dataType: DataType = ArrayType(StringType, child.dataType match {
+      case ArrayType(_, containsNull) => containsNull
+      case _ => true
+    })
     override def inputTypes = Seq(ArrayType(StringType))
     def compute(in: ArrayData): ArrayData = {
       val n = in.numElements()

@@ -1,7 +1,9 @@
 package graft.ops
 
+import org.apache.spark.{Partitioner, TaskContext}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** Data-contract enforcement for delivered tables — the ingest-time twin
   * of the corpus observability stack (drift watches distributions,
@@ -72,26 +74,28 @@ object Contracts {
     *
     * `exact = true` (the validation form) computes n_distinct AND the
     * exact percentiles per column off ONE distinct-value dictionary
-    * (`groupBy(col).count`, a map-side-combined two-phase aggregate over
-    * a single pruned parquet column): n_distinct is the dictionary's row
-    * count, and p50/p95 come from [[exactPercentiles]] — a DISTRIBUTED
-    * prefix sum over the dictionary (the perplexityBuckets machinery)
+    * (a map-side-combined `groupBy` over the pruned columns): n_distinct
+    * is the dictionary's row count, and p50/p95 are order statistics
+    * found on the range-partitioned dictionary ([[exactProfileStats]])
     * plus a driver-side interpolation replicating Spark `percentile`'s
     * exact formula. Neither metric rides the main aggregate, so there is
     * no multi-distinct Expand replicating scan rows and no exact
     * `percentile` ObjectHashAggregate holding every value of every
     * column in executor memory — the two round-9 q_profile scale
-    * killers (21.9 → ~1.5 s at sf0.1; at 100 TB the dictionary is
-    * distinct-value-sized and the prefix sum never forms a single
-    * partition). `exact = false` (the monitoring form) keeps everything
-    * inline in the one pass: HLL++ `approx_count_distinct` (±2 %) and
-    * `approx_percentile` sketches — estimates, one scan, fixed memory.
+    * killers. At 100 TB the dictionary is distinct-value-sized and never
+    * forms a single partition. `exact = false` (the monitoring form)
+    * keeps everything inline in the one pass: HLL++
+    * `approx_count_distinct` (±2 %) and `approx_percentile` sketches —
+    * estimates, one scan, fixed memory.
     *
-    * NOTE: `exact = true` executes EAGERLY — the dictionary chain runs on
-    * the calling thread inside this call (so its jobs carry the caller's
-    * job group and local properties) and its results ride
-    * the returned frame as literals; the frame is NOT a lazy plan over
-    * `df`.
+    * NOTE: `exact = true` executes EAGERLY — inside this call and on the
+    * calling thread (so its jobs carry the caller's job group and local
+    * properties) it runs the dictionary's aggregate stage, the range
+    * partitioner's sample, one per-partition count job and one job over
+    * the partitions holding a wanted rank, plus a raw `count(DISTINCT)`
+    * job when a column does not cast to double injectively. Its results
+    * ride the returned frame as literals; the frame is NOT a lazy plan
+    * over `df`.
     */
   def tableProfile(df: DataFrame, cols: Seq[String],
       exact: Boolean = true): DataFrame = {
@@ -111,11 +115,9 @@ object Contracts {
         round(stddev_samp(d), 4).as(s"std_$c"))
     }
     val wide = df.agg(aggs.head, aggs.tail: _*)
-    // exact path (round-17): ALL columns' dictionaries come off ONE
-    // long-format pass over the table (explode to (column, value) rows,
-    // one map-side-combined groupBy) instead of k concurrent per-column
-    // chains — same shuffle bytes, one scan instead of k, ~6 jobs
-    // instead of ~8k (guide §2.4/§1.2: remove passes before tuning them)
+    // exact path: ALL columns' dictionaries come off ONE long-format pass
+    // over the table (explode to (column, value) rows, one map-side-
+    // combined groupBy) instead of k per-column chains
     val one = if (!exact) wide else {
       val stats = exactProfileStats(df, cols, Seq(0.5, 0.95))
       cols.foldLeft(wide) { (acc, c) =>
@@ -138,62 +140,49 @@ object Contracts {
     one.select(explode(array(rows: _*)).as("r")).select(col("r.*"))
   }
 
-  /** Exact n_distinct + exact percentiles of one column, computed the
-    * way a 100 TB table allows: ONE two-phase `groupBy(col).count` over
-    * the pruned single-column scan builds the distinct-value dictionary
-    * (map-side combine — the shuffle is distinct-value-sized, never
-    * row-sized), then the global cumulative count over the dictionary is
-    * the DISTRIBUTED prefix sum of [[PrefixSum.cumulative]] (adaptive
-    * range buckets + within-bucket windows + broadcast offsets — never
-    * one unpartitioned window at any cardinality). Each requested
-    * percentile then needs only the order statistics at
-    * floor/ceil(p·(n−1)), looked up by rank against the cumulative
-    * counts, and the interpolation replicates Spark `percentile`'s
-    * exact arithmetic — `(higher − pos)·lower + (pos − lower)·higher`
-    * with its two short-circuits — so the result is bit-identical to
-    * the built-in exact aggregate without ever materializing every
-    * value of the column in one ObjectHashAggregate buffer.
+  /** Exact n_distinct + exact percentiles of one column: the one-column
+    * form of [[exactProfileStats]].
     *
-    * n_distinct counts the ORIGINAL column values (the dictionary key);
-    * percentile machinery runs entirely on the DOUBLE cast — the
-    * dictionary re-aggregates by the cast (distinct raw values can only
-    * merge under it, so the second aggregate is dictionary-sized), rows
-    * whose cast is null drop out, and the cumulative window orders by
-    * the cast — exactly `percentile(TRY_CAST(c AS DOUBLE), p)`
-    * semantics (try_cast so an unparseable string drops out instead of
-    * throwing under ANSI).
-    * A string column therefore gets numeric (not lexicographic)
+    * n_distinct counts the ORIGINAL column values; the percentiles are
+    * exactly `percentile(TRY_CAST(c AS DOUBLE), p)` (try_cast so an
+    * unparseable string drops out instead of throwing under ANSI). A
+    * string column therefore gets numeric (not lexicographic)
     * percentile ordering over its parseable values, and a column with
-    * no castable values gets null percentiles instead of a rank-lookup
-    * failure. Returns (n_distinct, value per requested percentile —
-    * None when no non-null-cast rows exist).
+    * no castable values gets null percentiles. Returns (n_distinct,
+    * value per requested percentile — None when no non-null-cast rows
+    * exist).
     */
   private[graft] def exactColumnStats(df: DataFrame, c: String,
       ps: Seq[Double]): (Long, Seq[Option[Double]]) =
     exactProfileStats(df, Seq(c), ps)(c)
 
-  /** The batched form: every column's (n_distinct, exact percentiles) off
-    * at most TWO single-scan chains instead of k per-column chains, both
-    * run on the calling thread (so every job carries the caller's job
-    * group and local properties).
+  /** Every column's (n_distinct, exact percentiles), all jobs on the
+    * calling thread (so every job carries the caller's job group and
+    * local properties).
     *
     * Percentiles: `explode` stacks the profiled columns into
     * (column-index, value-as-double) rows — `try_cast`, so malformed
-    * strings drop out as null instead of throwing under ANSI — one
-    * map-side-combined groupBy builds ALL value dictionaries in a single
-    * scan+shuffle, and ONE [[PrefixSum.cumulative]] (partitioned by
-    * column via `byCol`) ranks them together.
+    * strings drop out as null — and one map-side-combined groupBy builds
+    * ALL value dictionaries in a single scan+shuffle. The dictionary is
+    * range-partitioned and sorted on (column, value) in `percentile`'s
+    * value order, one job counts each partition's rows and value mass
+    * per column, and the driver turns those counts into the partition
+    * and offset of every wanted order statistic floor/ceil(p·(n−1)). One
+    * last job reads only those partitions, and the interpolation
+    * replicates `percentile`'s exact arithmetic —
+    * `(higher − pos)·lower + (pos − lower)·higher` with its two
+    * short-circuits — so results are bit-identical to the built-in
+    * aggregate. The driver receives per-partition counts and the wanted
+    * rows only.
     *
     * n_distinct: when every profiled column's type casts to double
     * INJECTIVELY (int and narrower, float/double, boolean, decimal with
     * ≤ 15 digits — all below 2^53), distinct raw values ≡ distinct
-    * dictionary keys and n_distinct reads off the same dictionary for
-    * free. Otherwise (strings, longs, wide decimals) one separate
-    * `count(DISTINCT col)`-per-column aggregate over RAW values runs
-    * after the dictionary chain; its Expand multiplies rows
-    * only into map-side partial aggregates — it never rides the returned
-    * frame's plan and never joins a percentile buffer (the round-9
-    * q_profile scale killers).
+    * dictionary keys and n_distinct is the dictionary's row count.
+    * Otherwise (strings, longs, wide decimals) one separate
+    * `count(DISTINCT col)`-per-column aggregate over RAW values runs;
+    * its Expand multiplies rows only into map-side partial aggregates
+    * and never rides the returned frame's plan.
     */
   private[graft] def exactProfileStats(df: DataFrame, cols: Seq[String],
       ps: Seq[Double]): Map[String, (Long, Seq[Option[Double]])] = {
@@ -218,114 +207,83 @@ object Contracts {
     // stage it parallelizes, because the near-all-distinct dictionary
     // gives the partial aggregate nothing to combine either way. Left on
     // the scan splits.
-    val dictD = df
+    val dict = df
       .select(explode(array(entries: _*)).as("e"))
       .select(col("e._i").as("_i"), col("e._d").as("_d"))
       .where(col("_d").isNotNull)
       .groupBy("_i", "_d").agg(count(lit(1)).as("_c"))
-      .localCheckpoint()
-    // one tiny job: per column, the castable row total the percentile
-    // positions index into + the dictionary row count (≡ n_distinct on
-    // the all-injective path)
-    val nRows = dictD.groupBy("_i")
-      .agg(sum("_c").as("_n"), count(lit(1)).as("_rows")).collect()
-      .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val ns = cols.indices.map(i => nRows.get(i).map(_._1).getOrElse(0L))
-    val dictRows = nRows.values.map(_._2).sum
+      // the aggregate emits rows in shuffle-fetch order; sorted, the
+      // seeded range sample below is the same on every run
+      .sortWithinPartitions("_i", "_d")
+      .rdd.map(r => ((r.getInt(0), r.getDouble(1)), r.getLong(2)))
+    val sc = df.sparkSession.sparkContext
+    // range bounds from a reservoir sample of each dictionary partition,
+    // seeded by partition: Spark's RangePartitioner seeds its sample with
+    // the RDD id, so its ranges and shuffle bytes would change every run
+    val nParts = df.sparkSession.conf.get(SQLConf.SHUFFLE_PARTITIONS.key).toInt
+    val sampleSize = math.ceil(
+      3.0 * math.min(20.0 * nParts, 1e6) / math.max(1, dict.getNumPartitions)).toInt
+    val samples = sc.runJob(dict,
+      (ctx: TaskContext, it: Iterator[((Int, Double), Long)]) => {
+        val rnd = new java.util.Random(ctx.partitionId())
+        val kept = new Array[(Int, Double)](sampleSize)
+        var seen = 0L
+        it.foreach { case (key, _) =>
+          val slot = if (seen < sampleSize) seen else (rnd.nextDouble() * (seen + 1)).toLong
+          if (slot < sampleSize) kept(slot.toInt) = key
+          seen += 1
+        }
+        (seen, kept.take(math.min(seen, sampleSize.toLong).toInt))
+      })
+    val sorted = dict.repartitionAndSortWithinPartitions(
+      new RangeBounds(rangeBounds(samples, nParts)))
+    val k = cols.length
+    // one job: per partition, each column's dictionary rows and value mass
+    val perPart: Array[(Array[Long], Array[Long])] = sc.runJob(sorted,
+      (it: Iterator[((Int, Double), Long)]) => {
+        val (rows, mass) = (new Array[Long](k), new Array[Long](k))
+        it.foreach { case ((i, _), c) => rows(i) += 1; mass(i) += c }
+        (rows, mass)
+      })
+    // per column, the castable row total the percentile positions index
+    // into, and the dictionary size (≡ n_distinct on the injective path)
+    val ns = cols.indices.map(i => perPart.map(_._2(i)).sum)
     val nds =
-      if (allInjective) cols.indices.map(i => nRows.get(i).map(_._2).getOrElse(0L))
+      if (allInjective) cols.indices.map(i => perPart.map(_._1(i)).sum)
       else {
         val row = df.agg(countDistinct(col(cols.head)),
           cols.tail.map(c => countDistinct(col(c))): _*).head()
         cols.indices.map(i => if (row.isNullAt(i)) 0L else row.getLong(i))
       }
-    // per-column 0-indexed order statistics wanted from the shared
-    // cumulative frame (none for all-null/uncastable columns)
-    val ranksOf = cols.indices.map { i =>
-      if (ns(i) == 0L) Seq.empty[Long]
-      else ps.map(p => p * (ns(i) - 1).toDouble)
-        .flatMap(r => Seq(math.floor(r).toLong, math.ceil(r).toLong))
-        .distinct
-    }
-    val hits: Map[(Int, Long), Double] =
-      if (ranksOf.forall(_.isEmpty)) Map.empty
-      else {
-        // Round 17 (guide §1.2/§2.3): rank-TARGETED order statistics
-        // instead of the full PrefixSum.cumulative — the profiler throws
-        // away all but ~4 rows per column of the global running sum, so
-        // windowing the whole dictionary (583k rows for a near-all-
-        // distinct column at sf0.1) was pure waste. Same bucket algebra:
-        // monotone range buckets from a percentile sketch (bounds only
-        // BALANCE buckets — exactness never depends on them, hence the
-        // lighter accuracy), exact per-bucket mass collected to driver
-        // offsets, then the within-bucket running sum runs ONLY over the
-        // buckets that contain a wanted rank (≤ ranks-per-column buckets
-        // of ~dictRows/parts rows each, instead of the whole dictionary).
-        import org.apache.spark.sql.expressions.Window
-        val nParts = PrefixSum.parts(dictRows)
-        val probs = (1 until nParts).map(_.toDouble / nParts)
-        val accuracy = math.max(1000, nParts * 4)
-        val pct = percentile_approx(col("_d"), lit(probs.toArray),
-          lit(accuracy)).as("b")
-        val perGroup: Map[Int, Array[Double]] =
-          dictD.groupBy(col("_i")).agg(pct).collect().map { r =>
-            r.getInt(0) -> (if (r.isNullAt(1)) Array.empty[Double]
-              else r.getSeq[Double](1).distinct.sorted.toArray)
-          }.toMap
-        val boundsCol = perGroup.foldLeft(lit(Array.empty[Double])) {
-          case (acc, (g, bs)) => when(col("_i") === g, lit(bs)).otherwise(acc)
-        }
-        // bucket(s) = #{bound < s}: monotone in the key, so offset +
-        // within-bucket running sum ≡ the global cumulative sum exactly
-        val parted = dictD.withColumn("_part",
-          size(filter(boundsCol, b => b < col("_d"))))
-        val mass: Map[(Int, Int), Double] = parted
-          .groupBy(col("_i"), col("_part"))
-          .agg(sum(col("_c").cast("double")).as("_t")).collect()
-          .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
-        val offsets: Map[(Int, Int), Double] = perGroup.flatMap {
-          case (i, bs) =>
-            var acc = 0.0
-            (0 to bs.length).map { b =>
-              val o = (i, b) -> acc
-              acc += mass.getOrElse((i, b), 0.0)
-              o
-            }
-        }
-        // the one bucket holding order statistic k of column i:
-        // offset ≤ k < offset + mass (exists and is unique since k < nᵢ)
-        val wanted: Set[(Int, Int)] = ranksOf.zipWithIndex.flatMap {
-          case (ks, i) =>
-            val bs = perGroup.getOrElse(i, Array.empty[Double])
-            ks.map { k =>
-              (0 to bs.length).find { b =>
-                offsets((i, b)) <= k.toDouble &&
-                  offsets((i, b)) + mass.getOrElse((i, b), 0.0) > k.toDouble
-              }.map(b => (i, b)).getOrElse((i, 0))
-            }
-        }.toSet
-        val offCol = wanted.foldLeft(lit(0.0)) { case (acc, (i, b)) =>
-          when(col("_i") === i && col("_part") === b,
-            lit(offsets((i, b)))).otherwise(acc)
-        }
-        val inWanted = wanted.foldLeft(lit(false)) { case (acc, (i, b)) =>
-          acc || (col("_i") === i && col("_part") === b)
-        }
-        val rankArr = cols.indices.foldLeft(
-          lit(Array.empty[Long])) { (acc, i) =>
-          when(col("_i") === i, lit(ranksOf(i).toArray)).otherwise(acc)
-        }
-        val w = Window.partitionBy(col("_i"), col("_part")).orderBy(col("_d"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        // the dict row holding order statistic k: cum−cnt ≤ k < cum
-        parted.where(inWanted)
-          .withColumn("_cum",
-            offCol + sum(col("_c").cast("double")).over(w))
-          .withColumn("_k", explode(filter(rankArr,
-            k => col("_cum") > k && (col("_cum") - col("_c")) <= k)))
-          .select(col("_i"), col("_k"), col("_d")).collect()
-          .map(r => (r.getInt(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    // per-column 0-indexed order statistics (none for all-null or
+    // uncastable columns), each with the partition that holds it and the
+    // column's mass before that partition: offset ≤ rank < offset + mass
+    val wanted: Map[Int, Seq[(Int, Long, Long)]] = cols.indices.flatMap { i =>
+      val ranks =
+        if (ns(i) == 0L) Nil
+        else ps.map(p => p * (ns(i) - 1).toDouble)
+          .flatMap(r => Seq(math.floor(r).toLong, math.ceil(r).toLong)).distinct
+      val offsets = perPart.scanLeft(0L)(_ + _._2(i))
+      ranks.map { r =>
+        val p = perPart.indices.find(p => r < offsets(p + 1)).get
+        p -> (i, r, offsets(p))
       }
+    }.groupMap(_._1)(_._2)
+    // one job over only those partitions: a running mass per column
+    val hits: Map[(Int, Long), Double] =
+      if (wanted.isEmpty) Map.empty
+      else sc.runJob(sorted,
+        (ctx: TaskContext, it: Iterator[((Int, Double), Long)]) => {
+          val want = wanted(ctx.partitionId())
+          val before = scala.collection.mutable.Map(
+            want.map { case (i, _, offset) => i -> offset }: _*)
+          it.flatMap { case ((i, d), c) =>
+            before.get(i).toSeq.flatMap { b =>
+              before(i) = b + c
+              want.collect { case (`i`, r, _) if b <= r && r < b + c => (i, r) -> d }
+            }
+          }.toArray
+        }, wanted.keys.toSeq.sorted).flatten.toMap
     cols.zipWithIndex.map { case (c, i) =>
       val vals =
         if (ns(i) == 0L) ps.map(_ => None)
@@ -340,5 +298,40 @@ object Contracts {
         }
       c -> (nds(i), vals)
     }.toMap
+  }
+
+  /** Spark `percentile`'s value order within each column: NaN last (a
+    * groupBy has already folded -0.0 into 0.0).
+    */
+  private implicit val byColumnThenValue: Ordering[(Int, Double)] =
+    Ordering.Tuple2(Ordering.Int, Ordering.Double.TotalOrdering)
+
+  /** Up to `parts` − 1 bounds splitting the weighted sample into ranges
+    * of equal estimated size; each sampled key stands for its
+    * partition's rows over its sample size.
+    */
+  private def rangeBounds(samples: Array[(Long, Array[(Int, Double)])],
+      parts: Int): Array[(Int, Double)] = {
+    val weighted = samples.flatMap { case (n, keys) =>
+      keys.map(_ -> n.toDouble / keys.length)
+    }.sortBy(_._1)
+    val step = weighted.map(_._2).sum / parts
+    val bounds = scala.collection.mutable.ArrayBuffer.empty[(Int, Double)]
+    var acc = 0.0
+    for ((key, w) <- weighted) {
+      acc += w
+      if (acc >= step * (bounds.length + 1) && bounds.length < parts - 1) bounds += key
+    }
+    bounds.toArray
+  }
+
+  /** Range partitioner over sorted bounds: a key goes to the first range
+    * whose bound is at or above it.
+    */
+  private final class RangeBounds(bounds: Array[(Int, Double)])
+      extends Partitioner {
+    override def numPartitions: Int = bounds.length + 1
+    override def getPartition(key: Any): Int =
+      bounds.search(key.asInstanceOf[(Int, Double)]).insertionPoint
   }
 }

@@ -1,8 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** Link-graph analytics for corpus curation. Web-scale pre-training
   * pipelines routinely rank pages by link centrality (PageRank/harmonic
@@ -11,11 +16,10 @@ import org.apache.spark.sql.functions._
   * 100 TB web corpus pipeline is incomplete without one.
   *
   * Scale shape: the rank vector is NODE-sized and the edge list is
-  * EDGE-sized; every iteration is one (src-keyed) join + one dst-keyed
-  * aggregate — the Pregel-without-Pregel form. Edges are aggregated to
-  * (src, dst, weight) once and persisted; per-iteration state is the rank
-  * frame alone, localCheckpoint'd (node-sized, the Curation id-only
-  * convention) so the plan does not deepen with iteration count.
+  * EDGE-sized; every iteration is one narrow rank ⋈ adjacency join + one
+  * dst-keyed aggregate — the Pregel-without-Pregel form. The SQL edge
+  * frame becomes src-keyed adjacency lists once, and the rank RDD shares
+  * their partitioner, so a step shuffles only its contributions.
   */
 object Graph {
 
@@ -42,77 +46,80 @@ object Graph {
     *   r'(v) = (1-d)/N + d · ( Σ_{u→v} r(u)·w(u,v)/outdeg(u) + dang/N )
     *
     * where `dang` = Σ r(u) over nodes with no out-edges. The node set is
-    * src ∪ dst. Deterministic given the edge list, so a fixed-iteration
-    * run is DuckDB-oracle-able with unrolled per-iteration CTEs
-    * (q_pagerank); returns (node, rank) with rank rounded to 6 — the
-    * usual cross-engine float-sum guard.
+    * src ∪ dst; `src` and `dst` must share one type. Deterministic given
+    * the edge list, so a fixed-iteration run is DuckDB-oracle-able with
+    * unrolled per-iteration CTEs (q_pagerank); returns (node, rank) with
+    * rank rounded to 6 — the usual cross-engine float-sum guard. As in
+    * an SQL equi-join, a null key never matches: an edge from a null
+    * `src` carries no rank and rank sent to a null `dst` is lost, while
+    * a null endpoint is still a node.
     *
-    * Per-iteration cost: edges ⋈ ranks on src (the persisted edge frame
-    * carries its outdeg — computed once, not per step), a dst-keyed sum,
-    * and a one-row dangling aggregate broadcast into the update — no
-    * step touches anything larger than edges + nodes. Rank frames are
-    * localCheckpoint'd each step (node-sized) so iteration N's plan does
-    * not replay steps 1..N-1.
+    * The edge frame is read once into an RDD of adjacency lists keyed by
+    * `src` (each out-edge carries its share w/outdeg), hash-partitioned
+    * by the partitioner the rank RDD keeps, so every step's ranks ⋈
+    * adjacency is narrow and its one shuffle is the dst-keyed
+    * `reduceByKey` of the contributions. The dangling mass needs no
+    * driver round trip: a dangling node sends its rank to one [[Cell]]
+    * per partition, each cell routed to its own partition, so every
+    * partition's reduce output holds the whole `dang`; every node also
+    * sends itself 0.0, so a node with no in-links keeps its row. Node-
+    * and edge-sized state, no single partition, no per-step job: the
+    * build runs the edge frame's stages and one node-count job, and the
+    * steps run inside the caller's action.
     */
-  def pageRank(edges0: DataFrame, iterations: Int = 3,
+  def pageRank(edges: DataFrame, iterations: Int = 3,
       damping: Double = 0.85): DataFrame = {
     require(iterations >= 0, s"iterations must be >= 0, got $iterations")
-    // Round 17 (guide §5 — recompute of a multiply-referenced subtree):
-    // the edge frame feeds outdeg, the share projection, AND the node set
-    // (src ∪ dst), so an un-cut lineage re-runs the caller's whole edge
-    // DERIVATION (events scan + per-user window + aggregate for
-    // q_pagerank) four times before the first iteration starts. One
-    // edge-sized localCheckpoint — the same size class as the `e` frame
-    // below — makes it one pass (warm 2.3 → 1.0 s at sf0.1; at scale it
-    // is a 4× → 1× on the full input scan).
-    val edges = edges0.localCheckpoint(false)
-    val outdeg = edges.groupBy("src").agg(sum("weight").as("outdeg"))
-    // localCheckpoint, not persist: every iteration joins this frame and
-    // each join derives null-filters on its keys — with live lineage
-    // those push below the projections and can re-run the whole edge
-    // derivation per step (the Similarity.dedupFlagsByBlock lesson).
-    // (A round-17 attempt to pre-partition this frame by src so each
-    // iteration's join reuses one edge shuffle measured WORSE at sf0.1:
-    // localCheckpoint's LogicalRDD reports UnknownPartitioning, so the
-    // extra up-front exchange + sort bought nothing downstream — kept
-    // out; see OPTIMIZATION_r17.md.)
-    val e = edges.join(outdeg, "src")
-      .select(col("src"), col("dst"),
-        (col("weight").cast("double") / col("outdeg")).as("share"))
-      .localCheckpoint(false)
-    // src-node set hoisted out of the loop (it was re-derived per
-    // iteration inside the dangling-mass anti-join)
-    val srcNodes = e.select(col("src").as("node")).distinct()
-      .localCheckpoint(false)
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint(false)
-    val n = nodes.count().toDouble
-    // lazy checkpoints throughout (round 17): each still truncates the
-    // plan — iteration N never replays steps 1..N-1 — but materialization
-    // rides the caller's one action instead of one eager job per step
-    var ranks = nodes.withColumn("rank", lit(1.0 / n)).localCheckpoint(false)
-    var it = 0
-    while (it < iterations) {
-      // dangling mass: rank stranded on nodes with no out-edges is
-      // redistributed uniformly (the standard correction; dropping it
-      // deflates every rank by the stranded fraction per step)
-      val dang = ranks.join(srcNodes, Seq("node"), "left_anti")
-        .agg(coalesce(sum("rank"), lit(0.0)).as("m"))
-      val contrib = e.join(ranks.withColumnRenamed("node", "src"), "src")
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("rank") * col("share")).as("c"))
-      ranks = nodes
-        .join(contrib, Seq("node"), "left")
-        .crossJoin(broadcast(dang))
-        .select(col("node"),
-          (lit((1.0 - damping) / n) +
-            lit(damping) * (coalesce(col("c"), lit(0.0)) + col("m") / n))
-            .as("rank"))
-        .localCheckpoint(false)
-      it += 1
+    val nodeType = edges.schema("src").dataType
+    require(edges.schema("dst").dataType == nodeType,
+      s"pageRank: src and dst must share one type, got $nodeType and " +
+        edges.schema("dst").dataType)
+    val spark = edges.sparkSession
+    val byNode = new HashPartitioner(
+      spark.conf.get(SQLConf.SHUFFLE_PARTITIONS.key).toInt)
+    val cells = (0 until byNode.numPartitions).map(Cell(_))
+    // node → out-edges as (dst, share); every endpoint gets a row
+    val adj = edges.select(col("src"), col("dst"), col("weight").cast("double"))
+      .rdd.flatMap { r =>
+        val (u, v) = (r.get(0), r.get(1))
+        val out = if (u == null) Nil else List(v -> r.getDouble(2))
+        Iterator(u -> out, v -> Nil)
+      }
+      .reduceByKey(byNode, (a, b) => b ::: a)
+      .mapValues { out =>
+        val outdeg = out.map(_._2).sum
+        out.map { case (v, w) => v -> w / outdeg }.toArray
+      }
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val n = adj.count().toDouble
+    var ranks: RDD[(Any, Double)] = adj.mapValues(_ => 1.0 / n)
+    for (_ <- 1 to iterations) {
+      ranks = adj.join(ranks)
+        .flatMap { case (u, (out, r)) =>
+          val sent: Iterator[(Any, Double)] =
+            if (out.isEmpty) cells.iterator.map(_ -> r)
+            else out.iterator.collect { case (v, s) if v != null => v -> r * s }
+          Iterator(u -> 0.0) ++ sent
+        }
+        .reduceByKey(byNode, _ + _)
+        .mapPartitions({ it =>
+          val sums = it.toArray
+          val m = sums.collectFirst { case (Cell(_), c) => c }.getOrElse(0.0)
+          sums.iterator.collect { case (v, c) if !v.isInstanceOf[Cell] =>
+            v -> ((1.0 - damping) / n + damping * (c + m / n))
+          }
+        }, preservesPartitioning = true)
     }
-    ranks.select(col("node"), round(col("rank"), 6).as("rank"))
+    val schema = StructType(Seq(StructField("node", nodeType),
+      StructField("rank", DoubleType, nullable = false)))
+    spark.createDataFrame(ranks.map { case (v, r) => Row(v, r) }, schema)
+      .select(col("node"), round(col("rank"), 6).as("rank"))
+  }
+
+  /** The dangling-mass cell of partition `p`: its hash is `p`, so a
+    * [[HashPartitioner]] routes it to partition `p`.
+    */
+  private final case class Cell(p: Int) {
+    override def hashCode: Int = p
   }
 }

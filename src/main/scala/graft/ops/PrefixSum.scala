@@ -4,9 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
 
-/** The distributed prefix-sum machinery shared by the exact-percentile
-  * profiler ([[Contracts.exactColumnStats]]) and the classifier-eval
-  * score dictionary (TextAnalysis.scoreDictCum): a global cumulative
+/** The distributed prefix-sum machinery shared by
+  * `Sampling.perplexityBuckets` and the classifier-eval score dictionary
+  * (TextAnalysis.scoreDictCum): a global cumulative
   * sum over a distinct-value DICTIONARY ordered by a double-valued key,
   * computed without ever forming one unpartitioned window —
   * approx_percentile range-buckets the keys monotonically, the running

@@ -379,7 +379,7 @@ object Sampling {
     // score so the dictionary stayed small, and nothing enforced that.
     // For any numeric score the sum is the shared ADAPTIVE distributed
     // prefix sum ([[PrefixSum.cumulative]] — the same machinery behind
-    // exactColumnStats and the classifier-eval score dictionary): range
+    // the classifier-eval score dictionary): range
     // buckets that grow with the dictionary, within-bucket windows,
     // broadcast offsets. No corpus- or dictionary-sized single partition
     // at ANY score cardinality.

@@ -133,6 +133,44 @@ class ContractsSpec extends SparkSpec {
     assert(nd0 == 0L && p0 == Seq(None))
   }
 
+  test("exactProfileStats ≡ built-in percentile + countDistinct at every " +
+      "rank: ties, -0.0/0.0, NaN, nulls, many dictionary rows per partition") {
+    // every order statistic is requested, so the first and last rank of
+    // each range partition (and the step from one column to the next)
+    // are among them; the dictionary has far more rows than the 4
+    // shuffle partitions it is range-partitioned into
+    val specials = Seq(0.0, -0.0, Double.NaN, Double.NegativeInfinity, 1.5, 1.5)
+    for (seed <- 1 to 4) {
+      val rnd = new scala.util.Random(seed)
+      val rows = Seq.fill(60 + rnd.nextInt(60)) {
+        val v: java.lang.Double =
+          if (rnd.nextInt(8) == 0) null
+          else if (rnd.nextInt(4) == 0) specials(rnd.nextInt(specials.size))
+          else rnd.nextInt(30) / 4.0 - 3.0
+        val i: java.lang.Integer =
+          if (rnd.nextInt(10) == 0) null else Integer.valueOf(rnd.nextInt(50) - 10)
+        (v, i)
+      }
+      val df = rows.toDF("v", "i").repartition(3)
+      val n = rows.size
+      val ps = (0 until n).map(_.toDouble / (n - 1)) ++ Seq(0.5, 0.95, 1.0 / 3)
+      val got = Contracts.exactProfileStats(df, Seq("v", "i"), ps)
+      for (c <- Seq("v", "i")) {
+        val builtin = df.agg(
+          percentile(col(c).cast("double"), lit(ps.toArray)),
+          countDistinct(col(c))).head()
+        val exp = builtin.getSeq[Double](0)
+        val (nd, vals) = got(c)
+        assert(nd == builtin.getLong(1), s"seed $seed $c")
+        ps.indices.foreach { k =>
+          // -0.0 is 0.0 once grouped; NaN equals NaN
+          assert(vals(k).exists(g => g == exp(k) || g.isNaN && exp(k).isNaN),
+            s"seed $seed $c p=${ps(k)}: ${vals(k)} vs ${exp(k)}")
+        }
+      }
+    }
+  }
+
   test("exactColumnStats on a STRING column: numeric percentile " +
       "ordering, unparseable values excluded, n_distinct on raw values") {
     // lexicographic order of these strings ("10" < "2" < "30") differs

@@ -56,6 +56,50 @@ class GraphSpec extends SparkSpec {
     assert(got == Map("x" -> 0.5, "y" -> 0.5), got)
   }
 
+  /** Dense synchronous PageRank over an explicit edge list. */
+  private def denseRanks[K](edges: Seq[(K, K, Long)], iters: Int,
+      d: Double): Map[K, Double] = {
+    val nodes = (edges.map(_._1) ++ edges.map(_._2)).distinct
+    val n = nodes.size
+    val outdeg = edges.groupMapReduce(_._1)(_._3.toDouble)(_ + _)
+    var r = nodes.map(_ -> 1.0 / n).toMap
+    for (_ <- 1 to iters) {
+      val dang = nodes.filterNot(outdeg.contains).map(r).sum
+      val in = edges.groupMapReduce(_._2)(e => r(e._1) * e._3 / outdeg(e._1))(_ + _)
+      r = nodes.map(v => v -> ((1 - d) / n + d * (in.getOrElse(v, 0.0) + dang / n))).toMap
+    }
+    r
+  }
+
+  test("pageRank equals the dense reference on seeded random graphs") {
+    // dangling nodes, self-loops, dst-only nodes, string and int ids and
+    // 0-4 iterations; ranks are rounded to 6, so they agree within 1e-6
+    for (seed <- 1 to 10) {
+      val rnd = new scala.util.Random(seed)
+      val nNodes = 2 + rnd.nextInt(12)
+      val edges = Seq.fill(1 + rnd.nextInt(3 * nNodes)) {
+        // sources come from the first two thirds: the rest are dst-only
+        (rnd.nextInt(1 + 2 * nNodes / 3), rnd.nextInt(nNodes), 1L + rnd.nextInt(4))
+      }.groupMapReduce(e => (e._1, e._2))(_._3)(_ + _)
+        .toSeq.map { case ((u, v), w) => (u, v, w) }
+      val iters = seed % 5
+      def check[K](got: Map[K, Double], exp: Map[K, Double]): Unit = {
+        assert(got.keySet == exp.keySet, s"seed $seed")
+        exp.foreach { case (v, r) =>
+          assert(math.abs(got(v) - r) < 1e-6, s"seed $seed node $v: ${got(v)} vs $r")
+        }
+      }
+      if (seed % 2 == 0) {
+        val byName = edges.map { case (u, v, w) => (s"p$u", s"p$v", w) }
+        check(Graph.pageRank(byName.toDF("src", "dst", "weight"), iters)
+          .as[(String, Double)].collect().toMap, denseRanks(byName, iters, 0.85))
+      } else {
+        check(Graph.pageRank(edges.toDF("src", "dst", "weight"), iters)
+          .as[(Int, Double)].collect().toMap, denseRanks(edges, iters, 0.85))
+      }
+    }
+  }
+
   test("randomProject matches the md5-parity formula and preserves cosine") {
     import graft.ops.Similarity
     val emb = Seq(

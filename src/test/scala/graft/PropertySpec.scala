@@ -110,8 +110,6 @@ class PropertySpec extends SparkSpec {
     // interpreted `eval()` row by row must equal the generated code.
     // Inputs include null rows, null tokens, empty and short arrays,
     // decomposed accents, and blobs that are (or are almost) PPM and WAV.
-    // BpeMergePair gets null-free symbols: a null symbol passes through
-    // into its containsNull = false result.
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.catalyst.CatalystTypeConverters
     import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
@@ -144,7 +142,7 @@ class PropertySpec extends SparkSpec {
       d1 <- opt(arr(Gen.choose(-10.0, 10.0))); d2 <- opt(arr(Gen.choose(-10.0, 10.0)))
       l1 <- opt(arr(longs)); l2 <- opt(arr(longs)); t <- opt(arr(tok)); t2 <- opt(arr(tok))
       b <- opt(blob); s <- opt(str); lane <- opt(Gen.choose(0, 3))
-      syms <- opt(arr(Gen.oneOf("a", "b", "c")))
+      syms <- opt(arr(Gen.frequency(1 -> Gen.const(null: String), 5 -> Gen.oneOf("a", "b", "c"))))
     } yield (d1, d2, l1, l2, t, t2, b, s, lane, syms)
     val (mhA, mhB) = (Array(3L, -5L, 1000003L), Array(7L, 11L, -13L))
     val pieces = Seq("a", "b", "ab", "th", "the", "\u00e9")
